@@ -144,11 +144,6 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // A/B via env (r19 task-sizing look): parallelismFirst=false sizes
-      // post-shuffle partitions by advisory bytes instead of padding to
-      // defaultParallelism (guide §2.2 "fewer, larger reduce partitions")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_AQE_PARALLELISM_FIRST", "true"))
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // declared here (not only as Tables.events' defensive runtime set):
       // nanos-timestamp parquet (events.ts) reads as LONG ns
@@ -160,14 +155,6 @@ object GraftSession {
       // heap pressure from state), so it is the engine-wide default
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // RocksDB commit cost knobs (A/B via env; see OPTIMIZATION_r19.md):
-      // changelog checkpointing writes the per-commit delta instead of a
-      // full snapshot per store per batch, and row-count tracking is a
-      // metrics-only convenience that costs a put/delete-path counter
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        sys.env.getOrElse("GRAFT_ROCKSDB_CHANGELOG", "false"))
-      .config("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-        sys.env.getOrElse("GRAFT_ROCKSDB_TRACKROWS", "true"))
       // managed (bucketed) tables land in tmp, never in the repo cwd;
       // per-process dir so a fresh JVM (fresh in-memory catalog) never
       // collides with a previous run's table locations; removed on exit
@@ -183,11 +170,8 @@ object GraftSession {
       // [[create]] (a SparkContext property, not a conf). 100 so the
       // gate-depth runs (BFS ~10, SSSP ~25, coloring ~100 supersteps) pay
       // at most one reliable checkpoint while anything runaway-deep still
-      // gets its lineage cut well before serialization blows. Env
-      // override exists for interleaved A/Bs of the cut's fixed cost on
-      // small graphs (r15 verdict Next #7) — not a production knob
-      .config("spark.graphx.pregel.checkpointInterval",
-        sys.env.getOrElse("GRAFT_PREGEL_CKPT", "100"))
+      // gets its lineage cut well before serialization blows
+      .config("spark.graphx.pregel.checkpointInterval", "100")
 
   /** [[builder]].getOrCreate() + the context-level wiring a builder conf
     * can't express: the CHECKPOINT DIRECTORY the Pregel interval needs —

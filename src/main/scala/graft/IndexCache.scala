@@ -37,12 +37,17 @@ object IndexCache {
     * across bench reps — the established gate-row discipline), registered
     * for shutdown-hook cleanup. */
   def freshRoot(tag: String): Path = {
-    val root = TempDirs.deleteOnExit(tmpBase.resolve(
-      s"graft-$tag-${ProcessHandle.current().pid()}"))
+    val root = processDir(tag)
     TempDirs.deleteRecursively(root)
     Files.createDirectories(root)
-    root
   }
+
+  /** [[freshRoot]] without the wipe, for callers that take the modify
+    * path on state an earlier call in this process left under the root. */
+  def keptRoot(tag: String): Path = Files.createDirectories(processDir(tag))
+
+  private def processDir(tag: String): Path =
+    TempDirs.deleteOnExit(tmpBase.resolve(s"graft-$tag-${ProcessHandle.current().pid()}"))
 
   /** The read-only template index for `key`, built at most once per
     * process by `build(indexPath)`. Callers MUST NOT mutate the returned

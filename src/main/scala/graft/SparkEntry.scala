@@ -1,22 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import graft.functions.Num
-import graft.graph.{Analytics, DerivedGraphs, GraphCatalog, Motifs, SequentialModel, Traversals}
-import graft.llm.{Dedup, KnnGraph, MediaOps, Packing, Sampling, SequentialCorpus, Similarity, Sketches, TextOps}
-import graft.operators.{MergeInto, Partitioning, Sessionization, SnapshotDiff, TemporalJoins, Validation}
-import graft.sources.{MatrixFormat, TableFormats}
-import graft.streaming.{BoundedReplay, EventStreams}
+import graft.graph.{DerivedGraphs, Traversals}
+import graft.queries.{Oracle, OracleInput, Query, Registry}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * Every operator in SURVEY §2's inventory gets a `queries` entry; those whose
-  * semantics are ANSI-SQL-expressible also get an `oracleSql` entry the driver
-  * runs in DuckDB over the same parquet tables. Column names and deterministic
-  * ORDER BY are kept identical on both sides (the driver sorts columns by name
-  * and hash-compares values).
+  * Every gate query is declared once, beside its DuckDB oracle, in
+  * [[graft.queries.Registry]] (one file per query family under
+  * `graft/queries`). The maps below are views of that registry for the
+  * mains and tools that run it.
   *
   * Float discipline: oracle-checked money aggregates are computed in exact
   * DECIMAL and cast to DOUBLE at the end (partial-aggregation order cannot
@@ -25,11 +18,6 @@ import graft.streaming.{BoundedReplay, EventStreams}
   * is integer/string/exact.
   */
 object SparkEntry {
-
-  // decimal casts shared by the money queries (exact, overflow-safe chain:
-  // (12,2)*(4,2)*(4,2) -> DECIMAL(22,6), well inside 38 digits)
-  private def dec12(c: String) = col(c).cast("decimal(12,2)")
-  private def dec4(c: String) = col(c).cast("decimal(4,2)")
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0.
     * BFS levels over the derived graph — the reference's headline read op
@@ -45,7357 +33,24 @@ object SparkEntry {
         sys.props.getOrElse("graft.sf.dir", "/root/testdata/sf0.001")),
       start = 0L, maxDepth = 12)
 
-  /** The g1/g2 BFS plan, shared so the two queries stay one definition. */
-  /** Catalog root holding the `sqlg` graph the SQL-TVF gates (q33, q39,
-    * q40, q41) query through `spark.sql` — idempotent per process. */
-  private def sqlTvfGraph(s: SparkSession, dir: String): String = {
-    val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      s"graft-sqltvf-${ProcessHandle.current().pid()}"))
-    java.nio.file.Files.createDirectories(root)
-    val cat = new GraphCatalog(s, root.resolve("graphs").toString)
-    val e = DerivedGraphs.small(s, dir)
-    if (cat.exists("sqlg")) cat.modifyGraph("sqlg", e) else cat.addGraph("sqlg", e)
-    root.resolve("graphs").toString
-  }
+  /** Every declared query's Spark plan, by name. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Registry.all.map(q => q.name -> q.run).toMap
 
-  private def bigBfs(s: SparkSession, dir: String): DataFrame =
-    Traversals.bfs(DerivedGraphs.big(s, dir), start = 0L, maxDepth = 12)
+  /** The sf-independent oracles, by query name. */
+  def oracleSql: Map[String, String] =
+    Registry.all.collect { case Query(name, _, Oracle.Sql(sql)) => name -> sql }.toMap
 
-  /** t37's query — one rare term ("dup": ~5% df in the synthetic corpus)
-    * plus two common ones, so idf actually ranks; shared by the Spark
-    * query and the oracle builder so the two stay one definition.
-    */
-  private val Bm25QueryTerms: Seq[String] = Seq("dup", "spark", "merge")
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- graph operators (reference surface + analytics extensions) ----
-    "g1_bfs_levels" -> ((s, dir) => bigBfs(s, dir)),
-    "g2_reachable_stats" -> ((s, dir) => // same BFS plan as g1, reduced
-      bigBfs(s, dir)
-        .agg(count(lit(1)).as("n_reachable"), max("level").cast("int").as("max_level"))),
-    "g3_connected_components" -> ((s, dir) =>
-      Analytics.connectedComponents(DerivedGraphs.small(s, dir)).orderBy("vertex")),
-    "g4_shortest_paths_multi" -> ((s, dir) =>
-      Traversals.multiSourceBfs(DerivedGraphs.big(s, dir), Seq(0L, 1L, 2L), maxDepth = 12)),
-    "g5_triangle_counts" -> ((s, dir) =>
-      Analytics.triangleCounts(DerivedGraphs.small(s, dir))),
-    "g6_degrees" -> ((s, dir) => // DerivedGraphs output is already distinct
-      Analytics.degrees(DerivedGraphs.big(s, dir), dedup = false).orderBy("vertex")),
-    "g7_pagerank" -> ((s, dir) =>
-      Analytics.pageRank(DerivedGraphs.small(s, dir), numIter = 10)),
-    "g8_dfs_preorder" -> ((s, dir) => // sequential by nature: rows-only here,
-      // preorder ≡ sequential oracle is property-checked in TraversalProps
-      Traversals.dfsPreorder(DerivedGraphs.small(s, dir), start = 0L)),
-    "g9_dfs_leaves" -> ((s, dir) => // reference op-3 leaf-set semantics
-      // (secondaryServer.c:93-97); oracle-checked in-suite (TraversalProps)
-      Traversals.dfsLeaves(DerivedGraphs.small(s, dir), start = 0L)),
-    "g11_scc" -> ((s, dir) =>
-      // strongly connected components (directed), GraphX peeling to
-      // convergence; oracle = mutual-reachability closure min-id
-      Analytics.stronglyConnectedComponents(DerivedGraphs.small(s, dir)).orderBy("vertex")),
-    "g12_weighted_sssp" -> ((s, dir) =>
-      // hop-bounded weighted SSSP (BSP Bellman-Ford); weights derived
-      // deterministically so the recursive-CTE oracle computes the same
-      // relaxation: w = (src + dst) % 10 + 1
-      Traversals.weightedSssp(
-        DerivedGraphs.small(s, dir)
-          .withColumn("w", (col("src") + col("dst")) % 10 + 1),
-        start = 0L, maxHops = 12)),
-    "g45_sssp_fixpoint" -> ((s, dir) => // UNBOUNDED weighted SSSP: the
-      // Bellman-Ford fixpoint with convergence PROVEN by a final edge-pass
-      // (any still-relaxable edge throws instead of returning a silently
-      // hop-truncated cost); the long-haul graph's shortest paths take up
-      // to 24 hops — past g12's 12-hop contract — and its never-cheaper
-      // shortcut edges force rounds to supersede early expensive paths;
-      // oracle = independent sequential Dijkstra (greedy settle order vs
-      // synchronous relaxation — different family, must agree)
-      Traversals.weightedSsspFixpoint(DerivedGraphs.longHaul(s, dir), start = 0L)),
-    "g14_kcore" -> ((s, dir) => // k-core (k=3): deletion-fixpoint wave
-      // peeling — not CTE-expressible, so the gate uses a VALUES oracle
-      // from SequentialModel's independent queue-based peeling
-      Analytics.kCore(DerivedGraphs.small(s, dir), k = 3)),
-    "g15_label_propagation" -> ((s, dir) => // deterministic synchronous LPA
-      // (5 rounds, min-label ties); VALUES oracle from the sequential
-      // mirror — fixed-iteration semantics, like the PageRank oracle
-      Analytics.labelPropagation(DerivedGraphs.small(s, dir), numIter = 5)),
-    "g18_personalized_pagerank" -> ((s, dir) => // source-restart PageRank:
-      // rank as proximity to vertex 0 (the recommendation form of g7);
-      // same fixed-iteration deterministic contract and unrolled-CTE mirror
-      Analytics.personalizedPageRank(DerivedGraphs.small(s, dir), source = 0L, numIter = 10)),
-    "g19_hits" -> ((s, dir) => // HITS hubs & authorities (Kleinberg
-      // sequential update, 5 L1-normalized iterations): the directed
-      // centrality pair PageRank's single score can't express — a vertex
-      // can be a pure hub (links out to good authorities) with zero
-      // authority; unrolled-CTE mirror like g7/g18
-      Analytics.hits(DerivedGraphs.small(s, dir), numIter = 5)),
-    "g17_common_neighbors" -> ((s, dir) => // link prediction: non-adjacent
-      // pairs sharing >=2 neighbors via center-out wedge enumeration; the
-      // super-hub center cap is the p95 of the degree DISTRIBUTION — below
-      // the max degree at every sf (capped path exercised, not a vacuous
-      // guard) yet tracking density, so the rows stay non-vacuous on the
-      // 10x-denser sf0.1 graph where the old fixed cap excluded nearly
-      // every center
-      Analytics.commonNeighbors(DerivedGraphs.small(s, dir), minCommon = 2,
-        capPercentile = Some(95))),
-    "g20_adamic_adar" -> ((s, dir) => // g17's counts weighted by center
-      // rarity (1/ln deg — the Adamic-Adar index): a neighbor shared
-      // through a 3-degree vertex outweighs one shared through a hub;
-      // same wedge machinery and adaptive p95 center cap as g17
-      Analytics.adamicAdar(DerivedGraphs.small(s, dir), minCommon = 2,
-        capPercentile = Some(95))),
-    "g28_topo_layers" -> ((s, dir) => // critical-path schedule depth of a
-      // dependency DAG (longest path ending at each vertex, sources = 0):
-      // iterative max-DP fixpoint, vertex-sized state per round, loud
-      // cycle cap; the DAG is the id-oriented (src < dst) derivation —
-      // acyclic by construction; VALUES oracle from the independent
-      // memoized-DP sequential model (path enumeration in a CTE would be
-      // exponential)
-      Analytics.topoLayers(
-        DerivedGraphs.small(s, dir).filter(col("src") < col("dst")))),
-    "g27_ktruss" -> ((s, dir) => // edge-strength community core: the
-      // maximal subgraph where every EDGE closes >= k-2 in-subgraph
-      // triangles — kCore's peeling refined from vertex degrees to edge
-      // supports (prunes community-spanning bridges kCore keeps); wave
-      // fixpoint over the degree-oriented wedge enumeration, VALUES
-      // oracle from SequentialModel.kTruss per the g8/g14 discipline.
-      // k=3 (every edge in a triangle): this derived graph's triangle
-      // density is thin enough that k=4 empties it — k=3 keeps the gate
-      // row non-vacuous while still exercising cascading waves
-      Analytics.kTruss(DerivedGraphs.small(s, dir), k = 3)),
-    "g26_neighbor_jaccard" -> ((s, dir) => // g17's counts normalized by
-      // the neighborhood UNION (|N∩|/|N∪|, integer permille): de-biases
-      // link prediction toward low-degree pairs — ten shared neighbors
-      // between 12-degree vertices is near-certain linkage, between hubs
-      // it's noise; same capped wedge machinery, full-degree denominator
-      Analytics.neighborJaccard(DerivedGraphs.small(s, dir), minCommon = 2,
-        capPercentile = Some(95))),
-    "g64_katz" -> ((s, dir) => // Katz centrality, delta-converged: the
-      // attenuation-walk centrality completing the family — unlike
-      // PageRank it does not out-degree-normalize; same engine-exact
-      // stopping contract as g63 (nano contributions, 1e-6 grid,
-      // integer micro-delta), oracle = independent sequential fixpoint
-      // alphaE3 = 10: the gate graph's max out-degree at bench scale is
-      // ~39, so alpha*maxdeg <= 0.39 < 1 guarantees convergence (0.05
-      // diverged at sf0.1 — deterministically and mirror-equal, but a
-      // converged gate is the semantics worth binding)
-      Analytics.katzConverged(DerivedGraphs.small(s, dir), alphaE3 = 10L)),
-    "g63_pagerank_converged" -> ((s, dir) => // delta-converged PageRank
-      // (the production stopping rule): per-round integer-nano
-      // contribution quantization + 1e-6 rank grid make the
-      // DATA-DEPENDENT stopping decision engine-exact — both engines
-      // stop on the same round by construction; oracle = an independent
-      // sequential power iteration applying the identical rule
-      Analytics.pageRankConverged(DerivedGraphs.small(s, dir))),
-    "g21_random_walks" -> ((s, dir) => // node2vec/DeepWalk sampling
-      // primitive: per-start deterministic walks whose next-hop is an
-      // md5-derived function of (start, step, vertex) — reproducible
-      // across engines, so the unrolled-CTE oracle replays the exact
-      // walks; ranked adjacency built once, each step joins walkers only
-      Traversals.randomWalks(DerivedGraphs.big(s, dir), numSteps = 4, startMod = 100L)),
-    "g59_deepwalk_pairs" -> ((s, dir) => // DeepWalk skip-gram pair
-      // generation: g21's deterministic walks self-joined per walk within
-      // a ±2 step window -> (center, context, cnt) — the step that turns
-      // a graph into word2vec-shaped training data; one shuffle over the
-      // walk corpus, never the edge table
-      Traversals.deepWalkPairs(DerivedGraphs.big(s, dir), numSteps = 4,
-        startMod = 100L, window = 2)),
-    "g62_node2vec_walks" -> ((s, dir) => // SECOND-order biased walks
-      // (Grover-Leskovec p/q): next hop weighted by the predecessor
-      // (return / distance-1 / distance-2 classes), picked by
-      // deterministic cumulative-interval weighted sampling the mirror
-      // replays bit-for-bit; frontier x degree expansion per step is the
-      // honest node2vec cost (alias-table shape, derandomized)
-      Traversals.node2vecWalks(DerivedGraphs.big(s, dir), numSteps = 4,
-        startMod = 100L)),
-    "g32_betweenness" -> ((s, dir) => // seed-sampled Brandes betweenness
-      // (the most-requested centrality after degree/PageRank): forward
-      // per-level BFS frontiers carrying exact BIGINT path counts, then
-      // dependency back-propagation over the same frontier tables in
-      // reverse — all exchanged state (seed × frontier)-sized; VALUES
-      // oracle from the independent sequential Brandes model (path
-      // counting is not CTE-expressible), same g24/g29 seed discipline
-      Analytics.betweennessProfile(DerivedGraphs.small(s, dir),
-        seeds = Seq(0L, 1L, 2L, 3L), maxDepth = 12)),
-    "g31_motif" -> ((s, dir) => // the graph-database pattern-query surface
-      // (GraphFrames-`find` shape): directed triangles via one equi-join
-      // per pattern edge over the deduped edge relation — the closing
-      // (both-endpoints-bound) term is an existence filter that cannot
-      // grow the intermediate; the rotation canonicalization (a = min) is
-      // a caller predicate Catalyst pushes INTO the join chain; DuckDB
-      // mirror is the same chain built from the same greedy join order
-      Motifs.find(DerivedGraphs.small(s, dir), "(a)-(b); (b)-(c); (c)-(a)")
-        .filter(col("a") < col("b") && col("a") < col("c"))
-        .orderBy("a", "b", "c")),
-    "g35_motif_negated" -> ((s, dir) => // negated motif terms (GraphFrames
-      // !-edges): open wedges — 2-paths whose closing edge is ABSENT, the
-      // "recommend a→c" candidate shape; the negated term is a LEFT ANTI
-      // join on the fully-bound pair (a pure filter), and the a%20
-      // selectivity predicate pushes into the positive join chain
-      Motifs.find(DerivedGraphs.small(s, dir), "(a)-(b); (b)-(c); !(a)-(c)")
-        .filter(col("a") % 20 === 0)
-        .orderBy("a", "b", "c")),
-    "g43_var_length_motif" -> ((s, dir) => // variable-length path term
-      // (the Cypher (a)-[*1..3]->(b) reachability-with-pattern query):
-      // shortest-distance-window closure as a derived relation in the
-      // same greedy join chain — "b within 3 hops of a, b points at c,
-      // and a does NOT point at c directly" (the multi-hop-only
-      // recommendation shape); closure built once (hi-1 checkpointed
-      // join rounds). The selectivity predicate on `a` is DECLARED to
-      // find (r19: the closure's eager checkpoint is an optimizer
-      // barrier, so an outer .filter could never reach the closure
-      // build — the restrict contract seeds it with only the wanted
-      // sources; find(e,p,restrict) ≡ find(e,p).filter(...) by the
-      // MotifsSpec property)
-      Motifs.find(DerivedGraphs.small(s, dir), "(a)-[1..3]-(b); (b)-(c); !(a)-(c)",
-          restrict = Map("a" -> (_ % 25 === 0)))
-        .orderBy("a", "b", "c")),
-    "g22_bipartite" -> ((s, dir) => // 2-colorability per component via
-      // parity-BFS fixpoint: a vertex reachable from its component root
-      // with both parities witnesses an odd cycle; state bounded at 2|V|
-      // (vertex, parity) rows, vertex-sized exchanges per superstep
-      Analytics.bipartiteCheck(DerivedGraphs.small(s, dir))),
-    "g13_partitioned_catalog" -> ((s, dir) => {
-      // the single-partitioned-table catalog layout bound to the gate:
-      // write two graphs into ONE graph_name-partitioned table, then run
-      // the cross-graph single-scan analytics the per-directory layout
-      // cannot express; the oracle computes the same per-graph aggregates
-      // straight from the source derivation. Fixed per-process dir (reps
-      // take the modify path), shutdown-hook cleaned like g10's.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-pcat-${ProcessHandle.current().pid()}"))
-      java.nio.file.Files.createDirectories(root)
-      val cat = new GraphCatalog(s, root.resolve("pgraphs").toString)
-      val e = DerivedGraphs.small(s, dir)
-      def put(name: String, df: DataFrame): Unit =
-        if (cat.existsPartitioned(name)) cat.modifyGraphPartitioned(name, df)
-        else cat.addGraphPartitioned(name, df)
-      put("even", e.filter(col("src") % 2 === 0))
-      put("odd", e.filter(col("src") % 2 === 1))
-      cat.allGraphsPartitioned()
-        .groupBy("graph_name")
-        .agg(count(lit(1)).as("n_edges"), sum(col("src") + col("dst")).as("sum_ids"))
-        .orderBy("graph_name")
-    }),
-    "g16_partitioned_bfs" -> ((s, dir) => {
-      // a traversal THROUGH the partitioned-catalog layout (g13 gates only
-      // the cross-graph aggregates): BFS over one of two graphs stored in
-      // the same graph_name-partitioned table — the traversal's edge scan
-      // partition-prunes to the named graph (asserted structurally in
-      // GraphCatalogSpec); the oracle runs the same recursive CTE over the
-      // identically-filtered derivation
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-pbfs-${ProcessHandle.current().pid()}"))
-      java.nio.file.Files.createDirectories(root)
-      val cat = new GraphCatalog(s, root.resolve("pgraphs").toString)
-      val e = DerivedGraphs.small(s, dir)
-      def put(name: String, df: DataFrame): Unit =
-        if (cat.existsPartitioned(name)) cat.modifyGraphPartitioned(name, df)
-        else cat.addGraphPartitioned(name, df)
-      put("even", e.filter(col("src") % 2 === 0))
-      put("odd", e.filter(col("src") % 2 === 1))
-      cat.bfsPartitioned("even", start = 0L, maxDepth = 12)
-    }),
-    "g33_edge_upsert" -> ((s, dir) => {
-      // edge-level graph mutation bound to the CoW MERGE: build the even
-      // graph, upsert a change-set (delete every dst%3==0 edge, insert a
-      // fresh 2-edge chain from the BFS root), then traverse the MUTATED
-      // graph — exercising mutate→read end to end. graph_name is both
-      // partition column and merge key, so only this graph's partition is
-      // rewritten (the sibling graph's bytes are asserted stable in
-      // GraphCatalogSpec). Oracle: recursive-CTE BFS over the identical
-      // delete/insert derivation. Fixed per-process dir; reps reset the
-      // graph through the modify path, so the mutation is idempotent.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-gups-${ProcessHandle.current().pid()}"))
-      java.nio.file.Files.createDirectories(root)
-      val cat = new GraphCatalog(s, root.resolve("pgraphs").toString)
-      val e = DerivedGraphs.small(s, dir)
-      def put(name: String, df: DataFrame): Unit =
-        if (cat.existsPartitioned(name)) cat.modifyGraphPartitioned(name, df)
-        else cat.addGraphPartitioned(name, df)
-      put("mut", e.filter(col("src") % 2 === 0))
-      put("other", e.filter(col("src") % 2 === 1))
-      val dels = e.filter(col("src") % 2 === 0 && col("dst") % 3 === 0)
-        .select(col("src"), col("dst"), lit(true).as("is_delete"))
-      val ins = s.createDataFrame(Seq((0L, 1498L, false), (1498L, 1496L, false)))
-        .toDF("src", "dst", "is_delete")
-        // keep the change-set key-unique: an inserted pair may already be a
-        // deleted pair's key in the derived graph
-        .join(dels.select("src", "dst"), Seq("src", "dst"), "left_anti")
-      cat.upsertEdges("mut", dels.unionByName(ins), Some("is_delete"))
-      cat.bfsPartitioned("mut", start = 0L, maxDepth = 12)
-    }),
-    "g34_property_bfs" -> ((s, dir) => {
-      // property-graph surface: edges stored WITH an attribute column in
-      // the catalog, then a traversal over the attribute-FILTERED subgraph
-      // ("BFS only over etype=0 edges") — the predicate is applied before
-      // the Pregel build and pushed down to the parquet edge scan
-      // (asserted structurally in GraphCatalogSpec); oracle = recursive
-      // CTE over the identically-filtered derivation. Fixed per-process
-      // dir; reps take the modify path like g13.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-pprop-${ProcessHandle.current().pid()}"))
-      java.nio.file.Files.createDirectories(root)
-      val cat = new GraphCatalog(s, root.resolve("graphs").toString)
-      val e = DerivedGraphs.small(s, dir)
-        .withColumn("etype", (col("src") + col("dst")) % 3)
-      if (cat.exists("props")) cat.modifyGraph("props", e)
-      else cat.addGraph("props", e)
-      cat.bfs("props", start = 0L, maxDepth = 12,
-        edgeFilter = Some(col("etype") === 0))
-    }),
-    "g46_incremental_degrees" -> ((s, dir) => {
-      // incremental VIEW MAINTENANCE off the commit log's CDF: the degree
-      // view is built once at v0 and advanced to the head purely through
-      // changesBetween — the shard-sized change set, never a re-scan of
-      // the edge table (the 100 TB "graph changed, refresh the analytics"
-      // answer). Three committed versions: v0 = dst%5!=0 edges, v1 =
-      // append the rest (inserts), v2 = overwrite dropping src%7==0
-      // (deletes). Oracle = full degree recompute over the final set.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-ideg-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val t = new graft.operators.CommitTable(s, root.resolve("edges").toString, "src")
-      val e = DerivedGraphs.small(s, dir)
-      t.overwrite(e.filter(col("dst") % 5 =!= 0))
-      t.append(e.filter(col("dst") % 5 === 0))
-      t.overwrite(e.filter(col("src") % 7 =!= 0))
-      graft.graph.IncrementalViews.maintainedDegrees(t, 0L, 2L).orderBy("vertex")
-    }),
-    "g58_incremental_cc" -> ((s, dir) => {
-      // insert-monotone incremental CONNECTED COMPONENTS off the CDF:
-      // inserted edges contract to their current labels, CC runs on that
-      // delta-sized super graph only, one broadcast relabel join — the
-      // edge table is never rescanned. v0 = dst%5!=0 edges, v1 = append
-      // the rest; view advanced 0 -> 1. Oracle = full recompute closure
-      // over the final edge set. (Deletions refuse loudly — suite.)
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-icc-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val t = new graft.operators.CommitTable(s, root.resolve("edges").toString, "src")
-      val e = DerivedGraphs.small(s, dir)
-      t.overwrite(e.filter(col("dst") % 5 =!= 0))
-      t.append(e.filter(col("dst") % 5 === 0))
-      graft.graph.IncrementalViews.maintainedComponents(t, 0L, 1L).orderBy("vertex")
-    }),
-    "g55_assortativity" -> ((s, dir) =>
-      // Newman degree assortativity: do hubs attach to hubs? Three exact
-      // BIGINT moments in one degree-joined edge pass; the correlation is
-      // cross-multiplied to two exact integers so the only float is the
-      // final 1-row division (round6-normalized)
-      Analytics.degreeAssortativity(DerivedGraphs.small(s, dir))),
-    "g56_reciprocity" -> ((s, dir) =>
-      // directed-edge reciprocity over small ∪ reversed(src%3=0): the
-      // overlay guarantees a non-trivial reciprocal subset; one distinct
-      // pass + one reversed-key self-semi-join
-      Analytics.reciprocity {
-        val e = DerivedGraphs.small(s, dir)
-        e.union(e.filter(col("src") % 3 === 0)
-          .select(col("dst").as("src"), col("src").as("dst")))
-      }),
-    "g54_distance_index" -> ((s, dir) => {
-      // persisted landmark distance index ("build once, query many" — the
-      // graph twin of the s12 IVF index): two landmarkBfs Pregel runs
-      // (forward + reversed edges) land as commit-log tables; every
-      // dist(u,v) query is then min_l d(u→l)+d(l→v) — two index joins,
-      // no traversal at query time (suite plan-asserts no RDD scan)
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-dix-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      graft.graph.DistanceIndex.build(DerivedGraphs.small(s, dir),
-        root.toString, landmarks = Seq(0L, 7L, 42L, 100L), maxDepth = 12)
-      val pairs = Tables.nation(s, dir).select(
-        col("n_nationkey").cast("long").as("u"),
-        ((col("n_nationkey") * 53 + 11) % DerivedGraphs.SmallMod).as("v"))
-      graft.graph.DistanceIndex.queryUpperBounds(s, root.toString, pairs)
-        .orderBy("u", "v")
-    }),
-    "g53_incremental_triangles" -> ((s, dir) => {
-      // NONLINEAR incremental view maintenance: triangle counts advanced
-      // off the CDF — the delta probes N(a) ∩ N(b) around the changed
-      // pairs only (touching(new) − touching(old)), never recounting the
-      // graph; same three-version history as g46. Oracle = full triangle
-      // recompute over the final edge set.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-itri-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val t = new graft.operators.CommitTable(s, root.resolve("edges").toString, "src")
-      val e = DerivedGraphs.small(s, dir)
-      t.overwrite(e.filter(col("dst") % 5 =!= 0))
-      t.append(e.filter(col("dst") % 5 === 0))
-      t.overwrite(e.filter(col("src") % 7 =!= 0))
-      graft.graph.IncrementalViews.maintainedTriangles(t, 0L, 2L).orderBy("vertex")
-    }),
-    "g52_hyperball" -> ((s, dir) =>
-      // HyperBall: per-vertex 8-hop neighborhood size estimated by HLL
-      // registers propagated along out-edges (register-wise max merge) —
-      // the tractable reachability profile at 10¹² edges, where exact
-      // closures are quadratic; registers are pure-integer algebra, the
-      // estimate one fixed-form expression, mirrored exactly
-      Analytics.hyperBall(DerivedGraphs.small(s, dir), t = 8)),
-    "g57_distance_profile" -> ((s, dir) =>
-      // the graph's distance distribution via HyperBall: N(t) = Σ ball
-      // sizes for t = 0..8 + the effective-diameter flag (smallest t
-      // covering 90% of reachable pairs, by integer cross-multiply) —
-      // the Boldi–Vigna headline statistic; per round the added cost
-      // over g52 is ONE 1-row aggregate
-      Analytics.neighborhoodFunction(DerivedGraphs.small(s, dir), tMax = 8)),
-    "g50_matching" -> ((s, dir) =>
-      // maximal matching (MIS on the line graph), deterministic parallel
-      // greedy: per round the (π,a,b)-minimal active edge at BOTH
-      // endpoints matches, then its endpoints deactivate; equals
-      // sequential greedy in priority order (the independent oracle);
-      // matched endpoints = the classic 2-approx vertex cover
-      Analytics.maximalMatching(DerivedGraphs.small(s, dir))),
-    "g51_coreness" -> ((s, dir) =>
-      // FULL core decomposition (g14 answers one k): H-index fixpoint
-      // from c=deg — per round one edge pass + a vertex-keyed
-      // max(least(rank, c)) H-index aggregate, convergence-detected;
-      // oracle = independent Batagelj–Zaversnik min-degree peeling
-      Analytics.coreness(DerivedGraphs.small(s, dir))),
-    "g47_mis" -> ((s, dir) =>
-      // maximal independent set, deterministic-Luby rounds: (π, id)
-      // local minima join per round, then deactivate with their whole
-      // neighborhood — O(log n) expected edge passes; the fixpoint
-      // provably equals the sequential greedy in (π, id) order, which is
-      // the independent VALUES oracle (independence + maximality are
-      // additionally property-asserted in-suite)
-      Analytics.maximalIndependentSet(DerivedGraphs.small(s, dir))),
-    "g48_coloring" -> ((s, dir) =>
-      // greedy graph coloring via Jones–Plassmann scheduling: a vertex
-      // colors when all smaller-(π,id) neighbors are colored, taking the
-      // mex of their colors inside one fold-aggregate — result equals
-      // sequential greedy in priority order (the independent oracle);
-      // rounds = longest priority-decreasing path, O(log n) expected
-      Analytics.greedyColoring(DerivedGraphs.small(s, dir))),
-    "g49_densest" -> ((s, dir) =>
-      // densest-subgraph 2(1+ε)-approx by batch peeling (ε=1/10): each
-      // round drops every vertex with 10·deg·V ≤ 22·E (exact integers),
-      // keeping the best-density snapshot by cross-multiplied compare;
-      // O(log V) rounds, each one degree-agg + semi-join — the classic
-      // MapReduce densest-subgraph plan
-      Analytics.densestSubgraph(DerivedGraphs.small(s, dir))),
-    "g25_clustering_coeff" -> ((s, dir) =>
-      // local clustering coefficient in integer millionths (pure integer
-      // division over triangle and degree counts — no float anywhere)
-      Analytics.clusteringCoefficient(DerivedGraphs.small(s, dir))),
-    "g30_weighted_pagerank" -> ((s, dir) => // edge-weighted PageRank: the
-      // damped walk follows out-edges proportionally to INTEGER weights
-      // (derived (src+dst)%5+1 — deterministic, 1..5), so the transition
-      // matrix divides exact integers and is engine-identical; same
-      // fixed-iteration contract and unrolled-CTE mirror as g7
-      Analytics.weightedPageRank(
-        DerivedGraphs.small(s, dir)
-          .withColumn("ew0", expr("pmod(src + dst, 5) + 1")),
-        weightCol = "ew0", numIter = 10)),
-    "g29_harmonic" -> ((s, dir) =>
-      // harmonic centrality (disconnection-robust closeness: unreachable
-      // vertices contribute 0 instead of poisoning the ratio), integer
-      // permille, same one-Pregel-run-for-all-seeds machinery as g24 on
-      // a disjoint seed set
-      Analytics.harmonicProfile(DerivedGraphs.small(s, dir),
-        seeds = Seq(10L, 11L, 12L, 13L), maxDepth = 12)),
-    "g36_modularity" -> ((s, dir) => {
-      // Newman modularity of the g15 LPA communities: the quality score a
-      // community-detection loop optimizes, exposed as a standalone scorer
-      // for ANY labeling. Masses are exact integers; Q_c is two divisions
-      // on them (bit-identical cross-engine) rounded 1e-6. Oracle: the
-      // sequential-model LPA labels as VALUES (the g15 discipline) scored
-      // by the same SQL masses over the edge derivation
-      val e = DerivedGraphs.small(s, dir)
-      Analytics.modularity(e, Analytics.labelPropagation(e, numIter = 5))
-    }),
-    "g42_spanning_forest" -> ((s, dir) =>
-      // minimum spanning forest (Borůvka — the parallel MST: every
-      // component picks its min outgoing edge per round, components
-      // halve, ≤ log|V| edge passes); unique derived weights make the
-      // forest unique, so the independent sequential-Kruskal VALUES
-      // oracle agrees edge-for-edge
-      Analytics.minimumSpanningForest(
-        DerivedGraphs.small(s, dir).withColumn("w",
-          expr("least(src, dst) * 1499 + greatest(src, dst)")))),
-    "g41_louvain_sweep" -> ((s, dir) =>
-      // Louvain local-move phase, deterministic synchronous form: every
-      // vertex moves to the neighbor community with the best EXACT INTEGER
-      // move score (the ΔQ numerator cross-multiplied by 2m² — the e27
-      // trick), so the argmax needs no float discipline; optimizes the
-      // objective g36 scores, where g15's LPA only chases majorities;
-      // parity-alternating half-sweeps (4 rounds = 2 full alternations)
-      // break the simultaneous-move oscillation
-      Analytics.louvainSweep(DerivedGraphs.small(s, dir), rounds = 4)),
-    "g44_louvain_full" -> ((s, dir) => // FULL two-phase Louvain: g41's
-      // sweep, then community CONTRACTION (inter-community weights sum,
-      // intra mass becomes the super-vertex self-loop) and a re-sweep of
-      // the coarse weighted graph — a level-2 move relocates an entire
-      // level-1 community at once, the multi-level refinement the sweep
-      // alone can't express; labels unfold through the level-1 assignment;
-      // exact-integer scores at both levels, vs an independent sequential
-      // mirror
-      Analytics.louvain(DerivedGraphs.small(s, dir), rounds = 4)),
-    "g40_temporal_reach" -> ((s, dir) =>
-      // time-respecting earliest-arrival reachability: an edge is usable
-      // only at its timestamp t >= arrival(src) — static reachability
-      // answers this WRONG; deterministic derived edge times so the
-      // hop-bounded recursive-CTE oracle enumerates the same fixpoint
-      Traversals.temporalReachability(
-        DerivedGraphs.small(s, dir)
-          .withColumn("t", expr("(src * 3 + dst) % 16")),
-        start = 0L, startTime = 0L, maxHops = 12)),
-    "g39_neighbor_stats" -> ((s, dir) =>
-      // one-hop neighborhood feature aggregation (GraphSAGE-style mean
-      // step over out-degree features): one degree agg + one edge-vs-
-      // degree join + one src-keyed agg, all map-side combinable
-      Analytics.neighborStats(DerivedGraphs.small(s, dir))),
-    "g37_eccentricity" -> ((s, dir) =>
-      // per-seed eccentricity (max hop distance) + reach — the sampled
-      // diameter/radius profile; same one-landmarkBfs-run-for-all-seeds
-      // machinery as g24/g29, integer-exact compare
-      Analytics.eccentricityProfile(DerivedGraphs.small(s, dir),
-        seeds = Seq(0L, 1L, 2L, 3L), maxDepth = 12)),
-    "g38_shortest_path" -> ((s, dir) =>
-      // shortest-path RECONSTRUCTION: the actual hop sequence 0 → the
-      // highest-id reachable vertex, canonical min-id predecessor at each
-      // level so the recursive-CTE mirror derives the identical path;
-      // one BFS + one level-aligned min-parent join, then broadcast
-      // single-row walk-back joins in one lazy plan
-      Traversals.shortestPathTo(DerivedGraphs.small(s, dir), start = 0L,
-        maxDepth = 12)),
-    "g24_closeness" -> ((s, dir) =>
-      // seed-sampled closeness profile: integer (n_reached, sum_dist) per
-      // seed, one Pregel BFS each over the shared edge relation; the ratio
-      // stays with the caller so the compare is integer-exact
-      Analytics.closenessProfile(DerivedGraphs.small(s, dir),
-        seeds = Seq(0L, 1L, 2L, 3L), maxDepth = 12)),
-    "g23_partitioned_dfs" -> ((s, dir) => {
-      // DFS through the same partitioned layout (closes the g16 gap: BFS was
-      // the only traversal gated over the graph_name-partitioned table).
-      // Preorder is not SQL-expressible, so the oracle is SequentialModel's
-      // independent recursion over the identically-filtered edge set,
-      // emitted as VALUES (the g8 discipline); the traversal's edge scan
-      // partition-prunes to the named graph (GraphCatalogSpec structural
-      // assert on dfsPartitioned's scan)
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-pdfs-${ProcessHandle.current().pid()}"))
-      java.nio.file.Files.createDirectories(root)
-      val cat = new GraphCatalog(s, root.resolve("pgraphs").toString)
-      val e = DerivedGraphs.small(s, dir)
-      def put(name: String, df: DataFrame): Unit =
-        if (cat.existsPartitioned(name)) cat.modifyGraphPartitioned(name, df)
-        else cat.addGraphPartitioned(name, df)
-      put("even", e.filter(col("src") % 2 === 0))
-      put("odd", e.filter(col("src") % 2 === 1))
-      cat.dfsPartitioned("even", start = 0L)
-    }),
-    "g10_matrix_roundtrip" -> ((s, dir) => {
-      // the reference's full write path (op 1, primaryServer.c:40-63):
-      // catalog add -> dense-matrix text file -> re-ingest -> analytics;
-      // oracle computes the same degrees straight from the source table.
-      // Fixed per-process dir (re-runs drop + overwrite), recursively
-      // deleted by a shutdown hook (deleteOnExit can't remove non-empty
-      // dirs) so repeated bench/verify runs don't accumulate temp garbage.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-rt-${ProcessHandle.current().pid()}"))
-      java.nio.file.Files.createDirectories(root)
-      val cat = new GraphCatalog(s, root.resolve("graphs").toString)
-      cat.dropGraph("rt")
-      val oneBased = DerivedGraphs.small(s, dir)
-        .select((col("src") + 1).as("src"), (col("dst") + 1).as("dst"))
-      cat.addGraph("rt", oneBased)
-      val mtx = root.resolve("rt.txt").toString
-      MatrixFormat.writeMatrix(s, cat.graph("rt"), mtx)
-      val back = MatrixFormat.readEdges(s, mtx)
-        .select((col("src") - 1).as("src"), (col("dst") - 1).as("dst"))
-      Analytics.degrees(back, dedup = false).orderBy("vertex")
-    }),
-
-    // ---- relational: aggregation ----
-    "q1_pricing_summary" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          sum(dec12("l_quantity")).cast("double").as("sum_qty"),
-          sum(dec12("l_extendedprice")).cast("double").as("sum_base_price"),
-          sum(dec12("l_extendedprice") * (lit(1) - dec4("l_discount"))).cast("double").as("sum_disc_price"),
-          sum(dec12("l_extendedprice") * (lit(1) - dec4("l_discount")) * (lit(1) + dec4("l_tax")))
-            .cast("double").as("sum_charge"),
-          (sum(dec12("l_quantity")).cast("double") / count(lit(1))).as("avg_qty"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")),
-    "q6_forecast_revenue" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= expr("TIMESTAMP'1996-01-01 00:00:00'") &&
-          col("l_shipdate") < expr("TIMESTAMP'1997-01-01 00:00:00'") &&
-          col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
-        .agg(sum(dec12("l_extendedprice") * dec4("l_discount")).cast("double").as("revenue"))),
-    "q9_cube_counts" -> ((s, dir) => // full cube (all grouping combinations)
-      Tables.lineitem(s, dir)
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"),
-          grouping(col("l_returnflag")).cast("long").as("g_rf"),
-          grouping(col("l_linestatus")).cast("long").as("g_ls"))
-        .orderBy(col("g_rf"), col("g_ls"), col("l_returnflag"), col("l_linestatus"))),
-    "q7_rollup_revenue" -> ((s, dir) => // grouping-sets surface: rollup with
-      // GROUPING disambiguators; integer-exact measures
-      Tables.lineitem(s, dir)
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"),
-          sum(dec12("l_quantity")).cast("double").as("sum_qty"),
-          grouping(col("l_returnflag")).cast("long").as("g_rf"),
-          grouping(col("l_linestatus")).cast("long").as("g_ls"))
-        .orderBy(col("g_rf"), col("g_ls"), col("l_returnflag"), col("l_linestatus"))),
-
-    "q19_correlated" -> ((s, dir) => { // the spark.sql() entry path itself
-      // plus a correlated scalar subquery (Catalyst rewrites it to an
-      // aggregate + join — no per-row re-execution); ties on the max all
-      // count, same as the oracle
-      Tables.customer(s, dir).createOrReplaceTempView("customer_v")
-      Tables.orders(s, dir).createOrReplaceTempView("orders_v")
-      s.sql(
-        """SELECT c_mktsegment, COUNT(*) AS n_top,
-          |       CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_top
-          |FROM customer_v c JOIN orders_v o ON o.o_custkey = c.c_custkey
-          |WHERE o.o_totalprice = (SELECT MAX(o2.o_totalprice)
-          |                        FROM orders_v o2 WHERE o2.o_custkey = c.c_custkey)
-          |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)
-    }),
-    "q18_grouping_sets" -> ((s, dir) => // arbitrary GROUPING SETS — the
-      // non-hierarchical combination {(flag), (status)} that neither
-      // rollup (q7) nor cube (q9) expresses; one Expand, one shuffle
-      Tables.lineitem(s, dir)
-        .groupingSets(Seq(Seq(col("l_returnflag")), Seq(col("l_linestatus"))),
-          col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"),
-          sum(dec12("l_quantity")).cast("double").as("sum_qty"),
-          grouping(col("l_returnflag")).cast("long").as("g_rf"),
-          grouping(col("l_linestatus")).cast("long").as("g_ls"))
-        .orderBy("g_rf", "g_ls", "l_returnflag", "l_linestatus")),
-    "q8_distinct_agg" -> ((s, dir) => // distinct aggregation (two distinct
-      // columns in one agg forces Spark's expand-based distinct plan)
-      Tables.lineitem(s, dir)
-        .groupBy("l_returnflag")
-        .agg(countDistinct(col("l_partkey")).as("n_parts"),
-          countDistinct(col("l_suppkey")).as("n_supps"),
-          count(lit(1)).as("n"))
-        .orderBy("l_returnflag")),
-
-    "q11_topk_udaf" -> ((s, dir) => { // typed Aggregator UDAF: bounded O(k)
-      // per-group state through the partial/merge path — the scale-safe
-      // form of top-N-per-group (no full per-group sort/materialization)
-      import graft.functions.Aggregators
-      val topk = udaf(new Aggregators.TopKByScore(3))
-      EventStreams.normalized(Tables.events(s, dir))
-        .groupBy("event_type", "user_id").agg(count(lit(1)).as("n"))
-        .groupBy("event_type")
-        .agg(topk(col("n"), col("user_id")).as("top"))
-        .select(col("event_type"), posexplode(col("top")).as(Seq("pos", "t")))
-        .select(col("event_type"), (col("pos") + 1).cast("long").as("rank"),
-          col("t.score").as("n_events"), col("t.id").as("user_id"))
-        .orderBy("event_type", "rank")
-    }),
-    "q31_scd2_history" -> ((s, dir) => {
-      // SCD Type-2 historization (the warehouse dimension-build): each
-      // customer's order-priority CHANGE LOG compressed to validity
-      // ranges [valid_from, valid_to) — consecutive repeats collapse
-      // (lag-compare), valid_to = the next change's date, NULL marks the
-      // current row. Epoch-day ints; (date, orderkey) totally orders each
-      // key's history so the compression is deterministic. The lag and
-      // the post-filter lead need two window passes (the second runs on
-      // the compressed rows), but both share one Exchange on custkey and
-      // the second sort is over already-clustered rows.
-      val w = Window.partitionBy("o_custkey").orderBy(col("eff_d"), col("o_orderkey"))
-      val w2 = Window.partitionBy("o_custkey").orderBy(col("eff_d"), col("o_orderkey"))
-      Tables.orders(s, dir)
-        .select(col("o_custkey"), col("o_orderkey"), col("o_orderpriority"),
-          datediff(col("o_orderdate"), lit("1970-01-01")).cast("long").as("eff_d"))
-        .withColumn("prev", lag(col("o_orderpriority"), 1).over(w))
-        .filter(col("prev").isNull || col("prev") =!= col("o_orderpriority"))
-        .withColumn("valid_to_d", lead(col("eff_d"), 1).over(w2))
-        .select(col("o_custkey"), col("o_orderpriority"),
-          col("eff_d").as("valid_from_d"), col("valid_to_d"),
-          col("valid_to_d").isNull.as("is_current"))
-        .orderBy("o_custkey", "valid_from_d")
-    }),
-    "e33_mad_outliers" -> ((s, dir) => {
-      // robust outlier detection by MEDIAN ABSOLUTE DEVIATION — the
-      // Hampel rule that survives what z-scores can't (the outliers
-      // themselves corrupt a mean/stddev; the median and MAD resist up
-      // to 50% contamination): per segment, median order price (cents),
-      // MAD, and the count of orders beyond the 3σ-equivalent fence
-      // |x − med| · 10000 > 44478 · MAD (3 · 1.4826 scale factor,
-      // cross-multiplied — integer-exact). percentile_disc keeps every
-      // quantile an EXISTING cents value on both engines.
-      val ord = Tables.orders(s, dir)
-        .join(Tables.customer(s, dir),
-          col("o_custkey") === col("c_custkey"))
-        .select(col("c_mktsegment"),
-          (col("o_totalprice").cast("decimal(12,2)") * 100).cast("long").as("cents"))
-      ord.createOrReplaceTempView("ord_e33")
-      s.sql(
-        """WITH med AS (
-          |  SELECT c_mktsegment,
-          |         percentile_disc(0.5) WITHIN GROUP (ORDER BY cents) AS med_c
-          |  FROM ord_e33 GROUP BY c_mktsegment),
-          |dev AS (
-          |  SELECT o.c_mktsegment, o.cents, m.med_c, abs(o.cents - m.med_c) AS adev
-          |  FROM ord_e33 o JOIN med m ON m.c_mktsegment = o.c_mktsegment),
-          |mad AS (
-          |  SELECT c_mktsegment,
-          |         percentile_disc(0.5) WITHIN GROUP (ORDER BY adev) AS mad_c
-          |  FROM dev GROUP BY c_mktsegment)
-          |SELECT d.c_mktsegment, COUNT(*) AS n,
-          |       CAST(MIN(d.med_c) AS BIGINT) AS median_c,
-          |       CAST(MIN(m.mad_c) AS BIGINT) AS mad_c,
-          |       SUM(CASE WHEN d.adev * 10000 > 44478 * m.mad_c THEN 1 ELSE 0 END) AS n_outliers
-          |FROM dev d JOIN mad m ON m.c_mktsegment = d.c_mktsegment
-          |GROUP BY d.c_mktsegment ORDER BY d.c_mktsegment""".stripMargin)
-    }),
-    "q30_percentile_disc" -> ((s, dir) =>
-      // the DISCrete percentile family (q12 is the interpolated CONT one):
-      // percentile_disc returns an EXISTING value (first whose cumulative
-      // share >= p, the ANSI definition both engines implement), so the
-      // result is exact with no interpolation arithmetic at all
-      Tables.lineitem(s, dir)
-        .groupBy("l_returnflag")
-        .agg(
-          expr("percentile_disc(0.25) WITHIN GROUP (ORDER BY l_quantity)")
-            .cast("double").as("p25_disc"),
-          expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY l_quantity)")
-            .cast("double").as("p50_disc"),
-          expr("percentile_disc(0.75) WITHIN GROUP (ORDER BY l_quantity)")
-            .cast("double").as("p75_disc"),
-          count(lit(1)).as("n"))
-        .orderBy("l_returnflag")),
-    "q12_percentiles" -> ((s, dir) => { // exact interpolated percentiles —
-      // sort-based agg; values are small integers so the (n-1)p linear
-      // interpolation is dyadic-exact in both engines
-      val pcts = expr("percentile(l_quantity, array(0.25D, 0.5D, 0.75D))")
-      Tables.lineitem(s, dir)
-        .groupBy("l_returnflag")
-        .agg(pcts.as("p"))
-        .select(col("l_returnflag"),
-          element_at(col("p"), 1).as("p25"),
-          element_at(col("p"), 2).as("p50"),
-          element_at(col("p"), 3).as("p75"))
-        .orderBy("l_returnflag")
-    }),
-    "q14_bucketed_join" -> ((s, dir) => {
-      // physical-layout surface bound to the gate: both sides bucketed on
-      // the join key at write time, so the join itself plans with ZERO
-      // Exchange (the structural no-shuffle assertion lives in
-      // PartitioningSpec; this entry pins result correctness). At 100 TB
-      // this is the write-once-join-many pattern: the bucketed write is the
-      // only shuffle the key ever pays.
-      Partitioning.writeBucketed(
-        Tables.orders(s, dir).select("o_orderkey", "o_orderpriority"),
-        "graft_bkt_orders", "o_orderkey")
-      Partitioning.writeBucketed(
-        Tables.lineitem(s, dir).select(col("l_orderkey"), dec12("l_quantity").as("qty")),
-        "graft_bkt_lineitem", "l_orderkey")
-      Partitioning.readTable(s, "graft_bkt_lineitem")
-        .join(Partitioning.readTable(s, "graft_bkt_orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n"), sum(col("qty")).cast("double").as("sum_qty"))
-        .orderBy("o_orderpriority")
-    }),
-    "q15_salted_join" -> ((s, dir) => {
-      // the skew-mitigation surface bound to the gate: the salted join must
-      // return EXACTLY what the plain join returns (salting only respreads
-      // hot keys across reducers), so the oracle is the unsalted SQL join
-      val big = Tables.lineitem(s, dir)
-        .select(col("l_orderkey").as("o_orderkey"), dec12("l_quantity").as("qty"))
-      val small = Tables.orders(s, dir).select("o_orderkey", "o_orderpriority")
-      Partitioning.saltedJoin(big, small, "o_orderkey", salts = 8)
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n"), sum(col("qty")).cast("double").as("sum_qty"))
-        .orderBy("o_orderpriority")
-    }),
-    "q22_null_safe_join" -> ((s, dir) => {
-      // null-safe equality join (<=>, a distinct Catalyst code path from
-      // plain = : EqualNullSafe matches NULL with NULL) over derived
-      // nullable keys, FULL OUTER so unmatched key domains survive; the
-      // oracle mirrors with IS NOT DISTINCT FROM. Sort order pins NULL
-      // placement explicitly (Spark defaults NULLS FIRST asc, DuckDB LAST).
-      val c = Tables.customer(s, dir)
-        .select(expr("nullif(c_custkey % 5, 2)").as("ck"))
-        .groupBy("ck").agg(count(lit(1)).as("n_cust"))
-      val sup = Tables.supplier(s, dir)
-        .select(expr("nullif(s_suppkey % 7, 3)").as("sk"))
-        .groupBy("sk").agg(count(lit(1)).as("n_supp"))
-      c.join(sup, col("ck") <=> col("sk"), "full_outer")
-        .select(col("ck"), col("sk"), col("n_cust"), col("n_supp"))
-        .orderBy(col("ck").asc_nulls_first, col("sk").asc_nulls_first)
-    }),
-    "q25_arg_extremes" -> ((s, dir) => {
-      // max_by/min_by arg-extremum aggregates (Catalyst MaxBy/MinBy — a
-      // different aggregate path from max/min: the ordering value and the
-      // returned value are different columns, no join-back or window
-      // needed). Ties made impossible by folding the tie-break into ONE
-      // integer ordering scalar (balance cents ⊕ custkey — exact, and
-      // identical arithmetic on both engines). The custkey slot is 10^10
-      // wide: TPC-H custkey = 150k·sf, so it holds to sf≈66000, and
-      // |bal_c|·10^10 ≤ ~10^16 stays well inside Long.
-      val c = Tables.customer(s, dir).select(col("c_nationkey"), col("c_custkey"),
-          (dec12("c_acctbal") * 100).cast("long").as("bal_c"))
-        .withColumn("v", col("bal_c") * 10000000000L + col("c_custkey"))
-      c.groupBy("c_nationkey")
-        .agg(max_by(col("c_custkey"), col("v")).as("richest"),
-          min_by(col("c_custkey"), col("v")).as("poorest"),
-          max(col("bal_c")).as("max_bal_c"))
-        .orderBy("c_nationkey")
-    }),
-    "e30_higher_order" -> ((s, dir) => {
-      // higher-order array functions through the SQL surface: per order,
-      // the line quantities as a sorted array folded/filtered/mapped with
-      // lambda expressions (aggregate/filter/transform — the codegen'd
-      // array algebra the llm/ operators lean on, here exercised as
-      // user-facing SQL); scalar outputs so the gate compares exactly
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_v")
-      s.sql(
-        """WITH q AS (SELECT l_orderkey, array_sort(collect_list(CAST(l_quantity AS BIGINT))) AS qtys
-          |           FROM lineitem_v WHERE l_orderkey % 100 = 0
-          |           GROUP BY l_orderkey)
-          |SELECT l_orderkey,
-          |       CAST(size(qtys) AS BIGINT) AS n_items,
-          |       aggregate(qtys, CAST(0 AS BIGINT), (a, x) -> a + x) AS total_qty,
-          |       CAST(size(filter(qtys, x -> x > 30)) AS BIGINT) AS n_heavy,
-          |       element_at(transform(qtys, x -> x * 3 + 1), 1) AS min_mapped
-          |FROM q ORDER BY l_orderkey""".stripMargin)
-    }),
-    "e28_filtered_aggs" -> ((s, dir) => {
-      // the FILTER clause on aggregates (SQL:2003) — one scan, several
-      // differently-predicated aggregates per group, incl. FILTER on a
-      // DISTINCT aggregate; avg in integer permille so the compare is
-      // exact; exercised through the SQL surface (spark.sql), not the
-      // Column API
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_v")
-      s.sql(
-        """SELECT l_returnflag,
-          |       COUNT(*) AS n_all,
-          |       COUNT(*) FILTER (WHERE l_quantity > 25) AS n_heavy,
-          |       CAST(SUM(l_quantity) FILTER (WHERE l_discount > 0.05) AS BIGINT) AS qty_discounted,
-          |       COUNT(DISTINCT l_suppkey) FILTER (WHERE l_quantity > 40) AS n_heavy_suppliers,
-          |       CAST(SUM(l_quantity) FILTER (WHERE l_quantity > 25) AS BIGINT) * 1000
-          |         div COUNT(*) FILTER (WHERE l_quantity > 25) AS heavy_avg_1e3
-          |FROM lineitem_v
-          |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
-    }),
-    "e29_rank_family" -> ((s, dir) => {
-      // the full relative-rank window family on ONE window spec:
-      // percent_rank ((rank-1)/(n-1): IEEE-exact on both engines),
-      // cume_dist, ntile(4) — tie-broken to a total order so ntile's
-      // row_number-based buckets are deterministic
-      Tables.orders(s, dir).createOrReplaceTempView("orders_v")
-      s.sql(
-        """SELECT o_orderkey, o_orderpriority,
-          |       percent_rank() OVER w AS pr,
-          |       cume_dist() OVER w AS cd,
-          |       CAST(ntile(4) OVER w AS BIGINT) AS quartile
-          |FROM orders_v WHERE o_custkey % 50 = 0
-          |WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey)
-          |ORDER BY o_orderpriority, o_totalprice, o_orderkey""".stripMargin)
-    }),
-    "e31_group_ols" -> ((s, dir) => {
-      // closed-form least squares per group (price-vs-quantity regression
-      // per return flag) from EXACT integer moments: quantities and price
-      // CENTS sum to BIGINTs in one map-side-combinable pass, the normal
-      // equations' cross products go through DECIMAL so the only floats
-      // are the final two divisions (and an IEEE-scalar r²) — no
-      // iterative solver, no partial-sum float drift. At 10¹² rows the
-      // moments need DECIMAL(38,0) accumulators (cents·rows overflows
-      // int64 around 1e18); the shape is unchanged.
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_v")
-      s.sql(
-        s"""WITH m AS (
-           |  SELECT l_returnflag, COUNT(*) AS n,
-           |         SUM(CAST(l_quantity AS BIGINT)) AS sx,
-           |         SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)) AS sy,
-           |         SUM(CAST(CAST(l_quantity AS BIGINT) * CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS DECIMAL(25,0))) AS sxy,
-           |         SUM(CAST(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT) AS DECIMAL(25,0))) AS sxx,
-           |         SUM(CAST(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT) * CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS DECIMAL(25,0))) AS syy
-           |  FROM lineitem_v GROUP BY l_returnflag),
-           |d AS (
-           |  SELECT l_returnflag, n,
-           |         CAST(n AS DECIMAL(38,0)) * sxy - CAST(sx AS DECIMAL(38,0)) * sy AS num,
-           |         CAST(n AS DECIMAL(38,0)) * sxx - CAST(sx AS DECIMAL(38,0)) * sx AS den,
-           |         CAST(sy AS DECIMAL(38,0)) * sxx - CAST(sx AS DECIMAL(38,0)) * sxy AS inum,
-           |         CAST(n AS DECIMAL(38,0)) * syy - CAST(sy AS DECIMAL(38,0)) * sy AS vary
-           |  FROM m)
-           |SELECT l_returnflag, n,
-           |       round(CAST(num AS DOUBLE) / CAST(den AS DOUBLE), 6) + 0.0 AS slope_6,
-           |       round(CAST(inum AS DOUBLE) / CAST(den AS DOUBLE), 6) + 0.0 AS icept_6,
-           |       round(CAST(num AS DOUBLE) * CAST(num AS DOUBLE)
-           |             / (CAST(den AS DOUBLE) * CAST(vary AS DOUBLE)), 6) + 0.0 AS r2_6
-           |FROM d ORDER BY l_returnflag""".stripMargin)
-    }),
-    "e32_chi2_cells" -> ((s, dir) => {
-      // contingency-table independence profile (return flag × line
-      // status): per-cell Pearson χ² contribution from exact integer
-      // counts — diff = o·T − r·c stays in int64 at this scale, the term
-      // is ONE deterministic IEEE division per cell, so there is no
-      // cross-cell float summation to drift (the user sums term_6 for
-      // the χ² statistic). The profiling op behind "are these two
-      // metadata columns independent?" on a corpus card.
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_v")
-      s.sql(
-        """WITH o AS (SELECT l_returnflag, l_linestatus, COUNT(*) AS n
-          |           FROM lineitem_v GROUP BY 1, 2),
-          |r AS (SELECT l_returnflag, SUM(n) AS rn FROM o GROUP BY 1),
-          |c AS (SELECT l_linestatus, SUM(n) AS cn FROM o GROUP BY 1),
-          |t AS (SELECT SUM(n) AS tn FROM o)
-          |SELECT o.l_returnflag, o.l_linestatus, o.n,
-          |       round(CAST((o.n * t.tn - r.rn * c.cn) AS DOUBLE)
-          |             * CAST((o.n * t.tn - r.rn * c.cn) AS DOUBLE)
-          |             / CAST(r.rn * c.cn * t.tn AS DOUBLE), 6) + 0.0 AS term_6
-          |FROM o JOIN r USING (l_returnflag) JOIN c USING (l_linestatus) CROSS JOIN t
-          |ORDER BY o.l_returnflag, o.l_linestatus""".stripMargin)
-    }),
-    "q26_recursive_cte" -> ((s, dir) => {
-      // WITH RECURSIVE through Spark's UnionLoop (new in Spark 4.x) — the
-      // SQL-surface route to iterative computation the DataFrame loops
-      // (g1/g7) hand-roll. Spark supports UNION ALL recursion only, so the
-      // domain is ACYCLIC by construction: walk every customer up the
-      // implicit binary tree (parent = key div 2 — the org-chart /
-      // category-hierarchy shape), emitting depth and the path-sum of
-      // ancestor keys; each step strictly decreases the node, so UNION ALL
-      // is exact and the loop terminates without a hop guard
-      Tables.customer(s, dir).createOrReplaceTempView("customer_v")
-      s.sql(
-        """WITH RECURSIVE up(c_custkey, node, steps, path_sum) AS (
-          |  SELECT c_custkey, c_custkey AS node, CAST(0 AS BIGINT) AS steps,
-          |         c_custkey AS path_sum
-          |  FROM customer_v
-          |  UNION ALL
-          |  SELECT c_custkey, node DIV 2, steps + 1, path_sum + node DIV 2
-          |  FROM up WHERE node > 1)
-          |SELECT c_custkey, steps AS depth, path_sum
-          |FROM up WHERE node = 1 ORDER BY c_custkey""".stripMargin)
-    }),
-    "q33_sql_bfs" -> ((s, dir) => {
-      // the SQL table-valued-function surface for graph ops (round-10
-      // verdict gap #5): a catalog-stored graph queried entirely THROUGH
-      // spark.sql — `SELECT * FROM graph_bfs(root, g, start, depth)`,
-      // registered via the same SparkSessionExtensions hook as the scalar
-      // expressions; the Pregel fixpoint runs at analysis (documented in
-      // GraphTvfs), the returned plan composes like any relation (the
-      // outer query filters + re-orders it). Oracle = g16's recursive-CTE
-      // walk over the unfiltered derivation.
-      val root = sqlTvfGraph(s, dir)
-      s.sql(
-        s"""SELECT vertex, level FROM graph_bfs('$root', 'sqlg', 0, 12)
-           |WHERE level >= 0 ORDER BY level, vertex""".stripMargin)
-    }),
-    "q39_sql_cc" -> ((s, dir) => {
-      // SQL TVF surface widened to connected components (round-11 verdict
-      // gap #5: SQL-only users could not reach CC): same catalog-stored
-      // graph, same analysis-time-execution contract as q33; oracle =
-      // g3's recursive reachability-closure mirror.
-      val root = sqlTvfGraph(s, dir)
-      s.sql(s"SELECT vertex, component FROM graph_cc('$root', 'sqlg') ORDER BY vertex")
-    }),
-    "q40_sql_path" -> ((s, dir) => {
-      // SQL TVF for shortest-path RECONSTRUCTION: the canonical
-      // min-predecessor hop sequence (g38's contract) selected and
-      // re-ordered through spark.sql; oracle = g38's recursive-CTE mirror.
-      val root = sqlTvfGraph(s, dir)
-      s.sql(
-        s"""SELECT pos, vertex FROM graph_shortest_path('$root', 'sqlg', 0, 12)
-           |ORDER BY pos""".stripMargin)
-    }),
-    "q41_sql_motif" -> ((s, dir) => {
-      // SQL TVF for motif search: g31's directed-triangle pattern run
-      // entirely through spark.sql, with the rotation-canonicalization
-      // predicate applied as an OUTER SQL filter that Catalyst pushes
-      // into the TVF's join chain; oracle = the same mirrored chain.
-      val root = sqlTvfGraph(s, dir)
-      s.sql(
-        s"""SELECT a, b, c FROM graph_motif('$root', 'sqlg', '(a)-(b); (b)-(c); (c)-(a)')
-           |WHERE a < b AND a < c ORDER BY a, b, c""".stripMargin)
-    }),
-    "q27_bloom_join" -> ((s, dir) => {
-      // runtime bloom-filter join pruning: build a bloom filter over the
-      // selective dim side's join keys (spark-sketch BloomFilter — the
-      // same mergeable structure Spark's own InjectRuntimeFilter plants,
-      // built here explicitly; ~1.2 MB for 1M keys at 1% fpp), broadcast
-      // it, and prune the fact side BEFORE its shuffle — only ~fpp of
-      // non-matching rows survive to the exchange, which at 100 TB is the
-      // difference between shuffling the full fact table and shuffling
-      // the matching slice. The equi-join then re-checks exactly, so the
-      // result is identical to the unpruned join — which is precisely
-      // what the plain-join oracle checks (false positives caught).
-      val urgent = Tables.orders(s, dir)
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_orderkey"))
-      val bf = urgent.stat.bloomFilter("o_orderkey", 1000000L, 0.01)
-      val bfB = s.sparkContext.broadcast(bf)
-      val mightContain = udf((k: Long) => bfB.value.mightContain(k))
-      Tables.lineitem(s, dir)
-        .filter(mightContain(col("l_orderkey")))
-        .join(urgent, col("l_orderkey") === col("o_orderkey"))
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n_items"),
-          sum(dec12("l_quantity")).cast("double").as("sum_qty"))
-        .orderBy("l_returnflag")
-    }),
-    "q32_asof_version" -> ((s, dir) => {
-      // point-in-time read over a versioned history (SCD-2 / table-format
-      // AS OF): keys ≡0 mod 3 carry a v2 price bump; the same history read
-      // AS OF 1 and AS OF 2 must show the un-bumped and bumped states
-      // respectively — both rollups gated in one tagged result
-      val o = Tables.orders(s, dir).select(col("o_orderkey"),
-        col("o_orderpriority"), dec12("o_totalprice").as("price"))
-      val hist = o.withColumn("version", lit(1L))
-        .unionByName(o.filter(col("o_orderkey") % 3 === 0)
-          .withColumn("price", (col("price") + 10).cast("decimal(12,2)"))
-          .withColumn("version", lit(2L)))
-      def rollup(v: Long) =
-        SnapshotDiff.asOfVersion(hist, keys = Seq("o_orderkey"),
-            versionCol = "version", v = v)
-          .groupBy("o_orderpriority")
-          .agg(count(lit(1)).as("n"), sum("price").cast("double").as("sum_price"))
-          .withColumn("asof", lit(v))
-      rollup(1L).unionByName(rollup(2L))
-        .select("asof", "o_orderpriority", "n", "sum_price")
-        .orderBy("asof", "o_orderpriority")
-    }),
-    "q29_cow_merge" -> ((s, dir) => {
-      // copy-on-write MERGE gate (round-7 verdict #2): write a fresh
-      // hive-partitioned target (f5's layout), apply a deterministic
-      // change-set — updates (+100.00 on keys ≡0 mod 97), deletes (≡0 mod
-      // 131), inserts (key+1e9 into the brand-new partition 2099 for keys
-      // ≡0 mod 203) — through mergeCow, which rewrites ONLY the touched
-      // partition directories (byte-stability of the rest is
-      // MergeCowSpec's half), then re-read the table and roll it up per
-      // partition; the mirror computes the same merged state in SQL
-      val out = cowMergePath(dir)
-      val base = Tables.orders(s, dir).select(
-        col("o_orderkey"),
-        dec12("o_totalprice").as("price"),
-        col("o_orderpriority"),
-        year(col("o_orderdate")).as("o_year"))
-      Partitioning.writeHivePartitioned(base, out, "o_year")
-      val upd = base
-        .filter(col("o_orderkey") % 97 === 0 && col("o_orderkey") % 131 =!= 0)
-        .withColumn("price", (col("price") + lit(100)).cast("decimal(12,2)"))
-        .withColumn("is_delete", lit(false))
-      val del = base.filter(col("o_orderkey") % 131 === 0)
-        .withColumn("is_delete", lit(true))
-      val ins = base.filter(col("o_orderkey") % 203 === 0)
-        .select((col("o_orderkey") + 1000000000L).as("o_orderkey"),
-          lit("1.00").cast("decimal(12,2)").as("price"),
-          lit("1-URGENT").as("o_orderpriority"),
-          lit(2099).as("o_year"),
-          lit(false).as("is_delete"))
-      MergeInto.mergeCow(s, out, upd.unionByName(del).unionByName(ins),
-        keys = Seq("o_orderkey"), partCol = "o_year",
-        deleteCol = Some("is_delete"))
-      s.read.parquet(out)
-        .groupBy(col("o_year").cast("long").as("o_year"))
-        .agg(count(lit(1)).as("n"), sum("price").cast("double").as("sum_price"))
-        .orderBy("o_year")
-    }),
-    "q28_snapshot_diff" -> ((s, dir) => {
-      // CDC between two derived snapshot versions of orders (old drops
-      // keys ≡0 mod 5; new drops ≡0 mod 7 and bumps price on ≡0 mod 3),
-      // so all four change classes occur. The diff itself is ONE
-      // full-outer key join (SnapshotDiff — merge's inverse: q20 APPLIES
-      // a change-set, q28 RECOVERS one); the gate rolls it up per class.
-      val o = Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_custkey"), dec12("o_totalprice").as("price"))
-      val vOld = o.filter(col("o_orderkey") % 5 =!= 0)
-      val vNew = o.filter(col("o_orderkey") % 7 =!= 0)
-        .withColumn("price",
-          when(col("o_orderkey") % 3 === 0, col("price") + 1).otherwise(col("price")))
-      SnapshotDiff.diff(vOld, vNew, Seq("o_orderkey"))
-        .groupBy("change")
-        .agg(count(lit(1)).as("n_keys"), sum("o_orderkey").as("sum_keys"))
-        .orderBy("change")
-    }),
-    "p4_incremental_refresh" -> ((s, dir) => {
-      // CDC-driven incremental refresh composed end-to-end (the
-      // maintenance loop a 100 TB corpus actually runs): old snapshot
-      // hive-partitioned on disk → SnapshotDiff.changeSet recovers the
-      // minimal applyable delta → mergeCow applies it rewriting ONLY the
-      // touched partitions → the refreshed table must EQUAL the new
-      // snapshot, so the oracle aggregates vNew directly (round-trip
-      // identity, not a mirrored pipeline)
-      val out = incrRefreshPath(dir)
-      val o = Tables.orders(s, dir).select(col("o_orderkey"),
-        dec12("o_totalprice").as("price"),
-        year(col("o_orderdate")).as("o_year"))
-      val vOld = o.filter(col("o_orderkey") % 5 =!= 0)
-      val vNew = o.filter(col("o_orderkey") % 7 =!= 0)
-        .withColumn("price",
-          when(col("o_orderkey") % 3 === 0, col("price") + 1).otherwise(col("price"))
-            .cast("decimal(12,2)"))
-      Partitioning.writeHivePartitioned(vOld, out, "o_year")
-      val delta = SnapshotDiff.changeSet(vOld, vNew, keys = Seq("o_orderkey"))
-      MergeInto.mergeCow(s, out, delta, keys = Seq("o_orderkey"),
-        partCol = "o_year", deleteCol = Some("is_delete"))
-      s.read.parquet(out)
-        .groupBy(col("o_year").cast("long").as("o_year"))
-        .agg(count(lit(1)).as("n"), sum("price").cast("double").as("sum_price"))
-        .orderBy("o_year")
-    }),
-    "p3_validation_report" -> ((s, dir) => {
-      // Deequ-style admission gate: four row rules fused into ONE scan
-      // (conditional sums), a key-uniqueness aggregation, and a broadcast
-      // anti-join FK probe — the data-quality report a 100 TB ingest runs
-      // before data joins the corpus. Mixes passing and failing rules so
-      // the gate pins both outcomes (r3's cutoff intentionally bites).
-      val li = Tables.lineitem(s, dir)
-      Validation.report(Seq(
-        Validation.rowChecks(li, Seq(
-          Validation.RowRule("r1_qty_domain",
-            col("l_quantity") >= 1 && col("l_quantity") <= 50),
-          Validation.RowRule("r2_price_positive", col("l_extendedprice") > 0),
-          Validation.RowRule("r3_ship_after_1995",
-            col("l_shipdate") >= lit("1995-01-01").cast("timestamp")),
-          Validation.RowRule("r4_flag_domain",
-            col("l_returnflag").isin("A", "N", "R")))),
-        Validation.unique(li, Seq("l_orderkey", "l_linenumber"), "r5_line_unique"),
-        Validation.refIntegrity(li, "l_orderkey",
-          Tables.orders(s, dir), "o_orderkey", "r6_orders_fk")))
-    }),
-    "p5_corpus_report" -> ((s, dir) => {
-      // dataset-card summary (the stats block every corpus release
-      // ships): one token-counting scan feeds a global aggregate and an
-      // exact-dup hash rollup, stacked into long-format (metric, value)
-      // rows — all INTEGER metrics (mean via div), so the card is
-      // bit-stable across engines. Scale: the md5 rollup is d1's one
-      // hash shuffle; everything else is a single-row aggregate.
-      val stats = Tables.documents(s, dir).select(
-        col("lang"), col("source"), md5(col("text")).as("h"),
-        size(TextOps.tokens(col("text"))).cast("long").as("n_toks"))
-      val base = stats.agg(
-        count(lit(1)).as("n_docs"), sum("n_toks").as("n_tokens"),
-        countDistinct("lang").as("n_langs"), countDistinct("source").as("n_sources"),
-        max("n_toks").as("max_toks"))
-      val dups = stats.groupBy("h").agg(count(lit(1)).as("c"))
-        .filter(col("c") > 1)
-        .agg(coalesce(sum("c"), lit(0L)).as("dup_docs"))
-      base.crossJoin(dups).selectExpr(
-        """stack(7,
-          |  'n_docs', n_docs,
-          |  'n_tokens', n_tokens,
-          |  'n_langs', n_langs,
-          |  'n_sources', n_sources,
-          |  'max_doc_tokens', max_toks,
-          |  'mean_doc_tokens', n_tokens div n_docs,
-          |  'exact_dup_docs', dup_docs) AS (metric, value)""".stripMargin)
-        .orderBy("metric")
-    }),
-    "q24_null_aware_anti" -> ((s, dir) => {
-      // NOT IN over a NULL-bearing subquery — the null-aware anti join
-      // (Spark's NullAwareAntiJoin, a different operator from q5's plain
-      // left_anti): one NULL in the set makes NOT IN vacuously empty,
-      // while the null-filtered variant behaves like the anti join. The
-      // query contrasts both semantics so the gate pins the trap itself.
-      Tables.customer(s, dir).createOrReplaceTempView("customer_v")
-      Tables.orders(s, dir).createOrReplaceTempView("orders_v")
-      s.sql(
-        """WITH keys AS (SELECT nullif(o_custkey % 1000, 7) AS k FROM orders_v),
-          |with_null AS (
-          |  SELECT COUNT(*) AS n FROM customer_v
-          |  WHERE c_custkey % 1000 NOT IN (SELECT k FROM keys)),
-          |no_null AS (
-          |  SELECT COUNT(*) AS n FROM customer_v
-          |  WHERE c_custkey % 1000 NOT IN (SELECT k FROM keys WHERE k IS NOT NULL))
-          |SELECT 'with_null' AS variant, n FROM with_null
-          |UNION ALL SELECT 'no_null', n FROM no_null
-          |ORDER BY variant""".stripMargin)
-    }),
-    "q23_lateral_topn" -> ((s, dir) => {
-      // LATERAL correlated subquery with its own ORDER BY/LIMIT — per-region
-      // top-2 nations by customer count, the "top-N per outer row" shape
-      // q19's scalar subquery can't express; Catalyst decorrelates the
-      // lateral into a ranked join (no per-row re-execution)
-      Tables.region(s, dir).createOrReplaceTempView("region_v")
-      Tables.nation(s, dir).createOrReplaceTempView("nation_v")
-      Tables.customer(s, dir).createOrReplaceTempView("customer_v")
-      s.sql(
-        """SELECT r.r_name, t.n_name, t.n_cust
-          |FROM region_v r, LATERAL (
-          |  SELECT n.n_name, COUNT(*) AS n_cust
-          |  FROM nation_v n JOIN customer_v c ON c.c_nationkey = n.n_nationkey
-          |  WHERE n.n_regionkey = r.r_regionkey
-          |  GROUP BY n.n_name
-          |  ORDER BY n_cust DESC, n_name LIMIT 2) t
-          |ORDER BY r.r_name, t.n_cust DESC, t.n_name""".stripMargin)
-    }),
-    "q20_merge_upsert" -> ((s, dir) => {
-      // MERGE INTO (SCD-1 upsert) through the MergeInto operator: a
-      // deterministic change-set derived from orders itself — updates
-      // (k%10=0 gets +1000), inserts (k%7=3 re-keyed past the key space),
-      // deletes (k%13=5, minus the update overlap so the source stays
-      // key-unique) — applied in ONE full-outer shuffle join; the oracle
-      // mirrors the same merge relationally. At 100 TB the change-set side
-      // broadcasts and the target never shuffles (see MergeInto doc).
-      val target = Tables.orders(s, dir).select(col("o_orderkey").as("k"),
-        dec12("o_totalprice").as("price"), col("o_orderpriority").as("prio"))
-      val updates = target.filter(col("k") % 10 === 0)
-        .withColumn("price", (col("price") + lit(1000)).cast("decimal(12,2)"))
-        .withColumn("del", lit(false))
-      val inserts = target.filter(col("k") % 7 === 3)
-        .select((col("k") + 10000000L).as("k"), col("price"), col("prio"), lit(false).as("del"))
-      val deletes = target.filter(col("k") % 13 === 5 && col("k") % 10 =!= 0)
-        .withColumn("del", lit(true))
-      operators.MergeInto.merge(target,
-          updates.unionByName(inserts).unionByName(deletes), Seq("k"), deleteCol = Some("del"))
-        .groupBy("prio")
-        .agg(count(lit(1)).as("n"), sum("price").cast("double").as("sum_price"))
-        .orderBy("prio")
-    }),
-    "q21_incremental_rollup" -> ((s, dir) => {
-      // incremental-maintenance surface: per-(month, flag) PARTIAL
-      // aggregates merged into the final per-flag rollup — the
-      // materialized-view pattern where each day's 100 TB increment is
-      // aggregated once and the rollup is maintained by merging partial
-      // states (count/sum re-add, min/max re-compare), never by rescanning
-      // history. The oracle computes the same rollup directly from the
-      // base table, proving partial-merge ≡ direct aggregation.
-      val partials = Tables.lineitem(s, dir)
-        .groupBy(date_trunc("month", col("l_shipdate")).as("month"), col("l_returnflag"))
-        .agg(count(lit(1)).as("n"), sum(dec12("l_quantity")).as("sq"),
-          min("l_quantity").as("mn"), max("l_quantity").as("mx"))
-      partials.groupBy("l_returnflag")
-        .agg(sum("n").as("n"), sum("sq").cast("double").as("sum_qty"),
-          min("mn").as("min_qty"), max("mx").as("max_qty"))
-        .orderBy("l_returnflag")
-    }),
-    "f10_manifest_scan" -> ((s, dir) => {
-      // external min/max stats manifest (the Iceberg/Delta data-skipping
-      // shape): write range-sorted files + a per-file stats table, read a
-      // key range back through the manifest so non-intersecting files are
-      // never even LISTED as inputs (file-count pruning is spec-asserted;
-      // the residual filter covers boundary files); oracle = the same
-      // range aggregate straight from the source table
-      val out = manifestScanPath(dir)
-      Partitioning.writeWithManifest(
-        Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderpriority"),
-          dec12("o_totalprice").as("price")),
-        out, statsCol = "o_orderkey", numFiles = 16)
-      Partitioning.readManifestPruned(s, out, "o_orderkey",
-          lo = 1000L, hi = 9000L)
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n"), sum("price").cast("double").as("sum_price"))
-        .orderBy("o_orderpriority")
-    }),
-    "f12_commit_log" -> ((s, dir) => {
-      // the commit-log table layer unifying q28/q32/f10/f11: overwrite,
-      // append, and compaction each land as an atomic log commit (file
-      // list + per-file stats in ONE JSONL entry per version); every
-      // version is then read back THROUGH the log (asOf resolves exactly
-      // that commit's file list — version 2 reads the compacted rewrite,
-      // version 0 still resolves the original files). Oracle: the same
-      // three snapshots derived from the source table. Fresh per-process
-      // table each execution so version numbers are deterministic across
-      // reps; shutdown-hook cleaned.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-clog-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "n_nationkey")
-      val nat = Tables.nation(s, dir).select(
-        col("n_nationkey").cast("long").as("n_nationkey"),
-        col("n_name"), col("n_regionkey").cast("long").as("n_regionkey"))
-      t.overwrite(nat.filter(col("n_nationkey") < 10))
-      t.append(nat.filter(col("n_nationkey") >= 10))
-      t.compact(targetFiles = 2)
-      (0L to 2L).map { v =>
-        t.asOf(v).agg(count(lit(1)).as("n_rows"), sum("n_nationkey").as("sum_key"))
-          .select(lit(v).as("version"), col("n_rows"), col("sum_key"))
-      }.reduce(_ unionByName _).orderBy("version")
-    }),
-    "f18_wap_publish" -> ((s, dir) => {
-      // write-audit-publish on the commit log (the Iceberg WAP shape):
-      // v0 = overwrite base, then an audited append of a CLEAN batch
-      // publishes (v1), and an audited append of a batch with planted
-      // negative values ABORTS — staged files deleted, head untouched,
-      // the violation count surfaced from the report. Output = the
-      // (metric, value) summary of the whole scenario; oracle derives
-      // every number from the same orders slices.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-wap-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "k")
-      val ord = Tables.orders(s, dir).select(
-        col("o_orderkey").cast("long").as("k"),
-        col("o_custkey").cast("long").as("v"))
-      val rules = Seq(
-        graft.operators.Validation.RowRule("k_not_null", col("k").isNotNull),
-        graft.operators.Validation.RowRule("v_nonneg", col("v") >= 0L))
-      t.overwrite(ord.filter(col("k") % 7 === 0))
-      val published = t.appendAudited(ord.filter(col("k") % 7 === 1), rules)
-        .getOrElse(sys.error("clean batch must publish"))
-      val bad = ord.filter(col("k") % 7 === 2)
-        .withColumn("v", when(col("k") % 3 === 0, -col("v") - 1).otherwise(col("v")))
-      val aborted = t.appendAudited(bad, rules) match {
-        case Left(report) => report.map(_._2).sum
-        case Right(v) => sys.error(s"bad batch must not publish, got version $v")
-      }
-      import s.implicits._
-      Seq(
-        ("aborted_violations", aborted),
-        ("head_rows", t.read().count()),
-        ("n_versions", t.versions().size.toLong),
-        ("published_version", published)
-      ).toDF("metric", "value").orderBy("metric")
-    }),
-    "f21_log_schema_evolution" -> ((s, dir) => {
-      // schema evolution on append (the Delta shape): v1's batch carries
-      // a column v0 never had; the merged read surfaces the union schema
-      // with NULLs where a file predates the column, while asOf(0) keeps
-      // the original 2-column shape. Output = head aggregates + v0's
-      // column count.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-sevol-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "n_nationkey")
-      val nat = Tables.nation(s, dir).select(
-        col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
-        col("n_regionkey").cast("long").as("r_extra"))
-      t.overwrite(nat.filter(col("n_nationkey") < 10).drop("r_extra"))
-      t.append(nat.filter(col("n_nationkey") >= 10 && col("n_nationkey") < 20))
-      val v0cols = t.asOf(0L).columns.length.toLong
-      t.read().agg(count(lit(1)).as("n_rows"), sum("n_nationkey").as("sum_key"),
-          count(col("r_extra")).as("n_extra"), sum("r_extra").as("sum_extra"))
-        .select(lit(v0cols).as("v0_cols"), col("n_rows"), col("sum_key"),
-          col("n_extra"), col("sum_extra"))
-    }),
-    "f20_shallow_clone" -> ((s, dir) => {
-      // SHALLOW CLONE: the clone's v0 re-references the source head's
-      // files absolutely (metadata-only — zero data copied), then evolves
-      // independently (a local append the source never sees). Output =
-      // aggregates of source head, clone head, and the pre-append clone
-      // snapshot; the clone-isolation and vacuum-boundary properties are
-      // suite-asserted.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-clone-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val nat = Tables.nation(s, dir).select(
-        col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"))
-      val src = new graft.operators.CommitTable(s, root.resolve("src").toString, "n_nationkey")
-      src.overwrite(nat.filter(col("n_nationkey") < 10))
-      src.append(nat.filter(col("n_nationkey") >= 10 && col("n_nationkey") < 20))
-      val cl = new graft.operators.CommitTable(s, root.resolve("clone").toString, "n_nationkey")
-      cl.shallowCloneFrom(root.resolve("src").toString)
-      cl.append(nat.filter(col("n_nationkey") >= 20))
-      Seq(
-        ("clone_head", cl.read()),
-        ("clone_v0", cl.asOf(0L)),
-        ("source_head", src.read())
-      ).map { case (tag, df) =>
-        df.agg(count(lit(1)).as("n_rows"), sum("n_nationkey").as("sum_key"))
-          .select(lit(tag).as("snapshot"), col("n_rows"), col("sum_key"))
-      }.reduce(_ unionByName _).orderBy("snapshot")
-    }),
-    "f19_ts_travel" -> ((s, dir) => {
-      // TIMESTAMP AS OF time travel (Delta's rule: newest version whose
-      // commit timestamp is at-or-before the asked instant): three
-      // commits at explicit logical timestamps 1000/2000/3000 — v0 keys
-      // < 10, v1 appends [10, 20), v2 overwrites with keys >= 20 — probed
-      // between, at, and after the commit instants. The monotonic
-      // timestamp adjustment and the too-early error are suite-tested.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-tstravel-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "n_nationkey")
-      val nat = Tables.nation(s, dir).select(
-        col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"))
-      t.overwrite(nat.filter(col("n_nationkey") < 10), tsMillis = Some(1000L))
-      t.append(nat.filter(col("n_nationkey") >= 10 && col("n_nationkey") < 20),
-        tsMillis = Some(2000L))
-      t.overwrite(nat.filter(col("n_nationkey") >= 20), tsMillis = Some(3000L))
-      Seq(1500L, 2000L, 2999L, 9999L).map { ts =>
-        t.asOfTimestamp(ts)
-          .agg(count(lit(1)).as("n_rows"), sum("n_nationkey").as("sum_key"))
-          .select(lit(ts).as("ts_probe"), col("n_rows"), col("sum_key"))
-      }.reduce(_ unionByName _).orderBy("ts_probe")
-    }),
-    "q42_sql_log" -> ((s, dir) => {
-      // the storage layer's SQL surface (the q33/q39 TVF move applied to
-      // the commit log): head read, VERSION AS OF, and a log-stats-
-      // pruned range scan — all through spark.sql, over a table built
-      // with the Scala API. Outer aggregates compose over the TVF plans.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-sqllog-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val tp = root.resolve("tbl").toString
-      val t = new graft.operators.CommitTable(s, tp, "n_nationkey")
-      val nat = Tables.nation(s, dir).select(
-        col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"))
-      t.overwrite(nat.filter(col("n_nationkey") < 10).repartition(2))
-      t.append(nat.filter(col("n_nationkey") >= 10).repartition(2))
-      s.sql(
-        s"""SELECT 'head' AS snap, COUNT(*) AS n, SUM(n_nationkey) AS sum_key
-           |FROM log_table('$tp', 'n_nationkey')
-           |UNION ALL
-           |SELECT 'ranged', COUNT(*), SUM(n_nationkey)
-           |FROM log_table_range('$tp', 'n_nationkey', 5, 14)
-           |UNION ALL
-           |SELECT 'v0', COUNT(*), SUM(n_nationkey)
-           |FROM log_table_at('$tp', 'n_nationkey', 0)
-           |ORDER BY snap""".stripMargin)
-    }),
-    "q43_sql_write" -> ((s, dir) => {
-      // the SQL WRITE surface (round-12 Next #7 — q42 made commit-log
-      // tables SQL-readable; a SQL-only user still could not write):
-      // after the Scala-API setup commit, every WRITE here is a pure SQL
-      // statement — log_merge upserts a registered source view (the
-      // MERGE INTO shape), log_delete removes a key range file-granularly
-      // — and the final read goes back through log_table. The statements
-      // commit at analysis (the graph-TVF execution contract, documented
-      // on LogTvfs); SQL-vs-Scala-API equality is spec-asserted in
-      // CommitLogSpec.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-sqlwrite-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val tp = root.resolve("tbl").toString
-      val t = new graft.operators.CommitTable(s, tp, "k")
-      val ord = Tables.orders(s, dir)
-      t.overwrite(ord.select(col("o_orderkey").cast("long").as("k"),
-        col("o_custkey").cast("long").as("v")).repartitionByRange(8, col("k")))
-      ord.filter(col("o_orderkey") % 10 === 0)
-        .select((col("o_orderkey") + 1).cast("long").as("k"),
-          (col("o_custkey") + 7).cast("long").as("v"))
-        .createOrReplaceTempView("q43_src")
-      s.sql(s"SELECT COUNT(*) FROM log_merge('$tp', 'k', 'q43_src', 'k')").collect()
-      s.sql(s"SELECT COUNT(*) FROM log_delete('$tp', 'k', 1000, 5000)").collect()
-      s.sql(
-        s"""SELECT COUNT(*) AS n_rows, SUM(k) AS sum_k, SUM(v) AS sum_v
-           |FROM log_table('$tp', 'k')""".stripMargin)
-    }),
-    "q44_sql_ann" -> ((s, dir) => {
-      // SQL-only VECTOR SEARCH (the pgvector shape — q42/q43 made the
-      // storage layer SQL-complete; the persisted indexes built on it
-      // were still Scala-only at query time): the IVF index builds via
-      // the Scala API at s12's configuration, then the probe runs as a
-      // pure SQL statement through the ann_topk TVF — the returned plan
-      // IS ivfTopKIndexed's (file-pruned probed lists, zero training
-      // jobs), so it shares s3's full mirror bit-for-bit. Same memoized
-      // build artifact as s12; the TVF probe is read-only.
-      val idx = IndexCache.template(s"ivf|$dir|full")(
-        Similarity.buildIvfIndex(Tables.embeddings(s, dir), _))
-      s.sql(s"SELECT * FROM ann_topk('$idx', 20, 5, 4)")
-    }),
-    "q45_sql_graph_ann" -> ((s, dir) => {
-      // SQL-only GRAPH-ROUTED vector search: s25's committed k-NN-graph
-      // index queried through the graph_ann TVF — the routed walk (hops
-      // rounds of file-pruned point reads) runs at analysis and the
-      // statement returns its frame, sharing s25's end-to-end mirror.
-      // Same memoized build artifact as s25; the TVF probe is read-only.
-      val idx = IndexCache.template(s"knng|$dir|full")(
-        KnnGraph.buildKnnGraphIndex(Tables.embeddings(s, dir), _))
-      s.sql(s"SELECT * FROM graph_ann('$idx', 20, 5, 8, 3)")
-    }),
-    "q46_sql_update" -> ((s, dir) => {
-      // file-granular UPDATE, the third DML statement (q43 gave SQL users
-      // MERGE + DELETE): the orders-derived table lands range-clustered,
-      // log_update rewrites ONLY files whose key stats intersect
-      // [1000, 5000] — matching rows get v = v * 2 + 1, everything else
-      // (including whole non-intersecting files, carried by reference)
-      // survives byte-identically. File granularity and the NULL-key
-      // rewrite-unchanged rule are spec-asserted in CommitLogSpec; this
-      // gate binds the content contract end-to-end through pure SQL.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-sqlupd-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val tp = root.resolve("tbl").toString
-      val t = new graft.operators.CommitTable(s, tp, "k")
-      t.overwrite(Tables.orders(s, dir)
-        .select(col("o_orderkey").cast("long").as("k"),
-          col("o_custkey").cast("long").as("v"))
-        .repartitionByRange(8, col("k")))
-      s.sql(s"SELECT COUNT(*) FROM log_update('$tp', 'k', 1000, 5000, 'v', 'v * 2 + 1')").collect()
-      s.sql(
-        s"""SELECT COUNT(*) AS n_rows, SUM(k) AS sum_k, SUM(v) AS sum_v
-           |FROM log_table('$tp', 'k')""".stripMargin)
-    }),
-    "f22_log_delete" -> ((s, dir) => {
-      // DELETE WHERE as a FILE-GRANULAR CoW commit (the Delta/Iceberg
-      // row-level-delete shape): the orders table lands range-clustered
-      // so per-file key stats are tight; the delete rewrites ONLY the
-      // files whose stats intersect the predicate — the rest carry
-      // forward as log references (file granularity is spec-asserted;
-      // this gate binds the content contract + history intactness).
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-logdel-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "o_orderkey")
-      val ord = Tables.orders(s, dir).select(
-        col("o_orderkey").cast("long").as("o_orderkey"),
-        col("o_custkey").cast("long").as("o_custkey"))
-      t.overwrite(ord.repartitionByRange(8, col("o_orderkey")))
-      t.deleteRange(1000L, 5000L)
-      val head = t.read().agg(count(lit(1)).as("n_rows"), sum("o_orderkey").as("sum_key"))
-      val v0 = t.asOf(0L).agg(count(lit(1)).as("n0"), sum("o_orderkey").as("s0"))
-      head.crossJoin(v0) // 1-row x 1-row scalar attach
-        .select(col("n_rows"), col("sum_key"), col("n0"), col("s0"))
-    }),
-    "q50_sql_vacuum" -> ((s, dir) => {
-      // the retention statement from pure SQL (q47 gave OPTIMIZE; VACUUM
-      // is its pair): v0 becomes unreferenced by the overwrite, log_vacuum
-      // reclaims its directory while the HEAD content is untouched —
-      // vacuum trims time travel, never data (directory reclaim +
-      // in-flight/retention guards are spec-asserted in CommitLogSpec).
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-sqlvac-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val tp = root.resolve("tbl").toString
-      val t = new graft.operators.CommitTable(s, tp, "k")
-      val ord = Tables.orders(s, dir).select(
-        col("o_orderkey").cast("long").as("k"),
-        col("o_custkey").cast("long").as("v"))
-      t.overwrite(ord.filter(col("k") % 2 === 0))
-      t.overwrite(ord.filter(col("k") % 2 === 1).repartitionByRange(4, col("k")))
-      s.sql(
-        s"""SELECT COUNT(*) AS n_rows, SUM(k) AS sum_k, SUM(v) AS sum_v
-           |FROM log_vacuum('$tp', 'k', 1)""".stripMargin)
-    }),
-    "q48_sql_history" -> ((s, dir) => {
-      // DESCRIBE HISTORY from pure SQL: a SQL-only user could read AT a
-      // version (q42) and write new ones (q43/q46) but could not DISCOVER
-      // the versions — log_history lists them with op + rowcount, read
-      // distributed off the log files in ONE scan (never per-version
-      // jobs). ts is wall-clock, so the gate projects the deterministic
-      // columns; ts monotonicity is spec-asserted in CommitLogSpec.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-sqlhist-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val tp = root.resolve("tbl").toString
-      val t = new graft.operators.CommitTable(s, tp, "k")
-      val ord = Tables.orders(s, dir).select(
-        col("o_orderkey").cast("long").as("k"),
-        col("o_custkey").cast("long").as("v"))
-      t.overwrite(ord.repartitionByRange(4, col("k")))
-      t.deleteRange(1000L, 5000L)
-      t.append(ord.filter(col("k") > 7000L).repartitionByRange(2, col("k")))
-      s.sql(
-        s"""SELECT version, op, n_rows FROM log_history('$tp', 'k')
-           |ORDER BY version""".stripMargin)
-    }),
-    "q49_sql_filtered_ann" -> ((s, dir) => {
-      // FILTERED vector search from pure SQL (s23 was Scala-only): the
-      // IDSelector predicate lands inside the probed lists BEFORE ranking
-      // through the ann_topk_filtered TVF, so k survives the filter where
-      // WHERE over ann_topk(...) would post-cut; shares s23's mirror.
-      // Same memoized build artifact as s12; the TVF probe is read-only.
-      val idx = IndexCache.template(s"ivf|$dir|full")(
-        Similarity.buildIvfIndex(Tables.embeddings(s, dir), _))
-      s.sql(s"SELECT * FROM ann_topk_filtered('$idx', 20, 5, 4, 'vec_id % 7 = 3')")
-    }),
-    "q55_sql_metadata" -> ((s, dir) => {
-      // SQL parity for the round-16 metadata planes (the q43 discipline:
-      // every Scala table op gets a statement form): one register, then
-      // ADD CONSTRAINT, a deletion-vector DELETE, RENAME COLUMN, and
-      // DESCRIBE DETAIL all run as pure SQL — no Scala API in any
-      // statement after setup. The head reads through the vector under
-      // the renamed surface; v0 keeps the original names and full
-      // content; the detail row counts the (unrewritten) files.
-      val root = IndexCache.freshRoot("sqlmeta")
-      val tp = root.resolve("tbl").toString
-      val t = new graft.operators.CommitTable(s, tp, "k")
-      val ord = Tables.orders(s, dir).select(
-        col("o_orderkey").cast("long").as("k"),
-        col("o_custkey").cast("long").as("v"))
-      t.overwrite(ord.repartitionByRange(4, col("k")))              // v0
-      s.sql(s"SELECT * FROM log_register('q55_sales', '$tp', 'k')").collect()
-      s.sql("""SELECT COUNT(*) FROM log_set_invariants('q55_sales',
-              |'k BIGINT, v BIGINT', 'k', 'k_nonneg', 'k >= 0')""".stripMargin).collect()
-      s.sql("SELECT COUNT(*) FROM log_delete_dv('q55_sales', 1000, 5000)").collect()
-      s.sql("SELECT COUNT(*) FROM log_rename_column('q55_sales', 'v', 'amount')").collect()
-      s.sql(
-        """SELECT 'detail' AS snap, COUNT(*) AS n, CAST(0 AS BIGINT) AS sum_k,
-          |       CAST(0 AS BIGINT) AS sum_v
-          |FROM log_detail('q55_sales')
-          |UNION ALL
-          |SELECT 'head', COUNT(*), SUM(k), SUM(amount)
-          |FROM log_table('q55_sales')
-          |UNION ALL
-          |SELECT 'v0', COUNT(*), SUM(k), SUM(v)
-          |FROM log_table_at('q55_sales', 0)
-          |ORDER BY snap""".stripMargin)
-    }),
-    "q56_catalog_lifecycle" -> ((s, dir) => {
-      // CATALOG LIFECYCLE completion (r16 verdict Next #7 — log_register
-      // persisted, but a renamed/retired table left a dangling binding
-      // forever): log_unregister removes the binding from the session
-      // AND the persisted catalog (one more catalog commit), the name
-      // fails at analysis afterwards, STAYS gone across a simulated
-      // restart (clearMemory + loadPersisted — the removal is durable),
-      // and is immediately re-registrable to a NEW root that resolves.
-      val root = IndexCache.freshRoot("catlc")
-      val tp = root.resolve("tbl").toString
-      val tp2 = root.resolve("tbl2").toString
-      s.conf.set("graft.catalog.root", root.resolve("cat").toString)
-      try {
-        val ord = Tables.orders(s, dir).select(
-          col("o_orderkey").cast("long").as("k"),
-          col("o_custkey").cast("long").as("v"))
-        new graft.operators.CommitTable(s, tp, "k").overwrite(ord)
-        s.sql(s"SELECT * FROM log_register('q56_t', '$tp', 'k')").collect()
-        val headRows = s.sql("SELECT COUNT(*) AS n FROM log_table('q56_t')")
-          .head().getLong(0)
-        s.sql("SELECT * FROM log_unregister('q56_t')").collect()
-        def unknownFails(): Long =
-          try { s.sql("SELECT * FROM log_table('q56_t')").collect(); 0L }
-          catch { case e: Exception
-            if e.getMessage != null && e.getMessage.contains("unknown registered table") => 1L }
-        val goneNow = unknownFails()
-        // simulated restart: the REMOVAL must be as durable as the
-        // registration was (q54's discipline, inverted)
-        graft.plans.TableRegistry.clearMemory()
-        graft.plans.TableRegistry.loadPersisted(s)
-        val goneAfterRestart = unknownFails()
-        // the name is immediately re-bindable — to a NEW root
-        new graft.operators.CommitTable(s, tp2, "k")
-          .overwrite(ord.filter(col("k") < 100))
-        s.sql(s"SELECT * FROM log_register('q56_t', '$tp2', 'k')").collect()
-        val rereadRows = s.sql("SELECT COUNT(*) AS n FROM log_table('q56_t')")
-          .head().getLong(0)
-        val s2 = s
-        import s2.implicits._
-        Seq(
-          ("gone_after_restart", goneAfterRestart),
-          ("gone_after_unregister", goneNow),
-          ("head_rows", headRows),
-          ("reread_rows", rereadRows)
-        ).toDF("metric", "value").orderBy("metric")
-      } finally {
-        s.conf.unset("graft.catalog.root")
-        graft.plans.TableRegistry.unregister("q56_t")
-      }
-    }),
-    "q54_persistent_catalog" -> ((s, dir) => {
-      // PERSISTENT NAMED CATALOG (r15 verdict Next #2 — TableRegistry
-      // was process-memory, so q51's by-name usability vanished with the
-      // session): with graft.catalog.root configured, log_register also
-      // COMMITS the binding to a commit-log table of bindings (the
-      // engine's own storage layer); a fresh session loads them at init.
-      // Simulated restart: the in-memory map is cleared outright, then
-      // loadPersisted (exactly what GraftSession.create runs) restores
-      // resolution and the by-name read returns the table — while an
-      // unknown name still fails at analysis (flag).
-      val root = IndexCache.freshRoot("pcat")
-      val tp = root.resolve("tbl").toString
-      s.conf.set("graft.catalog.root", root.resolve("cat").toString)
-      try {
-        val t = new graft.operators.CommitTable(s, tp, "k")
-        val ord = Tables.orders(s, dir).select(
-          col("o_orderkey").cast("long").as("k"),
-          col("o_custkey").cast("long").as("v"))
-        t.overwrite(ord.repartitionByRange(4, col("k")))
-        s.sql(s"SELECT * FROM log_register('q54_sales', '$tp', 'k')").collect()
-        // the "restart": memory gone, committed catalog survives
-        graft.plans.TableRegistry.clearMemory()
-        val loaded = graft.plans.TableRegistry.loadPersisted(s).toLong
-        val unknownStillFails =
-          try { s.sql("SELECT * FROM log_table('q54_nope')").collect(); 0L }
-          catch { case e: Exception
-            if e.getMessage != null && e.getMessage.contains("unknown registered table") => 1L }
-        s.sql(
-          s"""SELECT 'head' AS snap, COUNT(*) AS n, SUM(k) AS sum_k
-             |FROM log_table('q54_sales')
-             |UNION ALL
-             |SELECT 'meta', $loaded, $unknownStillFails
-             |ORDER BY snap""".stripMargin)
-      } finally s.conf.unset("graft.catalog.root")
-    }),
-    "q51_named_catalog" -> ((s, dir) => {
-      // NAMED CATALOG over paths (r14 verdict #5 — every TVF took raw
-      // filesystem path literals; one typo = a path error at analysis):
-      // log_register binds a name once, then reads, writes, history and
-      // index probes all run BY NAME — no path appears in any later
-      // statement. The unknown-name analysis error (with the known-name
-      // list) is spec-asserted in CommitLogSpec.
-      val root = IndexCache.freshRoot("namedcat")
-      val tp = root.resolve("tbl").toString
-      val t = new graft.operators.CommitTable(s, tp, "k")
-      val ord = Tables.orders(s, dir).select(
-        col("o_orderkey").cast("long").as("k"),
-        col("o_custkey").cast("long").as("v"))
-      t.overwrite(ord.repartitionByRange(4, col("k")))
-      s.sql(s"SELECT * FROM log_register('q51_sales', '$tp', 'k')").collect()
-      s.sql("SELECT COUNT(*) FROM log_delete('q51_sales', 1000, 5000)").collect()
-      s.sql(
-        """SELECT 'head' AS snap, COUNT(*) AS n, SUM(k) AS sum_k
-          |FROM log_table('q51_sales')
-          |UNION ALL
-          |SELECT 'ranged', COUNT(*), SUM(k)
-          |FROM log_table_range('q51_sales', 6000, 9000)
-          |UNION ALL
-          |SELECT 'v0', COUNT(*), SUM(k)
-          |FROM log_table_at('q51_sales', 0)
-          |ORDER BY snap""".stripMargin)
-    }),
-    "q52_sql_changes" -> ((s, dir) => {
-      // the CDF SQL surface (Delta's table_changes) + the multi-column
-      // stats cut BY NAME: one register call (with the extra stats
-      // column declared), then the change feed across a delete + an
-      // append and a second-column range read all run as statements.
-      // The file-cut on the extra column is spec-asserted; this gate
-      // binds the row-level multiset CDF and the residual-filtered
-      // range content.
-      val root = IndexCache.freshRoot("sqlcdf")
-      val tp = root.resolve("tbl").toString
-      val t = new graft.operators.CommitTable(s, tp, "k", extraStatsCols = Seq("v"))
-      val ord = Tables.orders(s, dir).select(
-        col("o_orderkey").cast("long").as("k"),
-        col("o_custkey").cast("long").as("v"))
-      t.overwrite(ord.repartitionByRange(4, col("k"))) // v0
-      t.deleteRange(1000L, 5000L)                      // v1: CDF deletes
-      t.append(Tables.nation(s, dir).select(           // v2: CDF inserts
-        (col("n_nationkey").cast("long") + 20000000L).as("k"),
-        col("n_regionkey").cast("long").as("v")))
-      s.sql(s"SELECT * FROM log_register('q52_cdf', '$tp', 'k', 'v')").collect()
-      s.sql(
-        """SELECT 'cdf' AS part, change_type AS tag, COUNT(*) AS n, SUM(k) AS sum_k
-          |FROM log_changes('q52_cdf', 0, 2) GROUP BY 1, 2
-          |UNION ALL
-          |SELECT 'rng', 'vcut', COUNT(*), SUM(k)
-          |FROM log_table_range_on('q52_cdf', 'v', 100, 400)
-          |ORDER BY part, tag""".stripMargin)
-    }),
-    "q53_sql_zorder" -> ((s, dir) => {
-      // OPTIMIZE ZORDER from pure SQL (Delta's `OPTIMIZE … ZORDER BY`)
-      // plus catalog introspection (the SHOW TABLES shape): f17's
-      // layout-only Morton-clustered rewrite is now one statement by
-      // registered name, and the post-zorder second-dimension range read
-      // (the f25 cut single-column clustering can't give) runs as the
-      // next statement. log_tables() proves the registry row; content
-      // identity through the rewrite is the gate (both-dimension file
-      // cuts spec-asserted in CommitLogSpec).
-      val root = IndexCache.freshRoot("sqlzorder")
-      val tp = root.resolve("tbl").toString
-      val t = new graft.operators.CommitTable(s, tp, "x", extraStatsCols = Seq("y"))
-      // the k%4 slice: the gate binds the statement surface + catalog row,
-      // not rewrite volume (f17 gates the zorder commit on the full table)
-      val li = Tables.lineitem(s, dir).filter(col("l_orderkey") % 4 === 0).select(
-        (col("l_orderkey") % 1024).cast("long").as("x"),
-        (col("l_partkey") % 1024).cast("long").as("y"),
-        col("l_quantity").cast("long").as("q"))
-      t.overwrite(li.repartition(4))
-      s.sql(s"SELECT * FROM log_register('q53_zt', '$tp', 'x', 'y')").collect()
-      s.sql("SELECT COUNT(*) FROM log_optimize_zorder('q53_zt', 'x', 'y')").collect()
-      s.sql(
-        """SELECT 'catalog' AS snap, n, 0 AS sum_x, 0 AS sum_y, 0 AS sum_q
-          |FROM (SELECT COUNT(*) AS n FROM log_tables() WHERE name = 'q53_zt'
-          |      AND stats_col = 'x' AND extra_stats_cols = 'y')
-          |UNION ALL
-          |SELECT 'head', COUNT(*), SUM(x), SUM(y), SUM(q)
-          |FROM log_table('q53_zt')
-          |UNION ALL
-          |SELECT 'ywindow', COUNT(*), SUM(x), SUM(y), SUM(q)
-          |FROM log_table_range_on('q53_zt', 'y', 100, 199)
-          |ORDER BY snap""".stripMargin)
-    }),
-    "q47_sql_optimize" -> ((s, dir) => {
-      // the OPTIMIZE maintenance statement for SQL-only users (q43/q46
-      // gave them DML; streamed appends still accreted per-batch small
-      // files only the Scala API could fold): three interleaved appends,
-      // then one pure-SQL log_optimize folds them into range-clustered
-      // files — content byte-identical (this gate), file count + stats
-      // pruning survival spec-asserted in CommitLogSpec.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-sqlopt-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val tp = root.resolve("tbl").toString
-      val t = new graft.operators.CommitTable(s, tp, "k")
-      val ord = Tables.orders(s, dir).select(
-        col("o_orderkey").cast("long").as("k"),
-        col("o_custkey").cast("long").as("v"))
-      t.overwrite(ord.filter(col("k") % 3 === 0).repartition(6))
-      t.append(ord.filter(col("k") % 3 === 1).repartition(6))
-      t.append(ord.filter(col("k") % 3 === 2).repartition(6))
-      s.sql(
-        s"""SELECT COUNT(*) AS n_rows, SUM(k) AS sum_k, SUM(v) AS sum_v
-           |FROM log_optimize('$tp', 'k', 'k', 4)""".stripMargin)
-    }),
-    "f23_bloom_pruning" -> ((s, dir) => {
-      // per-file BLOOM FILTERS (the Delta/Iceberg bloom-index shape):
-      // odd and even orderkeys land as SEPARATE commits whose key windows
-      // fully overlap — min/max stats can never prune a point lookup on
-      // this layout — then buildBloom commits a 8192-bit fingerprint per
-      // file into the _bloom sidecar and the SAME prunedReadIn point read
-      // every persisted index uses skips proven-absent files (the
-      // file-count cut is spec-asserted in CommitLogSpec; this gate binds
-      // the content contract: bloom-pruned reads lose no row).
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-bloom-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "k")
-      val ord = Tables.orders(s, dir).select(
-        col("o_orderkey").cast("long").as("k"),
-        col("o_custkey").cast("long").as("v"))
-      t.overwrite(ord.filter(col("k") % 2 === 1).repartitionByRange(4, col("k")))
-      t.append(ord.filter(col("k") % 2 === 0).repartitionByRange(4, col("k")))
-      t.buildBloom()
-      val probes = Seq(1L, 2L, 7L, 32L, 33L, 100L, 101L, 999L)
-      t.prunedReadIn(probes).filter(col("k").isin(probes: _*))
-        .agg(count(lit(1)).as("n_hit"), sum("k").as("sum_k"), sum("v").as("sum_v"))
-    }),
-    "f24_log_checkpoint" -> ((s, dir) => {
-      // DELTA LOG ENTRIES + PERIODIC CHECKPOINT (the Delta log shape —
-      // r14 verdict #3: snapshot-complete-only logs are O(versions ×
-      // files) at streamed-commit cadence): appends write O(batch)
-      // entries, every 3rd version is snapshot-complete, file-granular
-      // DML lands as adds+removes — and head/asOf resolve identically
-      // through and ACROSS the checkpoint boundary (the log-bytes and
-      // entry-form contracts are spec-asserted in CommitLogSpec; this
-      // gate binds content at every version of the chain).
-      val root = IndexCache.freshRoot("ckptlog")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString,
-        "n_nationkey", checkpointEvery = 3)
-      val nat = Tables.nation(s, dir).select(
-        col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"))
-      val k = col("n_nationkey")
-      t.overwrite(nat.filter(k < 5))                 // v0 snapshot
-      t.append(nat.filter(k >= 5 && k < 10))         // v1 delta
-      t.append(nat.filter(k >= 10 && k < 15))        // v2 delta
-      t.append(nat.filter(k >= 15 && k < 20))        // v3 CHECKPOINT
-      t.deleteRange(7L, 12L)                         // v4 delta: adds + removes
-      t.append(nat.filter(k >= 20))                  // v5 delta
-      (1L to 5L).map { v =>
-        t.asOf(v).agg(count(lit(1)).as("n_rows"), sum("n_nationkey").as("sum_key"))
-          .select(lit(v).as("version"), col("n_rows"), col("sum_key"))
-      }.reduce(_ unionByName _).orderBy("version")
-    }),
-    "f25_multicol_stats" -> ((s, dir) => {
-      // MULTI-COLUMN per-file stats (r14 verdict #4 — Delta/Iceberg
-      // record stats for the leading N columns; one stats column means a
-      // second predicate column gets zero skipping): the table declares
-      // o_custkey as an extra stats column and lands custkey-clustered,
-      // so prunedReadOn cuts files on the SECOND column while the
-      // primary (o_orderkey) log stats stay intact. The file-cut is
-      // inputFiles-asserted in CommitLogSpec; this gate binds content.
-      val root = IndexCache.freshRoot("xstats")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString,
-        "o_orderkey", extraStatsCols = Seq("o_custkey"))
-      val ord = Tables.orders(s, dir).select(
-        col("o_orderkey").cast("long").as("o_orderkey"),
-        col("o_custkey").cast("long").as("o_custkey"))
-      t.overwrite(ord.repartitionByRange(8, col("o_custkey")))
-      t.prunedReadOn("o_custkey", 100L, 400L)
-        .agg(count(lit(1)).as("n_rows"), sum("o_orderkey").as("sum_key"),
-          sum("o_custkey").as("sum_cust"))
-    }),
-    "f29_avro_roundtrip" -> ((s, dir) => {
-      // AVRO interchange (r16 verdict Next #6 — CSV/JSONL/ORC were
-      // covered; Avro is the remaining commodity ingest format): a
-      // lineitem projection crosses long/double/string/date columns
-      // through snappy Avro container files written with the core Avro
-      // API (one file per partition, temp+rename), is re-read
-      // SCHEMA-FIRST from the embedded header, and aggregates back to
-      // the parquet source's numbers. floor() keeps the double column's
-      // aggregate integer-exact across engines.
-      val root = IndexCache.freshRoot("avro")
-      val out = root.resolve("li").toString
-      val li = Tables.lineitem(s, dir).select(
-        col("l_orderkey").cast("long").as("okey"),
-        col("l_quantity").cast("long").as("qty"),
-        col("l_extendedprice").cast("double").as("price"),
-        col("l_returnflag").as("flag"),
-        col("l_shipdate").cast("timestamp").as("ship"))
-      graft.sources.AvroTables.write(li.repartition(4), out)
-      val back = graft.sources.AvroTables.read(s, out)
-      back.groupBy("flag").agg(
-          count(lit(1)).as("n"),
-          sum("qty").as("sum_qty"),
-          sum(floor(col("price")).cast("long")).as("sum_fprice"),
-          countDistinct("ship").as("n_ship"))
-        .orderBy("flag")
-    }),
-    "f33_dv_append_delta" -> ((s, dir) => {
-      // APPEND-DELTA DV SIDECARS (r17 verdict Next #1 — every DV commit
-      // used to rewrite the FULL outstanding position set as one
-      // coalesce(1) file, O(total churn) per commit on one core): after
-      // a big delete (901 keys), a small delete (10 keys) must stage
-      // ONLY its own 10 positions in its sidecar link
-      // (second_delta_rows — measured from the sidecar version's own
-      // staged files), the per-window CDF must surface exactly the
-      // window's link (cdf_w2_n), resolution must union the chain
-      // exactly (head_rows/head_sum_k/outstanding), and consolidateDv
-      // must fold the chain with identical content (consolidated_rows).
-      val root = IndexCache.freshRoot("dvdelta")
-      val tp = root.resolve("tbl").toString
-      val t = new graft.operators.CommitTable(s, tp, "k")
-      val ord = Tables.orders(s, dir).select(
-        col("o_orderkey").cast("long").as("k"),
-        col("o_custkey").cast("long").as("v"))
-      t.overwrite(ord.repartitionByRange(4, col("k")))            // v0
-      t.deleteRangeDV(0L, 900L)                                   // v1: 901 marks
-      t.deleteRangeDV(1000L, 1009L)                               // v2: 10 marks
-      // O(new) assert: the second sidecar link's OWN staged files hold
-      // exactly the 10 newly-marked positions, not the accumulated 911
-      val dvv2 = t.dvVersionAt(2L).get
-      val dvFiles = new java.io.File(s"$tp/_dv").listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith(s"d$dvv2-"))
-        .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
-        .map(_.getPath)
-      // links are range-encoded (file, pos_lo, pos_hi): the covered
-      // POSITION count is the O(new) measure
-      val secondDeltaRows =
-        if (dvFiles.isEmpty) 0L
-        else s.read.parquet(dvFiles.toIndexedSeq: _*)
-          .agg(sum(col("pos_hi") - col("pos_lo") + lit(1L))).head().getLong(0)
-      val cdfW2 = t.changesBetween(1L, 2L)
-        .filter(col("change_type") === "delete").count()
-      val headAgg = t.read().agg(count(lit(1)), sum("k")).head()
-      val outstanding = t.dvOutstanding()
-      t.consolidateDv()                                           // v3: fold
-      val consolidatedRows = t.read().count()
-      val s2 = s
-      import s2.implicits._
-      Seq(
-        ("cdf_w2_n", cdfW2),
-        ("consolidated_rows", consolidatedRows),
-        ("head_rows", headAgg.getLong(0)),
-        ("head_sum_k", headAgg.getLong(1)),
-        ("outstanding", outstanding),
-        ("second_delta_rows", secondDeltaRows)
-      ).toDF("metric", "value").orderBy("metric")
-    }),
-    "f34_merge_evolve" -> ((s, dir) => {
-      // MERGE WITH SCHEMA EVOLUTION (r17 verdict Next #6 — mergeDV
-      // required source columns == target's exactly; widening existed on
-      // append but not merge): a change-set carrying a NEW column widens
-      // the target in the same atomic DV-merge commit — updated and
-      // inserted rows carry the column, pre-merge rows read it as NULL
-      // (null_tag_rows), v0 keeps the two-column surface (v0_cols), and
-      // a DECLARED schema widens through the same gate (inv_widened).
-      val root = IndexCache.freshRoot("mrgevo")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "k")
-      val ord = Tables.orders(s, dir).select(
-        col("o_orderkey").cast("long").as("k"),
-        col("o_custkey").cast("long").as("v"))
-      t.overwrite(ord.filter(col("k") <= 999).repartitionByRange(2, col("k"))) // v0
-      t.setInvariants("k BIGINT, v BIGINT", notNull = Seq("k"))                // v1
-      val s2 = s
-      import s2.implicits._
-      val src = ord.filter(col("k").between(100, 199))
-          .withColumn("v", lit(-1L)).withColumn("tag", lit("u"))
-        .unionByName((0L until 20L).map(i => (100000L + i, 777L, "i"))
-          .toDF("k", "v", "tag"))
-      t.mergeDV(src, Seq("k"), evolveSchema = true)                            // v2
-      val head = t.read()
-      val agg = head.agg(count(lit(1)), sum("v"),
-        sum(when(col("tag").isNull, 1L).otherwise(0L)),
-        sum(when(col("tag").isNotNull, 1L).otherwise(0L))).head()
-      val invWidened =
-        if (t.invariants().exists(_.schemaDdl.contains("tag"))) 1L else 0L
-      Seq(
-        ("head_cols", head.columns.sorted.mkString(",")),
-        ("head_rows", agg.getLong(0).toString),
-        ("head_sum_v", agg.getLong(1).toString),
-        ("inv_widened", invWidened.toString),
-        ("null_tag_rows", agg.getLong(2).toString),
-        ("tagged_rows", agg.getLong(3).toString),
-        ("v0_cols", t.asOf(0L).columns.sorted.mkString(","))
-      ).toDF("metric", "value").orderBy("metric")
-    }),
-    "f35_purge_dv" -> ((s, dir) => {
-      // SELECTIVE DV MATERIALIZATION (Delta's REORG TABLE … APPLY
-      // (PURGE), r18): between "leave vectors outstanding" (every read
-      // pays the anti-join) and a full OPTIMIZE rewrite sits the
-      // targeted purge — rewrite ONLY delete-dense files. Four
-      // single-file commits; a dense delete (~83% of file A) and a
-      // sparse one (~8% of file B); purgeDv(0.5) must rewrite ONLY
-      // file A (carried_untouched, rewritten_files), keep content
-      // exact (head_rows/head_sum_k), and trim the stamp to B's
-      // surviving entries (outstanding_mid). The SQL statement
-      // log_purge_dv(…, 0) then purges B too and CLEARS the plane
-      // (outstanding_full, full_equal).
-      val root = IndexCache.freshRoot("dvpurge")
-      val tp = root.resolve("tbl").toString
-      val t = new graft.operators.CommitTable(s, tp, "k")
-      val ord = Tables.orders(s, dir).select(
-        col("o_orderkey").cast("long").as("k"),
-        col("o_custkey").cast("long").as("v"))
-      t.overwrite(ord.filter(col("k") <= 1200).coalesce(1))                  // v0: A
-      t.append(ord.filter(col("k") > 1200 && col("k") <= 2400).coalesce(1))  // v1: B
-      t.append(ord.filter(col("k") > 2400 && col("k") <= 3600).coalesce(1))  // v2: C
-      t.append(ord.filter(col("k") > 3600).coalesce(1))                      // v3: D
-      t.deleteRangeDV(0L, 1000L)                                             // v4: dense in A
-      t.deleteRangeDV(1300L, 1400L)                                          // v5: sparse in B
-      val before = t.read().inputFiles.filterNot(_.contains("/_dv/")).toSet
-      t.purgeDv(0.5)                                                         // v6: A only
-      val after = t.read().inputFiles.filterNot(_.contains("/_dv/")).toSet
-      val carriedOk = if ((before & after).size == 3) 1L else 0L
-      val rewritten = (after -- before).size.toLong
-      val outstandingMid = t.dvOutstanding()
-      val headAgg = t.read().agg(count(lit(1)), sum("k")).head()
-      // SQL statement form carries the full purge
-      val sqlRows = s.sql(s"SELECT COUNT(*) AS n FROM log_purge_dv('$tp', 'k', 0)")
-        .head().getLong(0)
-      val outstandingFull = t.dvOutstanding()
-      val fullEqual = if (sqlRows == headAgg.getLong(0)) 1L else 0L
-      val s2 = s
-      import s2.implicits._
-      Seq(
-        ("carried_untouched", carriedOk),
-        ("full_equal", fullEqual),
-        ("head_rows", headAgg.getLong(0)),
-        ("head_sum_k", headAgg.getLong(1)),
-        ("outstanding_full", outstandingFull),
-        ("outstanding_mid", outstandingMid),
-        ("rewritten_files", rewritten)
-      ).toDF("metric", "value").orderBy("metric")
-    }),
-    "f36_compact_small" -> ((s, dir) => {
-      // INCREMENTAL OPTIMIZE (r18 — the real Delta/Iceberg semantics:
-      // files already at target size are NEVER rewritten; compact/
-      // compactClustered rewrite the whole head, which at 100 TB means
-      // rewriting cold petabytes to fold a few streamed megabytes): one
-      // large commit + four tiny streamed-shaped appends; the SQL
-      // statement log_optimize_small folds ONLY the four small files
-      // into one (carried_large, folded_new, head_files), content exact
-      // (head_rows/head_sum_k = the whole orders table), and a lone
-      // sub-threshold file is left alone (noop_ok).
-      val root = IndexCache.freshRoot("smallopt")
-      val tp = root.resolve("tbl").toString
-      val t = new graft.operators.CommitTable(s, tp, "k")
-      val ord = Tables.orders(s, dir).select(
-        col("o_orderkey").cast("long").as("k"),
-        col("o_custkey").cast("long").as("v"))
-      t.overwrite(ord.filter(col("k") > 4000).coalesce(1))                  // v0: large
-      t.append(ord.filter(col("k") <= 1000).coalesce(1))                    // v1: small
-      t.append(ord.filter(col("k") > 1000 && col("k") <= 2000).coalesce(1)) // v2: small
-      t.append(ord.filter(col("k") > 2000 && col("k") <= 3000).coalesce(1)) // v3: small
-      t.append(ord.filter(col("k") > 3000 && col("k") <= 4000).coalesce(1)) // v4: small
-      val before = t.read().inputFiles.filterNot(_.contains("/_dv/")).toSet
-      val sqlRows = s.sql(
-        s"SELECT COUNT(*) AS n FROM log_optimize_small('$tp', 'k', 'k', 65536)") // v5
-        .head().getLong(0)
-      val after = t.read().inputFiles.filterNot(_.contains("/_dv/")).toSet
-      val carriedOk = if ((before & after).size == 1) 1L else 0L
-      val foldedNew = (after -- before).size.toLong
-      // the fresh fold output sits under the small threshold but is
-      // ALONE — a second pass must not churn it
-      val noopOk = if (t.compactSmall("k", 65536L) == 5L) 1L else 0L
-      val headAgg = t.read().agg(count(lit(1)), sum("k")).head()
-      val s2 = s
-      import s2.implicits._
-      Seq(
-        ("carried_large", carriedOk),
-        ("folded_new", foldedNew),
-        ("head_files", after.size.toLong),
-        ("head_rows", headAgg.getLong(0)),
-        ("head_sum_k", headAgg.getLong(1)),
-        ("noop_ok", noopOk),
-        ("sql_rows", sqlRows)
-      ).toDF("metric", "value").orderBy("metric")
-    }),
-    "f37_maintain" -> ((s, dir) => {
-      // ONE-CALL MAINTENANCE POLICY (r18 — the Delta auto-compaction
-      // shape): the health instruments (dvOutstanding, file-list sizes)
-      // decide which TARGETED ops the head needs and only those run —
-      // a healthy head commits NOTHING (healthy_noop/noop_after), a
-      // churned one purges its delete-dense file and folds its small
-      // ones in order (ops_ok), landing on one file with exact content.
-      // Nation-sized on purpose: the policy's cost is the instruments'.
-      val root = IndexCache.freshRoot("maint")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "k")
-      val nat = Tables.nation(s, dir).select(
-        col("n_nationkey").cast("long").as("k"), col("n_name").as("v"))
-      val k = col("k")
-      t.overwrite(nat.filter(k < 5).coalesce(1))               // v0
-      val healthyNoop = if (t.maintain("k", 1L << 20) == Nil) 1L else 0L
-      t.append(nat.filter(k >= 5 && k < 10).coalesce(1))       // v1
-      t.append(nat.filter(k >= 10 && k < 15).coalesce(1))      // v2
-      t.append(nat.filter(k >= 15 && k < 20).coalesce(1))      // v3
-      t.append(nat.filter(k >= 20).coalesce(1))                // v4
-      t.deleteRangeDV(5L, 9L)                                  // v5: v1's file 100% dead
-      val ops = t.maintain("k", 1L << 20)
-      val opsOk = if (ops == Seq("purge-dv", "compact-small")) 1L else 0L
-      val noopAfter = if (t.maintain("k", 1L << 20) == Nil) 1L else 0L
-      val headAgg = t.read().agg(count(lit(1)), sum("k")).head()
-      val headFiles = t.read().inputFiles.count(!_.contains("/_dv/")).toLong
-      val s2 = s
-      import s2.implicits._
-      Seq(
-        ("head_files", headFiles),
-        ("head_rows", headAgg.getLong(0)),
-        ("head_sum_k", headAgg.getLong(1)),
-        ("healthy_noop", healthyNoop),
-        ("noop_after", noopAfter),
-        ("ops_ok", opsOk)
-      ).toDF("metric", "value").orderBy("metric")
-    }),
-    "f30_dv_cdf" -> ((s, dir) => {
-      // DV-DELTA CDF (r16 verdict Next #2 — a change window whose
-      // deletion-vector stamp moved used to fall back to the FULL
-      // multiset diff of the two snapshots): the feed is now composed
-      // from the sidecar position delta joined back to its files —
-      // O(deleted), never O(window content). Structural flags:
-      // only_touched proves the plan read exactly ONE of the four
-      // key-clustered data files (the one holding the deleted keys —
-      // asserted via inputFiles), and equals_full_diff proves content
-      // identity with the independent snapshot diff computed inline.
-      val root = IndexCache.freshRoot("dvcdf")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "k")
-      val ord = Tables.orders(s, dir).select(
-        col("o_orderkey").cast("long").as("k"),
-        col("o_custkey").cast("long").as("v"))
-      t.overwrite(ord.repartitionByRange(4, col("k")))          // v0
-      // low keys sit inside the FIRST range file at every scale factor
-      // (orders keys are dense 0..N-1, so quartile boundaries scale)
-      t.deleteWhereDV("k BETWEEN 10 AND 60")                    // v1 (one file's keys)
-      val cdf = t.changesBetween(0L, 1L)
-      val dataRead = cdf.inputFiles.filterNot(_.contains("/_dv/")).toSet
-      val headFiles = t.asOf(0L).inputFiles.toSet
-      val onlyTouched =
-        if (dataRead.size == 1 && dataRead.subsetOf(headFiles)) 1L else 0L
-      // independent content check: the full snapshot diff (the old
-      // fallback's semantics, recomputed from the two committed reads)
-      val dels = cdf.filter(col("change_type") === "delete").drop("change_type")
-      val full = t.asOf(0L).exceptAll(t.asOf(1L))
-      val equalsFull =
-        if (dels.exceptAll(full).isEmpty && full.exceptAll(dels).isEmpty) 1L else 0L
-      val agg = dels.agg(count(lit(1)), sum("k")).head()
-      val nIns = cdf.filter(col("change_type") === "insert").count()
-      val s2 = s
-      import s2.implicits._
-      Seq(
-        ("cdf_deletes_n", agg.getLong(0)),
-        ("cdf_inserts_n", nIns),
-        ("cdf_sum_k", agg.getLong(1)),
-        ("equals_full_diff", equalsFull),
-        ("only_touched", onlyTouched)
-      ).toDF("metric", "value").orderBy("metric")
-    }),
-    "f31_update_dv" -> ((s, dir) => {
-      // DV-BACKED UPDATE (r16 verdict Next #3 — updateRange rewrites
-      // every predicate-intersecting FILE; the modern Delta UPDATE is
-      // DV-mark + append in one commit): zero_rewrite proves every base
-      // file is still referenced and the changed rows landed as NEW
-      // files only; cow_equal proves the head equals the file-granular
-      // CoW update on a twin table; the second update runs as the pure
-      // SQL statement form. v0 time-travels to the original values.
-      val root = IndexCache.freshRoot("dvupd")
-      val tp = root.resolve("tbl").toString
-      val t = new graft.operators.CommitTable(s, tp, "k")
-      val ord = Tables.orders(s, dir).select(
-        col("o_orderkey").cast("long").as("k"),
-        col("o_custkey").cast("long").as("v"))
-      t.overwrite(ord.repartitionByRange(4, col("k")))          // v0
-      val files0 = t.read().inputFiles.toSet.filterNot(_.contains("/_dv/"))
-      t.updateWhereDV("k BETWEEN 100 AND 300", "v", "v + 1000000") // v1
-      val files1 = t.read().inputFiles.toSet.filterNot(_.contains("/_dv/"))
-      val zeroRewrite =
-        if (files0.subsetOf(files1) && (files1 -- files0).nonEmpty) 1L else 0L
-      // twin CoW update — head content must be identical
-      val t2 = new graft.operators.CommitTable(s, root.resolve("cow").toString, "k")
-      t2.overwrite(ord.repartitionByRange(4, col("k")))
-      t2.updateRange(100L, 300L, "v", "v + 1000000")
-      val a = t.read(); val b = t2.read()
-      val cowEqual = if (a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty) 1L else 0L
-      // SQL statement form for the second update
-      s.sql(s"SELECT * FROM log_register('f31_t', '$tp', 'k')").collect()
-      s.sql("""SELECT COUNT(*) FROM log_update_where_dv('f31_t',
-              |'k BETWEEN 400 AND 450', 'v', 'v + 7')""".stripMargin).collect()
-      val headAgg = t.read().agg(count(lit(1)), sum("v")).head()
-      val v0Agg = t.asOf(0L).agg(sum("v")).head()
-      val s2 = s
-      import s2.implicits._
-      Seq(
-        ("cow_equal", cowEqual),
-        ("head_rows", headAgg.getLong(0)),
-        ("head_sum_v", headAgg.getLong(1)),
-        ("v0_sum_v", v0Agg.getLong(0)),
-        ("zero_rewrite", zeroRewrite)
-      ).toDF("metric", "value").orderBy("metric")
-    }),
-    "f32_merge_dv" -> ((s, dir) => {
-      // DV-BACKED MERGE (r17 — merge()'s scale note deferred the
-      // O(changed) upsert): matched target rows are DV-marked and the
-      // change-set appended in ONE atomic commit — O(|change-set|)
-      // written, zero existing files rewritten (zero_rewrite), content
-      // equal to the full join-based merge on a twin table
-      // (merge_equal). The change-set mixes all three MERGE actions:
-      // updates, flag-marked deletes, and fresh-key inserts; a second
-      // upsert-only merge runs as the pure SQL statement. Content
-      // equality with the join-based merge on a twin table is
-      // spec-asserted (DeletionVectorSpec "equal to the join merge") —
-      // the gate keeps the zero-rewrite + head-content asserts
-      // (r17 verdict Next #2: the twin merge doubled the gate's cost).
-      val root = IndexCache.freshRoot("dvmerge")
-      val tp = root.resolve("tbl").toString
-      val t = new graft.operators.CommitTable(s, tp, "k")
-      val ord = Tables.orders(s, dir).select(
-        col("o_orderkey").cast("long").as("k"),
-        col("o_custkey").cast("long").as("v"))
-      t.overwrite(ord.repartitionByRange(4, col("k")))          // v0
-      val files0 = t.read().inputFiles.toSet.filterNot(_.contains("/_dv/"))
-      val s2 = s
-      import s2.implicits._
-      val src = ord.filter(col("k").between(100, 199))
-          .withColumn("v", lit(-1L)).withColumn("__del", lit(false))
-        .unionByName(ord.filter(col("k").between(200, 299))
-          .withColumn("__del", lit(true)))
-        .unionByName((0L until 50L).map(i => (1000000L + i, 777L, false))
-          .toDF("k", "v", "__del"))
-      t.mergeDV(src, Seq("k"), deleteCol = Some("__del"))        // v1
-      val files1 = t.read().inputFiles.toSet.filterNot(_.contains("/_dv/"))
-      val zeroRewrite =
-        if (files0.subsetOf(files1) && (files1 -- files0).nonEmpty) 1L else 0L
-      // SQL statement leg: an upsert-only merge by registered name
-      s.sql(s"SELECT * FROM log_register('f32_t', '$tp', 'k')").collect()
-      ord.filter(col("k").between(400, 420)).withColumn("v", lit(-2L))
-        .createOrReplaceTempView("f32_src")
-      s.sql("SELECT COUNT(*) FROM log_merge_dv('f32_t', 'f32_src', 'k')").collect()
-      val headAgg = t.read().agg(count(lit(1)), sum("v")).head()
-      val v0Rows = t.asOf(0L).count()
-      Seq(
-        ("head_rows", headAgg.getLong(0)),
-        ("head_sum_v", headAgg.getLong(1)),
-        ("v0_rows", v0Rows),
-        ("zero_rewrite", zeroRewrite)
-      ).toDF("metric", "value").orderBy("metric")
-    }),
-    "f28_column_mapping" -> ((s, dir) => {
-      // COLUMN MAPPING (r15 verdict Next #5 — schema evolution was
-      // widen-only; rename/drop meant rewriting every file): RENAME and
-      // DROP are metadata-only commits (zero_rewrite compares inputFiles
-      // before/after both), the head reads the new surface, the
-      // pre-rename version keeps its old names verbatim, and a write
-      // AFTER the rename uses the logical name while landing under the
-      // stable physical file names. Collision/retire semantics and DML
-      // composition are spec-asserted in ColumnMappingSpec.
-      val root = IndexCache.freshRoot("cmapgate")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "n_nationkey")
-      val nat = Tables.nation(s, dir).select(
-        col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
-        col("n_regionkey").cast("long").as("n_regionkey"))
-      t.overwrite(nat.filter(col("n_nationkey") < 10))                // v0
-      val files0 = t.read().inputFiles.toSet
-      t.renameColumn("n_name", "nation_name")                         // v1
-      t.dropColumn("n_regionkey")                                     // v2
-      val zeroRewrite = if (t.read().inputFiles.toSet == files0) 1L else 0L
-      // write after rename: logical names in, physically-stable files out
-      t.append(nat.filter(col("n_nationkey") >= 10)
-        .withColumnRenamed("n_name", "nation_name").drop("n_regionkey")) // v3
-      val headCols = t.read().columns.mkString(",")
-      val v0Cols = t.asOf(0L).columns.mkString(",")
-      val headAgg = t.read().agg(count(lit(1)),
-        sum(length(col("nation_name")))).head()
-      val s2 = s
-      import s2.implicits._
-      Seq(
-        ("head_cols", headCols),
-        ("head_name_len", headAgg.getLong(1).toString),
-        ("head_rows", headAgg.getLong(0).toString),
-        ("v0_cols", v0Cols),
-        ("zero_rewrite", zeroRewrite.toString)
-      ).toDF("metric", "value").orderBy("metric")
-    }),
-    "f27_deletion_vectors" -> ((s, dir) => {
-      // DELETION VECTORS (r15 verdict Next #4 — deleteRange rewrites
-      // every predicate-intersecting file, so row-granular deletes pay
-      // file-granular IO): the DV delete commits O(deleted) sidecar
-      // bytes with ZERO data-file rewrites (zero_rewrite compares the
-      // head's inputFiles set before/after), reads are exact through
-      // the vector, v0 time-travels to the full content, and OPTIMIZE
-      // materializes the deletes and clears the stamp (dv_cleared) with
-      // identical content (opt_* == head_*). Orphan-safety, CDF
-      // fallback, and DML composition are spec-asserted in
-      // DeletionVectorSpec.
-      val root = IndexCache.freshRoot("dvgate")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "k")
-      val ord = Tables.orders(s, dir).select(
-        col("o_orderkey").cast("long").as("k"),
-        col("o_custkey").cast("long").as("v"))
-      t.overwrite(ord.repartitionByRange(6, col("k")))            // v0
-      val files0 = t.read().inputFiles.toSet
-      t.deleteRangeDV(1000L, 5000L)                               // v1
-      val files1 = t.read().inputFiles.toSet.filterNot(_.contains("/_dv/"))
-      val zeroRewrite = if (files1 == files0) 1L else 0L
-      val headAgg = t.read().agg(count(lit(1)), sum("k")).head()
-      val v0Rows = t.asOf(0L).count()
-      t.compactClustered("k", 2)                                  // v2: OPTIMIZE
-      val cleared = if (t.dvOutstanding() == 0L) 1L else 0L
-      val optAgg = t.read().agg(count(lit(1)), sum("k")).head()
-      val s2 = s
-      import s2.implicits._
-      Seq(
-        ("dv_cleared", cleared),
-        ("head_rows", headAgg.getLong(0)),
-        ("head_sum_k", headAgg.getLong(1)),
-        ("opt_rows", optAgg.getLong(0)),
-        ("opt_sum_k", optAgg.getLong(1)),
-        ("v0_rows", v0Rows),
-        ("zero_rewrite", zeroRewrite)
-      ).toDF("metric", "value").orderBy("metric")
-    }),
-    "f26_invariants" -> ((s, dir) => {
-      // SCHEMA-ON-WRITE + DECLARED INVARIANTS (r15 verdict Next #3 —
-      // without a table-level declaration, one mistyped producer silently
-      // widens a 100 TB table): after setInvariants, a clean append
-      // commits, a CHECK-violating batch aborts atomically (head,
-      // history, and disk untouched — disk-cleanliness spec-asserted in
-      // InvariantsSpec), and a schema-drifted batch (undeclared column /
-      // type drift / missing NOT NULL) rejects BEFORE staging. Output =
-      // the rejection flags + the head's aggregates, which must equal
-      // the two CLEAN batches alone.
-      val root = IndexCache.freshRoot("invgate")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "k")
-      val ord = Tables.orders(s, dir).select(
-        col("o_orderkey").cast("long").as("k"),
-        col("o_custkey").cast("long").as("v"))
-      t.overwrite(ord.filter(col("k") <= 5000))                       // v0
-      t.setInvariants("k BIGINT, v BIGINT",
-        checks = Seq("k_nonneg" -> "k >= 0"), notNull = Seq("k", "v"))// v1
-      t.append(ord.filter(col("k") > 5000))                           // v2
-      def rejected(body: => Long): Long =
-        try { body; 0L }
-        catch { case _: graft.operators.InvariantViolationException => 1L }
-      val checkRej = rejected(t.append(
-        ord.filter(col("k") % 97 === 0).withColumn("k", -(col("k") + 1))))
-      val driftRej = rejected(t.append(
-        ord.limit(5).withColumn("wrong", lit("x"))))
-      val nnRej = rejected(t.append(ord.limit(5).drop("v")))
-      t.read().agg(count(lit(1)).as("rows_"), sum("k").as("sk"), sum("v").as("sv"))
-        .select(explode(array(
-          struct(lit("check_rejected").as("metric"), lit(checkRej).as("value")),
-          struct(lit("drift_rejected").as("metric"), lit(driftRej).as("value")),
-          struct(lit("head_rows").as("metric"), col("rows_").as("value")),
-          struct(lit("head_sum_k").as("metric"), col("sk").as("value")),
-          struct(lit("head_sum_v").as("metric"), col("sv").as("value")),
-          struct(lit("head_version").as("metric"),
-            lit(t.latestVersion().getOrElse(-1L)).as("value")),
-          struct(lit("notnull_rejected").as("metric"), lit(nnRej).as("value")))).as("m"))
-        .select(col("m.metric").as("metric"), col("m.value").as("value"))
-        .orderBy("metric")
-    }),
-    "f16_log_restore" -> ((s, dir) => {
-      // RESTORE as a metadata-only commit: v0 = keys < 10, v1 = overwrite
-      // with the complement, v2 = restore(0) — the head re-references v0's
-      // files (no data rewrite; the restore commit is one log file), the
-      // "bad" v1 stays inspectable, and the restored head reads exactly
-      // v0's content THROUGH the log. Oracle: the same snapshot derived
-      // straight from the source.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-restore-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "n_nationkey")
-      val nat = Tables.nation(s, dir).select(
-        col("n_nationkey").cast("long").as("n_nationkey"),
-        col("n_name"), col("n_regionkey").cast("long").as("n_regionkey"))
-      t.overwrite(nat.filter(col("n_nationkey") < 10))
-      t.overwrite(nat.filter(col("n_nationkey") >= 10))
-      val head = t.restore(0L)
-      t.read().agg(count(lit(1)).as("n_rows"), sum("n_nationkey").as("sum_key"))
-        .select(lit(head).as("version"), col("n_rows"), col("sum_key"))
-    }),
-    "f17_log_zorder" -> ((s, dir) => {
-      // OPTIMIZE ZORDER as a commit: v0 = scattered 2-D keyed rows, v1 =
-      // the Z-clustered rewrite — content byte-identical (both versions
-      // aggregated below), layout now skips files on either dimension
-      // (pruning bite suite-asserted in CommitLogSpec; f8 gates the code
-      // arithmetic itself). Fresh per-process table, shutdown-hook cleaned
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-zlog-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "x")
-      val li = Tables.lineitem(s, dir).select(
-        (col("l_orderkey") % 1024).cast("long").as("x"),
-        (col("l_partkey") % 1024).cast("long").as("y"),
-        col("l_quantity").cast("long").as("q"))
-      t.overwrite(li.repartition(4))
-      t.optimizeZorder("x", "y")
-      (0L to 1L).map { v =>
-        t.asOf(v).agg(count(lit(1)).as("n_rows"), sum("x").as("sum_x"),
-          sum("y").as("sum_y"), sum("q").as("sum_q"))
-          .select(lit(v).as("version"), col("n_rows"), col("sum_x"), col("sum_y"), col("sum_q"))
-      }.reduce(_ unionByName _).orderBy("version")
-    }),
-    "f14_log_merge" -> ((s, dir) => {
-      // MERGE INTO bound to the commit log: v0 = the full projection, v1 =
-      // one atomic merge commit applying updates (region bumped for keys
-      // < 5), deletes (keys >= 20), and an insert (key 99) in one
-      // change-set; the merged head is read back THROUGH the log and the
-      // pre-merge version stays readable (asserted in CommitLogSpec).
-      // Oracle derives the same merged snapshot from the source table
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-lmerge-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "n_nationkey")
-      val nat = Tables.nation(s, dir).select(
-        col("n_nationkey").cast("long").as("n_nationkey"),
-        col("n_name"), col("n_regionkey").cast("long").as("n_regionkey"))
-      t.overwrite(nat)
-      val changes = nat.filter(col("n_nationkey") < 5)
-          .withColumn("n_regionkey", col("n_regionkey") + 100)
-          .withColumn("del", lit(false))
-        .unionByName(nat.filter(col("n_nationkey") >= 20).withColumn("del", lit(true)))
-        .unionByName {
-          import s.implicits._
-          Seq((99L, "NEWLAND", 42L, false)).toDF("n_nationkey", "n_name", "n_regionkey", "del")
-        }
-      t.merge(changes, keys = Seq("n_nationkey"), deleteCol = Some("del"))
-      t.read().agg(count(lit(1)).as("n_rows"),
-        sum("n_nationkey").as("sum_key"), sum("n_regionkey").as("sum_region"))
-    }),
-    "f15_log_vacuum" -> ((s, dir) => {
-      // retention through the log: v0's overwrite directory becomes
-      // unreferenced once v1 overwrites, v2 appends; vacuum(keepLast=2)
-      // reclaims EXACTLY that one directory (reference-counted against
-      // the kept versions' full file lists) and the head keeps reading
-      // the complete content. Fresh per-process table, shutdown-cleaned
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-vac-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "n_nationkey")
-      val nat = Tables.nation(s, dir).select(
-        col("n_nationkey").cast("long").as("n_nationkey"),
-        col("n_name"), col("n_regionkey").cast("long").as("n_regionkey"))
-      t.overwrite(nat.filter(col("n_nationkey") < 5))
-      t.overwrite(nat.filter(col("n_nationkey") >= 5))
-      t.append(nat.filter(col("n_nationkey") < 5))
-      val removed = t.vacuum(keepLast = 2)
-      t.read().agg(count(lit(1)).as("n_rows"), sum("n_nationkey").as("sum_key"))
-        .select(lit(removed).as("n_removed"), col("n_rows"), col("sum_key"))
-    }),
-    "f13_log_cdf" -> ((s, dir) => {
-      // change-data-feed THROUGH the commit log: three committed versions
-      // (v0 = keys < 15, v1 = + keys >= 15, v2 = overwrite keys >= 5), then
-      // changesBetween(0, 2) — multiset row diff of two real committed file
-      // lists — rolled up per change_type. Oracle derives the same
-      // insert/delete sets straight from the source table. Fresh
-      // per-process table per execution, shutdown-hook cleaned
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-cdf-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "n_nationkey")
-      val nat = Tables.nation(s, dir).select(
-        col("n_nationkey").cast("long").as("n_nationkey"),
-        col("n_name"), col("n_regionkey").cast("long").as("n_regionkey"))
-      t.overwrite(nat.filter(col("n_nationkey") < 15))
-      t.append(nat.filter(col("n_nationkey") >= 15))
-      t.overwrite(nat.filter(col("n_nationkey") >= 5))
-      t.changesBetween(0L, 2L)
-        .groupBy("change_type")
-        .agg(count(lit(1)).as("n_rows"), sum("n_nationkey").as("sum_key"))
-        .orderBy("change_type")
-    }),
-    "f11_compacted_roundtrip" -> ((s, dir) => {
-      // small-file compaction bound to the gate: orders deliberately
-      // shattered into 64 small files, rewritten by Partitioning.compact
-      // into 4 row-balanced ones (round-robin repartition — coalesce
-      // would glue adjacent files and let skew survive), re-read and
-      // aggregated; the oracle computes the same aggregate from the
-      // source table, so the rewrite must be content-preserving. The
-      // file-count and row-balance claims are PartitioningSpec-asserted.
-      val root = compactionPath(dir)
-      Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_orderpriority")
-        .repartition(64).write.mode("overwrite").parquet(root + "/small")
-      Partitioning.compact(s, root + "/small", root + "/compacted", targetFiles = 4)
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n"), sum("o_orderkey").as("sum_key"),
-          sum("o_custkey").as("sum_cust"))
-        .orderBy("o_orderpriority")
-    }),
-    "f9_zstd_roundtrip" -> ((s, dir) => {
-      // codec surface: the same round-trip discipline as f4, through
-      // zstd-compressed parquet (the 100 TB default codec choice — zstd
-      // trades ~10% CPU for ~30% smaller scans vs snappy); oracle reads
-      // the uncompressed source, so the codec must be lossless end-to-end
-      val out = zstdRoundtripPath(dir)
-      Tables.lineitem(s, dir).select("l_orderkey", "l_quantity", "l_returnflag")
-        .write.mode("overwrite").option("compression", "zstd").parquet(out)
-      s.read.parquet(out)
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"), sum("l_orderkey").as("sum_key"),
-          sum(dec12("l_quantity")).cast("double").as("sum_qty"))
-        .orderBy("l_returnflag")
-    }),
-    "f4_orc_roundtrip" -> ((s, dir) => {
-      // ORC sibling of f3's layout queries: export orders as ORC, re-read,
-      // aggregate; the oracle computes the same aggregate straight from the
-      // source parquet, proving the ORC writer+reader are
-      // semantics-preserving (DuckDB has no ORC reader, so the source-table
-      // oracle is the strongest independent check available).
-      val out = orcRoundtripPath(dir)
-      TableFormats.writeOrc(
-        Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice"),
-        out)
-      TableFormats.readOrc(s, out)
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n"), sum("o_orderkey").as("sum_key"),
-          sum(dec12("o_totalprice")).cast("double").as("sum_price"))
-        .orderBy("o_orderpriority")
-    }),
-    "f1_jsonl_roundtrip" -> ((s, dir) => {
-      // interchange-format surface bound to the gate: a lineitem slice is
-      // exported as JSONL, re-read schema-first (FAILFAST), and aggregated;
-      // the DuckDB oracle reads the SAME files with read_json_auto, so both
-      // the writer and the reader are checked. Integer-exact columns only
-      // (scaled-cent quantities) — no float round-trip ambiguity. The
-      // output path is sf-tagged and NOT deleted at JVM exit: the oracle
-      // runs after this process ends.
-      val slice = Tables.lineitem(s, dir)
-        .filter(col("l_orderkey") % 16 === 0)
-        .select(col("l_orderkey"), col("l_linenumber").cast("long").as("line_no"),
-          (dec12("l_quantity") * 100).cast("long").as("qty_c"), col("l_returnflag"))
-      TableFormats.writeJsonl(slice, jsonlRoundtripPath(dir))
-      TableFormats.readJsonl(s, jsonlRoundtripPath(dir),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "l_orderkey LONG, line_no LONG, qty_c LONG, l_returnflag STRING"))
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"), sum("qty_c").as("sum_qty_c"),
-          sum("l_orderkey").as("sum_okey"), max("line_no").as("max_line"))
-        .orderBy("l_returnflag")
-    }),
-    "f2_csv_roundtrip" -> ((s, dir) => {
-      // CSV sibling of f1: export a customer slice with header, re-read
-      // schema-first (FAILFAST), aggregate; oracle reads the same files
-      // with read_csv. Integer/string columns only (doubles don't survive
-      // text round-trips bit-exactly across engines).
-      val slice = Tables.customer(s, dir)
-        .filter(col("c_custkey") % 8 === 0)
-        .select(col("c_custkey"), col("c_nationkey").cast("long").as("nation"),
-          col("c_mktsegment"))
-      TableFormats.writeCsv(slice, csvRoundtripPath(dir))
-      TableFormats.readCsv(s, csvRoundtripPath(dir),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "c_custkey LONG, nation LONG, c_mktsegment STRING"))
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n"), sum("c_custkey").as("sum_key"), max("nation").as("max_nation"))
-        .orderBy("c_mktsegment")
-    }),
-    "f3_range_layout" -> ((s, dir) => {
-      // range-partitioned + sorted-within-file parquet layout: pay one
-      // range exchange at write, then date filters skip whole files/row
-      // groups via parquet min/max stats (disjointness asserted in
-      // PartitioningSpec); the oracle computes the same aggregate straight
-      // from the source table, proving the layout is semantics-preserving
-      val out = rangeLayoutPath(dir)
-      Partitioning.writeRangeSorted(
-        Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"),
-        out, sortCol = "o_orderdate", numFiles = 8)
-      s.read.parquet(out)
-        .filter(col("o_orderdate") >= expr("TIMESTAMP'1996-01-01 00:00:00'") &&
-          col("o_orderdate") < expr("TIMESTAMP'1997-01-01 00:00:00'"))
-        .groupBy(date_trunc("month", col("o_orderdate")).as("month"))
-        .agg(count(lit(1)).as("n"), sum(dec12("o_totalprice")).cast("double").as("sum_price"))
-        .orderBy("month")
-    }),
-    "f7_dsv2_matrix" -> ((s, dir) => {
-      // the DataSourceV2 connector for the reference matrix format bound to
-      // the gate: derive the small graph, write it as the dense text format
-      // (1-based, so ids shift +1), read it back through
-      // spark.read.format(MatrixSourceV2), and aggregate out-degrees. The
-      // oracle computes the same degrees from the source derivation — the
-      // writer, the V2 scan, and the parse are all checked.
-      val path = dsv2MatrixPath(dir)
-      val edges1 = DerivedGraphs.small(s, dir)
-        .select((col("src") + 1).as("src"), (col("dst") + 1).as("dst"))
-      val n = 1 + DerivedGraphs.SmallMod.toInt // ids 1..SmallMod after shift
-      MatrixFormat.writeMatrix(s, edges1, path, vertexCount = Some(n))
-      s.read.format("graft.sources.MatrixSourceV2").load(path)
-        .groupBy("src").agg(count(lit(1)).as("outdeg"), sum("dst").as("sum_dst"))
-        .orderBy("src")
-    }),
-    "f8_zorder_cells" -> ((s, dir) => {
-      // Z-order clustering bound to the gate: the Morton-code arithmetic
-      // (ONE expression string, evaluated verbatim by both engines) plus
-      // the property that makes it a layout win — grouping by a curve
-      // prefix yields cells that are tight RECTANGLES in BOTH dimensions,
-      // so min/max file skipping works on either filter column. The
-      // physical writer (Partitioning.writeZOrdered) is asserted
-      // structurally in PartitioningSpec; this query gates the code math.
-      Tables.orders(s, dir)
-        .select((col("o_custkey") % 1024).as("cx"), (col("o_orderkey") % 1024).as("cy"))
-        .withColumn("z", expr(Partitioning.zorderExpr("cx", "cy", 10)))
-        .groupBy(expr("z div 16384").as("cell")) // top 6 curve bits: 64 cells
-        .agg(count(lit(1)).as("n"),
-          min("cx").as("min_cx"), max("cx").as("max_cx"),
-          min("cy").as("min_cy"), max("cy").as("max_cy"))
-        .orderBy("cell")
-    }),
-    "f6_schema_evolution" -> ((s, dir) => {
-      // schema evolution across parquet batches (the every-real-lake
-      // problem: a column added mid-history): batch 1 lacks the priority
-      // column, batch 2 has it; a mergeSchema read unions the schemas and
-      // null-fills the old files — by-NAME resolution, not by position.
-      // The oracle derives the same union from the source table, so the
-      // write, the merged read, and the null-fill are all checked.
-      val root = schemaEvolutionPath(dir)
-      Tables.orders(s, dir).filter(col("o_orderkey") % 4 === 0)
-        .select(col("o_orderkey"), col("o_custkey"))
-        .write.mode("overwrite").parquet(root + "/b1")
-      Tables.orders(s, dir).filter(col("o_orderkey") % 4 === 1)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderpriority"))
-        .write.mode("overwrite").parquet(root + "/b2")
-      s.read.option("mergeSchema", "true").parquet(root + "/b1", root + "/b2")
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n"), sum("o_orderkey").as("sum_okey"))
-        .orderBy("o_orderpriority")
-    }),
-    "f5_hive_partitioned" -> ((s, dir) => {
-      // hive-partitioned layout (f3's directory-pruning sibling): orders
-      // written under o_year=YYYY dirs, read back with a partition-column
-      // filter that prunes at PLANNING time from the listing (asserted in
-      // PartitioningSpec); oracle computes the same aggregate from the
-      // source table with the same year filter
-      val out = hivePartitionedPath(dir)
-      Partitioning.writeHivePartitioned(
-        Tables.orders(s, dir).select(col("o_orderkey"), col("o_totalprice"),
-          col("o_orderpriority"), year(col("o_orderdate")).as("o_year")),
-        out, partCol = "o_year")
-      s.read.parquet(out)
-        .filter(col("o_year") === 1996)
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n"), sum(dec12("o_totalprice")).cast("double").as("sum_price"))
-        .orderBy("o_orderpriority")
-    }),
-    "q13_pivot" -> ((s, dir) => // pivot with explicit values (no extra
-      // distinct-scan job, deterministic column order); empty cells stay
-      // NULL on both sides (SUM over no rows)
-      Tables.lineitem(s, dir)
-        .groupBy("l_returnflag")
-        .pivot("l_linestatus", Seq("F", "O"))
-        .agg(count(lit(1)))
-        .withColumnRenamed("F", "n_f").withColumnRenamed("O", "n_o")
-        .orderBy("l_returnflag")),
-    "q34_sql_pivot" -> ((s, dir) => {
-      // the SQL:2016 PIVOT clause through the parser (q13 is the
-      // DataFrame-API cousin): sum of quantities per return flag,
-      // statuses fanned to columns; empty cells stay NULL on both sides
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_v")
-      s.sql(
-        """SELECT * FROM (SELECT l_returnflag, l_linestatus, CAST(l_quantity AS BIGINT) AS q
-          |               FROM lineitem_v)
-          |PIVOT (SUM(q) FOR l_linestatus IN ('F' AS f, 'O' AS o))
-          |ORDER BY l_returnflag""".stripMargin)
-    }),
-    "q35_sql_unpivot" -> ((s, dir) => {
-      // PIVOT → UNPIVOT round trip through the parser: the wide table of
-      // q34 melted back to (flag, status, total) — UNPIVOT's default
-      // NULL-row drop is part of the contract the oracle mirrors
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_v")
-      s.sql(
-        """SELECT l_returnflag, status, total FROM (
-          |  SELECT * FROM (SELECT l_returnflag, l_linestatus, CAST(l_quantity AS BIGINT) AS q
-          |                 FROM lineitem_v)
-          |  PIVOT (SUM(q) FOR l_linestatus IN ('F' AS f, 'O' AS o))
-          |) UNPIVOT (total FOR status IN (f, o))
-          |ORDER BY l_returnflag, status""".stripMargin)
-    }),
-
-    // ---- relational: joins ----
-    "q3_top_revenue" -> ((s, dir) => {
-      val c = Tables.customer(s, dir).filter(col("c_mktsegment") === "BUILDING")
-      val o = Tables.orders(s, dir).filter(col("o_orderdate") < expr("TIMESTAMP'1998-01-01 00:00:00'"))
-      val l = Tables.lineitem(s, dir)
-      l.join(o, l("l_orderkey") === o("o_orderkey"))
-        .join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .groupBy(col("l_orderkey"), col("o_orderdate"))
-        .agg(sum(dec12("l_extendedprice") * (lit(1) - dec4("l_discount"))).cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey"))
-        .limit(10)
-        .select("l_orderkey", "revenue", "o_orderdate")
-    }),
-    "q5_local_volume" -> ((s, dir) => {
-      // TPC-H Q5 shape: six-table join; local-supplier revenue per nation in
-      // one region/year. Dims (region/nation/supplier/customer) broadcast;
-      // only the orders⋈lineitem fact join shuffles.
-      val r = Tables.region(s, dir).filter(col("r_name") === "ASIA")
-      val n = Tables.nation(s, dir).join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-      val c = Tables.customer(s, dir)
-      val sup = Tables.supplier(s, dir)
-      val o = Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= expr("TIMESTAMP'1996-01-01 00:00:00'") &&
-          col("o_orderdate") < expr("TIMESTAMP'1997-01-01 00:00:00'"))
-      val l = Tables.lineitem(s, dir)
-      l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(c), col("o_custkey") === col("c_custkey") &&
-          col("c_nationkey") === col("s_nationkey")) // "local supplier"
-        .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(sum(dec12("l_extendedprice") * (lit(1) - dec4("l_discount"))).cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name"))
-    }),
-    "q10_promo_share" -> ((s, dir) => {
-      // TPC-H Q14 shape: promo revenue share per month. Part is broadcast;
-      // the conditional aggregation is decimal-exact, the final ratio is
-      // one double division of two exact sums (order-insensitive).
-      val l = Tables.lineitem(s, dir).filter(
-        col("l_shipdate") >= expr("TIMESTAMP'1996-01-01 00:00:00'") &&
-          col("l_shipdate") < expr("TIMESTAMP'1997-01-01 00:00:00'"))
-      val p = Tables.part(s, dir)
-      l.join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .groupBy(date_trunc("month", col("l_shipdate")).as("month"))
-        .agg(
-          sum(when(col("p_type") === "PROMO", dec12("l_extendedprice") * (lit(1) - dec4("l_discount")))
-            .otherwise(lit(0).cast("decimal(12,2)"))).cast("double").as("promo_revenue"),
-          sum(dec12("l_extendedprice") * (lit(1) - dec4("l_discount"))).cast("double").as("total_revenue"))
-        .withColumn("promo_share_1e6",
-          floor(col("promo_revenue") / col("total_revenue") * 1e6).cast("long"))
-        .orderBy("month")
-    }),
-    "q4_semi_join" -> ((s, dir) => { // orders with >=1 returned lineitem
-      val returned = Tables.lineitem(s, dir).filter(col("l_returnflag") === "R")
-      Tables.orders(s, dir)
-        .join(returned, col("o_orderkey") === col("l_orderkey"), "left_semi")
-        .groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
-        .orderBy("o_orderpriority")
-    }),
-    "q5_anti_join" -> ((s, dir) => // customers with no big-ticket orders
-      Tables.customer(s, dir)
-        .join(Tables.orders(s, dir).filter(col("o_totalprice") > 200000.0),
-          col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy("c_mktsegment").agg(count(lit(1)).as("n"))
-        .orderBy("c_mktsegment")),
-    "q16_outer_join" -> ((s, dir) => // outer-join family: unmatched left
-      // rows survive with nulls; COUNT(col) vs COUNT(*) separates them
-      Tables.customer(s, dir)
-        .join(Tables.orders(s, dir).filter(col("o_totalprice") > 150000.0),
-          col("c_custkey") === col("o_custkey"), "left_outer")
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_rows"), count(col("o_orderkey")).as("n_matched"))
-        .orderBy("c_mktsegment")),
-    "q17_unpivot" -> ((s, dir) => // unpivot/melt (Spark Expand plan):
-      // wide measure columns to (metric, value) rows, decimal-exact sums
-      Tables.lineitem(s, dir)
-        .select(col("l_returnflag"), dec12("l_quantity").as("qty"),
-          dec12("l_extendedprice").as("price"))
-        .unpivot(Array(col("l_returnflag")), Array(col("qty"), col("price")),
-          "metric", "value")
-        .groupBy("l_returnflag", "metric")
-        .agg(count(lit(1)).as("n"), sum("value").cast("double").as("sum_value"))
-        .orderBy("l_returnflag", "metric")),
-
-    // ---- events: json / window functions / set ops / as-of / range ----
-    "e1_json_stats" -> ((s, dir) =>
-      EventStreams.normalized(Tables.events(s, dir))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("k").as("sum_k"), min("k").as("min_k"), max("k").as("max_k"))
-        .orderBy("event_type")),
-    "e2_first_events" -> ((s, dir) => { // window fns: first 3 events per user
-      val w = Window.partitionBy("user_id").orderBy(col("ts_us"), col("event_id"))
-      EventStreams.normalized(Tables.events(s, dir))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select(col("user_id"), col("event_id"), col("rn").cast("long").as("rn"),
-          (col("ts_us") - lag("ts_us", 1).over(w)).as("gap_us"))
-        .orderBy("user_id", "rn")
-    }),
-    "e8_running_total" -> ((s, dir) => { // window FRAMES: per-customer
-      // cumulative spend (rows between unbounded preceding and current);
-      // decimal-exact inside the frame, cast once at the end
-      val w = Window.partitionBy("o_custkey").orderBy(col("o_orderdate"), col("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.orders(s, dir)
-        .select(col("o_custkey"), col("o_orderkey"),
-          sum(dec12("o_totalprice")).over(w).cast("double").as("cum_spend"))
-        .orderBy("o_custkey", "o_orderkey")
-    }),
-    "e3_intersect_users" -> ((s, dir) => { // set op: INTERSECT
-      val ev = Tables.events(s, dir)
-      ev.filter(col("event_type") === "purchase").select("user_id")
-        .intersect(ev.filter(col("event_type") === "error").select("user_id"))
-        .orderBy("user_id")
-    }),
-    "e4_except_users" -> ((s, dir) => { // set op: EXCEPT on (user, payload)
-      // pairs — selective enough to be non-vacuous on dense event data
-      val ev = EventStreams.normalized(Tables.events(s, dir))
-      ev.filter(col("event_type") === "view").select("user_id", "k")
-        .except(ev.filter(col("event_type") === "click").select("user_id", "k"))
-        .orderBy("user_id", "k")
-    }),
-    "e16_multiset_ops" -> ((s, dir) => {
-      // EXCEPT ALL / INTERSECT ALL — the MULTISET set-ops (duplicate
-      // multiplicities preserved: m-n and min(m,n) copies respectively), a
-      // different physical plan from e3/e4's distinct-semantics set ops
-      // (Spark rewrites them to a signed-count aggregate + generate, not a
-      // dedup join). Reduced to counts so the gate output stays small;
-      // the multiset nodes are what this query binds.
-      val ev = EventStreams.normalized(Tables.events(s, dir))
-      val v = ev.filter(col("event_type") === "view").select("user_id", "k")
-      val c = ev.filter(col("event_type") === "click").select("user_id", "k")
-      v.exceptAll(c).agg(count(lit(1)).as("n"))
-        .select(lit("except_all").as("op"), col("n"))
-        .unionByName(
-          v.intersectAll(c).agg(count(lit(1)).as("n"))
-            .select(lit("intersect_all").as("op"), col("n")))
-        .orderBy("op")
-    }),
-    "e6_asof_attribution" -> ((s, dir) => {
-      // as-of join: each purchase attributed to the user's latest view at or
-      // before it — through the shared TemporalJoins.asofJoin operator
-      // (union + last(ignoreNulls) over an ordered window, shuffle-once;
-      // DuckDB mirrors with ASOF-equivalent window SQL in microseconds so
-      // tie semantics match exactly)
-      val ev = EventStreams.normalized(Tables.events(s, dir))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts_us"), col("event_id"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts_us"))
-      TemporalJoins.asofJoin(purchases, views, key = "user_id",
-          leftTime = "ts_us", rightTime = "ts_us",
-          rightValues = Seq("event_id" -> "view_id"), rightTieBreak = Seq("event_id"))
-        .select(col("purchase_id"), col("user_id"), col("view_id"))
-        .orderBy("purchase_id")
-    }),
-    "e7_range_pairs" -> ((s, dir) => {
-      // range join: clicks within 1 h after a view by the same user —
-      // through the shared TemporalJoins.rangeJoin operator (1 h bucket
-      // grains ⇒ equi join on (user, bucket) with a 2-bucket fan-out, no
-      // quadratic range explosion at scale)
-      val B = 3600000000L
-      val ev = EventStreams.normalized(Tables.events(s, dir))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts_us").as("v_us"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts_us").as("c_us"))
-      TemporalJoins.rangeJoin(views, clicks, key = "user_id",
-          leftTime = "v_us", rightTime = "c_us", window = B)
-        .groupBy("user_id").agg(count(lit(1)).as("n_pairs"))
-        .orderBy("user_id")
-    }),
-    "e19_asof_tolerance" -> ((s, dir) => {
-      // as-of join WITH TOLERANCE (pandas merge_asof(tolerance=...) /
-      // kdb wj semantics): the latest at-or-before view matches only if
-      // within 2h of the purchase — staler matches null out. Composed on
-      // the shared asofJoin by also carrying the right row's timestamp;
-      // correctness rests on monotonicity (if the LATEST prior view is too
-      // stale, every earlier one is staler), so no second pass is needed
-      val ev = EventStreams.normalized(Tables.events(s, dir))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts_us"), col("event_id"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts_us"))
-      TemporalJoins.asofJoin(purchases, views, key = "user_id",
-          leftTime = "ts_us", rightTime = "ts_us",
-          rightValues = Seq("event_id" -> "view_id", "ts_us" -> "view_ts_us"),
-          rightTieBreak = Seq("event_id"))
-        .select(col("purchase_id"), col("user_id"),
-          when(col("ts_us") - col("view_ts_us") <= 7200000000L, col("view_id"))
-            .as("view_id"))
-        .orderBy("purchase_id")
-    }),
-    "e22_attribution" -> ((s, dir) => {
-      // position-based multi-touch attribution (the marketing 40/20/40
-      // rule): each purchase's credit splits over its qualifying prior
-      // views (same user, ≤24h before): 1 view → 1000‰; 2 → 500/500;
-      // n≥3 → last 400, middles 200 div (n−2) each, first 400 + the
-      // division remainder — ALL integer permille, summing to exactly
-      // 1000 per purchase on both engines (no float weights). Shape: one
-      // user-key join, one per-purchase window — the window groups are
-      // per-purchase qualifying views, bounded by the 24h horizon.
-      val ev = EventStreams.normalized(Tables.events(s, dir))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("event_id").as("view_id"), col("ts_us").as("v_us"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"), col("ts_us").as("p_us"))
-      val touches = purchases.join(views, Seq("user_id"))
-        .filter(col("v_us") <= col("p_us") &&
-          col("p_us") - col("v_us") <= 86400000000L)
-      val w = Window.partitionBy("purchase_id").orderBy(col("v_us"), col("view_id"))
-      val wn = Window.partitionBy("purchase_id")
-      touches
-        .withColumn("pos", row_number().over(w))
-        .withColumn("n", count(lit(1)).over(wn))
-        .withColumn("credit_permille",
-          when(col("n") === 1, lit(1000L))
-            .when(col("n") === 2, lit(500L))
-            .when(col("pos") === 1,
-              lit(400L) + lit(200L) - expr("200 div (n - 2)") * (col("n") - 2))
-            .when(col("pos") === col("n"), lit(400L))
-            .otherwise(expr("200 div (n - 2)")))
-        .select(col("purchase_id"), col("view_id"),
-          col("pos").cast("long").as("pos"),
-          col("credit_permille").cast("long").as("credit_permille"))
-        .orderBy("purchase_id", "pos")
-    }),
-    "e20_value_deciles" -> ((s, dir) => {
-      // per-type decile profile of the value distribution (feature
-      // normalization for training pipelines): decile assignment is pure
-      // INTEGER math over a unique total order — (rn-1)*10 div n on
-      // row_number ordered by (value, event_id) — so the bucket boundary
-      // is bit-exact on both engines (a percent_rank float compare would
-      // not be); only the per-bucket mean needs the round(·,6) discipline.
-      // Shape: one window sort per event_type, then a tiny (type, bucket)
-      // rollup — at scale the sort is the shuffle that rank stats always
-      // cost, with nothing corpus-sized in the rollup.
-      val wN = Window.partitionBy("event_type")
-      val wR = Window.partitionBy("event_type").orderBy(col("value"), col("event_id"))
-      Tables.events(s, dir).select(col("event_type"), col("value"), col("event_id"))
-        .withColumn("rn", row_number().over(wR))
-        .withColumn("n", count(lit(1)).over(wN))
-        .groupBy(col("event_type"), expr("(rn - 1) * 10 div n").as("bucket"))
-        .agg(count(lit(1)).as("n_events"), Num.round6(avg("value")).as("avg_value"),
-          min("value").as("min_value"), max("value").as("max_value"))
-        .orderBy("event_type", "bucket")
-    }),
-    "e21_retention_cohorts" -> ((s, dir) => {
-      // cohort retention triangle: cohort = a user's first active day,
-      // n_users = users of that cohort active again `offset_days` later.
-      // Scale form mirrors e14: distinct (user, day) first (one hash
-      // shuffle), min-day cohort per user, then a (cohort, offset) rollup
-      // whose cardinality is days² at most — no expanding windows, no
-      // per-user state beyond the aggregates.
-      val days = EventStreams.normalized(Tables.events(s, dir))
-        .select(col("user_id"), expr("ts_us div 86400000000").as("day")).distinct()
-      val cohort = days.groupBy("user_id").agg(min("day").as("cohort_day"))
-      days.join(cohort, "user_id")
-        .groupBy(col("cohort_day"), (col("day") - col("cohort_day")).as("offset_days"))
-        .agg(count(lit(1)).as("n_users")) // (user, day) distinct -> count = distinct users
-        .orderBy("cohort_day", "offset_days")
-    }),
-    "e17_interval_overlaps" -> ((s, dir) => {
-      // interval-overlap join (intervals × intervals, vs e7's points ×
-      // points): pairs of same-supplier lineitems whose order-fulfillment
-      // windows [o_orderdate, l_shipdate] overlap — concurrent open-order
-      // load per supplier. Through TemporalJoins.intervalOverlapSelfJoin:
-      // explode to covered 128-day buckets (synthetic spans run to ~2500
-      // days ⇒ fan-out ≤ 20, inside the guard), equi join on (supplier,
-      // bucket), one attribution bucket per pair — never the per-supplier
-      // quadratic product. Inverted intervals (this generator ships before
-      // the order ~half the time) drop per the operator contract — the
-      // oracle mirrors the filter. Epoch-day ints end to end.
-      val li = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey"), col("l_linenumber"), col("l_shipdate"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_suppkey"),
-          (col("l_orderkey") * 8 + col("l_linenumber")).cast("long").as("line_id"),
-          datediff(col("o_orderdate"), lit("1970-01-01")).cast("long").as("start_d"),
-          datediff(col("l_shipdate"), lit("1970-01-01")).cast("long").as("end_d"))
-      TemporalJoins.intervalOverlapSelfJoin(li, key = "l_suppkey",
-          id = "line_id", start = "start_d", end = "end_d", bucket = 128L)
-        .groupBy("l_suppkey")
-        .agg(count(lit(1)).as("n_pairs"), sum("overlap").as("sum_overlap_days"))
-        .orderBy("l_suppkey")
-    }),
-    "e27_outliers" -> ((s, dir) => {
-      // 3-sigma anomaly counts per event type with EXACT integer
-      // arithmetic: |v − μ| > 3σ cross-multiplied to
-      // (v·n − S)² > 9·(n·Q − S²) over permille values — no sqrt, no
-      // float mean/variance, so the outlier DECISION is bit-identical on
-      // any engine and any partitioning (a float stddev differs in the
-      // last ulps by sum order, and a borderline event would flip).
-      // DECIMAL(38,0) covers the squared terms to ~1e38 — sufficient
-      // through sf100-scale row counts. Shape: one stats rollup (5 rows)
-      // broadcast back over one scan.
-      Tables.events(s, dir).createOrReplaceTempView("events_o")
-      s.sql(
-        """WITH b AS (SELECT event_type, CAST(round(value * 1000) AS BIGINT) AS v
-          |           FROM events_o),
-          |st AS (SELECT event_type, COUNT(*) AS n,
-          |              SUM(CAST(v AS DECIMAL(38,0))) AS sv,
-          |              SUM(CAST(v AS DECIMAL(19,0)) * CAST(v AS DECIMAL(19,0))) AS q
-          |       FROM b GROUP BY event_type),
-          |j AS (SELECT b.event_type, b.v, st.n, st.sv, st.q,
-          |             CAST(b.v AS DECIMAL(38,0)) * st.n - st.sv AS d
-          |      FROM b JOIN st USING (event_type))
-          |SELECT event_type, MAX(n) AS n_events,
-          |       SUM(CASE WHEN d * d > 9 * (CAST(n AS DECIMAL(38,0)) * q - sv * sv)
-          |                THEN 1 ELSE 0 END) AS n_outliers,
-          |       SUM(CASE WHEN d * d > 9 * (CAST(n AS DECIMAL(38,0)) * q - sv * sv)
-          |                THEN v END) AS sum_outlier_v1000
-          |FROM j GROUP BY event_type ORDER BY event_type""".stripMargin)
-    }),
-    "e26_ewma" -> ((s, dir) => {
-      // exponentially weighted moving average per user (α = 1/2, seeded
-      // at the first value): the standard feature-smoothing recurrence
-      // s ← (s + v)/2, evaluated as a SEQUENTIAL FOLD over each user's
-      // time-ordered value list — both engines then execute the identical
-      // IEEE add/divide sequence, so the result is bit-reproducible
-      // WITHOUT integer tricks (the fold-order discipline of t27, applied
-      // to a recurrence that has no closed aggregate form). Scale trade,
-      // documented: collect_list makes per-user memory O(events-per-key)
-      // — the honest shape for an order-dependent recurrence (the
-      // alternative, pow-weighted window sums, reintroduces cross-engine
-      // pow and float-sum-order divergence); this corpus holds ≤10³
-      // events/user, and a 100 TB deployment shards the fold by
-      // (user, epoch) exactly like t11's per-shard packing.
-      Tables.events(s, dir)
-        .select(col("user_id"),
-          struct(unix_micros(col("ts")).as("t"), col("event_id").as("i"),
-            col("value").as("v")).as("e"))
-        .groupBy("user_id")
-        .agg(sort_array(collect_list(col("e"))).as("seq"))
-        .select(col("user_id"), size(col("seq")).cast("long").as("n_events"),
-          Num.round6(expr(
-            "aggregate(slice(seq, 2, size(seq) - 1), " +
-              "CAST(element_at(seq, 1).v AS DOUBLE), (acc, x) -> (acc + x.v) / 2)"))
-            .as("ewma_6"))
-        .orderBy("user_id")
-    }),
-    "e25_asof_nearest" -> ((s, dir) => {
-      // nearest-direction as-of (pandas merge_asof direction='nearest'):
-      // each purchase matched to its CLOSEST view either side within 2h,
-      // equidistant ties resolving backward — two linear asof passes
-      // (backward + mirrored-time forward), never an inequality-join
-      // product; complements e6 (backward) and e19 (backward+tolerance)
-      val ev = EventStreams.normalized(Tables.events(s, dir))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts_us"), col("event_id"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts_us"))
-      TemporalJoins.asofJoinNearest(purchases, views, key = "user_id",
-          leftTime = "ts_us", rightTime = "ts_us",
-          rightValues = Seq("event_id" -> "view_id"), tolerance = 7200000000L,
-          rightTieBreak = Seq("event_id"))
-        .select(col("purchase_id"), col("user_id"), col("view_id"))
-        .orderBy("purchase_id")
-    }),
-    "e24_twap" -> ((s, dir) => {
-      // time-weighted average value per user (the TWAP/utilization shape:
-      // a reading holds until the next one, so its weight is its holding
-      // time — the plain mean over-counts burst periods). INTEGER end to
-      // end: value in exact permille (round(v*1000), identical half-up on
-      // both engines for positive doubles), holding time in millis, twap
-      // = Σ v·dt div Σ dt — no float partial-sum order to diverge. One
-      // window sort per user then a per-user rollup; the last event has
-      // no successor and drops (no horizon assumption), zero-span users
-      // guard the division with greatest(span, 1).
-      val w = Window.partitionBy("user_id").orderBy(col("ts_us"), col("event_id"))
-      Tables.events(s, dir)
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_id"),
-          round(col("value") * 1000).cast("long").as("v1000"))
-        .withColumn("next_us", lead(col("ts_us"), 1).over(w))
-        .filter(col("next_us").isNotNull)
-        .withColumn("dt_ms", expr("(next_us - ts_us) div 1000"))
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_holds"), sum("dt_ms").as("span_ms"),
-          expr("sum(v1000 * dt_ms) div greatest(sum(dt_ms), 1)").as("twap_1000"))
-        .orderBy("user_id")
-    }),
-    "e23_merged_intervals" -> ((s, dir) => {
-      // gaps-and-islands over e17's supplier fulfillment intervals: where
-      // e17 scores PAIRWISE overlap, this collapses each supplier's
-      // [orderdate, shipdate] spans into maximal busy islands — one
-      // Exchange + one shared Sort + a hash aggregate (the linear form;
-      // the naive overlap-pairs formulation is quadratic per key).
-      // Inverted spans (ship before order, ~half this generator) are
-      // filtered, NOT dropped silently — mergeIntervals raises on them by
-      // contract, and the oracle mirrors the filter. Epoch-day ints.
-      val li = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey"), col("l_linenumber"), col("l_shipdate"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_suppkey"),
-          (col("l_orderkey") * 8 + col("l_linenumber")).cast("long").as("line_id"),
-          datediff(col("o_orderdate"), lit("1970-01-01")).cast("long").as("start_d"),
-          datediff(col("l_shipdate"), lit("1970-01-01")).cast("long").as("end_d"))
-        .filter(col("start_d") <= col("end_d"))
-      Sessionization.mergeIntervals(li, key = "l_suppkey",
-          start = "start_d", end = "end_d", tieBreak = Seq("line_id"))
-        .orderBy("l_suppkey", "island_seq")
-    }),
-    "e18_order_milestones" -> ((s, dir) => {
-      // first_value / nth_value / last_value over an UNBOUNDED-both-ways
-      // frame (the offset window family; e2's lag/lead walk relative rows,
-      // these address absolute frame positions — nth_value is its own
-      // Catalyst expression with null-when-absent semantics for customers
-      // with < 3 orders). One row per customer via row_number on the same
-      // window spec: Spark plans ONE Window operator for all four.
-      val w = Window.partitionBy("o_custkey").orderBy(col("o_orderdate"), col("o_orderkey"))
-      val wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      Tables.orders(s, dir).select(col("o_custkey"),
-          first(col("o_orderkey")).over(wf).as("first_key"),
-          nth_value(col("o_orderkey"), 3).over(wf).as("third_key"),
-          last(col("o_orderkey")).over(wf).as("last_key"),
-          count(lit(1)).over(wf).as("n_orders"),
-          row_number().over(w).as("rn"))
-        .filter(col("rn") === 1).drop("rn")
-        .orderBy("o_custkey")
-    }),
-    "e11_spend_quartiles" -> ((s, dir) => { // ranking-window surface:
-      // ntile + percent_rank + dense_rank over per-customer spend, ranked
-      // WITHIN market segment — a partitioned window (an unpartitioned
-      // global ranking would funnel every row through one task; if a truly
-      // global rank is ever needed, the scale form is range-partition +
-      // per-partition counts + offset add, not Window.orderBy). Exact
-      // DECIMAL totals; percent_rank is the same (rank-1)/(n-1) double on
-      // both engines.
-      val spend = Tables.orders(s, dir)
-        .groupBy("o_custkey").agg(sum(dec12("o_totalprice")).as("spend"))
-        .join(Tables.customer(s, dir).select(col("c_custkey"), col("c_mktsegment")),
-          col("o_custkey") === col("c_custkey"))
-      val w = Window.partitionBy("c_mktsegment").orderBy(col("spend").desc, col("o_custkey"))
-      spend.select(col("o_custkey"), col("c_mktsegment"),
-          col("spend").cast("double").as("spend"),
-          ntile(4).over(w).cast("long").as("quartile"),
-          dense_rank().over(w).cast("long").as("drank"),
-          round(percent_rank().over(w) * 1e6).cast("long").as("prank_1e6"))
-        .orderBy("o_custkey")
-    }),
-    "e10_ship_latency" -> ((s, dir) => // date arithmetic surface: per-year
-      // order-to-ship latency histogram (datediff + extract), portable
-      // day-grained semantics on both engines
-      Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .select(year(col("o_orderdate")).cast("long").as("yr"),
-          datediff(col("l_shipdate"), col("o_orderdate")).cast("long").as("lat_days"))
-        .groupBy("yr", "lat_days").agg(count(lit(1)).as("n"))
-        .orderBy("yr", "lat_days")),
-    "e12_trailing_spend" -> ((s, dir) => {
-      // RANGE window frame — the value-based frame code path (e8 covers
-      // ROWS frames): per-customer spend over the trailing 90 days, keyed
-      // by an integral day offset. RANGE includes all order-column peers in
-      // the frame, so same-day orders see the same sum and the result is
-      // tie-deterministic by construction; decimal-exact inside the frame.
-      val w = Window.partitionBy("o_custkey").orderBy("day").rangeBetween(-89, 0)
-      Tables.orders(s, dir)
-        .select(col("o_custkey"), col("o_orderkey"),
-          datediff(col("o_orderdate"), lit("1970-01-01").cast("date")).as("day"),
-          dec12("o_totalprice").as("p"))
-        .select(col("o_custkey"), col("o_orderkey"), col("day").cast("long").as("day"),
-          sum(col("p")).over(w).cast("double").as("spend_90d"))
-        .orderBy("o_custkey", "o_orderkey")
-    }),
-    "e13_gap_fill" -> ((s, dir) => {
-      // time-series RESAMPLE / gap-fill — the densify step feature
-      // pipelines need before rolling statistics: per-customer daily order
-      // counts with MISSING days materialized at 0. Each customer's
-      // sequence+explode spans only that customer's own [min, max] day
-      // range (never a global calendar cross join), so fill cost is
-      // per-key-span, embarrassingly parallel after one count shuffle;
-      // bounded to one year here to keep the gate output proportionate.
-      val o = Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= expr("TIMESTAMP'1996-01-01 00:00:00'") &&
-          col("o_orderdate") < expr("TIMESTAMP'1997-01-01 00:00:00'"))
-        .select(col("o_custkey"),
-          datediff(col("o_orderdate"), lit("1970-01-01").cast("date")).as("day"))
-      val counts = o.groupBy("o_custkey", "day").agg(count(lit(1)).as("n"))
-      val spans = counts.groupBy("o_custkey").agg(min("day").as("d0"), max("day").as("d1"))
-      spans.select(col("o_custkey"), explode(sequence(col("d0"), col("d1"))).as("day"))
-        .join(counts, Seq("o_custkey", "day"), "left_outer")
-        .select(col("o_custkey"), col("day").cast("long").as("day"),
-          coalesce(col("n"), lit(0L)).as("n"))
-        .orderBy("o_custkey", "day")
-    }),
-    "e15_funnel" -> ((s, dir) => {
-      // ordered funnel analysis (view -> click within 24 h -> purchase
-      // within 24 h of the click): per-user earliest qualifying time per
-      // stage, then depth counts — the product-analytics sequence query.
-      // Each stage is one narrow (user, min-ts) aggregate joined forward;
-      // strict microsecond inequalities + an integral window, identical in
-      // the mirror. Depth counts include users who never viewed (depth 0).
-      val W = 86400000000L // 24 h in µs
-      val ev = EventStreams.normalized(Tables.events(s, dir))
-        .select(col("user_id"), col("event_type"), col("ts_us"))
-      val users = ev.select("user_id").distinct()
-      val v = ev.filter(col("event_type") === "view")
-        .groupBy("user_id").agg(min("ts_us").as("t1"))
-      val c = ev.filter(col("event_type") === "click")
-        .join(v, "user_id")
-        .filter(col("ts_us") > col("t1") && col("ts_us") <= col("t1") + W)
-        .groupBy("user_id").agg(min("ts_us").as("t2"))
-      val p = ev.filter(col("event_type") === "purchase")
-        .join(c, "user_id")
-        .filter(col("ts_us") > col("t2") && col("ts_us") <= col("t2") + W)
-        .groupBy("user_id").agg(min("ts_us").as("t3"))
-      users
-        .join(v.select(col("user_id"), lit(1).as("s1")), Seq("user_id"), "left_outer")
-        .join(c.select(col("user_id"), lit(1).as("s2")), Seq("user_id"), "left_outer")
-        .join(p.select(col("user_id"), lit(1).as("s3")), Seq("user_id"), "left_outer")
-        .select((coalesce(col("s1"), lit(0)) + coalesce(col("s2"), lit(0)) +
-          coalesce(col("s3"), lit(0))).cast("long").as("depth"))
-        .groupBy("depth").agg(count(lit(1)).as("n_users"))
-        .orderBy("depth")
-    }),
-    "e14_cumulative_users" -> ((s, dir) => {
-      // running DISTINCT count (cumulative unique users per day) — the
-      // growth-accounting query. The naive form (COUNT(DISTINCT) OVER an
-      // expanding window) re-scans every prior row per day and carries the
-      // full value set as window state; the scale form computed here is
-      // dedup-then-cumsum: each user's FIRST day (one hash shuffle), daily
-      // first-timer counts, then a cumulative sum over the tiny per-day
-      // series. Same answer, O(users) state nowhere, window over days only.
-      val ev = EventStreams.normalized(Tables.events(s, dir))
-        .select(col("user_id"), expr("ts_us div 86400000000").as("day"))
-      val firstDay = ev.groupBy("user_id").agg(min("day").as("day"))
-      val daily = firstDay.groupBy("day").agg(count(lit(1)).as("n_new"))
-      val w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      daily.select(col("day"), col("n_new"),
-          sum("n_new").over(w).as("cum_users"))
-        .orderBy("day")
-    }),
-    "e34_event_pattern" -> ((s, dir) => // CEP pattern counts (the
-      // MATCH_RECOGNIZE / Flink-CEP shape): greedy non-overlapping
-      // view->click->purchase subsequence occurrences per user over the
-      // time-ordered stream — one key-aggregate, then a codegen'd
-      // automaton fold, row-local; oracle = independent sequential
-      // automaton VALUES (not SQL-window-expressible: consumed-event
-      // state is a fold)
-      graft.operators.Sessionization.eventPatternCounts(
-        EventStreams.normalized(Tables.events(s, dir))
-          .select("user_id", "ts_us", "event_id", "event_type"))),
-    "e9_sessionized" -> ((s, dir) => {
-      // row-level sessionization (gaps-and-islands): every event stamped
-      // with its per-user session number — the enrichment form feature
-      // pipelines join on (st3 is the aggregate session_window cousin)
-      val ev = EventStreams.normalized(Tables.events(s, dir))
-        .select("user_id", "ts_us", "event_id")
-      Sessionization.assignSessions(ev, key = "user_id", time = "ts_us",
-          gapUs = 1800000000L, tieBreak = Seq("event_id"))
-        .orderBy("user_id", "ts_us", "event_id")
-    }),
-
-    // ---- streaming surface (same plans run under readStream; see
-    //      EventStreams + StreamingSpec for the MemoryStream equivalence) ----
-    "st1_tumbling_hourly" -> ((s, dir) =>
-      EventStreams.tumblingCounts(Tables.events(s, dir)).orderBy("window_start_us", "event_type")),
-    "st12_stream_sessions" -> ((s, dir) =>
-      // the stateful half of the real-streaming smoke family: st3's
-      // session_window aggregate under an ACTUAL StreamExecution
-      // (file-source micro-batches; session state merges across them),
-      // complete-mode memory sink, same DuckDB lag/flag/cumsum mirror
-      BoundedReplay.runFileStream(
-        Tables.events(s, dir),
-        name = "st12_sink",
-        transform = stream => EventStreams.sessionCounts(stream),
-        outputMode = "complete")
-        .orderBy("user_id", "session_start_us")),
-    "st11_stream_smoke" -> ((s, dir) =>
-      // st1's aggregation executed by an ACTUAL streaming query (verdict-#8
-      // smoke row): file source -> StreamExecution micro-batches -> complete
-      // -mode memory sink, one source file per trigger so the windowed
-      // aggregate's state is built up across FOUR micro-batches rather than
-      // one batch pass. Complete mode means the sink's final contents are
-      // the full aggregate — byte-identical semantics to st1's batch path
-      // and the same DuckDB mirror.
-      BoundedReplay.runFileStream(
-        Tables.events(s, dir),
-        name = "st11_sink",
-        transform = stream => EventStreams.tumblingCounts(stream),
-        outputMode = "complete")
-        .orderBy("window_start_us", "event_type")),
-    "st2_sliding_counts" -> ((s, dir) =>
-      EventStreams.slidingCounts(Tables.events(s, dir)).orderBy("window_start_us", "event_type")),
-    "st3_session_windows" -> ((s, dir) =>
-      EventStreams.sessionCounts(Tables.events(s, dir)).orderBy("user_id", "session_start_us")),
-    "st4_running_counts" -> ((s, dir) => {
-      // the custom-state operator itself (mapGroupsWithState), run in batch
-      // mode — Spark's unified model folds each group once from empty
-      // state, so the driver's DuckDB oracle checks the EXACT code path the
-      // streaming variant runs per micro-batch (incrementality itself is
-      // asserted in StreamingSpec over split MemoryStream feeds)
-      import s.implicits._
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), col("ts"), col("event_type"))
-        .as[EventStreams.UserEvent]
-      EventStreams.runningUserCounts(ev).toDF().orderBy("user_id")
-    }),
-    "st5_stream_join" -> ((s, dir) => {
-      // the stream-stream join plan in batch mode: same viewClickJoin code
-      // the watermarked streaming test replays; emits the raw pair rows
-      // (e7 is the bucketed aggregate cousin)
-      val ev = Tables.events(s, dir)
-      EventStreams.viewClickJoin(ev, ev).orderBy("view_id", "click_id")
-    }),
-    "st6_stream_left_join" -> ((s, dir) => {
-      // LEFT OUTER stream-stream join in batch mode: views that never
-      // converted emit with null click_id; the streaming half (null rows
-      // deferred until the watermark closes the window, then state freed)
-      // is asserted in StreamingSpec with split feeds + sentinels
-      val ev = Tables.events(s, dir)
-      EventStreams.viewClickLeftJoin(ev, ev).orderBy("view_id", "click_id")
-    }),
-
-    "st15_stream_log_sink" -> ((s, dir) => {
-      // streaming ingest INTO the commit-log table — the "streaming sink
-      // of a table format" deployment shape: a REAL StreamExecution
-      // (file-source micro-batches via BoundedReplay) lands EACH
-      // micro-batch as one atomic versioned commit through foreachBatch;
-      // the final head, read back THROUGH the log, must carry exactly the
-      // one-shot batch content, and the version count equals the
-      // micro-batch count. Fresh per-process table, shutdown-hook cleaned
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-slog-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "event_id")
-      val ev = Tables.events(s, dir).select(
-        col("event_id").cast("long").as("event_id"),
-        col("user_id").cast("long").as("user_id"), col("event_type"))
-      BoundedReplay.runForeachBatch(ev, "st15_log_sink", b => { t.append(b); () })
-      t.read().agg(count(lit(1)).as("n_rows"),
-          sum("event_id").as("sum_event"), sum("user_id").as("sum_user"))
-        .select(lit(t.versions().length.toLong).as("n_versions"),
-          col("n_rows"), col("sum_event"), col("sum_user"))
-    }),
-    "st28_stream_exactly_once" -> ((s, dir) => {
-      // EXACTLY-ONCE streaming ingest under re-delivery (Delta's
-      // txnAppId/txnVersion): foreachBatch is AT-LEAST-ONCE — a sink
-      // that committed but crashed before the source checkpoint gets the
-      // SAME batch (same id) again — so the sink records (appId,
-      // batchId) in the commit header and appendIdempotent recognizes
-      // the replay and skips it. Here EVERY batch is delivered twice
-      // (the worst case); the head must carry the one-shot content and
-      // exactly one version per micro-batch, which is precisely what the
-      // gate's n_versions/n_rows/sums bind (a double-applied batch
-      // doubles all three). st15 is the marker-free baseline.
-      val root = IndexCache.freshRoot("sxonce")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "event_id")
-      val ev = Tables.events(s, dir).select(
-        col("event_id").cast("long").as("event_id"),
-        col("user_id").cast("long").as("user_id"), col("event_type"))
-      BoundedReplay.runForeachBatchIds(ev, "st28_sink", (b, id) => {
-        val first = t.appendIdempotent(b, "st28_app", id)
-        val retry = t.appendIdempotent(b, "st28_app", id) // re-delivery
-        require(first.nonEmpty && retry.isEmpty,
-          s"batch $id: first=$first retry=$retry — idempotence contract broken")
-      })
-      t.read().agg(count(lit(1)).as("n_rows"),
-          sum("event_id").as("sum_event"), sum("user_id").as("sum_user"))
-        .select(lit(t.versions().length.toLong).as("n_versions"),
-          col("n_rows"), col("sum_event"), col("sum_user"))
-    }),
-    "st17_streaming_view" -> ((s, dir) => {
-      // STREAMING MATERIALIZED VIEW: st16's commit-log change stream
-      // DRIVING g46's incremental degree maintenance — the end-to-end
-      // "table changed, view follows" loop: a real StreamExecution
-      // discovers each committed version, its CDF folds into the view
-      // state (checkpointed per version, exactly streaming-state shape),
-      // and the final view equals the full recompute at the head. Same
-      // version history as g46; oracle = recompute over the final set.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-sview-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val tp = root.resolve("edges").toString
-      val t = new graft.operators.CommitTable(s, tp, "src")
-      val e = DerivedGraphs.small(s, dir)
-      t.overwrite(e.filter(col("dst") % 5 =!= 0))
-      t.append(e.filter(col("dst") % 5 === 0))
-      t.overwrite(e.filter(col("src") % 7 =!= 0))
-      var view: DataFrame = null
-      graft.streaming.CommitLogStream.followChanges(s, t, tp, (v, cdf) => {
-        view = (if (v == 0L) Analytics.degrees(t.asOf(0L), dedup = false)
-                else graft.graph.IncrementalViews.applyDegreeDeltas(view, cdf))
-          .localCheckpoint(true) // materialize the fold inside its micro-batch
-      })
-      view.orderBy("vertex")
-    }),
-    "st18_stream_ivf" -> ((s, dir) => {
-      // STREAMING VECTOR-INDEX MAINTENANCE (round-11 verdict gap #6 —
-      // st17's change-feed -> incremental-view loop composed with the
-      // persisted ANN index): embeddings land in a commit-log table over
-      // three versions; a real StreamExecution follows the log, the v0
-      // snapshot trains + builds the IVF index, and each later version's
-      // insert feed appends to the committed lists against the FIXED
-      // codebook — one atomic lists version per discovered commit, no
-      // retraining, no pass over existing vectors. The final index is
-      // exactly s14's add-after-train artifact, so the query over it
-      // shares the train-on-prefix oracle.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-sivf-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val tp = root.resolve("emb").toString
-      val t = new graft.operators.CommitTable(s, tp, "vec_id")
-      val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      t.overwrite(emb.filter(col("vec_id") < 250))
-      t.append(emb.filter(col("vec_id") >= 250 && col("vec_id") % 2 === 0))
-      t.append(emb.filter(col("vec_id") >= 250 && col("vec_id") % 2 =!= 0))
-      // v0's snapshot build resolves through the memoized lt250 template
-      // (bit-identical by the IndexCache determinism contract); the change
-      // stream attaches at startingVersion = 1 — the production shape for
-      // adding streamed maintenance to an EXISTING index (replaying v0's
-      // snapshot through the feed would be a corpus-sized job before the
-      // first real increment). Appends mutate → private copy.
-      val idx = IndexCache.privateCopy(s"ivf|$dir|lt250", "sivfidx")(p =>
-        Similarity.buildIvfIndex(emb.filter(col("vec_id") < 250), p))
-      graft.streaming.CommitLogStream.followChanges(s, t, tp, (v, cdf) => {
-        val batch = cdf.filter(col("change_type") === "insert").drop("change_type")
-        Similarity.appendIvfIndex(batch, idx)
-      }, startingVersion = 1L)
-      Similarity.ivfTopKIndexed(s, idx)
-    }),
-    "st22_stream_index_optimize" -> ((s, dir) => {
-      // the MAINTENANCE step the streamed-index loop was missing
-      // (round-12 verdict gap #4): st18's change-feed appends commit once
-      // per micro-batch and accrete small files; here the full production
-      // loop runs — stream appends, then OPTIMIZE (clustered compaction:
-      // the lists fold into few RANGE-partitioned-by-cid files, so probe
-      // file-pruning survives), then query. Content is byte-identical
-      // through the compaction commit (file-count drop + asOf history
-      // asserted in CommitLogSpec/StreamingSpec), so the probe shares
-      // st18's train-on-prefix oracle.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-sivfopt-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val tp = root.resolve("emb").toString
-      val t = new graft.operators.CommitTable(s, tp, "vec_id")
-      val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      t.overwrite(emb.filter(col("vec_id") < 250))
-      t.append(emb.filter(col("vec_id") >= 250 && col("vec_id") % 2 === 0))
-      t.append(emb.filter(col("vec_id") >= 250 && col("vec_id") % 2 =!= 0))
-      // st18's memoized-template + startingVersion=1 attach (see there);
-      // this row's own surface is the OPTIMIZE step after the stream.
-      val idx = IndexCache.privateCopy(s"ivf|$dir|lt250", "sivfoptidx")(p =>
-        Similarity.buildIvfIndex(emb.filter(col("vec_id") < 250), p))
-      graft.streaming.CommitLogStream.followChanges(s, t, tp, (v, cdf) => {
-        val batch = cdf.filter(col("change_type") === "insert").drop("change_type")
-        Similarity.appendIvfIndex(batch, idx)
-      }, startingVersion = 1L)
-      new graft.operators.CommitTable(s, s"$idx/lists", "cid")
-        .compactClustered("cid", targetFiles = 4)
-      Similarity.ivfTopKIndexed(s, idx)
-    }),
-    "st21_stream_dedup_idx" -> ((s, dir) => {
-      // streamed DEDUP-index maintenance — the st18/st19 loop completing
-      // the index family: the historical corpus lands in a commit-log
-      // table over three versions, the change stream builds the MinHash
-      // index from the v0 snapshot and appends each later insert feed
-      // (per-document signatures => streamed head == full rebuild), and
-      // the daily shard probes the streamed head. Same halves as d19, so
-      // the probe shares its side-restricted mirror.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-sdedup-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val tp = root.resolve("docs").toString
-      val t = new graft.operators.CommitTable(s, tp, "doc_id")
-      val docs = Tables.documents(s, dir).select("doc_id", "text")
-      t.overwrite(docs.filter(col("doc_id") % 8 === 0))
-      t.append(docs.filter(col("doc_id") % 8 === 2))
-      t.append(docs.filter(col("doc_id") % 2 === 0
-        && col("doc_id") % 8 =!= 0 && col("doc_id") % 8 =!= 2))
-      // v0 build = memoized template; stream attaches at v1 (st18's
-      // startingVersion discipline). Appends mutate → private copy.
-      val idx = IndexCache.privateCopy(s"dedup|$dir|mod8eq0", "sdedupidx")(p =>
-        Dedup.buildDedupIndex(docs.filter(col("doc_id") % 8 === 0), p))
-      graft.streaming.CommitLogStream.followChanges(s, t, tp, (v, cdf) => {
-        val batch = cdf.filter(col("change_type") === "insert").drop("change_type")
-        Dedup.appendDedupIndex(batch, idx)
-      }, startingVersion = 1L)
-      Dedup.dedupAgainstIndex(docs.filter(col("doc_id") % 2 =!= 0), idx)
-    }),
-    "st24_stream_graph_idx" -> ((s, dir) => {
-      // streamed GRAPH-index maintenance — the st18/st19/st21/st23 loop
-      // closing over the last index family member: embeddings land in a
-      // commit-log table over three versions, the change stream builds
-      // the k-NN graph index from the v0 snapshot and runs the
-      // FreshDiskANN search-then-link append for each later insert feed
-      // (batch 2 links against build ∪ batch 1 — the committed state at
-      // its turn), then the production maintenance step compacts the
-      // append-accreted graph files (content-preserving, st22's
-      // machinery) before the final routed walk. The mirror replays the
-      // same two-batch append chain.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-sknng-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val tp = root.resolve("emb").toString
-      val t = new graft.operators.CommitTable(s, tp, "vec_id")
-      val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      t.overwrite(emb.filter(col("vec_id") >= 100))
-      t.append(emb.filter(col("vec_id") >= 50 && col("vec_id") < 100))
-      t.append(emb.filter(col("vec_id") < 50))
-      // v0 build = s26's memoized ge100 template (bit-identical by the
-      // IndexCache determinism contract); the stream attaches at v1 so
-      // each append batch links against the committed state at its turn
-      // (batch 2 against build ∪ batch 1, exactly as before). Appends
-      // mutate → private copy per execution.
-      val idx = IndexCache.privateCopy(s"knng|$dir|ge100", "sknngidx")(p =>
-        KnnGraph.buildKnnGraphIndex(emb.filter(col("vec_id") >= 100), p))
-      graft.streaming.CommitLogStream.followChanges(s, t, tp, (v, cdf) => {
-        val batch = cdf.filter(col("change_type") === "insert").drop("change_type")
-        KnnGraph.appendKnnGraphIndex(batch, idx)
-      }, startingVersion = 1L)
-      new graft.operators.CommitTable(s, s"$idx/graph", "src")
-        .compactClustered("src", targetFiles = 4)
-      KnnGraph.knnGraphSearch(s, idx)
-    }),
-    "st26_stream_ann_serve" -> ((s, dir) => {
-      // STREAMED SERVING over a committed index (the inverse of st18's
-      // streamed maintenance): query vectors arrive as commits on a
-      // request table, the change feed probes each batch against the
-      // committed IVF index through the EXTERNAL-queries entry
-      // (ivfSearchFor — zero training/corpus jobs per batch) and appends
-      // results to a serving log; the accumulated log equals the
-      // one-shot batch probe, so it shares s3's mirror.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-sannserve-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val emb = Tables.embeddings(s, dir)
-      // the committed index being SERVED is s12's memoized artifact
-      // (read-only here — ivfSearchFor runs zero corpus/training jobs)
-      val idx = IndexCache.template(s"ivf|$dir|full")(
-        Similarity.buildIvfIndex(emb, _))
-      val qp = root.resolve("q").toString
-      val qt = new graft.operators.CommitTable(s, qp, "vec_id")
-      val q = emb.select("vec_id", "embedding").filter(col("vec_id") < 20)
-      qt.overwrite(q.filter(col("vec_id") < 10))
-      qt.append(q.filter(col("vec_id") >= 10))
-      val serveT = new graft.operators.CommitTable(s, root.resolve("serve").toString, "query_id")
-      graft.streaming.CommitLogStream.followChanges(s, qt, qp, (v, cdf) => {
-        val batch = cdf.filter(col("change_type") === "insert").drop("change_type")
-        val res = Similarity.ivfSearchFor(s, idx, batch)
-        if (v == 0L) serveT.overwrite(res) else serveT.append(res)
-      })
-      serveT.read().orderBy("query_id", "rank")
-    }),
-    "st25_stream_index_delete" -> ((s, dir) => {
-      // the delete lifecycle STREAMED: a real DELETE WHERE commit on the
-      // source table (f22's file-granular CoW) flows through the change
-      // feed as 'delete' rows, which the maintenance loop turns into one
-      // tombstone commit on the index (s27's O(deleted) shape) — then the
-      // production consolidation physically drops them before the probe.
-      // Mixed feeds compose: 'insert' rows would take the st18 append
-      // path in the same lambda.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-sidxdel-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val tp = root.resolve("emb").toString
-      val t = new graft.operators.CommitTable(s, tp, "vec_id")
-      t.overwrite(Tables.embeddings(s, dir).select("vec_id", "embedding"))
-      t.deleteRange(120L, 179L)
-      // v0 build = the shared full-corpus template; the stream attaches
-      // at v1 (st18's startingVersion discipline), where the DELETE WHERE
-      // commit arrives as 'delete' rows. Mutates → private copy.
-      val idx = IndexCache.privateCopy(s"ivf|$dir|full", "sidxdelidx")(p =>
-        Similarity.buildIvfIndex(Tables.embeddings(s, dir), p))
-      graft.streaming.CommitLogStream.followChanges(s, t, tp, (v, cdf) => {
-        val ins = cdf.filter(col("change_type") === "insert").drop("change_type")
-        val del = cdf.filter(col("change_type") === "delete").drop("change_type")
-        if (!del.isEmpty) Similarity.deleteFromIvfIndex(del.select("vec_id"), idx)
-        if (!ins.isEmpty) Similarity.appendIvfIndex(ins, idx)
-      }, startingVersion = 1L)
-      Similarity.consolidateIvfIndex(s, idx)
-      Similarity.ivfTopKIndexed(s, idx)
-    }),
-    "st30_landing_ingest" -> ((s, dir) => {
-      // DIRECTORY-TAIL STREAMING INGEST (r17 verdict Next #8 — the raw
-      // landing zone had to be batch-loaded before the table-to-table
-      // change feeds took over): a DSv2 MicroBatchStream tails a landing
-      // directory of JSONL files with an O(1) file-name-watermark offset,
-      // feeding appendIdempotent in foreachBatch — end-to-end
-      // exactly-once. Two files land, a REAL StreamExecution consumes
-      // them; a third lands and a SECOND query run restarts from the
-      // checkpoint (offsets restart-safe — only the new file is read,
-      // nothing re-ingests); the committed table must equal the batch
-      // load of all three slices, duplicates impossible.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-landing-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      val land = root.resolve("land")
-      java.nio.file.Files.createDirectories(land)
-      val ckpt = root.resolve("ckpt").toString
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "k")
-      val ord = Tables.orders(s, dir).select(
-        col("o_orderkey").cast("long").as("k"),
-        col("o_custkey").cast("long").as("v"))
-      def landFile(name: String, lo: Long, hi: Long): Unit = {
-        // the shipper discipline the source documents: upload dot-prefixed,
-        // rename into place — a half-written file is never offered
-        val lines = ord.filter(col("k").between(lo, hi)).orderBy("k")
-          .toJSON.collect().mkString("\n")
-        val tmp = land.resolve(s".$name.inprogress")
-        java.nio.file.Files.write(tmp, lines.getBytes("UTF-8"))
-        java.nio.file.Files.move(tmp, land.resolve(name),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        ()
-      }
-      def runOnce(): Unit = {
-        val src = s.readStream.format("graft.sources.LandingZoneStream")
-          .option("format", "jsonl").option("ddl", "k BIGINT, v BIGINT")
-          .load(land.toString)
-        val q = src.writeStream.option("checkpointLocation", ckpt)
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            t.appendIdempotent(b, "landing", id); () }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      landFile("f00001.jsonl", 0L, 199L)
-      landFile("f00002.jsonl", 200L, 399L)
-      runOnce()
-      landFile("f00003.jsonl", 400L, 499L)
-      runOnce() // restart from the checkpoint: only the new file
-      t.read().agg(
-          count(lit(1)).as("n_rows"),
-          sum("k").as("sum_k"),
-          sum("v").as("sum_v"))
-        .select(lit(1L).as("one"), col("n_rows"), col("sum_k"), col("sum_v"))
-    }),
-    "st29_stream_dv_delete" -> ((s, dir) => {
-      // st25's streamed delete lifecycle driven by a DELETION-VECTOR
-      // commit instead of the CoW rewrite (r16 verdict Next #4): the
-      // deleteWhereDV commit changes no data file, so the change feed
-      // for its version resolves through the SIDECAR-DELTA CDF —
-      // O(deleted) rows read from exactly the touched files, never a
-      // full-table diff (the shape f30 asserts structurally) — and the
-      // maintenance loop turns it into the same index tombstones +
-      // consolidation. Result equals st25's (and s27's mirror): the
-      // delete path into the index must not depend on HOW the source
-      // deleted.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-sdvdel-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val tp = root.resolve("emb").toString
-      val t = new graft.operators.CommitTable(s, tp, "vec_id")
-      t.overwrite(Tables.embeddings(s, dir).select("vec_id", "embedding"))
-      t.deleteWhereDV("vec_id BETWEEN 120 AND 179")
-      val idx = IndexCache.privateCopy(s"ivf|$dir|full", "sdvdelidx")(p =>
-        Similarity.buildIvfIndex(Tables.embeddings(s, dir), p))
-      graft.streaming.CommitLogStream.followChanges(s, t, tp, (v, cdf) => {
-        val ins = cdf.filter(col("change_type") === "insert").drop("change_type")
-        val del = cdf.filter(col("change_type") === "delete").drop("change_type")
-        if (!del.isEmpty) Similarity.deleteFromIvfIndex(del.select("vec_id"), idx)
-        if (!ins.isEmpty) Similarity.appendIvfIndex(ins, idx)
-      }, startingVersion = 1L)
-      Similarity.consolidateIvfIndex(s, idx)
-      Similarity.ivfTopKIndexed(s, idx)
-    }),
-    "st20_stream_cep" -> ((s, dir) => {
-      // streaming CEP: e34's automaton as mapGroupsWithState custom
-      // state (O(keys) registers, never event history) — run here in
-      // batch mode (each group folds once from empty state, the st4
-      // discipline binding the exact code path), so the result equals
-      // e34's and shares its independent sequential-automaton oracle;
-      // the genuine cross-micro-batch increment is asserted over split
-      // ordered MemoryStream feeds in StreamingSpec.
-      import s.implicits._
-      val ev = EventStreams.normalized(Tables.events(s, dir))
-        .select(col("user_id").cast("long").as("user_id"), col("ts_us"),
-          col("event_id").cast("long").as("event_id"), col("event_type"))
-        .as[EventStreams.CepEvent]
-      EventStreams.streamingPatternCounts(ev).toDF()
-        .select(col("user_id"), col("n_events"), col("n_matches"))
-        .orderBy("user_id")
-    }),
-    "st19_stream_bm25" -> ((s, dir) => {
-      // streamed SPARSE-index maintenance (st18's loop on the BM25
-      // index): documents land in a commit-log table over three
-      // versions; the change stream builds the postings index from the
-      // v0 snapshot and appends each later insert feed — and because
-      // BM25 has no trained component, the streamed head EQUALS a full
-      // rebuild, so the query shares t37's inline oracle exactly.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-sbm25-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val tp = root.resolve("docs").toString
-      val t = new graft.operators.CommitTable(s, tp, "doc_id")
-      val docs = Tables.documents(s, dir).select("doc_id", "text")
-      t.overwrite(docs.filter(col("doc_id") % 3 === 0))
-      t.append(docs.filter(col("doc_id") % 3 === 1))
-      t.append(docs.filter(col("doc_id") % 3 === 2))
-      // v0 build = memoized template; stream attaches at v1 (st18's
-      // startingVersion discipline). Appends mutate → private copy.
-      val idx = IndexCache.privateCopy(s"bm25|$dir|mod3eq0", "sbm25idx")(p =>
-        graft.llm.Retrieval.buildBm25Index(docs.filter(col("doc_id") % 3 === 0), p))
-      graft.streaming.CommitLogStream.followChanges(s, t, tp, (v, cdf) => {
-        val batch = cdf.filter(col("change_type") === "insert").drop("change_type")
-        graft.llm.Retrieval.appendBm25Index(batch, idx)
-      }, startingVersion = 1L)
-      graft.llm.Retrieval.bm25TopKIndexed(s, idx, Bm25QueryTerms, k = 15)
-    }),
-    "st16_stream_log_source" -> ((s, dir) => {
-      // streaming SOURCE over the commit log (st15's read half, Delta's
-      // streaming-source shape): three committed versions, then a REAL
-      // StreamExecution follows _log/ with the file streaming source —
-      // each discovered version file (atomic rename ⇒ never partial)
-      // yields that version's change feed through the log API. Output =
-      // per-version insert/delete counts, identical however discovery
-      // batches the files. Oracle: the same change sets derived straight
-      // from the source table.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-slogsrc-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val tp = root.resolve("tbl").toString
-      val t = new graft.operators.CommitTable(s, tp, "n_nationkey")
-      val nat = Tables.nation(s, dir).select(
-        col("n_nationkey").cast("long").as("n_nationkey"),
-        col("n_name"), col("n_regionkey").cast("long").as("n_regionkey"))
-      t.overwrite(nat.filter(col("n_nationkey") < 10))
-      t.append(nat.filter(col("n_nationkey") >= 10))
-      t.overwrite(nat.filter(col("n_nationkey") % 2 === 0))
-      val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-      graft.streaming.CommitLogStream.followChanges(s, t, tp, (v, cdf) => {
-        val r = cdf.agg(
-          sum(when(col("change_type") === "insert", 1L).otherwise(0L)).as("i"),
-          sum(when(col("change_type") === "delete", 1L).otherwise(0L)).as("d")).head()
-        acc += ((v, r.getLong(0), r.getLong(1)))
-      })
-      import s.implicits._
-      acc.sortBy(_._1).toSeq.toDF("version", "n_inserts", "n_deletes")
-    }),
-    "st14_stream_upsert" -> ((s, dir) => {
-      // the foreachBatch CDC-apply pattern in batch mode: two
-      // deterministic "micro-batches" (event_id parity) folded into a
-      // totals table via delta-aggregate + combine + MERGE per round —
-      // the result must equal the one-shot aggregate (round-trip
-      // identity, p4's discipline), binding the per-batch merge path to
-      // the gate; the real writeStream.foreachBatch execution over split
-      // feeds is asserted in StreamingSpec
-      val ev = Tables.events(s, dir)
-      val t0 = EventStreams.emptyTotals(s)
-      val t1 = EventStreams.upsertTotalsBatch(t0, ev.filter(col("event_id") % 2 === 0))
-      EventStreams.upsertTotalsBatch(t1, ev.filter(col("event_id") % 2 =!= 0))
-        .orderBy("user_id")
-    }),
-    "st13_stream_full_join" -> ((s, dir) => {
-      // FULL OUTER stream-stream join in batch mode (the fourth join mode
-      // after st5/st6/st8): unmatched views AND unmatched clicks both
-      // emit null-padded — streamable because each side's watermark
-      // bounds the other side's state; the two-sided deferred emission is
-      // asserted in StreamingSpec with split feeds
-      val ev = Tables.events(s, dir)
-      EventStreams.viewClickFullJoin(ev, ev)
-        .orderBy(col("view_id").asc_nulls_last, col("click_id").asc_nulls_first)
-    }),
-    "st8_stream_static" -> ((s, dir) => {
-      // stream-static enrichment (the zero-state third join mode): batch
-      // semantics gated here; the MemoryStream half is in StreamingSpec
-      val dim = Tables.customer(s, dir)
-        .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("segment"))
-      EventStreams.enrichPurchases(Tables.events(s, dir), dim).orderBy("event_id")
-    }),
-    "st7_bounded_counts" -> ((s, dir) => {
-      // the EventTimeTimeout stateful variant (the production state-bounded
-      // form of st4) in batch mode: each group folds once from empty state
-      // and no timeout fires, so the within-horizon final state is the same
-      // per-user fold st4 gates — this row binds the
-      // flatMapGroupsWithState + EventTimeTimeout code path to the gate;
-      // the eviction half (idle-key state removal, counter restart) is
-      // streaming-only behavior asserted in StreamingSpec
-      import s.implicits._
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), col("ts"), col("event_type"))
-        .as[EventStreams.UserEvent]
-      EventStreams.runningUserCountsBounded(ev).toDF().orderBy("user_id")
-    }),
-    "st10_tws_counts" -> ((s, dir) => {
-      // the transformWithState API (Spark 4.x's typed-state successor to
-      // mapGroupsWithState) bound to the gate: same per-user fold as st4,
-      // run in batch mode — one init + one handleInputRows per group from
-      // absent state; the RocksDB-backed incremental half is StreamingSpec's
-      import s.implicits._
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), col("ts"), col("event_type"))
-        .as[EventStreams.UserEvent]
-      EventStreams.runningUserCountsTws(ev).toDF().orderBy("user_id")
-    }),
-    "st9_closed_sessions" -> ((s, dir) => {
-      // Append-mode custom-state sessionization: one final row per CLOSED
-      // session (the append-only-sink contract; st4/st7 cover the
-      // always-emit and Update-mode shapes). Batch mode folds each group
-      // once in event-time order and closes the trailing session at
-      // end-of-input; the streaming half (incremental close on gap,
-      // timeout flush at the watermark) is asserted in StreamingSpec
-      import s.implicits._
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), col("ts"), col("event_type"))
-        .as[EventStreams.UserEvent]
-      EventStreams.sessionizeStateful(ev).toDF()
-        .orderBy("user_id", "session_start_us")
-    }),
-
-    // ---- LLM-pipeline: dedup ----
-    "d1_exact_dedup" -> ((s, dir) => Dedup.exactDedup(Tables.documents(s, dir))),
-    "d8_stream_dedup" -> ((s, dir) =>
-      // streamingExactDedup's batch analogue: WHICH copy survives is
-      // arrival-order-dependent (dropDuplicates keeps an arbitrary row in
-      // batch — on a stream it is first-seen), but the surviving CONTENT
-      // set is deterministic, so the gate binds the content-determined
-      // projection; cross-micro-batch first-seen semantics are asserted in
-      // StreamingSpec
-      Dedup.streamingExactDedup(Tables.documents(s, dir))
-        .select(md5(col("text")).as("h"), length(col("text")).cast("long").as("len"))
-        .orderBy("h")),
-    "d14_fuzzy_decontaminate" -> ((s, dir) =>
-      // near-dup (MinHash-banded) train-vs-eval contamination: catches the
-      // paraphrased leakage t18's exact shingle overlap misses; candidates
-      // come from TRAIN buckets joined against the benchmark-sized EVAL
-      // buckets only — never train×train
-      Dedup.fuzzyDecontaminate(Tables.documents(s, dir))),
-    "d13_watermark_dedup" -> ((s, dir) =>
-      // streamingDedupWithinWatermark bound to the gate through a REAL
-      // StreamExecution (dropDuplicatesWithinWatermark has no batch mode):
-      // BoundedReplay feeds the documents table through the file streaming
-      // source one file per micro-batch, so the state store carries
-      // first-seen keys ACROSS micro-batches. Arrival time derives from
-      // doc_id MOD 1s (micro-batch order is file-order, not id-order, so an
-      // unbounded id-derived time could strand early ids behind the
-      // watermark as late data) — the whole table spans <1s, far inside the
-      // 10-minute delay, so every copy is in-horizon and the surviving
-      // CONTENT set is exactly DISTINCT (the d8 discipline; WHICH copy
-      // survives is arrival-order-dependent, so the gate binds the
-      // content-determined projection). The eviction/re-emit half past the
-      // horizon is asserted in StreamingSpec.
-      BoundedReplay.runFileStream(
-        Tables.documents(s, dir)
-          // offset: event time 0 equals the zero-floored watermark and
-          // would be discarded as late — keep min event time above delay
-          .withColumn("arrival_ts",
-            timestamp_micros(col("doc_id") % 1000000L + 3600000000L)),
-        name = "d13_sink",
-        transform = stream =>
-          Dedup.streamingDedupWithinWatermark(stream, tsCol = "arrival_ts",
-              delay = "10 minutes")
-            .select(md5(col("text")).as("h"),
-              length(col("text")).cast("long").as("len")))
-        .orderBy("h")),
-    "d2_jaccard_pairs" -> ((s, dir) => Dedup.jaccardPairs(Tables.documents(s, dir))),
-    "d3_minhash_pairs" -> ((s, dir) => Dedup.minHashLshPairs(Tables.documents(s, dir))),
-    "d4_simhash_pairs" -> ((s, dir) => Dedup.simHashPairs(Tables.documents(s, dir))),
-    "d7_ngram_jaccard" -> ((s, dir) => // tokenizer-free char-9-gram Jaccard
-      // (same AllPairs+PPJoin engine as d2; naive-join DuckDB oracle stays
-      // independent of the prefix machinery). n=9 because short char-grams
-      // of templated text are shared so widely that no exact filter can
-      // prune candidates (measured: n=5 -> 3M candidate pairs at sf0.1 for
-      // 256 true pairs; n=9 -> 286k; the true pair set is IDENTICAL)
-      Dedup.ngramJaccardPairs(Tables.documents(s, dir))),
-    "d10_edit_distance" -> ((s, dir) => // fuzzy-join recipe: O(m·n)
-      // Levenshtein runs ONLY on the LSH-pruned pair set, on fixed-width
-      // prefixes — char-level drift signal on top of set-based Jaccard
-      Dedup.lshEditDistances(Tables.documents(s, dir))),
-    "d11_containment" -> ((s, dir) => // ASYMMETRIC containment over
-      // winnowing fingerprints (MOSS shape): a small doc quoted wholesale
-      // by a large one scores ~1000 on its own side while the pair's
-      // Jaccard stays low — the quote-plagiarism signal d2/d3/d7's
-      // symmetric thresholds miss; df-capped inverted index bounds the join
-      Dedup.containmentPairs(Tables.documents(s, dir))),
-    "d6_dup_clusters" -> ((s, dir) => // near-dup RESOLUTION: CC over the
-      // LSH pair graph -> (doc, keeper); closure handles non-transitive
-      // near-dup chains
-      Dedup.nearDupClusters(Tables.documents(s, dir))),
-    "d17_span_dedup" -> ((s, dir) => // exact duplicated-SPAN detection
-      // (Lee et al. 2022): sliding k-token windows hashed corpus-wide,
-      // repeated windows mark their positions, overlaps merge to maximal
-      // spans — catches shifted duplicates d12's disjoint tiles miss
-      Dedup.spanDedup(Tables.documents(s, dir))),
-    "d18_span_scrub" -> ((s, dir) => // d17's SCRUB half — the CLEANED
-      // corpus the Lee et al. pipeline actually ships: the canonical
-      // (smallest (doc_id, start)) occurrence of each duplicated window
-      // keeps its text, every other occurrence's positions are cut, docs
-      // reassembled from surviving tokens in order
-      Dedup.spanScrub(Tables.documents(s, dir))),
-    "d19_dedup_index" -> ((s, dir) => {
-      // PERSISTED dedup index (r12 — the s19 discipline applied to d3's
-      // MinHash machinery): the historical corpus's band signatures +
-      // hashed shingle universe live as commit-log tables; a daily shard
-      // probes its bands against the committed bucket relation (never
-      // shard x shard), verifies survivors by exact Jaccard with the
-      // old side semi-pruned to colliding docs, and the historical text
-      // is never re-tokenized. Built half/half via build+append (bands
-      // are per-document, so append == full rebuild); the probe side is
-      // the odd doc_ids.
-      // Build+append chain memoized (d20 shares it); the probe is
-      // read-only against the committed bucket relation.
-      val docs = Tables.documents(s, dir)
-      val idx = IndexCache.template(s"dedup|$dir|split") { p =>
-        Dedup.buildDedupIndex(docs.filter(col("doc_id") % 4 === 0), p)
-        Dedup.appendDedupIndex(docs.filter(col("doc_id") % 4 === 2), p)
-      }
-      Dedup.dedupAgainstIndex(docs.filter(col("doc_id") % 2 =!= 0), idx)
-    }),
-    "d20_dedup_index_at" -> ((s, dir) => {
-      // the dedup index version-pinned (the family-wide manifest): the
-      // same build+append chain, probed AT index version 0 — the shard
-      // sees ONLY the build batch's historical corpus, exactly the
-      // pre-append index (shingles and bands pinned together).
-      // Shares d19's memoized template; the version-pinned probe is
-      // read-only through the manifest.
-      val docs = Tables.documents(s, dir)
-      val idx = IndexCache.template(s"dedup|$dir|split") { p =>
-        Dedup.buildDedupIndex(docs.filter(col("doc_id") % 4 === 0), p)
-        Dedup.appendDedupIndex(docs.filter(col("doc_id") % 4 === 2), p)
-      }
-      Dedup.dedupAgainstIndexAt(docs.filter(col("doc_id") % 2 =!= 0), idx, 0L)
-    }),
-    "d16_neardup_keepers" -> ((s, dir) => // the ingestion-order near-dup
-      // KEEPER rule: keep a doc iff it claims >= 1 of its 32 MinHash band
-      // signatures (claim = per-band min doc_id) — the streaming-feasible
-      // relaxation of pair-based dedup: no candidate join at all, one
-      // band-keyed min shuffle; the stateful first-seen streaming half is
-      // asserted in StreamingSpec
-      Dedup.nearDupKeepers(Tables.documents(s, dir))),
-    "d15_quality_keepers" -> ((s, dir) => // d6's clusters resolved by the
-      // PRODUCTION keeper policy — most tokens, ties to smaller id —
-      // instead of min-id survivorship; the policy is one map-side argmax
-      // struct-aggregate on top of the cluster labeling
-      Dedup.qualityKeepers(Tables.documents(s, dir))),
-    "d12_block_dedup" -> ((s, dir) => // sub-document boilerplate removal
-      // (ExactSubstr's scalable block approximation): consecutive 10-token
-      // blocks, corpus-wide first occurrence survives; min-struct keeper
-      // keeps hot boilerplate blocks skew-proof via map-side combine
-      Dedup.blockDedup(Tables.documents(s, dir))),
-
-    // ---- LLM-pipeline: similarity search ----
-    "s1_cosine_topk" -> ((s, dir) => Similarity.cosineTopK(Tables.embeddings(s, dir))),
-    "s18_mrl_rerank" -> ((s, dir) => // Matryoshka coarse-to-fine ANN: the
-      // candidate scan ranks on the FIRST 8 dimensions only (MRL
-      // embeddings front-load information — the scan reads a fraction of
-      // the bytes), exact full-dim cosine re-rank on k·candFactor rows;
-      // SQ8's bandwidth argument on the dimension axis (they compose)
-      Similarity.mrlTopK(Tables.embeddings(s, dir))),
-    "g61_local_community" -> ((s, dir) => // Andersen–Chung–Lang local
-      // community sweep: PPR/degree ranking from seed 0, prefix
-      // conductance profile with the best cut flagged — "find MY
-      // community without touching the rest of the graph"; integer
-      // window algebra after the g18-contract ranking
-      Analytics.localCommunitySweep(DerivedGraphs.small(s, dir), source = 0L)),
-    "g60_rich_club" -> ((s, dir) => // rich-club profile: density among
-      // vertices of degree > k for k = 1..16 — "do the hubs form a
-      // club?", the topology fingerprint next to g55's assortativity;
-      // one degree pass + one annotated edge pass, kMax-row aggregates
-      Analytics.richClub(DerivedGraphs.small(s, dir))),
-    "s17_hard_negatives" -> ((s, dir) => // contrastive hard-negative
-      // mining (DPR/SimCSE recipe): per query the top-k most-similar
-      // vectors with a DIFFERENT label — same scan/window plan as s1,
-      // one extra predicate in the broadcast join
-      Similarity.hardNegatives(Tables.embeddings(s, dir))),
-    "p9_leakproof_split" -> ((s, dir) => {
-      // LEAKAGE-PROOF train/val/test split: near-duplicates of a training
-      // doc in the eval split are silent contamination, so the split key
-      // is the doc's near-dup CLUSTER (d6's keeper; singletons key on
-      // themselves) — every cluster lands whole in one split by
-      // construction (split = f(group key), the GroupShuffleSplit rule).
-      val docs = Tables.documents(s, dir)
-      val keyed = docs.select(col("doc_id").cast("long").as("doc_id"))
-        .join(Dedup.nearDupClusters(docs), Seq("doc_id"), "left_outer")
-        .select(col("doc_id"), coalesce(col("keeper"), col("doc_id")).as("gkey"))
-      Sampling.assignSplits(keyed, "gkey")
-        .groupBy("split")
-        .agg(count(lit(1)).as("n_docs"), countDistinct(col("gkey")).as("n_groups"),
-          sum(col("doc_id")).as("sum_ids"))
-        .orderBy("split")
-    }),
-    "p11_maxp_retrieval" -> ((s, dir) => // BM25-MaxP passage retrieval
-      // (Dai & Callan 2019, the long-document RAG recipe): overlapping
-      // token windows each BM25-scored as their own unit against
-      // passage-level corpus stats, a document's score = MAX over its
-      // passages — one on-topic passage surfaces a long document that
-      // whole-document length normalization would bury; returns the best
-      // passage id too (what a RAG pipeline actually retrieves)
-      graft.llm.Retrieval.maxPassageTopK(
-        Tables.documents(s, dir), Bm25QueryTerms, k = 15)),
-    "p12_maxp_indexed" -> ((s, dir) => {
-      // the PERSISTED passage-level index (r14 verdict #7 — p11
-      // recomputed chunk stats per query; production RAG retrieves
-      // passages from a committed index): chunk-granular postings +
-      // stats as commit-log tables, built half/half via build+append to
-      // bind the incremental-refresh path, then queried with zero corpus
-      // jobs — bit-identical to p11's inline operator, sharing its
-      // independent chunk-idf oracle. Build chain memoized (template);
-      // the committed probe is read-only.
-      val docs = Tables.documents(s, dir)
-      val idx = IndexCache.template(s"maxp|$dir|split") { p =>
-        graft.llm.Retrieval.buildPassageIndex(docs.filter(col("doc_id") % 2 === 0), p)
-        graft.llm.Retrieval.appendPassageIndex(docs.filter(col("doc_id") % 2 =!= 0), p)
-      }
-      graft.llm.Retrieval.maxPassageTopKIndexed(s, idx, Bm25QueryTerms, k = 15)
-    }),
-    "p13_passage_delete" -> ((s, dir) => {
-      // the passage-index DELETE lifecycle (p12's index under churn —
-      // the s29 shape at chunk granularity): tombstone delete is one
-      // O(deleted) commit pinned as an index version; consolidation
-      // drops the docs' chunk postings and re-derives exact survivor
-      // stats, making the index bit-identical to a rebuild on the
-      // survivors — which IS the mirror (p11's SQL over the surviving
-      // corpus, idf re-derived independently on the survivors). The
-      // pre-merge Lucene stale-stats semantics is spec-pinned in
-      // RetrievalSpec. Full-corpus build memoized; delete + consolidate
-      // mutate → private copy per execution.
-      val docs = Tables.documents(s, dir)
-      val idx = IndexCache.privateCopy(s"maxp|$dir|full", "maxpdel")(
-        graft.llm.Retrieval.buildPassageIndex(docs, _))
-      graft.llm.Retrieval.deleteFromPassageIndex(
-        docs.filter(col("doc_id") % 5 === 2).select("doc_id"), idx)
-      graft.llm.Retrieval.consolidatePassageIndex(s, idx)
-      graft.llm.Retrieval.maxPassageTopKIndexed(s, idx, Bm25QueryTerms, k = 15)
-    }),
-    "p8_hybrid_rrf" -> ((s, dir) => {
-      // hybrid retrieval: t37's sparse BM25 list + a dense cosine list
-      // fused by reciprocal-rank fusion (exact integer micro-units) —
-      // the no-calibration sparse+dense merge every RAG stack ships;
-      // both inputs are k-sized result lists by their own contracts
-      val sparse = graft.llm.Retrieval.bm25TopK(
-          Tables.documents(s, dir), Bm25QueryTerms, k = 15)
-        .withColumn("rank", row_number().over(
-          org.apache.spark.sql.expressions.Window.orderBy(desc("score_e6"), col("doc_id"))))
-        .select("doc_id", "rank")
-      val dense = Similarity.cosineTopK(Tables.embeddings(s, dir), numQueries = 1, k = 15)
-        .select(col("neighbor_id").as("doc_id"), col("rank"))
-      graft.llm.Retrieval.rrfFuse(Seq(sparse, dense), k = 10)
-    }),
-    "p10_rag_indexed" -> ((s, dir) => {
-      // the PRODUCTION RAG query path end-to-end: BOTH retriever legs run
-      // against PERSISTED commit-log indexes (s19's postings + s12's IVF
-      // lists), so query time pays zero training jobs, zero corpus-stats
-      // jobs, and no raw-corpus tokenization — then the two committed-
-      // index result lists fuse by exact-integer RRF. This is the gate
-      // that binds the whole round-12 index family into one user-facing
-      // pipeline.
-      // Both legs' builds are memoized templates (s29 clones the BM25
-      // one, s12 shares the IVF one); the fused query path is read-only.
-      val bmIdx = IndexCache.template(s"bm25|$dir|full")(
-        graft.llm.Retrieval.buildBm25Index(Tables.documents(s, dir), _))
-      val ivfIdx = IndexCache.template(s"ivf|$dir|full")(
-        Similarity.buildIvfIndex(Tables.embeddings(s, dir), _))
-      val sparse = graft.llm.Retrieval.bm25TopKIndexed(s, bmIdx, Bm25QueryTerms, k = 15)
-        .withColumn("rank", row_number().over(
-          org.apache.spark.sql.expressions.Window.orderBy(desc("score_e6"), col("doc_id"))))
-        .select("doc_id", "rank")
-      val dense = Similarity.ivfTopKIndexed(s, ivfIdx, numQueries = 1, k = 15)
-        .select(col("neighbor_id").as("doc_id"), col("rank"))
-      graft.llm.Retrieval.rrfFuse(Seq(sparse, dense), k = 10)
-    }),
-    "s2_ann_lsh" -> ((s, dir) => // approximate vs EXACT top-k, but fully
-      // deterministic given the seeded hyperplanes — so the oracle mirrors
-      // the LSH pipeline itself; recall vs exact is asserted in
-      // SimilaritySpec
-      Similarity.lshTopK(Tables.embeddings(s, dir))),
-    "s3_ann_ivf" -> ((s, dir) => // iters=1: seed centroids (lowest ids) plus
-      // ONE k-means refinement step — the refinement path itself is now
-      // gated (round-6 verdict): the per-dimension means are quantized to a
-      // 1e-6 grain so the refined centroids are deterministic and the
-      // oracle mirrors the full step; deeper refinement (iters=2) stays
-      // recall-tested in SimilaritySpec
-      Similarity.ivfTopK(Tables.embeddings(s, dir), iters = 1)),
-    "s6_gram_matrix" -> ((s, dir) => // distributed Gram/covariance matrix
-      // (the PCA/whitening Σ): per-row upper-triangle outer products, ONE
-      // (i,j) shuffle with map-side partial sums — shuffle volume is
-      // partitions × dim², independent of corpus size; result driver-small
-      // by contract (dim×dim), like IVF's centroids
-      Similarity.gramMatrix(Tables.embeddings(s, dir))),
-    "s8_knn_classify" -> ((s, dir) => // kNN majority-vote classification
-      // over the exact top-k neighbors: integer vote on top of s1's float
-      // discipline, ties toward the smaller label on both engines
-      Similarity.knnClassify(Tables.embeddings(s, dir))),
-    "s7_pq_rerank" -> ((s, dir) => // product-quantized ADC scan + exact
-      // re-rank (the FAISS IVFPQ memory path): m one-byte codes per vector
-      // (64x narrower than the float64 scan), query-side integer LUT, the
-      // corpus pass sums m table entries and never touches the floats;
-      // deterministic seed codebooks so the oracle mirrors the pipeline
-      Similarity.pqTopK(Tables.embeddings(s, dir))),
-    "s5_sq8_rerank" -> ((s, dir) => // int8 scalar-quantized candidate scan
-      // + exact re-rank: the quantized-memory ANN tier (8× narrower scan
-      // than s1's float64 pass); deterministic end-to-end, so the oracle
-      // mirrors the full quantize→int-rank→refine pipeline
-      Similarity.sq8TopK(Tables.embeddings(s, dir))),
-    "s4_label_centroids" -> ((s, dir) => // per-label element-wise embedding
-      // mean: posexplode -> one (label, pos) shuffle with partial sums; a
-      // group's vectors are never materialized together
-      Similarity.labelCentroids(Tables.embeddings(s, dir))),
-    "s9_kmeans" -> ((s, dir) => // Lloyd k-means — THE curation clustering
-      // primitive (SemDeDup / domain balancing start here): deterministic
-      // seed/tie/quantization contract so the independent sequential-model
-      // VALUES oracle reproduces every assignment exactly; corpus scanned
-      // once per round against broadcast codebook literals, means via the
-      // (cluster, pos) partial-sum shuffle
-      Similarity.kMeans(Tables.embeddings(s, dir), k = 8, numIter = 5)),
-    "s11_silhouette" -> ((s, dir) => // simplified (centroid-based)
-      // silhouette of the s9 clustering — the cluster-quality diagnostic
-      // that is linear where true silhouette is quadratic; zero extra
-      // passes on top of the shared Lloyd core (the final assignment frame
-      // already carries all k distances)
-      Similarity.kMeansSilhouette(Tables.embeddings(s, dir), k = 8, numIter = 5)),
-    "s16_jl_sketch" -> ((s, dir) => // Johnson–Lindenstrauss random
-      // projection: data-INdependent dimensionality reduction (planes from
-      // the seed alone — no corpus statistics, so it composes with
-      // streaming ingest, unlike PCA's two-pass fit); one scan against
-      // broadcast literal planes, micro-quantized codegen'd dots compared
-      // exactly against the same fold in DuckDB
-      Similarity.jlSketch(Tables.embeddings(s, dir))),
-    "s15_pca" -> ((s, dir) => // PCA spectrum of the corpus embeddings —
-      // the variance structure read before whitening / OPQ rotation /
-      // dimension reduction: ONE corpus pass into exact integer (S, P)
-      // sums (d²-sized exchange, codebook-collect discipline), driver
-      // Jacobi with per-sweep 1e-9 state quantization so the independent
-      // sequential mirror iterates from identical state every sweep
-      Similarity.pcaSpectrum(Tables.embeddings(s, dir))),
-    "s10_mmr" -> ((s, dir) => // maximal-marginal-relevance diversified
-      // top-k: greedy λ·rel − (1−λ)·max-sim-to-selected over the relevance
-      // pool — the anti-near-dup retrieval answer; corpus-sized work is one
-      // broadcast-query relevance pass, greedy picks are k distributed
-      // argmax steps over the checkpointed pool
-      Similarity.mmrSelect(Tables.embeddings(s, dir), queryId = 0L, k = 10,
-        poolSize = 50, lambda = 0.7)),
-    "s12_ivf_persisted" -> ((s, dir) => {
-      // the production "build index once, query it many times" shape
-      // (round-10 verdict gap #3): the IVF codebook + inverted lists land
-      // as two commit-log tables (atomic versions, time travel, refresh =
-      // one new commit; lists repartitioned by cid so per-file stats prune
-      // unprobed lists); the query path reads the COMMITTED index and runs
-      // zero k-means jobs (listener-asserted in SimilaritySpec). Same
-      // build configuration as s3, so the persisted round trip reproduces
-      // ivfTopK bit-for-bit and shares its oracle. Deterministic build →
-      // process-wide template (IndexCache); probe read-only per execution.
-      val idx = IndexCache.template(s"ivf|$dir|full")(
-        Similarity.buildIvfIndex(Tables.embeddings(s, dir), _))
-      Similarity.ivfTopKIndexed(s, idx)
-    }),
-    "s23_ivf_filtered" -> ((s, dir) => {
-      // FILTERED ANN over the persisted index (round-12 verdict gap #1 —
-      // production vector search is almost always predicated: "top-k
-      // similar AND lang = 'en' AND date > X"): the FAISS IDSelector
-      // shape, a predicate over the committed list rows applied INSIDE
-      // the probed lists BEFORE ranking — over-fetch + post-filter would
-      // break the k contract under a selective filter; this path keeps
-      // it. Same build configuration as s12 (shared memoized template),
-      // so the oracle is s3's mirror with the same candidate predicate.
-      val idx = IndexCache.template(s"ivf|$dir|full")(
-        Similarity.buildIvfIndex(Tables.embeddings(s, dir), _))
-      Similarity.ivfTopKIndexed(s, idx,
-        predicate = Some(col("vec_id") % 7 === 3))
-    }),
-    "s24_knn_graph" -> ((s, dir) => // NN-Descent k-NN graph (Dong et al.
-      // 2011) — the graph-based index family's construction half: id-ring
-      // init, then per round every vertex introduces its (capped)
-      // forward+reverse neighbors to each other and keeps its k best.
-      // Linear candidate volume per round (n·(2k)²), nothing all-pairs;
-      // the deterministic dataflow form is replayed CTE-for-CTE by the
-      // DuckDB mirror.
-      KnnGraph.knnGraph(Tables.embeddings(s, dir))),
-    "s25_graph_ann" -> ((s, dir) => {
-      // graph-routed ANN over the COMMITTED index (the DiskANN/Vamana
-      // query shape): vectors/graph/entry land as three commit-log
-      // tables at build time; a search is `hops` rounds of file-pruned
-      // point reads (frontier adjacency + candidate vectors), never a
-      // corpus scan. The mirror replays build + beam loop end-to-end.
-      // The deterministic build is a process-wide template (IndexCache —
-      // round-14 verdict #1); the search runs per execution, read-only.
-      val idx = IndexCache.template(s"knng|$dir|full")(
-        KnnGraph.buildKnnGraphIndex(Tables.embeddings(s, dir), _))
-      KnnGraph.knnGraphSearch(s, idx)
-    }),
-    "s26_graph_append" -> ((s, dir) => {
-      // search-then-link incremental insert (the FreshDiskANN shape):
-      // the index builds on the vec_id >= 100 corpus, the first 100
-      // vectors arrive as an append batch — each is linked to what a
-      // routed search finds for it, and REVERSE edges make the batch
-      // reachable — then the standard query walk runs over the extended
-      // index. Queries (< 20) are themselves appended nodes, so the
-      // gate only passes if the append's reverse-edge semantics hold.
-      // Build is a memoized template; the append MUTATES, so it runs on
-      // a private copy per execution (IndexCache isolation contract).
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.privateCopy(s"knng|$dir|ge100", "knnapp")(
-        KnnGraph.buildKnnGraphIndex(emb.filter(col("vec_id") >= 100), _))
-      KnnGraph.appendKnnGraphIndex(emb.filter(col("vec_id") < 100), idx)
-      KnnGraph.knnGraphSearch(s, idx)
-    }),
-    "s35_ivf_versions" -> ((s, dir) => {
-      // the manifest adopted by the IVF family (its build commits
-      // centroids then lists — a racing reader could score new lists
-      // against an old codebook): head probe sees the appended index,
-      // the v0 probe replays the build-only index through one pinned
-      // member set. Build+append chain memoized (s19/s36's split-template
-      // shape); both probes are read-only, so they share the template.
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.template(s"ivf|$dir|lt300+ge300") { p =>
-        Similarity.buildIvfIndex(emb.filter(col("vec_id") < 300), p)   // index v0
-        Similarity.appendIvfIndex(emb.filter(col("vec_id") >= 300), p) // index v1
-      }
-      Similarity.ivfTopKIndexed(s, idx).withColumn("phase", lit("head"))
-        .unionByName(Similarity.ivfTopKIndexedAt(s, idx, 0L).withColumn("phase", lit("v0")))
-    }),
-    "s38_lifecycle_recall" -> ((s, dir) => {
-      // ANN QUALITY UNDER CHURN (r14 verdict #8 — recall floors were
-      // mostly asserted at build time; this gate runs the recall
-      // instrument AFTER the full lifecycle): build on the tail corpus →
-      // search-then-link append → tombstone delete → consolidate (one-hop
-      // repair) → OPTIMIZE (clustered graph compaction) → routed walk,
-      // then recall@k per query against the exact scan over the SURVIVING
-      // corpus. The contract is two exact-integer floors (the
-      // ann-benchmarks protocol's shape): per query n_hit·10 ≥ n_exact·4
-      // (recall ≥ 40% — churn legitimately costs the tail: one query's
-      // exact neighbors stay at 2/5 under ANY beam/hops once its links
-      // route through the deleted range; measured plateau at sf0.01),
-      // and FLEET-wide Σn_hit·10 ≥ Σn_exact·7 (mean recall ≥ 70%). If
-      // churn degrades the repaired graph below either floor, rows flip
-      // and the gate hash-fails. The gate pins the SCALED configuration
-      // (build degree k=10/rounds=3, linkK=12, beam=64/hops=5): the
-      // cheap k=6 default that the plan-correctness gates use goes
-      // recall-blind as the corpus grows (sf0.1 sweep: 8/20 queries
-      // under 40%, mean 31% — a too-sparse graph cannot be walked back
-      // to quality), while degree and beam scaled with corpus hold both
-      // floors at BOTH gate scales (sf0.01 AND sf0.1 measured; DiskANN's
-      // published configs make the same degree-vs-recall trade). Build
-      // memoized under its own key; every lifecycle mutation runs on a
-      // private copy per execution.
-      val emb = Tables.embeddings(s, dir)
-      // this row PROBES the committed churned ARTIFACT (the r18 verdict's
-      // sanctioned re-declaration): the artifact construction — build →
-      // append → delete → consolidate → OPTIMIZE, every stage
-      // deterministic by the engine's integer-exact build contract — is a
-      // memoized template like every other probe row's build (s33/s34
-      // discipline; stage-level mechanics stay per-execution-asserted in
-      // KnnGraphSpec and the lifecycle is per-execution-timed by
-      // s26/s28/st24); what this row DECLARES — the full routed walk over
-      // the churned artifact plus the recall floors against the exact
-      // scan — runs per execution, nothing of it memoized.
-      val idx = IndexCache.template(s"knng|$dir|lifecycle38") { p =>
-        KnnGraph.buildKnnGraphIndex(emb.filter(col("vec_id") >= 100), p,
-          k = 10, rounds = 3)
-        KnnGraph.appendKnnGraphIndex(emb.filter(col("vec_id") < 100), p, linkK = 12)
-        KnnGraph.deleteFromKnnGraphIndex(
-          emb.filter(col("vec_id") >= 150 && col("vec_id") < 200).select("vec_id"), p)
-        KnnGraph.consolidateKnnGraphIndex(s, p)
-        new graft.operators.CommitTable(s, s"$p/graph", "src")
-          .compactClustered("src", targetFiles = 4)
-      }
-      val approx = KnnGraph.knnGraphSearch(s, idx, beam = 64, hops = 5)
-      // the exact recall floor is COMPUTED PER EXECUTION (r18 verdict
-      // "What's wrong" #1: the per-process parquet memo of this result
-      // made the timed row a read-back of precomputed answers — retired)
-      val exact = Similarity.cosineTopK(
-        emb.filter(col("vec_id") < 150 || col("vec_id") >= 200))
-      val wAll = org.apache.spark.sql.expressions.Window
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.unboundedFollowing)
-      Similarity.recallAtK(approx, exact)
-        .select(col("query_id"),
-          (col("n_hit") * 10 >= col("n_exact") * 4).as("ge_floor"),
-          (sum(col("n_hit") * 10).over(wAll) >= sum(col("n_exact") * 7).over(wAll))
-            .as("fleet_ge_mean"))
-        .orderBy("query_id")
-    }),
-    "s37_maxsim" -> ((s, dir) => // ColBERT-style late-interaction MaxSim
-      // re-ranking (sum over query tokens of the max dot against document
-      // tokens) over deterministic hashed-projection token embeddings —
-      // the dense-retrieval granularity between one pooled vector (s1)
-      // and full cross-attention; every similarity integer-exact, the
-      // type-grid dot table broadcast, per-query cost linear in corpus
-      graft.llm.Retrieval.maxSimTopK(Tables.documents(s, dir))),
-    "s36_bm25_versions" -> ((s, dir) => {
-      // ...and by the BM25 family, where the race is sharpest: an append
-      // commits postings and the stats delta separately, so an unpinned
-      // reader could score new postings against the OLD n/sum_dl. Head
-      // query == the full-corpus scorer; the v0 query == the build-half
-      // index exactly.
-      // Same build+append chain as s19 → shared memoized template; both
-      // probes (head and manifest-pinned v0) are read-only.
-      val docs = Tables.documents(s, dir)
-      val idx = IndexCache.template(s"bm25|$dir|split") { p =>
-        graft.llm.Retrieval.buildBm25Index(docs.filter(col("doc_id") % 2 === 0), p)
-        graft.llm.Retrieval.appendBm25Index(docs.filter(col("doc_id") % 2 =!= 0), p)
-      }
-      graft.llm.Retrieval.bm25TopKIndexed(s, idx, Bm25QueryTerms, k = 15)
-        .withColumn("phase", lit("head"))
-        .unionByName(graft.llm.Retrieval
-          .bm25TopKIndexedAt(s, idx, 0L, Bm25QueryTerms, k = 15)
-          .withColumn("phase", lit("v0")))
-    }),
-    "s34_index_versions" -> ((s, dir) => {
-      // ATOMIC MULTI-TABLE INDEX VERSIONS (the catalog-commit shape): a
-      // graph index is three commit-log tables; build/append pin their
-      // member heads as ONE manifest commit, so a reader never mixes new
-      // vectors with the pre-append graph — and the whole index time
-      // travels as a unit: the head search sees the appended state, the
-      // v0 search replays the build-only index exactly. Build+append
-      // chain memoized like s19/s36's split template (both halves are
-      // deterministic); BOTH probes here are read-only, so they share it.
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.template(s"knng|$dir|lt300+ge300") { p =>
-        KnnGraph.buildKnnGraphIndex(emb.filter(col("vec_id") < 300), p)   // index v0
-        KnnGraph.appendKnnGraphIndex(emb.filter(col("vec_id") >= 300), p) // index v1
-      }
-      KnnGraph.knnGraphSearch(s, idx).withColumn("phase", lit("head"))
-        .unionByName(KnnGraph.knnGraphSearchAt(s, idx, 0L).withColumn("phase", lit("v0")))
-    }),
-    "s39_index_vacuum" -> ((s, dir) => {
-      // INDEX-LEVEL RETENTION closing the lifecycle (s34's index under a
-      // storage budget): a per-member-table vacuum cannot know which
-      // member versions an older INDEX version pins — vacuumIndex
-      // resolves the kept manifest versions to their exact member pins
-      // and reclaims everything else, so the kept window keeps replaying
-      // and the head search is untouched. Same build+append chain as
-      // s34; after vacuumIndex(keep = 1) the head search must still
-      // equal the append mirror bit-for-bit — which IS this gate's
-      // oracle. The pinned-window protection and the reclaim count are
-      // spec-asserted in KnnGraphSpec.
-      val emb = Tables.embeddings(s, dir)
-      // s34's chain template; the vacuum MUTATES → private copy.
-      val idx = IndexCache.privateCopy(s"knng|$dir|lt300+ge300", "idxvac") { p =>
-        KnnGraph.buildKnnGraphIndex(emb.filter(col("vec_id") < 300), p)   // index v0
-        KnnGraph.appendKnnGraphIndex(emb.filter(col("vec_id") >= 300), p) // index v1
-      }
-      graft.operators.IndexManifest.vacuumIndex(s, idx, keepLastIndexVersions = 1)
-      KnnGraph.knnGraphSearch(s, idx)
-    }),
-    "s33_pq_graph_ann" -> ((s, dir) => {
-      // the DiskANN query loop PROPER (memory/disk split included): the
-      // committed graph walked with exact-integer PQ-ADC navigation —
-      // code rows (m bytes/vector) are the only corpus-sized reads — and
-      // full-precision vectors touched ONLY for the final k·candFactor
-      // exact re-rank. The mirror replays seeds/codes/LUT and every hop's
-      // integer ADC bit-for-bit. Build + PQ-add are both deterministic
-      // artifact construction → one memoized template; the ADC walk
-      // itself runs per execution, read-only.
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.template(s"knngpq|$dir|full") { p =>
-        KnnGraph.buildKnnGraphIndex(emb, p)
-        KnnGraph.addPqToKnnGraphIndex(emb, p)
-      }
-      KnnGraph.pqGraphSearch(s, idx)
-    }),
-    "s31_ivf_drift" -> ((s, dir) => {
-      // codebook-drift monitoring (the instrument behind appendIvfIndex's
-      // "caller owns drift policy"): per committed list, the index's
-      // population + quantization residual beside a NEW shard's under the
-      // same fixed codebook — exact integers, so rebuild thresholds are
-      // plain arithmetic over this frame. Memoized build; the drift
-      // instrument only READS the index.
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.template(s"ivf|$dir|ge100")(
-        Similarity.buildIvfIndex(emb.filter(col("vec_id") >= 100), _))
-      Similarity.ivfDriftStats(emb.filter(col("vec_id") < 100), idx)
-    }),
-    "s32_recall_eval" -> ((s, dir) => {
-      // recall@k evaluation (the ann-benchmarks protocol as an operator):
-      // the IVF probe scored per query against the exact scan — the
-      // quality dial every index deployment monitors, in exact integers.
-      val emb = Tables.embeddings(s, dir)
-      Similarity.recallAtK(Similarity.ivfTopK(emb), Similarity.cosineTopK(emb))
-    }),
-    "s30_graph_filtered" -> ((s, dir) => {
-      // FILTERED graph ANN (s23's IDSelector role for the graph family,
-      // the ACORN post-filtering shape): navigation stays unfiltered —
-      // the walk routes through non-matching vertices — and the
-      // predicate gates results only, so a selective filter still
-      // returns ranked matches (widened beam feeds it enough visited
-      // candidates; the spec pins the k contract). Shared memoized
-      // build (same artifact as s25); the filtered walk is read-only.
-      val idx = IndexCache.template(s"knng|$dir|full")(
-        KnnGraph.buildKnnGraphIndex(Tables.embeddings(s, dir), _))
-      KnnGraph.knnGraphSearch(s, idx, beam = 16,
-        predicate = Some(col("vec_id") % 3 === 1))
-    }),
-    "s27_ivf_delete" -> ((s, dir) => {
-      // the DELETE half of the index lifecycle (FAISS remove_ids as the
-      // delete-list shape): one O(deleted) tombstone commit makes the
-      // range vanish from probes immediately; consolidation drops the
-      // physical rows. Because the exclusion is a pure row filter on the
-      // committed lists, BOTH phases equal the one filtered mirror — the
-      // gate row carries them side by side to prove it. Shared memoized
-      // build; tombstone + consolidate mutate → private copy.
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.privateCopy(s"ivf|$dir|full", "ivfdel")(
-        Similarity.buildIvfIndex(emb, _))
-      Similarity.deleteFromIvfIndex(
-        emb.filter(col("vec_id") >= 120 && col("vec_id") < 180).select("vec_id"), idx)
-      val pre = Similarity.ivfTopKIndexed(s, idx)
-        .withColumn("phase", lit("tombstoned"))
-      Similarity.consolidateIvfIndex(s, idx)
-      val post = Similarity.ivfTopKIndexed(s, idx)
-        .withColumn("phase", lit("consolidated"))
-      pre.unionByName(post)
-    }),
-    "s40_graph_link_health" -> ((s, dir) => {
-      // GRAPH-INDEX STALENESS INSTRUMENT (r15 verdict Next #6 — IVF has
-      // ivfDriftStats; the graph family had nothing saying when churn
-      // warrants the periodic rebuild its docs defer to): link-health
-      // stats move EXACTLY with the lifecycle — clean at build, append
-      // share rises on search-then-link inserts (log metadata only),
-      // tombstoned-neighbor shares rise monotonically with each delete
-      // batch, and consolidation clears every counter. Numeric
-      // monotonicity is spec-asserted in KnnGraphSpec; this gate binds
-      // the lifecycle contract. Build memoized (s26's template); every
-      // mutation runs on a private copy.
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.privateCopy(s"knng|$dir|ge100", "knnhealth")(
-        KnnGraph.buildKnnGraphIndex(emb.filter(col("vec_id") >= 100), _))
-      def snap(adj: Option[DataFrame] = None) =
-        KnnGraph.knnGraphLinkStats(s, idx, adj).head()
-      def shares(r: org.apache.spark.sql.Row) =
-        (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))
-      val fresh = shares(snap())
-      KnnGraph.appendKnnGraphIndex(emb.filter(col("vec_id") < 100), idx)
-      // the three post-append probes straddle TOMBSTONE-ONLY mutations —
-      // the adjacency is provably identical, so it materializes once and
-      // the probes share it (r17 verdict Next #2); and because tombstone
-      // commits are VERSIONED and immutable, the three probes' delete
-      // lists read back per committed version and all three states fold
-      // in ONE aggregation pass instead of three (r19, r18 verdict
-      // Next #3 — knnGraphLinkStatsStates, per-state equality
-      // spec-asserted in KnnGraphSpec)
-      val adj = new graft.operators.CommitTable(s, s"$idx/graph", "src")
-        .read().select("src", "dst").localCheckpoint(true)
-      val v1 = KnnGraph.deleteFromKnnGraphIndex(
-        emb.filter(col("vec_id") >= 200 && col("vec_id") < 240).select("vec_id"), idx)
-      val v2 = KnnGraph.deleteFromKnnGraphIndex(
-        emb.filter(col("vec_id") >= 240 && col("vec_id") < 280).select("vec_id"), idx)
-      val s2 = s
-      import s2.implicits._
-      val states = KnnGraph.knnGraphLinkStatsStates(s, idx, adj, Seq(
-        Seq.empty[Long].toDF("vec_id"), // post-append state: no tombstones yet
-        graft.llm.Tombstones.readAt(s, idx, "vec_id", v1),
-        graft.llm.Tombstones.readAt(s, idx, "vec_id", v2)))
-      val appended = shares(states(0))
-      val del1 = shares(states(1))
-      val del2 = shares(states(2))
-      KnnGraph.consolidateKnnGraphIndex(s, idx)
-      val healed = shares(snap())
-      Seq(
-        ("s1_fresh_clean", fresh == ((0L, 0L, 0L, 0L))),
-        ("s2_append_rises", appended._4 > 0L && appended._1 == 0L &&
-          appended._2 == 0L && appended._3 == 0L),
-        ("s3_delete_rises", del1._1 > 0L && del1._2 > 0L && del1._4 == appended._4),
-        ("s4_monotone_under_churn", del2._1 > del1._1 && del2._2 > del1._2 &&
-          del2._3 >= del1._3),
-        ("s5_consolidate_clears", healed == ((0L, 0L, 0L, 0L)))
-      ).toDF("probe", "holds").orderBy("probe")
-    }),
-    "s28_graph_delete" -> ((s, dir) => {
-      // FreshDiskANN delete-consolidation on the committed graph index:
-      // tombstone the range (deleted vertices keep NAVIGATING but leave
-      // results), then consolidate — surviving in-neighbors of each
-      // deleted vertex inherit its surviving out-neighbors (one-hop
-      // repair), vectors/entries rewrite without the range — and run the
-      // standard walk. The mirror replays build + repair + walk.
-      // Shared memoized build; tombstone + consolidate mutate → private
-      // copy per execution.
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.privateCopy(s"knng|$dir|full", "knndel")(
-        KnnGraph.buildKnnGraphIndex(emb, _))
-      KnnGraph.deleteFromKnnGraphIndex(
-        emb.filter(col("vec_id") >= 120 && col("vec_id") < 180).select("vec_id"), idx)
-      KnnGraph.consolidateKnnGraphIndex(s, idx)
-      KnnGraph.knnGraphSearch(s, idx)
-    }),
-    "s29_bm25_delete" -> ((s, dir) => {
-      // Lucene-shaped document deletes on the committed BM25 index:
-      // tombstoned docs leave results and the query terms' df at once
-      // (corpus n/sum_dl stay stale until the merge — the documented
-      // Lucene semantics, spec-pinned); consolidation re-derives exact
-      // survivor stats, making the index bit-identical to a rebuild on
-      // the survivors — which IS the mirror here.
-      // Full-corpus build memoized (p10 shares the artifact); delete +
-      // consolidate mutate → private copy per execution.
-      val docs = Tables.documents(s, dir)
-      val idx = IndexCache.privateCopy(s"bm25|$dir|full", "bm25del")(
-        graft.llm.Retrieval.buildBm25Index(docs, _))
-      graft.llm.Retrieval.deleteFromBm25Index(
-        docs.filter(col("doc_id") % 7 === 3).select("doc_id"), idx)
-      graft.llm.Retrieval.consolidateBm25Index(s, idx)
-      graft.llm.Retrieval.bm25TopKIndexed(s, idx, Bm25QueryTerms, k = 15)
-    }),
-    "s13_pq_persisted" -> ((s, dir) => {
-      // persisted PQ: the CODES (m bytes/vector — the corpus-sized
-      // artifact s7 re-derives every call) land as a commit-log table
-      // next to the codebook; the query streams committed codes and
-      // never re-encodes — only the k·candFactor re-rank candidates
-      // touch raw floats. Same build configuration as s7, so the round
-      // trip is bit-identical and shares its oracle. Memoized build;
-      // the code-streaming probe is read-only.
-      val idx = IndexCache.template(s"pq|$dir|full")(
-        Similarity.buildPqIndex(Tables.embeddings(s, dir), _))
-      Similarity.pqTopKIndexed(Tables.embeddings(s, dir), idx)
-    }),
-    "s14_ivf_append" -> ((s, dir) => {
-      // incremental index refresh (FAISS add-after-train): train on the
-      // first 250 vectors, append the rest as ONE atomic commit assigned
-      // against the FIXED committed codebook — no retraining pass, no
-      // touch of the existing lists; the oracle mirrors the same
-      // train-on-prefix/assign-all split via ivfTopKSql's trainFilter.
-      // Prefix build memoized; the append mutates → private copy.
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.privateCopy(s"ivf|$dir|lt250", "ivfapp")(
-        Similarity.buildIvfIndex(emb.filter(col("vec_id") < 250), _))
-      Similarity.appendIvfIndex(emb.filter(col("vec_id") >= 250), idx)
-      Similarity.ivfTopKIndexed(s, idx)
-    }),
-    "s20_ivfpq" -> ((s, dir) => {
-      // FAISS IVFPQ composed (round-11 verdict gap #2 — THE production
-      // ANN shape at 100 TB): coarse centroids + sub-quantizer codebook +
-      // a lists table holding ONLY (vec_id, cid, codes), cid-clustered;
-      // a query probes nprobe lists, integer-ADCs their codes, and pays
-      // exact cosines for just k·candFactor survivors. Raw vectors:
-      // never materialized, never shuffled. Memoized build; read-only probe.
-      val idx = IndexCache.template(s"ivfpq|$dir|full")(
-        Similarity.buildIvfPqIndex(Tables.embeddings(s, dir), _))
-      Similarity.ivfPqTopKIndexed(Tables.embeddings(s, dir), idx)
-    }),
-    "s21_pq_append" -> ((s, dir) => {
-      // incremental refresh for the FLAT PQ index (s14's add-after-train
-      // for codes): the committed sub-codebooks stay fixed, the appended
-      // shard encodes in one pass and lands as ONE atomic commit. The
-      // vec_id<250 training prefix contains the ksub lowest ids, so the
-      // codebooks equal a full build's and s7's oracle applies unchanged.
-      // Prefix build memoized; the append mutates → private copy.
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.privateCopy(s"pq|$dir|lt250", "pqapp")(
-        Similarity.buildPqIndex(emb.filter(col("vec_id") < 250), _))
-      Similarity.appendPqIndex(emb.filter(col("vec_id") >= 250), idx)
-      Similarity.pqTopKIndexed(emb, idx)
-    }),
-    "s22_ivfpq_append" -> ((s, dir) => {
-      // IVFPQ add-after-train: BOTH committed codebooks (coarse + sub-
-      // quantizer) stay fixed; the appended shard is coarse-assigned and
-      // PQ-encoded in one pass, landing as ONE atomic lists commit. The
-      // mirror restricts both codebooks' training view to the vec_id<250
-      // prefix while codes/assignment cover the corpus.
-      // Prefix build memoized; the append mutates → private copy.
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.privateCopy(s"ivfpq|$dir|lt250", "ivfpqapp")(
-        Similarity.buildIvfPqIndex(emb.filter(col("vec_id") < 250), _))
-      Similarity.appendIvfPqIndex(emb.filter(col("vec_id") >= 250), idx)
-      Similarity.ivfPqTopKIndexed(emb, idx)
-    }),
-    "s19_bm25_indexed" -> ((s, dir) => {
-      // persisted SPARSE-retrieval index (round-11 verdict gap #1 — the
-      // last per-query recompute in the index family): postings + corpus
-      // stats land as commit-log tables (postings term-clustered so the
-      // query's IN filter prunes files); the query derives df/idf from
-      // the pruned committed read and runs ZERO corpus-stats jobs — the
-      // raw documents table is not an input (inputFiles-asserted in
-      // RetrievalSpec). Built on a half/half build+append split to bind
-      // the incremental-refresh path to the gate; BM25 has no trained
-      // component, so the result is bit-identical to t37's inline
-      // operator and shares its oracle. The build+append CHAIN is the
-      // deterministic artifact (memoized; s36 shares it); the committed
-      // probe is read-only.
-      val docs = Tables.documents(s, dir)
-      val idx = IndexCache.template(s"bm25|$dir|split") { p =>
-        graft.llm.Retrieval.buildBm25Index(docs.filter(col("doc_id") % 2 === 0), p)
-        graft.llm.Retrieval.appendBm25Index(docs.filter(col("doc_id") % 2 =!= 0), p)
-      }
-      graft.llm.Retrieval.bm25TopKIndexed(s, idx, Bm25QueryTerms, k = 15)
-    }),
-
-    // ---- LLM-pipeline: text analysis + multimodal ----
-    "t1_text_stats" -> ((s, dir) => TextOps.textStats(Tables.documents(s, dir))),
-    "t2_language_id" -> ((s, dir) => TextOps.languageId(Tables.documents(s, dir))),
-    "t3_quality" -> ((s, dir) => TextOps.qualityBuckets(Tables.documents(s, dir))),
-    "t4_fingerprints" -> ((s, dir) => TextOps.fingerprints(Tables.documents(s, dir))),
-    "t5_token_freq" -> ((s, dir) => TextOps.tokenFrequency(Tables.documents(s, dir))),
-    "t6_bpe_tokens" -> ((s, dir) => TextOps.bpeTokenCounts(Tables.documents(s, dir))),
-    "t29_bpe_train" -> ((s, dir) => // BPE merge TRAINING (t6 counts with a
-      // fixed regex; this LEARNS the merge table): corpus touched once for
-      // the word-type counts, every round is vocabulary-sized expression
-      // work + a 1-row argmax; not SQL-expressible (iterative argmax), so
-      // the oracle is the independent sequential model's VALUES
-      TextOps.bpeTrainMerges(Tables.documents(s, dir), numMerges = 10)),
-    "t30_bpe_encode" -> ((s, dir) => {
-      // the tokenizer ROUND TRIP: t29's learned merges applied back to the
-      // corpus (rank-order fold chain over the word-type table, ONE plan —
-      // encoding needs no per-merge argmax barrier), top subword counts;
-      // the collected merge table is merge-count-sized by contract
-      val docs = Tables.documents(s, dir)
-      val merges = TextOps.bpeTrainMerges(docs, numMerges = 10)
-        .collect().map(r => (r.getString(1), r.getString(2))).toSeq
-      TextOps.bpeEncodeTop(docs, merges, topN = 20)
-    }),
-    "t7_winnowing" -> ((s, dir) => // rolling hash unrolled to a k-term
-      // polynomial in the SQL mirror — fully oracle-checked
-      TextOps.winnowingFingerprints(Tables.documents(s, dir))),
-    "t13_repetition" -> ((s, dir) => // Gopher-style repetition quality
-      // signals (top-token/top-bigram share, duplicate-bigram fraction):
-      // per-row HOF work only — no shuffle for a per-document statistic
-      TextOps.repetitionStats(Tables.documents(s, dir))),
-    "t14_kmv_distinct" -> ((s, dir) => // mergeable KMV distinct sketch
-      // (O(k) state per group through the typed-Aggregator partial/merge
-      // path) vs the exact distinct count it estimates — the incremental
-      // COUNT(DISTINCT) surface exact aggregation can't maintain at 100 TB
-      Sketches.kmvDistinctShingles(Tables.documents(s, dir))),
-    "t43_zipf_fit" -> ((s, dir) => // Zipf rank-frequency fit per lang
-      // (the natural-language-vs-templated-junk corpus-card statistic):
-      // distributed exact-integer counts/totals/top-N, then the OLS fit
-      // over nano-quantized logs runs on the driver's bounded
-      // langs x topN collect in BigInt; oracle = fully independent
-      // sequential mirror through the shared contract formula
-      graft.llm.TextOps.zipfStats(Tables.documents(s, dir))),
-    "t42_kmv_setops" -> ((s, dir) => // KMV sketch SET OPERATIONS (theta
-      // algebra): per-source k-minima over the hashed shingle universe,
-      // then pairwise union/intersection/Jaccard estimates from the
-      // SKETCHES alone — the mergeable answer to "how much do two crawl
-      // sources overlap" whose per-source state is k longs; the pair
-      // join runs over the sources-sized sketch table, never the corpus
-      Sketches.kmvSetOps(Tables.documents(s, dir))),
-    "t47_hll_distinct" -> ((s, dir) => // HyperLogLog distinct-token sketch
-      // per language — the FIXED-size (256-register) counterpart of t14's
-      // KMV: register state merges by pairwise MAX across daily increments
-      // (spec-asserted), the estimator is the published bias-corrected
-      // harmonic form with alpha as an exact rational and the
-      // linear-counting branch read from a driver-interpolated table, so
-      // every emitted column is integer-exact in both engines
-      Sketches.hllDistinctTokens(Tables.documents(s, dir))),
-    "t17_dup_coverage" -> ((s, dir) => // corpus-level contamination: share
-      // of each doc's shingles appearing ANYWHERE else — the stitched-
-      // from-fragments signal pairwise dedup never surfaces
-      TextOps.dupCoverage(Tables.documents(s, dir))),
-    "t18_decontaminate" -> ((s, dir) => // benchmark decontamination: train
-      // docs overlapping the (deterministic stand-in) eval slice's shingle
-      // universe; eval set broadcast, corpus-side is a semi probe
-      TextOps.decontaminate(Tables.documents(s, dir), col("doc_id") % 7 === 0)),
-    "t28_weighted_sample" -> ((s, dir) => {
-      // Efraimidis-Spirakis A-ES weighted sampling bound to the gate:
-      // per-language top-10 by priority u^(1/w), w = token count (longer
-      // docs proportionally likelier — the quality/length-weighted corpus
-      // cut). Content-addressed u and a 1e-9-quantized integer priority
-      // make the one float step (pow) engine-portable; ranks and the
-      // sampled ids are what the oracle hash-checks.
-      val docs = Tables.documents(s, dir).select(
-        col("lang"), col("doc_id"),
-        size(TextOps.tokens(col("text"))).cast("long").as("w"))
-        .filter(col("w") >= 1)
-      Sampling.weightedSample(docs, strataCol = "lang", keyCol = "doc_id",
-          weightCol = "w", k = 10, seed = 7L)
-        .select(col("lang"), col("doc_id"), col("w"), col("priority_q"), col("stratum_rank"))
-        .orderBy("lang", "stratum_rank")
-    }),
-    "t27_token_entropy" -> ((s, dir) => // token-distribution Shannon
-      // entropy per doc (nats, 1e-6): the whole-shape information-density
-      // signal next to t13's head-share ratios; counts are SORTED before
-      // the fold so both engines sum identical doubles in identical order
-      // — bit-reproducible before the round. Per-row HOF, no exchange.
-      TextOps.tokenEntropy(Tables.documents(s, dir))),
-    "t16_token_rarity" -> ((s, dir) => // corpus-relative quality signal:
-      // mean corpus frequency of each doc's tokens (vocabulary-sized
-      // frequency table joined back — broadcast shape at corpus scale)
-      TextOps.tokenRarity(Tables.documents(s, dir))),
-    "t15_histogram_quantiles" -> ((s, dir) => // mergeable fixed-bin
-      // quantile sketch: re-addable bin counts -> p50/p90 edges; the
-      // incremental-percentile surface q12's exact sort-based path can't
-      // maintain (bins merge by summing; history never rescanned)
-      Sketches.histogramQuantiles(Tables.orders(s, dir))),
-    "t21_bigram_logprob" -> ((s, dir) => // corpus-relative statistical LM
-      // quality (CCNet shape): mean ln P(w2|w1) under the corpus's own
-      // bigram counts — scores token ORDER where t16 scores token choice;
-      // count tables are vocab-bounded (broadcast-sized next to a corpus)
-      TextOps.bigramLogProb(Tables.documents(s, dir))),
-    "t20_countmin_hh" -> ((s, dir) => // Count-Min point-frequency sketch
-      // (deterministic universal hashes, so the oracle rebuilds the exact
-      // grid): 2 KB of re-addable state estimates any token's count from
-      // above; gate readout pairs est with exact on the top-20 tokens —
-      // the t14/t15 mergeable-sketch family completed
-      Sketches.countMinHeavyHitters(Tables.documents(s, dir))),
-    "t26_adaptive_stopwords" -> ((s, dir) => // df-driven stopword
-      // discovery (corpus-adaptive noise list; the fixed-list t1/t3
-      // signals can't see domain noise); vocabulary-sized result
-      TextOps.adaptiveStopwords(Tables.documents(s, dir))),
-    "t25_html_strip" -> ((s, dir) => // markup stripping (boilerplate
-      // removal before quality scoring); deterministically planted tags,
-      // per-row regexes, whitespace re-collapsed
-      TextOps.htmlStrip(Tables.documents(s, dir))),
-    "t22_pii_scrub" -> ((s, dir) => // email/phone detection + redaction
-      // (deterministically planted PII — the synthetic corpus has none);
-      // per-row regex expressions only, codegen'd, shuffle-free
-      TextOps.piiScrub(Tables.documents(s, dir))),
-    "t23_url_domains" -> ((s, dir) => // URL -> domain inventory (the
-      // domain-filtering half of crawl curation); one scan + one
-      // low-cardinality hash shuffle
-      TextOps.urlDomains(Tables.documents(s, dir))),
-    "t24_shingle_novelty" -> ((s, dir) => // per-doc first-occurrence
-      // shingle contribution — dedup-aware curation's ranking signal;
-      // two shuffles, both on 8-byte hashed shingles
-      TextOps.shingleNovelty(Tables.documents(s, dir))),
-    "t10_tfidf" -> ((s, dir) => // per-doc top terms by integer-exact
-      // raw-idf TF-IDF (log-free so the oracle matches bit-for-bit)
-      TextOps.tfidfTopTerms(Tables.documents(s, dir))),
-    "t12_chunk_text" -> ((s, dir) => // RAG-style overlapping token chunking
-      // (k=30, stride=20): per-row expression work only, no shuffle before
-      // the output sort; t11 is the placement-only pretraining cousin
-      TextOps.chunkTokens(Tables.documents(s, dir))),
-    "t11_pack_chunks" -> ((s, dir) => { // GPT-style concat-and-chunk batch
-      // packing: per-SOURCE token streams cut into 256-token context
-      // windows; per-shard windows, never a global cumsum
-      val toks = Tables.documents(s, dir)
-        .select(col("doc_id"), col("source"),
-          size(TextOps.tokens(col("text"))).cast("long").as("n_tokens"))
-      Packing.packChunks(toks, groupCol = "source", orderCol = "doc_id",
-          tokensCol = "n_tokens", chunkTokens = 256L)
-        .orderBy("doc_id")
-    }),
-    "t8_train_split" -> ((s, dir) =>
-      // content-addressed train/val/test assignment (md5 buckets — stable
-      // under reruns, retries, and corpus growth, unlike rand(seed));
-      // gate checks the per-split memberships via integer aggregates
-      Sampling.assignSplits(Tables.documents(s, dir), keyCol = "doc_id")
-        .groupBy("split")
-        .agg(count(lit(1)).as("n"), sum("doc_id").as("sum_ids"), sum("n_chars").as("sum_chars"))
-        .orderBy("split")),
-    "t19_stratified_sample" -> ((s, dir) =>
-      // per-stratum deterministic top-k under the seeded shuffle order: the
-      // balanced per-language mix (uniform sampling mirrors corpus skew);
-      // WindowGroupLimit keeps the k-cut below the stratum shuffle
-      Sampling.stratifiedSample(Tables.documents(s, dir),
-          strataCol = "lang", keyCol = "doc_id", k = 10, seed = 11L)
-        .select("lang", "stratum_rank", "doc_id", "shuffle_key")
-        .orderBy("lang", "stratum_rank")),
-    "t9_corpus_sample" -> ((s, dir) =>
-      // seeded deterministic shuffle + top-k = reproducible fixed-size
-      // eval slice; plans as TakeOrderedAndProject (per-partition top-k,
-      // no global sort materialization)
-      Sampling.deterministicSample(Tables.documents(s, dir), keyCol = "doc_id", k = 50, seed = 7L)
-        .select("doc_id", "shuffle_key")
-        .orderBy("shuffle_key", "doc_id")),
-    "t31_token_mixture" -> ((s, dir) => // token-budget domain mixing: each
-      // source admits docs in seeded-shuffle order until its TOKEN budget
-      // fills — the skew-correcting corpus-mix primitive (doc-count caps
-      // ignore length; uniform samples mirror the skew); integer
-      // running-sum admission, content-addressed order
-      Sampling.tokenBudgetMixture(Tables.documents(s, dir))),
-    "t32_dsir" -> ((s, dir) => // DSIR importance weights: log-likelihood
-      // ratio of each doc's hashed bag-of-words under the target (lang=en)
-      // vs raw unigram models — the importance-resampling data-selection
-      // score. Bucket counts are exact integers (one corpus pass); the
-      // per-bucket log-ratios are driver-computed micro-quantized literals
-      // (s9's broadcast-codebook discipline), so doc scores are exact
-      // integer sums; oracle = fully independent sequential mirror
-      Sampling.dsirWeights(Tables.documents(s, dir))),
-    "t37_bm25" -> ((s, dir) => // BM25 keyword retrieval (the Lucene/RAG
-      // sparse scorer): exact integer df/dl/tf, driver-quantized idf
-      // literals, one truncating division per matched term — plans as
-      // TakeOrderedAndProject; oracle = static SQL + an INDEPENDENTLY
-      // derived idf VALUES table (SequentialCorpus.bm25Idf)
-      graft.llm.Retrieval.bm25TopK(Tables.documents(s, dir),
-        queryTerms = Bm25QueryTerms, k = 15)),
-    "t40_lm_langid" -> ((s, dir) => // LM language-ID (fastText-langid
-      // shape, upgrading t2's marker-word heuristic): one hashed-unigram
-      // model per language from the labeled slices, arg-min NLL
-      // prediction with runner-up margin; one langs×buckets aggregate +
-      // one scoring pass vs the broadcast codebook
-      graft.llm.Perplexity.lmLangId(Tables.documents(s, dir))),
-    "t38_ccnet_ppl" -> ((s, dir) => // CCNet perplexity bucketing: hashed-
-      // unigram LM fit on the lang=en reference slice, per-token NLL in
-      // micro-nats, head/middle/tail split — the LM-quality filter stage;
-      // oracle = fully independent sequential mirror
-      graft.llm.Perplexity.ccnetScore(Tables.documents(s, dir))),
-    "t41_ngram_ppl" -> ((s, dir) => // ORDER-3 CCNet scoring (round-11
-      // verdict gap #3): hashed trigram/bigram/unigram LM with stupid
-      // backoff — seen-gram NLL = exact integer difference of driver-
-      // quantized log counts, 0.4-penalty per backed-off level; the
-      // scoring pass is entirely row-local (codegen'd aggregate lambda
-      // vs 4 broadcast literal tables, zero shuffles); oracle = fully
-      // independent sequential mirror with its own backoff recursion
-      graft.llm.Perplexity.ngramScore(Tables.documents(s, dir))),
-    "t44_ngram5_ppl" -> ((s, dir) => // ORDER-5 CCNet parity (round-12
-      // Next #5 — the published CCNet recipe scores with a 5-gram
-      // KenLM): t41's hashed stupid-backoff chain extended to order 5,
-      // same row-local scoring shape (one when-chain per token against
-      // 6 broadcast literal tables); oracle = the independent recursive
-      // order-N mirror
-      graft.llm.Perplexity.ngramScore(Tables.documents(s, dir), order = 5)),
-    "t46_grouped_quantiles" -> ((s, dir) =>
-      // per-GROUP adaptive quantiles with NO driver collect anywhere:
-      // each group's sketch level comes from a closed form over its
-      // z-histogram (window + aggregate), so group count is unbounded —
-      // the per-slice corpus-card quantile the fixed-grid t15 and the
-      // global t45 both stop short of
-      graft.llm.Sketches.groupedAdaptiveQuantiles(
-        Tables.orders(s, dir).select(col("o_orderpriority").as("grp"),
-          col("o_orderkey").as("uid"),
-          floor(col("o_totalprice")).cast("long").as("val")))),
-    "st23_stream_quantiles" -> ((s, dir) => {
-      // streamed SKETCH maintenance: t45's adaptive quantile sketch kept
-      // fresh by the change feed — per discovered commit the insert
-      // feed's own sketch merges into the committed head (one overwrite
-      // commit per version), and the EXACT merge law makes the streamed
-      // head provably identical to a one-shot build over the union, so
-      // the readout shares t45's direct-build mirror verbatim.
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-squant-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val tp = root.resolve("rows").toString
-      val t = new graft.operators.CommitTable(s, tp, "uid")
-      val base = Tables.orders(s, dir).select(col("o_orderkey").as("uid"),
-        floor(col("o_totalprice")).cast("long").as("val"))
-      t.overwrite(base.filter(col("uid") % 3 === 0))
-      t.append(base.filter(col("uid") % 3 === 1))
-      t.append(base.filter(col("uid") % 3 === 2))
-      val skT = new graft.operators.CommitTable(s, root.resolve("sketch").toString, "z")
-      graft.streaming.CommitLogStream.followChanges(s, t, tp, (v, cdf) => {
-        val batch = cdf.filter(col("change_type") === "insert").drop("change_type")
-        val bs = graft.llm.Sketches.adaptiveQuantileSketch(batch)
-        if (v == 0L) skT.overwrite(bs)
-        else skT.overwrite(graft.llm.Sketches.mergeQuantileSketches(skT.read(), bs))
-      })
-      graft.llm.Sketches.sketchQuantiles(skT.read(), Seq(250000L, 500000L, 900000L))
-    }),
-    "st27_stream_hll" -> ((s, dir) => {
-      // streamed HLL maintenance: t47's fixed-size register sketch kept
-      // fresh by the change feed — per discovered commit the insert
-      // batch's own 256-register state merges into the committed head by
-      // pairwise MAX (one overwrite commit per version), and the exact
-      // merge law makes the streamed head provably identical to a
-      // one-shot build over the union, so the readout shares t47's
-      // direct-build mirror verbatim (the st23 loop, for cardinality).
-      val root = TempDirs.deleteOnExit(java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-shll-${ProcessHandle.current().pid()}"))
-      TempDirs.deleteRecursively(root)
-      java.nio.file.Files.createDirectories(root)
-      val tp = root.resolve("docs").toString
-      val t = new graft.operators.CommitTable(s, tp, "doc_id")
-      val base = Tables.documents(s, dir).select(col("doc_id"), col("text"), col("lang"))
-      t.overwrite(base.filter(col("doc_id") % 3 === 0))
-      t.append(base.filter(col("doc_id") % 3 === 1))
-      t.append(base.filter(col("doc_id") % 3 === 2))
-      val regT = new graft.operators.CommitTable(s, root.resolve("regs").toString, "j")
-      graft.streaming.CommitLogStream.followChanges(s, t, tp, (v, cdf) => {
-        val batch = cdf.filter(col("change_type") === "insert").drop("change_type")
-        val bs = graft.llm.Sketches.hllRegisters(batch)
-        if (v == 0L) regT.overwrite(bs)
-        else regT.overwrite(graft.llm.Sketches.mergeHllRegisters(regT.read(), bs))
-      })
-      graft.llm.Sketches.hllWithExact(t.read(), regT.read())
-    }),
-    "t45_quantile_sketch" -> ((s, dir) => {
-      // ADAPTIVE mergeable quantile sketch (round-12 Next #6 — the
-      // adaptive-accuracy sketch t15's fixed grid names as the real
-      // thing): nested hash-Bernoulli levels, retention a pure function
-      // of uid — so the merge law is EXACT, and this gate RUNS it: the
-      // sketch is built from two disjoint halves and MERGED, while the
-      // DuckDB mirror builds one sketch directly over the whole table;
-      // hash-equality of the two IS merge(a,b) == sketch(a ∪ b).
-      val base = Tables.orders(s, dir).select(col("o_orderkey").as("uid"),
-        floor(col("o_totalprice")).cast("long").as("val"))
-      val sk = graft.llm.Sketches.mergeQuantileSketches(
-        graft.llm.Sketches.adaptiveQuantileSketch(base.filter(col("uid") % 2 === 0)),
-        graft.llm.Sketches.adaptiveQuantileSketch(base.filter(col("uid") % 2 =!= 0)))
-      graft.llm.Sketches.sketchQuantiles(sk, Seq(250000L, 500000L, 900000L))
-    }),
-    "t36_sentence_stats" -> ((s, dir) => // sentence segmentation stats
-      // ([.!?]+ splits, trimmed, empties dropped): discourse-shape
-      // quality signals the flat token ratios can't see; row-local array
-      // algebra, zero shuffles, all integer columns
-      graft.llm.TextOps.sentenceStats(Tables.documents(s, dir))),
-    "q36_group_by_all" -> ((s, dir) => {
-      // the GROUP BY ALL resolution rule (SQL-surface parity both engines
-      // ship): every non-aggregate select item becomes a grouping key
-      Tables.orders(s, dir).createOrReplaceTempView("orders_v")
-      s.sql(
-        """SELECT o_orderpriority, o_orderstatus, COUNT(*) AS n,
-          |       SUM(o_custkey) AS sum_cust
-          |FROM orders_v GROUP BY ALL ORDER BY 1, 2""".stripMargin)
-    }),
-    "q38_variant_json" -> ((s, dir) => {
-      // the VARIANT semi-structured type (SQL:2023 / Spark 4): parse once
-      // into the binary variant encoding, then TYPED path extraction —
-      // the schema-on-read shape that replaces string re-parsing per
-      // access; a missing path under try_variant_get is NULL, counted
-      Tables.events(s, dir).createOrReplaceTempView("events_v38")
-      s.sql(
-        """SELECT event_type, COUNT(*) AS n,
-          |       SUM(variant_get(parse_json(props), '$.k', 'bigint')) AS sum_k,
-          |       SUM(CASE WHEN try_variant_get(parse_json(props), '$.missing', 'bigint')
-          |                IS NULL THEN 1 ELSE 0 END) AS n_missing
-          |FROM events_v38 GROUP BY event_type ORDER BY event_type""".stripMargin)
-    }),
-    "q37_order_by_all" -> ((s, dir) => {
-      // ORDER BY ALL (q36's companion resolution rule, both engines):
-      // sort by every select item left-to-right
-      Tables.orders(s, dir).createOrReplaceTempView("orders_v37")
-      s.sql(
-        """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
-          |FROM orders_v37 GROUP BY ALL ORDER BY ALL""".stripMargin)
-    }),
-    "t35_gopher_rules" -> ((s, dir) => // Gopher-style composite quality
-      // rules: word count, mean word length, stopword presence, top-word
-      // repetition ratio — all integer thousandths, composite keep
-      // verdict; one row-local pass + one (doc, token)-count exchange
-      graft.llm.TextOps.gopherQualityFlags(Tables.documents(s, dir))),
-    "t33_logreg_train" -> ((s, dir) => // trainable quality classifier
-      // (fastText/CCNet-style): full-batch logistic GD where each step is
-      // ONE aggregate of nano-quantized per-row gradients against
-      // broadcast weight literals (exact long sums, order-independent);
-      // weights re-quantized to 1e-9 per step so the independent
-      // sequential mirror iterates from identical state
-      graft.llm.Classifier.trainQualityLogReg(
-        Tables.documents(s, dir), labelCol = col("lang") === "en")),
-    "t34_quality_scores" -> ((s, dir) => // scoring pass with FIXED weights
-      // (the deploy side of t33): logit w·x over the contract features in
-      // micro-units — fully SQL-expressible, so the oracle is a static
-      // DuckDB mirror of the whole feature pipeline (not VALUES)
-      graft.llm.Classifier.scoreDocs(Tables.documents(s, dir),
-        weightsE9 = Seq(-2000000000L, 500000000L, 300000000L, -1000000000L))),
-    "d5_cosine_dup_pairs" -> ((s, dir) => Similarity.cosineDupPairs(Tables.embeddings(s, dir))),
-    "d9_semantic_dedup" -> ((s, dir) => // SemDeDup-style resolution: CC over
-      // the embedding-cosine pair graph (d5's banded-LSH path) -> one
-      // keeper per semantic-dup chain; d6's text-space cousin
-      Similarity.semanticDupClusters(Tables.embeddings(s, dir))),
-    "p7_modality_card" -> ((s, dir) => {
-      // multimodal corpus card: the round's text and audio profiling ops
-      // composed per SOURCE — span-level duplication (d17) beside audio
-      // silence/energy coverage (m7), the two metadata columns a curation
-      // decision actually reads together; docs under the d17 window
-      // length are out of the text half by that operator's contract
-      val docs = Tables.documents(s, dir)
-      val src = docs.select(col("doc_id"), col("source"))
-      val txt = graft.llm.Dedup.spanDedup(docs).join(src, "doc_id")
-        .groupBy("source").agg(
-          count(lit(1)).as("n_docs"),
-          sum("n_tokens").as("n_tokens"),
-          sum("n_dup_tokens").as("n_dup_tokens"),
-          expr("sum(n_dup_tokens) * 1000 div sum(n_tokens)").as("dup_permille"))
-      val aud = graft.llm.MediaOps.audioFrames(docs)
-        .join(src.withColumnRenamed("doc_id", "media_id"), "media_id")
-        .groupBy("source").agg(
-          count(lit(1)).as("n_frames"),
-          sum(when(col("silent"), 1L).otherwise(0L)).as("n_silent"),
-          expr("sum(case when silent then 1 else 0 end) * 1000 div count(1)")
-            .as("silent_permille"))
-      txt.join(aud, "source").orderBy("source")
-    }),
-    "p6_r11_curation" -> ((s, dir) => {
-      // the round-11 curation loop composed as a user would: Gopher rule
-      // filter -> DSIR importance weights (model fit on the FULL corpus,
-      // like the published recipe) -> keep target-leaning survivors
-      // (dsir > 0) -> per-source report. One declared query proving the
-      // new operators compose; oracle = gopher static SQL ∘ DSIR mirror
-      // VALUES, composed the same way
-      val docs = Tables.documents(s, dir)
-      val keep = graft.llm.TextOps.gopherQualityFlags(docs)
-        .filter(col("keep") === 1).select("doc_id")
-      val w = Sampling.dsirWeights(docs)
-      docs.join(keep, "doc_id").join(w, "doc_id")
-        .filter(col("dsir_e6") > 0)
-        .groupBy("source")
-        .agg(count(lit(1)).as("n"), sum("doc_id").as("sum_ids"),
-          sum("dsir_e6").as("sum_dsir_e6"))
-        .orderBy("source")
-    }),
-    "p1_curation_pipeline" -> ((s, dir) => {
-      // the operators composed as a user would: quality-filter the corpus,
-      // exact-dedup among the survivors (keeper = min surviving id per
-      // content hash), assign content-addressed splits, report per-split
-      // stats — one declared query proving the pieces compose end-to-end
-      val docs = Tables.documents(s, dir)
-      val ok = TextOps.qualityBuckets(docs).filter(col("quality") === "ok").select("doc_id")
-      val okDocs = docs.join(ok, "doc_id")
-      val keepers = Dedup.exactDedup(okDocs)
-        .filter(col("doc_id") === col("keeper")).select("doc_id")
-      Sampling.assignSplits(okDocs.join(keepers, "doc_id"), keyCol = "doc_id")
-        .groupBy("split")
-        .agg(count(lit(1)).as("n"), sum("doc_id").as("sum_ids"), sum("n_chars").as("sum_chars"))
-        .orderBy("split")
-    }),
-    "p2_semantic_curation" -> ((s, dir) => {
-      // the embedding-side composition (p1's cousin): semantic-dedup the
-      // vector corpus (d9 keepers), then per-label survivor stats — the
-      // SemDeDup curation loop end-to-end through the operator APIs
-      val emb = Tables.embeddings(s, dir)
-      val drops = Similarity.semanticDupClusters(emb)
-        .filter(col("vec_id") =!= col("keeper")).select("vec_id")
-      emb.join(drops, Seq("vec_id"), "left_anti")
-        .groupBy(col("label").cast("long").as("label"))
-        .agg(count(lit(1)).as("n"), sum("vec_id").as("sum_ids"))
-        .orderBy("label")
-    }),
-    "m1_media_meta" -> ((s, dir) => MediaOps.mediaMeta(Tables.documents(s, dir))),
-    "m2_frame_sample" -> ((s, dir) => MediaOps.frameSample(Tables.documents(s, dir))),
-    "m4_media_dedup" -> ((s, dir) => // binary-payload dedup by header
-      // fingerprint + size bucket — the pre-decode dup collapse; one
-      // shuffle on a 12-byte key over the BINARY column
-      MediaOps.mediaDedup(Tables.documents(s, dir))),
-    "m9_shot_boundaries" -> ((s, dir) => // shot-boundary detection (the
-      // first stage of every video curation pipeline): consecutive-frame
-      // byte L1 distance per video, cut flagged by a cross-multiplied
-      // normalized threshold — partition-batched row-local work, raw
-      // payloads never shuffle
-      MediaOps.shotBoundaries(MediaOps.syntheticMedia(Tables.documents(s, dir)))),
-    "m8_augment_features" -> ((s, dir) => // deterministic augmentation
-      // (horizontal flip then center crop) over ACTUAL pixels: decode ->
-      // transform -> re-encode -> decode again -> integer channel stats;
-      // the oracle replays the exact flip/crop index map against the
-      // pixel-generating formula
-      MediaOps.augmentedFeatures(Tables.documents(s, dir))),
-    "m6_resize_features" -> ((s, dir) => // decode -> nearest-neighbor
-      // RESIZE over the actual pixel grid -> re-encode -> decode again,
-      // reduced to integer channel stats; the oracle replays the exact
-      // truncating-division resample map against the generating formula,
-      // so any off-by-one anywhere in the round trip diverges
-      MediaOps.resizedFeatures(Tables.documents(s, dir))),
-    "m3_decode_features" -> ((s, dir) => // REAL image decode: a synthetic
-      // binary-PPM corpus parsed byte-for-byte (tokenizing header,
-      // 8-bit RGB raster) in the mapPartitions batched-codec shape; the
-      // oracle computes the same per-channel pixel sums/means from the
-      // pixel-generating FORMULA, so any parse off-by-one diverges
-      MediaOps.ppmFeatures(Tables.documents(s, dir))),
-    "m5_perceptual_dedup" -> ((s, dir) => // perceptual near-dup: REAL
-      // decode -> brightness-invariant gradient hash (dHash) -> one
-      // 16-byte-key shuffle; collapses shifted re-encodes whose bytes
-      // (and md5) all differ — m4's exact-byte pass cannot; oracle
-      // derives the hash bits from the pixel-generating formula
-      MediaOps.perceptualDedup(Tables.documents(s, dir))),
-    "m10_audio_resample" -> ((s, dir) => // sample-rate conversion
-      // (16 kHz -> 12 kHz, L/M = 3/4) by integer-exact linear
-      // interpolation over the DECODED s16 payload — the speech-pipeline
-      // house-rate normalization; row-local HOF algebra, offset trick
-      // keeps the one division non-negative so both engines' integer
-      // division agrees on signed audio
-      MediaOps.audioResample(Tables.documents(s, dir))),
-    "m7_audio_frames" -> ((s, dir) => // audio modality: REAL little-endian
-      // s16 PCM decoded back from the binary payload, then 16-sample
-      // frames reduced with codegen'd array algebra — energy, adjacent
-      // zero crossings, peak-based silence; oracle regenerates the PCM
-      // from the sample formula, so any codec off-by-one diverges
-      MediaOps.audioFrames(Tables.documents(s, dir))),
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "g1_bfs_levels" ->
-      s"""WITH RECURSIVE e AS (${DerivedGraphs.bigSql}),
-         |walk(vertex, level) AS (
-         |  SELECT CAST(0 AS BIGINT) AS vertex, 0 AS level
-         |  UNION
-         |  SELECT e.dst, walk.level + 1 FROM walk JOIN e ON e.src = walk.vertex WHERE walk.level < 12)
-         |SELECT vertex, CAST(MIN(level) AS INT) AS level FROM walk GROUP BY vertex ORDER BY level, vertex""".stripMargin,
-    "g2_reachable_stats" ->
-      s"""WITH RECURSIVE e AS (${DerivedGraphs.bigSql}),
-         |walk(vertex, level) AS (
-         |  SELECT CAST(0 AS BIGINT) AS vertex, 0 AS level
-         |  UNION
-         |  SELECT e.dst, walk.level + 1 FROM walk JOIN e ON e.src = walk.vertex WHERE walk.level < 12)
-         |SELECT COUNT(*) AS n_reachable, CAST(MAX(ml) AS INT) AS max_level
-         |FROM (SELECT vertex, MIN(level) AS ml FROM walk GROUP BY vertex)""".stripMargin,
-    "g3_connected_components" ->
-      s"""WITH RECURSIVE e AS (${DerivedGraphs.smallSql}),
-         |ue AS (SELECT src AS a, dst AS b FROM e UNION SELECT dst, src FROM e),
-         |v AS (SELECT a AS vertex FROM ue UNION SELECT b AS vertex FROM ue),
-         |r(vertex, reach) AS (
-         |  SELECT vertex, vertex FROM v
-         |  UNION
-         |  SELECT r.vertex, ue.b FROM r JOIN ue ON ue.a = r.reach)
-         |SELECT vertex, MIN(reach) AS component FROM r GROUP BY vertex ORDER BY vertex""".stripMargin,
-    "g4_shortest_paths_multi" ->
-      s"""WITH RECURSIVE e AS (${DerivedGraphs.bigSql}),
-         |walk(vertex, level) AS (
-         |  SELECT CAST(v AS BIGINT) AS vertex, 0 AS level FROM (VALUES (0),(1),(2)) AS t(v)
-         |  UNION
-         |  SELECT e.dst, walk.level + 1 FROM walk JOIN e ON e.src = walk.vertex WHERE walk.level < 12)
-         |SELECT vertex, CAST(MIN(level) AS INT) AS level FROM walk GROUP BY vertex ORDER BY level, vertex""".stripMargin,
-    "g5_triangle_counts" ->
-      s"""WITH e AS (${DerivedGraphs.smallSql}),
-         |und AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b FROM e WHERE src <> dst),
-         |tri AS (
-         |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-         |  FROM und e1 JOIN und e2 ON e1.a = e2.a AND e1.b < e2.b
-         |  WHERE EXISTS (SELECT 1 FROM und e3 WHERE e3.a = e1.b AND e3.b = e2.b))
-         |SELECT vertex, COUNT(*) AS triangles FROM (
-         |  SELECT x AS vertex FROM tri UNION ALL SELECT y FROM tri UNION ALL SELECT z FROM tri)
-         |GROUP BY vertex ORDER BY vertex""".stripMargin,
-    "g6_degrees" ->
-      s"""WITH e AS (${DerivedGraphs.bigSql}),
-         |o AS (SELECT src AS vertex, COUNT(*) AS out_degree FROM e GROUP BY 1),
-         |i AS (SELECT dst AS vertex, COUNT(*) AS in_degree FROM e GROUP BY 1)
-         |SELECT COALESCE(o.vertex, i.vertex) AS vertex,
-         |       COALESCE(out_degree, 0) AS out_degree, COALESCE(in_degree, 0) AS in_degree
-         |FROM o FULL OUTER JOIN i ON o.vertex = i.vertex ORDER BY vertex""".stripMargin,
-    "g7_pagerank" -> Analytics.pageRankSql(DerivedGraphs.smallSql, numIter = 10),
-    "g30_weighted_pagerank" -> Analytics.weightedPageRankSql(DerivedGraphs.smallSql,
-      weightSql = "(src + dst) % 5 + 1", numIter = 10),
-    "g29_harmonic" -> Analytics.harmonicProfileSql(DerivedGraphs.smallSql,
-      seeds = Seq(10L, 11L, 12L, 13L), maxDepth = 12),
-    "g37_eccentricity" -> Analytics.eccentricityProfileSql(DerivedGraphs.smallSql,
-      seeds = Seq(0L, 1L, 2L, 3L), maxDepth = 12),
-    "g39_neighbor_stats" -> Analytics.neighborStatsSql(DerivedGraphs.smallSql),
-    "g40_temporal_reach" -> Traversals.temporalReachabilitySql(
-      s"SELECT src, dst, (src * 3 + dst) % 16 AS t FROM (${DerivedGraphs.smallSql})",
-      start = 0L, startTime = 0L, maxHops = 12),
-    "g38_shortest_path" -> Traversals.shortestPathToSql(DerivedGraphs.smallSql,
-      start = 0L, maxDepth = 12),
-    "g24_closeness" -> Analytics.closenessProfileSql(DerivedGraphs.smallSql,
-      seeds = Seq(0L, 1L, 2L, 3L), maxDepth = 12),
-    "g25_clustering_coeff" ->
-      Analytics.clusteringCoefficientSql(DerivedGraphs.smallSql),
-    "g17_common_neighbors" ->
-      Analytics.commonNeighborsSql(DerivedGraphs.smallSql, minCommon = 2,
-        capPercentile = Some(95)),
-    "g26_neighbor_jaccard" ->
-      Analytics.neighborJaccardSql(DerivedGraphs.smallSql, minCommon = 2,
-        capPercentile = Some(95)),
-    "g18_personalized_pagerank" ->
-      Analytics.personalizedPageRankSql(DerivedGraphs.smallSql, source = 0L, numIter = 10),
-    "g19_hits" -> Analytics.hitsSql(DerivedGraphs.smallSql, numIter = 5),
-    "g20_adamic_adar" ->
-      Analytics.adamicAdarSql(DerivedGraphs.smallSql, minCommon = 2,
-        capPercentile = Some(95)),
-    "g21_random_walks" ->
-      Traversals.randomWalksSql(DerivedGraphs.bigSql, numSteps = 4, startMod = 100L),
-    "g59_deepwalk_pairs" ->
-      Traversals.deepWalkPairsSql(DerivedGraphs.bigSql, numSteps = 4,
-        startMod = 100L, window = 2),
-    "g62_node2vec_walks" ->
-      Traversals.node2vecWalksSql(DerivedGraphs.bigSql, numSteps = 4, startMod = 100L),
-    "g22_bipartite" -> Analytics.bipartiteCheckSql(DerivedGraphs.smallSql),
-    "g31_motif" -> Motifs.findSql(DerivedGraphs.smallSql, "(a)-(b); (b)-(c); (c)-(a)",
-      extraWhere = "a < b AND a < c", orderBy = "a, b, c"),
-    "g35_motif_negated" -> Motifs.findSql(DerivedGraphs.smallSql,
-      "(a)-(b); (b)-(c); !(a)-(c)", extraWhere = "a % 20 = 0", orderBy = "a, b, c"),
-    "g43_var_length_motif" -> Motifs.findSql(DerivedGraphs.smallSql,
-      "(a)-[1..3]-(b); (b)-(c); !(a)-(c)", extraWhere = "a % 25 = 0", orderBy = "a, b, c"),
-    "g11_scc" -> // SCC = mutual reachability; closure is reflexive (base
-      // row (v,v)), so singleton vertices label themselves
-      s"""WITH RECURSIVE e AS (${DerivedGraphs.smallSql}),
-         |v AS (SELECT src AS vertex FROM e UNION SELECT dst FROM e),
-         |r(a, b) AS (
-         |  SELECT vertex, vertex FROM v
-         |  UNION
-         |  SELECT r.a, e.dst FROM r JOIN e ON e.src = r.b)
-         |SELECT f.a AS vertex, MIN(f.b) AS component
-         |FROM r f JOIN r g ON g.a = f.b AND g.b = f.a
-         |GROUP BY f.a ORDER BY vertex""".stripMargin,
-    "g13_partitioned_catalog" -> // round-trip through the partitioned
-      // catalog is semantics-preserving, so the oracle derives the same
-      // per-graph aggregates directly from the edge derivation
-      s"""WITH e AS (${DerivedGraphs.smallSql})
-         |SELECT CASE WHEN src % 2 = 0 THEN 'even' ELSE 'odd' END AS graph_name,
-         |       COUNT(*) AS n_edges, SUM(src + dst)::BIGINT AS sum_ids
-         |FROM e GROUP BY 1 ORDER BY 1""".stripMargin,
-    "g12_weighted_sssp" ->
-      s"""WITH RECURSIVE e AS (
-         |  SELECT src, dst, (src + dst) % 10 + 1 AS w FROM (${DerivedGraphs.smallSql}) t),
-         |walk(vertex, cost, hops) AS (
-         |  SELECT CAST(0 AS BIGINT) AS vertex, CAST(0 AS BIGINT) AS cost, 0 AS hops
-         |  UNION
-         |  SELECT e.dst, walk.cost + e.w, walk.hops + 1
-         |  FROM walk JOIN e ON e.src = walk.vertex WHERE walk.hops < 12)
-         |SELECT vertex, MIN(cost) AS cost FROM walk GROUP BY vertex ORDER BY vertex""".stripMargin,
-    "g10_matrix_roundtrip" ->
-      s"""WITH e AS (${DerivedGraphs.smallSql}),
-         |o AS (SELECT src AS vertex, COUNT(*) AS out_degree FROM e GROUP BY 1),
-         |i AS (SELECT dst AS vertex, COUNT(*) AS in_degree FROM e GROUP BY 1)
-         |SELECT COALESCE(o.vertex, i.vertex) AS vertex,
-         |       COALESCE(out_degree, 0) AS out_degree, COALESCE(in_degree, 0) AS in_degree
-         |FROM o FULL OUTER JOIN i ON o.vertex = i.vertex ORDER BY vertex""".stripMargin,
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base_price,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS sum_disc_price,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2))) * (1 + CAST(l_tax AS DECIMAL(4,2)))) AS DOUBLE) AS sum_charge,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) / COUNT(*) AS avg_qty,
-        |  COUNT(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q6_forecast_revenue" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-    "q7_rollup_revenue" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
-        |  GROUPING(l_returnflag)::BIGINT AS g_rf, GROUPING(l_linestatus)::BIGINT AS g_ls
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY g_rf, g_ls, l_returnflag, l_linestatus""".stripMargin,
-    "q5_local_volume" ->
-      """SELECT n_name,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue
-        |FROM region JOIN nation ON n_regionkey = r_regionkey
-        |  JOIN supplier ON s_nationkey = n_nationkey
-        |  JOIN lineitem ON l_suppkey = s_suppkey
-        |  JOIN orders ON o_orderkey = l_orderkey
-        |  JOIN customer ON c_custkey = o_custkey AND c_nationkey = s_nationkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
-    "q9_cube_counts" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-        |  GROUPING(l_returnflag)::BIGINT AS g_rf, GROUPING(l_linestatus)::BIGINT AS g_ls
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY g_rf, g_ls, l_returnflag, l_linestatus""".stripMargin,
-    "q26_recursive_cte" ->
-      """WITH RECURSIVE up(c_custkey, node, steps, path_sum) AS (
-        |  SELECT c_custkey, c_custkey AS node, CAST(0 AS BIGINT) AS steps,
-        |         c_custkey AS path_sum
-        |  FROM customer
-        |  UNION ALL
-        |  SELECT c_custkey, node // 2, steps + 1, path_sum + node // 2
-        |  FROM up WHERE node > 1)
-        |SELECT c_custkey, steps AS depth, path_sum
-        |FROM up WHERE node = 1 ORDER BY c_custkey""".stripMargin,
-    "q25_arg_extremes" ->
-      """WITH c AS (SELECT c_nationkey, c_custkey,
-        |                  CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS bal_c
-        |           FROM customer),
-        |v AS (SELECT *, bal_c * 10000000000 + c_custkey AS v FROM c)
-        |SELECT c_nationkey, arg_max(c_custkey, v) AS richest,
-        |       arg_min(c_custkey, v) AS poorest, MAX(bal_c) AS max_bal_c
-        |FROM v GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q27_bloom_join" -> // bloom pruning is semantics-preserving: the plain
-      // join IS the oracle, so a false-negative-producing filter would fail
-      """SELECT l_returnflag, COUNT(*) AS n_items,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderpriority = '1-URGENT'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q29_cow_merge" ->
-      """WITH base AS (SELECT o_orderkey, CAST(o_totalprice AS DECIMAL(12,2)) AS price,
-        |                     o_orderpriority, EXTRACT(year FROM o_orderdate) AS o_year
-        |              FROM orders),
-        |upd AS (SELECT o_orderkey, CAST(price + 100 AS DECIMAL(12,2)) AS price,
-        |               o_orderpriority, o_year
-        |        FROM base WHERE o_orderkey % 97 = 0 AND o_orderkey % 131 <> 0),
-        |ins AS (SELECT o_orderkey + 1000000000 AS o_orderkey,
-        |               CAST(1.00 AS DECIMAL(12,2)) AS price,
-        |               '1-URGENT' AS o_orderpriority, 2099 AS o_year
-        |        FROM base WHERE o_orderkey % 203 = 0),
-        |merged AS (
-        |  SELECT * FROM base WHERE o_orderkey % 131 <> 0 AND o_orderkey % 97 <> 0
-        |  UNION ALL SELECT * FROM upd
-        |  UNION ALL SELECT * FROM ins)
-        |SELECT CAST(o_year AS BIGINT) AS o_year, COUNT(*) AS n,
-        |       CAST(SUM(price) AS DOUBLE) AS sum_price
-        |FROM merged GROUP BY o_year ORDER BY o_year""".stripMargin,
-    "q28_snapshot_diff" ->
-      """WITH o AS (SELECT o_orderkey, o_custkey,
-        |                  CAST(o_totalprice AS DECIMAL(12,2)) AS price FROM orders),
-        |v_old AS (SELECT * FROM o WHERE o_orderkey % 5 <> 0),
-        |v_new AS (SELECT o_orderkey, o_custkey,
-        |                 CASE WHEN o_orderkey % 3 = 0 THEN price + 1 ELSE price END AS price
-        |          FROM o WHERE o_orderkey % 7 <> 0),
-        |d AS (SELECT COALESCE(n.o_orderkey, v.o_orderkey) AS k,
-        |             CASE WHEN v.o_orderkey IS NULL THEN 'insert'
-        |                  WHEN n.o_orderkey IS NULL THEN 'delete'
-        |                  WHEN v.o_custkey IS NOT DISTINCT FROM n.o_custkey
-        |                   AND v.price IS NOT DISTINCT FROM n.price THEN 'unchanged'
-        |                  ELSE 'update' END AS change
-        |      FROM v_old v FULL OUTER JOIN v_new n ON v.o_orderkey = n.o_orderkey)
-        |SELECT change, COUNT(*) AS n_keys, SUM(k)::BIGINT AS sum_keys
-        |FROM d GROUP BY 1 ORDER BY 1""".stripMargin,
-    "p4_incremental_refresh" -> // round-trip identity: refreshed table ==
-      // the new snapshot, so the oracle IS vNew's rollup
-      """WITH v_new AS (
-        |  SELECT o_orderkey,
-        |         CASE WHEN o_orderkey % 3 = 0
-        |              THEN CAST(CAST(o_totalprice AS DECIMAL(12,2)) + 1 AS DECIMAL(12,2))
-        |              ELSE CAST(o_totalprice AS DECIMAL(12,2)) END AS price,
-        |         EXTRACT(year FROM o_orderdate) AS o_year
-        |  FROM orders WHERE o_orderkey % 7 <> 0)
-        |SELECT CAST(o_year AS BIGINT) AS o_year, COUNT(*) AS n,
-        |       CAST(SUM(price) AS DOUBLE) AS sum_price
-        |FROM v_new GROUP BY o_year ORDER BY o_year""".stripMargin,
-    "p3_validation_report" ->
-      """WITH rowagg AS (SELECT
-        |  SUM(CASE WHEN NOT COALESCE(l_quantity >= 1 AND l_quantity <= 50, FALSE) THEN 1 ELSE 0 END) AS r1,
-        |  SUM(CASE WHEN NOT COALESCE(l_extendedprice > 0, FALSE) THEN 1 ELSE 0 END) AS r2,
-        |  SUM(CASE WHEN NOT COALESCE(l_shipdate >= TIMESTAMP '1995-01-01', FALSE) THEN 1 ELSE 0 END) AS r3,
-        |  SUM(CASE WHEN NOT COALESCE(l_returnflag IN ('A','N','R'), FALSE) THEN 1 ELSE 0 END) AS r4
-        |  FROM lineitem),
-        |uniq AS (SELECT COALESCE(SUM(c - 1), 0) AS v FROM
-        |  (SELECT COUNT(*) AS c FROM lineitem GROUP BY l_orderkey, l_linenumber) t),
-        |ref AS (SELECT COUNT(*) AS v FROM lineitem l
-        |        WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)),
-        |u AS (
-        |  SELECT 'r1_qty_domain' AS "check", r1::BIGINT AS n_violations FROM rowagg
-        |  UNION ALL SELECT 'r2_price_positive', r2::BIGINT FROM rowagg
-        |  UNION ALL SELECT 'r3_ship_after_1995', r3::BIGINT FROM rowagg
-        |  UNION ALL SELECT 'r4_flag_domain', r4::BIGINT FROM rowagg
-        |  UNION ALL SELECT 'r5_line_unique', v::BIGINT FROM uniq
-        |  UNION ALL SELECT 'r6_orders_fk', v::BIGINT FROM ref)
-        |SELECT "check", n_violations, n_violations = 0 AS pass
-        |FROM u ORDER BY "check"""".stripMargin,
-    "q24_null_aware_anti" ->
-      """WITH keys AS (SELECT nullif(o_custkey % 1000, 7) AS k FROM orders),
-        |with_null AS (
-        |  SELECT COUNT(*) AS n FROM customer
-        |  WHERE c_custkey % 1000 NOT IN (SELECT k FROM keys)),
-        |no_null AS (
-        |  SELECT COUNT(*) AS n FROM customer
-        |  WHERE c_custkey % 1000 NOT IN (SELECT k FROM keys WHERE k IS NOT NULL))
-        |SELECT 'with_null' AS variant, n FROM with_null
-        |UNION ALL SELECT 'no_null', n FROM no_null
-        |ORDER BY variant""".stripMargin,
-    "q23_lateral_topn" ->
-      """SELECT r.r_name, t.n_name, t.n_cust
-        |FROM region r, LATERAL (
-        |  SELECT n.n_name, COUNT(*)::BIGINT AS n_cust
-        |  FROM nation n JOIN customer c ON c.c_nationkey = n.n_nationkey
-        |  WHERE n.n_regionkey = r.r_regionkey
-        |  GROUP BY n.n_name
-        |  ORDER BY n_cust DESC, n_name LIMIT 2) t
-        |ORDER BY r.r_name, t.n_cust DESC, t.n_name""".stripMargin,
-    "q22_null_safe_join" ->
-      """WITH c AS (SELECT nullif(c_custkey % 5, 2) AS ck, COUNT(*) AS n_cust
-        |           FROM customer GROUP BY 1),
-        |s AS (SELECT nullif(s_suppkey % 7, 3) AS sk, COUNT(*) AS n_supp
-        |      FROM supplier GROUP BY 1)
-        |SELECT ck, sk, n_cust, n_supp
-        |FROM c FULL OUTER JOIN s ON c.ck IS NOT DISTINCT FROM s.sk
-        |ORDER BY ck NULLS FIRST, sk NULLS FIRST""".stripMargin,
-    "q20_merge_upsert" -> // relational mirror of MergeInto.merge over the
-      // same derived change-set: source-wins CASE on match, delete-flag
-      // filter, full-outer join
-      """WITH tgt AS (SELECT o_orderkey AS k, CAST(o_totalprice AS DECIMAL(12,2)) AS price,
-        |                    o_orderpriority AS prio FROM orders),
-        |src AS (
-        |  SELECT k, CAST(price + 1000 AS DECIMAL(12,2)) AS price, prio, FALSE AS del
-        |  FROM tgt WHERE k % 10 = 0
-        |  UNION ALL
-        |  SELECT k + 10000000, price, prio, FALSE FROM tgt WHERE k % 7 = 3
-        |  UNION ALL
-        |  SELECT k, price, prio, TRUE FROM tgt WHERE k % 13 = 5 AND k % 10 <> 0),
-        |merged AS (
-        |  SELECT COALESCE(s.k, t.k) AS k,
-        |         CASE WHEN s.k IS NOT NULL THEN s.price ELSE t.price END AS price,
-        |         CASE WHEN s.k IS NOT NULL THEN s.prio ELSE t.prio END AS prio
-        |  FROM tgt t FULL OUTER JOIN src s ON s.k = t.k
-        |  WHERE NOT (s.k IS NOT NULL AND COALESCE(s.del, FALSE)))
-        |SELECT prio, COUNT(*) AS n, CAST(SUM(price) AS DOUBLE) AS sum_price
-        |FROM merged GROUP BY prio ORDER BY prio""".stripMargin,
-    "q21_incremental_rollup" -> // direct aggregation — the check that the
-      // partial-merge plan is equivalent to rescanning the base table
-      """SELECT l_returnflag, COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
-        |  MIN(l_quantity) AS min_qty, MAX(l_quantity) AS max_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "f10_manifest_scan" -> // range aggregate straight from the source
-      """SELECT o_orderpriority, COUNT(*) AS n,
-        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_price
-        |FROM orders WHERE o_orderkey BETWEEN 1000 AND 9000
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q32_asof_version" -> // ranked history read at both versions
-      """WITH o AS (SELECT o_orderkey, o_orderpriority,
-        |                  CAST(o_totalprice AS DECIMAL(12,2)) AS price FROM orders),
-        |hist AS (
-        |  SELECT o_orderkey, o_orderpriority, price, 1 AS version FROM o
-        |  UNION ALL
-        |  SELECT o_orderkey, o_orderpriority,
-        |         CAST(price + 10 AS DECIMAL(12,2)), 2 FROM o WHERE o_orderkey % 3 = 0),
-        |ranked AS (
-        |  SELECT a.av, h.o_orderpriority, h.price,
-        |         row_number() OVER (PARTITION BY a.av, h.o_orderkey
-        |                            ORDER BY h.version DESC) AS rn
-        |  FROM (VALUES (1), (2)) a(av) JOIN hist h ON h.version <= a.av)
-        |SELECT CAST(av AS BIGINT) AS "asof", o_orderpriority, COUNT(*) AS n,
-        |       CAST(SUM(price) AS DOUBLE) AS sum_price
-        |FROM ranked WHERE rn = 1
-        |GROUP BY av, o_orderpriority ORDER BY av, o_orderpriority""".stripMargin,
-    "e22_attribution" -> // same join + windows + integer credit split
-      """WITH v AS (SELECT user_id, event_id AS view_id, epoch_us(ts) AS v_us
-        |           FROM events WHERE event_type = 'view'),
-        |p AS (SELECT user_id, event_id AS purchase_id, epoch_us(ts) AS p_us
-        |      FROM events WHERE event_type = 'purchase'),
-        |t AS (SELECT p.purchase_id, v.view_id, v.v_us
-        |      FROM p JOIN v ON v.user_id = p.user_id
-        |       AND v.v_us <= p.p_us AND p.p_us - v.v_us <= 86400000000),
-        |r AS (SELECT purchase_id, view_id,
-        |             row_number() OVER (PARTITION BY purchase_id ORDER BY v_us, view_id) AS pos,
-        |             COUNT(*) OVER (PARTITION BY purchase_id) AS n
-        |      FROM t)
-        |SELECT purchase_id, view_id, pos::BIGINT AS pos,
-        |       (CASE WHEN n = 1 THEN 1000 WHEN n = 2 THEN 500
-        |             WHEN pos = 1 THEN 400 + 200 - (200 // (n - 2)) * (n - 2)
-        |             WHEN pos = n THEN 400
-        |             ELSE 200 // (n - 2) END)::BIGINT AS credit_permille
-        |FROM r ORDER BY purchase_id, pos""".stripMargin,
-    "f9_zstd_roundtrip" -> // source-table oracle: zstd must be lossless
-      """SELECT l_returnflag, COUNT(*) AS n, SUM(l_orderkey)::BIGINT AS sum_key,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "m4_media_dedup" -> MediaOps.mediaDedupSql(),
-    "m5_perceptual_dedup" -> MediaOps.perceptualDedupSql,
-    "m7_audio_frames" -> MediaOps.audioFramesSql(),
-    "m10_audio_resample" -> MediaOps.audioResampleSql(),
-    "t25_html_strip" -> TextOps.htmlStripSql,
-    "t26_adaptive_stopwords" -> TextOps.adaptiveStopwordsSql(),
-    "st12_stream_sessions" -> EventStreams.sessionCountsSql(),
-    "f12_commit_log" -> // three versioned snapshots derived straight from
-      // the source: v0 = the filtered overwrite, v1 = after append (full
-      // table), v2 = after compaction (content-preserving rewrite)
-      """SELECT CAST(0 AS BIGINT) AS version, COUNT(*) AS n_rows,
-        |       SUM(n_nationkey)::BIGINT AS sum_key FROM nation WHERE n_nationkey < 10
-        |UNION ALL SELECT 1, COUNT(*), SUM(n_nationkey)::BIGINT FROM nation
-        |UNION ALL SELECT 2, COUNT(*), SUM(n_nationkey)::BIGINT FROM nation
-        |ORDER BY version""".stripMargin,
-    "st16_stream_log_source" -> // the three change sets derived straight
-      // from the source: v0 = keys < 10 (initial inserts), v1 = append of
-      // the rest (inserts only), v2 = overwrite keeping evens (deletes =
-      // the odd keys present in v1)
-      """SELECT CAST(0 AS BIGINT) AS version,
-        |       (SELECT COUNT(*) FROM nation WHERE n_nationkey < 10) AS n_inserts,
-        |       CAST(0 AS BIGINT) AS n_deletes
-        |UNION ALL SELECT 1, (SELECT COUNT(*) FROM nation WHERE n_nationkey >= 10), 0
-        |UNION ALL SELECT 2, 0, (SELECT COUNT(*) FROM nation WHERE n_nationkey % 2 = 1)
-        |ORDER BY version""".stripMargin,
-    "f17_log_zorder" -> // both versions carry the identical derivation —
-      // the zorder commit is layout-only
-      """WITH d AS (SELECT l_orderkey % 1024 AS x, l_partkey % 1024 AS y,
-        |                  l_quantity::BIGINT AS q FROM lineitem)
-        |SELECT CAST(0 AS BIGINT) AS version, COUNT(*) AS n_rows,
-        |       SUM(x)::BIGINT AS sum_x, SUM(y)::BIGINT AS sum_y, SUM(q)::BIGINT AS sum_q FROM d
-        |UNION ALL SELECT 1, COUNT(*), SUM(x)::BIGINT, SUM(y)::BIGINT, SUM(q)::BIGINT FROM d
-        |ORDER BY version""".stripMargin,
-    "f18_wap_publish" -> // every scenario number derived from the same
-      // orders slices: violations = the planted k%3=0 rows of the k%7=2
-      // batch, head = base ∪ clean batch, exactly two published versions
-      """SELECT 'aborted_violations' AS metric,
-        |       (SELECT COUNT(*) FROM orders WHERE o_orderkey % 7 = 2 AND o_orderkey % 3 = 0)::BIGINT AS value
-        |UNION ALL SELECT 'head_rows',
-        |       (SELECT COUNT(*) FROM orders WHERE o_orderkey % 7 IN (0, 1))::BIGINT
-        |UNION ALL SELECT 'n_versions', 2::BIGINT
-        |UNION ALL SELECT 'published_version', 1::BIGINT
-        |ORDER BY metric""".stripMargin,
-    "f21_log_schema_evolution" -> // head = keys < 20; only the appended
-      // batch (keys >= 10) carries the extra column; v0 kept 2 columns
-      """SELECT CAST(2 AS BIGINT) AS v0_cols, COUNT(*) AS n_rows,
-        |       SUM(n_nationkey)::BIGINT AS sum_key,
-        |       SUM(CASE WHEN n_nationkey >= 10 THEN 1 ELSE 0 END)::BIGINT AS n_extra,
-        |       SUM(CASE WHEN n_nationkey >= 10 THEN n_regionkey END)::BIGINT AS sum_extra
-        |FROM nation WHERE n_nationkey < 20""".stripMargin,
-    "f20_shallow_clone" -> // each snapshot derived straight from the
-      // source: clone_v0 = source head (keys < 20), clone_head adds the
-      // local append (all keys), source_head is untouched by the clone
-      """SELECT snapshot, COUNT(*) AS n_rows, SUM(n_nationkey)::BIGINT AS sum_key
-        |FROM nation, (VALUES ('clone_head', 0, 1000000), ('clone_v0', 0, 19),
-        |              ('source_head', 0, 19)) AS p(snapshot, lo, hi)
-        |WHERE n_nationkey BETWEEN lo AND hi
-        |GROUP BY snapshot ORDER BY snapshot""".stripMargin,
-    "f19_ts_travel" -> // each probe's snapshot derived straight from the
-      // source: 1500 → v0 (keys < 10); 2000 and 2999 → v1 (keys < 20,
-      // the at-instant read is inclusive); 9999 → v2 (keys >= 20)
-      """SELECT ts_probe::BIGINT AS ts_probe, COUNT(*) AS n_rows,
-        |       SUM(n_nationkey)::BIGINT AS sum_key
-        |FROM nation, (VALUES (1500, 0, 9), (2000, 0, 19), (2999, 0, 19),
-        |              (9999, 20, 1000000)) AS p(ts_probe, lo, hi)
-        |WHERE n_nationkey BETWEEN lo AND hi
-        |GROUP BY p.ts_probe ORDER BY ts_probe""".stripMargin,
-    "q42_sql_log" -> // each snapshot derived straight from the source
-      """SELECT 'head' AS snap, COUNT(*) AS n, SUM(n_nationkey)::BIGINT AS sum_key FROM nation
-        |UNION ALL
-        |SELECT 'ranged', COUNT(*), SUM(n_nationkey)::BIGINT FROM nation WHERE n_nationkey BETWEEN 5 AND 14
-        |UNION ALL
-        |SELECT 'v0', COUNT(*), SUM(n_nationkey)::BIGINT FROM nation WHERE n_nationkey < 10
-        |ORDER BY snap""".stripMargin,
-    "q43_sql_write" -> // the merge+delete change set restated relationally:
-      // upserts replace matching base keys, then the key range drops out
-      """WITH base AS (SELECT o_orderkey AS k, o_custkey AS v FROM orders),
-        |src AS (SELECT o_orderkey + 1 AS k, o_custkey + 7 AS v FROM orders WHERE o_orderkey % 10 = 0),
-        |merged AS (SELECT k, v FROM base WHERE k NOT IN (SELECT k FROM src)
-        |           UNION ALL SELECT k, v FROM src),
-        |final AS (SELECT k, v FROM merged WHERE k < 1000 OR k > 5000)
-        |SELECT COUNT(*) AS n_rows, SUM(k)::BIGINT AS sum_k, SUM(v)::BIGINT AS sum_v
-        |FROM final""".stripMargin,
-    "q46_sql_update" -> // the update restated relationally: matching keys
-      // double v and add one, everything else unchanged
-      """WITH upd AS (SELECT o_orderkey AS k,
-        |       CASE WHEN o_orderkey BETWEEN 1000 AND 5000
-        |            THEN o_custkey * 2 + 1 ELSE o_custkey END AS v
-        |       FROM orders)
-        |SELECT COUNT(*) AS n_rows, SUM(k)::BIGINT AS sum_k, SUM(v)::BIGINT AS sum_v
-        |FROM upd""".stripMargin,
-    "q44_sql_ann" -> // the ann_topk TVF returns ivfTopKIndexed's plan,
-      // which reproduces ivfTopK bit-for-bit — s3's full mirror
-      Similarity.ivfTopKSql(),
-    "q45_sql_graph_ann" -> // the graph_ann TVF returns knnGraphSearch's
-      // plan over the committed index — s25's end-to-end mirror
-      KnnGraph.knnGraphSearchSql(),
-    "f22_log_delete" -> // head excludes the deleted key range; v0 intact
-      """SELECT (SELECT COUNT(*) FROM orders WHERE o_orderkey NOT BETWEEN 1000 AND 5000) AS n_rows,
-        |       (SELECT SUM(o_orderkey)::BIGINT FROM orders WHERE o_orderkey NOT BETWEEN 1000 AND 5000) AS sum_key,
-        |       (SELECT COUNT(*) FROM orders) AS n0,
-        |       (SELECT SUM(o_orderkey)::BIGINT FROM orders) AS s0""".stripMargin,
-    "f24_log_checkpoint" -> // each version's snapshot restated from nation:
-      // v1..v3 accumulate 5-key slices, v4 deletes keys 7..12, v5 appends
-      // the tail — resolution through delta entries + the v3 checkpoint
-      // must reproduce exactly these states
-      """WITH s AS (SELECT n_nationkey::BIGINT AS k FROM nation)
-        |SELECT 1::BIGINT AS version, COUNT(*) AS n_rows, SUM(k)::BIGINT AS sum_key FROM s WHERE k < 10
-        |UNION ALL SELECT 2, COUNT(*), SUM(k)::BIGINT FROM s WHERE k < 15
-        |UNION ALL SELECT 3, COUNT(*), SUM(k)::BIGINT FROM s WHERE k < 20
-        |UNION ALL SELECT 4, COUNT(*), SUM(k)::BIGINT FROM s WHERE k < 20 AND k NOT BETWEEN 7 AND 12
-        |UNION ALL SELECT 5, COUNT(*), SUM(k)::BIGINT FROM s WHERE k NOT BETWEEN 7 AND 12
-        |ORDER BY version""".stripMargin,
-    "f29_avro_roundtrip" -> // the Avro roundtrip must land back on the
-      // parquet source's numbers: per-flag counts, long sums, the
-      // floor'd double sum (integer-exact both sides), and the distinct
-      // timestamp count
-      """SELECT l_returnflag AS flag, COUNT(*) AS n,
-        |       SUM(l_quantity)::BIGINT AS sum_qty,
-        |       SUM(FLOOR(l_extendedprice))::BIGINT AS sum_fprice,
-        |       COUNT(DISTINCT l_shipdate)::BIGINT AS n_ship
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "f33_dv_append_delta" -> // the append-delta sidecar restated: the
-      // second delete's link stages exactly its own 10 positions, the
-      // window CDF surfaces exactly those 10, resolution and the
-      // consolidation fold both land on orders minus the two ranges
-      """SELECT 'cdf_w2_n' AS metric,
-        |  (SELECT COUNT(*) FROM orders WHERE o_orderkey BETWEEN 1000 AND 1009)::BIGINT AS value
-        |UNION ALL SELECT 'consolidated_rows',
-        |  (SELECT COUNT(*) FROM orders
-        |   WHERE o_orderkey NOT BETWEEN 0 AND 900 AND o_orderkey NOT BETWEEN 1000 AND 1009)
-        |UNION ALL SELECT 'head_rows',
-        |  (SELECT COUNT(*) FROM orders
-        |   WHERE o_orderkey NOT BETWEEN 0 AND 900 AND o_orderkey NOT BETWEEN 1000 AND 1009)
-        |UNION ALL SELECT 'head_sum_k',
-        |  (SELECT SUM(o_orderkey)::BIGINT FROM orders
-        |   WHERE o_orderkey NOT BETWEEN 0 AND 900 AND o_orderkey NOT BETWEEN 1000 AND 1009)
-        |UNION ALL SELECT 'outstanding',
-        |  (SELECT COUNT(*) FROM orders
-        |   WHERE o_orderkey BETWEEN 0 AND 900 OR o_orderkey BETWEEN 1000 AND 1009)
-        |UNION ALL SELECT 'second_delta_rows',
-        |  (SELECT COUNT(*) FROM orders WHERE o_orderkey BETWEEN 1000 AND 1009)
-        |ORDER BY metric""".stripMargin,
-    "f34_merge_evolve" -> // the evolving merge restated: 1000 base rows
-      // + 20 inserts; the new column is NULL exactly on the 900
-      // untouched rows and set on the 100 updates + 20 inserts; the sum
-      // nets the updates to -1 each and adds the inserts' 777s; the
-      // declared schema widened
-      """SELECT 'head_cols' AS metric, 'k,tag,v' AS value
-        |UNION ALL SELECT 'head_rows',
-        |  ((SELECT COUNT(*) FROM orders WHERE o_orderkey <= 999) + 20)::VARCHAR
-        |UNION ALL SELECT 'head_sum_v',
-        |  ((SELECT SUM(o_custkey) FROM orders
-        |    WHERE o_orderkey <= 999 AND o_orderkey NOT BETWEEN 100 AND 199)
-        |   - 100 + 777 * 20)::BIGINT::VARCHAR
-        |UNION ALL SELECT 'inv_widened', '1'
-        |UNION ALL SELECT 'null_tag_rows',
-        |  ((SELECT COUNT(*) FROM orders WHERE o_orderkey <= 999) - 100)::VARCHAR
-        |UNION ALL SELECT 'tagged_rows', '120'
-        |UNION ALL SELECT 'v0_cols', 'k,v'
-        |ORDER BY metric""".stripMargin,
-    "f35_purge_dv" -> // the selective purge restated: content after both
-      // deletes (never changed by purging), the sparse file's surviving
-      // mark count at the mid point, zero outstanding after the full
-      // SQL purge, and the structural flags (3 clean files carried,
-      // exactly 1 rewritten, SQL head equals the Scala head) all 1
-      """SELECT 'carried_untouched' AS metric, 1::BIGINT AS value
-        |UNION ALL SELECT 'full_equal', 1
-        |UNION ALL SELECT 'head_rows',
-        |  (SELECT COUNT(*) FROM orders
-        |   WHERE o_orderkey NOT BETWEEN 0 AND 1000
-        |     AND o_orderkey NOT BETWEEN 1300 AND 1400)
-        |UNION ALL SELECT 'head_sum_k',
-        |  (SELECT SUM(o_orderkey)::BIGINT FROM orders
-        |   WHERE o_orderkey NOT BETWEEN 0 AND 1000
-        |     AND o_orderkey NOT BETWEEN 1300 AND 1400)
-        |UNION ALL SELECT 'outstanding_full', 0
-        |UNION ALL SELECT 'outstanding_mid',
-        |  (SELECT COUNT(*) FROM orders WHERE o_orderkey BETWEEN 1300 AND 1400)
-        |UNION ALL SELECT 'rewritten_files', 1
-        |ORDER BY metric""".stripMargin,
-    "f36_compact_small" -> // the incremental OPTIMIZE restated: content
-      // is the WHOLE orders table before and after (a layout-only
-      // maintenance op), the head holds exactly 2 files (the untouched
-      // large one + the one fold of the four small ones), and the
-      // structural flags (large carried, one new file, lone-small
-      // no-op) all 1
-      """SELECT 'carried_large' AS metric, 1::BIGINT AS value
-        |UNION ALL SELECT 'folded_new', 1
-        |UNION ALL SELECT 'head_files', 2
-        |UNION ALL SELECT 'head_rows', (SELECT COUNT(*) FROM orders)
-        |UNION ALL SELECT 'head_sum_k', (SELECT SUM(o_orderkey)::BIGINT FROM orders)
-        |UNION ALL SELECT 'noop_ok', 1
-        |UNION ALL SELECT 'sql_rows', (SELECT COUNT(*) FROM orders)
-        |ORDER BY metric""".stripMargin,
-    "f37_maintain" -> // the policy restated: one file after the churned
-      // maintenance, content = nation minus the purged key range, and
-      // every structural flag (healthy no-op, purge→fold order, no-op
-      // after) must be 1
-      """SELECT 'head_files' AS metric, 1::BIGINT AS value
-        |UNION ALL SELECT 'head_rows',
-        |  (SELECT COUNT(*) FROM nation WHERE n_nationkey NOT BETWEEN 5 AND 9)
-        |UNION ALL SELECT 'head_sum_k',
-        |  (SELECT SUM(n_nationkey)::BIGINT FROM nation
-        |   WHERE n_nationkey NOT BETWEEN 5 AND 9)
-        |UNION ALL SELECT 'healthy_noop', 1
-        |UNION ALL SELECT 'noop_after', 1
-        |UNION ALL SELECT 'ops_ok', 1
-        |ORDER BY metric""".stripMargin,
-    "f30_dv_cdf" -> // the sidecar-delta feed restated: exactly the
-      // deleted key range as 'delete' rows, zero inserts, and both
-      // structural flags (content == independent full diff; plan read
-      // only the touched file) must be 1
-      """SELECT 'cdf_deletes_n' AS metric,
-        |  (SELECT COUNT(*) FROM orders WHERE o_orderkey BETWEEN 10 AND 60)::BIGINT AS value
-        |UNION ALL SELECT 'cdf_inserts_n', 0
-        |UNION ALL SELECT 'cdf_sum_k',
-        |  (SELECT SUM(o_orderkey)::BIGINT FROM orders WHERE o_orderkey BETWEEN 10 AND 60)
-        |UNION ALL SELECT 'equals_full_diff', 1
-        |UNION ALL SELECT 'only_touched', 1
-        |ORDER BY metric""".stripMargin,
-    "f31_update_dv" -> // the DV update restated: row count unchanged,
-      // the head's sum reflects BOTH updates (+1e6 per key in the Scala
-      // range, +7 per key in the SQL-statement range), v0 keeps the
-      // original sum, and the structural flags (no base file rewritten;
-      // equal to the CoW update) must be 1
-      """SELECT 'cow_equal' AS metric, 1::BIGINT AS value
-        |UNION ALL SELECT 'head_rows', (SELECT COUNT(*) FROM orders)
-        |UNION ALL SELECT 'head_sum_v',
-        |  (SELECT SUM(o_custkey)::BIGINT
-        |     + 1000000 * COUNT(*) FILTER (WHERE o_orderkey BETWEEN 100 AND 300)
-        |     + 7 * COUNT(*) FILTER (WHERE o_orderkey BETWEEN 400 AND 450)
-        |   FROM orders)
-        |UNION ALL SELECT 'v0_sum_v', (SELECT SUM(o_custkey)::BIGINT FROM orders)
-        |UNION ALL SELECT 'zero_rewrite', 1
-        |ORDER BY metric""".stripMargin,
-    "f32_merge_dv" -> // the DV merge restated: rows = orders minus the
-      // deleted range plus the 50 inserts (the SQL upsert adds none —
-      // its keys exist); sum reflects updates to -1, the deleted
-      // range's removal, the inserts' 777s, and the SQL upsert's -2s;
-      // the structural flag must be 1 (twin-merge equality is
-      // spec-asserted in DeletionVectorSpec)
-      """SELECT 'head_rows' AS metric,
-        |  (SELECT COUNT(*) FROM orders
-        |   WHERE o_orderkey NOT BETWEEN 200 AND 299)::BIGINT + 50 AS value
-        |UNION ALL SELECT 'head_sum_v',
-        |  (SELECT SUM(o_custkey)::BIGINT FROM orders
-        |   WHERE o_orderkey NOT BETWEEN 100 AND 299
-        |     AND o_orderkey NOT BETWEEN 400 AND 420)
-        |  + (SELECT -1 * COUNT(*) FROM orders WHERE o_orderkey BETWEEN 100 AND 199)
-        |  + (SELECT -2 * COUNT(*) FROM orders WHERE o_orderkey BETWEEN 400 AND 420)
-        |  + 50 * 777
-        |UNION ALL SELECT 'v0_rows', (SELECT COUNT(*) FROM orders)
-        |UNION ALL SELECT 'zero_rewrite', 1
-        |ORDER BY metric""".stripMargin,
-    "f28_column_mapping" -> // the renamed/dropped surface restated: the
-      // head is (key, renamed name) over all of nation, v0 keeps the
-      // original three columns, and the structural flag is 1
-      """SELECT 'head_cols' AS metric, 'n_nationkey,nation_name' AS value
-        |UNION ALL SELECT 'head_name_len',
-        |  (SELECT SUM(LENGTH(n_name))::BIGINT FROM nation)::VARCHAR
-        |UNION ALL SELECT 'head_rows', (SELECT COUNT(*) FROM nation)::VARCHAR
-        |UNION ALL SELECT 'v0_cols', 'n_nationkey,n_name,n_regionkey'
-        |UNION ALL SELECT 'zero_rewrite', '1'
-        |ORDER BY metric""".stripMargin,
-    "f27_deletion_vectors" -> // the DV delete's content flags restated:
-      // head and post-OPTIMIZE both exclude the deleted range, v0 keeps
-      // everything, and the structural flags (zero rewrites, stamp
-      // cleared) must be 1
-      """SELECT 'dv_cleared' AS metric, 1::BIGINT AS value
-        |UNION ALL SELECT 'head_rows',
-        |  (SELECT COUNT(*) FROM orders WHERE o_orderkey NOT BETWEEN 1000 AND 5000)
-        |UNION ALL SELECT 'head_sum_k',
-        |  (SELECT SUM(o_orderkey)::BIGINT FROM orders WHERE o_orderkey NOT BETWEEN 1000 AND 5000)
-        |UNION ALL SELECT 'opt_rows',
-        |  (SELECT COUNT(*) FROM orders WHERE o_orderkey NOT BETWEEN 1000 AND 5000)
-        |UNION ALL SELECT 'opt_sum_k',
-        |  (SELECT SUM(o_orderkey)::BIGINT FROM orders WHERE o_orderkey NOT BETWEEN 1000 AND 5000)
-        |UNION ALL SELECT 'v0_rows', (SELECT COUNT(*) FROM orders)
-        |UNION ALL SELECT 'zero_rewrite', 1
-        |ORDER BY metric""".stripMargin,
-    "f26_invariants" -> // every rejection flag is 1; the head holds exactly
-      // the two clean batches = all of orders at head_version 2
-      """SELECT 'check_rejected' AS metric, 1::BIGINT AS value
-        |UNION ALL SELECT 'drift_rejected', 1
-        |UNION ALL SELECT 'head_rows', (SELECT COUNT(*) FROM orders)
-        |UNION ALL SELECT 'head_sum_k', (SELECT SUM(o_orderkey)::BIGINT FROM orders)
-        |UNION ALL SELECT 'head_sum_v', (SELECT SUM(o_custkey)::BIGINT FROM orders)
-        |UNION ALL SELECT 'head_version', 2
-        |UNION ALL SELECT 'notnull_rejected', 1
-        |ORDER BY metric""".stripMargin,
-    "f25_multicol_stats" -> // the second-column range read: file pruning is
-      // a plan property (spec-asserted); content equals the plain filter
-      """SELECT COUNT(*) AS n_rows, SUM(o_orderkey)::BIGINT AS sum_key,
-        |       SUM(o_custkey)::BIGINT AS sum_cust
-        |FROM orders WHERE o_custkey BETWEEN 100 AND 400""".stripMargin,
-    "s38_lifecycle_recall" -> // the contract row: every query's post-churn
-      // recall@5 must clear the exact-integer 40% per-query floor AND the
-      // fleet mean must clear 70% — the Spark side computes recall from
-      // the lifecycle-mutated index vs the exact scan; any query below
-      // either floor flips its row and hash-fails
-      """SELECT range::BIGINT AS query_id, true AS ge_floor, true AS fleet_ge_mean
-        |FROM range(0, 20) ORDER BY query_id""".stripMargin,
-    "q52_sql_changes" -> // the multiset CDF restated: the delete range's
-      // rows as 'delete', the appended nation-derived rows as 'insert',
-      // and the second-column range read over the post-delete head
-      """SELECT 'cdf' AS part, 'delete' AS tag, COUNT(*) AS n,
-        |       SUM(o_orderkey)::BIGINT AS sum_k
-        |FROM orders WHERE o_orderkey BETWEEN 1000 AND 5000
-        |UNION ALL
-        |SELECT 'cdf', 'insert', COUNT(*), SUM(n_nationkey + 20000000)::BIGINT
-        |FROM nation
-        |UNION ALL
-        |SELECT 'rng', 'vcut', COUNT(*), SUM(o_orderkey)::BIGINT
-        |FROM orders
-        |WHERE o_custkey BETWEEN 100 AND 400 AND o_orderkey NOT BETWEEN 1000 AND 5000
-        |ORDER BY part, tag""".stripMargin,
-    "q53_sql_zorder" -> // the zorder commit is layout-only, so head ==
-      // the derivation and the y-window read == a plain filter; the
-      // catalog row is the single registered binding
-      """WITH d AS (SELECT l_orderkey % 1024 AS x, l_partkey % 1024 AS y,
-        |                  l_quantity::BIGINT AS q FROM lineitem
-        |           WHERE l_orderkey % 4 = 0)
-        |SELECT 'catalog' AS snap, CAST(1 AS BIGINT) AS n, CAST(0 AS BIGINT) AS sum_x,
-        |       CAST(0 AS BIGINT) AS sum_y, CAST(0 AS BIGINT) AS sum_q
-        |UNION ALL
-        |SELECT 'head', COUNT(*), SUM(x)::BIGINT, SUM(y)::BIGINT, SUM(q)::BIGINT FROM d
-        |UNION ALL
-        |SELECT 'ywindow', COUNT(*), SUM(x)::BIGINT, SUM(y)::BIGINT, SUM(q)::BIGINT
-        |FROM d WHERE y BETWEEN 100 AND 199
-        |ORDER BY snap""".stripMargin,
-    "s40_graph_link_health" -> // the lifecycle contract: every stage flag
-      // must hold — clean build, append-only rise, delete rise with
-      // append share unchanged, strict monotone growth under the second
-      // delete batch, and a fully-cleared instrument after consolidation
-      """SELECT probe, holds FROM (VALUES
-        |  ('s1_fresh_clean', true), ('s2_append_rises', true),
-        |  ('s3_delete_rises', true), ('s4_monotone_under_churn', true),
-        |  ('s5_consolidate_clears', true)) AS t(probe, holds)
-        |ORDER BY probe""".stripMargin,
-    "q55_sql_metadata" -> // the statement chain restated: the head is the
-      // DV-deleted content under the renamed column, v0 is everything
-      // under original names, detail counts the 4 original (unrewritten)
-      // files — a DV delete and a rename add none
-      """SELECT 'detail' AS snap, 4::BIGINT AS n, 0::BIGINT AS sum_k, 0::BIGINT AS sum_v
-        |UNION ALL
-        |SELECT 'head', COUNT(*), SUM(o_orderkey)::BIGINT, SUM(o_custkey)::BIGINT
-        |FROM orders WHERE o_orderkey NOT BETWEEN 1000 AND 5000
-        |UNION ALL
-        |SELECT 'v0', COUNT(*), SUM(o_orderkey)::BIGINT, SUM(o_custkey)::BIGINT
-        |FROM orders
-        |ORDER BY snap""".stripMargin,
-    "q56_catalog_lifecycle" -> // the lifecycle restated: the original
-      // by-name read is all of orders; both gone-flags are 1 (the
-      // removal binds immediately AND survives the restart); the
-      // re-registered name resolves the NEW root's k < 100 slice
-      """SELECT 'gone_after_restart' AS metric, 1::BIGINT AS value
-        |UNION ALL SELECT 'gone_after_unregister', 1
-        |UNION ALL SELECT 'head_rows', (SELECT COUNT(*) FROM orders)
-        |UNION ALL SELECT 'reread_rows',
-        |  (SELECT COUNT(*) FROM orders WHERE o_orderkey < 100)
-        |ORDER BY metric""".stripMargin,
-    "q54_persistent_catalog" -> // the post-"restart" by-name read is the
-      // full table; meta row = (1 binding loaded, unknown-name error
-      // preserved)
-      """SELECT 'head' AS snap, COUNT(*) AS n, SUM(o_orderkey)::BIGINT AS sum_k
-        |FROM orders
-        |UNION ALL SELECT 'meta', 1, 1
-        |ORDER BY snap""".stripMargin,
-    "q51_named_catalog" -> // by-name reads after the by-name delete: head
-      // excludes [1000, 5000], the range read cuts [6000, 9000] of the
-      // head, v0 is the full projection
-      """SELECT 'head' AS snap, COUNT(*) AS n, SUM(o_orderkey)::BIGINT AS sum_k
-        |FROM orders WHERE o_orderkey NOT BETWEEN 1000 AND 5000
-        |UNION ALL
-        |SELECT 'ranged', COUNT(*), SUM(o_orderkey)::BIGINT
-        |FROM orders WHERE o_orderkey BETWEEN 6000 AND 9000
-        |UNION ALL
-        |SELECT 'v0', COUNT(*), SUM(o_orderkey)::BIGINT FROM orders
-        |ORDER BY snap""".stripMargin,
-    "q50_sql_vacuum" -> // vacuum reclaims history, never head content:
-      // the surviving snapshot is the second overwrite's rows
-      """SELECT COUNT(*) AS n_rows, SUM(o_orderkey)::BIGINT AS sum_k,
-        |       SUM(o_custkey)::BIGINT AS sum_v
-        |FROM orders WHERE o_orderkey % 2 = 1""".stripMargin,
-    "q48_sql_history" -> // version list restated: overwrite carries every
-      // source row, the delete drops the key range, the append adds the
-      // high-key slice on top of the post-delete head
-      """WITH n0 AS (SELECT COUNT(*)::BIGINT AS c FROM orders),
-        |n1 AS (SELECT COUNT(*)::BIGINT AS c FROM orders WHERE o_orderkey NOT BETWEEN 1000 AND 5000),
-        |n2 AS (SELECT COUNT(*)::BIGINT AS c FROM orders WHERE o_orderkey > 7000)
-        |SELECT 0::BIGINT AS version, 'overwrite' AS op, (SELECT c FROM n0) AS n_rows
-        |UNION ALL SELECT 1, 'delete', (SELECT c FROM n1)
-        |UNION ALL SELECT 2, 'append', (SELECT c FROM n1) + (SELECT c FROM n2)
-        |ORDER BY version""".stripMargin,
-    "q49_sql_filtered_ann" -> // the TVF returns ivfTopKIndexed's filtered
-      // plan — s23's mirror verbatim
-      Similarity.ivfTopKSql(candFilter = "vec_id % 7 = 3"),
-    "q47_sql_optimize" -> // OPTIMIZE is a layout maintenance commit —
-      // content is byte-identical to the source rows
-      """SELECT COUNT(*) AS n_rows, SUM(o_orderkey)::BIGINT AS sum_k,
-        |       SUM(o_custkey)::BIGINT AS sum_v
-        |FROM orders""".stripMargin,
-    "f23_bloom_pruning" -> // the bloom only cuts the FILE list; content is
-      // the plain point-set filter
-      """SELECT COUNT(*) AS n_hit, SUM(o_orderkey)::BIGINT AS sum_k, SUM(o_custkey)::BIGINT AS sum_v
-        |FROM orders WHERE o_orderkey IN (1, 2, 7, 32, 33, 100, 101, 999)""".stripMargin,
-    "f16_log_restore" -> // the restored head (version 2) carries exactly
-      // v0's snapshot
-      """SELECT CAST(2 AS BIGINT) AS version, COUNT(*) AS n_rows,
-        |       SUM(n_nationkey)::BIGINT AS sum_key FROM nation WHERE n_nationkey < 10""".stripMargin,
-    "f14_log_merge" -> // the merged snapshot derived straight from the
-      // source: survivors are keys < 20 (region + 100 below key 5) plus
-      // the inserted (99, region 42)
-      """SELECT COUNT(*) AS n_rows, SUM(k)::BIGINT AS sum_key, SUM(r)::BIGINT AS sum_region
-        |FROM (SELECT n_nationkey AS k,
-        |             CASE WHEN n_nationkey < 5 THEN n_regionkey + 100 ELSE n_regionkey END AS r
-        |      FROM nation WHERE n_nationkey < 20
-        |      UNION ALL SELECT 99, 42)""".stripMargin,
-    "f15_log_vacuum" -> // exactly ONE unreferenced directory reclaimed;
-      // the head still carries the full table
-      """SELECT 1::BIGINT AS n_removed, COUNT(*) AS n_rows,
-        |       SUM(n_nationkey)::BIGINT AS sum_key FROM nation""".stripMargin,
-    "f13_log_cdf" -> // the insert/delete sets derived straight from the
-      // source: v0 = keys < 15, v2 = keys >= 5 — inserts are keys >= 15,
-      // deletes are keys < 5
-      """SELECT 'delete' AS change_type, COUNT(*) AS n_rows,
-        |       SUM(n_nationkey)::BIGINT AS sum_key FROM nation WHERE n_nationkey < 5
-        |UNION ALL SELECT 'insert', COUNT(*), SUM(n_nationkey)::BIGINT
-        |FROM nation WHERE n_nationkey >= 15
-        |ORDER BY change_type""".stripMargin,
-    "f11_compacted_roundtrip" -> // source-table oracle: the shatter +
-      // round-robin compaction rewrite must be content-preserving
-      """SELECT o_orderpriority, COUNT(*) AS n, SUM(o_orderkey)::BIGINT AS sum_key,
-        |  SUM(o_custkey)::BIGINT AS sum_cust
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "f4_orc_roundtrip" -> // source-table oracle: the ORC round-trip must
-      // preserve exactly what parquet holds
-      """SELECT o_orderpriority, COUNT(*) AS n, SUM(o_orderkey)::BIGINT AS sum_key,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_price
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "f3_range_layout" ->
-      """SELECT date_trunc('month', o_orderdate) AS month, COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_price
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q19_correlated" ->
-      """SELECT c_mktsegment, COUNT(*) AS n_top,
-        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_top
-        |FROM customer c JOIN orders o ON o.o_custkey = c.c_custkey
-        |WHERE o.o_totalprice = (SELECT MAX(o2.o_totalprice)
-        |                        FROM orders o2 WHERE o2.o_custkey = c.c_custkey)
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q18_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
-        |  GROUPING(l_returnflag)::BIGINT AS g_rf, GROUPING(l_linestatus)::BIGINT AS g_ls
-        |FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-        |ORDER BY g_rf, g_ls, l_returnflag, l_linestatus""".stripMargin,
-    "q8_distinct_agg" ->
-      """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS n_parts,
-        |       COUNT(DISTINCT l_suppkey) AS n_supps, COUNT(*) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q3_top_revenue" ->
-      """SELECT l_orderkey,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue,
-        |  o_orderdate
-        |FROM customer JOIN orders ON c_custkey = o_custkey JOIN lineitem ON l_orderkey = o_orderkey
-        |WHERE c_mktsegment = 'BUILDING' AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY l_orderkey, o_orderdate
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q10_promo_share" ->
-      """SELECT date_trunc('month', l_shipdate) AS month,
-        |  CAST(SUM(CASE WHEN p_type = 'PROMO'
-        |                THEN CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))
-        |                ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE) AS promo_revenue,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS total_revenue,
-        |  CAST(floor(CAST(SUM(CASE WHEN p_type = 'PROMO'
-        |                THEN CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))
-        |                ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE)
-        |        / CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) * 1e6) AS BIGINT) AS promo_share_1e6
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q11_topk_udaf" ->
-      """WITH c AS (SELECT event_type, user_id, COUNT(*) AS n FROM events GROUP BY 1, 2),
-        |r AS (SELECT event_type, user_id, n,
-        |             row_number() OVER (PARTITION BY event_type ORDER BY n DESC, user_id) AS rank
-        |      FROM c)
-        |SELECT event_type, rank::BIGINT AS rank, n AS n_events, user_id
-        |FROM r WHERE rank <= 3 ORDER BY event_type, rank""".stripMargin,
-    "e33_mad_outliers" -> // same join, same cents, same discrete
-      // quantiles, same cross-multiplied Hampel fence
-      """WITH ord AS (
-        |  SELECT c_mktsegment, (o_totalprice * 100)::BIGINT AS cents
-        |  FROM orders JOIN customer ON o_custkey = c_custkey),
-        |med AS (SELECT c_mktsegment, quantile_disc(cents, 0.5) AS med_c
-        |        FROM ord GROUP BY c_mktsegment),
-        |dev AS (SELECT o.c_mktsegment, o.cents, m.med_c, abs(o.cents - m.med_c) AS adev
-        |        FROM ord o JOIN med m USING (c_mktsegment)),
-        |mad AS (SELECT c_mktsegment, quantile_disc(adev, 0.5) AS mad_c
-        |        FROM dev GROUP BY c_mktsegment)
-        |SELECT d.c_mktsegment, COUNT(*) AS n,
-        |       MIN(d.med_c)::BIGINT AS median_c, MIN(m.mad_c)::BIGINT AS mad_c,
-        |       SUM(CASE WHEN d.adev * 10000 > 44478 * m.mad_c THEN 1 ELSE 0 END)::BIGINT AS n_outliers
-        |FROM dev d JOIN mad m USING (c_mktsegment)
-        |GROUP BY d.c_mktsegment ORDER BY d.c_mktsegment""".stripMargin,
-    "q30_percentile_disc" ->
-      """SELECT l_returnflag,
-        |  CAST(quantile_disc(l_quantity, 0.25) AS DOUBLE) AS p25_disc,
-        |  CAST(quantile_disc(l_quantity, 0.5) AS DOUBLE) AS p50_disc,
-        |  CAST(quantile_disc(l_quantity, 0.75) AS DOUBLE) AS p75_disc,
-        |  COUNT(*) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q12_percentiles" ->
-      """SELECT l_returnflag,
-        |  quantile_cont(l_quantity, 0.25) AS p25,
-        |  quantile_cont(l_quantity, 0.5) AS p50,
-        |  quantile_cont(l_quantity, 0.75) AS p75
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q13_pivot" ->
-      """SELECT l_returnflag,
-        |  SUM(CASE WHEN l_linestatus = 'F' THEN 1 END)::BIGINT AS n_f,
-        |  SUM(CASE WHEN l_linestatus = 'O' THEN 1 END)::BIGINT AS n_o
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "e31_group_ols" -> // identical exact-integer moments (DuckDB sums
-      // BIGINT into HUGEINT — same exact values the DECIMAL accumulators
-      // carry on the Spark side), identical final divisions
-      """WITH m AS (
-        |  SELECT l_returnflag, COUNT(*)::BIGINT AS n,
-        |         SUM(CAST(l_quantity AS BIGINT)) AS sx,
-        |         SUM((CAST(l_extendedprice AS DECIMAL(12,2)) * 100)::BIGINT) AS sy,
-        |         SUM(CAST(l_quantity AS BIGINT) * (CAST(l_extendedprice AS DECIMAL(12,2)) * 100)::BIGINT) AS sxy,
-        |         SUM(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)) AS sxx,
-        |         SUM((CAST(l_extendedprice AS DECIMAL(12,2)) * 100)::BIGINT * (CAST(l_extendedprice AS DECIMAL(12,2)) * 100)::BIGINT) AS syy
-        |  FROM lineitem GROUP BY l_returnflag),
-        |d AS (
-        |  SELECT l_returnflag, n,
-        |         n::HUGEINT * sxy - sx::HUGEINT * sy AS num,
-        |         n::HUGEINT * sxx - sx::HUGEINT * sx AS den,
-        |         sy::HUGEINT * sxx - sx::HUGEINT * sxy AS inum,
-        |         n::HUGEINT * syy - sy::HUGEINT * sy AS vary
-        |  FROM m)
-        |SELECT l_returnflag, n,
-        |       round(num::DOUBLE / den::DOUBLE, 6) + 0.0 AS slope_6,
-        |       round(inum::DOUBLE / den::DOUBLE, 6) + 0.0 AS icept_6,
-        |       round(num::DOUBLE * num::DOUBLE / (den::DOUBLE * vary::DOUBLE), 6) + 0.0 AS r2_6
-        |FROM d ORDER BY l_returnflag""".stripMargin,
-    "e32_chi2_cells" ->
-      """WITH o AS (SELECT l_returnflag, l_linestatus, COUNT(*)::BIGINT AS n
-        |           FROM lineitem GROUP BY 1, 2),
-        |r AS (SELECT l_returnflag, SUM(n)::BIGINT AS rn FROM o GROUP BY 1),
-        |c AS (SELECT l_linestatus, SUM(n)::BIGINT AS cn FROM o GROUP BY 1),
-        |t AS (SELECT SUM(n)::BIGINT AS tn FROM o)
-        |SELECT o.l_returnflag, o.l_linestatus, o.n,
-        |       round((o.n * t.tn - r.rn * c.cn)::DOUBLE
-        |             * (o.n * t.tn - r.rn * c.cn)::DOUBLE
-        |             / (r.rn * c.cn * t.tn)::DOUBLE, 6) + 0.0 AS term_6
-        |FROM o JOIN r USING (l_returnflag) JOIN c USING (l_linestatus) CROSS JOIN t
-        |ORDER BY o.l_returnflag, o.l_linestatus""".stripMargin,
-    "q34_sql_pivot" ->
-      """SELECT l_returnflag,
-        |  SUM(CASE WHEN l_linestatus = 'F' THEN CAST(l_quantity AS BIGINT) END)::BIGINT AS f,
-        |  SUM(CASE WHEN l_linestatus = 'O' THEN CAST(l_quantity AS BIGINT) END)::BIGINT AS o
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q35_sql_unpivot" -> // conditional-agg arms unioned back to long form;
-      // arms that summed no rows are dropped, mirroring UNPIVOT's default
-      """WITH w AS (SELECT l_returnflag,
-        |  SUM(CASE WHEN l_linestatus = 'F' THEN CAST(l_quantity AS BIGINT) END)::BIGINT AS f,
-        |  SUM(CASE WHEN l_linestatus = 'O' THEN CAST(l_quantity AS BIGINT) END)::BIGINT AS o
-        |FROM lineitem GROUP BY l_returnflag)
-        |SELECT l_returnflag, status, total FROM (
-        |  SELECT l_returnflag, 'f' AS status, f AS total FROM w
-        |  UNION ALL
-        |  SELECT l_returnflag, 'o' AS status, o AS total FROM w)
-        |WHERE total IS NOT NULL ORDER BY l_returnflag, status""".stripMargin,
-    "q14_bucketed_join" -> // the oracle sees only the SEMANTICS (plain join
-      // + agg over the source tables); the bucketed layout is the plan
-      // property under test in PartitioningSpec
-      """SELECT o_orderpriority, COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q15_salted_join" -> // salting must be result-invariant: same oracle
-      // shape as the plain join
-      """SELECT o_orderpriority, COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "m2_frame_sample" -> MediaOps.frameSampleSql(),
-    "q4_semi_join" ->
-      """SELECT o_orderpriority, COUNT(*) AS n FROM orders
-        |WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q5_anti_join" ->
-      """SELECT c_mktsegment, COUNT(*) AS n FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 200000.0)
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q16_outer_join" ->
-      """SELECT c_mktsegment, COUNT(*) AS n_rows, COUNT(o_orderkey) AS n_matched
-        |FROM customer LEFT JOIN (SELECT * FROM orders WHERE o_totalprice > 150000.0) o
-        |  ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q17_unpivot" ->
-      """WITH u AS (
-        |  SELECT l_returnflag, 'qty' AS metric, CAST(l_quantity AS DECIMAL(12,2)) AS value FROM lineitem
-        |  UNION ALL
-        |  SELECT l_returnflag, 'price' AS metric, CAST(l_extendedprice AS DECIMAL(12,2)) AS value FROM lineitem)
-        |SELECT l_returnflag, metric, COUNT(*) AS n, CAST(SUM(value) AS DOUBLE) AS sum_value
-        |FROM u GROUP BY l_returnflag, metric ORDER BY l_returnflag, metric""".stripMargin,
-    "e8_running_total" ->
-      """SELECT o_custkey, o_orderkey,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2)))
-        |       OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS cum_spend
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "e1_json_stats" -> // SUM(BIGINT) is HUGEINT in DuckDB: cast back so the
-      // dtype matches Spark's LONG
-      """SELECT event_type, COUNT(*) AS n, SUM((props ->> 'k')::BIGINT)::BIGINT AS sum_k,
-        |       MIN((props ->> 'k')::BIGINT) AS min_k, MAX((props ->> 'k')::BIGINT) AS max_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "e2_first_events" ->
-      """WITH o AS (SELECT user_id, event_id, epoch_us(ts) AS e,
-        |                  row_number() OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS rn,
-        |                  epoch_us(ts) - LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS gap_us
-        |           FROM events)
-        |SELECT user_id, event_id, rn::BIGINT AS rn, gap_us FROM o WHERE rn <= 3 ORDER BY user_id, rn""".stripMargin,
-    "e3_intersect_users" ->
-      """SELECT user_id FROM events WHERE event_type = 'purchase'
-        |INTERSECT
-        |SELECT user_id FROM events WHERE event_type = 'error'
-        |ORDER BY user_id""".stripMargin,
-    "e4_except_users" ->
-      """SELECT user_id, (props ->> 'k')::BIGINT AS k FROM events WHERE event_type = 'view'
-        |EXCEPT
-        |SELECT user_id, (props ->> 'k')::BIGINT AS k FROM events WHERE event_type = 'click'
-        |ORDER BY user_id, k""".stripMargin,
-    "e6_asof_attribution" ->
-      """WITH t AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, 0 AS kind, event_id FROM events WHERE event_type = 'view'
-        |  UNION ALL
-        |  SELECT user_id, epoch_us(ts) AS ts_us, 1 AS kind, event_id FROM events WHERE event_type = 'purchase'),
-        |w AS (SELECT *, last_value(CASE WHEN kind = 0 THEN event_id END IGNORE NULLS)
-        |               OVER (PARTITION BY user_id ORDER BY ts_us, kind, event_id
-        |                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS view_id
-        |      FROM t)
-        |SELECT event_id AS purchase_id, user_id, view_id FROM w WHERE kind = 1 ORDER BY purchase_id""".stripMargin,
-    "e7_range_pairs" ->
-      """SELECT v.user_id, COUNT(*) AS n_pairs
-        |FROM (SELECT user_id, epoch_us(ts) AS v_us FROM events WHERE event_type = 'view') v
-        |JOIN (SELECT user_id, epoch_us(ts) AS c_us FROM events WHERE event_type = 'click') c
-        |  ON v.user_id = c.user_id AND c.c_us >= v.v_us AND c.c_us - v.v_us <= 3600000000
-        |GROUP BY v.user_id ORDER BY v.user_id""".stripMargin,
-    "e20_value_deciles" -> // integer-exact decile binning via row_number
-      // over the unique (value, event_id) order; only avg needs round(·,6)
-      """WITH r AS (SELECT event_type, value,
-        |                 row_number() OVER (PARTITION BY event_type
-        |                                    ORDER BY value, event_id) AS rn,
-        |                 COUNT(*) OVER (PARTITION BY event_type) AS n
-        |          FROM events)
-        |SELECT event_type, ((rn - 1) * 10 // n)::BIGINT AS bucket,
-        |       COUNT(*) AS n_events, round(AVG(value), 6) + 0.0 AS avg_value,
-        |       MIN(value) AS min_value, MAX(value) AS max_value
-        |FROM r GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "e21_retention_cohorts" -> // dedup-then-rollup mirror of e14's shape
-      """WITH days AS (SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day FROM events),
-        |c AS (SELECT user_id, MIN(day) AS cohort_day FROM days GROUP BY user_id)
-        |SELECT c.cohort_day::BIGINT AS cohort_day,
-        |       (d.day - c.cohort_day)::BIGINT AS offset_days,
-        |       COUNT(*) AS n_users
-        |FROM days d JOIN c ON d.user_id = c.user_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "e19_asof_tolerance" ->
-      """WITH t AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, 0 AS kind, event_id FROM events WHERE event_type = 'view'
-        |  UNION ALL
-        |  SELECT user_id, epoch_us(ts) AS ts_us, 1 AS kind, event_id FROM events WHERE event_type = 'purchase'),
-        |w AS (SELECT *,
-        |        last_value(CASE WHEN kind = 0 THEN event_id END IGNORE NULLS) OVER win AS view_id,
-        |        last_value(CASE WHEN kind = 0 THEN ts_us END IGNORE NULLS) OVER win AS view_ts_us
-        |      FROM t
-        |      WINDOW win AS (PARTITION BY user_id ORDER BY ts_us, kind, event_id
-        |                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT event_id AS purchase_id, user_id,
-        |       CASE WHEN ts_us - view_ts_us <= 7200000000 THEN view_id END AS view_id
-        |FROM w WHERE kind = 1 ORDER BY purchase_id""".stripMargin,
-    "e17_interval_overlaps" ->
-      """WITH li AS (SELECT l_suppkey, l_orderkey * 8 + l_linenumber AS line_id,
-        |                   (o_orderdate::DATE - DATE '1970-01-01') AS s_d,
-        |                   (l_shipdate::DATE - DATE '1970-01-01') AS e_d
-        |            FROM lineitem JOIN orders ON o_orderkey = l_orderkey
-        |            WHERE o_orderdate::DATE <= l_shipdate::DATE)
-        |SELECT a.l_suppkey, COUNT(*)::BIGINT AS n_pairs,
-        |       SUM(LEAST(a.e_d, b.e_d) - GREATEST(a.s_d, b.s_d) + 1)::BIGINT AS sum_overlap_days
-        |FROM li a JOIN li b
-        |  ON a.l_suppkey = b.l_suppkey AND a.line_id < b.line_id
-        | AND a.s_d <= b.e_d AND b.s_d <= a.e_d
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "t28_weighted_sample" -> // same A-ES priority math via the shared
-      // hash60 + pow + 1e-9 quantization fragment
-      s"""WITH t AS (SELECT lang, doc_id,
-         |                  len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-         |                                  x -> x <> ''))::BIGINT AS w
-         |           FROM documents),
-         |p AS (SELECT lang, doc_id, w,
-         |             ${Sampling.weightedPrioritySql("doc_id", "w", seed = 7L)} AS priority_q
-         |      FROM t WHERE w >= 1),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY lang
-         |                  ORDER BY priority_q DESC, doc_id) AS stratum_rank FROM p)
-         |SELECT lang, doc_id, w, priority_q, stratum_rank::BIGINT AS stratum_rank
-         |FROM r WHERE stratum_rank <= 10 ORDER BY lang, stratum_rank""".stripMargin,
-    "e25_asof_nearest" -> // candidate rank mirror: distance ASC, backward
-      // wins ties (is_bk DESC), same-instant ties to the max view id
-      """WITH v AS (SELECT user_id, epoch_us(ts) AS vt, event_id AS view_id
-        |           FROM events WHERE event_type = 'view'),
-        |p AS (SELECT event_id AS purchase_id, user_id, epoch_us(ts) AS pt
-        |      FROM events WHERE event_type = 'purchase'),
-        |cand AS (SELECT p.purchase_id, p.user_id, v.view_id,
-        |                abs(v.vt - p.pt) AS dist, (v.vt <= p.pt)::INT AS is_bk
-        |         FROM p JOIN v USING (user_id)
-        |         WHERE abs(v.vt - p.pt) <= 7200000000),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY purchase_id
-        |                 ORDER BY dist, is_bk DESC, view_id DESC) AS rn FROM cand)
-        |SELECT p.purchase_id, p.user_id, r.view_id
-        |FROM p LEFT JOIN r ON r.purchase_id = p.purchase_id AND r.rn = 1
-        |ORDER BY p.purchase_id""".stripMargin,
-    "e27_outliers" -> // same cross-multiplied integer test in HUGEINT
-      """WITH b AS (SELECT event_type, round(value * 1000)::BIGINT AS v FROM events),
-        |st AS (SELECT event_type, COUNT(*) AS n, SUM(v::HUGEINT) AS sv,
-        |              SUM(v::HUGEINT * v::HUGEINT) AS q
-        |       FROM b GROUP BY 1),
-        |j AS (SELECT b.event_type, b.v, st.n, st.sv, st.q,
-        |             b.v::HUGEINT * st.n - st.sv AS d
-        |      FROM b JOIN st USING (event_type))
-        |SELECT event_type, MAX(n)::BIGINT AS n_events,
-        |       SUM(CASE WHEN d * d > 9 * (n::HUGEINT * q - sv * sv)
-        |                THEN 1 ELSE 0 END)::BIGINT AS n_outliers,
-        |       SUM(CASE WHEN d * d > 9 * (n::HUGEINT * q - sv * sv)
-        |                THEN v END)::BIGINT AS sum_outlier_v1000
-        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
-    "e26_ewma" -> // same ordered fold: list(... ORDER BY t, i) then
-      // list_reduce seeds with the first element — identical op sequence
-      """WITH l AS (SELECT user_id,
-        |                  list(value ORDER BY epoch_us(ts), event_id) AS vs
-        |           FROM events GROUP BY user_id)
-        |SELECT user_id, len(vs)::BIGINT AS n_events,
-        |       ROUND(list_reduce(vs, (a, b) -> (a + b) / 2), 6) + 0.0 AS ewma_6
-        |FROM l ORDER BY user_id""".stripMargin,
-    "e24_twap" -> // same permille/millis integer discipline
-      """WITH b AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-        |                  round(value * 1000)::BIGINT AS v1000 FROM events),
-        |h AS (SELECT user_id, v1000,
-        |             (lead(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
-        |              - ts_us) // 1000 AS dt_ms
-        |      FROM b)
-        |SELECT user_id, COUNT(*) AS n_holds, SUM(dt_ms)::BIGINT AS span_ms,
-        |       (SUM(v1000 * dt_ms) // GREATEST(SUM(dt_ms), 1))::BIGINT AS twap_1000
-        |FROM h WHERE dt_ms IS NOT NULL
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q31_scd2_history" -> // lag-compress then lead for validity ranges
-      """WITH h AS (SELECT o_custkey, o_orderkey, o_orderpriority,
-        |                  (o_orderdate::DATE - DATE '1970-01-01') AS eff_d,
-        |                  lag(o_orderpriority) OVER (PARTITION BY o_custkey
-        |                    ORDER BY (o_orderdate::DATE - DATE '1970-01-01'), o_orderkey) AS prev
-        |           FROM orders),
-        |c AS (SELECT o_custkey, o_orderkey, o_orderpriority, eff_d FROM h
-        |      WHERE prev IS NULL OR prev <> o_orderpriority)
-        |SELECT o_custkey, o_orderpriority, eff_d::BIGINT AS valid_from_d,
-        |       (lead(eff_d) OVER (PARTITION BY o_custkey ORDER BY eff_d, o_orderkey))::BIGINT AS valid_to_d,
-        |       (lead(eff_d) OVER (PARTITION BY o_custkey ORDER BY eff_d, o_orderkey)) IS NULL AS is_current
-        |FROM c ORDER BY o_custkey, valid_from_d""".stripMargin,
-    "p5_corpus_report" -> // same tokenization + md5 rollup, stacked long
-      """WITH t AS (SELECT lang, source, md5(text) AS h,
-        |                  len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |                                  x -> x <> ''))::BIGINT AS n_toks
-        |           FROM documents),
-        |b AS (SELECT COUNT(*) AS n_docs, SUM(n_toks) AS n_tokens,
-        |             COUNT(DISTINCT lang) AS n_langs, COUNT(DISTINCT source) AS n_sources,
-        |             MAX(n_toks) AS max_toks FROM t),
-        |d AS (SELECT COALESCE(SUM(c), 0) AS dup_docs
-        |      FROM (SELECT COUNT(*) AS c FROM t GROUP BY h HAVING COUNT(*) > 1)),
-        |u AS (SELECT 'n_docs' AS metric, n_docs::BIGINT AS value FROM b
-        |      UNION ALL SELECT 'n_tokens', n_tokens::BIGINT FROM b
-        |      UNION ALL SELECT 'n_langs', n_langs::BIGINT FROM b
-        |      UNION ALL SELECT 'n_sources', n_sources::BIGINT FROM b
-        |      UNION ALL SELECT 'max_doc_tokens', max_toks::BIGINT FROM b
-        |      UNION ALL SELECT 'mean_doc_tokens', (n_tokens // n_docs)::BIGINT FROM b
-        |      UNION ALL SELECT 'exact_dup_docs', dup_docs::BIGINT FROM d)
-        |SELECT metric, value FROM u ORDER BY metric""".stripMargin,
-    "e23_merged_intervals" -> // the same interval derivation as e17's
-      // oracle (inverted spans filtered), through the gaps-and-islands
-      // mirror — running-max open test, closed-interval touch rule
-      s"""SELECT k AS l_suppkey, island_seq, island_start, island_end, n_intervals
-         |FROM (${Sessionization.mergeIntervalsSql(
-              """SELECT l_suppkey AS k,
-                |       (o_orderdate::DATE - DATE '1970-01-01') AS s,
-                |       (l_shipdate::DATE - DATE '1970-01-01') AS e,
-                |       l_orderkey * 8 + l_linenumber AS tb
-                |FROM lineitem JOIN orders ON o_orderkey = l_orderkey
-                |WHERE o_orderdate::DATE <= l_shipdate::DATE""".stripMargin)})
-         |ORDER BY 1, 2""".stripMargin,
-    "e18_order_milestones" ->
-      """WITH w AS (SELECT o_custkey,
-        |  first_value(o_orderkey) OVER win AS first_key,
-        |  nth_value(o_orderkey, 3) OVER win AS third_key,
-        |  last_value(o_orderkey) OVER win AS last_key,
-        |  COUNT(*) OVER win AS n_orders,
-        |  row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS rn
-        |FROM orders
-        |WINDOW win AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING))
-        |SELECT o_custkey, first_key, third_key, last_key, n_orders
-        |FROM w WHERE rn = 1 ORDER BY o_custkey""".stripMargin,
-    "e11_spend_quartiles" ->
-      """WITH s AS (SELECT o_custkey, SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS spend
-        |           FROM orders GROUP BY 1),
-        |j AS (SELECT o_custkey, c_mktsegment, spend
-        |      FROM s JOIN customer ON c_custkey = o_custkey)
-        |SELECT o_custkey, c_mktsegment, CAST(spend AS DOUBLE) AS spend,
-        |       ntile(4) OVER w::BIGINT AS quartile,
-        |       dense_rank() OVER w::BIGINT AS drank,
-        |       round(percent_rank() OVER w * 1e6)::BIGINT AS prank_1e6
-        |FROM j WINDOW w AS (PARTITION BY c_mktsegment ORDER BY spend DESC, o_custkey)
-        |ORDER BY o_custkey""".stripMargin,
-    "e10_ship_latency" ->
-      """SELECT EXTRACT(year FROM o_orderdate)::BIGINT AS yr,
-        |       datediff('day', o_orderdate::DATE, l_shipdate::DATE)::BIGINT AS lat_days,
-        |       COUNT(*) AS n
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "e9_sessionized" ->
-      """WITH o AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-        |                  CASE WHEN epoch_us(ts) - LAG(epoch_us(ts)) OVER w > 1800000000
-        |                         OR LAG(epoch_us(ts)) OVER w IS NULL THEN 1 ELSE 0 END AS opens
-        |           FROM events
-        |           WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id))
-        |SELECT user_id, ts_us, event_id,
-        |       SUM(opens) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS session_seq
-        |FROM o ORDER BY user_id, ts_us, event_id""".stripMargin,
-    "e12_trailing_spend" ->
-      """WITH t AS (SELECT o_custkey, o_orderkey,
-        |                  datediff('day', DATE '1970-01-01', o_orderdate::DATE)::BIGINT AS day,
-        |                  CAST(o_totalprice AS DECIMAL(12,2)) AS p
-        |           FROM orders)
-        |SELECT o_custkey, o_orderkey, day,
-        |       CAST(SUM(p) OVER (PARTITION BY o_custkey ORDER BY day
-        |                         RANGE BETWEEN 89 PRECEDING AND CURRENT ROW) AS DOUBLE) AS spend_90d
-        |FROM t ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "e13_gap_fill" ->
-      """WITH o AS (SELECT o_custkey, datediff('day', DATE '1970-01-01', o_orderdate::DATE) AS day
-        |           FROM orders
-        |           WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'),
-        |c AS (SELECT o_custkey, day, COUNT(*) AS n FROM o GROUP BY 1, 2),
-        |s AS (SELECT o_custkey, MIN(day) AS d0, MAX(day) AS d1 FROM c GROUP BY 1),
-        |g AS (SELECT o_custkey, UNNEST(range(d0, d1 + 1)) AS day FROM s)
-        |SELECT g.o_custkey, g.day::BIGINT AS day, COALESCE(c.n, 0)::BIGINT AS n
-        |FROM g LEFT JOIN c ON c.o_custkey = g.o_custkey AND c.day = g.day
-        |ORDER BY g.o_custkey, g.day""".stripMargin,
-    "e30_higher_order" ->
-      """WITH q AS (SELECT l_orderkey, list_sort(list_transform(list(l_quantity), x -> x::BIGINT)) AS qtys
-        |           FROM lineitem WHERE l_orderkey % 100 = 0
-        |           GROUP BY l_orderkey)
-        |SELECT l_orderkey,
-        |       len(qtys)::BIGINT AS n_items,
-        |       list_sum(qtys)::BIGINT AS total_qty,
-        |       len(list_filter(qtys, x -> x > 30))::BIGINT AS n_heavy,
-        |       list_transform(qtys, x -> x * 3 + 1)[1]::BIGINT AS min_mapped
-        |FROM q ORDER BY l_orderkey""".stripMargin,
-    "e28_filtered_aggs" ->
-      """SELECT l_returnflag,
-        |       COUNT(*) AS n_all,
-        |       COUNT(*) FILTER (WHERE l_quantity > 25) AS n_heavy,
-        |       CAST(SUM(l_quantity) FILTER (WHERE l_discount > 0.05) AS BIGINT) AS qty_discounted,
-        |       COUNT(DISTINCT l_suppkey) FILTER (WHERE l_quantity > 40) AS n_heavy_suppliers,
-        |       CAST(SUM(l_quantity) FILTER (WHERE l_quantity > 25) AS BIGINT) * 1000
-        |         // COUNT(*) FILTER (WHERE l_quantity > 25) AS heavy_avg_1e3
-        |FROM lineitem
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "e29_rank_family" ->
-      """SELECT o_orderkey, o_orderpriority,
-        |       percent_rank() OVER w AS pr,
-        |       cume_dist() OVER w AS cd,
-        |       CAST(ntile(4) OVER w AS BIGINT) AS quartile
-        |FROM orders WHERE o_custkey % 50 = 0
-        |WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey)
-        |ORDER BY o_orderpriority, o_totalprice, o_orderkey""".stripMargin,
-    "e16_multiset_ops" ->
-      """WITH v AS (SELECT user_id, (props ->> 'k')::BIGINT AS k FROM events WHERE event_type = 'view'),
-        |c AS (SELECT user_id, (props ->> 'k')::BIGINT AS k FROM events WHERE event_type = 'click'),
-        |ea AS (SELECT * FROM v EXCEPT ALL SELECT * FROM c),
-        |ia AS (SELECT * FROM v INTERSECT ALL SELECT * FROM c)
-        |SELECT 'except_all' AS op, (SELECT COUNT(*) FROM ea)::BIGINT AS n
-        |UNION ALL
-        |SELECT 'intersect_all', (SELECT COUNT(*) FROM ia)::BIGINT
-        |ORDER BY op""".stripMargin,
-    "e15_funnel" -> // same stagewise min-time construction, relationally
-      """WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
-        |u AS (SELECT DISTINCT user_id FROM ev),
-        |v AS (SELECT user_id, MIN(ts_us) AS t1 FROM ev WHERE event_type = 'view' GROUP BY user_id),
-        |c AS (SELECT e.user_id, MIN(e.ts_us) AS t2 FROM ev e JOIN v USING (user_id)
-        |      WHERE e.event_type = 'click' AND e.ts_us > v.t1
-        |        AND e.ts_us <= v.t1 + 86400000000 GROUP BY e.user_id),
-        |p AS (SELECT e.user_id, MIN(e.ts_us) AS t3 FROM ev e JOIN c USING (user_id)
-        |      WHERE e.event_type = 'purchase' AND e.ts_us > c.t2
-        |        AND e.ts_us <= c.t2 + 86400000000 GROUP BY e.user_id)
-        |SELECT depth, COUNT(*) AS n_users FROM (
-        |  SELECT (CASE WHEN v.user_id IS NULL THEN 0 ELSE 1 END +
-        |          CASE WHEN c.user_id IS NULL THEN 0 ELSE 1 END +
-        |          CASE WHEN p.user_id IS NULL THEN 0 ELSE 1 END)::BIGINT AS depth
-        |  FROM u LEFT JOIN v USING (user_id) LEFT JOIN c USING (user_id)
-        |         LEFT JOIN p USING (user_id))
-        |GROUP BY depth ORDER BY depth""".stripMargin,
-    "e14_cumulative_users" -> // dedup-then-cumsum mirror: first day per
-      // user, daily first-timer counts, running sum over the day series
-      """WITH f AS (SELECT user_id, MIN(epoch_us(ts) // 86400000000) AS day
-        |           FROM events GROUP BY user_id),
-        |d AS (SELECT day, COUNT(*) AS n_new FROM f GROUP BY day)
-        |SELECT day::BIGINT AS day, n_new, SUM(n_new) OVER (
-        |  ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS cum_users
-        |FROM d ORDER BY day""".stripMargin,
-    "g16_partitioned_bfs" ->
-      s"""WITH RECURSIVE e AS (SELECT src, dst FROM (${DerivedGraphs.smallSql}) t WHERE src % 2 = 0),
-         |walk(vertex, level) AS (
-         |  SELECT CAST(0 AS BIGINT) AS vertex, 0 AS level
-         |  UNION
-         |  SELECT e.dst, walk.level + 1 FROM walk JOIN e ON e.src = walk.vertex WHERE walk.level < 12)
-         |SELECT vertex, CAST(MIN(level) AS INT) AS level FROM walk GROUP BY vertex ORDER BY level, vertex""".stripMargin,
-    "q39_sql_cc" -> // the TVF runs the same GraphX CC; oracle = g3's
-      // recursive reachability-closure mirror over the same derivation
-      s"""WITH RECURSIVE e AS (${DerivedGraphs.smallSql}),
-         |ue AS (SELECT src AS a, dst AS b FROM e UNION SELECT dst, src FROM e),
-         |v AS (SELECT a AS vertex FROM ue UNION SELECT b AS vertex FROM ue),
-         |r(vertex, reach) AS (
-         |  SELECT vertex, vertex FROM v
-         |  UNION
-         |  SELECT r.vertex, ue.b FROM r JOIN ue ON ue.a = r.reach)
-         |SELECT vertex, MIN(reach) AS component FROM r GROUP BY vertex ORDER BY vertex""".stripMargin,
-    "q40_sql_path" -> // same canonical walk as g38's mirror
-      Traversals.shortestPathToSql(DerivedGraphs.smallSql, start = 0L, maxDepth = 12),
-    "q41_sql_motif" -> // same mirrored join chain as g31, canonicalized
-      Motifs.findSql(DerivedGraphs.smallSql, "(a)-(b); (b)-(c); (c)-(a)",
-        extraWhere = "a < b AND a < c", orderBy = "a, b, c"),
-    "q33_sql_bfs" -> // the TVF runs the same BFS the Scala API runs; oracle
-      // = the recursive-CTE walk over the same (unfiltered) derivation
-      s"""WITH RECURSIVE e AS (SELECT src, dst FROM (${DerivedGraphs.smallSql}) t),
-         |walk(vertex, level) AS (
-         |  SELECT CAST(0 AS BIGINT) AS vertex, 0 AS level
-         |  UNION
-         |  SELECT e.dst, walk.level + 1 FROM walk JOIN e ON e.src = walk.vertex WHERE walk.level < 12)
-         |SELECT vertex, CAST(MIN(level) AS INT) AS level FROM walk GROUP BY vertex ORDER BY level, vertex""".stripMargin,
-    "g33_edge_upsert" -> // the same delete/insert derivation applied in SQL:
-      // even graph minus dst%3==0 edges plus the literal 2-edge chain,
-      // then g16's recursive-CTE BFS from 0
-      s"""WITH RECURSIVE e AS (
-         |  SELECT src, dst FROM (${DerivedGraphs.smallSql}) t WHERE src % 2 = 0 AND dst % 3 <> 0
-         |  UNION
-         |  SELECT CAST(v.s AS BIGINT), CAST(v.d AS BIGINT) FROM (VALUES (0, 1498), (1498, 1496)) v(s, d)),
-         |walk(vertex, level) AS (
-         |  SELECT CAST(0 AS BIGINT) AS vertex, 0 AS level
-         |  UNION
-         |  SELECT e.dst, walk.level + 1 FROM walk JOIN e ON e.src = walk.vertex WHERE walk.level < 12)
-         |SELECT vertex, CAST(MIN(level) AS INT) AS level FROM walk GROUP BY vertex ORDER BY level, vertex""".stripMargin,
-    "st17_streaming_view" -> // the stream-maintained view must equal the
-      // full recompute at the head (g46's oracle, streaming-driven)
-      s"""WITH e AS (SELECT src, dst FROM (${DerivedGraphs.smallSql}) t WHERE src % 7 <> 0),
-         |o AS (SELECT src AS vertex, COUNT(*)::BIGINT AS out_degree FROM e GROUP BY 1),
-         |i AS (SELECT dst AS vertex, COUNT(*)::BIGINT AS in_degree FROM e GROUP BY 1)
-         |SELECT COALESCE(o.vertex, i.vertex) AS vertex,
-         |       COALESCE(out_degree, 0)::BIGINT AS out_degree,
-         |       COALESCE(in_degree, 0)::BIGINT AS in_degree
-         |FROM o FULL OUTER JOIN i ON o.vertex = i.vertex ORDER BY vertex""".stripMargin,
-    "g46_incremental_degrees" -> // full recompute over the FINAL edge set —
-      // the maintained view must be indistinguishable from it
-      s"""WITH e AS (SELECT src, dst FROM (${DerivedGraphs.smallSql}) t WHERE src % 7 <> 0),
-         |o AS (SELECT src AS vertex, COUNT(*)::BIGINT AS out_degree FROM e GROUP BY 1),
-         |i AS (SELECT dst AS vertex, COUNT(*)::BIGINT AS in_degree FROM e GROUP BY 1)
-         |SELECT COALESCE(o.vertex, i.vertex) AS vertex,
-         |       COALESCE(out_degree, 0)::BIGINT AS out_degree,
-         |       COALESCE(in_degree, 0)::BIGINT AS in_degree
-         |FROM o FULL OUTER JOIN i ON o.vertex = i.vertex ORDER BY vertex""".stripMargin,
-    "g58_incremental_cc" -> // full recompute closure over the FINAL edge
-      // set — the maintained (delta-merged) view must be indistinguishable
-      s"""WITH RECURSIVE e AS (${DerivedGraphs.smallSql}),
-         |ue AS (SELECT src AS a, dst AS b FROM e UNION SELECT dst, src FROM e),
-         |v AS (SELECT a AS vertex FROM ue UNION SELECT b AS vertex FROM ue),
-         |r(vertex, reach) AS (
-         |  SELECT vertex, vertex FROM v
-         |  UNION
-         |  SELECT r.vertex, ue.b FROM r JOIN ue ON ue.a = r.reach)
-         |SELECT vertex, MIN(reach) AS component FROM r GROUP BY vertex ORDER BY vertex""".stripMargin,
-    "g55_assortativity" -> // identical canonical undirected edge set,
-      // identical integer moments, identical cross-multiplied division
-      Analytics.degreeAssortativitySql(DerivedGraphs.smallSql),
-    "g56_reciprocity" -> // same derivation ∪ the same partial reverse
-      Analytics.reciprocitySql(
-        s"SELECT src, dst FROM (${DerivedGraphs.smallSql}) e0 UNION ALL " +
-        s"SELECT dst AS src, src AS dst FROM (${DerivedGraphs.smallSql}) e1 WHERE src % 3 = 0"),
-    "g54_distance_index" -> // same two hop-bounded BFS closures (forward
-      // + reversed recursive CTEs) and the identical min-plus bound over
-      // the identical nation-derived pair set
-      (graft.graph.DistanceIndex.queryUpperBoundsSql(
-        DerivedGraphs.smallSql, landmarks = Seq(0L, 7L, 42L, 100L),
-        pairsSql = s"SELECT n_nationkey::BIGINT AS u, " +
-          s"((n_nationkey * 53 + 11) % ${DerivedGraphs.SmallMod})::BIGINT AS v FROM nation",
-        maxDepth = 12) + " ORDER BY 1, 2"),
-    "g53_incremental_triangles" -> // full triangle recompute over the
-      // FINAL edge set (the id-oriented wedge derivation g5's family
-      // uses) — the maintained view must be indistinguishable from it
-      s"""WITH e AS (SELECT src, dst FROM (${DerivedGraphs.smallSql}) t WHERE src % 7 <> 0),
-         |und AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b FROM e WHERE src <> dst),
-         |tri AS (
-         |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-         |  FROM und e1 JOIN und e2 ON e1.a = e2.a AND e1.b < e2.b
-         |  WHERE EXISTS (SELECT 1 FROM und e3 WHERE e3.a = e1.b AND e3.b = e2.b))
-         |SELECT vertex, COUNT(*)::BIGINT AS triangles FROM (
-         |  SELECT x AS vertex FROM tri UNION ALL SELECT y FROM tri UNION ALL SELECT z FROM tri)
-         |GROUP BY vertex ORDER BY vertex""".stripMargin,
-    "g34_property_bfs" -> // BFS over the etype=0 subgraph: same filter on
-      // the same derivation, g16's recursive-CTE walk
-      s"""WITH RECURSIVE e AS (
-         |  SELECT src, dst FROM (${DerivedGraphs.smallSql}) t WHERE (src + dst) % 3 = 0),
-         |walk(vertex, level) AS (
-         |  SELECT CAST(0 AS BIGINT) AS vertex, 0 AS level
-         |  UNION
-         |  SELECT e.dst, walk.level + 1 FROM walk JOIN e ON e.src = walk.vertex WHERE walk.level < 12)
-         |SELECT vertex, CAST(MIN(level) AS INT) AS level FROM walk GROUP BY vertex ORDER BY level, vertex""".stripMargin,
-    "d8_stream_dedup" ->
-      """SELECT DISTINCT md5(text) AS h, len(text)::BIGINT AS len
-        |FROM documents ORDER BY h""".stripMargin,
-    "d13_watermark_dedup" ->
-      """SELECT DISTINCT md5(text) AS h, len(text)::BIGINT AS len
-        |FROM documents ORDER BY h""".stripMargin,
-    "d14_fuzzy_decontaminate" -> Dedup.fuzzyDecontaminateSql(),
-    "st7_bounded_counts" -> EventStreams.runningUserCountsSql(),
-    "st9_closed_sessions" -> EventStreams.sessionizeStatefulSql(),
-    "st10_tws_counts" -> EventStreams.runningUserCountsSql(),
-    "st1_tumbling_hourly" -> EventStreams.tumblingCountsSql(),
-    "st11_stream_smoke" -> EventStreams.tumblingCountsSql(),
-    "st2_sliding_counts" -> EventStreams.slidingCountsSql(),
-    "st3_session_windows" -> EventStreams.sessionCountsSql(),
-    "st4_running_counts" -> EventStreams.runningUserCountsSql(),
-    "st5_stream_join" -> EventStreams.viewClickJoinSql(),
-    "st6_stream_left_join" -> EventStreams.viewClickLeftJoinSql(),
-    "st13_stream_full_join" -> EventStreams.viewClickFullJoinSql(),
-    "st14_stream_upsert" -> // round-trip identity: two merged batches
-      // must reproduce the one-shot aggregate
-      """SELECT user_id, COUNT(*) AS n_events, MAX(epoch_us(ts)) AS last_ts_us
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "st15_stream_log_sink" -> // the streamed-in commit-log head must carry
-      // exactly the one-shot content; 4 micro-batches = 4 versions — not
-      // assumed but ENFORCED: BoundedReplay asserts the staged file count
-      // equals sourceFiles, so an input too small to fill 4 partitions
-      // fails loudly instead of silently shifting this constant
-      """SELECT 4::BIGINT AS n_versions, COUNT(*) AS n_rows,
-        |       SUM(event_id)::BIGINT AS sum_event, SUM(user_id)::BIGINT AS sum_user
-        |FROM events""".stripMargin,
-    "st28_stream_exactly_once" -> // double-delivered batches, single-shot
-      // head: any replayed append that lands doubles n_rows and the sums
-      // and adds versions — the marker keeps all four at st15's values
-      """SELECT 4::BIGINT AS n_versions, COUNT(*) AS n_rows,
-        |       SUM(event_id)::BIGINT AS sum_event, SUM(user_id)::BIGINT AS sum_user
-        |FROM events""".stripMargin,
-    "st8_stream_static" -> EventStreams.enrichPurchasesSql(),
-    "d1_exact_dedup" -> Dedup.exactDedupSql,
-    "d2_jaccard_pairs" -> Dedup.jaccardPairsSql(),
-    // the oracle mirrors the full MinHash+LSH pipeline (same seeded hash
-    // family, banding, and verify), so the gate is deterministic equality —
-    // not the was-recall-perfect coin flip of comparing against the exact
-    // join (round-2 ADVICE); recall vs exact IS still covered, in DedupSpec
-    "d3_minhash_pairs" -> Dedup.minHashLshPairsSql(),
-    "d4_simhash_pairs" -> Dedup.simHashPairsSql(),
-    "d7_ngram_jaccard" -> Dedup.ngramJaccardPairsSql(),
-    "d6_dup_clusters" -> Dedup.nearDupClustersSql(),
-    "p9_leakproof_split" -> // the same cluster derivation, the same
-      // group-keyed hash split, aggregated per split
-      s"""WITH cl AS (${Dedup.nearDupClustersSql()}),
-         |k AS (SELECT d.doc_id, COALESCE(cl.keeper, d.doc_id) AS gkey
-         |      FROM documents d LEFT JOIN cl ON cl.doc_id = d.doc_id),
-         |sp AS (SELECT doc_id, gkey, ${Sampling.assignSplitsSql("gkey")} AS split FROM k)
-         |SELECT split, COUNT(*) AS n_docs, COUNT(DISTINCT gkey)::BIGINT AS n_groups,
-         |       SUM(doc_id)::BIGINT AS sum_ids
-         |FROM sp GROUP BY split ORDER BY split""".stripMargin,
-    "d15_quality_keepers" -> Dedup.qualityKeepersSql(),
-    "d16_neardup_keepers" -> Dedup.nearDupKeepersSql(),
-    "d17_span_dedup" -> Dedup.spanDedupSql(),
-    "d18_span_scrub" -> Dedup.spanScrubSql(),
-    "st21_stream_dedup_idx" -> // streamed head == full rebuild over the
-      // evens (per-document signatures), so the probe shares d19's
-      // side-restricted mirror
-      Dedup.dedupAgainstIndexSql(oldFilter = "% 2 = 0", newFilter = "% 2 = 1"),
-    "d19_dedup_index" -> // the full mirrored pipeline (seeded params,
-      // banding, exact verify) with the candidate join restricted to
-      // (historical evens) x (probed odds) — d3's no-assumed-recall rule
-      Dedup.dedupAgainstIndexSql(oldFilter = "% 2 = 0", newFilter = "% 2 = 1"),
-    "d20_dedup_index_at" -> // the v0 pin restricts the historical side to
-      // the BUILD batch alone — the pre-append index exactly
-      Dedup.dedupAgainstIndexSql(oldFilter = "% 4 = 0", newFilter = "% 2 = 1"),
-    "d9_semantic_dedup" -> Similarity.semanticDupClustersSql(),
-    "d10_edit_distance" -> Dedup.lshEditDistancesSql(),
-    "d11_containment" -> Dedup.containmentPairsSql(),
-    "d12_block_dedup" -> Dedup.blockDedupSql(),
-    "p2_semantic_curation" -> // the d9 clusters query nested as a derived
-      // table; survivors = vectors that are not a non-keeper cluster member
-      s"""SELECT e.label::BIGINT AS label, COUNT(*) AS n, SUM(e.vec_id)::BIGINT AS sum_ids
-         |FROM embeddings e
-         |WHERE NOT EXISTS (SELECT 1 FROM (
-         |${Similarity.semanticDupClustersSql()}
-         |) c WHERE c.vec_id = e.vec_id AND c.keeper <> c.vec_id)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "s1_cosine_topk" -> Similarity.cosineTopKSql(),
-    "s37_maxsim" -> // same tokenizer / lowest-hash query truncation /
-      // hashed-projection grid / max-sum algebra
-      graft.llm.Retrieval.maxSimTopKSql(),
-    "s17_hard_negatives" -> Similarity.hardNegativesSql(),
-    "s18_mrl_rerank" -> Similarity.mrlTopKSql(),
-    "g60_rich_club" -> Analytics.richClubSql(DerivedGraphs.smallSql),
-    "g61_local_community" ->
-      Analytics.localCommunitySweepSql(DerivedGraphs.smallSql, source = 0L),
-    "s2_ann_lsh" -> Similarity.lshTopKSql(),
-    "s3_ann_ivf" -> Similarity.ivfTopKSql(),
-    "s12_ivf_persisted" -> // the committed index reproduces ivfTopK
-      // bit-for-bit (same training configuration, parquet round-trips
-      // doubles exactly), so the persisted path shares s3's full mirror
-      Similarity.ivfTopKSql(),
-    "s23_ivf_filtered" -> // the IDSelector predicate restricts CANDIDATES
-      // inside the probed lists on both engines; queries are unfiltered
-      Similarity.ivfTopKSql(candFilter = "vec_id % 7 = 3"),
-    "s24_knn_graph" -> // the identical NN-Descent dataflow as generated
-      // CTE rounds — bit-equality, not a recall bound
-      KnnGraph.knnGraphSql(),
-    "s25_graph_ann" -> // build CTEs at the build config + the beam loop
-      // as generated hop blocks; the commit round trip is
-      // content-preserving, so committed search == fresh-graph search
-      KnnGraph.knnGraphSearchSql(),
-    "s26_graph_append" -> // build on the >= 100 corpus, the append's
-      // search-then-link loop for the < 100 batch (scored against BUILD
-      // vectors — the committed state the engine's append sees), then
-      // the final walk over graph ∪ forward ∪ reverse edges
-      KnnGraph.knnGraphAppendSearchSql(),
-    "st24_stream_graph_idx" -> // the same append chain replayed batch by
-      // batch: [50,100) links against the build state, [0,50) against
-      // build ∪ first batch; the compaction commit is content-preserving
-      KnnGraph.knnGraphAppendSearchSql(batches = Seq((50L, 100L), (0L, 50L))),
-    "s27_ivf_delete" -> // the delete-list exclusion is a pure row filter
-      // on the committed lists, so the tombstoned AND consolidated phases
-      // both equal s3's mirror with the deleted range cut from candidates
-      s"""WITH rbase AS MATERIALIZED (
-         |${Similarity.ivfTopKSql(candFilter = "NOT (vec_id >= 120 AND vec_id < 180)")})
-         |SELECT query_id, neighbor_id, rank, cos_1e6, p.phase
-         |FROM rbase CROSS JOIN (VALUES ('tombstoned'), ('consolidated')) p(phase)""".stripMargin,
-    "s28_graph_delete" -> // build CTEs + the consolidation's one-hop
-      // repair (kept ∪ capped in×out patch, entries re-snapped) + the
-      // standard walk over survivors — the post-consolidation search
-      KnnGraph.knnGraphDeleteSearchSql("vec_id >= 120 AND vec_id < 180"),
-    "s30_graph_filtered" -> // unfiltered navigation, predicate on the
-      // final ranking only — both engines gate the same visited set
-      KnnGraph.knnGraphSearchSql(beam = 16, resFilter = "vec_id % 3 = 1"),
-    "s39_index_vacuum" -> // the post-vacuum head search must still equal
-      // the append mirror bit-for-bit — retention reclaimed ONLY what no
-      // kept index version references
-      KnnGraph.knnGraphAppendSearchSql(batches = Seq((300L, 500L))),
-    "s34_index_versions" -> // head = the append mirror over the extended
-      // graph; v0 = the build-only mirror restricted to the build corpus —
-      // that the manifest snapshot reproduces it IS the atomicity claim
-      s"""WITH h AS (${KnnGraph.knnGraphAppendSearchSql(batches = Seq((300L, 500L)))}),
-         |z AS (${KnnGraph.knnGraphSearchSql(baseFilter = "vec_id < 300")})
-         |SELECT query_id, neighbor_id, rank, cos_1e6, 'head' AS phase FROM h
-         |UNION ALL
-         |SELECT query_id, neighbor_id, rank, cos_1e6, 'v0' AS phase FROM z""".stripMargin,
-    "s35_ivf_versions" -> // head = train-on-prefix assign-all (the append
-      // mirror); v0 = the whole pipeline restricted to the build corpus
-      s"""WITH h AS (${Similarity.ivfTopKSql(trainFilter = "vec_id < 300")}),
-         |z AS (${Similarity.ivfTopKSql(baseFilter = "vec_id < 300")})
-         |SELECT query_id, neighbor_id, rank, cos_1e6, 'head' AS phase FROM h
-         |UNION ALL
-         |SELECT query_id, neighbor_id, rank, cos_1e6, 'v0' AS phase FROM z""".stripMargin,
-    "s33_pq_graph_ann" -> // build + PQ CTEs + the ADC-navigated beam loop
-      // as generated hop blocks (integer navigation replays exactly),
-      // then the exact re-rank of the ADC-best k·candFactor
-      KnnGraph.pqGraphSearchSql(),
-    "s31_ivf_drift" -> // train on the build corpus, assign both sides
-      // with the committed codebook, aggregate residuals per list
-      Similarity.ivfDriftSql(trainFilter = "vec_id >= 100",
-        idxFilter = "vec_id >= 100", shardFilter = "vec_id < 100"),
-    "s32_recall_eval" -> // both ranked pipelines joined per query — the
-      // recall arithmetic restated in the same integer units
-      s"""WITH a AS (${Similarity.ivfTopKSql()}),
-         |e AS (${Similarity.cosineTopKSql()})
-         |SELECT e.query_id,
-         |       SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_hit,
-         |       COUNT(*)::BIGINT AS n_exact,
-         |       (SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-         |          * 1000000 // COUNT(*))::BIGINT AS recall_e6
-         |FROM e LEFT JOIN a ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-         |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin,
-    "st25_stream_index_delete" -> // the streamed tombstone + consolidation
-      // equals s27's filtered mirror (deleteRange BETWEEN is inclusive)
-      Similarity.ivfTopKSql(candFilter = "NOT (vec_id BETWEEN 120 AND 179)"),
-    "st30_landing_ingest" -> // the streamed landing ingest must equal the
-      // batch load of the three staged slices (keys 0..499), exactly
-      // once across the restart — any replay doubles the sums
-      """SELECT 1::BIGINT AS one, COUNT(*) AS n_rows,
-        |       SUM(o_orderkey)::BIGINT AS sum_k, SUM(o_custkey)::BIGINT AS sum_v
-        |FROM orders WHERE o_orderkey <= 499""".stripMargin,
-    "st29_stream_dv_delete" -> // the DV-delete-driven stream must land on
-      // the SAME index state as st25's CoW-driven one — the mirror is
-      // identical by design (delete mechanics must not leak downstream)
-      Similarity.ivfTopKSql(candFilter = "NOT (vec_id BETWEEN 120 AND 179)"),
-    "st26_stream_ann_serve" -> // the accumulated serving log equals the
-      // one-shot batch probe — s3's mirror verbatim
-      Similarity.ivfTopKSql(),
-    "s13_pq_persisted" -> // committed codes reproduce pqTopK bit-for-bit
-      Similarity.pqTopKSql(),
-    "s14_ivf_append" -> // train on the vec_id<250 prefix, assign ALL:
-      // the mirror restricts cent0's seeds and the refinement means to
-      // the training prefix while the final assignment covers the corpus
-      Similarity.ivfTopKSql(trainFilter = "vec_id < 250"),
-    "st18_stream_ivf" -> // the streamed appends reproduce s14's
-      // add-after-train index at the head (same v0 training prefix,
-      // fixed-codebook assignment per discovered version), so the query
-      // shares its train-on-prefix mirror
-      Similarity.ivfTopKSql(trainFilter = "vec_id < 250"),
-    "st22_stream_index_optimize" -> // the clustered compaction commit is
-      // content-preserving, so the post-OPTIMIZE probe still matches
-      // st18's streamed add-after-train mirror
-      Similarity.ivfTopKSql(trainFilter = "vec_id < 250"),
-    "s20_ivfpq" -> // the composed FAISS-IVFPQ pipeline: coarse k-means
-      // assignment + per-subspace codes + integer ADC inside the probed
-      // lists + exact re-rank, mirrored end-to-end
-      Similarity.ivfPqTopKSql(),
-    "s22_ivfpq_append" -> // both codebooks trained on the prefix, codes +
-      // assignment over the full corpus — the composed add-after-train
-      Similarity.ivfPqTopKSql(trainFilter = "vec_id < 250"),
-    "s21_pq_append" -> // build on the vec_id<250 prefix, append the rest:
-      // the prefix holds the ksub lowest vec_ids, so the committed
-      // sub-codebooks EQUAL a full-corpus build's and the appended index
-      // shares s7's unmodified mirror
-      Similarity.pqTopKSql(),
-    "s4_label_centroids" -> Similarity.labelCentroidsSql,
-    "s5_sq8_rerank" -> Similarity.sq8TopKSql(),
-    "s7_pq_rerank" -> Similarity.pqTopKSql(),
-    "s8_knn_classify" -> Similarity.knnClassifySql(),
-    "s6_gram_matrix" -> Similarity.gramMatrixSql(),
-    "s16_jl_sketch" -> Similarity.jlSketchSql(),
-    "f7_dsv2_matrix" -> // same degrees from the source derivation (+1 shift)
-      s"""WITH e AS (${DerivedGraphs.smallSql})
-         |SELECT src + 1 AS src, COUNT(*)::BIGINT AS outdeg,
-         |       SUM(dst + 1)::BIGINT AS sum_dst
-         |FROM e GROUP BY 1 ORDER BY 1""".stripMargin,
-    "f8_zorder_cells" -> // the SAME zorderExpr string evaluated by DuckDB
-      s"""WITH d AS (SELECT o_custkey % 1024 AS cx, o_orderkey % 1024 AS cy FROM orders),
-         |z AS (SELECT cx, cy, ${Partitioning.zorderExpr("cx", "cy", 10)} AS z FROM d)
-         |SELECT z // 16384 AS cell, COUNT(*) AS n,
-         |       MIN(cx) AS min_cx, MAX(cx) AS max_cx,
-         |       MIN(cy) AS min_cy, MAX(cy) AS max_cy
-         |FROM z GROUP BY 1 ORDER BY 1""".stripMargin,
-    "f6_schema_evolution" -> // source-table union mirror of the two batches
-      """WITH u AS (
-        |  SELECT o_orderkey, o_custkey, NULL AS o_orderpriority
-        |  FROM orders WHERE o_orderkey % 4 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey, o_custkey, o_orderpriority
-        |  FROM orders WHERE o_orderkey % 4 = 1)
-        |SELECT o_orderpriority, COUNT(*) AS n, SUM(o_orderkey)::BIGINT AS sum_okey
-        |FROM u GROUP BY 1 ORDER BY 1 NULLS FIRST""".stripMargin,
-    "f5_hive_partitioned" -> // source-table oracle with the same year cut
-      """SELECT o_orderpriority, COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_price
-        |FROM orders WHERE EXTRACT(year FROM o_orderdate) = 1996
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "t1_text_stats" -> TextOps.textStatsSql,
-    "t2_language_id" -> TextOps.languageIdSql,
-    "t3_quality" -> TextOps.qualityBucketsSql,
-    "t4_fingerprints" -> TextOps.fingerprintsSql,
-    "t5_token_freq" -> TextOps.tokenFrequencySql(),
-    "t6_bpe_tokens" -> TextOps.bpeTokenCountsSql,
-    "t7_winnowing" -> TextOps.winnowingSql(),
-    "t10_tfidf" -> TextOps.tfidfTopTermsSql(),
-    "t12_chunk_text" -> TextOps.chunkTokensSql(),
-    "t13_repetition" -> TextOps.repetitionStatsSql,
-    "t27_token_entropy" -> TextOps.tokenEntropySql,
-    "t14_kmv_distinct" -> Sketches.kmvDistinctShinglesSql(),
-    "t42_kmv_setops" -> // the identical union/intersect sketch algebra in
-      // HUGEINT over ranked-window per-source sketches
-      Sketches.kmvSetOpsSql(),
-    "t45_quantile_sketch" -> // the mirror builds ONE sketch over the whole
-      // table; the gate merges two half-sketches — equality is the exact
-      // merge law
-      Sketches.adaptiveQuantilesSql(),
-    "t46_grouped_quantiles" -> Sketches.groupedAdaptiveQuantilesSql(),
-    "t47_hll_distinct" -> // same hash split / rho / register algebra /
-      // rational-alpha division / interpolated ln table
-      Sketches.hllDistinctTokensSql(),
-    "st27_stream_hll" -> // t47's direct-build mirror verbatim — that the
-      // streamed register head matches it IS the merge law through real
-      // commits
-      Sketches.hllDistinctTokensSql(),
-    "st23_stream_quantiles" -> // three streamed commits' sketches merged
-      // per version == one direct build (the exact merge law again)
-      Sketches.adaptiveQuantilesSql(),
-    "t15_histogram_quantiles" -> Sketches.histogramQuantilesSql(),
-    "t20_countmin_hh" -> Sketches.countMinHeavyHittersSql(),
-    "t21_bigram_logprob" -> TextOps.bigramLogProbSql,
-    "t22_pii_scrub" -> TextOps.piiScrubSql,
-    "t23_url_domains" -> TextOps.urlDomainsSql,
-    "t24_shingle_novelty" -> TextOps.shingleNoveltySql,
-    "t16_token_rarity" -> TextOps.tokenRaritySql,
-    "t17_dup_coverage" -> TextOps.dupCoverageSql,
-    "t18_decontaminate" -> TextOps.decontaminateSql(evalMod = 7),
-    "t11_pack_chunks" ->
-      """WITH t AS (SELECT doc_id, source,
-        |                  len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> ''))::BIGINT AS n_tokens
-        |           FROM documents),
-        |o AS (SELECT doc_id, source, n_tokens,
-        |             SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-        |                                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS end_offset
-        |      FROM t)
-        |SELECT doc_id, source, n_tokens, end_offset,
-        |       end_offset - n_tokens AS start_offset,
-        |       (end_offset - n_tokens) // 256 AS chunk_first,
-        |       greatest(end_offset - 1, end_offset - n_tokens) // 256 AS chunk_last,
-        |       greatest(end_offset - 1, end_offset - n_tokens) // 256
-        |         - (end_offset - n_tokens) // 256 + 1 AS n_chunks
-        |FROM o ORDER BY doc_id""".stripMargin,
-    "t8_train_split" ->
-      s"""SELECT ${Sampling.assignSplitsSql("doc_id")} AS split,
-         |       COUNT(*) AS n, SUM(doc_id)::BIGINT AS sum_ids, SUM(n_chars)::BIGINT AS sum_chars
-         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "t9_corpus_sample" ->
-      s"""SELECT doc_id, ${Sampling.shuffleKeySql("doc_id", 7L)} AS shuffle_key
-         |FROM documents ORDER BY shuffle_key, doc_id LIMIT 50""".stripMargin,
-    "t31_token_mixture" -> Sampling.tokenBudgetMixtureSql(),
-    "t34_quality_scores" -> graft.llm.Classifier.scoreDocsSql(
-      Seq(-2000000000L, 500000000L, 300000000L, -1000000000L)),
-    "t35_gopher_rules" -> graft.llm.TextOps.gopherQualityFlagsSql(),
-    "t36_sentence_stats" -> graft.llm.TextOps.sentenceStatsSql,
-    "q36_group_by_all" ->
-      """SELECT o_orderpriority, o_orderstatus, COUNT(*) AS n,
-        |       SUM(o_custkey)::BIGINT AS sum_cust
-        |FROM orders GROUP BY ALL ORDER BY 1, 2""".stripMargin,
-    "q37_order_by_all" ->
-      """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
-        |FROM orders GROUP BY ALL ORDER BY ALL""".stripMargin,
-    "q38_variant_json" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |       SUM(json_extract(props, '$.k')::BIGINT)::BIGINT AS sum_k,
-        |       SUM(CASE WHEN json_extract(props, '$.missing') IS NULL
-        |                THEN 1 ELSE 0 END)::BIGINT AS n_missing
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "t19_stratified_sample" ->
-      s"""WITH s AS (SELECT lang, doc_id, ${Sampling.shuffleKeySql("doc_id", 11L)} AS shuffle_key
-         |           FROM documents),
-         |r AS (SELECT lang, doc_id, shuffle_key,
-         |             row_number() OVER (PARTITION BY lang ORDER BY shuffle_key, doc_id) AS stratum_rank
-         |      FROM s)
-         |SELECT lang, stratum_rank::BIGINT AS stratum_rank, doc_id, shuffle_key
-         |FROM r WHERE stratum_rank <= 10 ORDER BY lang, stratum_rank""".stripMargin,
-    "d5_cosine_dup_pairs" -> Similarity.cosineDupPairsSql(),
-    "p7_modality_card" -> // the d17 and m7 mirrors composed the same way
-      s"""WITH sp AS (${graft.llm.Dedup.spanDedupSql()}),
-         |au AS (${graft.llm.MediaOps.audioFramesSql()}),
-         |src AS (SELECT doc_id, source FROM documents),
-         |t AS (SELECT source, COUNT(*)::BIGINT AS n_docs,
-         |             SUM(n_tokens)::BIGINT AS n_tokens,
-         |             SUM(n_dup_tokens)::BIGINT AS n_dup_tokens,
-         |             (SUM(n_dup_tokens) * 1000 // SUM(n_tokens))::BIGINT AS dup_permille
-         |      FROM sp JOIN src USING (doc_id) GROUP BY source),
-         |a AS (SELECT source, COUNT(*)::BIGINT AS n_frames,
-         |             SUM(CASE WHEN silent THEN 1 ELSE 0 END)::BIGINT AS n_silent,
-         |             (SUM(CASE WHEN silent THEN 1 ELSE 0 END) * 1000 // COUNT(*))::BIGINT AS silent_permille
-         |      FROM au JOIN src ON au.media_id = src.doc_id GROUP BY source)
-         |SELECT source, n_docs, n_tokens, n_dup_tokens, dup_permille,
-         |       n_frames, n_silent, silent_permille
-         |FROM t JOIN a USING (source) ORDER BY source""".stripMargin,
-    "p1_curation_pipeline" ->
-      s"""WITH q AS (
-         |${TextOps.qualityBucketsSql}
-         |),
-         |ok AS (SELECT d.doc_id, d.text, d.n_chars
-         |       FROM documents d JOIN q ON q.doc_id = d.doc_id WHERE q.quality = 'ok'),
-         |k AS (SELECT MIN(doc_id) AS doc_id FROM ok GROUP BY md5(text)),
-         |kept AS (SELECT ok.doc_id, ok.n_chars FROM ok JOIN k ON k.doc_id = ok.doc_id)
-         |SELECT ${graft.llm.Sampling.assignSplitsSql("doc_id")} AS split,
-         |       COUNT(*) AS n, SUM(doc_id)::BIGINT AS sum_ids, SUM(n_chars)::BIGINT AS sum_chars
-         |FROM kept GROUP BY 1 ORDER BY 1""".stripMargin,
-    "m1_media_meta" -> MediaOps.mediaMetaSql,
-    "m3_decode_features" -> MediaOps.ppmFeaturesSql,
-    "m6_resize_features" -> MediaOps.resizedFeaturesSql(),
-    "m8_augment_features" -> MediaOps.augmentedFeaturesSql(),
-    "m9_shot_boundaries" -> MediaOps.shotBoundariesSql(),
-  )
-
-  /** Root for the f1/f2 round-trip exports. Verify points this at its own
-    * output directory (`-Dgraft.export.dir` equivalent, set in its main) so
-    * the files DuckDB later reads are private to that run — a fixed
-    * world-writable /tmp path could be replaced by a concurrent run between
-    * Verify's JVM exit and the driver's oracle read. Standalone/bench runs
-    * (no property) fall back to tmp.
-    */
-  private def exportRoot: String =
-    sys.props.getOrElse("graft.export.dir", sys.props.getOrElse("java.io.tmpdir", "/tmp"))
-
-  /** Where `f1_jsonl_roundtrip` lands its JSONL export for the given sf dir
-    * — sf-tagged so a later run at another scale (e.g. Bench at sf0.1 after
-    * Verify at sf0.01) cannot overwrite the files the oracle is about to
-    * read; deliberately NOT registered for delete-on-exit for the same
-    * reason.
-    */
-  def jsonlRoundtripPath(sfDir: String): String =
-    exportRoot + "/graft-jsonl-" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  /** CSV sibling of [[jsonlRoundtripPath]] for `f2_csv_roundtrip`. */
-  def csvRoundtripPath(sfDir: String): String =
-    exportRoot + "/graft-csv-" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  /** Range-sorted parquet layout for `f3_range_layout` (DuckDB never reads
-    * it — the oracle uses the source table — but the path keeps the same
-    * run-private, sf-tagged discipline as the other exports).
-    */
-  def rangeLayoutPath(sfDir: String): String =
-    exportRoot + "/graft-range-" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  /** ORC export for `f4_orc_roundtrip` (DuckDB never reads it — the oracle
-    * uses the source table — but the path keeps the same run-private,
-    * sf-tagged discipline as the other exports).
-    */
-  /** zstd parquet export for `f9_zstd_roundtrip` (same discipline). */
-  def zstdRoundtripPath(sfDir: String): String =
-    exportRoot + "/graft-zstd-" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  /** Manifest-scan export for `f10_manifest_scan` (same discipline). */
-  def manifestScanPath(sfDir: String): String =
-    exportRoot + "/graft-manifest-" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  /** Compaction root for `f11_compacted_roundtrip` (same discipline):
-    * `/small` holds the shattered input, `/compacted` the rewrite. */
-  def compactionPath(sfDir: String): String =
-    exportRoot + "/graft-compact-" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  def orcRoundtripPath(sfDir: String): String =
-    exportRoot + "/graft-orc-" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  /** Hive-partitioned export for `f5_hive_partitioned` (same discipline). */
-  def hivePartitionedPath(sfDir: String): String =
-    exportRoot + "/graft-hive-" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  /** Copy-on-write merge target for `q29_cow_merge` (rewritten from the
-    * source table at the start of every run, so re-runs are idempotent). */
-  def cowMergePath(sfDir: String): String =
-    exportRoot + "/graft-cow-" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  /** Incremental-refresh target for `p4_incremental_refresh` (same
-    * rewrite-at-start discipline). */
-  def incrRefreshPath(sfDir: String): String =
-    exportRoot + "/graft-incr-" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  /** Two-batch export for `f6_schema_evolution` (same discipline). */
-  def schemaEvolutionPath(sfDir: String): String =
-    exportRoot + "/graft-evolve-" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  /** Matrix-file export for `f7_dsv2_matrix` (same discipline). */
-  def dsv2MatrixPath(sfDir: String): String =
-    exportRoot + "/graft-dsv2-" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_") + ".txt"
-
-  /** Oracles only computable against the data (not sf-independent SQL),
-    * merged into `oracle_sql.json` by Verify:
-    *  - `g8`/`g9`: DFS preorder / leaf set are not SQL-expressible (a
-    *    recursive CTE cannot carry the visited set), so the expected rows
-    *    are computed by [[graft.graph.SequentialModel]] — plain in-memory
-    *    recursion sharing no code with the Spark path, the same
-    *    independent-model discipline `TraversalProps` uses — and emitted as
-    *    a `VALUES` literal for DuckDB.
-    *  - `f1`: the JSONL round-trip oracle reads the sf-tagged export path.
+  /** The data-dependent oracles for `sfDir` (restricted to `selected` when
+    * given), merged into `oracle_sql.json` by Verify. Their shared inputs
+    * are collected once, and only for the queries that need them.
     */
   def dynamicOracleSql(spark: SparkSession, sfDir: String,
                        selected: Option[Set[String]] = None): Map[String, String] = {
-    def want(k: String) = selected.forall(_.contains(k))
-    val graphKeys =
-      Seq("g8_dfs_preorder", "g9_dfs_leaves", "g14_kcore", "g15_label_propagation",
-        "g23_partitioned_dfs", "g27_ktruss", "g28_topo_layers", "g32_betweenness",
-        "g36_modularity", "g41_louvain_sweep", "g42_spanning_forest",
-        "g44_louvain_full", "g47_mis", "g48_coloring", "g49_densest",
-        "g50_matching", "g51_coreness", "g52_hyperball", "g57_distance_profile",
-        "g63_pagerank_converged", "g64_katz")
-    // the sequential models walk the whole derived graph — skip them when a
-    // dev-loop SPARK_GRAFT_ONLY run selects none of their queries (the
-    // driver's gate runs unfiltered, so this never narrows the real gate)
-    val graphOracles: Map[String, String] = if (!graphKeys.exists(want)) Map.empty else {
-      val edges = DerivedGraphs.small(spark, sfDir)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      val pre = SequentialModel.dfsPreorder(edges, start = 0L)
-      val leaves = SequentialModel.dfsLeaves(edges, start = 0L)
-      val core = SequentialModel.kCore(edges, k = 3).toSeq.sorted
-      val lpa = SequentialModel.labelPropagation(edges, numIter = 5).toSeq.sorted
-      val preVals = pre.zipWithIndex.map { case (v, i) => s"($v, $i)" }.mkString(", ")
-      val prc = SequentialModel.pageRankConverged(edges, tolE6 = 100L, maxIter = 60)
-      val ktz = SequentialModel.katzConverged(edges, alphaE3 = 10L, tolE6 = 100L, maxIter = 60)
-      Map(
-        "g64_katz" -> (
-          if (ktz.isEmpty)
-            """SELECT CAST(NULL AS BIGINT) AS vertex, CAST(NULL AS BIGINT) AS katz_e6,
-              |CAST(NULL AS BIGINT) AS n_iter WHERE 1 = 0""".stripMargin
-          else
-            s"""SELECT CAST(v AS BIGINT) AS vertex, CAST(p AS BIGINT) AS katz_e6,
-               |CAST(i AS BIGINT) AS n_iter
-               |FROM (VALUES ${ktz.map { case (v, p, i) => s"($v, $p, $i)" }.mkString(", ")}) AS t(v, p, i)
-               |ORDER BY vertex""".stripMargin),
-        "g63_pagerank_converged" -> (
-          if (prc.isEmpty)
-            """SELECT CAST(NULL AS BIGINT) AS vertex, CAST(NULL AS BIGINT) AS pr_e6,
-              |CAST(NULL AS BIGINT) AS n_iter WHERE 1 = 0""".stripMargin
-          else
-            s"""SELECT CAST(v AS BIGINT) AS vertex, CAST(p AS BIGINT) AS pr_e6,
-               |CAST(i AS BIGINT) AS n_iter
-               |FROM (VALUES ${prc.map { case (v, p, i) => s"($v, $p, $i)" }.mkString(", ")}) AS t(v, p, i)
-               |ORDER BY vertex""".stripMargin),
-        "g15_label_propagation" -> (
-        if (lpa.isEmpty)
-          "SELECT CAST(NULL AS BIGINT) AS vertex, CAST(NULL AS BIGINT) AS label WHERE 1 = 0"
-        else
-          s"""SELECT CAST(v AS BIGINT) AS vertex, CAST(l AS BIGINT) AS label
-             |FROM (VALUES ${lpa.map { case (v, l) => s"($v, $l)" }.mkString(", ")}) AS t(v, l)
-             |ORDER BY vertex""".stripMargin),
-      "g42_spanning_forest" -> {
-        val weighted = edges.map { case (s, d) =>
-          (s, d, math.min(s, d) * 1499 + math.max(s, d)) }
-        val msf = SequentialModel.minimumSpanningForest(weighted)
-          .sortBy { case (a, b, _) => (a, b) }
-        if (msf.isEmpty)
-          "SELECT CAST(NULL AS BIGINT) AS a, CAST(NULL AS BIGINT) AS b, CAST(NULL AS BIGINT) AS w WHERE 1 = 0"
-        else
-          s"""SELECT CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b, CAST(w AS BIGINT) AS w
-             |FROM (VALUES ${msf.map { case (a, b, w) => s"($a, $b, $w)" }.mkString(", ")}) AS t(a, b, w)
-             |ORDER BY a, b""".stripMargin
-      },
-      "g41_louvain_sweep" -> {
-        val lv = SequentialModel.louvainSweep(edges, rounds = 4).toSeq.sorted
-        if (lv.isEmpty)
-          "SELECT CAST(NULL AS BIGINT) AS vertex, CAST(NULL AS BIGINT) AS label WHERE 1 = 0"
-        else
-          s"""SELECT CAST(v AS BIGINT) AS vertex, CAST(l AS BIGINT) AS label
-             |FROM (VALUES ${lv.map { case (v, l) => s"($v, $l)" }.mkString(", ")}) AS t(v, l)
-             |ORDER BY vertex""".stripMargin
-      },
-      "g44_louvain_full" -> {
-        val lv = SequentialModel.louvain(edges, rounds = 4).toSeq.sorted
-        if (lv.isEmpty)
-          "SELECT CAST(NULL AS BIGINT) AS vertex, CAST(NULL AS BIGINT) AS label WHERE 1 = 0"
-        else
-          s"""SELECT CAST(v AS BIGINT) AS vertex, CAST(l AS BIGINT) AS label
-             |FROM (VALUES ${lv.map { case (v, l) => s"($v, $l)" }.mkString(", ")}) AS t(v, l)
-             |ORDER BY vertex""".stripMargin
-      },
-      "g52_hyperball" -> {
-        val hb = SequentialModel.hyperBall(edges, t = 8).toSeq.sorted
-        if (hb.isEmpty)
-          "SELECT CAST(NULL AS BIGINT) AS vertex, CAST(NULL AS BIGINT) AS ball_e3 WHERE 1 = 0"
-        else
-          s"""SELECT CAST(v AS BIGINT) AS vertex, CAST(b AS BIGINT) AS ball_e3
-             |FROM (VALUES ${hb.map { case (v, b) => s"($v, $b)" }.mkString(", ")}) AS t(v, b)
-             |ORDER BY vertex""".stripMargin
-      },
-      "g57_distance_profile" -> {
-        val nf = SequentialModel.neighborhoodFunction(edges, tMax = 8)
-        s"""SELECT CAST(t AS BIGINT) AS t, CAST(n AS BIGINT) AS npairs_e3,
-           |CAST(e AS BIGINT) AS is_eff
-           |FROM (VALUES ${nf.map { case (t, n, e) => s"($t, $n, $e)" }.mkString(", ")}) AS x(t, n, e)
-           |ORDER BY t""".stripMargin
-      },
-      "g50_matching" -> {
-        val m = SequentialModel.greedyMatching(edges)
-        if (m.isEmpty)
-          "SELECT CAST(NULL AS BIGINT) AS a, CAST(NULL AS BIGINT) AS b WHERE 1 = 0"
-        else
-          s"""SELECT CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b
-             |FROM (VALUES ${m.map { case (a, b) => s"($a, $b)" }.mkString(", ")}) AS t(a, b)
-             |ORDER BY a, b""".stripMargin
-      },
-      "g51_coreness" -> {
-        // independent Batagelj–Zaversnik peeling (different algorithm from
-        // the H-index fixpoint; both exact)
-        val cs = SequentialModel.coreness(edges).toSeq.sorted
-        if (cs.isEmpty)
-          "SELECT CAST(NULL AS BIGINT) AS vertex, CAST(NULL AS BIGINT) AS coreness WHERE 1 = 0"
-        else
-          s"""SELECT CAST(v AS BIGINT) AS vertex, CAST(c AS BIGINT) AS coreness
-             |FROM (VALUES ${cs.map { case (v, c) => s"($v, $c)" }.mkString(", ")}) AS t(v, c)
-             |ORDER BY vertex""".stripMargin
-      },
-      "g47_mis" -> {
-        // independent sequential greedy in (priority, id) order — the
-        // distributed Luby fixpoint provably coincides
-        val mis = SequentialModel.greedyMis(edges)
-        if (mis.isEmpty)
-          "SELECT CAST(NULL AS BIGINT) AS vertex WHERE 1 = 0"
-        else
-          s"""SELECT CAST(v AS BIGINT) AS vertex
-             |FROM (VALUES ${mis.map(v => s"($v)").mkString(", ")}) AS t(v)
-             |ORDER BY vertex""".stripMargin
-      },
-      "g48_coloring" -> {
-        val cols = SequentialModel.greedyColoring(edges).toSeq.sorted
-        if (cols.isEmpty)
-          "SELECT CAST(NULL AS BIGINT) AS vertex, CAST(NULL AS BIGINT) AS color WHERE 1 = 0"
-        else
-          s"""SELECT CAST(v AS BIGINT) AS vertex, CAST(c AS BIGINT) AS color
-             |FROM (VALUES ${cols.map { case (v, c) => s"($v, $c)" }.mkString(", ")}) AS t(v, c)
-             |ORDER BY vertex""".stripMargin
-      },
-      "g49_densest" -> {
-        val (r, nv, ne, d6) = SequentialModel.densestSubgraph(edges)
-        s"""SELECT CAST($r AS BIGINT) AS best_round, CAST($nv AS BIGINT) AS n_vertices,
-           |CAST($ne AS BIGINT) AS n_edges, CAST($d6 AS BIGINT) AS density_e6""".stripMargin
-      },
-      "g36_modularity" -> {
-        // the g15 LPA labels as VALUES, scored by SQL modularity masses
-        // over the same edge derivation
-        val labelSql =
-          if (lpa.isEmpty) "SELECT CAST(NULL AS BIGINT) AS v, CAST(NULL AS BIGINT) AS l WHERE 1 = 0"
-          else
-            s"""SELECT CAST(v AS BIGINT) AS v, CAST(l AS BIGINT) AS l
-               |FROM (VALUES ${lpa.map { case (v, l) => s"($v, $l)" }.mkString(", ")}) AS t(v, l)""".stripMargin
-        Analytics.modularitySql(DerivedGraphs.smallSql, labelSql)
-      },
-      "g28_topo_layers" -> {
-        val layers = SequentialModel.topoLayers(edges.filter(e => e._1 < e._2))
-          .toSeq.sorted
-        if (layers.isEmpty)
-          "SELECT CAST(NULL AS BIGINT) AS vertex, CAST(NULL AS BIGINT) AS layer WHERE 1 = 0"
-        else
-          s"""SELECT CAST(v AS BIGINT) AS vertex, CAST(l AS BIGINT) AS layer
-             |FROM (VALUES ${layers.map { case (v, l) => s"($v, $l)" }.mkString(", ")}) AS t(v, l)
-             |ORDER BY vertex""".stripMargin
-      },
-      "g27_ktruss" -> {
-        val truss = SequentialModel.kTruss(edges, k = 3).toSeq
-          .map { case ((a, b), sp) => (a, b, sp) }.sorted
-        if (truss.isEmpty)
-          "SELECT CAST(NULL AS BIGINT) AS a, CAST(NULL AS BIGINT) AS b, CAST(NULL AS BIGINT) AS support WHERE 1 = 0"
-        else
-          s"""SELECT CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b, CAST(sp AS BIGINT) AS support
-             |FROM (VALUES ${truss.map { case (a, b, sp) => s"($a, $b, $sp)" }.mkString(", ")}) AS t(a, b, sp)
-             |ORDER BY a, b""".stripMargin
-      },
-      "g14_kcore" -> (
-        if (core.isEmpty)
-          "SELECT CAST(NULL AS BIGINT) AS vertex, CAST(NULL AS BIGINT) AS core_degree WHERE 1 = 0"
-        else
-          s"""SELECT CAST(v AS BIGINT) AS vertex, CAST(d AS BIGINT) AS core_degree
-             |FROM (VALUES ${core.map { case (v, d) => s"($v, $d)" }.mkString(", ")}) AS t(v, d)
-             |ORDER BY vertex""".stripMargin),
-      "g32_betweenness" -> {
-        val bc = SequentialModel.betweenness(edges, seeds = Seq(0L, 1L, 2L, 3L),
-          maxDepth = 12).toSeq.sorted
-        if (bc.isEmpty)
-          "SELECT CAST(NULL AS BIGINT) AS vertex, CAST(NULL AS DOUBLE) AS bc_6 WHERE 1 = 0"
-        else
-          s"""SELECT CAST(v AS BIGINT) AS vertex, CAST(d AS DOUBLE) AS bc_6
-             |FROM (VALUES ${bc.map { case (v, d) => s"($v, $d)" }.mkString(", ")}) AS t(v, d)
-             |ORDER BY vertex""".stripMargin
-      },
-      "g8_dfs_preorder" ->
-        s"""SELECT CAST(v AS BIGINT) AS vertex, CAST(p AS INT) AS pos
-           |FROM (VALUES $preVals) AS t(v, p) ORDER BY pos""".stripMargin,
-      "g23_partitioned_dfs" -> {
-        // same independent recursion, over the even-src subset g23 stores in
-        // the partitioned catalog (start vertex 0 is always present: seen
-        // includes the start, so the preorder is never empty)
-        val preEven = SequentialModel.dfsPreorder(
-          edges.filter(_._1 % 2 == 0), start = 0L)
-        val vals = preEven.zipWithIndex.map { case (v, i) => s"($v, $i)" }.mkString(", ")
-        s"""SELECT CAST(v AS BIGINT) AS vertex, CAST(p AS INT) AS pos
-           |FROM (VALUES $vals) AS t(v, p) ORDER BY pos""".stripMargin
-      },
-        "g9_dfs_leaves" -> (
-          if (leaves.isEmpty) "SELECT CAST(NULL AS BIGINT) AS vertex WHERE 1 = 0"
-          else s"""SELECT CAST(v AS BIGINT) AS vertex
-                  |FROM (VALUES ${leaves.map(v => s"($v)").mkString(", ")}) AS t(v) ORDER BY vertex""".stripMargin))
-    }
-    // corpus/vector mirrors (same independent-model discipline): collected
-    // inputs are gate-scale by contract — embeddings are corpus samples
-    // (500×64 at sf0.01), documents a 500-row slice
-    val vecKeys = Seq("s9_kmeans", "s10_mmr", "s11_silhouette", "s15_pca")
-    val vecOracles: Map[String, String] = if (!vecKeys.exists(want)) Map.empty else {
-      val vecs = graft.Tables.embeddings(spark, sfDir)
-        .select(col("vec_id").cast("long"), col("embedding"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toIndexedSeq))
-        .toSeq
-      val km = SequentialCorpus.kMeans(vecs, k = 8, numIter = 5)
-      val mm = SequentialCorpus.mmr(vecs, queryId = 0L, k = 10, poolSize = 50,
-        lambda = 0.7)
-      val sil = SequentialCorpus.kMeansSilhouette(vecs, k = 8, numIter = 5)
-      val pc = if (want("s15_pca")) SequentialCorpus.pcaSpectrum(vecs) else Nil
-      Map(
-        "s15_pca" -> (
-          if (pc.isEmpty)
-            "SELECT CAST(NULL AS BIGINT) AS component, CAST(NULL AS BIGINT) AS eigenvalue_e9, CAST(NULL AS BIGINT) AS evr_ppm WHERE 1 = 0"
-          else
-            s"""SELECT CAST(c AS BIGINT) AS component, CAST(e AS BIGINT) AS eigenvalue_e9, CAST(r AS BIGINT) AS evr_ppm
-               |FROM (VALUES ${pc.map { case (c, e, r) => s"($c, $e, $r)" }.mkString(", ")}) AS t(c, e, r)
-               |ORDER BY component""".stripMargin),
-        "s11_silhouette" -> (
-          if (sil.isEmpty)
-            "SELECT CAST(NULL AS BIGINT) AS cluster, CAST(NULL AS BIGINT) AS n, CAST(NULL AS DOUBLE) AS silhouette_6 WHERE 1 = 0"
-          else
-            s"""SELECT CAST(c AS BIGINT) AS cluster, CAST(n AS BIGINT) AS n, CAST(sl AS DOUBLE) AS silhouette_6
-               |FROM (VALUES ${sil.map { case (c, n, sl) => s"($c, $n, $sl)" }.mkString(", ")}) AS t(c, n, sl)
-               |ORDER BY cluster""".stripMargin),
-        "s9_kmeans" -> (
-          if (km.isEmpty)
-            "SELECT CAST(NULL AS BIGINT) AS cluster, CAST(NULL AS BIGINT) AS n, CAST(NULL AS DOUBLE) AS inertia_6 WHERE 1 = 0"
-          else
-            s"""SELECT CAST(c AS BIGINT) AS cluster, CAST(n AS BIGINT) AS n, CAST(i AS DOUBLE) AS inertia_6
-               |FROM (VALUES ${km.map { case (c, n, i) => s"($c, $n, $i)" }.mkString(", ")}) AS t(c, n, i)
-               |ORDER BY cluster""".stripMargin),
-        "s10_mmr" -> (
-          if (mm.isEmpty)
-            "SELECT CAST(NULL AS BIGINT) AS pos, CAST(NULL AS BIGINT) AS vec_id, CAST(NULL AS DOUBLE) AS score_6 WHERE 1 = 0"
-          else
-            s"""SELECT CAST(p AS BIGINT) AS pos, CAST(v AS BIGINT) AS vec_id, CAST(sc AS DOUBLE) AS score_6
-               |FROM (VALUES ${mm.map { case (p, v, sc) => s"($p, $v, $sc)" }.mkString(", ")}) AS t(p, v, sc)
-               |ORDER BY pos""".stripMargin))
-    }
-    val bpeKeys = Seq("t29_bpe_train", "t30_bpe_encode")
-    val bpeOracles: Map[String, String] = if (!bpeKeys.exists(want)) Map.empty else {
-      val texts = graft.Tables.documents(spark, sfDir)
-        .select("text").collect().map(_.getString(0)).toSeq
-      val bpe = SequentialCorpus.bpeMerges(texts, numMerges = 10)
-      val enc = SequentialCorpus.bpeEncodeTop(texts, numMerges = 10, topN = 20)
-      Map(
-        "t29_bpe_train" -> (
-        if (bpe.isEmpty)
-          "SELECT CAST(NULL AS BIGINT) AS rank, CAST(NULL AS VARCHAR) AS lhs, CAST(NULL AS VARCHAR) AS rhs, CAST(NULL AS BIGINT) AS freq WHERE 1 = 0"
-        else
-          s"""SELECT CAST(r AS BIGINT) AS rank, CAST(l AS VARCHAR) AS lhs, CAST(rr AS VARCHAR) AS rhs, CAST(f AS BIGINT) AS freq
-             |FROM (VALUES ${bpe.map { case (r, l, rr, f) => s"($r, '$l', '$rr', $f)" }.mkString(", ")}) AS t(r, l, rr, f)
-             |ORDER BY rank""".stripMargin),
-        "t30_bpe_encode" -> (
-        if (enc.isEmpty)
-          "SELECT CAST(NULL AS VARCHAR) AS subword, CAST(NULL AS BIGINT) AS freq WHERE 1 = 0"
-        else
-          s"""SELECT CAST(s AS VARCHAR) AS subword, CAST(f AS BIGINT) AS freq
-             |FROM (VALUES ${enc.map { case (sw, f) => s"('$sw', $f)" }.mkString(", ")}) AS t(s, f)
-             |ORDER BY freq DESC, subword""".stripMargin))
-    }
-    val logRegOracle: Map[String, String] = if (!want("t33_logreg_train")) Map.empty else {
-      val docs = graft.Tables.documents(spark, sfDir)
-        .select(col("text"), col("lang"))
-        .collect().map(r => (r.getString(0), if (r.getString(1) == "en") 1.0 else 0.0)).toSeq
-      val (w0, w1, w2, w3, nc, n) = SequentialCorpus.logRegTrain(docs)
-      Map("t33_logreg_train" ->
-        s"""SELECT CAST($w0 AS BIGINT) AS w0_e9, CAST($w1 AS BIGINT) AS w1_e9,
-           |CAST($w2 AS BIGINT) AS w2_e9, CAST($w3 AS BIGINT) AS w3_e9,
-           |CAST($nc AS BIGINT) AS n_correct, CAST($n AS BIGINT) AS n_docs""".stripMargin)
-    }
-    val dsirOracle: Map[String, String] = if (!(want("t32_dsir") || want("p6_r11_curation"))) Map.empty else {
-      val docs = graft.Tables.documents(spark, sfDir)
-        .select(col("doc_id").cast("long"), col("text"), col("lang"))
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
-      val w = SequentialCorpus.dsirWeights(docs)
-      val wValues =
-        if (w.isEmpty) "SELECT CAST(NULL AS BIGINT) AS d, CAST(NULL AS BIGINT) AS w WHERE 1 = 0"
-        else s"SELECT CAST(d AS BIGINT) AS d, CAST(w AS BIGINT) AS w FROM (VALUES ${
-          w.map { case (d, s) => s"($d, $s)" }.mkString(", ")}) AS t(d, w)"
-      Map(
-        "t32_dsir" ->
-          s"""SELECT d AS doc_id, w AS dsir_e6 FROM ($wValues) ORDER BY doc_id""",
-        "p6_r11_curation" ->
-          // the same composition as the Spark pipeline: gopher static SQL
-          // for the keep set, the independent-mirror VALUES for the weights
-          s"""WITH g AS (SELECT doc_id FROM (${graft.llm.TextOps.gopherQualityFlagsSql()}) WHERE keep = 1),
-             |dw AS ($wValues)
-             |SELECT d.source, COUNT(*) AS n, SUM(d.doc_id)::BIGINT AS sum_ids,
-             |       SUM(dw.w)::BIGINT AS sum_dsir_e6
-             |FROM documents d JOIN g USING (doc_id) JOIN dw ON dw.d = d.doc_id
-             |WHERE dw.w > 0
-             |GROUP BY d.source ORDER BY d.source""".stripMargin)
-    }
-    val maxpOracle: Map[String, String] =
-      if (!(want("p11_maxp_retrieval") || want("p12_maxp_indexed"))) Map.empty else {
-        val texts = graft.Tables.documents(spark, sfDir)
-          .select(col("text")).collect().map(_.getString(0)).toSeq
-        // chunk-level idf derived INDEPENDENTLY (own tokenizer, own
-        // sliding windows, own chunk dfs — the t37 discipline at passage
-        // granularity)
-        val idfCh = SequentialCorpus.bm25ChunkIdf(texts, Bm25QueryTerms)
-        val sql = graft.llm.Retrieval.maxPassageTopKSql(idfCh, k = 15)
-        // the committed passage index is bit-identical to the inline
-        // operator (no trained component; shared integer scoring tail)
-        Map("p11_maxp_retrieval" -> sql, "p12_maxp_indexed" -> sql)
-      }
-    val maxpDelOracle: Map[String, String] =
-      if (!want("p13_passage_delete")) Map.empty else {
-        // post-consolidation == a rebuild on the SURVIVORS: idf re-derived
-        // independently on the surviving corpus, same independent chunker
-        val texts = graft.Tables.documents(spark, sfDir)
-          .filter(col("doc_id") % 5 =!= 2)
-          .select(col("text")).collect().map(_.getString(0)).toSeq
-        val idfCh = SequentialCorpus.bm25ChunkIdf(texts, Bm25QueryTerms)
-        Map("p13_passage_delete" -> graft.llm.Retrieval.maxPassageTopKSql(
-          idfCh, k = 15, docFilter = "doc_id % 5 <> 2"))
-      }
-    val bm25Oracle: Map[String, String] =
-      if (!(want("t37_bm25") || want("p8_hybrid_rrf") || want("s19_bm25_indexed")
-          || want("st19_stream_bm25") || want("p10_rag_indexed")
-          || want("s29_bm25_delete") || want("s36_bm25_versions"))) Map.empty else {
-        val texts = graft.Tables.documents(spark, sfDir)
-          .select(col("text")).collect().map(_.getString(0)).toSeq
-        val idf = SequentialCorpus.bm25Idf(texts, Bm25QueryTerms)
-        // the post-consolidation index IS a rebuild over the survivors, so
-        // the s29 mirror is t37's pipeline restricted to them — idf
-        // re-derived from survivor texts by the independent mirror
-        val survTexts = graft.Tables.documents(spark, sfDir)
-          .filter(col("doc_id") % 7 =!= 3)
-          .select(col("text")).collect().map(_.getString(0)).toSeq
-        val idfSurv = SequentialCorpus.bm25Idf(survTexts, Bm25QueryTerms)
-        // the v0 (build-half) index == a standalone index over even docs
-        val evenTexts = graft.Tables.documents(spark, sfDir)
-          .filter(col("doc_id") % 2 === 0)
-          .select(col("text")).collect().map(_.getString(0)).toSeq
-        val idfEven = SequentialCorpus.bm25Idf(evenTexts, Bm25QueryTerms)
-        Map(
-          "s29_bm25_delete" -> graft.llm.Retrieval.bm25TopKSql(idfSurv, k = 15,
-            docFilter = "doc_id % 7 <> 3"),
-          "s36_bm25_versions" ->
-            s"""WITH h AS (${graft.llm.Retrieval.bm25TopKSql(idf, k = 15)}),
-               |z AS (${graft.llm.Retrieval.bm25TopKSql(idfEven, k = 15,
-                          docFilter = "doc_id % 2 = 0")})
-               |SELECT doc_id, score_e6, 'head' AS phase FROM h
-               |UNION ALL
-               |SELECT doc_id, score_e6, 'v0' AS phase FROM z""".stripMargin,
-          "t37_bm25" -> graft.llm.Retrieval.bm25TopKSql(idf, k = 15),
-          // the committed index is bit-identical to the inline operator
-          // (no trained component; shared scoring tail) — same oracle
-          "s19_bm25_indexed" -> graft.llm.Retrieval.bm25TopKSql(idf, k = 15),
-          // streamed maintenance head == full rebuild (same property)
-          "st19_stream_bm25" -> graft.llm.Retrieval.bm25TopKSql(idf, k = 15),
-          "p10_rag_indexed" ->
-            // the same fused pipeline with the dense leg mirrored by the
-            // IVF pipeline (the committed index is bit-identical to
-            // ivfTopK, whose mirror this is)
-            s"""WITH sp AS (SELECT doc_id,
-               |            row_number() OVER (ORDER BY score_e6 DESC, doc_id) AS rank
-               |            FROM (${graft.llm.Retrieval.bm25TopKSql(idf, k = 15)}) bm),
-               |de AS (SELECT neighbor_id AS doc_id, rank
-               |       FROM (${Similarity.ivfTopKSql(numQueries = 1, k = 15)}) iv),
-               |u AS (SELECT doc_id, rank FROM sp UNION ALL SELECT doc_id, rank FROM de),
-               |f AS (SELECT doc_id, SUM(1000000 // (60 + rank))::BIGINT AS rrf_e6
-               |      FROM u GROUP BY doc_id)
-               |SELECT doc_id, rrf_e6 FROM f ORDER BY rrf_e6 DESC, doc_id LIMIT 10""".stripMargin,
-          "p8_hybrid_rrf" ->
-            // the same two ranked lists (BM25 mirror + dense cosine
-            // mirror) fused with the identical integer RRF arithmetic
-            s"""WITH sp AS (SELECT doc_id,
-               |            row_number() OVER (ORDER BY score_e6 DESC, doc_id) AS rank
-               |            FROM (${graft.llm.Retrieval.bm25TopKSql(idf, k = 15)}) bm),
-               |de AS (SELECT neighbor_id AS doc_id, rank
-               |       FROM (${Similarity.cosineTopKSql(numQueries = 1, k = 15)}) cs),
-               |u AS (SELECT doc_id, rank FROM sp UNION ALL SELECT doc_id, rank FROM de),
-               |f AS (SELECT doc_id, SUM(1000000 // (60 + rank))::BIGINT AS rrf_e6
-               |      FROM u GROUP BY doc_id)
-               |SELECT doc_id, rrf_e6 FROM f ORDER BY rrf_e6 DESC, doc_id LIMIT 10""".stripMargin)
-          .filter { case (kk, _) => want(kk) }
-      }
-    val ccnetOracle: Map[String, String] = if (!(want("t38_ccnet_ppl") || want("t40_lm_langid") || want("t41_ngram_ppl") || want("t44_ngram5_ppl"))) Map.empty else {
-      val docs = graft.Tables.documents(spark, sfDir)
-        .select(col("doc_id").cast("long"), col("text"), col("lang"))
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
-      val li = if (!want("t40_lm_langid")) Map.empty[String, String] else {
-        val rows = SequentialCorpus.lmLangId(docs)
-        Map("t40_lm_langid" -> (
-          if (rows.isEmpty)
-            """SELECT CAST(NULL AS BIGINT) AS doc_id, CAST(NULL AS VARCHAR) AS pred_lang,
-              |CAST(NULL AS BIGINT) AS margin_e6, CAST(NULL AS BIGINT) AS is_correct WHERE 1 = 0""".stripMargin
-          else
-            s"""SELECT CAST(d AS BIGINT) AS doc_id, CAST(p AS VARCHAR) AS pred_lang,
-               |CAST(m AS BIGINT) AS margin_e6, CAST(c AS BIGINT) AS is_correct
-               |FROM (VALUES ${rows.map { case (d, p, m, c) => s"($d, '$p', $m, $c)" }.mkString(", ")}) AS t(d, p, m, c)
-               |ORDER BY doc_id""".stripMargin))
-      }
-      def pplValues(rows: Seq[(Long, Long, Long, String)]): String =
-        if (rows.isEmpty)
-          """SELECT CAST(NULL AS BIGINT) AS doc_id, CAST(NULL AS BIGINT) AS n_tokens,
-            |CAST(NULL AS BIGINT) AS npt_e6, CAST(NULL AS VARCHAR) AS bucket WHERE 1 = 0""".stripMargin
-        else
-          s"""SELECT CAST(d AS BIGINT) AS doc_id, CAST(n AS BIGINT) AS n_tokens,
-             |CAST(p AS BIGINT) AS npt_e6, CAST(bk AS VARCHAR) AS bucket
-             |FROM (VALUES ${rows.map { case (d, n, p, bk) => s"($d, $n, $p, '$bk')" }.mkString(", ")}) AS t(d, n, p, bk)
-             |ORDER BY doc_id""".stripMargin
-      val sc = if (want("t38_ccnet_ppl")) SequentialCorpus.ccnetScores(docs) else Nil
-      val ng = if (want("t41_ngram_ppl")) SequentialCorpus.ngramScores(docs) else Nil
-      val ng5 = if (want("t44_ngram5_ppl")) SequentialCorpus.ngramScoresN(docs, 5) else Nil
-      li ++ Map(
-        "t38_ccnet_ppl" -> pplValues(sc),
-        // the ORDER-3 mirror: same output contract, independent backoff walk
-        "t41_ngram_ppl" -> pplValues(ng),
-        // the ORDER-5 mirror: the same recursive walk generalized
-        "t44_ngram5_ppl" -> pplValues(ng5))
-    }
-    val zipfOracle: Map[String, String] = if (!want("t43_zipf_fit")) Map.empty else {
-      val docs = graft.Tables.documents(spark, sfDir)
-        .select(col("doc_id").cast("long"), col("text"), col("lang"))
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
-      val rows = SequentialCorpus.zipfStats(docs)
-      Map("t43_zipf_fit" ->
-        s"""SELECT CAST(l AS VARCHAR) AS lang, CAST(n AS BIGINT) AS n_tokens,
-           |CAST(v AS BIGINT) AS vocab, CAST(nf AS BIGINT) AS n_fit, CAST(sl AS BIGINT) AS slope_e6
-           |FROM (VALUES ${rows.map { case (l, n, v, nf, sl) => s"('$l', $n, $v, $nf, ${sl.map(_.toString).getOrElse("NULL")})" }.mkString(", ")}) AS t(l, n, v, nf, sl)
-           |ORDER BY lang""".stripMargin)
-    }
-    val cepOracle: Map[String, String] = if (!(want("e34_event_pattern") || want("st20_stream_cep"))) Map.empty else {
-      val evs = EventStreams.normalized(graft.Tables.events(spark, sfDir))
-        .select(col("user_id").cast("long"), col("ts_us").cast("long"),
-          col("event_id").cast("long"), col("event_type"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
-      val rows = graft.operators.SequentialEvents.patternCounts(
-        evs, Seq("view", "click", "purchase"))
-      val sqlText =
-        s"""SELECT CAST(u AS BIGINT) AS user_id, CAST(n AS BIGINT) AS n_events,
-           |CAST(m AS BIGINT) AS n_matches
-           |FROM (VALUES ${rows.map { case (u, n, m) => s"($u, $n, $m)" }.mkString(", ")}) AS t(u, n, m)
-           |ORDER BY user_id""".stripMargin
-      // the streaming-state fold from empty state equals the batch
-      // automaton, so both gates share the one independent mirror
-      Map("e34_event_pattern" -> sqlText, "st20_stream_cep" -> sqlText)
-    }
-    val ssspOracle: Map[String, String] = if (!want("g45_sssp_fixpoint")) Map.empty else {
-      val d = SequentialModel
-        .dijkstra(DerivedGraphs.longHaulSeq(spark, sfDir), start = 0L).toSeq.sorted
-      Map("g45_sssp_fixpoint" ->
-        s"""SELECT CAST(v AS BIGINT) AS vertex, CAST(c AS BIGINT) AS cost
-           |FROM (VALUES ${d.map { case (v, c) => s"($v, $c)" }.mkString(", ")}) AS t(v, c)
-           |ORDER BY vertex""".stripMargin)
-    }
-    (graphOracles ++ vecOracles ++ bpeOracles ++ dsirOracle ++ logRegOracle ++ ssspOracle ++
-      cepOracle ++ zipfOracle ++ bm25Oracle ++ maxpOracle ++ maxpDelOracle ++ ccnetOracle ++ Map(
-      "f1_jsonl_roundtrip" ->
-        s"""SELECT l_returnflag, COUNT(*) AS n, SUM(qty_c)::BIGINT AS sum_qty_c,
-           |       SUM(l_orderkey)::BIGINT AS sum_okey, MAX(line_no) AS max_line
-           |FROM read_json_auto('${jsonlRoundtripPath(sfDir)}/*.json')
-           |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-      "f2_csv_roundtrip" ->
-        s"""SELECT c_mktsegment, COUNT(*) AS n, SUM(c_custkey)::BIGINT AS sum_key,
-           |       MAX(nation) AS max_nation
-           |FROM read_csv('${csvRoundtripPath(sfDir)}/*.csv', header = true,
-           |              columns = {'c_custkey': 'BIGINT', 'nation': 'BIGINT', 'c_mktsegment': 'VARCHAR'})
-           |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin))
-      .filter { case (k, _) => want(k) }
+    val in = new OracleInput(spark, sfDir)
+    Registry.all.collect {
+      case Query(name, _, Oracle.Derived(sql))
+          if selected.forall(_.contains(name)) => name -> sql(in)
+    }.toMap
   }
 }

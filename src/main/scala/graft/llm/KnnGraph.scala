@@ -690,24 +690,9 @@ object KnnGraph {
                         adjacency: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
     val graph = new graft.operators.CommitTable(spark, s"$indexRoot/graph", "src")
-    // append share — log metadata only
-    val hist = graph.history().select("version", "op").collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    val metaOps = Set("set-invariants", "delete-dv", "rename-column", "drop-column")
-    val lastRebuild = hist.collect {
-      case (v, op) if op != "append" && !metaOps(op) => v }.max
-    val fileRows = graph.fileStats().select("path", "n").collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    def stagedVersion(p: String): Long = {
-      val dir = p.split('/').takeRight(2).head // d<version>-<nonce>
-      dir.substring(1, dir.indexOf('-')).toLong
-    }
-    val totalRows = fileRows.map(_._2).sum
-    val appendRows = fileRows.collect {
-      case (p, n) if stagedVersion(p) > lastRebuild => n }.sum
-    val appendShare =
-      if (totalRows == 0L) 0L else appendRows * 1000000L / totalRows
-    // tombstone shares — one src-grouped pass over the adjacency
+    val appendShare = appendEdgeShare(graph)
+    // tombstone shares — one src-grouped pass over the adjacency (the
+    // tombstone read is already distinct, so no id counts twice)
     val del = Tombstones.read(spark, indexRoot, "vec_id")
       .map(_.select(col("vec_id").as("__t")))
       .getOrElse(Seq.empty[Long].toDF("__t"))
@@ -772,31 +757,17 @@ object KnnGraph {
       spark: SparkSession, indexRoot: String, adjacency: DataFrame,
       delSets: Seq[DataFrame]): Seq[org.apache.spark.sql.Row] = {
     require(delSets.nonEmpty, "knnGraphLinkStatsStates: need at least one state")
-    val graph = new graft.operators.CommitTable(spark, s"$indexRoot/graph", "src")
-    val hist = graph.history().select("version", "op").collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    val metaOps = Set("set-invariants", "delete-dv", "rename-column", "drop-column")
-    val lastRebuild = hist.collect {
-      case (v, op) if op != "append" && !metaOps(op) => v }.max
-    val fileRows = graph.fileStats().select("path", "n").collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    def stagedVersion(p: String): Long = {
-      val dir = p.split('/').takeRight(2).head
-      dir.substring(1, dir.indexOf('-')).toLong
-    }
-    val totalRows = fileRows.map(_._2).sum
-    val appendRows = fileRows.collect {
-      case (p, n) if stagedVersion(p) > lastRebuild => n }.sum
-    val appendShare =
-      if (totalRows == 0L) 0L else appendRows * 1000000L / totalRows
+    val appendShare = appendEdgeShare(
+      new graft.operators.CommitTable(spark, s"$indexRoot/graph", "src"))
     val n = delSets.length
     var marked = adjacency.select(col("src"), col("dst"))
     delSets.zipWithIndex.foreach { case (del, i) =>
-      val idc = col(del.columns.head).cast("long")
+      // distinct: a repeated id would duplicate its edges in the left joins
+      val ids = del.select(col(del.columns.head).cast("long").as("__id")).distinct()
       marked = marked
-        .join(broadcast(del.select(idc.as(s"__ts$i"))),
+        .join(broadcast(ids.select(col("__id").as(s"__ts$i"))),
           col("src") === col(s"__ts$i"), "left")
-        .join(broadcast(del.select(idc.as(s"__td$i"))),
+        .join(broadcast(ids.select(col("__id").as(s"__td$i"))),
           col("dst") === col(s"__td$i"), "left")
     }
     val flagCols = col("src") +: (0 until n).flatMap(i => Seq(
@@ -829,6 +800,27 @@ object KnnGraph {
         f("stale") * 1000000L / math.max(f("lverts"), 1L),
         appendShare)
     }
+  }
+
+  /** `append_edge_share_1e6` of the link-health stats, from log metadata
+    * alone: the share of `graph`'s rows staged by appends after the last
+    * full rewrite (build, consolidation, OPTIMIZE). A file's staging
+    * version rides in its `d<version>-<nonce>` directory name. */
+  private def appendEdgeShare(graph: graft.operators.CommitTable): Long = {
+    val metaOps = Set("set-invariants", "delete-dv", "rename-column", "drop-column")
+    val lastRebuild = graph.history().select("version", "op").collect()
+      .collect { case r if r.getString(1) != "append" && !metaOps(r.getString(1)) =>
+        r.getLong(0) }.max
+    val fileRows = graph.fileStats().select("path", "n").collect()
+      .map(r => (r.getString(0), r.getLong(1)))
+    def stagedVersion(p: String): Long = {
+      val dir = p.split('/').takeRight(2).head
+      dir.substring(1, dir.indexOf('-')).toLong
+    }
+    val totalRows = fileRows.map(_._2).sum
+    val appendRows = fileRows.collect {
+      case (p, n) if stagedVersion(p) > lastRebuild => n }.sum
+    if (totalRows == 0L) 0L else appendRows * 1000000L / totalRows
   }
 
   /** Removes vectors from a committed graph index — FreshDiskANN's

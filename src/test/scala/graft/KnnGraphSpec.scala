@@ -522,4 +522,26 @@ class KnnGraphSpec extends SparkSpec {
     assert(states(2) === single2, "second-delete fold diverged")
     assert(single2._3 > single1._3, "guard: the states actually differ")
   }
+
+  test("a repeated id in a multi-state delete set counts once") {
+    import spark.implicits._
+    val vecs = clustered(120, dim = 16, seed = 17)
+    val root = java.nio.file.Files.createTempDirectory("graft-knn-dupdel").toString
+    val idx = s"$root/idx"
+    KnnGraph.buildKnnGraphIndex(embDF(vecs), idx, k = 4, rounds = 2)
+    val adj = new graft.operators.CommitTable(spark, s"$idx/graph", "src")
+      .read().select("src", "dst").localCheckpoint(true)
+    def tuple(r: org.apache.spark.sql.Row) =
+      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))
+    val ids = (40L until 60L).toSeq
+    KnnGraph.deleteFromKnnGraphIndex(ids.toDF("vec_id"), idx)
+    val single = tuple(KnnGraph.knnGraphLinkStats(spark, idx, Some(adj)).head())
+    val states = KnnGraph.knnGraphLinkStatsStates(spark, idx, adj,
+      Seq(ids.toDF("vec_id"), (ids ++ ids ++ Seq(41L)).toDF("vec_id"))).map(tuple)
+    assert(single._3 > 0L, "guard: the delete registers")
+    // the fused pass aggregates one joined row set for all states, so a
+    // duplicate in any state's delete set would inflate every state
+    assert(states(0) === single, "distinct delete set diverged from the single-state stats")
+    assert(states(1) === single, "a repeated id must not inflate the counts")
+  }
 }
