@@ -27,4 +27,18 @@ object Num {
 
   /** DuckDB mirror fragment of [[round6]] for inline SQL oracles. */
   def round6Sql(inner: String): String = s"(round($inner, 6) + 0.0)"
+
+  /** Scalar twin of Spark's `round(x).cast("long")` for loops that run
+    * outside Catalyst: HALF_UP on the shortest decimal form of the double
+    * (`BigDecimal.valueOf`, exactly what Spark's `round` reads), so ties
+    * round away from zero and `-0.0` gives `0`.
+    */
+  def halfUp(x: Double): Long =
+    java.math.BigDecimal.valueOf(x).setScale(0, java.math.RoundingMode.HALF_UP).longValue
+
+  /** Scalar twin of [[round6]]: `round(x, 6) + 0.0`, the 1e-6 grid with the
+    * signed zero normalized.
+    */
+  def grid6(x: Double): Double =
+    java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue + 0.0
 }

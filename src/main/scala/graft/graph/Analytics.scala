@@ -1,6 +1,11 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Edge, Graph => XGraph, PartitionStrategy}
+import scala.reflect.ClassTag
+
+import org.apache.spark.Partitioner
+import org.apache.spark.graphx.{Edge, Graph => XGraph, PartitionStrategy, TripletFields, VertexId, VertexRDD}
+import org.apache.spark.graphx.impl.{GraphImpl, VertexRDDImpl}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -15,12 +20,18 @@ import graft.functions.Num
   * same edge-list model, per the project north star (GraphX + Pregel).
   *
   * Implementation split:
-  *  - connectedComponents: GraphX built-in (Pregel BSP — the same
-  *    level-synchronous structure the reference hand-rolls with threads at
-  *    `secondaryServer.c:150-161`).
-  *  - degrees / triangles / pageRank: plain DataFrame plans — joins/aggs, so
-  *    Catalyst + AQE (broadcast, skew splitting) serve better than RDDs, and
-  *    the semantics are exactly SQL-expressible for the DuckDB oracle.
+  *  - connectedComponents / SCC / greedyColoring: GraphX built-ins and Pregel
+  *    (the level-synchronous structure the reference hand-rolls with threads
+  *    at `secondaryServer.c:150-161`).
+  *  - the converged fixpoints (pageRankConverged, katzConverged, coreness,
+  *    louvainSweep / louvain): GraphX vertex-program loops — the edges are
+  *    partitioned once (`EdgePartition2D`) and cached, and each round is one
+  *    `aggregateMessages` plus one vertex join, run as one Spark job with
+  *    no per-round query planning (see [[Fixpoint]]).
+  *  - degrees / triangles / fixed-iteration pageRank and the one-pass
+  *    operators: plain DataFrame plans — joins/aggs, so Catalyst + AQE
+  *    (broadcast, skew splitting) serve better than RDDs, and the semantics
+  *    are exactly SQL-expressible for the DuckDB oracle.
   */
 object Analytics {
 
@@ -172,6 +183,7 @@ object Analytics {
     * micro-units plus the (data-dependent) iteration count, which the
     * oracle must therefore DERIVE, not assume: the mirror is an
     * independent sequential power iteration applying the identical rule.
+    * No edges → zero rows.
     *
     * Exactness contract (what makes a data-dependent STOPPING DECISION
     * safe across engines): per-edge contributions quantize to integer
@@ -179,51 +191,19 @@ object Analytics {
     * discipline), each round's ranks re-quantize to the 1e-6 grid, and the
     * delta test compares grid values in integer micro-units — so both
     * engines iterate from EXACTLY equal state and stop on the same round
-    * by construction, never by last-ulp luck.
+    * by construction, never by last-ulp luck. Rounding is Spark's `round`
+    * ([[Num.halfUp]], [[Num.grid6]]).
     *
-    * Scale shape: identical to [[pageRank]]'s loop (edge relation
-    * partitioned once; per round one vertex-sized shuffle) plus ONE 1-row
-    * max-delta aggregate per round to the driver — the convergence check
-    * is a long per iteration, not data.
+    * Scale shape: [[convergedPower]] — the deduped edge relation is
+    * partitioned once; per round one `aggregateMessages` (vertex-sized
+    * traffic) and one vertex join, in one Spark job whose only result is
+    * the round's max micro-delta, a single long.
     */
   def pageRankConverged(edges: DataFrame, tolE6: Long = 100L, maxIter: Int = 60): DataFrame = {
     require(tolE6 >= 1, s"pageRankConverged: tolE6 must be >= 1, got $tolE6")
     require(maxIter >= 1, s"pageRankConverged: maxIter must be >= 1, got $maxIter")
-    val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .distinct()
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val v = vertices(e).localCheckpoint(true)
-      val outdeg = e.groupBy("src").agg(count(lit(1)).as("d"))
-      val weighted = e.join(outdeg, "src")
-        .select(col("src"), col("dst"), (lit(1.0) / col("d")).as("w"))
-        .repartition(col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        var ranks = v.withColumn("pr", lit(1.0)).localCheckpoint(true)
-        var iters = 0
-        var deltaE6 = Long.MaxValue
-        while (iters < maxIter && deltaE6 > tolE6) {
-          val inbound = weighted.join(ranks, weighted("src") === ranks("vertex"))
-            .groupBy(col("dst").as("vertex"))
-            .agg(sum(round(col("pr") * col("w") * lit(1e9)).cast("long")).as("m_nano"))
-          val next = v.join(inbound, Seq("vertex"), "left_outer")
-            .select(col("vertex"), graft.functions.Num.round6(
-              lit(0.15) + lit(0.85) * (coalesce(col("m_nano"), lit(0L)) / lit(1e9))).as("pr"))
-            .localCheckpoint(true)
-          deltaE6 = next.as("n").join(ranks.select(col("vertex"), col("pr").as("opr")), "vertex")
-            .agg(max(abs(round((col("pr") - col("opr")) * lit(1e6)).cast("long"))))
-            .head().getLong(0) // ONE long per round, by design
-          ranks = next
-          iters += 1
-        }
-        ranks.select(col("vertex"),
-            round(col("pr") * lit(1e6)).cast("long").as("pr_e6"),
-            lit(iters.toLong).as("n_iter"))
-          .orderBy("vertex")
-      } finally weighted.unpersist(blocking = false)
-    } finally e.unpersist(blocking = false)
+    convergedPower(edges, tolE6, maxIter, "pr_e6", outDeg => 1.0 / outDeg,
+      mNano => Num.grid6(0.15 + 0.85 * (mNano / 1e9)))
   }
 
   /** Katz centrality, delta-converged — the attenuation-based centrality
@@ -235,11 +215,11 @@ object Analytics {
     * `alphaE3` is the attenuation in thousandths (must keep `α < 1/λ_max`
     * for convergence; the `maxIter` cap bounds a divergent choice loudly
     * rather than looping forever — `n_iter = maxIter` in the output IS the
-    * non-convergence signal). Same engine-exactness contract as
+    * non-convergence signal). Same engine-exactness contract and loop as
     * [[pageRankConverged]]: per-edge contributions quantize to integer
     * nanos pre-sum, scores re-quantize to the 1e-6 grid per round, stop on
     * an integer micro-delta — the mirror stops on the identical round.
-    * Returns `(vertex, katz_e6, n_iter)`.
+    * Returns `(vertex, katz_e6, n_iter)`; no edges → zero rows.
     */
   def katzConverged(edges: DataFrame, alphaE3: Long = 50L, tolE6: Long = 100L,
                     maxIter: Int = 60): DataFrame = {
@@ -247,33 +227,128 @@ object Analytics {
     require(tolE6 >= 1, s"katzConverged: tolE6 must be >= 1, got $tolE6")
     require(maxIter >= 1, s"katzConverged: maxIter must be >= 1, got $maxIter")
     val alpha = alphaE3 / 1000.0
-    val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .distinct()
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    convergedPower(edges, tolE6, maxIter, "katz_e6", _ => alpha,
+      mNano => Num.grid6(1.0 + mNano / 1e9))
+  }
+
+  /** The converged power iteration shared by [[pageRankConverged]] and
+    * [[katzConverged]] over the distinct directed edges (self-loops kept):
+    * x_0 = 1; per round every edge sends `halfUp(x(src) · w · 1e9)` nanos
+    * with `w = weight(outdeg(src))`, and `x'(v) = step(Σ nanos into v)`;
+    * stop once the max integer micro-delta is `≤ tolE6` or after
+    * `maxIter` rounds. Returns `(vertex, valueCol, n_iter)` sorted.
+    */
+  private def convergedPower(edges: DataFrame, tolE6: Long, maxIter: Int, valueCol: String,
+                             weight: Int => Double, step: Long => Double): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    // one shuffle dedups the pairs and counts each source's out-degree
+    val weighted = longPairs(edges).groupByKey().flatMap { case (s, ds) =>
+      val out = ds.toSet
+      val w = weight(out.size)
+      out.iterator.map(d => Edge(s, d, w))
+    }
+    val fx = new Fixpoint(weighted, 1.0)
     try {
-      val v = vertices(e).localCheckpoint(true)
-      var x = v.withColumn("x", lit(1.0)).localCheckpoint(true)
+      var x = Fixpoint.cut(fx.graph.vertices)
       var iters = 0
       var deltaE6 = Long.MaxValue
       while (iters < maxIter && deltaE6 > tolE6) {
-        val inbound = e.join(x, e("src") === x("vertex"))
-          .groupBy(col("dst").as("vertex"))
-          .agg(sum(round(col("x") * lit(alpha) * lit(1e9)).cast("long")).as("m_nano"))
-        val next = v.join(inbound, Seq("vertex"), "left_outer")
-          .select(col("vertex"), graft.functions.Num.round6(
-            lit(1.0) + coalesce(col("m_nano"), lit(0L)) / lit(1e9)).as("x"))
-          .localCheckpoint(true)
-        deltaE6 = next.as("n").join(x.select(col("vertex"), col("x").as("ox")), "vertex")
-          .agg(max(abs(round((col("x") - col("ox")) * lit(1e6)).cast("long"))))
-          .head().getLong(0)
-        x = next
+        val prev = x
+        val inbound = fx.on(prev).aggregateMessages[Long](
+          t => t.sendToDst(Num.halfUp(t.srcAttr * t.attr * 1e9)), _ + _, TripletFields.Src)
+        x = Fixpoint.cut(prev.leftJoin(inbound)((_, _, m) => step(m.getOrElse(0L))))
+        deltaE6 = x.innerZipJoin(prev)((_, a, b) => math.abs(Num.halfUp((a - b) * 1e6)))
+          .values.fold(0L)(_ max _) // the round's one job; 0 on an empty graph
         iters += 1
       }
-      x.select(col("vertex"), round(col("x") * lit(1e6)).cast("long").as("katz_e6"),
-          lit(iters.toLong).as("n_iter"))
+      val n = iters.toLong
+      x.map { case (v, a) => (v, Num.halfUp(a * 1e6), n) }.toDF("vertex", valueCol, "n_iter")
         .orderBy("vertex")
-    } finally e.unpersist(blocking = false)
+    } finally fx.release()
+  }
+
+  /** `(src, dst)` as longs, straight from the frame (no dedup). */
+  private def longPairs(edges: DataFrame): RDD[(Long, Long)] = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)].rdd
+  }
+
+  /** The simple undirected graph as canonical `(a < b)` pairs: self-loops
+    * dropped, parallel and reversed duplicates collapsed.
+    */
+  private def simplePairs(edges: DataFrame): RDD[(Long, Long)] =
+    longPairs(edges).flatMap { case (s, d) =>
+      if (s == d) None else Some((math.min(s, d), math.max(s, d)))
+    }.distinct()
+
+  /** The edge side of a GraphX fixpoint loop: `edges` partitioned once
+    * (`EdgePartition2D`, one shuffle) and cached for every round; the
+    * vertices are their endpoints, starting at `init`. Vertex state is a
+    * `VertexRDD[VD]` over the graph's vertex index (`graph.vertices` and
+    * everything derived from it by `mapValues` / joins), so [[on]] pairs a
+    * round's state with the fixed edges without a shuffle, and
+    * `aggregateMessages` on that graph ships only the vertex values.
+    */
+  private final class Fixpoint[VD: ClassTag, ED: ClassTag](edges: RDD[Edge[ED]], init: VD) {
+    val graph: XGraph[VD, ED] = {
+      val n = math.max(1, edges.getNumPartitions)
+      val placed = edges
+        .map(e => (PartitionStrategy.EdgePartition2D.getPartition(e.srcId, e.dstId, n), e))
+        .partitionBy(new PartitionIdPassthrough(n))
+        .values
+      XGraph.fromEdges(placed, init, StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
+    }
+
+    def on(state: VertexRDD[VD]): XGraph[VD, ED] =
+      GraphImpl.fromExistingRDDs(state, graph.edges)
+
+    /** Drops the cached edges. States stay readable: a materialized state
+      * is a local checkpoint, independent of the edges. */
+    def release(): Unit = graph.edges.unpersist(blocking = false)
+  }
+
+  private object Fixpoint {
+
+    /** Caches a round's vertex state and cuts its lineage when the round's
+      * job materializes it, so lineage (and task size) stays one round deep
+      * however many rounds run. The cut is a local checkpoint that is never
+      * unpersisted by hand: once the next round's state replaces it, nothing
+      * references it and the context cleaner drops its blocks.
+      */
+    def cut[VD](state: VertexRDD[VD]): VertexRDD[VD] = {
+      state.asInstanceOf[VertexRDDImpl[VD]].partitionsRDD.localCheckpoint()
+      state
+    }
+
+    /** `table(key(a))` for every vertex state `a`, without a join keyed by
+      * the looked-up key: each vertex partition asks once per distinct key
+      * it holds and gets the answers back by partition id, so a key shared
+      * by a million vertices (one giant community) moves one row per
+      * partition, never its members' rows through one task. Every asked key
+      * must be in `table`.
+      */
+    def lookup[VD, T: ClassTag](state: VertexRDD[VD], key: VD => Long,
+                                table: RDD[(Long, T)]): VertexRDD[T] = {
+      val parts = state.getNumPartitions
+      val asks = state.mapPartitionsWithIndex { (pid, it) =>
+        it.map { case (_, a) => key(a) }.toSet.iterator.map((k: Long) => (k, pid))
+      }
+      val answers = asks.join(table)
+        .map { case (k, (pid, t)) => (pid, (k, t)) }
+        .partitionBy(new PartitionIdPassthrough(parts))
+      val found = state.zipPartitions(answers, preservesPartitioning = true) { (vs, as) =>
+        val byKey = as.map(_._2).toMap
+        vs.map { case (v, a) => (v, byKey(key(a))) }
+      }
+      state.innerJoin(found)((_, _, t) => t) // co-partitioned: no shuffle
+    }
+  }
+
+  /** Routes a `(partition id, _)` pair to that partition. */
+  private final class PartitionIdPassthrough(override val numPartitions: Int) extends Partitioner {
+    override def getPartition(key: Any): Int = key.asInstanceOf[Int]
   }
 
   /** Shared power-iteration loop: rank' = base + 0.85 · Σ inbound rank·w,
@@ -1303,22 +1378,21 @@ object Analytics {
     * sweep optimizes the actual modularity objective [[modularity]]
     * scores.
     *
-    * Scale shape per round: neighbor-community counts are one edge-pass
-    * aggregation keyed (v, c); community masses one vertex-sized
-    * aggregation; the move is a grouped integer argmax (max_by struct) —
-    * all map-side combinable, nothing exceeds the edge pass. Integer
-    * range: |score| ≤ 2m·deg — at 10¹² edges and 10⁶-degree hubs this
-    * brushes Long range; shift to DECIMAL(38,0) sums past that.
+    * Scale shape per round (see [[sweep]]): one GraphX round over the
+    * edges partitioned once — community masses reach every vertex through
+    * a per-partition lookup, neighbors offer `(label, mass, w)` along the
+    * triplets, and each vertex of the moving parity picks its move from
+    * those local offers; one job per round. Integer range: |score| ≤
+    * 2m·deg — at 10¹² edges and 10⁶-degree hubs this brushes Long range.
+    * No edges (or only self-loops) → zero rows.
     */
   def louvainSweep(edges: DataFrame, rounds: Int = 4): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val und = edges
-      .select(col("src").cast("long").as("s"), col("dst").cast("long").as("d"))
-      .filter(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-      .distinct()
-      .withColumn("w", lit(1L))
-    sweepWeighted(und, rounds).orderBy("vertex")
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val fx = new Fixpoint(simplePairs(edges).map { case (a, b) => Edge(a, b, 1L) }, noLabel)
+    try sweep(fx, rounds).mapValues(_._1).toDF("vertex", "label").orderBy("vertex")
+    finally fx.release()
   }
 
   /** Weighted local-move core shared by [[louvainSweep]] (w ≡ 1) and
@@ -1330,49 +1404,64 @@ object Analytics {
     * Σ_{u≠v} w(v,u) + 2·w(v,v), e_vc = Σ_{u∈c, u≠v} w(v,u), and the move
     * score is the cross-multiplied ΔQ numerator `2W·e_vc − k_v·dC(c)` —
     * engine-exact, no float discipline. Parity-alternating half-sweeps as
-    * documented on [[louvainSweep]]. Returns `(vertex, label)` (unsorted).
+    * documented on [[louvainSweep]]; a vertex moves iff
+    * `floorMod(vertex, 2) == round % 2`. Returns the last round's
+    * [[Community]] state.
+    *
+    * Per round: every vertex learns its community's mass by [[Fixpoint.lookup]]
+    * (masses summed map-side by label), then each proper edge offers
+    * `label → (mass, w)` to its endpoints of the moving parity, and the
+    * vertex join takes the best-scoring offer (own community included).
+    * The round's one job materializes the moved state.
     */
-  private def sweepWeighted(und: DataFrame, rounds: Int): DataFrame = {
-    val u = und.localCheckpoint(true) // reused every round
-    val proper = u.filter(col("a") =!= col("b"))
-    val adj = proper.select(col("a").as("v"), col("b").as("u"), col("w"))
-      .union(proper.select(col("b").as("v"), col("a").as("u"), col("w")))
-    val deg = adj.select(col("v"), col("w").as("dw"))
-      .union(u.filter(col("a") === col("b")).select(col("a").as("v"), (col("w") * 2).as("dw")))
-      .groupBy("v").agg(sum(col("dw")).cast("long").as("deg"))
-    val mDf = broadcast(u.agg(sum(col("w")).cast("long").as("m")))
-    var labels = deg.select(col("v").as("vertex"), col("v").as("label"))
-      .localCheckpoint(true)
-    for (r <- 1 to rounds) {
-      val mass = deg.join(labels, deg("v") === labels("vertex"))
-        .groupBy("label").agg(sum(col("deg")).cast("long").as("mass"))
-      // neighbor-community edge weights e_vc, plus the own community as a
-      // zero-weight candidate (summed in so an own-community duplicate
-      // collapses instead of double-counting)
-      val nc = adj.join(labels, adj("u") === labels("vertex"))
-        .select(col("v"), col("label").as("c"), col("w").cast("long").as("e"))
-        .union(labels.select(col("vertex").as("v"), col("label").as("c"), lit(0L).as("e")))
-        .groupBy("v", "c").agg(sum(col("e")).as("e"))
-      val own = labels.select(col("vertex").as("v"), col("label").as("own"))
-      val moved = nc
-        .join(own, "v")
-        .join(deg, "v")
-        .join(mass.select(col("label").as("c"), col("mass")), "c")
-        .crossJoin(mDf)
-        .withColumn("dc", col("mass") - when(col("c") === col("own"), col("deg")).otherwise(lit(0L)))
-        .withColumn("score", lit(2L) * col("m") * col("e") - col("deg") * col("dc"))
-        // integer argmax, ties to the SMALLEST community label
-        .groupBy(col("v").as("vertex"))
-        .agg(max(struct(col("score"), (-col("c")).as("nc"), col("c"))).as("mx"))
-        .select(col("vertex"), col("mx.c").as("moved"))
-      // only this round's parity class executes its move
-      labels = labels.join(moved, Seq("vertex"))
-        .select(col("vertex"),
-          when(pmod(col("vertex"), lit(2)) === lit(r % 2), col("moved"))
-            .otherwise(col("label")).as("label"))
-        .localCheckpoint(true)
+  private def sweep(fx: Fixpoint[Community, Long], rounds: Int): VertexRDD[Community] = {
+    val deg = fx.graph.aggregateMessages[Long](t =>
+      if (t.srcId == t.dstId) t.sendToSrc(2 * t.attr)
+      else { t.sendToSrc(t.attr); t.sendToDst(t.attr) }, _ + _, TripletFields.EdgeOnly)
+    var state = Fixpoint.cut(deg.mapValues((v, k) => (v, k, 0L)))
+    if (rounds > 0) {
+      val twoW = state.values.map(_._2).fold(0L)(_ + _) // Σk = 2W
+      for (r <- 1 to rounds) {
+        val prev = state
+        val mass = Fixpoint.lookup(prev, (s: Community) => s._1,
+          prev.values.map(s => (s._1, s._2)).reduceByKey(_ + _))
+        val withMass = prev.innerZipJoin(mass)((_, s, m) => (s._1, s._2, m))
+        def moves(v: VertexId) = Math.floorMod(v, 2L) == r % 2
+        val offers = fx.on(withMass).aggregateMessages[Map[Long, (Long, Long)]](t =>
+          if (t.srcId != t.dstId) {
+            if (moves(t.dstId)) t.sendToDst(Map(t.srcAttr._1 -> (t.srcAttr._3, t.attr)))
+            if (moves(t.srcId)) t.sendToSrc(Map(t.dstAttr._1 -> (t.dstAttr._3, t.attr)))
+          }, mergeOffers)
+        state = Fixpoint.cut(withMass.leftJoin(offers) { case (v, s @ (own, k, ownMass), o) =>
+          if (!moves(v)) s
+          else {
+            val cands = o.getOrElse(Map.empty[Long, (Long, Long)])
+            val stay = twoW * cands.get(own).fold(0L)(_._2) - k * (ownMass - k)
+            val scores = Iterator(own -> stay) ++
+              cands.iterator.collect { case (c, (m, e)) if c != own => c -> (twoW * e - k * m) }
+            // integer argmax, ties to the SMALLEST community label
+            (scores.maxBy { case (c, score) => (score, -c) }._1, k, ownMass)
+          }
+        })
+        state.count() // the round's one job
+      }
     }
-    labels
+    state
+  }
+
+  /** A Louvain vertex: `(label, k_v, mass of the label)`; the mass is
+    * refreshed at the start of every round. */
+  private type Community = (Long, Long, Long)
+  private val noLabel: Community = (0L, 0L, 0L)
+
+  /** Sums two vertices' offers per community label (the mass is the
+    * label's, equal in both). */
+  private def mergeOffers(a: Map[Long, (Long, Long)],
+                          b: Map[Long, (Long, Long)]): Map[Long, (Long, Long)] = {
+    val (big, small) = if (a.size >= b.size) (a, b) else (b, a)
+    small.foldLeft(big) { case (acc, (c, (m, e))) =>
+      acc.updated(c, (m, acc.get(c).fold(e)(_._2 + e)))
+    }
   }
 
   /** Full two-phase Louvain (Blondel et al. 2008): the local-move sweep,
@@ -1389,35 +1478,37 @@ object Analytics {
     * scores, and the coarse vertex ids ARE the level-1 community labels
     * (vertex ids), so parity alternation is well-defined on both
     * engines. `(vertex, label)` — label = the level-2 community of v's
-    * level-1 community.
+    * level-1 community. No edges (or only self-loops) → zero rows.
     *
-    * Scale shape: level 1 is [[sweepWeighted]] (edge-pass aggregations per
-    * round); the contraction is ONE map of the canonical edge relation
-    * through the vertex-sized label table (two joins) + one (a, b) sum —
-    * after which the level-2 graph is community-count-sized, typically
-    * orders of magnitude smaller; its sweep costs a fraction of level 1.
+    * Scale shape: level 1 is [[sweep]] (one job per round); the
+    * contraction maps the level-1 edges through the labels on their
+    * triplets and sums per coarse `(a, b)` (map-side combined) — after
+    * which the level-2 graph is community-count-sized, typically orders
+    * of magnitude smaller; its sweep costs a fraction of level 1. The
+    * labels unfold by [[Fixpoint.lookup]], so a giant community is never
+    * a skewed join key.
     */
   def louvain(edges: DataFrame, rounds: Int = 4): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val und1 = edges
-      .select(col("src").cast("long").as("s"), col("dst").cast("long").as("d"))
-      .filter(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-      .distinct()
-      .withColumn("w", lit(1L))
-      .localCheckpoint(true) // reused: level-1 sweep AND the contraction
-    val l1 = sweepWeighted(und1, rounds).localCheckpoint(true)
-    val coarse = und1
-      .join(l1.select(col("vertex").as("a"), col("label").as("la")), "a")
-      .join(l1.select(col("vertex").as("b"), col("label").as("lb")), "b")
-      .select(least(col("la"), col("lb")).as("a"),
-        greatest(col("la"), col("lb")).as("b"), col("w"))
-      .groupBy("a", "b").agg(sum(col("w")).cast("long").as("w"))
-    val l2 = sweepWeighted(coarse, rounds)
-    l1.select(col("vertex"), col("label").as("c1"))
-      .join(l2.select(col("vertex").as("c1"), col("label")), "c1")
-      .select(col("vertex"), col("label"))
-      .orderBy("vertex")
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val fx1 = new Fixpoint(simplePairs(edges).map { case (a, b) => Edge(a, b, 1L) }, noLabel)
+    try {
+      val l1 = sweep(fx1, rounds)
+      val coarse = fx1.on(l1).triplets
+        .map { t =>
+          val (la, lb) = (t.srcAttr._1, t.dstAttr._1)
+          ((math.min(la, lb), math.max(la, lb)), t.attr)
+        }
+        .reduceByKey(_ + _)
+        .map { case ((a, b), w) => Edge(a, b, w) }
+      val fx2 = new Fixpoint(coarse, noLabel)
+      try {
+        val l2 = sweep(fx2, rounds)
+        Fixpoint.lookup(l1, (s: Community) => s._1, l2.mapValues(_._1))
+          .toDF("vertex", "label").orderBy("vertex")
+      } finally fx2.release()
+    } finally fx1.release()
   }
 
   /** Minimum spanning forest — Borůvka rounds, the parallel MST algorithm
@@ -1803,39 +1894,47 @@ object Analytics {
     * independent Batagelj–Zaversnik min-degree peeling — a different
     * algorithm entirely, agreeing only because both are exact.
     * Returns `(vertex, coreness)` sorted; converges in a handful of rounds
-    * on real graphs (loud cap), each round one edge pass + one
-    * vertex-keyed H-index aggregate (`max(least(rank, c))` over the
-    * desc-sorted neighbor values — a window + aggregate, no iteration
-    * over h).
+    * on real graphs (loud cap).
     *
-    * Scale: the edge relation partitions once (checkpointed); per round
-    * only vertex-sized (v, c) tables shuffle. Convergence detection is one
-    * `count()` of changed vertices — rounds stop exactly at the fixpoint
-    * instead of a guessed iteration count.
+    * Scale: a GraphX loop over the simple undirected edges, partitioned
+    * once. Per round each vertex gathers its neighbors' values with one
+    * `aggregateMessages` (a hub's list is degree-sized) and takes their
+    * H-index in the vertex join; the round's one job returns the count of
+    * changed vertices, so rounds stop exactly at the fixpoint instead of
+    * a guessed iteration count. No edges (or only self-loops) → zero rows.
     */
   def coreness(edges: DataFrame, maxRounds: Int = 128): DataFrame = {
-    val sym = symmetric(edges)
-    var c = sym.groupBy(col("a").as("vertex")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("a").orderBy(col("nc").desc, col("b"))
-    var rounds = 0
-    var changed = 1L
-    while (changed > 0) {
-      rounds += 1
-      require(rounds <= maxRounds,
-        s"coreness exceeded $maxRounds rounds — check the graph")
-      val next = sym
-        .join(c.select(col("vertex").as("b"), col("c").as("nc")), "b")
-        .withColumn("rn", row_number().over(w))
-        .groupBy(col("a").as("vertex"))
-        .agg(max(least(col("rn").cast("long"), col("nc"))).as("c"))
-        .localCheckpoint(true)
-      changed = next.join(c.withColumnRenamed("c", "c0"), "vertex")
-        .filter(col("c") =!= col("c0")).count()
-      c = next
-    }
-    c.select(col("vertex"), col("c").as("coreness")).orderBy("vertex")
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val fx = new Fixpoint(simplePairs(edges).map { case (a, b) => Edge(a, b, ()) }, 0L)
+    try {
+      var c = Fixpoint.cut(fx.graph.degrees.mapValues(_.toLong))
+      var rounds = 0
+      var changed = 1L
+      while (changed > 0) {
+        rounds += 1
+        require(rounds <= maxRounds,
+          s"coreness exceeded $maxRounds rounds — check the graph")
+        val prev = c
+        // `b ::: a` keeps each merge linear in the incoming list
+        val nbrs = fx.on(prev).aggregateMessages[List[Long]](t => {
+          t.sendToDst(List(t.srcAttr))
+          t.sendToSrc(List(t.dstAttr))
+        }, (a, b) => b ::: a)
+        c = Fixpoint.cut(prev.leftJoin(nbrs)((_, _, ns) => hIndex(ns.getOrElse(Nil))))
+        changed = c.innerZipJoin(prev)((_, a, b) => if (a != b) 1L else 0L)
+          .values.fold(0L)(_ + _)
+      }
+      c.toDF("vertex", "coreness").orderBy("vertex")
+    } finally fx.release()
+  }
+
+  /** The largest h such that at least h of `values` are ≥ h. */
+  private def hIndex(values: List[Long]): Long = {
+    val desc = values.toArray.sortInPlace()(Ordering.Long.reverse)
+    var h = 0L
+    while (h < desc.length && desc(h.toInt) >= h + 1) h += 1
+    h
   }
 
   /** HyperBall (Boldi & Vigna 2013) — the approximate per-vertex

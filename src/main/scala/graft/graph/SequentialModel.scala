@@ -519,7 +519,7 @@ object SequentialModel {
     * ranks re-quantized to the 1e-6 grid each round (HALF_UP like Spark's
     * `round`, signed zero normalized), stop when the max integer
     * micro-delta reaches `tolE6` or at `maxIter`. Returns
-    * `(vertex, pr_e6, n_iter)` sorted.
+    * `(vertex, pr_e6, n_iter)` sorted; no edges → no rows.
     */
   def pageRankConverged(edges: Seq[(Long, Long)], tolE6: Long = 100L,
                         maxIter: Int = 60): Seq[(Long, Long, Long)] = {
@@ -539,7 +539,7 @@ object SequentialModel {
         mNano(d) += halfUp(pr(s) * (1.0 / out(s)) * 1e9)
       }
       val next = vs.map(v => v -> grid6(0.15 + 0.85 * (mNano(v) / 1e9))).toMap
-      delta = vs.map(v => math.abs(halfUp((next(v) - pr(v)) * 1e6))).max
+      delta = vs.map(v => math.abs(halfUp((next(v) - pr(v)) * 1e6))).maxOption.getOrElse(0L)
       pr = next
       iters += 1
     }
@@ -548,7 +548,8 @@ object SequentialModel {
 
   /** Sequential mirror of `Analytics.katzConverged` — own loop, shared
     * exactness contract (nano-quantized contributions, 1e-6 grid,
-    * integer micro-delta stop). Returns `(vertex, katz_e6, n_iter)`. */
+    * integer micro-delta stop). Returns `(vertex, katz_e6, n_iter)`; no
+    * edges → no rows. */
   def katzConverged(edges: Seq[(Long, Long)], alphaE3: Long = 50L,
                     tolE6: Long = 100L, maxIter: Int = 60): Seq[(Long, Long, Long)] = {
     val alpha = alphaE3 / 1000.0
@@ -565,7 +566,7 @@ object SequentialModel {
       val mNano = scala.collection.mutable.Map.empty[Long, Long].withDefaultValue(0L)
       dedup.foreach { case (s, d) => mNano(d) += halfUp(xr(s) * alpha * 1e9) }
       val next = vs.map(v => v -> grid6(1.0 + mNano(v) / 1e9)).toMap
-      delta = vs.map(v => math.abs(halfUp((next(v) - xr(v)) * 1e6))).max
+      delta = vs.map(v => math.abs(halfUp((next(v) - xr(v)) * 1e6))).maxOption.getOrElse(0L)
       xr = next
       iters += 1
     }

@@ -205,8 +205,9 @@ private[graft] object GraphQueries {
     Query("g64_katz", (s, dir) => // Katz centrality, delta-converged: the
       // attenuation-walk centrality completing the family — unlike
       // PageRank it does not out-degree-normalize; same engine-exact
-      // stopping contract as g63 (nano contributions, 1e-6 grid,
-      // integer micro-delta), oracle = independent sequential fixpoint
+      // stopping contract and GraphX loop as g63 (nano contributions,
+      // 1e-6 grid, integer micro-delta), oracle = independent sequential
+      // fixpoint
       // alphaE3 = 10: the gate graph's max out-degree at bench scale is
       // ~39, so alpha*maxdeg <= 0.39 < 1 guarantees convergence (0.05
       // diverged at sf0.1 — deterministically and mirror-equal, but a
@@ -219,8 +220,9 @@ private[graft] object GraphQueries {
       // (the production stopping rule): per-round integer-nano
       // contribution quantization + 1e-6 rank grid make the
       // DATA-DEPENDENT stopping decision engine-exact — both engines
-      // stop on the same round by construction; oracle = an independent
-      // sequential power iteration applying the identical rule
+      // stop on the same round by construction; a GraphX loop, one job
+      // per round; oracle = an independent sequential power iteration
+      // applying the identical rule
       Analytics.pageRankConverged(DerivedGraphs.small(s, dir)),
       Derived(in => values("vertex" -> "BIGINT", "pr_e6" -> "BIGINT", "n_iter" -> "BIGINT")(
         SequentialModel.pageRankConverged(in.smallEdges, tolE6 = 100L,
@@ -571,9 +573,10 @@ private[graft] object GraphQueries {
         SequentialModel.greedyMatching(in.smallEdges), "a, b"))),
     Query("g51_coreness", (s, dir) =>
       // FULL core decomposition (g14 answers one k): H-index fixpoint
-      // from c=deg — per round one edge pass + a vertex-keyed
-      // max(least(rank, c)) H-index aggregate, convergence-detected;
-      // oracle = independent Batagelj–Zaversnik min-degree peeling
+      // from c=deg as a GraphX loop — per round neighbor values gathered
+      // by aggregateMessages, the H-index taken in the vertex join, one
+      // job that counts changed vertices; oracle = independent
+      // Batagelj–Zaversnik min-degree peeling
       Analytics.coreness(DerivedGraphs.small(s, dir)),
       Derived(in => values("vertex" -> "BIGINT", "coreness" -> "BIGINT")(
         SequentialModel.coreness(in.smallEdges).toSeq.sorted, "vertex"))),
@@ -668,7 +671,9 @@ private[graft] object GraphQueries {
       // trick), so the argmax needs no float discipline; optimizes the
       // objective g36 scores, where g15's LPA only chases majorities;
       // parity-alternating half-sweeps (4 rounds = 2 full alternations)
-      // break the simultaneous-move oscillation
+      // break the simultaneous-move oscillation; a GraphX loop where
+      // neighbors offer (label, mass, w) and each vertex moves on local
+      // data, one job per round
       Analytics.louvainSweep(DerivedGraphs.small(s, dir), rounds = 4),
       Derived(in => values("vertex" -> "BIGINT", "label" -> "BIGINT")(
         SequentialModel.louvainSweep(in.smallEdges, rounds = 4).toSeq.sorted, "vertex"))),
@@ -677,7 +682,8 @@ private[graft] object GraphQueries {
       // intra mass becomes the super-vertex self-loop) and a re-sweep of
       // the coarse weighted graph — a level-2 move relocates an entire
       // level-1 community at once, the multi-level refinement the sweep
-      // alone can't express; labels unfold through the level-1 assignment;
+      // alone can't express; the contraction maps the edges through the
+      // level-1 labels, and labels unfold through the level-1 assignment;
       // exact-integer scores at both levels, vs an independent sequential
       // mirror
       Analytics.louvain(DerivedGraphs.small(s, dir), rounds = 4),

@@ -127,6 +127,40 @@ object AnalyticsProps extends Properties("Analytics") {
       Prop(got == want) :| s"rounds=$rounds got $got want $want"
     }
 
+  property("pageRankConverged == sequential mirror, iteration count included") =
+    Prop.forAll(genGraph) { edges =>
+      val got = Analytics.pageRankConverged(df(edges)).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      val want = graft.graph.SequentialModel.pageRankConverged(edges)
+      Prop(got == want) :| s"got $got want $want"
+    }
+
+  // genGraph has at most 20 distinct sources per vertex, so the spectral
+  // radius is ≤ 20 and alpha = 0.03 keeps alpha·λ ≤ 0.6 < 1: it converges
+  property("katzConverged == sequential mirror (convergent alpha)") =
+    Prop.forAll(genGraph) { edges =>
+      val got = Analytics.katzConverged(df(edges), alphaE3 = 30L, tolE6 = 10L).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      val want = graft.graph.SequentialModel.katzConverged(edges, alphaE3 = 30L, tolE6 = 10L)
+      Prop(got == want) :| s"got $got want $want"
+    }
+
+  property("coreness == Batagelj–Zaversnik peeling") =
+    Prop.forAll(genGraph) { edges =>
+      val got = Analytics.coreness(df(edges)).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val want = graft.graph.SequentialModel.coreness(edges)
+      Prop(got == want) :| s"got $got want $want"
+    }
+
+  property("louvain (two levels) == sequential mirror") =
+    Prop.forAll(genGraph, Gen.choose(0, 4)) { (edges, rounds) =>
+      val got = Analytics.louvain(df(edges), rounds).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val want = graft.graph.SequentialModel.louvain(edges, rounds)
+      Prop(got == want) :| s"rounds=$rounds got $got want $want"
+    }
+
   property("matrix write/read round-trips any 1-based graph") =
     Prop.forAll(genGraph) { edges =>
       val oneBased = edges.map(p => (p._1 + 1, p._2 + 1)).distinct
