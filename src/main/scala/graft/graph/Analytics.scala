@@ -1,11 +1,6 @@
 package graft.graph
 
-import scala.reflect.ClassTag
-
-import org.apache.spark.Partitioner
-import org.apache.spark.graphx.{Edge, Graph => XGraph, PartitionStrategy, TripletFields, VertexId, VertexRDD}
-import org.apache.spark.graphx.impl.{GraphImpl, VertexRDDImpl}
-import org.apache.spark.rdd.RDD
+import org.apache.spark.graphx.{Edge, EdgeDirection, Graph => XGraph, Pregel, TripletFields, VertexId, VertexRDD}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -20,14 +15,15 @@ import graft.functions.Num
   * same edge-list model, per the project north star (GraphX + Pregel).
   *
   * Implementation split:
-  *  - connectedComponents / SCC / greedyColoring: GraphX built-ins and Pregel
-  *    (the level-synchronous structure the reference hand-rolls with threads
-  *    at `secondaryServer.c:150-161`).
+  *  - connectedComponents / SCC / topoLayers / greedyColoring: GraphX
+  *    built-ins and Pregel (the level-synchronous structure the reference
+  *    hand-rolls with threads at `secondaryServer.c:150-161`), each one
+  *    [[GraphLoop.run]] over a graph [[GraphLoop.place]]d once.
   *  - the converged fixpoints (pageRankConverged, katzConverged, coreness,
-  *    louvainSweep / louvain): GraphX vertex-program loops — the edges are
-  *    partitioned once (`EdgePartition2D`) and cached, and each round is one
-  *    `aggregateMessages` plus one vertex join, run as one Spark job with
-  *    no per-round query planning (see [[Fixpoint]]).
+  *    louvainSweep / louvain): GraphX vertex-program loops over a placed
+  *    graph — each round is one `aggregateMessages` plus one vertex join,
+  *    run as one Spark job with no per-round query planning, its state cut
+  *    by [[GraphLoop.cut]].
   *  - degrees / triangles / fixed-iteration pageRank and the one-pass
   *    operators: plain DataFrame plans — joins/aggs, so Catalyst + AQE
   *    (broadcast, skew splitting) serve better than RDDs, and the semantics
@@ -71,21 +67,8 @@ object Analytics {
   def connectedComponents(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val edgeRdd = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)].rdd.map { case (s, d) => Edge(s, d, ()) }
-    val g = XGraph.fromEdges(edgeRdd, (), StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-      .partitionBy(PartitionStrategy.EdgePartition2D)
-    val cc = g.connectedComponents()
-    // materialize before unpersisting BOTH graphs — connectedComponents()
-    // returns an internally-cached graph that would otherwise leak across
-    // repeated queries in one session
-    val out = cc.vertices.map { case (v, c) => (v, c) }.toDF("vertex", "component")
-      .localCheckpoint(true)
-    cc.unpersistVertices(blocking = false)
-    cc.edges.unpersist(blocking = false)
-    g.unpersistVertices(blocking = false)
-    g.edges.unpersist(blocking = false)
-    out
+    GraphLoop.run(GraphLoop.place(GraphLoop.edges(edges), ()))(_.connectedComponents())(
+      _.vertices.toDF("vertex", "component"))
   }
 
   /** Strongly connected components of the DIRECTED graph: `(vertex BIGINT,
@@ -102,19 +85,9 @@ object Analytics {
   def stronglyConnectedComponents(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val edgeRdd = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)].rdd.map { case (s, d) => Edge(s, d, ()) }
-    val g = XGraph.fromEdges(edgeRdd, (), StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-      .partitionBy(PartitionStrategy.EdgePartition2D)
-    val scc = g.stronglyConnectedComponents(Int.MaxValue)
-    val out = scc.vertices.map { case (v, c) => (v, c) }.toDF("vertex", "component")
-      .orderBy("vertex")
-      .localCheckpoint(true)
-    scc.unpersistVertices(blocking = false)
-    scc.edges.unpersist(blocking = false)
-    g.unpersistVertices(blocking = false)
-    g.edges.unpersist(blocking = false)
-    out
+    GraphLoop.run(GraphLoop.place(GraphLoop.edges(edges), ()))(
+      _.stronglyConnectedComponents(Int.MaxValue))(
+      _.vertices.toDF("vertex", "component").orderBy("vertex"))
   }
 
   /** Static PageRank, `numIter` fixed iterations, damping 0.85:
@@ -243,21 +216,21 @@ object Analytics {
     val spark = edges.sparkSession
     import spark.implicits._
     // one shuffle dedups the pairs and counts each source's out-degree
-    val weighted = longPairs(edges).groupByKey().flatMap { case (s, ds) =>
+    val weighted = GraphLoop.longPairs(edges).groupByKey().flatMap { case (s, ds) =>
       val out = ds.toSet
       val w = weight(out.size)
       out.iterator.map(d => Edge(s, d, w))
     }
-    val fx = new Fixpoint(weighted, 1.0)
+    val g = GraphLoop.place(weighted, 1.0)
     try {
-      var x = Fixpoint.cut(fx.graph.vertices)
+      var x = GraphLoop.cut(g.vertices)
       var iters = 0
       var deltaE6 = Long.MaxValue
       while (iters < maxIter && deltaE6 > tolE6) {
         val prev = x
-        val inbound = fx.on(prev).aggregateMessages[Long](
+        val inbound = GraphLoop.on(g, prev).aggregateMessages[Long](
           t => t.sendToDst(Num.halfUp(t.srcAttr * t.attr * 1e9)), _ + _, TripletFields.Src)
-        x = Fixpoint.cut(prev.leftJoin(inbound)((_, _, m) => step(m.getOrElse(0L))))
+        x = GraphLoop.cut(prev.leftJoin(inbound)((_, _, m) => step(m.getOrElse(0L))))
         deltaE6 = x.innerZipJoin(prev)((_, a, b) => math.abs(Num.halfUp((a - b) * 1e6)))
           .values.fold(0L)(_ max _) // the round's one job; 0 on an empty graph
         iters += 1
@@ -265,90 +238,7 @@ object Analytics {
       val n = iters.toLong
       x.map { case (v, a) => (v, Num.halfUp(a * 1e6), n) }.toDF("vertex", valueCol, "n_iter")
         .orderBy("vertex")
-    } finally fx.release()
-  }
-
-  /** `(src, dst)` as longs, straight from the frame (no dedup). */
-  private def longPairs(edges: DataFrame): RDD[(Long, Long)] = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)].rdd
-  }
-
-  /** The simple undirected graph as canonical `(a < b)` pairs: self-loops
-    * dropped, parallel and reversed duplicates collapsed.
-    */
-  private def simplePairs(edges: DataFrame): RDD[(Long, Long)] =
-    longPairs(edges).flatMap { case (s, d) =>
-      if (s == d) None else Some((math.min(s, d), math.max(s, d)))
-    }.distinct()
-
-  /** The edge side of a GraphX fixpoint loop: `edges` partitioned once
-    * (`EdgePartition2D`, one shuffle) and cached for every round; the
-    * vertices are their endpoints, starting at `init`. Vertex state is a
-    * `VertexRDD[VD]` over the graph's vertex index (`graph.vertices` and
-    * everything derived from it by `mapValues` / joins), so [[on]] pairs a
-    * round's state with the fixed edges without a shuffle, and
-    * `aggregateMessages` on that graph ships only the vertex values.
-    */
-  private final class Fixpoint[VD: ClassTag, ED: ClassTag](edges: RDD[Edge[ED]], init: VD) {
-    val graph: XGraph[VD, ED] = {
-      val n = math.max(1, edges.getNumPartitions)
-      val placed = edges
-        .map(e => (PartitionStrategy.EdgePartition2D.getPartition(e.srcId, e.dstId, n), e))
-        .partitionBy(new PartitionIdPassthrough(n))
-        .values
-      XGraph.fromEdges(placed, init, StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-    }
-
-    def on(state: VertexRDD[VD]): XGraph[VD, ED] =
-      GraphImpl.fromExistingRDDs(state, graph.edges)
-
-    /** Drops the cached edges. States stay readable: a materialized state
-      * is a local checkpoint, independent of the edges. */
-    def release(): Unit = graph.edges.unpersist(blocking = false)
-  }
-
-  private object Fixpoint {
-
-    /** Caches a round's vertex state and cuts its lineage when the round's
-      * job materializes it, so lineage (and task size) stays one round deep
-      * however many rounds run. The cut is a local checkpoint that is never
-      * unpersisted by hand: once the next round's state replaces it, nothing
-      * references it and the context cleaner drops its blocks.
-      */
-    def cut[VD](state: VertexRDD[VD]): VertexRDD[VD] = {
-      state.asInstanceOf[VertexRDDImpl[VD]].partitionsRDD.localCheckpoint()
-      state
-    }
-
-    /** `table(key(a))` for every vertex state `a`, without a join keyed by
-      * the looked-up key: each vertex partition asks once per distinct key
-      * it holds and gets the answers back by partition id, so a key shared
-      * by a million vertices (one giant community) moves one row per
-      * partition, never its members' rows through one task. Every asked key
-      * must be in `table`.
-      */
-    def lookup[VD, T: ClassTag](state: VertexRDD[VD], key: VD => Long,
-                                table: RDD[(Long, T)]): VertexRDD[T] = {
-      val parts = state.getNumPartitions
-      val asks = state.mapPartitionsWithIndex { (pid, it) =>
-        it.map { case (_, a) => key(a) }.toSet.iterator.map((k: Long) => (k, pid))
-      }
-      val answers = asks.join(table)
-        .map { case (k, (pid, t)) => (pid, (k, t)) }
-        .partitionBy(new PartitionIdPassthrough(parts))
-      val found = state.zipPartitions(answers, preservesPartitioning = true) { (vs, as) =>
-        val byKey = as.map(_._2).toMap
-        vs.map { case (v, a) => (v, byKey(key(a))) }
-      }
-      state.innerJoin(found)((_, _, t) => t) // co-partitioned: no shuffle
-    }
-  }
-
-  /** Routes a `(partition id, _)` pair to that partition. */
-  private final class PartitionIdPassthrough(override val numPartitions: Int) extends Partitioner {
-    override def getPartition(key: Any): Int = key.asInstanceOf[Int]
+    } finally GraphLoop.release(g)
   }
 
   /** Shared power-iteration loop: rank' = base + 0.85 · Σ inbound rank·w,
@@ -614,57 +504,43 @@ object Analytics {
     * free). Per superstep each vertex raises its layer to
     * `1 + max(layer(pred))` and re-announces only when it rose —
     * converges in `depth` supersteps on a DAG, messages are
-    * vertex-sized, edges partitioned once ([[PartitionStrategy.EdgePartition2D]],
-    * the BFS residency story).
+    * vertex-sized, edges placed once ([[GraphLoop.place]], the BFS
+    * residency story).
     *
     * The input must BE a DAG — acyclicity is the caller's contract (at
     * scale verifying it is its own computation); on a cycle the
-    * recurrence would climb forever, so iterations are capped at
-    * `maxRounds × stepsPerRound` total DP steps (the pre-Pregel budget,
-    * kept for call-site compatibility) and a one-pass post-run fixpoint
+    * recurrence would climb forever, so Pregel is capped at `maxRounds`
+    * supersteps and a one-pass post-run fixpoint
     * check — any edge still able to raise its head — FAILS LOUDLY
     * instead of returning a silently-truncated layering. Not
     * CTE-expressible without enumerating every path (exponential); the
     * gate uses a VALUES oracle from [[SequentialModel.topoLayers]], the
     * g8/g14 discipline.
     */
-  def topoLayers(edges: DataFrame, maxRounds: Int = 200,
-                 stepsPerRound: Int = 4): DataFrame = {
+  def topoLayers(edges: DataFrame, maxRounds: Int = 800): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    require(stepsPerRound >= 1, s"stepsPerRound must be >= 1, got $stepsPerRound")
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
-    val edgeRdd = e.as[(Long, Long)].rdd.map { case (s, d) => Edge(s, d, ()) }
-    val g = XGraph.fromEdges(edgeRdd, 0L,
-        StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-      .partitionBy(PartitionStrategy.EdgePartition2D)
-    val budget = maxRounds.toLong * stepsPerRound
-    val run = org.apache.spark.graphx.Pregel(
-      g, 0L, maxIterations = budget.min(Int.MaxValue.toLong).toInt,
-      activeDirection = org.apache.spark.graphx.EdgeDirection.Out)(
-      vprog = (_, layer, msg) => math.max(layer, msg),
-      sendMsg = t =>
-        if (t.srcAttr + 1L > t.dstAttr) Iterator((t.dstId, t.srcAttr + 1L))
-        else Iterator.empty,
-      mergeMsg = math.max)
-    // loud cycle detection: at the true fixpoint no edge can raise its
-    // head; if the iteration cap stopped a still-climbing recurrence the
-    // input had a cycle (or the budget was absurdly small for its depth)
-    val unstable = run.triplets.filter(t => t.srcAttr + 1L > t.dstAttr).count()
-    val out = run.vertices.map { case (v, l) => (v, l) }.toDF("vertex", "layer")
-      .localCheckpoint(true)
-    run.unpersistVertices(blocking = false)
-    run.edges.unpersist(blocking = false)
-    g.unpersistVertices(blocking = false)
-    g.edges.unpersist(blocking = false)
-    require(unstable == 0L,
-      s"topoLayers did not converge in $budget DP steps ($unstable edges still " +
-        "raising) — the input graph almost certainly has a cycle")
-    out.orderBy("vertex")
+    GraphLoop.run(GraphLoop.place(GraphLoop.edges(e), 0L))(g =>
+      Pregel(g, 0L, maxIterations = maxRounds, activeDirection = EdgeDirection.Out)(
+        vprog = (_, layer, msg) => math.max(layer, msg),
+        sendMsg = t =>
+          if (t.srcAttr + 1L > t.dstAttr) Iterator((t.dstId, t.srcAttr + 1L))
+          else Iterator.empty,
+        mergeMsg = math.max)) { res =>
+      // loud cycle detection: at the true fixpoint no edge can raise its
+      // head; if the superstep cap stopped a still-climbing recurrence the
+      // input had a cycle (or the cap was absurdly small for its depth)
+      val unstable = res.triplets.filter(t => t.srcAttr + 1L > t.dstAttr).count()
+      require(unstable == 0L,
+        s"topoLayers did not converge in $maxRounds supersteps ($unstable edges still " +
+          "raising) — the input graph almost certainly has a cycle")
+      res.vertices.toDF("vertex", "layer")
+    }.orderBy("vertex")
   }
 
   /** k-truss (k ≥ 3): the maximal subgraph in which every EDGE closes at
@@ -1390,9 +1266,9 @@ object Analytics {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val spark = edges.sparkSession
     import spark.implicits._
-    val fx = new Fixpoint(simplePairs(edges).map { case (a, b) => Edge(a, b, 1L) }, noLabel)
-    try sweep(fx, rounds).mapValues(_._1).toDF("vertex", "label").orderBy("vertex")
-    finally fx.release()
+    val g = GraphLoop.place(GraphLoop.simplePairs(edges).map { case (a, b) => Edge(a, b, 1L) }, noLabel)
+    try sweep(g, rounds).mapValues(_._1).toDF("vertex", "label").orderBy("vertex")
+    finally GraphLoop.release(g)
   }
 
   /** Weighted local-move core shared by [[louvainSweep]] (w ≡ 1) and
@@ -1408,31 +1284,31 @@ object Analytics {
     * `floorMod(vertex, 2) == round % 2`. Returns the last round's
     * [[Community]] state.
     *
-    * Per round: every vertex learns its community's mass by [[Fixpoint.lookup]]
+    * Per round: every vertex learns its community's mass by [[GraphLoop.lookup]]
     * (masses summed map-side by label), then each proper edge offers
     * `label → (mass, w)` to its endpoints of the moving parity, and the
     * vertex join takes the best-scoring offer (own community included).
     * The round's one job materializes the moved state.
     */
-  private def sweep(fx: Fixpoint[Community, Long], rounds: Int): VertexRDD[Community] = {
-    val deg = fx.graph.aggregateMessages[Long](t =>
+  private def sweep(g: XGraph[Community, Long], rounds: Int): VertexRDD[Community] = {
+    val deg = g.aggregateMessages[Long](t =>
       if (t.srcId == t.dstId) t.sendToSrc(2 * t.attr)
       else { t.sendToSrc(t.attr); t.sendToDst(t.attr) }, _ + _, TripletFields.EdgeOnly)
-    var state = Fixpoint.cut(deg.mapValues((v, k) => (v, k, 0L)))
+    var state = GraphLoop.cut(deg.mapValues((v, k) => (v, k, 0L)))
     if (rounds > 0) {
       val twoW = state.values.map(_._2).fold(0L)(_ + _) // Σk = 2W
       for (r <- 1 to rounds) {
         val prev = state
-        val mass = Fixpoint.lookup(prev, (s: Community) => s._1,
+        val mass = GraphLoop.lookup(prev, (s: Community) => s._1,
           prev.values.map(s => (s._1, s._2)).reduceByKey(_ + _))
         val withMass = prev.innerZipJoin(mass)((_, s, m) => (s._1, s._2, m))
         def moves(v: VertexId) = Math.floorMod(v, 2L) == r % 2
-        val offers = fx.on(withMass).aggregateMessages[Map[Long, (Long, Long)]](t =>
+        val offers = GraphLoop.on(g, withMass).aggregateMessages[Map[Long, (Long, Long)]](t =>
           if (t.srcId != t.dstId) {
             if (moves(t.dstId)) t.sendToDst(Map(t.srcAttr._1 -> (t.srcAttr._3, t.attr)))
             if (moves(t.srcId)) t.sendToSrc(Map(t.dstAttr._1 -> (t.dstAttr._3, t.attr)))
           }, mergeOffers)
-        state = Fixpoint.cut(withMass.leftJoin(offers) { case (v, s @ (own, k, ownMass), o) =>
+        state = GraphLoop.cut(withMass.leftJoin(offers) { case (v, s @ (own, k, ownMass), o) =>
           if (!moves(v)) s
           else {
             val cands = o.getOrElse(Map.empty[Long, (Long, Long)])
@@ -1485,30 +1361,30 @@ object Analytics {
     * triplets and sums per coarse `(a, b)` (map-side combined) — after
     * which the level-2 graph is community-count-sized, typically orders
     * of magnitude smaller; its sweep costs a fraction of level 1. The
-    * labels unfold by [[Fixpoint.lookup]], so a giant community is never
+    * labels unfold by [[GraphLoop.lookup]], so a giant community is never
     * a skewed join key.
     */
   def louvain(edges: DataFrame, rounds: Int = 4): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val spark = edges.sparkSession
     import spark.implicits._
-    val fx1 = new Fixpoint(simplePairs(edges).map { case (a, b) => Edge(a, b, 1L) }, noLabel)
+    val g1 = GraphLoop.place(GraphLoop.simplePairs(edges).map { case (a, b) => Edge(a, b, 1L) }, noLabel)
     try {
-      val l1 = sweep(fx1, rounds)
-      val coarse = fx1.on(l1).triplets
+      val l1 = sweep(g1, rounds)
+      val coarse = GraphLoop.on(g1, l1).triplets
         .map { t =>
           val (la, lb) = (t.srcAttr._1, t.dstAttr._1)
           ((math.min(la, lb), math.max(la, lb)), t.attr)
         }
         .reduceByKey(_ + _)
         .map { case ((a, b), w) => Edge(a, b, w) }
-      val fx2 = new Fixpoint(coarse, noLabel)
+      val g2 = GraphLoop.place(coarse, noLabel)
       try {
-        val l2 = sweep(fx2, rounds)
-        Fixpoint.lookup(l1, (s: Community) => s._1, l2.mapValues(_._1))
+        val l2 = sweep(g2, rounds)
+        GraphLoop.lookup(l1, (s: Community) => s._1, l2.mapValues(_._1))
           .toDF("vertex", "label").orderBy("vertex")
-      } finally fx2.release()
-    } finally fx1.release()
+      } finally GraphLoop.release(g2)
+    } finally GraphLoop.release(g1)
   }
 
   /** Minimum spanning forest — Borůvka rounds, the parallel MST algorithm
@@ -1689,8 +1565,8 @@ object Analytics {
     (v * lit(1103515245L) + lit(12345L)) % lit(2147483647L)
 
   /** Symmetric simple undirected adjacency `(a, b)` — both directions, no
-    * self-loops, deduped — checkpointed once so every round of an iterative
-    * algorithm re-reads the materialized relation instead of re-deriving it.
+    * self-loops (nor null endpoints), deduped. Lazy: a caller that reads it
+    * more than once checkpoints it.
     */
   private def symmetric(edges: DataFrame): DataFrame = {
     val und0 = edges
@@ -1699,7 +1575,6 @@ object Analytics {
       .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
       .distinct()
     und0.union(und0.select(col("b"), col("a")).toDF("a", "b"))
-      .localCheckpoint(true)
   }
 
   /** Maximal independent set — the DETERMINISTIC Luby variant: per round,
@@ -1720,7 +1595,7 @@ object Analytics {
     * counter.
     */
   def maximalIndependentSet(edges: DataFrame, maxRounds: Int = 256): DataFrame = {
-    val sym = symmetric(edges)
+    val sym = symmetric(edges).localCheckpoint(true) // every round re-reads it
     var active = sym.select(col("a").as("vertex")).distinct()
       .withColumn("pri", priorityCol(col("vertex")))
       .localCheckpoint(true)
@@ -1763,11 +1638,6 @@ object Analytics {
     * equal the longest priority-decreasing path (O(log n) expected under
     * random-like priorities). Returns `(vertex BIGINT, color BIGINT)` with
     * colors ≤ max-degree by the greedy bound.
-    *
-    * The mex is computed inside one aggregate: sort the distinct neighbor
-    * colors and fold `acc → acc+1` on consecutive hits — no per-color loop,
-    * no driver participation. Per round: two joins + one aggregate over the
-    * still-uncolored edge frontier.
     */
   def greedyColoring(edges: DataFrame, maxRounds: Int = 256): DataFrame = {
     val spark = edges.sparkSession
@@ -1785,47 +1655,37 @@ object Analytics {
     // first superstep no smaller-(pri, id) uncolored neighbor exists —
     // exactly the sequential-greedy schedule, so colors (not round
     // numbers) match the oracle.
-    val sym = symmetric(edges)
-    val edgeRdd = sym.select(col("a").cast("long"), col("b").cast("long"))
-      .as[(Long, Long)].rdd.map { case (s, d) => Edge(s, d, ()) }
-    val g = XGraph.fromEdges(edgeRdd, (-1L, Set.empty[Long]),
-      StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-      .partitionBy(PartitionStrategy.EdgePartition2D)
     def pri(v: Long): Long = (v * 1103515245L + 12345L) % 2147483647L
     def mex(cs: Set[Long]): Long = { var m = 0L; while (cs.contains(m)) m += 1; m }
     // message: (min uncolored-neighbor pri, its id, colored-neighbor colors);
     // pri = -2 marks Pregel's synthetic initial message (no information)
     val initial = (-2L, -2L, Set.empty[Long])
-    val run = org.apache.spark.graphx.Pregel(
-      g, initial, maxIterations = maxRounds,
-      activeDirection = org.apache.spark.graphx.EdgeDirection.Either)(
-      vprog = (vid, attr, msg) => {
-        if (attr._1 >= 0L || msg._1 == -2L) attr
-        else {
-          val known = attr._2 ++ msg._3
-          val released = msg._1 == Long.MaxValue ||
-            msg._1 > pri(vid) || (msg._1 == pri(vid) && msg._2 > vid)
-          if (released) (mex(known), known) else (-1L, known)
-        }
-      },
-      sendMsg = t =>
-        if (t.dstAttr._1 >= 0L) Iterator.empty // dst done — nothing to say
-        else if (t.srcAttr._1 >= 0L)
-          Iterator((t.dstId, (Long.MaxValue, Long.MaxValue, Set(t.srcAttr._1))))
-        else Iterator((t.dstId, (pri(t.srcId), t.srcId, Set.empty[Long]))),
-      mergeMsg = (a, b) => {
-        val (p, i) = if (a._1 < b._1 || (a._1 == b._1 && a._2 <= b._2)) (a._1, a._2) else (b._1, b._2)
-        (p, i, a._3 ++ b._3)
-      })
-    val out = run.vertices.map { case (v, (c, _)) => (v, c) }.toDF("vertex", "color")
-      .localCheckpoint(true)
-    run.unpersistVertices(blocking = false)
-    run.edges.unpersist(blocking = false)
-    g.unpersistVertices(blocking = false)
-    g.edges.unpersist(blocking = false)
-    require(out.filter(col("color") < 0).isEmpty,
-      s"greedyColoring exceeded $maxRounds rounds — check the graph")
-    out.orderBy("vertex")
+    val placed = GraphLoop.place(GraphLoop.edges(symmetric(edges).toDF("src", "dst")),
+      (-1L, Set.empty[Long]))
+    GraphLoop.run(placed)(g =>
+      Pregel(g, initial, maxIterations = maxRounds, activeDirection = EdgeDirection.Either)(
+        vprog = (vid, attr, msg) => {
+          if (attr._1 >= 0L || msg._1 == -2L) attr
+          else {
+            val known = attr._2 ++ msg._3
+            val released = msg._1 == Long.MaxValue ||
+              msg._1 > pri(vid) || (msg._1 == pri(vid) && msg._2 > vid)
+            if (released) (mex(known), known) else (-1L, known)
+          }
+        },
+        sendMsg = t =>
+          if (t.dstAttr._1 >= 0L) Iterator.empty // dst done — nothing to say
+          else if (t.srcAttr._1 >= 0L)
+            Iterator((t.dstId, (Long.MaxValue, Long.MaxValue, Set(t.srcAttr._1))))
+          else Iterator((t.dstId, (pri(t.srcId), t.srcId, Set.empty[Long]))),
+        mergeMsg = (a, b) => {
+          val (p, i) = if (a._1 < b._1 || (a._1 == b._1 && a._2 <= b._2)) (a._1, a._2) else (b._1, b._2)
+          (p, i, a._3 ++ b._3)
+        })) { res =>
+      require(res.vertices.filter(_._2._1 < 0).count() == 0L,
+        s"greedyColoring exceeded $maxRounds rounds — check the graph")
+      res.vertices.map { case (v, (c, _)) => (v, c) }.toDF("vertex", "color")
+    }.orderBy("vertex")
   }
 
   /** Maximal matching — deterministic parallel greedy (the MIS construction
@@ -1906,9 +1766,9 @@ object Analytics {
   def coreness(edges: DataFrame, maxRounds: Int = 128): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val fx = new Fixpoint(simplePairs(edges).map { case (a, b) => Edge(a, b, ()) }, 0L)
+    val g = GraphLoop.place(GraphLoop.simplePairs(edges).map { case (a, b) => Edge(a, b, ()) }, 0L)
     try {
-      var c = Fixpoint.cut(fx.graph.degrees.mapValues(_.toLong))
+      var c = GraphLoop.cut(g.degrees.mapValues(_.toLong))
       var rounds = 0
       var changed = 1L
       while (changed > 0) {
@@ -1917,16 +1777,16 @@ object Analytics {
           s"coreness exceeded $maxRounds rounds — check the graph")
         val prev = c
         // `b ::: a` keeps each merge linear in the incoming list
-        val nbrs = fx.on(prev).aggregateMessages[List[Long]](t => {
+        val nbrs = GraphLoop.on(g, prev).aggregateMessages[List[Long]](t => {
           t.sendToDst(List(t.srcAttr))
           t.sendToSrc(List(t.dstAttr))
         }, (a, b) => b ::: a)
-        c = Fixpoint.cut(prev.leftJoin(nbrs)((_, _, ns) => hIndex(ns.getOrElse(Nil))))
+        c = GraphLoop.cut(prev.leftJoin(nbrs)((_, _, ns) => hIndex(ns.getOrElse(Nil))))
         changed = c.innerZipJoin(prev)((_, a, b) => if (a != b) 1L else 0L)
           .values.fold(0L)(_ + _)
       }
       c.toDF("vertex", "coreness").orderBy("vertex")
-    } finally fx.release()
+    } finally GraphLoop.release(g)
   }
 
   /** The largest h such that at least h of `values` are ≥ h. */
@@ -1985,7 +1845,7 @@ object Analytics {
   def localCommunitySweep(edges: DataFrame, source: Long, sweepK: Int = 30,
                           numIter: Int = 10): DataFrame = {
     require(sweepK >= 1, s"sweepK must be >= 1, got $sweepK")
-    val sym = symmetric(edges)
+    val sym = symmetric(edges).localCheckpoint(true) // PPR, degrees and the sweep read it
     val ppr = personalizedPageRank(
       sym.select(col("a").as("src"), col("b").as("dst")), source, numIter)
     val deg = sym.groupBy(col("a").as("vertex")).agg(count(lit(1)).as("deg"))

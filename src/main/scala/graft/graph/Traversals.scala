@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Edge, EdgeDirection, Graph => XGraph, PartitionStrategy, Pregel}
+import org.apache.spark.graphx.{EdgeDirection, Pregel}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -21,13 +21,14 @@ import org.apache.spark.storage.StorageLevel
   *    (`dfsLeaves`).
   *
   * Scale notes:
-  *  - `bfs` / `multiSourceBfs` run on GraphX Pregel: the edge relation is
-  *    partitioned ONCE and stays resident; each superstep ships only frontier
-  *    messages (changed vertices), not the edge table. This replaces the
-  *    round-1 DataFrame loop that re-shuffled the full edge relation per level
-  *    — at 100 TB x diameter-D that was D full-data shuffles; Pregel is
-  *    D message-sized exchanges. Supersteps ≡ the reference's recursion levels
-  *    (`secondaryServer.c:154-161`).
+  *  - `bfs` / `multiSourceBfs`, `landmarkBfs`, the weighted SSSPs and
+  *    `temporalReachability` run on GraphX Pregel through [[GraphLoop]]: the
+  *    edge relation is placed ONCE (one shuffle) and stays resident; each
+  *    superstep ships only frontier messages (changed vertices), not the edge
+  *    table, and [[GraphLoop.run]] materializes the result and releases the
+  *    graphs. At 100 TB x diameter-D a per-level DataFrame loop would pay D
+  *    full-data shuffles; Pregel pays D message-sized exchanges. Supersteps
+  *    ≡ the reference's recursion levels (`secondaryServer.c:154-161`).
   *  - DFS is inherently sequential (each step depends on the full visited set),
   *    so `dfsPreorder` is explicitly scoped to graphs whose *reachable
   *    subgraph* fits on the driver — faithful to the reference, whose graphs
@@ -64,35 +65,20 @@ object Traversals {
         .select(col("vertex"), col("level").cast("int").as("level"))
     }
     val INF = Int.MaxValue
-    val edgeRdd = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)].rdd.map { case (s, d) => Edge(s, d, ()) }
     // Sources are seeded as explicit vertices so an isolated source still
     // reports (source, 0) — the reference records the start unconditionally
     // (`secondaryServer.c:380`). Other vertices materialize from the edges.
-    val seedRdd = spark.sparkContext.parallelize(srcSet.toSeq.map(v => (v, ())))
-    val g = XGraph(seedRdd, edgeRdd, (),
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
-      .partitionBy(PartitionStrategy.EdgePartition2D)
-      .mapVertices((id, _) => if (srcSet(id)) 0 else INF)
-    val res = Pregel(g, initialMsg = INF, maxIterations = maxDepth,
-      activeDirection = EdgeDirection.Out)(
-      vprog = (_, attr, msg) => math.min(attr, msg),
-      sendMsg = t =>
-        if (t.srcAttr != INF && t.srcAttr + 1 < t.dstAttr) Iterator((t.dstId, t.srcAttr + 1))
-        else Iterator.empty,
-      mergeMsg = math.min)
-    val out = res.vertices.filter(_._2 != INF)
-      .map { case (v, l) => (v, l) }
-      .toDF("vertex", "level")
-      .select($"vertex", $"level".cast("int").as("level"))
-      .orderBy("level", "vertex")
-      .localCheckpoint(true) // materialize so the cached graphs can be freed
-    res.unpersistVertices(blocking = false)
-    res.edges.unpersist(blocking = false)
-    g.unpersistVertices(blocking = false)
-    g.edges.unpersist(blocking = false)
-    out
+    val placed = GraphLoop.place(GraphLoop.edges(edges), INF, srcSet.toSeq.map(_ -> 0))
+    GraphLoop.run(placed)(g =>
+      Pregel(g, initialMsg = INF, maxIterations = maxDepth, activeDirection = EdgeDirection.Out)(
+        vprog = (_, attr, msg) => math.min(attr, msg),
+        sendMsg = t =>
+          if (t.srcAttr != INF && t.srcAttr + 1 < t.dstAttr) Iterator((t.dstId, t.srcAttr + 1))
+          else Iterator.empty,
+        mergeMsg = math.min))(
+      _.vertices.filter(_._2 != INF).toDF("vertex", "level")
+        .select($"vertex", $"level".cast("int").as("level"))
+        .orderBy("level", "vertex"))
   }
 
   /** Per-seed BFS levels for ALL seeds in ONE Pregel run (the GraphX
@@ -119,36 +105,23 @@ object Traversals {
       return seedSet.toSeq.sorted.map(v => (v, v, 0)).toDF("seed", "vertex", "level")
         .select($"seed", $"vertex", $"level".cast("int").as("level"))
     }
-    val edgeRdd = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)].rdd.map { case (s, d) => Edge(s, d, ()) }
-    val seedRdd = spark.sparkContext.parallelize(seedSet.toSeq.map(v => (v, ())))
-    val g = XGraph(seedRdd, edgeRdd, (),
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
-      .partitionBy(PartitionStrategy.EdgePartition2D)
-      .mapVertices((id, _) =>
-        if (seedSet(id)) Map(id -> 0) else Map.empty[Long, Int])
-    val res = Pregel(g, initialMsg = Map.empty[Long, Int],
-      maxIterations = maxDepth, activeDirection = EdgeDirection.Out)(
-      vprog = (_, attr, msg) => merge(attr, msg),
-      sendMsg = t => {
-        val improved = t.srcAttr.iterator
-          .map { case (s, d) => s -> (d + 1) }
-          .filter { case (s, d) => d < t.dstAttr.getOrElse(s, Int.MaxValue) }
-          .toMap
-        if (improved.nonEmpty) Iterator((t.dstId, improved)) else Iterator.empty
-      },
-      mergeMsg = merge)
-    val out = res.vertices
-      .flatMap { case (v, m) => m.iterator.map { case (s, d) => (s, v, d) } }
-      .toDF("seed", "vertex", "level")
-      .select($"seed", $"vertex", $"level".cast("int").as("level"))
-      .localCheckpoint(true)
-    res.unpersistVertices(blocking = false)
-    res.edges.unpersist(blocking = false)
-    g.unpersistVertices(blocking = false)
-    g.edges.unpersist(blocking = false)
-    out
+    val placed = GraphLoop.place(GraphLoop.edges(edges), Map.empty[Long, Int],
+      seedSet.toSeq.map(v => v -> Map(v -> 0)))
+    GraphLoop.run(placed)(g =>
+      Pregel(g, initialMsg = Map.empty[Long, Int], maxIterations = maxDepth,
+        activeDirection = EdgeDirection.Out)(
+        vprog = (_, attr, msg) => merge(attr, msg),
+        sendMsg = t => {
+          val improved = t.srcAttr.iterator
+            .map { case (s, d) => s -> (d + 1) }
+            .filter { case (s, d) => d < t.dstAttr.getOrElse(s, Int.MaxValue) }
+            .toMap
+          if (improved.nonEmpty) Iterator((t.dstId, improved)) else Iterator.empty
+        },
+        mergeMsg = merge))(
+      _.vertices.flatMap { case (v, m) => m.iterator.map { case (s, d) => (s, v, d) } }
+        .toDF("seed", "vertex", "level")
+        .select($"seed", $"vertex", $"level".cast("int").as("level")))
   }
 
   /** Hop-bounded weighted single-source shortest paths (BSP Bellman-Ford):
@@ -168,34 +141,19 @@ object Traversals {
     import spark.implicits._
     val INF = Long.MaxValue
     if (maxHops <= 0) return Seq((start, 0L)).toDF("vertex", "cost")
-    val edgeRdd = edges.select(col("src").cast("long"), col("dst").cast("long"), col("w").cast("long"))
-      .as[(Long, Long, Long)].rdd.map { case (s, d, w) =>
-        require(w > 0, s"weighted SSSP requires positive weights, got $w on $s->$d")
-        Edge(s, d, w)
-      }
-    val seedRdd = spark.sparkContext.parallelize(Seq((start, ())))
-    val g = XGraph(seedRdd, edgeRdd, (),
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
-      .partitionBy(PartitionStrategy.EdgePartition2D)
-      .mapVertices((id, _) => if (id == start) 0L else INF)
-    val res = Pregel(g, initialMsg = INF, maxIterations = maxHops,
-      activeDirection = EdgeDirection.Out)(
-      vprog = (_, attr, msg) => math.min(attr, msg),
-      sendMsg = t =>
-        if (t.srcAttr != INF && t.srcAttr + t.attr < t.dstAttr) Iterator((t.dstId, t.srcAttr + t.attr))
-        else Iterator.empty,
-      mergeMsg = math.min)
-    val out = res.vertices.filter(_._2 != INF)
-      .map { case (v, c) => (v, c) }
-      .toDF("vertex", "cost")
-      .orderBy("vertex")
-      .localCheckpoint(true)
-    res.unpersistVertices(blocking = false)
-    res.edges.unpersist(blocking = false)
-    g.unpersistVertices(blocking = false)
-    g.edges.unpersist(blocking = false)
-    out
+    val weighted = GraphLoop.edges(edges, "w").map { e =>
+      require(e.attr > 0,
+        s"weighted SSSP requires positive weights, got ${e.attr} on ${e.srcId}->${e.dstId}")
+      e
+    }
+    GraphLoop.run(GraphLoop.place(weighted, INF, Seq(start -> 0L)))(g =>
+      Pregel(g, initialMsg = INF, maxIterations = maxHops, activeDirection = EdgeDirection.Out)(
+        vprog = (_, attr, msg) => math.min(attr, msg),
+        sendMsg = t =>
+          if (t.srcAttr != INF && t.srcAttr + t.attr < t.dstAttr) Iterator((t.dstId, t.srcAttr + t.attr))
+          else Iterator.empty,
+        mergeMsg = math.min))(
+      _.vertices.filter(_._2 != INF).toDF("vertex", "cost").orderBy("vertex"))
   }
 
   /** UNBOUNDED weighted SSSP: the Bellman-Ford fixpoint, with the
@@ -648,32 +606,15 @@ object Traversals {
     import spark.implicits._
     val INF = Long.MaxValue
     if (maxHops <= 0) return Seq((start, startTime)).toDF("vertex", "arrival")
-    val edgeRdd = edges.select(col("src").cast("long"), col("dst").cast("long"), col("t").cast("long"))
-      .as[(Long, Long, Long)].rdd.map { case (s, d, t) => Edge(s, d, t) }
-    val seedRdd = spark.sparkContext.parallelize(Seq((start, ())))
-    val g = XGraph(seedRdd, edgeRdd, (),
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
-      .partitionBy(PartitionStrategy.EdgePartition2D)
-      .mapVertices((id, _) => if (id == start) startTime else INF)
-    val res = Pregel(g, initialMsg = INF, maxIterations = maxHops,
-      activeDirection = EdgeDirection.Out)(
-      vprog = (_, attr, msg) => math.min(attr, msg),
-      sendMsg = t =>
-        if (t.srcAttr != INF && t.attr >= t.srcAttr && t.attr + 1 < t.dstAttr)
-          Iterator((t.dstId, t.attr + 1))
-        else Iterator.empty,
-      mergeMsg = math.min)
-    val out = res.vertices.filter(_._2 != INF)
-      .map { case (v, a) => (v, a) }
-      .toDF("vertex", "arrival")
-      .orderBy("vertex")
-      .localCheckpoint(true)
-    res.unpersistVertices(blocking = false)
-    res.edges.unpersist(blocking = false)
-    g.unpersistVertices(blocking = false)
-    g.edges.unpersist(blocking = false)
-    out
+    GraphLoop.run(GraphLoop.place(GraphLoop.edges(edges, "t"), INF, Seq(start -> startTime)))(g =>
+      Pregel(g, initialMsg = INF, maxIterations = maxHops, activeDirection = EdgeDirection.Out)(
+        vprog = (_, attr, msg) => math.min(attr, msg),
+        sendMsg = t =>
+          if (t.srcAttr != INF && t.attr >= t.srcAttr && t.attr + 1 < t.dstAttr)
+            Iterator((t.dstId, t.attr + 1))
+          else Iterator.empty,
+        mergeMsg = math.min))(
+      _.vertices.filter(_._2 != INF).toDF("vertex", "arrival").orderBy("vertex"))
   }
 
   /** DuckDB mirror of [[temporalReachability]]: the hop-bounded walk
