@@ -57,6 +57,20 @@ import org.apache.spark.sql.functions._
   */
 object KnnGraph {
 
+  /** A walk's beam order over `(query_id, vec_id, cos)`: `cos` descending
+    * under Spark's double comparison (`SQLOrderingUtil.compareDoubles`:
+    * equal values tie, so 0.0 ties -0.0; otherwise
+    * `java.lang.Double.compare`, so NaN ranks above every number), then
+    * `vec_id` ascending — the driver twin of
+    * `orderBy(col("cos").desc, col("vec_id"))`. */
+  private[graft] val BeamOrder: Ordering[(Long, Long, Double)] =
+    new Ordering[(Long, Long, Double)] {
+      def compare(a: (Long, Long, Double), b: (Long, Long, Double)): Int = {
+        val c = if (a._3 == b._3) 0 else java.lang.Double.compare(b._3, a._3)
+        if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+      }
+    }
+
   private def dot(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.dotProduct(a, b)
 
@@ -442,11 +456,9 @@ object KnnGraph {
     // dedup on (query, vec, cos) tuples: binary-identical semantics to the
     // DataFrame distinct it replaces (same pair ⇒ bit-identical cos)
     var visited: Seq[(Long, Long, Double)] = scoreIds(entryCand, entryIds).distinct
-    // (cos desc, vec_id asc) top-`beam` per query — row_number semantics;
-    // java.lang.Double.compare ordering, matching Spark's double sort
+    // top-`beam` per query in [[BeamOrder]] — row_number semantics
     def beamRows(vis: Seq[(Long, Long, Double)]): Seq[(Long, Long, Double)] =
-      vis.groupBy(_._1).valuesIterator.flatMap(
-        _.sortBy(t => (-t._3, t._2)).take(beam)).toSeq
+      vis.groupBy(_._1).valuesIterator.flatMap(_.sorted(BeamOrder).take(beam)).toSeq
     for (_ <- 1 to hops) {
       val bm = beamRows(visited)
       val frontier = bm.map(_._2).distinct.sorted

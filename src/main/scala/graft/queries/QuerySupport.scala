@@ -1,9 +1,10 @@
 package graft
 package queries
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import graft.llm.{Retrieval, SequentialCorpus}
-import graft.operators.SequentialEvents
+import graft.operators.{CommitTable, SequentialEvents}
 import Oracle.values
 
 /** Helpers shared by more than one query family. */
@@ -31,6 +32,14 @@ private[graft] object QuerySupport {
   def exportPath(tag: String, sfDir: String): String =
     sys.props.getOrElse("graft.export.dir", sys.props.getOrElse("java.io.tmpdir", "/tmp")) +
       s"/graft-$tag-" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
+
+  /** A commit table at `graft-<tag>-<pid>/tbl` under a freshly wiped
+    * per-process root, so a query's version numbers are the same on every
+    * execution. */
+  def freshTable(s: SparkSession, tag: String, key: String,
+                 extraStatsCols: Seq[String] = Nil, checkpointEvery: Int = 10): CommitTable =
+    new CommitTable(s, IndexCache.freshRoot(tag).resolve("tbl").toString, key,
+      extraStatsCols, checkpointEvery)
 
   /** t37's top-15 BM25 mirror: idf derived independently from the texts. */
   def bm25Sql(in: OracleInput): String =

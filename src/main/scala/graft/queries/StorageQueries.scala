@@ -47,8 +47,7 @@ private[graft] object StorageQueries {
       // three snapshots derived from the source table. Fresh per-process
       // table each execution so version numbers are deterministic across
       // reps; shutdown-hook cleaned.
-      val root = IndexCache.freshRoot("clog")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "n_nationkey")
+      val t = freshTable(s, "clog", "n_nationkey")
       val nat = Tables.nation(s, dir).select(
         col("n_nationkey").cast("long").as("n_nationkey"),
         col("n_name"), col("n_regionkey").cast("long").as("n_regionkey"))
@@ -76,8 +75,7 @@ private[graft] object StorageQueries {
       // the violation count surfaced from the report. Output = the
       // (metric, value) summary of the whole scenario; oracle derives
       // every number from the same orders slices.
-      val root = IndexCache.freshRoot("wap")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "k")
+      val t = freshTable(s, "wap", "k")
       val ord = Tables.orders(s, dir).select(
         col("o_orderkey").cast("long").as("k"),
         col("o_custkey").cast("long").as("v"))
@@ -117,8 +115,7 @@ private[graft] object StorageQueries {
       // with NULLs where a file predates the column, while asOf(0) keeps
       // the original 2-column shape. Output = head aggregates + v0's
       // column count.
-      val root = IndexCache.freshRoot("sevol")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "n_nationkey")
+      val t = freshTable(s, "sevol", "n_nationkey")
       val nat = Tables.nation(s, dir).select(
         col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
         col("n_regionkey").cast("long").as("r_extra"))
@@ -177,8 +174,7 @@ private[graft] object StorageQueries {
       // < 10, v1 appends [10, 20), v2 overwrites with keys >= 20 — probed
       // between, at, and after the commit instants. The monotonic
       // timestamp adjustment and the too-early error are suite-tested.
-      val root = IndexCache.freshRoot("tstravel")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "n_nationkey")
+      val t = freshTable(s, "tstravel", "n_nationkey")
       val nat = Tables.nation(s, dir).select(
         col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"))
       t.overwrite(nat.filter(col("n_nationkey") < 10), tsMillis = Some(1000L))
@@ -207,8 +203,7 @@ private[graft] object StorageQueries {
       // files whose stats intersect the predicate — the rest carry
       // forward as log references (file granularity is spec-asserted;
       // this gate binds the content contract + history intactness).
-      val root = IndexCache.freshRoot("logdel")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "o_orderkey")
+      val t = freshTable(s, "logdel", "o_orderkey")
       val ord = Tables.orders(s, dir).select(
         col("o_orderkey").cast("long").as("o_orderkey"),
         col("o_custkey").cast("long").as("o_custkey"))
@@ -233,8 +228,7 @@ private[graft] object StorageQueries {
       // every persisted index uses skips proven-absent files (the
       // file-count cut is spec-asserted in CommitLogSpec; this gate binds
       // the content contract: bloom-pruned reads lose no row).
-      val root = IndexCache.freshRoot("bloom")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "k")
+      val t = freshTable(s, "bloom", "k")
       val ord = Tables.orders(s, dir).select(
         col("o_orderkey").cast("long").as("k"),
         col("o_custkey").cast("long").as("v"))
@@ -258,9 +252,7 @@ private[graft] object StorageQueries {
       // through and ACROSS the checkpoint boundary (the log-bytes and
       // entry-form contracts are spec-asserted in CommitLogSpec; this
       // gate binds content at every version of the chain).
-      val root = IndexCache.freshRoot("ckptlog")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString,
-        "n_nationkey", checkpointEvery = 3)
+      val t = freshTable(s, "ckptlog", "n_nationkey", checkpointEvery = 3)
       val nat = Tables.nation(s, dir).select(
         col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"))
       val k = col("n_nationkey")
@@ -294,9 +286,7 @@ private[graft] object StorageQueries {
       // so prunedReadOn cuts files on the SECOND column while the
       // primary (o_orderkey) log stats stay intact. The file-cut is
       // inputFiles-asserted in CommitLogSpec; this gate binds content.
-      val root = IndexCache.freshRoot("xstats")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString,
-        "o_orderkey", extraStatsCols = Seq("o_custkey"))
+      val t = freshTable(s, "xstats", "o_orderkey", extraStatsCols = Seq("o_custkey"))
       val ord = Tables.orders(s, dir).select(
         col("o_orderkey").cast("long").as("o_orderkey"),
         col("o_custkey").cast("long").as("o_custkey"))
@@ -421,8 +411,7 @@ private[graft] object StorageQueries {
       // inserted rows carry the column, pre-merge rows read it as NULL
       // (null_tag_rows), v0 keeps the two-column surface (v0_cols), and
       // a DECLARED schema widens through the same gate (inv_widened).
-      val root = IndexCache.freshRoot("mrgevo")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "k")
+      val t = freshTable(s, "mrgevo", "k")
       val ord = Tables.orders(s, dir).select(
         col("o_orderkey").cast("long").as("k"),
         col("o_custkey").cast("long").as("v"))
@@ -602,8 +591,7 @@ private[graft] object StorageQueries {
       // churned one purges its delete-dense file and folds its small
       // ones in order (ops_ok), landing on one file with exact content.
       // Nation-sized on purpose: the policy's cost is the instruments'.
-      val root = IndexCache.freshRoot("maint")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "k")
+      val t = freshTable(s, "maint", "k")
       val nat = Tables.nation(s, dir).select(
         col("n_nationkey").cast("long").as("k"), col("n_name").as("v"))
       val k = col("k")
@@ -653,8 +641,7 @@ private[graft] object StorageQueries {
       // key-clustered data files (the one holding the deleted keys —
       // asserted via inputFiles), and equals_full_diff proves content
       // identity with the independent snapshot diff computed inline.
-      val root = IndexCache.freshRoot("dvcdf")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "k")
+      val t = freshTable(s, "dvcdf", "k")
       val ord = Tables.orders(s, dir).select(
         col("o_orderkey").cast("long").as("k"),
         col("o_custkey").cast("long").as("v"))
@@ -827,8 +814,7 @@ private[graft] object StorageQueries {
       // AFTER the rename uses the logical name while landing under the
       // stable physical file names. Collision/retire semantics and DML
       // composition are spec-asserted in ColumnMappingSpec.
-      val root = IndexCache.freshRoot("cmapgate")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "n_nationkey")
+      val t = freshTable(s, "cmapgate", "n_nationkey")
       val nat = Tables.nation(s, dir).select(
         col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
         col("n_regionkey").cast("long").as("n_regionkey"))
@@ -875,8 +861,7 @@ private[graft] object StorageQueries {
       // identical content (opt_* == head_*). Orphan-safety, CDF
       // fallback, and DML composition are spec-asserted in
       // DeletionVectorSpec.
-      val root = IndexCache.freshRoot("dvgate")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "k")
+      val t = freshTable(s, "dvgate", "k")
       val ord = Tables.orders(s, dir).select(
         col("o_orderkey").cast("long").as("k"),
         col("o_custkey").cast("long").as("v"))
@@ -927,8 +912,7 @@ private[graft] object StorageQueries {
       // type drift / missing NOT NULL) rejects BEFORE staging. Output =
       // the rejection flags + the head's aggregates, which must equal
       // the two CLEAN batches alone.
-      val root = IndexCache.freshRoot("invgate")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "k")
+      val t = freshTable(s, "invgate", "k")
       val ord = Tables.orders(s, dir).select(
         col("o_orderkey").cast("long").as("k"),
         col("o_custkey").cast("long").as("v"))
@@ -974,8 +958,7 @@ private[graft] object StorageQueries {
       // "bad" v1 stays inspectable, and the restored head reads exactly
       // v0's content THROUGH the log. Oracle: the same snapshot derived
       // straight from the source.
-      val root = IndexCache.freshRoot("restore")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "n_nationkey")
+      val t = freshTable(s, "restore", "n_nationkey")
       val nat = Tables.nation(s, dir).select(
         col("n_nationkey").cast("long").as("n_nationkey"),
         col("n_name"), col("n_regionkey").cast("long").as("n_regionkey"))
@@ -995,8 +978,7 @@ private[graft] object StorageQueries {
       // aggregated below), layout now skips files on either dimension
       // (pruning bite suite-asserted in CommitLogSpec; f8 gates the code
       // arithmetic itself). Fresh per-process table, shutdown-hook cleaned
-      val root = IndexCache.freshRoot("zlog")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "x")
+      val t = freshTable(s, "zlog", "x")
       val li = Tables.lineitem(s, dir).select(
         (col("l_orderkey") % 1024).cast("long").as("x"),
         (col("l_partkey") % 1024).cast("long").as("y"),
@@ -1024,8 +1006,7 @@ private[graft] object StorageQueries {
       // change-set; the merged head is read back THROUGH the log and the
       // pre-merge version stays readable (asserted in CommitLogSpec).
       // Oracle derives the same merged snapshot from the source table
-      val root = IndexCache.freshRoot("lmerge")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "n_nationkey")
+      val t = freshTable(s, "lmerge", "n_nationkey")
       val nat = Tables.nation(s, dir).select(
         col("n_nationkey").cast("long").as("n_nationkey"),
         col("n_name"), col("n_regionkey").cast("long").as("n_regionkey"))
@@ -1056,8 +1037,7 @@ private[graft] object StorageQueries {
       // reclaims EXACTLY that one directory (reference-counted against
       // the kept versions' full file lists) and the head keeps reading
       // the complete content. Fresh per-process table, shutdown-cleaned
-      val root = IndexCache.freshRoot("vac")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "n_nationkey")
+      val t = freshTable(s, "vac", "n_nationkey")
       val nat = Tables.nation(s, dir).select(
         col("n_nationkey").cast("long").as("n_nationkey"),
         col("n_name"), col("n_regionkey").cast("long").as("n_regionkey"))
@@ -1079,8 +1059,7 @@ private[graft] object StorageQueries {
       // lists — rolled up per change_type. Oracle derives the same
       // insert/delete sets straight from the source table. Fresh
       // per-process table per execution, shutdown-hook cleaned
-      val root = IndexCache.freshRoot("cdf")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "n_nationkey")
+      val t = freshTable(s, "cdf", "n_nationkey")
       val nat = Tables.nation(s, dir).select(
         col("n_nationkey").cast("long").as("n_nationkey"),
         col("n_name"), col("n_regionkey").cast("long").as("n_regionkey"))

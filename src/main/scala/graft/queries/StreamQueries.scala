@@ -89,8 +89,7 @@ private[graft] object StreamQueries {
       // the final head, read back THROUGH the log, must carry exactly the
       // one-shot batch content, and the version count equals the
       // micro-batch count. Fresh per-process table, shutdown-hook cleaned
-      val root = IndexCache.freshRoot("slog")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "event_id")
+      val t = freshTable(s, "slog", "event_id")
       val ev = Tables.events(s, dir).select(
         col("event_id").cast("long").as("event_id"),
         col("user_id").cast("long").as("user_id"), col("event_type"))
@@ -119,8 +118,7 @@ private[graft] object StreamQueries {
       // exactly one version per micro-batch, which is precisely what the
       // gate's n_versions/n_rows/sums bind (a double-applied batch
       // doubles all three). st15 is the marker-free baseline.
-      val root = IndexCache.freshRoot("sxonce")
-      val t = new graft.operators.CommitTable(s, root.resolve("tbl").toString, "event_id")
+      val t = freshTable(s, "sxonce", "event_id")
       val ev = Tables.events(s, dir).select(
         col("event_id").cast("long").as("event_id"),
         col("user_id").cast("long").as("user_id"), col("event_type"))

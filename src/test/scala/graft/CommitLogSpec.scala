@@ -1246,4 +1246,128 @@ class CommitLogSpec extends SparkSpec {
     assert(n === 20008L)
     assert(t.read().inputFiles.count(!_.contains("/_dv/")) === 2)
   }
+
+  test("a table with no commits: every public entry fails or answers as declared") {
+    val s = spark
+    import s.implicits._
+    val src = Seq((1L, "a", 2L)).toDF("k", "v", "x")
+    val other = freshTable()
+    val withRows = freshTable()
+    withRows.overwrite(kv(1L -> "a"))
+    // Left = (exception class, message prefix with <path> for the table's
+    // root); Right = the value returned on the empty table
+    val noCommits = Left((classOf[IllegalStateException], "no commits at <path>"))
+    val notCommitted = Left((classOf[IllegalArgumentException],
+      "requirement failed: version 0 is not committed at <path>"))
+    val cases: Seq[(String, CommitTable => Any, Either[(Class[_], String), Any])] = Seq(
+      ("versions", _.versions(), Right(Seq.empty[Long])),
+      ("latestVersion", _.latestVersion(), Right(None)),
+      ("fileStats", _.fileStats(), noCommits),
+      ("read", _.read(), noCommits),
+      ("history", _.history(), noCommits),
+      ("asOf", _.asOf(0L), notCommitted),
+      ("asOfTimestamp", _.asOfTimestamp(0L),
+        Left((classOf[IllegalArgumentException], "requirement failed: no commits at <path>"))),
+      ("commitTs", _.commitTs(0L), notCommitted),
+      ("prunedRead", _.prunedRead(0L, 1L), noCommits),
+      ("prunedReadIn", _.prunedReadIn(Seq(1L)), noCommits),
+      ("prunedReadOn", _.prunedReadOn("x", 0L, 1L), noCommits),
+      ("buildBloom", _.buildBloom(), noCommits),
+      ("dvVersionAt", _.dvVersionAt(0L), notCommitted),
+      ("dvOutstanding", _.dvOutstanding(), Right(0L)),
+      ("deleteRangeDV", _.deleteRangeDV(0L, 1L), noCommits),
+      ("columnMapping", _.columnMapping(), Right(None)),
+      ("renameColumn", _.renameColumn("v", "w"), noCommits),
+      ("dropColumn", _.dropColumn("v"), noCommits),
+      ("deleteWhereDV", _.deleteWhereDV("k > 0"), noCommits),
+      ("updateWhereDV", _.updateWhereDV("k > 0", "v", "v"), noCommits),
+      ("mergeDV", _.mergeDV(src, Seq("k")), noCommits),
+      ("consolidateDv", _.consolidateDv(), noCommits),
+      ("purgeDv", _.purgeDv(), noCommits),
+      ("changesBetween", _.changesBetween(0L, 0L), notCommitted),
+      ("txnVersion", _.txnVersion("app"), Right(None)),
+      ("vacuum", _.vacuum(), Right(0L)),
+      ("vacuumKeeping", _.vacuumKeeping(Set.empty), Right(0L)),
+      ("vacuumRetain", _.vacuumRetain(0L), Right(0L)),
+      ("merge", _.merge(src, Seq("k")), noCommits),
+      ("deleteRange", _.deleteRange(0L, 1L), noCommits),
+      ("updateRange", _.updateRange(0L, 1L, "v", "v"), noCommits),
+      ("setInvariants", _.setInvariants("k BIGINT, v STRING"), noCommits),
+      ("invariantsAt", _.invariantsAt(0L), notCommitted),
+      ("invariants", _.invariants(), Right(None)),
+      ("compact", _.compact(), noCommits),
+      ("compactClustered", _.compactClustered("k"), noCommits),
+      ("compactClusteredToSize", _.compactClusteredToSize("k", 1024L), noCommits),
+      ("compactSmall", _.compactSmall("k", 1024L), noCommits),
+      ("maintain", _.maintain("k", 1024L), noCommits),
+      ("optimizeZorder", _.optimizeZorder("k", "k"), noCommits),
+      ("restore", _.restore(0L), notCommitted),
+      ("shallowCloneFrom(empty source)", _.shallowCloneFrom(other.path),
+        Left((classOf[IllegalStateException], s"no commits at ${other.path}"))),
+      // writes on an empty table create version 0
+      ("append", _.append(src), Right(0L)),
+      ("appendIdempotent", _.appendIdempotent(src, "app", 1L), Right(Some(0L))),
+      ("appendAudited", _.appendAudited(src,
+        Seq(Validation.RowRule("k_set", org.apache.spark.sql.functions.col("k").isNotNull))),
+        Right(Right(0L))),
+      ("overwrite", _.overwrite(src), Right(0L)),
+      ("shallowCloneFrom", _.shallowCloneFrom(withRows.path), Right(0L)))
+    val wrong = cases.flatMap { case (name, call, expected) =>
+      val t = new CommitTable(spark, Files.createTempDirectory("graft-clog-empty").toString,
+        "k", extraStatsCols = Seq("x"))
+      val got = scala.util.Try(call(t)).toEither.left.map(e => (e.getClass, e.getMessage))
+      val ok = (got, expected) match {
+        case (Left((gc, gm)), Left((ec, em))) =>
+          gc == ec && gm.startsWith(em.replace("<path>", t.path))
+        case (Right(gv), Right(ev)) => gv == ev
+        case _ => false
+      }
+      if (ok) None else Some(s"$name: got $got, expected $expected")
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
+
+  test("job counts of read, point read, merge and the file-granular rewrites stay at their bound") {
+    val s = spark
+    import s.implicits._
+    // four files with disjoint key windows: v0 = 1..10, v1..v3 append 11..40
+    def fourFiles(): CommitTable = {
+      val t = freshTable()
+      (0 until 4).foreach { i =>
+        val batch = (i * 10L + 1 to i * 10L + 10).map(k => k -> s"v$k").toDF("k", "v").coalesce(1)
+        if (i == 0) t.overwrite(batch) else t.append(batch)
+      }
+      t
+    }
+    def jobsOf(body: CommitTable => Any): Int = {
+      val t = fourFiles()
+      val sc = spark.sparkContext
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.graftbridge.ListenerBridge.waitUntilListenerBusEmpty(sc)
+      sc.addSparkListener(listener)
+      try {
+        body(t)
+        org.apache.spark.graftbridge.ListenerBridge.waitUntilListenerBusEmpty(sc)
+        jobs.get
+      } finally sc.removeSparkListener(listener)
+    }
+    val measured = Seq[(String, CommitTable => Any)](
+      "read" -> (_.read().collect()),
+      "prunedReadIn" -> (_.prunedReadIn(Seq(5L, 25L)).collect()),
+      "merge" -> (_.merge(kv(5L -> "m", 45L -> "n"), Seq("k"))),
+      "deleteRange" -> (_.deleteRange(5L, 8L)),
+      "compactSmall" -> (_.compactSmall("k", 1L << 20)),
+      "deleteWhereDV" -> (_.deleteWhereDV("k >= 12 AND k <= 14"))
+    ).map { case (name, body) => name -> jobsOf(body) }.toMap
+    // the counts measured before file-list resolution moved to driver
+    // data: the single-resolution path must not add a job to any of them
+    val bound = Map("read" -> 2, "prunedReadIn" -> 2, "merge" -> 4,
+      "deleteRange" -> 2, "compactSmall" -> 3, "deleteWhereDV" -> 5)
+    val over = measured.filter { case (n, j) => j > bound(n) }
+    assert(over.isEmpty, s"job counts above bound: $over (bound $bound)")
+  }
 }

@@ -51,6 +51,20 @@ class KnnGraphSpec extends SparkSpec {
       .sortBy(_._1)
   }
 
+  test("walk beam order equals Spark's cos DESC, vec_id order on NaN, signed zeros and ties") {
+    val s = spark
+    import s.implicits._
+    val nan = Double.NaN
+    val rows = Seq((1L, 7L, 0.5), (1L, 3L, nan), (1L, 2L, -0.0), (1L, 9L, 0.0),
+      (1L, 1L, 0.0), (1L, 4L, -0.0), (1L, 8L, 0.5), (1L, 5L, -1.0),
+      (1L, 6L, nan), (1L, 10L, Double.NegativeInfinity), (1L, 11L, Double.PositiveInfinity))
+    val bySpark = rows.toDF("query_id", "vec_id", "cos")
+      .orderBy(col("cos").desc, col("vec_id")).collect().map(_.getLong(1)).toSeq
+    assert(rows.sorted(KnnGraph.BeamOrder).map(_._2) === bySpark)
+    // NaN first, the zeros tie on cos and order by vec_id
+    assert(bySpark === Seq(3L, 6L, 11L, 7L, 8L, 1L, 2L, 4L, 9L, 5L, 10L))
+  }
+
   test("knnGraph: k rows per vertex, ranked, no self loops, deterministic") {
     val rng = new scala.util.Random(11)
     val vecs = (0L until 60L).map(i => i -> Array.fill(8)(rng.nextGaussian().toFloat))
