@@ -269,20 +269,37 @@ object KnnGraph {
     gv
   }
 
-  /** Top-`beam` rows per query by (cos desc, id asc). */
   /** Exact id-membership cut as a BROADCAST SEMI-JOIN against the (by
     * contract driver-bounded) id list — never `isin(ids: _*)`: a literal
     * in-list embeds every id into the plan, so a large query batch's
     * frontier (queries·beam ids) inflates analysis/codegen per hop,
     * while the semi-join's plan is constant-size and its build side is
-    * the same driver list shipped once (r17 verdict Next #4). The file
-    * cut stays [[graft.operators.CommitTable.prunedReadIn]]'s job; this
-    * is the row-exact residual. */
+    * the same driver list shipped once. The file cut stays
+    * [[graft.operators.CommitTable.prunedReadIn]]'s job; this is the
+    * row-exact residual. */
   private def idSemi(spark: SparkSession, df: DataFrame, idCol: String,
                      ids: Seq[Long]): DataFrame = {
     import spark.implicits._
     df.join(broadcast(ids.toDF(idCol)), Seq(idCol), "left_semi")
   }
+
+  /** `(vec_id, e, nrm)` rows as the walk's `(query_id, qe, qn)` query frame. */
+  private val queryCols = Seq(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qn"))
+
+  /** The member query source of the head and `At` entries: corpus vectors
+    * `0 until numQueries` as one file-pruned point read of the vectors
+    * table at its pinned version, `exclude` applied — a tombstoned id
+    * cannot query (it has left the index). */
+  private def memberQueries(spark: SparkSession, indexRoot: String, at: Map[String, Long],
+                            exclude: DataFrame => DataFrame, numQueries: Int): DataFrame =
+    exclude(new graft.operators.CommitTable(spark, s"$indexRoot/vectors", "vec_id")
+      .prunedReadIn(0L until numQueries.toLong, at.get("vectors"))
+      .filter(col("vec_id") < numQueries))
+
+  /** The head's delete-list exclusion: rows whose `vec_id` is tombstoned
+    * at the live head leave. */
+  private def liveOnly(indexRoot: String): DataFrame => DataFrame =
+    Tombstones.exclude(_, indexRoot, "vec_id", "vec_id")
 
   /** Best-first routed search over a committed graph index (the
     * DiskANN/Vamana query loop, batched over all queries at once): seed
@@ -309,76 +326,51 @@ object KnnGraph {
     * multi-file layouts). Nothing else touches the corpus: a search is
     * `hops` rounds of file-pruned point reads, exactly DiskANN's
     * "O(beam · hops) disk reads per query" shape, batched.
+    *
+    * Tombstone-aware under the FreshDiskANN DeleteList contract: deleted
+    * vertices still NAVIGATE (the walk scores them into the beam and uses
+    * their adjacency — severing them before [[consolidateKnnGraphIndex]]
+    * patches routes would punch reachability holes) but can never query
+    * or enter RESULTS; consolidation later removes them physically.
+    *
+    * `predicate` is the graph family's filtered-ANN surface (s23's
+    * IDSelector role): navigation stays UNFILTERED — the walk scores and
+    * routes through non-matching vertices, the ACORN post-filtering shape
+    * (Patel et al. 2024) — and the predicate gates RESULTS only, over the
+    * visited rows' (vec_id) column (attribute predicates join their id
+    * set first, the ivfTopKIndexed discipline). Under a highly selective
+    * predicate recall needs a wider beam — the walk must visit enough
+    * matching vertices to fill k — which the spec demonstrates; ACORN-γ's
+    * expanded neighbor lists are the published scale-up when beam
+    * widening stops paying.
     */
   def knnGraphSearch(spark: SparkSession, indexRoot: String,
                      numQueries: Int = 20, k: Int = 5,
                      beam: Int = 8, hops: Int = 3,
                      predicate: Option[Column] = None): DataFrame = {
     require(beam >= k, s"knnGraphSearch: beam $beam must be >= k $k")
-    val vecs = new graft.operators.CommitTable(spark, s"$indexRoot/vectors", "vec_id")
-    // query vectors: a file-pruned point read of the contract ids; a
-    // tombstoned id cannot query (it has left the index)
-    val queries = Tombstones.exclude(
-        vecs.prunedReadIn(0L until numQueries.toLong)
-          .filter(col("vec_id") < numQueries),
-        indexRoot, "vec_id", "vec_id")
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qn"))
-      .localCheckpoint(true)
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id"))
-    // tombstone-aware under the FreshDiskANN DeleteList contract: deleted
-    // vertices still NAVIGATE (the walk scores them into the beam and uses
-    // their adjacency — severing them before [[consolidateKnnGraphIndex]]
-    // patches routes would punch reachability holes) but can never enter
-    // RESULTS; consolidation later removes them physically
-    // `predicate` is the graph family's filtered-ANN surface (s23's
-    // IDSelector role): navigation stays UNFILTERED — the walk scores and
-    // routes through non-matching vertices, the ACORN post-filtering
-    // shape (Patel et al. 2024) — and the predicate gates RESULTS only,
-    // over the visited rows' (vec_id) column (attribute predicates join
-    // their id set first, the ivfTopKIndexed discipline). Under a highly
-    // selective predicate recall needs a wider beam — the walk must visit
-    // enough matching vertices to fill k — which the spec demonstrates;
-    // ACORN-γ's expanded neighbor lists are the published scale-up when
-    // beam widening stops paying.
-    val visited = Tombstones.exclude(
-      routedVisited(spark, indexRoot, queries, beam, hops),
-      indexRoot, "vec_id", "vec_id")
-    predicate.fold(visited)(visited.filter)
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"),
-        floor(col("cos") * 1e6).cast("long").as("cos_1e6"))
-      .orderBy("query_id", "rank")
+    val live = liveOnly(indexRoot)
+    searchPinned(spark, indexRoot, Map.empty, live,
+      memberQueries(spark, indexRoot, Map.empty, live, numQueries), k, beam, hops, predicate)
   }
 
   /** The graph index's EXTERNAL-queries serving entry
     * ([[Similarity.ivfSearchFor]]'s role): routed search for arbitrary
     * query vectors (`(vec_id, embedding)` rows that need not be corpus
-    * members). Same walk, same IO contract, same tombstone semantics —
-    * a corpus-member query frame reproduces [[knnGraphSearch]]
+    * members). Same walk, same IO contract, same tombstone semantics for
+    * results — a corpus-member query frame reproduces [[knnGraphSearch]]
     * bit-for-bit (spec-asserted). Id contract: a query id EQUAL to a
     * corpus vec_id is treated as that member (the probe self-excludes by
     * id equality, so that corpus vector leaves the query's top-k) —
     * callers wanting pure-external semantics must use ids disjoint from
-    * the committed id space, e.g. negative ids (r13 advice: id collisions
-    * are indistinguishable from membership without a separate key space). */
+    * the committed id space, e.g. negative ids: an id collision is
+    * indistinguishable from membership without a separate key space. */
   def knnGraphSearchFor(spark: SparkSession, indexRoot: String,
                         queryVecs: DataFrame, k: Int = 5,
                         beam: Int = 8, hops: Int = 3): DataFrame = {
     require(beam >= k, s"knnGraphSearchFor: beam $beam must be >= k $k")
-    val queries = vectors(queryVecs)
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qn"))
-      .localCheckpoint(true)
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id"))
-    Tombstones.exclude(routedVisited(spark, indexRoot, queries, beam, hops),
-        indexRoot, "vec_id", "vec_id")
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"),
-        floor(col("cos") * 1e6).cast("long").as("cos_1e6"))
-      .orderBy("query_id", "rank")
+    searchPinned(spark, indexRoot, Map.empty, liveOnly(indexRoot), vectors(queryVecs),
+      k, beam, hops, None)
   }
 
   /** [[knnGraphSearch]] AT a committed INDEX VERSION — the whole-index
@@ -397,14 +389,30 @@ object KnnGraph {
                        beam: Int = 8, hops: Int = 3): DataFrame = {
     require(beam >= k, s"knnGraphSearchAt: beam $beam must be >= k $k")
     val at = graft.operators.IndexManifest.resolve(spark, indexRoot, Some(indexVersion))
-    val vecs = new graft.operators.CommitTable(spark, s"$indexRoot/vectors", "vec_id")
-    val queries = vecs.prunedReadIn(0L until numQueries.toLong, at.get("vectors"))
-      .filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qn"))
-      .localCheckpoint(true)
+    searchPinned(spark, indexRoot, at, identity,
+      memberQueries(spark, indexRoot, at, identity, numQueries), k, beam, hops, None)
+  }
+
+  /** The one cosine search body behind the head, `At` and `For` entries:
+    * `queries` (`(vec_id, e, nrm)` rows) walk the graph at the pinned
+    * member versions `at` (empty: raw heads), `exclude` removes deleted
+    * vertices from the visited rows (identity for replay), and `predicate`
+    * gates what is left before the rank tail. */
+  private def searchPinned(spark: SparkSession, indexRoot: String, at: Map[String, Long],
+                           exclude: DataFrame => DataFrame, queries: DataFrame,
+                           k: Int, beam: Int, hops: Int,
+                           predicate: Option[Column]): DataFrame = {
+    val q = queries.select(queryCols: _*).localCheckpoint(true)
+    val visited = exclude(cosineVisited(spark, indexRoot, q, beam, hops, at))
+    rankVisited(predicate.fold(visited)(visited.filter), k)
+  }
+
+  /** The search rank tail: each query's top-`k` rows of `(query_id,
+    * vec_id, cos)` by (cos desc, vec_id), self excluded, as
+    * `(query_id, neighbor_id, rank, cos_1e6)`. */
+  private def rankVisited(visited: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id"))
-    routedVisited(spark, indexRoot, queries, beam, hops, at)
-      .filter(col("vec_id") =!= col("query_id"))
+    visited.filter(col("vec_id") =!= col("query_id"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"),
@@ -412,53 +420,70 @@ object KnnGraph {
       .orderBy("query_id", "rank")
   }
 
-  /** The shared beam loop: all `(query_id, vec_id, cos)` rows VISITED by
-    * the multi-entry routed walk for an arbitrary materialized query frame
-    * `(query_id, qe, qn)` — [[knnGraphSearch]] ranks these into results;
-    * [[appendKnnGraphIndex]] turns them into new adjacency.
+  /** `(query_id, vec_id, cos)` of the candidate pairs `cand` whose vector
+    * ids are `ids`: one file-pruned point read of the vectors table `vecs`
+    * at version `at`, scored against the `(query_id, qe, qn)` frame. */
+  private def cosines(spark: SparkSession, vecs: graft.operators.CommitTable, at: Option[Long],
+                      queries: DataFrame)(cand: DataFrame, ids: Seq[Long]): DataFrame =
+    cand.join(idSemi(spark, vecs.prunedReadIn(ids, at), "vec_id", ids)
+          .select("vec_id", "e", "nrm"), "vec_id")
+      .join(broadcast(queries.select("query_id", "qe", "qn")), "query_id")
+      .select(col("query_id"), col("vec_id"),
+        (dot(col("e"), col("qe")) / (col("nrm") * col("qn"))).as("cos"))
+
+  /** The cosine walk: [[routedVisited]] scored by [[cosines]] in
+    * [[BeamOrder]], as `(query_id, vec_id, cos)` — [[searchPinned]] ranks
+    * these into results; [[appendKnnGraphIndex]] turns them into new
+    * adjacency. */
+  private def cosineVisited(spark: SparkSession, indexRoot: String, queries: DataFrame,
+                            beam: Int, hops: Int, at: Map[String, Long]): DataFrame = {
+    import spark.implicits._
+    val vecs = new graft.operators.CommitTable(spark, s"$indexRoot/vectors", "vec_id")
+    val score = cosines(spark, vecs, at.get("vectors"), queries) _
+    routedVisited[Double](spark, indexRoot, queries, beam, hops, at,
+      (cand, ids) => score(cand, ids).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq,
+      BeamOrder).toDF("query_id", "vec_id", "cos")
+  }
+
+  /** The one beam loop: all `(query_id, vec_id, score)` tuples VISITED by
+    * the multi-entry routed walk for a materialized query frame carrying
+    * `query_id`, at the pinned member versions `at` (empty: raw heads).
+    * `score(cand, ids)` scores the `(query_id, vec_id)` candidate pairs
+    * whose vector ids are `ids` — cosines for the float walk, ADC sums for
+    * [[pqGraphSearch]] — and each hop keeps every query's `beam` best
+    * visited tuples in `order`.
     *
-    * The walk's working state lives on the DRIVER (r19): it is bounded by
-    * the search contract anyway — the loop ALWAYS driver-collected the
+    * The walk's working state lives on the DRIVER: it is bounded by the
+    * search contract anyway — the loop always driver-collects the
     * frontier and candidate ids per hop (≤ queries·beam and
     * ≤ queries·beam·degree) — so holding the full visited set
     * (≤ queries·(entries + hops·beam·degree) small tuples) costs the same
-    * order of driver memory while cutting each hop from three cluster
-    * jobs (frontier collect, candidate collect, union-distinct
-    * checkpoint) to the TWO file-pruned point reads the IO contract is
-    * about: the frontier's adjacency rows and the candidates' scored
-    * vector rows (measured: the per-hop checkpoint/window jobs were pure
-    * fixed cost on contract-sized frames — guide §1.2 per-task work vs
-    * §2.4 job-count; the beam ranking is a few-thousand-tuple sort).
-    * Batches past the contract's driver bound chunk at the caller
-    * ([[appendKnnGraphIndex]] note). Cosines are still computed by the
-    * same codegen'd column expressions — only WHERE rows rest between
-    * hops changed, so results are bit-identical (suite-asserted against
-    * the brute-force and mirror oracles).
+    * order of driver memory, and each hop runs only the TWO file-pruned
+    * point reads the IO contract is about: the frontier's adjacency rows
+    * and the candidates' scored rows. Batches past the contract's driver
+    * bound chunk at the caller ([[appendKnnGraphIndex]] note). Scores are
+    * still computed by the codegen'd column expressions, so results are
+    * bit-identical to a DataFrame-held beam (suite-asserted against the
+    * brute-force and mirror oracles). The dedup is on whole tuples: the
+    * same pair always scores bit-identically.
     */
-  private def routedVisited(spark: SparkSession, indexRoot: String,
-                            queries: DataFrame, beam: Int, hops: Int,
-                            at: Map[String, Long] = Map.empty): DataFrame = {
+  private def routedVisited[S](spark: SparkSession, indexRoot: String,
+                               queries: DataFrame, beam: Int, hops: Int,
+                               at: Map[String, Long],
+                               score: (DataFrame, Seq[Long]) => Seq[(Long, Long, S)],
+                               order: Ordering[(Long, Long, S)]): Seq[(Long, Long, S)] = {
     import spark.implicits._
-    val vecs = new graft.operators.CommitTable(spark, s"$indexRoot/vectors", "vec_id")
     val graph = new graft.operators.CommitTable(spark, s"$indexRoot/graph", "src")
     val entT = new graft.operators.CommitTable(spark, s"$indexRoot/entries", "eid")
     val entryIds = at.get("entries").map(entT.asOf).getOrElse(entT.read())
       .collect().map(_.getLong(0)).toSeq.sorted // ≤ numEntries by contract
-    def scoreIds(cand: DataFrame, ids: Seq[Long]): Seq[(Long, Long, Double)] =
-      cand.join(idSemi(spark, vecs.prunedReadIn(ids, at.get("vectors")), "vec_id", ids)
-            .select("vec_id", "e", "nrm"), "vec_id")
-        .join(broadcast(queries), "query_id")
-        .select(col("query_id"), col("vec_id"),
-          (dot(col("e"), col("qe")) / (col("nrm") * col("qn"))).as("cos"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val entryCand = queries.select(col("query_id"))
       .withColumn("vec_id", explode(lit(entryIds.toArray)))
-    // dedup on (query, vec, cos) tuples: binary-identical semantics to the
-    // DataFrame distinct it replaces (same pair ⇒ bit-identical cos)
-    var visited: Seq[(Long, Long, Double)] = scoreIds(entryCand, entryIds).distinct
-    // top-`beam` per query in [[BeamOrder]] — row_number semantics
-    def beamRows(vis: Seq[(Long, Long, Double)]): Seq[(Long, Long, Double)] =
-      vis.groupBy(_._1).valuesIterator.flatMap(_.sorted(BeamOrder).take(beam)).toSeq
+    var visited = score(entryCand, entryIds).distinct
+    // top-`beam` per query in `order` — row_number semantics
+    def beamRows(vis: Seq[(Long, Long, S)]): Seq[(Long, Long, S)] =
+      vis.groupBy(_._1).valuesIterator.flatMap(_.sorted(order).take(beam)).toSeq
     for (_ <- 1 to hops) {
       val bm = beamRows(visited)
       val frontier = bm.map(_._2).distinct.sorted
@@ -470,10 +495,9 @@ object KnnGraph {
       val cand = bm.flatMap { case (q, v, _) =>
         bySrc.getOrElse(v, Array.empty[(Long, Long)]).map(e => (q, e._2)) }.distinct
       val candIds = cand.map(_._2).distinct.sorted
-      val scored = scoreIds(cand.toDF("query_id", "vec_id"), candIds)
-      visited = (visited ++ scored).distinct
+      visited = (visited ++ score(cand.toDF("query_id", "vec_id"), candIds)).distinct
     }
-    visited.toDF("query_id", "vec_id", "cos")
+    visited
   }
 
   /** Incrementally extends a committed graph index with NEW vectors — the
@@ -509,16 +533,13 @@ object KnnGraph {
                           linkK: Int = 6, beam: Int = 8, hops: Int = 3): Long = {
     val spark = embNew.sparkSession
     val vNew = vectors(embNew).localCheckpoint(true)
-    val newQueries = vNew
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qn"))
-      .localCheckpoint(true)
+    val newQueries = vNew.select(queryCols: _*).localCheckpoint(true)
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id"))
     // deleted vertices may still navigate the link search (the search
     // contract) but a NEW point never links TO one — FreshDiskANN's insert
     // filters its candidate list against the DeleteList
-    val linked = Tombstones.exclude(
-        routedVisited(spark, indexRoot, newQueries, beam, hops),
-        indexRoot, "vec_id", "vec_id")
+    val linked = liveOnly(indexRoot)(
+        cosineVisited(spark, indexRoot, newQueries, beam, hops, Map.empty))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= linkK)
       .select(col("query_id"), col("vec_id"), col("cos"))
@@ -585,89 +606,56 @@ object KnnGraph {
                     beam: Int = 8, hops: Int = 3, candFactor: Int = 3,
                     dim: Int = 64): DataFrame = {
     require(beam >= k, s"pqGraphSearch: beam $beam must be >= k $k")
-    val vecs = new graft.operators.CommitTable(spark, s"$indexRoot/vectors", "vec_id")
     val codesT = new graft.operators.CommitTable(spark, s"$indexRoot/codes", "vec_id")
-    val graph = new graft.operators.CommitTable(spark, s"$indexRoot/graph", "src")
     val cb = Similarity.readPqCodebook(spark, s"$indexRoot/pqcodebook")
     val m = cb.length
     require(dim % m == 0, s"dim $dim must split into m=$m equal subspaces")
     val dsub = dim / m
     val kEff = cb(0).length
-    val entryIds = new graft.operators.CommitTable(spark, s"$indexRoot/entries", "eid")
-      .read().collect().map(_.getLong(0)).toSeq.sorted // ≤ numEntries by contract
     val lutCol = array((0 until m).map { j =>
       val cmat = typedLit(cb(j).map(_.toSeq).toSeq)
       array((0 until kEff).map(c =>
         floor(dot(Similarity.pqSubv(col("qe"), j, dsub), element_at(cmat, c + 1)) * 1e6)
           .cast("long")): _*)
     }: _*)
-    // same DeleteList semantics as [[knnGraphSearch]] (r13 advice): a
-    // tombstoned id cannot QUERY (it has left the index) ...
-    val queries = Tombstones.exclude(
-        vecs.prunedReadIn(0L until numQueries.toLong)
-          .filter(col("vec_id") < numQueries),
-        indexRoot, "vec_id", "vec_id")
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qn"))
+    // same DeleteList semantics as [[knnGraphSearch]]: a tombstoned id
+    // cannot QUERY (it has left the index), keeps NAVIGATING (the ADC walk
+    // routes through its adjacency), and never enters RESULTS — excluded
+    // from the visited rows before the candidate cut
+    val live = liveOnly(indexRoot)
+    val queries = memberQueries(spark, indexRoot, Map.empty, live, numQueries)
+      .select(queryCols: _*)
       .withColumn("lut", lutCol)
       .localCheckpoint(true)
     val adcCol = (0 until m).map(j =>
       element_at(element_at(col("lut"), j + 1), element_at(col("codes"), j + 1) + 1))
       .reduce(_ + _)
-    // driver-held walk state, the [[routedVisited]] discipline (r19): the
-    // ADC walk's frames are bounded by the same search contract, each hop
-    // is exactly the two file-pruned point reads (frontier adjacency +
-    // candidate CODE rows), and navigation stays the same exact-integer
-    // ADC sums — pure longs, so the local dedup/ranking is trivially
-    // bit-identical to the DataFrame distinct/window it replaces
+    // the [[routedVisited]] walk, scored by exact-integer ADC sums over the
+    // candidates' CODE rows (each hop: frontier adjacency + code rows);
+    // pure longs, so the driver-held dedup/ranking is bit-identical to a
+    // DataFrame distinct/window
     import spark.implicits._
-    def scoreIdsAdc(cand: DataFrame, ids: Seq[Long]): Seq[(Long, Long, Long)] =
+    def scoreAdc(cand: DataFrame, ids: Seq[Long]): Seq[(Long, Long, Long)] =
       cand.join(idSemi(spark, codesT.prunedReadIn(ids), "vec_id", ids)
             .select("vec_id", "codes"), "vec_id")
         .join(broadcast(queries.select("query_id", "lut")), "query_id")
         .select(col("query_id"), col("vec_id"), adcCol.as("adc"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    def beamRowsAdc(vis: Seq[(Long, Long, Long)]): Seq[(Long, Long, Long)] =
-      vis.groupBy(_._1).valuesIterator.flatMap(
-        _.sortBy(t => (-t._3, t._2)).take(beam)).toSeq
-    val entryCand = queries.select(col("query_id"))
-      .withColumn("vec_id", explode(lit(entryIds.toArray)))
-    var visitedL: Seq[(Long, Long, Long)] = scoreIdsAdc(entryCand, entryIds).distinct
-    for (_ <- 1 to hops) {
-      val bm = beamRowsAdc(visitedL)
-      val frontier = bm.map(_._2).distinct.sorted
-      val nbrs = idSemi(spark, graph.prunedReadIn(frontier), "src", frontier)
-        .select(col("src"), col("dst"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val bySrc = nbrs.groupBy(_._1)
-      val cand = bm.flatMap { case (q, v, _) =>
-        bySrc.getOrElse(v, Array.empty[(Long, Long)]).map(e => (q, e._2)) }.distinct
-      val candIds = cand.map(_._2).distinct.sorted
-      visitedL = (visitedL ++ scoreIdsAdc(cand.toDF("query_id", "vec_id"), candIds)).distinct
-    }
-    val visited = visitedL.toDF("query_id", "vec_id", "adc")
+    val visited = routedVisited[Long](spark, indexRoot, queries, beam, hops, Map.empty,
+      scoreAdc, Ordering.by((t: (Long, Long, Long)) => (-t._3, t._2)))
+      .toDF("query_id", "vec_id", "adc")
     // exact re-rank of the ADC-best k·candFactor visited (self excluded) —
-    // the ONLY touch of full-precision vectors in the whole query.
-    // ... and a tombstoned id keeps NAVIGATING (the ADC walk above routes
-    // through its adjacency) but can never enter RESULTS — excluded here
-    // before the candidate cut, matching knnGraphSearch's DeleteList gate
+    // the ONLY touch of full-precision vectors in the whole query
     val cw = Window.partitionBy("query_id").orderBy(col("adc").desc, col("vec_id"))
-    val cands = Tombstones.exclude(visited, indexRoot, "vec_id", "vec_id")
+    val cands = live(visited)
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("crank", row_number().over(cw))
       .filter(col("crank") <= k * candFactor)
       .select("query_id", "vec_id")
     val candIds = cands.select("vec_id").distinct()
       .collect().map(_.getLong(0)).toSeq.sorted // ≤ numQueries·k·candFactor by contract
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id"))
-    cands.join(idSemi(spark, vecs.prunedReadIn(candIds), "vec_id", candIds)
-          .select("vec_id", "e", "nrm"), "vec_id")
-      .join(broadcast(queries.select("query_id", "qe", "qn")), "query_id")
-      .withColumn("cos", dot(col("e"), col("qe")) / (col("nrm") * col("qn")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"),
-        floor(col("cos") * 1e6).cast("long").as("cos_1e6"))
-      .orderBy("query_id", "rank")
+    val vecs = new graft.operators.CommitTable(spark, s"$indexRoot/vectors", "vec_id")
+    rankVisited(cosines(spark, vecs, None, queries)(cands, candIds), k)
   }
 
   /** LINK-HEALTH instrument for a committed graph index (s40, r15
@@ -869,35 +857,33 @@ object KnnGraph {
   def consolidateKnnGraphIndex(spark: SparkSession, indexRoot: String,
                                patchK: Int = 6): Long = {
     val graph = new graft.operators.CommitTable(spark, s"$indexRoot/graph", "src")
-    if (Tombstones.read(spark, indexRoot, "vec_id").forall(_.isEmpty))
+    // the delete list resolves ONCE, pinned at its latest version, and
+    // every exclusion below applies that one list
+    val dead = Tombstones.latestVersion(spark, indexRoot, "vec_id")
+      .map(Tombstones.readAt(spark, indexRoot, "vec_id", _))
+    if (dead.forall(_.isEmpty))
       return graph.latestVersion().getOrElse(
         throw new IllegalStateException(s"no committed graph at $indexRoot"))
+    def live(df: DataFrame, c: String): DataFrame = Tombstones.excludeIn(df, dead.get, "vec_id", c)
     val vecs = new graft.operators.CommitTable(spark, s"$indexRoot/vectors", "vec_id")
     val entries = new graft.operators.CommitTable(spark, s"$indexRoot/entries", "eid")
-    val del = broadcast(Tombstones.read(spark, indexRoot, "vec_id").get
-      .withColumnRenamed("vec_id", "d"))
+    val del = broadcast(dead.get.withColumnRenamed("vec_id", "d"))
     val g = graph.read().select("src", "dst", "cos").localCheckpoint(true)
     // one-hop repair pairs: (surviving in-neighbor of d) × (surviving
     // out-neighbor of d) — per-d fan-in × fan-out, bounded by the graph's
     // degree contract (lists are k-capped at build; appends grow them only
     // until the next rebuild)
-    val into = Tombstones.exclude(
-      g.join(del, g("dst") === col("d")).select(col("src"), col("d")),
-      indexRoot, "vec_id", "src")
-    val outof = Tombstones.exclude(
-      g.join(del, g("src") === col("d")).select(col("d"), col("dst")),
-      indexRoot, "vec_id", "dst")
-    val kept = Tombstones.exclude(
-      Tombstones.exclude(g, indexRoot, "vec_id", "src"),
-      indexRoot, "vec_id", "dst").localCheckpoint(true)
+    val into = live(g.join(del, g("dst") === col("d")).select(col("src"), col("d")), "src")
+    val outof = live(g.join(del, g("src") === col("d")).select(col("d"), col("dst")), "dst")
+    val kept = live(live(g, "src"), "dst").localCheckpoint(true)
     val patchPairs = into.join(outof, "d")
       .select("src", "dst").filter(col("src") =!= col("dst")).distinct()
       .join(kept.select("src", "dst").distinct(), Seq("src", "dst"), "left_anti")
-    val vKept = Tombstones.exclude(vecs.read(), indexRoot, "vec_id", "vec_id")
+    val vKept = live(vecs.read(), "vec_id")
       .select("vec_id", "e", "nrm").localCheckpoint(true)
     // validate the degenerate case BEFORE the first overwrite commit: a
-    // fully tombstoned index must fail without mutating any head (r13
-    // advice — failing after the graph/vectors overwrites left a broken
+    // fully tombstoned index must fail without mutating any head (failing
+    // after the graph/vectors overwrites would leave a broken
     // half-consolidated index with stale entries and uncleared tombstones)
     val minSurvRow = vKept.agg(min(col("vec_id"))).head()
     require(!minSurvRow.isNullAt(0),

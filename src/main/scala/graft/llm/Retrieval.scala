@@ -60,13 +60,7 @@ object Retrieval {
     */
   def bm25TopK(docs: DataFrame, queryTerms: Seq[String], k: Int = 10,
                k1E3: Long = 1200L, bE3: Long = 750L): DataFrame = {
-    require(queryTerms.nonEmpty, "bm25TopK: queryTerms must be non-empty")
-    require(queryTerms.distinct == queryTerms, "bm25TopK: queryTerms must be distinct")
-    require(queryTerms.forall(t => t.nonEmpty && t.matches("[a-z0-9]+")),
-      s"bm25TopK: query terms must be lowercase alphanumeric tokens, got $queryTerms")
-    require(k > 0, s"bm25TopK: k must be positive, got $k")
-    require(k1E3 >= 0 && bE3 >= 0 && bE3 <= 1000,
-      s"bm25TopK: k1E3 must be >= 0 and bE3 in [0, 1000], got k1E3=$k1E3 bE3=$bE3")
+    requireQuery("bm25TopK", queryTerms, k, k1E3, bE3)
     val spark = docs.sparkSession
     import spark.implicits._
 
@@ -99,12 +93,34 @@ object Retrieval {
     scoreTf(tf, idfDf, n, sumDl, k, k1E3, bE3)
   }
 
-  /** The BM25 scoring tail shared by [[bm25TopK]] and [[bm25TopKIndexed]] —
-    * one code path guarantees the indexed query is bit-identical to the
-    * inline operator. `tf` carries `(doc_id, dl, t, tf)`; arithmetic is the
-    * integer contract documented on [[bm25TopK]]. */
+  /** The BM25 input checks, messages prefixed with `op`: distinct,
+    * non-empty lowercase alphanumeric terms, `k > 0`, `k1E3 >= 0` and
+    * `bE3` in [0, 1000]. */
+  private def requireQuery(op: String, queryTerms: Seq[String], k: Int,
+                           k1E3: Long, bE3: Long): Unit = {
+    require(queryTerms.nonEmpty, s"$op: queryTerms must be non-empty")
+    require(queryTerms.distinct == queryTerms, s"$op: queryTerms must be distinct")
+    require(queryTerms.forall(t => t.nonEmpty && t.matches("[a-z0-9]+")),
+      s"$op: query terms must be lowercase alphanumeric tokens, got $queryTerms")
+    require(k > 0, s"$op: k must be positive, got $k")
+    require(k1E3 >= 0 && bE3 >= 0 && bE3 <= 1000,
+      s"$op: k1E3 must be >= 0 and bE3 in [0, 1000], got k1E3=$k1E3 bE3=$bE3")
+  }
+
+  /** The BM25 scoring tail shared by [[bm25TopK]] and the indexed
+    * entries — one code path guarantees the indexed query is bit-identical
+    * to the inline operator. `tf` carries `(doc_id, dl, t, tf)`. */
   private def scoreTf(tf: DataFrame, idfDf: DataFrame, n: Long, sumDl: Long,
                       k: Int, k1E3: Long, bE3: Long): DataFrame =
+    termScores(tf, idfDf, n, sumDl, k1E3, bE3, "doc_id")
+      .orderBy(desc("score_e6"), col("doc_id"))
+      .limit(k)
+
+  /** `(by…, score_e6)`: Σ over matched terms of idf·tf-saturation per `by`
+    * group, in the integer contract documented on [[bm25TopK]]. `tf`
+    * carries `(t, dl, tf)` and the `by` columns. */
+  private def termScores(tf: DataFrame, idfDf: DataFrame, n: Long, sumDl: Long,
+                         k1E3: Long, bE3: Long, by: String*): DataFrame =
     tf.join(idfDf, "t")
       .withColumn("norm_e3",
         lit(1000L - bE3) + expr(s"$bE3 * dl * $n div $sumDl"))
@@ -112,9 +128,21 @@ object Retrieval {
       // in micro-units; operands all positive so Spark `div` ≡ DuckDB `//`
       .withColumn("ratio_e6",
         expr(s"tf * ${k1E3 + 1000L} * 1000000000 div (tf * 1000000 + $k1E3 * norm_e3)"))
-      .groupBy("doc_id")
+      .groupBy(by.map(col): _*)
       .agg(sum(col("idf_e6") * col("ratio_e6")).as("s_e12"))
-      .select(col("doc_id"), expr("s_e12 div 1000000").as("score_e6"))
+      .select(by.map(col) :+ expr("s_e12 div 1000000").as("score_e6"): _*)
+
+  /** MaxP over per-chunk scores: per doc, the max passage score;
+    * best_chunk = smallest chunk_id attaining it (max over
+    * (score, -chunk_id) structs — integer-exact). Top-`k` by (score desc,
+    * doc_id). `tf` carries `(doc_id, chunk_id, dl, t, tf)`. */
+  private def scoreMaxP(tf: DataFrame, idfDf: DataFrame, n: Long, sumDl: Long,
+                        k: Int, k1E3: Long, bE3: Long): DataFrame =
+    termScores(tf, idfDf, n, sumDl, k1E3, bE3, "doc_id", "chunk_id")
+      .groupBy("doc_id")
+      .agg(max(struct(col("score_e6"), (-col("chunk_id")).as("neg"))).as("best"))
+      .select(col("doc_id"), (-col("best.neg")).as("best_chunk"),
+        col("best.score_e6").as("score_e6"))
       .orderBy(desc("score_e6"), col("doc_id"))
       .limit(k)
 
@@ -266,72 +294,37 @@ object Retrieval {
   /** Queries a persisted BM25 index with ZERO corpus-stats jobs: corpus
     * size and total length come from summing the (commit-count-sized)
     * stats table; the postings read is FILE-PRUNED FROM THE LOG before any
-    * job is planned — each query term's [[Hashing.hash60]] is computed on
-    * the driver and only files whose committed `[min th, max th]` stats
-    * cover it are handed to the reader (the th-range-clustered layout
-    * [[bm25Postings]] writes makes those windows narrow; pruning is
-    * inputFiles-asserted in RetrievalSpec). df(t) then counts that same
-    * pruned read (≤ |q| driver rows), scoring streams it, and the raw
-    * document table is not an input at all. Bit-identical to [[bm25TopK]]
-    * over the same corpus (shared [[scoreTf]] tail + identical df/idf
-    * derivation), so it shares t37's oracle.
+    * job is planned ([[pinnedPostings]]), df(t) counts that same pruned
+    * read, scoring streams it, and the raw document table is not an input
+    * at all. Bit-identical to [[bm25TopK]] over the same corpus (shared
+    * [[scoreTf]] tail + identical df/idf derivation), so it shares t37's
+    * oracle.
+    *
+    * Postings + stats resolve through the manifest HEAD — one CONSISTENT
+    * pinned pair: [[appendBm25Index]] commits the stats delta before the
+    * postings append, so raw table heads can transiently pair the new
+    * n/sum_dl with the old postings for a racing reader; the manifest is
+    * the single atomic-last commit that closes that window. An index root
+    * predating the manifest falls back to raw heads.
+    *
+    * Tombstone-aware under the LUCENE deleted-docs contract: a doc on the
+    * delete list ([[deleteFromBm25Index]]) never surfaces in results and
+    * never counts toward the query terms' df (both derive from the
+    * anti-joined read) — but the corpus-wide n/sum_dl come from the stats
+    * table and stay STALE until [[consolidateBm25Index]], exactly as Lucene
+    * scores against pre-merge segment statistics. Consolidation restores
+    * rebuild-exact state (spec-asserted). The delete list is resolved at
+    * the MANIFEST-PINNED version when one is recorded (deletes and
+    * consolidation both commit it as a member), so this read can never
+    * pair old pinned postings with a later-cleared live list; manifests
+    * predating the pin fall back to the live head.
     */
   def bm25TopKIndexed(spark: org.apache.spark.sql.SparkSession, indexRoot: String,
                       queryTerms: Seq[String], k: Int = 10,
                       k1E3: Long = 1200L, bE3: Long = 750L): DataFrame = {
-    require(queryTerms.nonEmpty, "bm25TopKIndexed: queryTerms must be non-empty")
-    require(queryTerms.distinct == queryTerms, "bm25TopKIndexed: queryTerms must be distinct")
-    require(queryTerms.forall(t => t.nonEmpty && t.matches("[a-z0-9]+")),
-      s"bm25TopKIndexed: query terms must be lowercase alphanumeric tokens, got $queryTerms")
-    require(k > 0, s"bm25TopKIndexed: k must be positive, got $k")
-    require(k1E3 >= 0 && bE3 >= 0 && bE3 <= 1000,
-      s"bm25TopKIndexed: k1E3 must be >= 0 and bE3 in [0, 1000], got k1E3=$k1E3 bE3=$bE3")
-    import spark.implicits._
-    // resolve postings + stats through the manifest HEAD — one CONSISTENT
-    // pinned pair. [[appendBm25Index]] commits the stats delta before the
-    // postings append, so raw table heads can transiently pair the new
-    // n/sum_dl with the old postings for a racing reader; the manifest is
-    // the single atomic-last commit that closes that window (r13 advice).
-    // An index root predating the manifest falls back to raw heads.
-    val at: Map[String, Long] =
-      try graft.operators.IndexManifest.resolve(spark, indexRoot)
-      catch { case _: IllegalStateException => Map.empty }
-    val statsT = new graft.operators.CommitTable(spark, s"$indexRoot/stats", "n_docs")
-    val statsRow = at.get("stats").map(statsT.asOf).getOrElse(statsT.read())
-      .agg(sum(col("n_docs")).as("n"), sum(col("sum_dl")).as("sum_dl")).head()
-    val n = statsRow.getLong(0)
-    val sumDl = statsRow.getLong(1)
-    require(n > 0, "bm25TopKIndexed: committed index covers no non-empty documents")
-    // per-term log-stats point lookups: hash60(term) is known on the driver,
-    // so each term reads ONLY the files whose committed th-window covers its
-    // hash; the residual t = term filter covers hash collisions inside a
-    // window. Terms are disjoint filters, so the union has no duplicates.
-    val postings = new graft.operators.CommitTable(spark, s"$indexRoot/postings", "th")
-    // tombstone-aware under the LUCENE deleted-docs contract: a doc on the
-    // delete list ([[deleteFromBm25Index]]) never surfaces in results and
-    // never counts toward the query terms' df (both derive from this
-    // anti-joined read) — but the corpus-wide n/sum_dl above come from the
-    // stats table and stay STALE until [[consolidateBm25Index]], exactly
-    // as Lucene scores against pre-merge segment statistics. Consolidation
-    // restores rebuild-exact state (spec-asserted). The delete list is
-    // resolved at the MANIFEST-PINNED version when one is recorded
-    // (deletes and consolidation both commit it as a member), so this
-    // read can never pair old pinned postings with a later-cleared live
-    // list (r14 advice); manifests predating the pin fall back to the
-    // live head, the original behavior.
-    val pruned = Tombstones.excludeAt(
-      queryTerms.map { t =>
-        val h = Hashing.hash60(t)
-        postings.prunedRead(h, h, at.get("postings")).filter(col("t") === t)
-      }.reduce(_ unionByName _),
-      indexRoot, "doc_id", "doc_id", at.get("tombstones"))
-    // df(t) = posting count of t, read off the SAME pruned scan that feeds
-    // scoring — ≤ |q| rows to the driver, by contract
-    val dfMap: Map[String, Long] = pruned
-      .groupBy("t").agg(count(lit(1)).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val idf = queryTerms.map(t => (t, idfE6(n, dfMap.getOrElse(t, 0L))))
-    val idfDf = broadcast(idf.toDF("t", "idf_e6"))
+    lazy val at = manifestHead(spark, indexRoot)
+    val (pruned, idfDf, n, sumDl) = pinnedPostings(spark, indexRoot, "bm25TopKIndexed",
+      "n_docs", queryTerms, k, k1E3, bE3, at, liveAt(indexRoot, at))
     scoreTf(pruned.select("doc_id", "dl", "t", "tf"), idfDf, n, sumDl, k, k1E3, bE3)
   }
 
@@ -340,31 +333,71 @@ object Retrieval {
     * pins postings AND corpus stats as they stood together, so a
     * historical query never scores one commit's postings against
     * another's n/sum_dl. Tombstones are a live-serving overlay and do not
-    * apply to replay.
+    * apply to replay. Same input checks as the head.
     */
   def bm25TopKIndexedAt(spark: org.apache.spark.sql.SparkSession, indexRoot: String,
                         indexVersion: Long, queryTerms: Seq[String], k: Int = 10,
                         k1E3: Long = 1200L, bE3: Long = 750L): DataFrame = {
-    require(queryTerms.nonEmpty, "bm25TopKIndexedAt: queryTerms must be non-empty")
+    val (pruned, idfDf, n, sumDl) = pinnedPostings(spark, indexRoot, "bm25TopKIndexedAt",
+      "n_docs", queryTerms, k, k1E3, bE3,
+      graft.operators.IndexManifest.resolve(spark, indexRoot, Some(indexVersion)), identity)
+    scoreTf(pruned.select("doc_id", "dl", "t", "tf"), idfDf, n, sumDl, k, k1E3, bE3)
+  }
+
+  /** The manifest head's member versions, or empty (raw heads) for an
+    * index root predating the manifest. */
+  private def manifestHead(spark: org.apache.spark.sql.SparkSession,
+                           indexRoot: String): Map[String, Long] =
+    try graft.operators.IndexManifest.resolve(spark, indexRoot)
+    catch { case _: IllegalStateException => Map.empty }
+
+  /** The head's delete-list exclusion over `doc_id`, at the delete list
+    * version `at` pins (the live head when `at` pins none). `at` is
+    * by-name: it resolves when the exclusion first runs. */
+  private def liveAt(indexRoot: String, at: => Map[String, Long]): DataFrame => DataFrame =
+    Tombstones.excludeAt(_, indexRoot, "doc_id", "doc_id", at.get("tombstones"))
+
+  /** The one query prologue of the persisted postings indexes (document
+    * and passage granularity). Validates the query ([[requireQuery]]),
+    * then, at the pinned member versions `at` (empty: raw heads; by-name,
+    * so nothing resolves before the checks pass):
+    *  - sums the `stats` rows into `(n, sumDl)` (`unit` names the count
+    *    column, `n_docs` or `n_chunks`);
+    *  - reads each term's postings FILE-PRUNED FROM THE LOG: hash60(term)
+    *    is known on the driver, so each term reads ONLY the files whose
+    *    committed th-window covers its hash (inputFiles-asserted in
+    *    RetrievalSpec); the residual `t = term` filter covers hash
+    *    collisions inside a window, and terms are disjoint filters, so the
+    *    union has no duplicates;
+    *  - applies `exclude` (the delete list; identity for replay) to that
+    *    read, and
+    *  - derives df(t) as the posting count of t off the SAME pruned read
+    *    (≤ |q| driver rows by contract) and the broadcast idf frame.
+    * Returns `(pruned, idfDf, n, sumDl)`.
+    */
+  private def pinnedPostings(spark: org.apache.spark.sql.SparkSession, indexRoot: String,
+                             op: String, unit: String, queryTerms: Seq[String], k: Int,
+                             k1E3: Long, bE3: Long, at: => Map[String, Long],
+                             exclude: DataFrame => DataFrame): (DataFrame, DataFrame, Long, Long) = {
+    requireQuery(op, queryTerms, k, k1E3, bE3)
     import spark.implicits._
-    val at = graft.operators.IndexManifest.resolve(spark, indexRoot, Some(indexVersion))
-    val statsT = new graft.operators.CommitTable(spark, s"$indexRoot/stats", "n_docs")
-    val statsRow = at.get("stats").map(statsT.asOf).getOrElse(statsT.read())
-      .agg(sum(col("n_docs")).as("n"), sum(col("sum_dl")).as("sum_dl")).head()
+    val pin = at // resolved once, after the checks
+    val statsT = new graft.operators.CommitTable(spark, s"$indexRoot/stats", unit)
+    val statsRow = pin.get("stats").map(statsT.asOf).getOrElse(statsT.read())
+      .agg(sum(col(unit)).as("n"), sum(col("sum_dl")).as("sum_dl")).head()
     val n = statsRow.getLong(0)
     val sumDl = statsRow.getLong(1)
-    require(n > 0, "bm25TopKIndexedAt: pinned index covers no non-empty documents")
+    require(n > 0, s"$op: index covers no non-empty ${unit.stripPrefix("n_")}")
     val postings = new graft.operators.CommitTable(spark, s"$indexRoot/postings", "th")
-    val pruned = queryTerms.map { t =>
+    val pruned = exclude(queryTerms.map { t =>
         val h = Hashing.hash60(t)
-        postings.prunedRead(h, h, at.get("postings")).filter(col("t") === t)
-      }.reduce(_ unionByName _)
+        postings.prunedRead(h, h, pin.get("postings")).filter(col("t") === t)
+      }.reduce(_ unionByName _))
     val dfMap: Map[String, Long] = pruned
       .groupBy("t").agg(count(lit(1)).as("df"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val idf = queryTerms.map(t => (t, idfE6(n, dfMap.getOrElse(t, 0L))))
-    val idfDf = broadcast(idf.toDF("t", "idf_e6"))
-    scoreTf(pruned.select("doc_id", "dl", "t", "tf"), idfDf, n, sumDl, k, k1E3, bE3)
+    (pruned, broadcast(idf.toDF("t", "idf_e6")), n, sumDl)
   }
 
   /** Reciprocal-rank fusion (Cormack et al. 2009) — the standard way to
@@ -444,23 +477,7 @@ object Retrieval {
       .select(col("doc_id"), col("chunk_id"), col("dl"),
         explode(filter(col("ws"), w => w.isin(queryTerms: _*))).as("t"))
       .groupBy("doc_id", "chunk_id", "dl", "t").agg(count(lit(1)).as("tf"))
-    val perChunk = tf.join(idfDf, "t")
-      .withColumn("norm_e3",
-        lit(1000L - bE3) + expr(s"$bE3 * dl * $n div $sumDl"))
-      .withColumn("ratio_e6",
-        expr(s"tf * ${k1E3 + 1000L} * 1000000000 div (tf * 1000000 + $k1E3 * norm_e3)"))
-      .groupBy("doc_id", "chunk_id")
-      .agg(sum(col("idf_e6") * col("ratio_e6")).as("s_e12"))
-      .select(col("doc_id"), col("chunk_id"), expr("s_e12 div 1000000").as("score_e6"))
-    // MaxP: per doc, the max passage score; best_chunk = smallest chunk_id
-    // attaining it (max over (score, -chunk_id) structs — integer-exact)
-    perChunk
-      .groupBy("doc_id")
-      .agg(max(struct(col("score_e6"), (-col("chunk_id")).as("neg"))).as("best"))
-      .select(col("doc_id"), (-col("best.neg")).as("best_chunk"),
-        col("best.score_e6").as("score_e6"))
-      .orderBy(desc("score_e6"), col("doc_id"))
-      .limit(k)
+    scoreMaxP(tf, idfDf, n, sumDl, k, k1E3, bE3)
   }
 
   /** DuckDB mirror of [[maxPassageTopK]]: the t12 chunk CTEs + the t37
@@ -580,17 +597,6 @@ object Retrieval {
     .withColumn("th", Hashing.hash60(col("t")))
     .repartitionByRange(col("th"), col("t"))
 
-  /** Queries a persisted passage index with ZERO corpus jobs — the
-    * [[bm25TopKIndexed]] discipline at chunk granularity: n/sum_dl from
-    * the commit-count-sized stats table, per-term log-stats point
-    * lookups on the postings (driver-computed hash60, file-pruned before
-    * planning), chunk df(t) counted off the same pruned read, then the
-    * identical integer scoring + MaxP max-struct rollup as
-    * [[maxPassageTopK]] — bit-identical to the inline operator over the
-    * same corpus (spec-asserted), so p12 shares p11's independent
-    * chunk-idf oracle. Postings + stats resolve through the manifest
-    * head (one consistent pinned pair, the r13/r14 reader discipline).
-    */
   /** Removes documents (ALL their chunks) from a persisted passage index —
     * [[deleteFromBm25Index]]'s semantics at chunk granularity: one atomic
     * O(deleted) tombstone commit, no postings file touched; deleted docs'
@@ -637,59 +643,28 @@ object Retrieval {
     v
   }
 
+  /** Queries a persisted passage index with ZERO corpus jobs — the
+    * [[bm25TopKIndexed]] discipline at chunk granularity, through the same
+    * [[pinnedPostings]] prologue: n/sum_dl from the commit-count-sized
+    * stats table, per-term log-stats point lookups on the postings, chunk
+    * df(t) counted off the same pruned read, then the identical integer
+    * scoring + MaxP max-struct rollup as [[maxPassageTopK]] —
+    * bit-identical to the inline operator over the same corpus
+    * (spec-asserted), so p12 shares p11's independent chunk-idf oracle.
+    * Postings + stats resolve through the manifest head (one consistent
+    * pinned pair), and deleted docs' chunks leave results and df
+    * immediately while corpus stats stay stale until consolidation — the
+    * head's Lucene deleted-docs rule, with the delete list at its
+    * manifest-pinned version.
+    */
   def maxPassageTopKIndexed(spark: org.apache.spark.sql.SparkSession,
                             indexRoot: String, queryTerms: Seq[String],
                             k: Int = 10, k1E3: Long = 1200L,
                             bE3: Long = 750L): DataFrame = {
-    require(queryTerms.nonEmpty, "maxPassageTopKIndexed: queryTerms must be non-empty")
-    require(queryTerms.distinct == queryTerms,
-      "maxPassageTopKIndexed: queryTerms must be distinct")
-    require(queryTerms.forall(t => t.nonEmpty && t.matches("[a-z0-9]+")),
-      s"maxPassageTopKIndexed: query terms must be lowercase alphanumeric tokens, got $queryTerms")
-    require(k > 0, s"maxPassageTopKIndexed: k must be positive, got $k")
-    import spark.implicits._
-    val at: Map[String, Long] =
-      try graft.operators.IndexManifest.resolve(spark, indexRoot)
-      catch { case _: IllegalStateException => Map.empty }
-    val statsT = new graft.operators.CommitTable(spark, s"$indexRoot/stats", "n_chunks")
-    val statsRow = at.get("stats").map(statsT.asOf).getOrElse(statsT.read())
-      .agg(sum(col("n_chunks")).as("n"), sum(col("sum_dl")).as("sum_dl")).head()
-    val n = statsRow.getLong(0)
-    val sumDl = statsRow.getLong(1)
-    require(n > 0, "maxPassageTopKIndexed: committed index covers no chunks")
-    val postings = new graft.operators.CommitTable(spark, s"$indexRoot/postings", "th")
-    // tombstone-aware under the Lucene deleted-docs rule (the
-    // bm25TopKIndexed discipline): deleted docs' chunks leave results and
-    // df immediately, corpus stats stay stale until consolidation; the
-    // delete list resolves at the MANIFEST-pinned version when recorded
-    val pruned = Tombstones.excludeAt(
-      queryTerms.map { t =>
-        val h = Hashing.hash60(t)
-        postings.prunedRead(h, h, at.get("postings")).filter(col("t") === t)
-      }.reduce(_ unionByName _),
-      indexRoot, "doc_id", "doc_id", at.get("tombstones"))
-    // chunk df(t) = posting count of t off the SAME pruned scan (≤ |q|
-    // driver rows by contract)
-    val dfMap: Map[String, Long] = pruned
-      .groupBy("t").agg(count(lit(1)).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val idf = queryTerms.map(t => (t, idfE6(n, dfMap.getOrElse(t, 0L))))
-    val idfDf = broadcast(idf.toDF("t", "idf_e6"))
-    val perChunk = pruned.join(idfDf, "t")
-      .withColumn("norm_e3",
-        lit(1000L - bE3) + expr(s"$bE3 * dl * $n div $sumDl"))
-      .withColumn("ratio_e6",
-        expr(s"tf * ${k1E3 + 1000L} * 1000000000 div (tf * 1000000 + $k1E3 * norm_e3)"))
-      .groupBy("doc_id", "chunk_id")
-      .agg(sum(col("idf_e6") * col("ratio_e6")).as("s_e12"))
-      .select(col("doc_id"), col("chunk_id"), expr("s_e12 div 1000000").as("score_e6"))
-    perChunk
-      .groupBy("doc_id")
-      .agg(max(struct(col("score_e6"), (-col("chunk_id")).as("neg"))).as("best"))
-      .select(col("doc_id"), (-col("best.neg")).as("best_chunk"),
-        col("best.score_e6").as("score_e6"))
-      .orderBy(desc("score_e6"), col("doc_id"))
-      .limit(k)
+    lazy val at = manifestHead(spark, indexRoot)
+    val (pruned, idfDf, n, sumDl) = pinnedPostings(spark, indexRoot, "maxPassageTopKIndexed",
+      "n_chunks", queryTerms, k, k1E3, bE3, at, liveAt(indexRoot, at))
+    scoreMaxP(pruned, idfDf, n, sumDl, k, k1E3, bE3)
   }
 
   // ----- late-interaction retrieval (s37) ---------------------------------

@@ -530,7 +530,7 @@ object Similarity {
     val assignments = v.select(col("vec_id") +: col("e") +: col("nrm") +: ivfCentroidScores(centroids): _*)
       .withColumn("cid", ivfArgmaxCid(centroids.length))
       .select("vec_id", "e", "nrm", "cid")
-    ivfProbe(assignments, centroids, numQueries, k, nprobe)
+    ivfProbe(assignments, assignments, centroids, numQueries, k, nprobe)
   }
 
   /** (vec_id, e, nrm) projection every IVF path starts from. */
@@ -591,25 +591,23 @@ object Similarity {
     centroids
   }
 
-  /** Probe phase shared by [[ivfTopK]] and [[ivfTopKIndexed]]: each query
-    * fans out to its nprobe best lists, exact re-rank inside them.
-    * `assignments` must carry (vec_id, e, nrm, cid). `keep` (the FAISS
-    * IDSelector shape) filters CANDIDATES inside the probed lists BEFORE
-    * ranking — so the full k survives an arbitrarily selective predicate
-    * (post-filtering a top-k would not); queries are never filtered. */
-  private def ivfProbe(assignments: DataFrame, centroids: Array[Array[Double]],
-                       numQueries: Long, k: Int, nprobe: Int,
-                       keep: Option[Column] = None,
-                       candidates: Option[DataFrame] = None,
-                       querySource: Option[DataFrame] = None): DataFrame = {
+  /** Probe phase shared by [[ivfTopK]] and the persisted-index entries:
+    * each query (`querySource` rows with `vec_id < numQueries`) fans out
+    * to its nprobe best lists, exact re-rank inside them. `querySource`
+    * carries (vec_id, e, nrm), `candidates` (vec_id, e, nrm, cid). The
+    * persisted entries pass candidates already filtered by their predicate
+    * (the FAISS IDSelector shape: inside the probed lists BEFORE ranking,
+    * so the full k survives an arbitrarily selective predicate —
+    * post-filtering a top-k would not); queries are never filtered. */
+  private def ivfProbe(querySource: DataFrame, candidates: DataFrame,
+                       centroids: Array[Array[Double]],
+                       numQueries: Long, k: Int, nprobe: Int): DataFrame = {
     val sortedCids = {
       // array_sort on (score, cid) structs ascending; take the top slice
       val scored = (0 until centroids.length).map(i => struct(col(s"c$i").as("s"), lit(i).as("cid")))
       slice(reverse(array_sort(array(scored: _*))), 1, nprobe).getField("cid")
     }
-    // querySource (the indexed path) carries pre-materialized query rows
-    // so the query side never rescans the table the candidates come from
-    val queries = querySource.getOrElse(assignments).filter(col("vec_id") < numQueries)
+    val queries = querySource.filter(col("vec_id") < numQueries)
       .select(Seq(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qn")) ++
         ivfCentroidScores(centroids): _*)
       .withColumn("probe_cid", explode(sortedCids))
@@ -617,9 +615,7 @@ object Similarity {
     // materialize the (bounded: numQueries × nprobe × N/nlist) candidate
     // set once — the window sort below would otherwise re-plan the join
     // subtree through every AQE stage
-    val candSrc = candidates.getOrElse(assignments)
-    val candKept = keep.fold(candSrc)(candSrc.filter)
-    val scoredPairs = broadcast(queries).join(candKept, col("probe_cid") === col("cid"))
+    val scoredPairs = broadcast(queries).join(candidates, col("probe_cid") === col("cid"))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cos", dot(col("e"), col("qe")) / (col("nrm") * col("qn")))
       .select("query_id", "vec_id", "cos")
@@ -679,43 +675,29 @@ object Similarity {
     * so results are bit-identical to a fresh `ivfTopK` at the same build
     * configuration (asserted in SimilaritySpec) and the oracle is shared.
     *
-    * `predicate` (round-12 verdict gap #1 — production vector search is
-    * almost always predicated) is the FAISS IDSelector shape: a filter
-    * over the committed list rows (vec_id / cid are the stored columns),
-    * applied INSIDE the probed lists before ranking, so the result still
-    * carries k rows per query under a selective filter where over-fetch +
-    * post-filter would come up short. Attribute predicates join their
-    * attribute table onto vec_id first and pass the resulting id set (an
-    * `isin`/join-pruned column works the same way). File pruning is
-    * unchanged: only probed lists' files are read (cid stats), and the
-    * predicate pushes into that scan.
+    * `predicate` (production vector search is almost always predicated) is
+    * the FAISS IDSelector shape: a filter over the committed list rows
+    * (vec_id / cid are the stored columns), applied INSIDE the probed lists
+    * before ranking, so the result still carries k rows per query under a
+    * selective filter where over-fetch + post-filter would come up short.
+    * Attribute predicates join their attribute table onto vec_id first and
+    * pass the resulting id set (an `isin`/join-pruned column works the same
+    * way). File pruning is unchanged: only probed lists' files are read
+    * (cid stats), and the predicate pushes into that scan.
+    *
+    * Tombstone-aware: deleted vectors ([[deleteFromIvfIndex]]) leave the
+    * index logically the moment their delete list commits — the anti-join
+    * keeps them out of queries and candidates alike; the physical rows go
+    * at the next [[consolidateIvfIndex]]. Because the exclusion is a pure
+    * row filter on the list rows, the probe result is BIT-IDENTICAL before
+    * and after consolidation (gate-asserted in s27).
     */
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, indexRoot: String,
                      numQueries: Int = 20, k: Int = 5, nprobe: Int = 4,
                      predicate: Option[Column] = None): DataFrame = {
-    val centroids = readIvfCodebook(spark, indexRoot)
-    val table = new graft.operators.CommitTable(spark, s"$indexRoot/lists", "cid")
-    // tombstone-aware: deleted vectors ([[deleteFromIvfIndex]]) leave the
-    // index logically the moment their delete list commits — the anti-join
-    // keeps them out of queries and candidates alike; the physical rows go
-    // at the next [[consolidateIvfIndex]]. Because the exclusion is a pure
-    // row filter on the list rows, the probe result is BIT-IDENTICAL
-    // before and after consolidation (gate-asserted in s27).
-    val assignments = Tombstones.exclude(table.read(), indexRoot, "vec_id", "vec_id")
-    // ONE scan finds the query rows (numQueries rows by contract — tiny,
-    // eagerly materialized); the probed-cid collect and the probe join's
-    // query side both reuse it, so the only other table read is the
-    // file-pruned candidate scan. A production deployment whose query
-    // vectors arrive externally skips even this scan — it substitutes its
-    // own querySource and keeps the identical probe.
-    val queries = assignments.filter(col("vec_id") < numQueries)
-      .select("vec_id", "e", "nrm").localCheckpoint(true)
-    val (cids, cand) = probedLists(table, queries, centroids, numQueries, nprobe)
-    val candKept = Tombstones.exclude(cand.filter(col("cid").isin(cids: _*)),
-      indexRoot, "vec_id", "vec_id")
-    ivfProbe(assignments, centroids, numQueries, k, nprobe,
-      keep = predicate, candidates = Some(candKept),
-      querySource = Some(queries))
+    val live = ivfLive(indexRoot)
+    ivfSearchPinned(spark, indexRoot, Map.empty, live,
+      ivfMemberQueries(spark, indexRoot, Map.empty, live, numQueries), k, nprobe, predicate)
   }
 
   /** The PRODUCTION SERVING entry of the persisted IVF index: probes for
@@ -723,27 +705,71 @@ object Similarity {
     * corpus members — the shape [[ivfTopKIndexed]]'s docs promise). Zero
     * training jobs, zero corpus-stats jobs, and no self-scan at all: the
     * ONLY table read is the file-pruned probed-lists scan. Identical
-    * probe semantics to [[ivfTopKIndexed]] (tombstone-aware, optional
-    * IDSelector predicate, self-pairs excluded by id), so a corpus-member
-    * query frame reproduces it bit-for-bit (spec-asserted) and streamed
-    * serving (st26) shares the batch oracle. Id contract: a query id
-    * EQUAL to a corpus vec_id is treated as that member (self-excluded
-    * from its own top-k); callers wanting pure-external semantics must
-    * use ids disjoint from the committed id space, e.g. negative ids.
+    * probe semantics to [[ivfTopKIndexed]] (tombstone-aware candidates,
+    * optional IDSelector predicate, self-pairs excluded by id), so a
+    * corpus-member query frame reproduces it bit-for-bit (spec-asserted)
+    * and streamed serving (st26) shares the batch oracle. Id contract: a
+    * query id EQUAL to a corpus vec_id is treated as that member
+    * (self-excluded from its own top-k); callers wanting pure-external
+    * semantics must use ids disjoint from the committed id space, e.g.
+    * negative ids.
     */
   def ivfSearchFor(spark: org.apache.spark.sql.SparkSession, indexRoot: String,
                    queryVecs: DataFrame, k: Int = 5, nprobe: Int = 4,
-                   predicate: Option[Column] = None): DataFrame = {
-    val centroids = readIvfCodebook(spark, indexRoot)
+                   predicate: Option[Column] = None): DataFrame =
+    ivfSearchPinned(spark, indexRoot, Map.empty, ivfLive(indexRoot), ivfVectors(queryVecs),
+      k, nprobe, predicate)
+
+  /** [[ivfTopKIndexed]] AT a committed INDEX VERSION — whole-index time
+    * travel through [[graft.operators.IndexManifest]]: `indexVersion`
+    * pins codebook AND lists as they stood together, so a historical
+    * probe never scores an old commit's lists against a newer codebook.
+    * Tombstones are a live-serving overlay and do not apply to replay
+    * (the graph family's [[KnnGraph.knnGraphSearchAt]] contract).
+    */
+  def ivfTopKIndexedAt(spark: org.apache.spark.sql.SparkSession, indexRoot: String,
+                       indexVersion: Long, numQueries: Int = 20, k: Int = 5,
+                       nprobe: Int = 4): DataFrame = {
+    val at = graft.operators.IndexManifest.resolve(spark, indexRoot, Some(indexVersion))
+    ivfSearchPinned(spark, indexRoot, at, identity,
+      ivfMemberQueries(spark, indexRoot, at, identity, numQueries), k, nprobe, None)
+  }
+
+  /** The head's delete-list exclusion over `vec_id`. */
+  private def ivfLive(indexRoot: String): DataFrame => DataFrame =
+    Tombstones.exclude(_, indexRoot, "vec_id", "vec_id")
+
+  /** The member query source of the head and `At` entries: list rows with
+    * `vec_id < numQueries` at the pinned lists version, `exclude` applied.
+    * One scan finds these rows (numQueries by contract); the probed-cid
+    * collect and the probe join's query side both reuse it. */
+  private def ivfMemberQueries(spark: org.apache.spark.sql.SparkSession, indexRoot: String,
+                               at: Map[String, Long], exclude: DataFrame => DataFrame,
+                               numQueries: Int): DataFrame = {
     val table = new graft.operators.CommitTable(spark, s"$indexRoot/lists", "cid")
-    val queries = ivfVectors(queryVecs).localCheckpoint(true)
-    // Long.MaxValue: external ids are arbitrary longs — an Int ceiling
-    // would silently drop queries with vec_id >= 2^31
-    val (cids, cand) = probedLists(table, queries, centroids, Long.MaxValue, nprobe)
-    val candKept = Tombstones.exclude(cand.filter(col("cid").isin(cids: _*)),
-      indexRoot, "vec_id", "vec_id")
-    ivfProbe(candKept, centroids, Long.MaxValue, k, nprobe,
-      keep = predicate, candidates = Some(candKept), querySource = Some(queries))
+    exclude(at.get("lists").map(table.asOf).getOrElse(table.read()))
+      .filter(col("vec_id") < numQueries)
+      .select("vec_id", "e", "nrm")
+  }
+
+  /** The one probe body behind the head, `At` and `For` entries: `queries`
+    * (`(vec_id, e, nrm)` rows, materialized once) probe the codebook and
+    * lists at the pinned member versions `at` (empty: raw heads); `exclude`
+    * removes deleted vectors from the file-pruned candidate read (identity
+    * for replay) and `predicate` filters what is left before ranking. */
+  private def ivfSearchPinned(spark: org.apache.spark.sql.SparkSession, indexRoot: String,
+                              at: Map[String, Long], exclude: DataFrame => DataFrame,
+                              queries: DataFrame, k: Int, nprobe: Int,
+                              predicate: Option[Column]): DataFrame = {
+    val centroids = readIvfCodebook(spark, indexRoot, at.get("centroids"))
+    val table = new graft.operators.CommitTable(spark, s"$indexRoot/lists", "cid")
+    val q = queries.localCheckpoint(true)
+    // Long.MaxValue: the query source already holds exactly the queries —
+    // external ids are arbitrary longs, and an Int ceiling would silently
+    // drop queries with vec_id >= 2^31
+    val (cids, cand) = probedLists(table, q, centroids, Long.MaxValue, nprobe, at.get("lists"))
+    val candKept = exclude(cand.filter(col("cid").isin(cids: _*)))
+    ivfProbe(q, predicate.fold(candKept)(candKept.filter), centroids, Long.MaxValue, k, nprobe)
   }
 
   /** The candidate-side read of a probed index query, CUT AT THE FILE
@@ -770,29 +796,6 @@ object Similarity {
       .select(explode(sortedCids).as("cid")).distinct()
       .collect().map(_.getInt(0).toLong).toSeq.sorted
     (cids, table.prunedReadIn(cids, atVersion))
-  }
-
-  /** [[ivfTopKIndexed]] AT a committed INDEX VERSION — whole-index time
-    * travel through [[graft.operators.IndexManifest]]: `indexVersion`
-    * pins codebook AND lists as they stood together, so a historical
-    * probe never scores an old commit's lists against a newer codebook.
-    * Tombstones are a live-serving overlay and do not apply to replay
-    * (the graph family's [[KnnGraph.knnGraphSearchAt]] contract).
-    */
-  def ivfTopKIndexedAt(spark: org.apache.spark.sql.SparkSession, indexRoot: String,
-                       indexVersion: Long, numQueries: Int = 20, k: Int = 5,
-                       nprobe: Int = 4): DataFrame = {
-    val at = graft.operators.IndexManifest.resolve(spark, indexRoot, Some(indexVersion))
-    val centroids = readIvfCodebook(spark, indexRoot, at.get("centroids"))
-    val table = new graft.operators.CommitTable(spark, s"$indexRoot/lists", "cid")
-    val assignments = at.get("lists").map(table.asOf).getOrElse(table.read())
-    val queries = assignments.filter(col("vec_id") < numQueries)
-      .select("vec_id", "e", "nrm").localCheckpoint(true)
-    val (cids, cand) = probedLists(table, queries, centroids, numQueries, nprobe,
-      at.get("lists"))
-    ivfProbe(assignments, centroids, numQueries, k, nprobe,
-      candidates = Some(cand.filter(col("cid").isin(cids: _*))),
-      querySource = Some(queries))
   }
 
   /** The committed codebook head: nlist × dim by the IVF contract — a

@@ -79,11 +79,7 @@ object Tombstones {
                 joinCol: String, version: Option[Long]): DataFrame =
     version match {
       case None => exclude(df, indexRoot, idCol, joinCol)
-      case Some(v) =>
-        val ts = table(df.sparkSession, indexRoot, idCol).asOf(v)
-          .select(col(idCol)).distinct()
-        df.join(broadcast(ts.withColumnRenamed(idCol, "__tomb_id")),
-          df(joinCol) === col("__tomb_id"), "left_anti")
+      case Some(v) => excludeIn(df, readAt(df.sparkSession, indexRoot, idCol, v), idCol, joinCol)
     }
 
   /** `df` minus the rows whose `joinCol` is tombstoned — a broadcast
@@ -92,12 +88,16 @@ object Tombstones {
     */
   def exclude(df: DataFrame, indexRoot: String, idCol: String,
               joinCol: String): DataFrame =
-    read(df.sparkSession, indexRoot, idCol) match {
-      case None => df
-      case Some(ts) =>
-        df.join(broadcast(ts.withColumnRenamed(idCol, "__tomb_id")),
-            df(joinCol) === col("__tomb_id"), "left_anti")
-    }
+    read(df.sparkSession, indexRoot, idCol).fold(df)(excludeIn(df, _, idCol, joinCol))
+
+  /** `df` minus the rows whose `joinCol` is on the already-resolved delete
+    * list `ts` (an `idCol` frame) — the one anti-join behind [[exclude]]
+    * and [[excludeAt]], for callers that resolve the list once and apply
+    * it several times. */
+  private[llm] def excludeIn(df: DataFrame, ts: DataFrame, idCol: String,
+                             joinCol: String): DataFrame =
+    df.join(broadcast(ts.withColumnRenamed(idCol, "__tomb_id")),
+      df(joinCol) === col("__tomb_id"), "left_anti")
 
   /** Empties the delete list as one commit (consolidation's last step);
     * old tombstone versions stay readable via the log's asOf, so "what was

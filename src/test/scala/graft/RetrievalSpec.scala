@@ -525,4 +525,18 @@ class RetrievalSpec extends SparkSpec {
     intercept[IllegalArgumentException](Retrieval.bm25TopK(d, Seq("a"), k = 0))
     intercept[IllegalArgumentException](Retrieval.bm25TopK(d, Seq("a"), bE3 = 1001L))
   }
+
+  test("the persisted-index entries share the inline operator's input guards, At included") {
+    val root = java.nio.file.Files.createTempDirectory("graft-bm25-guards").toString
+    Retrieval.buildBm25Index(docs(Seq((1L, "a b"), (2L, "a c"))), root)
+    val bad = Seq[(String, Seq[String], Int, Long)](
+      ("repeated term", Seq("a", "a"), 10, 750L), ("non-token term", Seq("Bad Term"), 10, 750L),
+      ("empty term", Seq(""), 10, 750L), ("k = 0", Seq("a"), 0, 750L), ("bE3 > 1000", Seq("a"), 10, 1001L))
+    bad.foreach { case (what, q, k, bE3) =>
+      intercept[IllegalArgumentException](Retrieval.bm25TopKIndexed(spark, root, q, k, bE3 = bE3))
+      withClue(s"bm25TopKIndexedAt, $what: ") {
+        intercept[IllegalArgumentException](Retrieval.bm25TopKIndexedAt(spark, root, 0L, q, k, bE3 = bE3))
+      }
+    }
+  }
 }
