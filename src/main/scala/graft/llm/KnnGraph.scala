@@ -1,8 +1,14 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
+
+import graft.operators.CommitTable
+import graft.operators.CommitTable.Budget
 
 /** Distributed k-NN-graph construction and graph-routed ANN search — the
   * GRAPH-based vector-index family (the HNSW / DiskANN lineage) that
@@ -283,23 +289,65 @@ object KnnGraph {
     df.join(broadcast(ids.toDF(idCol)), Seq(idCol), "left_semi")
   }
 
-  /** `(vec_id, e, nrm)` rows as the walk's `(query_id, qe, qn)` query frame. */
-  private val queryCols = Seq(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qn"))
+  /** A walk's query batch as driver data: `(query_id, qe, qn)` rows with
+    * non-null ids (a null id matches no join), grouped by id, and the frame
+    * over them — a LocalRelation, so Spark-side scoring broadcasts it with
+    * no read. */
+  private final class Queries(spark: SparkSession, rows: Seq[InternalRow], val schema: StructType) {
+    val byId: Map[Long, Seq[InternalRow]] = rows.groupBy(_.getLong(0))
+    val ids: Seq[Long] = byId.keys.toSeq.sorted
+    lazy val frame: DataFrame = Bridge.localFrame(spark, schema, rows)
+    /** The batch cut in two by id, for walks that must run in chunks. */
+    def halves: (Queries, Queries) = {
+      val (a, b) = ids.splitAt(ids.size / 2)
+      (new Queries(spark, a.flatMap(byId), schema), new Queries(spark, b.flatMap(byId), schema))
+    }
+  }
+
+  /** The [[Queries]] of vector rows (`vec_id`, `e`, `nrm` by name, of
+    * `schema`) — a vectors-table read or a [[vectors]] frame collected;
+    * at most `budget.rows` of them. */
+  private def queriesOf(spark: SparkSession, rows: Seq[InternalRow], schema: StructType,
+                        site: String, budget: Budget): Queries = {
+    budget.requireRows(site, rows.size)
+    val Seq(vi, ei, ni) = Seq("vec_id", "e", "nrm").map(schema.fieldIndex)
+    new Queries(spark,
+      rows.collect { case r if !r.isNullAt(vi) =>
+        InternalRow(r.getLong(vi), r.get(ei, schema(ei).dataType), r.get(ni, schema(ni).dataType)) },
+      StructType(Seq(schema(vi).copy(name = "query_id"), schema(ei).copy(name = "qe"),
+        schema(ni).copy(name = "qn"))))
+  }
+
+  /** Collected rows of `df` in Catalyst's internal form. */
+  private def collectInternal(df: DataFrame): Seq[InternalRow] = {
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(df.schema)
+    df.collect().toSeq.map(toInternal(_).asInstanceOf[InternalRow])
+  }
+
+  /** The vectors table's columns — the schema of a driver read that
+    * returned no rows, where it is never consulted. */
+  private val VectorSchema = StructType(Seq(StructField("vec_id", LongType),
+    StructField("e", ArrayType(DoubleType)), StructField("nrm", DoubleType)))
 
   /** The member query source of the head and `At` entries: corpus vectors
-    * `0 until numQueries` as one file-pruned point read of the vectors
-    * table at its pinned version, `exclude` applied — a tombstoned id
-    * cannot query (it has left the index). */
+    * with `vec_id < numQueries` from one file-pruned point read of the
+    * vectors table at its pinned version — on the driver within `budget`
+    * — minus the `dead` ids: a tombstoned id cannot query (it has left
+    * the index). */
   private def memberQueries(spark: SparkSession, indexRoot: String, at: Map[String, Long],
-                            exclude: DataFrame => DataFrame, numQueries: Int): DataFrame =
-    exclude(new graft.operators.CommitTable(spark, s"$indexRoot/vectors", "vec_id")
-      .prunedReadIn(0L until numQueries.toLong, at.get("vectors"))
-      .filter(col("vec_id") < numQueries))
-
-  /** The head's delete-list exclusion: rows whose `vec_id` is tombstoned
-    * at the live head leave. */
-  private def liveOnly(indexRoot: String): DataFrame => DataFrame =
-    Tombstones.exclude(_, indexRoot, "vec_id", "vec_id")
+                            dead: Set[Long], numQueries: Int, budget: Budget): Queries = {
+    val vecs = new CommitTable(spark, s"$indexRoot/vectors", "vec_id")
+    val ids = 0L until numQueries.toLong
+    val (rows, schema) = vecs.localReadIn(ids, at.get("vectors"), budget) match {
+      case Some(d) => (d.rows, if (d.rows.isEmpty) VectorSchema else d.schema)
+      case None =>
+        val df = vecs.prunedReadIn(ids, at.get("vectors")).filter(col("vec_id") < numQueries)
+        (collectInternal(df), df.schema)
+    }
+    val vi = schema.fieldIndex("vec_id")
+    queriesOf(spark, rows.filter(r => !r.isNullAt(vi) && r.getLong(vi) < numQueries &&
+      !dead(r.getLong(vi))), schema, "knnGraph member queries", budget)
+  }
 
   /** Best-first routed search over a committed graph index (the
     * DiskANN/Vamana query loop, batched over all queries at once): seed
@@ -318,20 +366,32 @@ object KnnGraph {
     * through their own vertex (cos = 1 keeps it at the beam head, so hop 1
     * already surfaces its committed neighbor list).
     *
-    * IO contract (the index's point): each hop collects the frontier's
-    * ≤ numQueries·beam ids (driver-bounded by contract), then reads the
-    * adjacency AND candidate-vector rows through
-    * [[graft.operators.CommitTable.prunedReadIn]] — files whose committed
-    * id window misses the wanted set are never opened (spec-asserted on
-    * multi-file layouts). Nothing else touches the corpus: a search is
-    * `hops` rounds of file-pruned point reads, exactly DiskANN's
-    * "O(beam · hops) disk reads per query" shape, batched.
+    * IO contract (the index's point): each hop reads only the frontier's
+    * adjacency rows and the candidates' vector rows — files whose
+    * committed id window (or Bloom filter) misses the wanted set are never
+    * opened, on either read path (spec-asserted on multi-file layouts).
+    * Nothing else touches the corpus: a search is `hops` rounds of
+    * file-pruned point reads, DiskANN's "O(beam · hops) disk reads per
+    * query" shape, batched. Each read takes one of two paths:
+    *  - when the cut files fit [[CommitTable.DriverBudget]]'s bytes
+    *    ([[CommitTable.localReadIn]]), the driver decodes them with
+    *    Spark's parquet reader and evaluates the same cosine Column as
+    *    Spark does when it folds it over a LocalRelation
+    *    ([[Bridge.localProjection]]) — no Spark job;
+    *  - otherwise [[CommitTable.prunedReadIn]] and a broadcast join score
+    *    in Spark, as one job per read.
+    * The rank tail always runs on the driver (the visited set is driver
+    * data), so a search whose reads fit the budget runs no Spark job at
+    * all; both paths return the same rows, schema included
+    * (spec-asserted).
     *
     * Tombstone-aware under the FreshDiskANN DeleteList contract: deleted
     * vertices still NAVIGATE (the walk scores them into the beam and uses
     * their adjacency — severing them before [[consolidateKnnGraphIndex]]
     * patches routes would punch reachability holes) but can never query
-    * or enter RESULTS; consolidation later removes them physically.
+    * or enter RESULTS; consolidation later removes them physically. The
+    * delete list resolves once per search, so queries and results are cut
+    * by the same list.
     *
     * `predicate` is the graph family's filtered-ANN surface (s23's
     * IDSelector role): navigation stays UNFILTERED — the walk scores and
@@ -347,12 +407,9 @@ object KnnGraph {
   def knnGraphSearch(spark: SparkSession, indexRoot: String,
                      numQueries: Int = 20, k: Int = 5,
                      beam: Int = 8, hops: Int = 3,
-                     predicate: Option[Column] = None): DataFrame = {
-    require(beam >= k, s"knnGraphSearch: beam $beam must be >= k $k")
-    val live = liveOnly(indexRoot)
-    searchPinned(spark, indexRoot, Map.empty, live,
-      memberQueries(spark, indexRoot, Map.empty, live, numQueries), k, beam, hops, predicate)
-  }
+                     predicate: Option[Column] = None): DataFrame =
+    memberSearch(spark, indexRoot, None, numQueries, k, beam, hops, predicate,
+      CommitTable.DriverBudget)
 
   /** The graph index's EXTERNAL-queries serving entry
     * ([[Similarity.ivfSearchFor]]'s role): routed search for arbitrary
@@ -367,11 +424,8 @@ object KnnGraph {
     * indistinguishable from membership without a separate key space. */
   def knnGraphSearchFor(spark: SparkSession, indexRoot: String,
                         queryVecs: DataFrame, k: Int = 5,
-                        beam: Int = 8, hops: Int = 3): DataFrame = {
-    require(beam >= k, s"knnGraphSearchFor: beam $beam must be >= k $k")
-    searchPinned(spark, indexRoot, Map.empty, liveOnly(indexRoot), vectors(queryVecs),
-      k, beam, hops, None)
-  }
+                        beam: Int = 8, hops: Int = 3): DataFrame =
+    externalSearch(spark, indexRoot, queryVecs, k, beam, hops, CommitTable.DriverBudget)
 
   /** [[knnGraphSearch]] AT a committed INDEX VERSION — the whole-index
     * time travel the per-table asOf cannot give: `indexVersion` resolves
@@ -386,118 +440,223 @@ object KnnGraph {
     */
   def knnGraphSearchAt(spark: SparkSession, indexRoot: String, indexVersion: Long,
                        numQueries: Int = 20, k: Int = 5,
-                       beam: Int = 8, hops: Int = 3): DataFrame = {
-    require(beam >= k, s"knnGraphSearchAt: beam $beam must be >= k $k")
-    val at = graft.operators.IndexManifest.resolve(spark, indexRoot, Some(indexVersion))
-    searchPinned(spark, indexRoot, at, identity,
-      memberQueries(spark, indexRoot, at, identity, numQueries), k, beam, hops, None)
+                       beam: Int = 8, hops: Int = 3): DataFrame =
+    memberSearch(spark, indexRoot, Some(indexVersion), numQueries, k, beam, hops, None,
+      CommitTable.DriverBudget)
+
+  /** The body of [[knnGraphSearch]] (`indexVersion` None: raw member
+    * heads, the live delete list) and [[knnGraphSearchAt]] (the manifest's
+    * pinned versions, no delete list) under `budget`. */
+  private[graft] def memberSearch(spark: SparkSession, indexRoot: String,
+                                  indexVersion: Option[Long], numQueries: Int, k: Int,
+                                  beam: Int, hops: Int, predicate: Option[Column],
+                                  budget: Budget): DataFrame = {
+    val entry = if (indexVersion.isEmpty) "knnGraphSearch" else "knnGraphSearchAt"
+    require(beam >= k, s"$entry: beam $beam must be >= k $k")
+    val (at, dead) = indexVersion match {
+      case Some(v) => (graft.operators.IndexManifest.resolve(spark, indexRoot, Some(v)), Set.empty[Long])
+      case None => (Map.empty[String, Long], Tombstones.latestIds(spark, indexRoot, "vec_id", budget))
+    }
+    searchPinned(spark, indexRoot, at, dead,
+      memberQueries(spark, indexRoot, at, dead, numQueries, budget), k, beam, hops, predicate, budget)
+  }
+
+  /** The body of [[knnGraphSearchFor]] under `budget`. */
+  private[graft] def externalSearch(spark: SparkSession, indexRoot: String,
+                                    queryVecs: DataFrame, k: Int, beam: Int, hops: Int,
+                                    budget: Budget): DataFrame = {
+    require(beam >= k, s"knnGraphSearchFor: beam $beam must be >= k $k")
+    val v = vectors(queryVecs)
+    val q = queriesOf(spark, collectInternal(v), v.schema, "knnGraphSearchFor queries", budget)
+    searchPinned(spark, indexRoot, Map.empty,
+      Tombstones.latestIds(spark, indexRoot, "vec_id", budget), q, k, beam, hops, None, budget)
   }
 
   /** The one cosine search body behind the head, `At` and `For` entries:
-    * `queries` (`(vec_id, e, nrm)` rows) walk the graph at the pinned
-    * member versions `at` (empty: raw heads), `exclude` removes deleted
-    * vertices from the visited rows (identity for replay), and `predicate`
-    * gates what is left before the rank tail. */
+    * the queries `q` walk the graph at the pinned member versions `at`
+    * (empty: raw heads), the `dead` ids leave the visited rows, and
+    * `predicate` gates what is left before the rank tail. */
   private def searchPinned(spark: SparkSession, indexRoot: String, at: Map[String, Long],
-                           exclude: DataFrame => DataFrame, queries: DataFrame,
-                           k: Int, beam: Int, hops: Int,
-                           predicate: Option[Column]): DataFrame = {
-    val q = queries.select(queryCols: _*).localCheckpoint(true)
-    val visited = exclude(cosineVisited(spark, indexRoot, q, beam, hops, at))
-    rankVisited(predicate.fold(visited)(visited.filter), k)
+                           dead: Set[Long], q: Queries, k: Int, beam: Int, hops: Int,
+                           predicate: Option[Column], budget: Budget): DataFrame =
+    rankVisited(spark,
+      cosineVisited(spark, indexRoot, q, beam, hops, at, budget).filterNot(t => dead(t._2)),
+      k, predicate)
+
+  /** The search rank tail, on the driver: each query's top-`k` visited
+    * `(query_id, vec_id, cos)` tuples in [[BeamOrder]] (the window's
+    * `cos DESC, vec_id`), self excluded, after `predicate` (evaluated by
+    * Spark over a LocalRelation, which it folds on the driver), as a
+    * LocalRelation-backed `(query_id, neighbor_id, rank, cos_1e6)` frame
+    * in `(query_id, rank)` order; `cos_1e6` is the Column
+    * `floor(cos · 1e6)` evaluated on the driver. */
+  private def rankVisited(spark: SparkSession, visited: Seq[(Long, Long, Double)], k: Int,
+                          predicate: Option[Column]): DataFrame = {
+    import spark.implicits._
+    val kept = predicate.fold(visited)(p => visited.toDF("query_id", "vec_id", "cos").filter(p)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq)
+    val ranked = kept.filter(t => t._2 != t._1).groupBy(_._1).toSeq.sortBy(_._1)
+      .flatMap { case (_, ts) =>
+        ts.sorted(BeamOrder).take(k).zipWithIndex.map { case ((q, v, c), i) =>
+          InternalRow(q, v, i + 1L, c) } }
+    val (schema, tail) = Bridge.localProjection(spark, RankedSchema, Seq(col("query_id"),
+      col("neighbor_id"), col("rank"), floor(col("cos") * 1e6).cast("long").as("cos_1e6")))
+    Bridge.localFrame(spark, schema, tail(ranked))
   }
 
-  /** The search rank tail: each query's top-`k` rows of `(query_id,
-    * vec_id, cos)` by (cos desc, vec_id), self excluded, as
-    * `(query_id, neighbor_id, rank, cos_1e6)`. */
-  private def rankVisited(visited: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id"))
-    visited.filter(col("vec_id") =!= col("query_id"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"),
-        floor(col("cos") * 1e6).cast("long").as("cos_1e6"))
-      .orderBy("query_id", "rank")
-  }
+  private val RankedSchema = StructType(Seq("query_id", "neighbor_id", "rank")
+    .map(StructField(_, LongType, nullable = false)) :+ StructField("cos", DoubleType, nullable = false))
+
+  /** The walk's cosine over `(query_id, vec_id, e, nrm, qe, qn)` rows. */
+  private val cosineCols = Seq(col("query_id"), col("vec_id"),
+    (dot(col("e"), col("qe")) / (col("nrm") * col("qn"))).as("cos"))
+
+  /** The walk's cosine, `(query_id, vec_id, cos)` of `(query_id, vec_id,
+    * e, nrm, qe, qn)` rows — what the Spark scorer evaluates. */
+  private[graft] def cosine(pairs: DataFrame): DataFrame = pairs.select(cosineCols: _*)
+
+  /** [[cosine]] as a driver function over pair rows of `schema` — the
+    * same Columns, evaluated the way Spark folds them over a
+    * LocalRelation ([[Bridge.localProjection]]). */
+  private[graft] def localCosine(spark: SparkSession,
+                                 schema: StructType): Seq[InternalRow] => Seq[InternalRow] =
+    Bridge.localProjection(spark, schema, cosineCols)._2
 
   /** `(query_id, vec_id, cos)` of the candidate pairs `cand` whose vector
     * ids are `ids`: one file-pruned point read of the vectors table `vecs`
-    * at version `at`, scored against the `(query_id, qe, qn)` frame. */
-  private def cosines(spark: SparkSession, vecs: graft.operators.CommitTable, at: Option[Long],
-                      queries: DataFrame)(cand: DataFrame, ids: Seq[Long]): DataFrame =
-    cand.join(idSemi(spark, vecs.prunedReadIn(ids, at), "vec_id", ids)
-          .select("vec_id", "e", "nrm"), "vec_id")
-      .join(broadcast(queries.select("query_id", "qe", "qn")), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        (dot(col("e"), col("qe")) / (col("nrm") * col("qn"))).as("cos"))
+    * at version `at`, joined to the candidates and the queries `q` — on
+    * the driver within `budget` (the joins in Scala, [[localCosine]] over
+    * the pairs), else in Spark. At most `budget.rows` scores. */
+  private def cosines(spark: SparkSession, vecs: CommitTable, at: Option[Long], q: Queries,
+                      budget: Budget)(cand: Seq[(Long, Long)], ids: Seq[Long]): Seq[(Long, Long, Double)] =
+    if (cand.isEmpty) Nil
+    else {
+      import spark.implicits._
+      val scored = vecs.localReadIn(ids, at, budget) match {
+        case Some(d) => localPairs(d, ids, q, cand).fold(Seq.empty[InternalRow]) {
+          case (schema, pairs) => localCosine(spark, schema)(pairs) }
+        case None =>
+          collectInternal(cosine(cand.toDF("query_id", "vec_id")
+            .join(idSemi(spark, vecs.prunedReadIn(ids, at), "vec_id", ids)
+              .select("vec_id", "e", "nrm"), "vec_id")
+            .join(broadcast(q.frame), "query_id")))
+      }
+      budget.requireRows("knnGraph walk scores", scored.length)
+      scored.map { r =>
+        if (r.isNullAt(2)) throw new NullPointerException(
+          s"knnGraph walk: null cosine of query ${r.getLong(0)} and vector ${r.getLong(1)}")
+        (r.getLong(0), r.getLong(1), r.getDouble(2))
+      }
+    }
+
+  /** The Spark scorer's two inner joins on driver data: `(query_id,
+    * vec_id, e, nrm, qe, qn)` of each candidate pair whose vector is among
+    * the `ids` rows of `vecs`, with their schema (None: no pair). */
+  private def localPairs(vecs: CommitTable.DriverRows, ids: Seq[Long], q: Queries,
+                         cand: Seq[(Long, Long)]): Option[(StructType, Seq[InternalRow])] =
+    if (vecs.rows.isEmpty) None
+    else {
+      val vs = vecs.schema
+      val Seq(vi, ei, ni) = Seq("vec_id", "e", "nrm").map(vs.fieldIndex)
+      val (et, nt, qet, qnt) = (vs(ei).dataType, vs(ni).dataType, q.schema(1).dataType, q.schema(2).dataType)
+      val wanted = ids.toSet
+      val byVec = vecs.rows.filter(r => !r.isNullAt(vi) && wanted(r.getLong(vi))).groupBy(_.getLong(vi))
+      val rows = for {
+        (qid, vid) <- cand
+        v <- byVec.getOrElse(vid, Nil)
+        qr <- q.byId.getOrElse(qid, Nil)
+      } yield InternalRow(qid, vid, v.get(ei, et), v.get(ni, nt), qr.get(1, qet), qr.get(2, qnt))
+      if (rows.isEmpty) None
+      else Some((StructType(Seq(StructField("query_id", LongType, nullable = false),
+        StructField("vec_id", LongType, nullable = false),
+        vs(ei), vs(ni), q.schema(1), q.schema(2))), rows))
+    }
 
   /** The cosine walk: [[routedVisited]] scored by [[cosines]] in
     * [[BeamOrder]], as `(query_id, vec_id, cos)` — [[searchPinned]] ranks
     * these into results; [[appendKnnGraphIndex]] turns them into new
     * adjacency. */
-  private def cosineVisited(spark: SparkSession, indexRoot: String, queries: DataFrame,
-                            beam: Int, hops: Int, at: Map[String, Long]): DataFrame = {
-    import spark.implicits._
-    val vecs = new graft.operators.CommitTable(spark, s"$indexRoot/vectors", "vec_id")
-    val score = cosines(spark, vecs, at.get("vectors"), queries) _
-    routedVisited[Double](spark, indexRoot, queries, beam, hops, at,
-      (cand, ids) => score(cand, ids).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq,
-      BeamOrder).toDF("query_id", "vec_id", "cos")
+  private def cosineVisited(spark: SparkSession, indexRoot: String, q: Queries,
+                            beam: Int, hops: Int, at: Map[String, Long],
+                            budget: Budget): Seq[(Long, Long, Double)] = {
+    val vecs = new CommitTable(spark, s"$indexRoot/vectors", "vec_id")
+    routedVisited[Double](spark, indexRoot, q.ids, beam, hops, at,
+      cosines(spark, vecs, at.get("vectors"), q, budget), BeamOrder, budget)
   }
 
   /** The one beam loop: all `(query_id, vec_id, score)` tuples VISITED by
-    * the multi-entry routed walk for a materialized query frame carrying
-    * `query_id`, at the pinned member versions `at` (empty: raw heads).
-    * `score(cand, ids)` scores the `(query_id, vec_id)` candidate pairs
-    * whose vector ids are `ids` — cosines for the float walk, ADC sums for
-    * [[pqGraphSearch]] — and each hop keeps every query's `beam` best
-    * visited tuples in `order`.
+    * the multi-entry routed walk of the queries `queryIds`, at the pinned
+    * member versions `at` (empty: raw heads). `score(cand, ids)` scores
+    * the `(query_id, vec_id)` candidate pairs whose vector ids are `ids` —
+    * cosines for the float walk, ADC sums for [[pqGraphSearch]] — and
+    * each hop keeps every query's `beam` best visited tuples in `order`.
     *
-    * The walk's working state lives on the DRIVER: it is bounded by the
-    * search contract anyway — the loop always driver-collects the
-    * frontier and candidate ids per hop (≤ queries·beam and
-    * ≤ queries·beam·degree) — so holding the full visited set
-    * (≤ queries·(entries + hops·beam·degree) small tuples) costs the same
-    * order of driver memory, and each hop runs only the TWO file-pruned
-    * point reads the IO contract is about: the frontier's adjacency rows
-    * and the candidates' scored rows. Batches past the contract's driver
-    * bound chunk at the caller ([[appendKnnGraphIndex]] note). Scores are
-    * still computed by the codegen'd column expressions, so results are
-    * bit-identical to a DataFrame-held beam (suite-asserted against the
-    * brute-force and mirror oracles). The dedup is on whole tuples: the
+    * The walk's state lives on the DRIVER: the frontier and candidate ids
+    * of each hop (≤ queries·beam and ≤ queries·beam·degree) and the
+    * visited set (≤ queries·(entries + hops·beam·degree) small tuples).
+    * Each hop runs the TWO file-pruned point reads the IO contract is
+    * about: the frontier's adjacency rows and the candidates' scored rows.
+    * The entries and adjacency reads decode on the driver when their files
+    * fit `budget.bytes` ([[CommitTable.localReadIn]]) and run as one Spark
+    * collect otherwise; every batch — entries, adjacency, scores and the
+    * visited set — is held to `budget.rows` and fails loudly, naming the
+    * bound, past it (a batch that must go larger is walked in chunks,
+    * [[appendKnnGraphIndex]]). Scores come from the score function's
+    * Column expressions on either path, so results are bit-identical
+    * whichever path each read took. The dedup is on whole tuples: the
     * same pair always scores bit-identically.
     */
   private def routedVisited[S](spark: SparkSession, indexRoot: String,
-                               queries: DataFrame, beam: Int, hops: Int,
+                               queryIds: Seq[Long], beam: Int, hops: Int,
                                at: Map[String, Long],
-                               score: (DataFrame, Seq[Long]) => Seq[(Long, Long, S)],
-                               order: Ordering[(Long, Long, S)]): Seq[(Long, Long, S)] = {
-    import spark.implicits._
-    val graph = new graft.operators.CommitTable(spark, s"$indexRoot/graph", "src")
-    val entT = new graft.operators.CommitTable(spark, s"$indexRoot/entries", "eid")
-    val entryIds = at.get("entries").map(entT.asOf).getOrElse(entT.read())
-      .collect().map(_.getLong(0)).toSeq.sorted // ≤ numEntries by contract
-    val entryCand = queries.select(col("query_id"))
-      .withColumn("vec_id", explode(lit(entryIds.toArray)))
-    var visited = score(entryCand, entryIds).distinct
+                               score: (Seq[(Long, Long)], Seq[Long]) => Seq[(Long, Long, S)],
+                               order: Ordering[(Long, Long, S)],
+                               budget: Budget): Seq[(Long, Long, S)] = {
+    val graph = new CommitTable(spark, s"$indexRoot/graph", "src")
+    val entT = new CommitTable(spark, s"$indexRoot/entries", "eid")
+    val entryIds = entT.localRead(at.get("entries"), budget).map(_.rows.map(_.getLong(0)))
+      .getOrElse(at.get("entries").map(entT.asOf).getOrElse(entT.read()).collect().toSeq
+        .map(_.getLong(0))).sorted
+    budget.requireRows("knnGraph walk entries", entryIds.size)
+    def held(vis: Seq[(Long, Long, S)]): Seq[(Long, Long, S)] = {
+      budget.requireRows("knnGraph walk visited set", vis.size)
+      vis
+    }
+    var visited = held(score(for (q <- queryIds; e <- entryIds) yield (q, e), entryIds).distinct)
     // top-`beam` per query in `order` — row_number semantics
     def beamRows(vis: Seq[(Long, Long, S)]): Seq[(Long, Long, S)] =
       vis.groupBy(_._1).valuesIterator.flatMap(_.sorted(order).take(beam)).toSeq
     for (_ <- 1 to hops) {
       val bm = beamRows(visited)
       val frontier = bm.map(_._2).distinct.sorted
-      val nbrs = idSemi(spark, graph.prunedReadIn(frontier, at.get("graph")),
-          "src", frontier)
-        .select(col("src"), col("dst"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val bySrc = nbrs.groupBy(_._1)
+      val bySrc = adjacency(spark, graph, frontier, at.get("graph"), budget).groupBy(_._1)
       val cand = bm.flatMap { case (q, v, _) =>
-        bySrc.getOrElse(v, Array.empty[(Long, Long)]).map(e => (q, e._2)) }.distinct
+        bySrc.getOrElse(v, Nil).map(e => (q, e._2)) }.distinct
       val candIds = cand.map(_._2).distinct.sorted
-      visited = (visited ++ score(cand.toDF("query_id", "vec_id"), candIds)).distinct
+      visited = held((visited ++ score(cand, candIds)).distinct)
     }
     visited
+  }
+
+  /** The frontier's `(src, dst)` adjacency rows at graph version `at`: on
+    * the driver within `budget`, else the file-pruned Spark read and one
+    * collect; at most `budget.rows` rows. */
+  private def adjacency(spark: SparkSession, graph: CommitTable, frontier: Seq[Long],
+                        at: Option[Long], budget: Budget): Seq[(Long, Long)] = {
+    val edges = graph.localReadIn(frontier, at, budget) match {
+      case Some(d) if d.rows.isEmpty => Nil
+      case Some(d) =>
+        val wanted = frontier.toSet
+        val (si, di) = (d.schema.fieldIndex("src"), d.schema.fieldIndex("dst"))
+        d.rows.collect { case r if !r.isNullAt(si) && wanted(r.getLong(si)) =>
+          (r.getLong(si), r.getLong(di)) }
+      case None =>
+        idSemi(spark, graph.prunedReadIn(frontier, at), "src", frontier)
+          .select(col("src"), col("dst"))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }
+    budget.requireRows("knnGraph walk adjacency", edges.size)
+    edges
   }
 
   /** Incrementally extends a committed graph index with NEW vectors — the
@@ -517,6 +676,13 @@ object KnnGraph {
     *     valid spread of the id span; a drifted span is a rebuild signal).
     * Returns the committed graph version.
     *
+    * Driver bound: the batch's vectors are collected to the driver (at
+    * most [[CommitTable.DriverBudget]]'s rows; a larger batch fails and
+    * the caller splits it), and the link search walks them in chunks that
+    * keep every walk batch inside the same row bound — every chunk walks
+    * the same committed graph, so chunked and whole-batch links agree
+    * (spec-asserted).
+    *
     * Deliberate divergences, documented: touched existing vertices' lists
     * GROW past k (FreshDiskANN re-prunes them; here the periodic rebuild
     * re-normalizes — the routed walk only reads more candidate rows in the
@@ -524,37 +690,48 @@ object KnnGraph {
     * at the next rebuild (a daily shard against a large corpus rarely
     * self-neighbors; the spec pins the semantics either way).
     */
-  // NOTE (driver bound): the link search holds its visited set on the
-  // driver like every walk ([[routedVisited]]); a batch past the search
-  // contract's driver bound (≫ millions of new vectors at once) should be
-  // chunked by the caller — the streaming sources already deliver bounded
-  // batches (LandingZoneStream admission control).
   def appendKnnGraphIndex(embNew: DataFrame, indexRoot: String,
-                          linkK: Int = 6, beam: Int = 8, hops: Int = 3): Long = {
+                          linkK: Int = 6, beam: Int = 8, hops: Int = 3): Long =
+    appendLinked(embNew, indexRoot, linkK, beam, hops, CommitTable.DriverBudget)
+
+  /** The body of [[appendKnnGraphIndex]] under `budget`. */
+  private[graft] def appendLinked(embNew: DataFrame, indexRoot: String, linkK: Int, beam: Int,
+                                  hops: Int, budget: Budget): Long = {
     val spark = embNew.sparkSession
-    val vNew = vectors(embNew).localCheckpoint(true)
-    val newQueries = vNew.select(queryCols: _*).localCheckpoint(true)
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id"))
+    import spark.implicits._
+    val v = vectors(embNew)
+    val rows = collectInternal(v)
+    val q = queriesOf(spark, rows, v.schema, "appendKnnGraphIndex new vectors", budget)
     // deleted vertices may still navigate the link search (the search
     // contract) but a NEW point never links TO one — FreshDiskANN's insert
     // filters its candidate list against the DeleteList
-    val linked = liveOnly(indexRoot)(
-        cosineVisited(spark, indexRoot, newQueries, beam, hops, Map.empty))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= linkK)
-      .select(col("query_id"), col("vec_id"), col("cos"))
-    val forward = linked.select(col("query_id").as("src"), col("vec_id").as("dst"), col("cos"))
-    val reverse = linked.select(col("vec_id").as("src"), col("query_id").as("dst"), col("cos"))
-    new graft.operators.CommitTable(spark, s"$indexRoot/vectors", "vec_id")
-      .append(vNew.repartitionByRange(col("vec_id")))
-    val gv = new graft.operators.CommitTable(spark, s"$indexRoot/graph", "src")
-      .append(forward.union(reverse).repartitionByRange(col("src"), col("dst")))
+    val dead = Tombstones.latestIds(spark, indexRoot, "vec_id", budget)
+    val linked = chunked(q)(cosineVisited(spark, indexRoot, _, beam, hops, Map.empty, budget))
+      .filterNot(t => dead(t._2)).groupBy(_._1).toSeq.sortBy(_._1)
+      .flatMap(_._2.sorted(BeamOrder).take(linkK))
+    val edges = linked ++ linked.map { case (s, d, c) => (d, s, c) }
+    new CommitTable(spark, s"$indexRoot/vectors", "vec_id")
+      .append(Bridge.localFrame(spark, v.schema, rows).repartitionByRange(col("vec_id")))
+    val gv = new CommitTable(spark, s"$indexRoot/graph", "src")
+      .append(edges.toDF("src", "dst", "cos").repartitionByRange(col("src"), col("dst")))
     // one new index version pinning BOTH member appends — a manifest
     // reader never sees the new vectors without their reverse edges
     graft.operators.IndexManifest.commit(spark, indexRoot,
       Seq("vectors", "graph", "entries"))
     gv
   }
+
+  /** `walk(q)`, or — when a walk batch of `q` exceeds the driver row bound
+    * — the walks of `q`'s two halves, recursively. Each query walks
+    * independently, so the halves' visited sets together are `q`'s. */
+  private def chunked(q: Queries)(
+      walk: Queries => Seq[(Long, Long, Double)]): Seq[(Long, Long, Double)] =
+    try walk(q)
+    catch {
+      case _: CommitTable.DriverBudgetExceeded if q.ids.size > 1 =>
+        val (a, b) = q.halves
+        chunked(a)(walk) ++ chunked(b)(walk)
+    }
 
   /** Extends a committed graph index ([[buildKnnGraphIndex]]'s layout)
     * with the PQ artifacts the DISKANN QUERY LOOP navigates by — the
@@ -618,15 +795,15 @@ object KnnGraph {
         floor(dot(Similarity.pqSubv(col("qe"), j, dsub), element_at(cmat, c + 1)) * 1e6)
           .cast("long")): _*)
     }: _*)
-    // same DeleteList semantics as [[knnGraphSearch]]: a tombstoned id
-    // cannot QUERY (it has left the index), keeps NAVIGATING (the ADC walk
-    // routes through its adjacency), and never enters RESULTS — excluded
-    // from the visited rows before the candidate cut
-    val live = liveOnly(indexRoot)
-    val queries = memberQueries(spark, indexRoot, Map.empty, live, numQueries)
-      .select(queryCols: _*)
-      .withColumn("lut", lutCol)
-      .localCheckpoint(true)
+    // same DeleteList semantics as [[knnGraphSearch]], the list resolved
+    // once: a tombstoned id cannot QUERY (it has left the index), keeps
+    // NAVIGATING (the ADC walk routes through its adjacency), and never
+    // enters RESULTS — dropped from the visited rows before the candidate cut
+    val budget = CommitTable.DriverBudget
+    val dead = Tombstones.latestIds(spark, indexRoot, "vec_id", budget)
+    val q = memberQueries(spark, indexRoot, Map.empty, dead, numQueries, budget)
+    // over the queries' LocalRelation: Spark folds the LUT on the driver
+    val luts = q.frame.select(col("query_id"), lutCol.as("lut"))
     val adcCol = (0 until m).map(j =>
       element_at(element_at(col("lut"), j + 1), element_at(col("codes"), j + 1) + 1))
       .reduce(_ + _)
@@ -635,35 +812,37 @@ object KnnGraph {
     // pure longs, so the driver-held dedup/ranking is bit-identical to a
     // DataFrame distinct/window
     import spark.implicits._
-    def scoreAdc(cand: DataFrame, ids: Seq[Long]): Seq[(Long, Long, Long)] =
-      cand.join(idSemi(spark, codesT.prunedReadIn(ids), "vec_id", ids)
+    def scoreAdc(cand: Seq[(Long, Long)], ids: Seq[Long]): Seq[(Long, Long, Long)] =
+      if (cand.isEmpty) Nil
+      else {
+        val out = cand.toDF("query_id", "vec_id")
+          .join(idSemi(spark, codesT.prunedReadIn(ids), "vec_id", ids)
             .select("vec_id", "codes"), "vec_id")
-        .join(broadcast(queries.select("query_id", "lut")), "query_id")
-        .select(col("query_id"), col("vec_id"), adcCol.as("adc"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val visited = routedVisited[Long](spark, indexRoot, queries, beam, hops, Map.empty,
-      scoreAdc, Ordering.by((t: (Long, Long, Long)) => (-t._3, t._2)))
-      .toDF("query_id", "vec_id", "adc")
-    // exact re-rank of the ADC-best k·candFactor visited (self excluded) —
-    // the ONLY touch of full-precision vectors in the whole query
-    val cw = Window.partitionBy("query_id").orderBy(col("adc").desc, col("vec_id"))
-    val cands = live(visited)
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("crank", row_number().over(cw))
-      .filter(col("crank") <= k * candFactor)
-      .select("query_id", "vec_id")
-    val candIds = cands.select("vec_id").distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted // ≤ numQueries·k·candFactor by contract
-    val vecs = new graft.operators.CommitTable(spark, s"$indexRoot/vectors", "vec_id")
-    rankVisited(cosines(spark, vecs, None, queries)(cands, candIds), k)
+          .join(broadcast(luts), "query_id")
+          .select(col("query_id"), col("vec_id"), adcCol.as("adc"))
+          .collect()
+        budget.requireRows("pqGraphSearch walk scores", out.length)
+        out.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      }
+    val adcOrder = Ordering.by((t: (Long, Long, Long)) => (-t._3, t._2))
+    val visited = routedVisited[Long](spark, indexRoot, q.ids, beam, hops, Map.empty,
+      scoreAdc, adcOrder, budget)
+    // exact re-rank of each query's ADC-best k·candFactor visited (self
+    // excluded; the window's `adc DESC, vec_id`) — the ONLY touch of
+    // full-precision vectors in the whole query
+    val cands = visited.filter { case (qid, v, _) => v != qid && !dead(v) }
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .flatMap(_._2.sorted(adcOrder).take(k * candFactor)).map(t => (t._1, t._2))
+    val vecs = new CommitTable(spark, s"$indexRoot/vectors", "vec_id")
+    rankVisited(spark,
+      cosines(spark, vecs, None, q, budget)(cands, cands.map(_._2).distinct.sorted), k, None)
   }
 
-  /** LINK-HEALTH instrument for a committed graph index (s40, r15
-    * verdict Next #6): the IVF family has `ivfDriftStats`, but the graph
-    * family had nothing telling a caller when accumulated append/delete
-    * churn warrants the periodic full rebuild its docs defer to (the
-    * 40%-recall-plateau symptom s38 measures). One row of integer-exact
-    * aggregates:
+  /** LINK-HEALTH instrument for a committed graph index (s40): the
+    * graph family's `ivfDriftStats` — it tells a caller when accumulated
+    * append/delete churn warrants the periodic full rebuild its docs
+    * defer to (the 40%-recall-plateau symptom s38 measures). One row of
+    * integer-exact aggregates:
     *  - `n_edges`, `n_vertices` — live adjacency size;
     *  - `tomb_out_share_1e6` — share of edges whose SOURCE is tombstoned
     *    (dead vertices still navigating, FreshDiskANN's DeleteList debt);
@@ -700,7 +879,7 @@ object KnnGraph {
     // mutations may pass a materialized `(src, dst)` frame — deletes
     // commit tombstones and never touch the graph table, so the
     // adjacency is provably identical across such probes and re-scanning
-    // it per probe is pure waste (r17 verdict Next #2, the s40 trim).
+    // it per probe is pure waste.
     // Callers own the staleness contract: pass None after anything that
     // rewrites adjacency (build, append, consolidate, OPTIMIZE).
     val g = adjacency.getOrElse(graph.read().select("src", "dst"))
@@ -738,10 +917,10 @@ object KnnGraph {
   }
 
   /** [[knnGraphLinkStats]] for SEVERAL tombstone states over ONE shared
-    * adjacency in a SINGLE aggregation pass — the monitoring-loop fusion
-    * (r18 verdict Next #3): a lifecycle instrument probing between
-    * tombstone-only mutations re-reads the same adjacency and re-runs the
-    * same grouped aggregate once per probe; since tombstone commits are
+    * adjacency in a SINGLE aggregation pass — the monitoring-loop fusion:
+    * a lifecycle instrument probing between tombstone-only mutations
+    * re-reads the same adjacency and re-runs the same grouped aggregate
+    * once per probe; since tombstone commits are
     * versioned and immutable, the per-state delete lists can be read back
     * AFTER the fact ([[Tombstones.readAt]]) and every state's integer
     * shares fold in one job (guide §2.3/§2.4 — one pass, conditional

@@ -695,7 +695,7 @@ object Similarity {
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, indexRoot: String,
                      numQueries: Int = 20, k: Int = 5, nprobe: Int = 4,
                      predicate: Option[Column] = None): DataFrame = {
-    val live = ivfLive(indexRoot)
+    val live = ivfLive(spark, indexRoot)
     ivfSearchPinned(spark, indexRoot, Map.empty, live,
       ivfMemberQueries(spark, indexRoot, Map.empty, live, numQueries), k, nprobe, predicate)
   }
@@ -717,7 +717,7 @@ object Similarity {
   def ivfSearchFor(spark: org.apache.spark.sql.SparkSession, indexRoot: String,
                    queryVecs: DataFrame, k: Int = 5, nprobe: Int = 4,
                    predicate: Option[Column] = None): DataFrame =
-    ivfSearchPinned(spark, indexRoot, Map.empty, ivfLive(indexRoot), ivfVectors(queryVecs),
+    ivfSearchPinned(spark, indexRoot, Map.empty, ivfLive(spark, indexRoot), ivfVectors(queryVecs),
       k, nprobe, predicate)
 
   /** [[ivfTopKIndexed]] AT a committed INDEX VERSION — whole-index time
@@ -735,9 +735,15 @@ object Similarity {
       ivfMemberQueries(spark, indexRoot, at, identity, numQueries), k, nprobe, None)
   }
 
-  /** The head's delete-list exclusion over `vec_id`. */
-  private def ivfLive(indexRoot: String): DataFrame => DataFrame =
-    Tombstones.exclude(_, indexRoot, "vec_id", "vec_id")
+  /** The head's delete-list exclusion over `vec_id`, the list resolved
+    * once: the query and candidate exclusions of one search apply the
+    * same tombstone version and plan its read once. */
+  private def ivfLive(spark: org.apache.spark.sql.SparkSession,
+                      indexRoot: String): DataFrame => DataFrame = {
+    val dead = Tombstones.latestVersion(spark, indexRoot, "vec_id")
+      .map(Tombstones.readAt(spark, indexRoot, "vec_id", _))
+    df => dead.fold(df)(Tombstones.excludeIn(df, _, "vec_id", "vec_id"))
+  }
 
   /** The member query source of the head and `At` entries: list rows with
     * `vec_id < numQueries` at the pinned lists version, `exclude` applied.

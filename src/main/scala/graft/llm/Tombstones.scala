@@ -63,13 +63,35 @@ object Tombstones {
 
   /** Latest committed tombstone version, if the delete list exists —
     * what a manifest commit pins so readers resolve postings and their
-    * matching delete list as ONE snapshot (r14 advice: a reader pairing
-    * OLD pinned postings with an already-cleared live list would
-    * transiently resurrect deleted documents).
+    * matching delete list as ONE snapshot (a reader pairing OLD pinned
+    * postings with an already-cleared live list would transiently
+    * resurrect deleted documents).
     */
   def latestVersion(spark: SparkSession, indexRoot: String,
                     idCol: String): Option[Long] =
     table(spark, indexRoot, idCol).latestVersion()
+
+  /** The latest delete list as driver data (empty when no tombstone
+    * commit exists), resolved once for search paths that drop the same
+    * ids from several row sets: read on the driver within `budget`
+    * ([[graft.operators.CommitTable.localRead]]), else one collect; at
+    * most `budget.rows` ids. */
+  private[llm] def latestIds(spark: SparkSession, indexRoot: String, idCol: String,
+                             budget: graft.operators.CommitTable.Budget): Set[Long] = {
+    val t = table(spark, indexRoot, idCol)
+    t.latestVersion().fold(Set.empty[Long]) { v =>
+      val ids = t.localRead(Some(v), budget) match {
+        case Some(d) if d.rows.isEmpty => Nil
+        case Some(d) =>
+          val i = d.schema.fieldIndex(idCol)
+          d.rows.collect { case r if !r.isNullAt(i) => r.getLong(i) }
+        case None =>
+          t.asOf(v).select(col(idCol)).collect().toSeq.collect { case r if !r.isNullAt(0) => r.getLong(0) }
+      }
+      budget.requireRows(s"delete list of $indexRoot", ids.size)
+      ids.toSet
+    }
+  }
 
   /** [[exclude]] against the delete list AS OF a pinned version (the
     * manifest-resolved read path); `version` None falls back to the live

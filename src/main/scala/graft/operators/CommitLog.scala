@@ -334,12 +334,96 @@ class CommitTable(spark: SparkSession, val path: String, statsCol: String,
     * ([[graft.llm.Similarity.ivfTopKIndexed]] and friends). */
   def prunedReadIn(points: Seq[Long], atVersion: Option[Long] = None): DataFrame = {
     val v = atVersion.getOrElse(head())
+    readAt(v, pointCut(v, points))
+  }
+
+  /** The files of `version` that may hold one of `points`: the stats
+    * window cut, then per-file Bloom filters (when built —
+    * [[buildBloom]]) prove point ABSENCE inside files whose stats window
+    * covers a probe. */
+  private def pointCut(version: Long, points: Seq[Long]): Seq[String] = {
     val pts = points.distinct
-    val statFiles = addsOf(v)
-      .collect { case (p, lo, hi, _, _) if pts.exists(x => lo <= x && x <= hi) => p }
-    // second cut: per-file Bloom filters (when built — [[buildBloom]])
-    // prove point ABSENCE inside files whose stats window covers a probe
-    readAt(v, bloomPrune(statFiles, pts))
+    bloomPrune(addsOf(version)
+      .collect { case (p, lo, hi, _, _) if pts.exists(x => lo <= x && x <= hi) => p }, pts)
+  }
+
+  /** [[prunedReadIn]]'s rows read on the driver, with no Spark job: the
+    * same stats and Bloom cut, then Spark's own parquet reader run
+    * in-process on each surviving file. None — the caller takes
+    * [[prunedReadIn]] — when the files' bytes exceed `budget.bytes`, the
+    * version carries a deletion-vector stamp or a column map, or the
+    * files' footers disagree on the schema (nullability aside). */
+  private[graft] def localReadIn(points: Seq[Long], atVersion: Option[Long] = None,
+                                 budget: CommitTable.Budget = CommitTable.DriverBudget
+                                ): Option[CommitTable.DriverRows] = {
+    val v = atVersion.getOrElse(head())
+    localRows(v, pointCut(v, points), budget)
+  }
+
+  /** [[asOf]] (or [[read]] when `atVersion` is None) on the driver, on
+    * [[localReadIn]]'s terms. */
+  private[graft] def localRead(atVersion: Option[Long] = None,
+                               budget: CommitTable.Budget = CommitTable.DriverBudget
+                              ): Option[CommitTable.DriverRows] = {
+    val v = atVersion.getOrElse(head())
+    localRows(v, addsOf(v).map(_._1), budget)
+  }
+
+  private def localRows(version: Long, files: Seq[String],
+                        budget: CommitTable.Budget): Option[CommitTable.DriverRows] =
+    if (dvVersionAt(version).isDefined || cmapAt(version).isDefined) None
+    else if (files.isEmpty) Some(CommitTable.DriverRows(new StructType(), Nil))
+    else {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val sized = files.map { f =>
+        val p = new Path(f)
+        (f, p.getFileSystem(conf).getFileStatus(p).getLen)
+      }
+      if (sized.map(_._2).sum > budget.bytes) None
+      else driverParquet(sized)
+    }
+
+  /** Spark's per-file parquet read function by schema, and each data
+    * file's footer schema, kept per table instance (a walk's instances live
+    * one search, and data files are immutable): building a read function
+    * serializes the session's Hadoop configuration into a broadcast, and
+    * a walk re-reads the same files every hop — both cost more than
+    * decoding a small file. */
+  private val parquetReaders = new java.util.concurrent.ConcurrentHashMap[StructType,
+    org.apache.spark.sql.execution.datasources.PartitionedFile =>
+      Iterator[org.apache.spark.sql.catalyst.InternalRow]]()
+  private val footerSchemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** The rows of `files` (path, byte length), all of one schema, decoded
+    * on the driver by Spark's parquet reader — the function a scan task
+    * runs per file. None when the footers' schemas differ (the caller's
+    * merged-schema read handles that). */
+  private def driverParquet(files: Seq[(String, Long)]): Option[CommitTable.DriverRows] = {
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetToSparkSchemaConverter}
+    val fmt = new ParquetFileFormat()
+    val conf = spark.sparkContext.hadoopConfiguration
+    val converter = new ParquetToSparkSchemaConverter(fmt.getSqlConf(spark))
+    // nullability aside: a file read surfaces every column nullable
+    val schemas = files.map { case (f, _) =>
+      footerSchemas.computeIfAbsent(f, _ => {
+        val p = new Path(f)
+        org.apache.spark.sql.graftbridge.Bridge.asNullable(ParquetFileFormat.readSchemaFromFooter(
+          new org.apache.parquet.hadoop.Footer(p,
+            org.apache.parquet.hadoop.ParquetFileReader.readFooter(conf, p)), converter))
+      })
+    }.distinct
+    if (schemas.length != 1) return None
+    val schema = schemas.head
+    val read = parquetReaders.computeIfAbsent(schema, s =>
+      fmt.buildReaderWithPartitionValues(spark, s, new StructType(), s, Nil,
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), fmt.getHadoopConf(spark)))
+    Some(CommitTable.DriverRows(schema, files.flatMap { case (f, len) =>
+      read(PartitionedFile(org.apache.spark.sql.catalyst.InternalRow.empty,
+        org.apache.spark.paths.SparkPath.fromPathString(f), 0L, len, Array.empty[String], 0L, len,
+        Map.empty)).map(_.copy()).toVector
+    }))
   }
 
   /** [[prunedRead]] on ANY declared stats column: only files whose
@@ -2650,6 +2734,32 @@ object CommitTable {
     * windows fold distributed. 4 MiB ≈ hundreds of thousands of actions.
     */
   private[operators] val DriverFoldBytes: Long = 4L << 20
+
+  /** What one driver-side call may read and hold: `bytes` of parquet per
+    * driver read ([[CommitTable.localReadIn]] declines past it), and
+    * `rows` per batch a driver loop collects or keeps
+    * ([[Budget.requireRows]] fails past it). */
+  private[graft] final case class Budget(bytes: Long, rows: Long) {
+    /** Fails, naming the bound, when the batch of `n` rows at `site`
+      * exceeds `rows`. */
+    def requireRows(site: String, n: Long): Unit =
+      if (n > rows) throw new DriverBudgetExceeded(
+        s"$site: a batch of $n rows exceeds the driver row bound DriverBudget.rows = $rows")
+  }
+
+  /** A batch past [[Budget.rows]]; callers that can split their input
+    * (the k-NN graph append's link search) catch it and retry in halves. */
+  private[graft] final class DriverBudgetExceeded(msg: String)
+    extends IllegalStateException(msg)
+
+  /** The driver budget every caller runs under; 8 MiB of parquet holds
+    * some sixteen thousand 64-d double vectors. */
+  private[graft] val DriverBudget: Budget = Budget(bytes = 8L << 20, rows = 1L << 20)
+
+  /** Rows read on the driver ([[CommitTable.localReadIn]]), in Catalyst's
+    * internal form, with their schema (empty when no file was read). */
+  private[graft] final case class DriverRows(schema: StructType,
+                                             rows: Seq[org.apache.spark.sql.catalyst.InternalRow])
 
   /** An active-file record: `(path, lo, hi, n, xs)` — stored
     * (table-relative) or resolved (absolute) path, per-file min/max on

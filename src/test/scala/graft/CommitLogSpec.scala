@@ -447,6 +447,52 @@ class CommitLogSpec extends SparkSpec {
     assert(rows(t.prunedReadIn(Seq(200L)).filter("k = 200")) === Set(200L -> "x"))
   }
 
+  test("localReadIn: prunedReadIn's rows and schema on the driver; declines past its byte budget, on deletion vectors, column maps and mixed schemas") {
+    val s = spark
+    import s.implicits._
+    val t = freshTable()
+    t.overwrite(kv((1L to 9L).map(i => i -> s"a$i"): _*).coalesce(1))
+    t.append(kv((10L to 19L).map(i => i -> s"b$i"): _*).coalesce(1))
+    t.append(kv((20L to 29L).map(i => i -> s"c$i"): _*).coalesce(1))
+    val pts = Seq(3L, 25L)
+    val viaSpark = t.prunedReadIn(pts)
+    val local = t.localReadIn(pts).get
+    assert(local.rows.map(r => (r.getLong(0), r.getUTF8String(1).toString)).toSet === rows(viaSpark))
+    assert(local.schema === viaSpark.schema, "driver rows carry the Spark read's schema")
+    assert(t.localRead().get.rows.length === 29)
+    assert(t.localRead(Some(0L)).get.rows.length === 9, "a pinned version reads that version's files")
+    assert(t.localReadIn(Seq(100L)).get.rows.isEmpty, "no file holds the point")
+    // the byte budget counts only the cut files: one file fits where three do not
+    def bytes(f: String) = new java.io.File(new java.net.URI(f)).length
+    val tight = CommitTable.Budget(bytes = t.read().inputFiles.map(bytes).max, rows = 10L)
+    assert(t.localReadIn(Seq(3L), budget = tight).isDefined)
+    assert(t.localRead(budget = tight).isEmpty)
+    // a pruned-out file is never opened: deleting it leaves the cut readable
+    val kept = t.prunedReadIn(Seq(15L)).inputFiles.toSet
+    t.read().inputFiles.filterNot(kept).foreach(f => new java.io.File(new java.net.URI(f)).delete())
+    assert(t.localReadIn(Seq(15L)).get.rows.map(_.getLong(0)).toSet === (10L to 19L).toSet)
+    // metadata planes the driver reader does not apply: the Spark path reads
+    val dv = freshTable()
+    dv.overwrite(kv(1L -> "a", 2L -> "b").coalesce(1))
+    assert(dv.localReadIn(Seq(1L)).isDefined)
+    dv.deleteRangeDV(2L, 2L)
+    assert(dv.localReadIn(Seq(1L)).isEmpty && dv.localRead(Some(0L)).isDefined)
+    val cm = freshTable()
+    cm.overwrite(kv(1L -> "a").coalesce(1))
+    cm.renameColumn("v", "w")
+    assert(cm.localRead().isEmpty)
+    // nullability alone does not split the schema: every column reads nullable
+    val mixed = freshTable()
+    mixed.overwrite(kv(1L -> "a").coalesce(1))
+    mixed.append(Seq((Option(2L), "b")).toDF("k", "v").coalesce(1))
+    assert(mixed.localRead().get.rows.map(_.getLong(0)).toSet === Set(1L, 2L))
+    // footers that disagree on the schema: the merged-schema Spark read
+    val wide = freshTable()
+    wide.overwrite(kv(1L -> "a").coalesce(1))
+    wide.append(Seq((2L, "b", 7)).toDF("k", "v", "x").coalesce(1))
+    assert(wide.localRead().isEmpty && wide.localReadIn(Seq(1L)).isDefined)
+  }
+
   test("buildBloom: sentinel rows make all-NULL-key files idempotent; filters size from rowcount; beyond-capacity files are marked, not filtered (r14 advice)") {
     val s = spark
     import s.implicits._
@@ -1271,6 +1317,7 @@ class CommitLogSpec extends SparkSpec {
       ("commitTs", _.commitTs(0L), notCommitted),
       ("prunedRead", _.prunedRead(0L, 1L), noCommits),
       ("prunedReadIn", _.prunedReadIn(Seq(1L)), noCommits),
+      ("localReadIn", _.localReadIn(Seq(1L)), noCommits),
       ("prunedReadOn", _.prunedReadOn("x", 0L, 1L), noCommits),
       ("buildBloom", _.buildBloom(), noCommits),
       ("dvVersionAt", _.dvVersionAt(0L), notCommitted),
@@ -1358,6 +1405,8 @@ class CommitLogSpec extends SparkSpec {
     val measured = Seq[(String, CommitTable => Any)](
       "read" -> (_.read().collect()),
       "prunedReadIn" -> (_.prunedReadIn(Seq(5L, 25L)).collect()),
+      "localReadIn" -> (_.localReadIn(Seq(5L, 25L))),
+      "localRead" -> (_.localRead()),
       "merge" -> (_.merge(kv(5L -> "m", 45L -> "n"), Seq("k"))),
       "deleteRange" -> (_.deleteRange(5L, 8L)),
       "compactSmall" -> (_.compactSmall("k", 1L << 20)),
@@ -1365,7 +1414,9 @@ class CommitLogSpec extends SparkSpec {
     ).map { case (name, body) => name -> jobsOf(body) }.toMap
     // the counts measured before file-list resolution moved to driver
     // data: the single-resolution path must not add a job to any of them
-    val bound = Map("read" -> 2, "prunedReadIn" -> 2, "merge" -> 4,
+    // (the driver reads run none)
+    val bound = Map("read" -> 2, "prunedReadIn" -> 2, "localReadIn" -> 0, "localRead" -> 0,
+      "merge" -> 4,
       "deleteRange" -> 2, "compactSmall" -> 3, "deleteWhereDV" -> 5)
     val over = measured.filter { case (n, j) => j > bound(n) }
     assert(over.isEmpty, s"job counts above bound: $over (bound $bound)")

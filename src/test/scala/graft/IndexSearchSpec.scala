@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.llm.{KnnGraph, Retrieval, Similarity}
-import graft.operators.IndexManifest
+import graft.operators.{CommitTable, IndexManifest}
 
 /** The persisted-index search entries side by side: for each family
   * (k-NN graph, IVF, BM25 / passage postings) the head, `At` and `For`
@@ -178,11 +179,86 @@ class IndexSearchSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** A byte budget no file fits: every read of the k-NN graph walk takes
+    * the Spark path. */
+  private val sparkOnly = CommitTable.Budget(bytes = 0L, rows = CommitTable.DriverBudget.rows)
+
+  private def knnEntries(knn: String, budget: CommitTable.Budget): Seq[(String, DataFrame)] = Seq(
+    "knnGraphSearch" -> KnnGraph.memberSearch(spark, knn, None, 10, 4, 8, 3, None, budget),
+    "knnGraphSearch filtered" -> KnnGraph.memberSearch(spark, knn, None, 10, 4, 8, 3,
+      Some(col("vec_id") % 3 === 1), budget),
+    "knnGraphSearchAt" -> KnnGraph.memberSearch(spark, knn, Some(latest(knn)), 10, 4, 8, 3,
+      None, budget),
+    "knnGraphSearchFor" -> KnnGraph.externalSearch(spark, knn, members(10), 4, 8, 3, budget))
+
+  test("the k-NN graph entries return the same rows and schema whether the walk reads on the driver or in Spark") {
+    val knn = knnIndex()
+    def check(state: String): Unit =
+      knnEntries(knn, sparkOnly).zip(knnEntries(knn, CommitTable.DriverBudget)).foreach {
+        case ((name, viaSpark), (_, onDriver)) =>
+          val expect = viaSpark.collect().toSeq
+          assert(expect.nonEmpty, s"$name ($state) must return rows")
+          assert(onDriver.schema === viaSpark.schema, s"$name ($state): schema")
+          // the schema the Spark rank tail (window + floor) produced
+          assert(onDriver.schema === StructType(Seq("query_id", "neighbor_id", "rank")
+            .map(StructField(_, LongType, nullable = false)) :+ StructField("cos_1e6", LongType)),
+            s"$name ($state): the search schema")
+          assert(onDriver.collect().toSeq === expect, s"$name ($state): rows")
+      }
+    check("no tombstones")
+    KnnGraph.deleteFromKnnGraphIndex(idFrame(Seq(2L, 17L, 33L, 41L), "vec_id"), knn)
+    check("with tombstones")
+  }
+
+  test("a k-NN graph search whose reads fit the driver budget runs at most two Spark jobs") {
+    val knn = knnIndex()
+    KnnGraph.deleteFromKnnGraphIndex(idFrame(Seq(5L), "vec_id"), knn)
+    val onDriver = Seq[(String, () => Any)](
+      "knnGraphSearch" -> (() => KnnGraph.knnGraphSearch(spark, knn, numQueries = 10, k = 4).collect()),
+      "knnGraphSearch filtered" -> (() => KnnGraph.knnGraphSearch(spark, knn, numQueries = 10, k = 4,
+        predicate = Some(col("vec_id") % 3 === 1)).collect()),
+      "knnGraphSearchAt" -> (() => KnnGraph.knnGraphSearchAt(spark, knn, latest(knn), numQueries = 10, k = 4).collect()),
+      "knnGraphSearchFor" -> (() => KnnGraph.knnGraphSearchFor(spark, knn, members(10), k = 4).collect())
+    ).map { case (name, body) => name -> jobsOf(body()) }
+    assert(onDriver.forall(_._2 <= 2), s"driver-path searches ran more than 2 jobs: $onDriver")
+    val viaSpark = jobsOf(KnnGraph.memberSearch(spark, knn, None, 10, 4, 8, 3, None, sparkOnly).collect())
+    assert(viaSpark > 2, s"the Spark path must run jobs for the bound to mean anything: $viaSpark")
+  }
+
+  test("appendKnnGraphIndex links the same edges whether its link search runs whole or in chunks; a batch past the row bound fails naming it") {
+    val whole = knnIndex(); val parts = knnIndex()
+    val batch = embDF(vecs(8, seed = 3, idBase = 1000L))
+    val small = CommitTable.Budget(bytes = CommitTable.DriverBudget.bytes, rows = 120L)
+    // the whole batch's walk exceeds the small bound, so the append must chunk
+    val e = intercept[CommitTable.DriverBudgetExceeded](
+      KnnGraph.externalSearch(spark, whole, batch, 5, 8, 3, small))
+    assert(e.getMessage.contains("DriverBudget.rows = 120"), e.getMessage)
+    KnnGraph.appendLinked(batch, whole, 6, 8, 3, CommitTable.DriverBudget)
+    KnnGraph.appendLinked(batch, parts, 6, 8, 3, small)
+    def table(r: String, t: String) = rows(new CommitTable(spark, s"$r/$t", "x").read())
+    Seq("graph", "vectors").foreach(t =>
+      assert(table(parts, t) === table(whole, t), s"chunked append changed $t"))
+    // no chunk fits a bound below the entry set: the append fails loudly
+    // and commits nothing
+    val graphHead = new CommitTable(spark, s"$parts/graph", "src").latestVersion()
+    val tooSmall = CommitTable.Budget(bytes = CommitTable.DriverBudget.bytes, rows = 3L)
+    val e2 = intercept[CommitTable.DriverBudgetExceeded](KnnGraph.appendLinked(
+      embDF(vecs(2, seed = 4, idBase = 2000L)), parts, 6, 8, 3, tooSmall))
+    assert(e2.getMessage.contains("DriverBudget.rows = 3"), e2.getMessage)
+    assert(new CommitTable(spark, s"$parts/graph", "src").latestVersion() === graphHead)
+  }
+
   test("job counts of every search entry, append and consolidate stay at their bound") {
     val knn = knnIndex()
     KnnGraph.addPqToKnnGraphIndex(embDF(vecs(60)), knn, m = 4, ksub = 8, dim = dim)
     val ivf = ivfIndex(); val bm = bm25Index(); val psg = passageIndex()
     val knnMut = knnIndex()
+    // the head entries again with a live delete list, which they resolve per search
+    val knnDel = knnIndex()
+    KnnGraph.addPqToKnnGraphIndex(embDF(vecs(60)), knnDel, m = 4, ksub = 8, dim = dim)
+    KnnGraph.deleteFromKnnGraphIndex(idFrame(Seq(3L, 17L, 41L), "vec_id"), knnDel)
+    val ivfDel = ivfIndex()
+    Similarity.deleteFromIvfIndex(idFrame(Seq(3L, 17L, 41L), "vec_id"), ivfDel)
     val searches = Seq[(String, () => Any)](
       "knnGraphSearch" -> (() => KnnGraph.knnGraphSearch(spark, knn, numQueries = 10, k = 4).collect()),
       "knnGraphSearchFor" -> (() => KnnGraph.knnGraphSearchFor(spark, knn, members(10), k = 4).collect()),
@@ -193,21 +269,29 @@ class IndexSearchSpec extends SparkSpec {
       "ivfTopKIndexedAt" -> (() => Similarity.ivfTopKIndexedAt(spark, ivf, latest(ivf), numQueries = 10, k = 4, nprobe = 3).collect()),
       "bm25TopKIndexed" -> (() => Retrieval.bm25TopKIndexed(spark, bm, terms, k = 8).collect()),
       "bm25TopKIndexedAt" -> (() => Retrieval.bm25TopKIndexedAt(spark, bm, latest(bm), terms, k = 8).collect()),
-      "maxPassageTopKIndexed" -> (() => Retrieval.maxPassageTopKIndexed(spark, psg, terms, k = 8).collect())
+      "maxPassageTopKIndexed" -> (() => Retrieval.maxPassageTopKIndexed(spark, psg, terms, k = 8).collect()),
+      "knnGraphSearch tombstoned" -> (() => KnnGraph.knnGraphSearch(spark, knnDel, numQueries = 10, k = 4).collect()),
+      "pqGraphSearch tombstoned" -> (() => KnnGraph.pqGraphSearch(spark, knnDel, numQueries = 10, k = 4, dim = dim).collect()),
+      "ivfTopKIndexed tombstoned" -> (() => Similarity.ivfTopKIndexed(spark, ivfDel, numQueries = 10, k = 4, nprobe = 3).collect())
     ).map { case (name, body) => name -> jobsOf(body()) }
     val append = jobsOf(KnnGraph.appendKnnGraphIndex(embDF(vecs(8, seed = 3, idBase = 1000L)), knnMut))
     KnnGraph.deleteFromKnnGraphIndex(idFrame(Seq(3L, 17L, 1004L), "vec_id"), knnMut)
     val consolidate = jobsOf(KnnGraph.consolidateKnnGraphIndex(spark, knnMut))
     val measured = searches.toMap +
       ("appendKnnGraphIndex" -> append) + ("consolidateKnnGraphIndex" -> consolidate)
-    // the counts measured before the entries shared one body per family;
-    // consolidate's is the count after its delete list resolved once
-    // (41 while every exclusion resolved the list again)
+    // the k-NN graph entries' counts are those measured once the walk read
+    // and ranked on the driver (before: knnGraphSearch 37, For 36, At 39,
+    // pqGraphSearch 47, append 41; tombstoned knnGraphSearch 43,
+    // pqGraphSearch 55, ivfTopKIndexed 19 while each resolved its delete
+    // list twice); the rest are the counts before the entries shared one
+    // body per family, consolidate's after its delete list resolved once
     val bound = Map(
-      "knnGraphSearch" -> 37, "knnGraphSearchFor" -> 36, "knnGraphSearchAt" -> 39,
-      "pqGraphSearch" -> 47, "appendKnnGraphIndex" -> 41, "consolidateKnnGraphIndex" -> 35,
+      "knnGraphSearch" -> 0, "knnGraphSearchFor" -> 0, "knnGraphSearchAt" -> 2,
+      "pqGraphSearch" -> 22, "appendKnnGraphIndex" -> 7, "consolidateKnnGraphIndex" -> 35,
       "ivfTopKIndexed" -> 13, "ivfSearchFor" -> 12, "ivfTopKIndexedAt" -> 15,
-      "bm25TopKIndexed" -> 13, "bm25TopKIndexedAt" -> 13, "maxPassageTopKIndexed" -> 14)
+      "bm25TopKIndexed" -> 13, "bm25TopKIndexedAt" -> 13, "maxPassageTopKIndexed" -> 14,
+      "knnGraphSearch tombstoned" -> 0, "pqGraphSearch tombstoned" -> 22,
+      "ivfTopKIndexed tombstoned" -> 18)
     val over = measured.filter { case (n, j) => j > bound(n) }
     assert(over.isEmpty, s"job counts above bound: $over (bound $bound)")
   }

@@ -157,6 +157,63 @@ class KnnGraphSpec extends SparkSpec {
       s"a 1-vertex adjacency fetch must skip files: ${gCut.size} of ${gAll.size}")
     assert(vCut.nonEmpty && vCut.size < vAll.size,
       s"a 1-vector fetch must skip files: ${vCut.size} of ${vAll.size}")
+    // the walk's driver reads open only the cut files: with every
+    // pruned-out file gone from disk they still return the wanted rows
+    ((gAll -- gCut) ++ (vAll -- vCut)).foreach(f => new java.io.File(new java.net.URI(f)).delete())
+    assert(graph.localReadIn(Seq(0L)).get.rows.exists(_.getLong(0) == 0L))
+    assert(vtab.localReadIn(Seq(0L)).get.rows.exists(_.getLong(0) == 0L))
+  }
+
+  test("driver cosines equal Spark's bit for bit over NaN, signed zeros, infinities, null elements and zero norms") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val rng = new scala.util.Random(5)
+    val elems = Seq(1.5, -2.0, 0.0, -0.0, Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, 1e-300, 3.0)
+    def vec(): Seq[java.lang.Double] = Seq.fill(4)(
+      if (rng.nextInt(6) == 0) null else java.lang.Double.valueOf(elems(rng.nextInt(elems.size))))
+    def norm(pool: Seq[java.lang.Double]): java.lang.Double = pool(rng.nextInt(pool.size))
+    val nonZero: Seq[java.lang.Double] =
+      Seq(1.5, 3.0, Double.NaN, Double.PositiveInfinity, -2.0).map(java.lang.Double.valueOf) :+ null
+    val zero: Seq[java.lang.Double] = Seq(0.0, -0.0, 1e-300).map(java.lang.Double.valueOf)
+    val schema = StructType(Seq(StructField("query_id", LongType, false),
+      StructField("vec_id", LongType, false), StructField("e", ArrayType(DoubleType)),
+      StructField("nrm", DoubleType), StructField("qe", ArrayType(DoubleType)),
+      StructField("qn", DoubleType)))
+    // one batch whose denominators are never zero, and single rows whose
+    // denominator is (0.0, -0.0, or 1e-300² underflowing): under ANSI
+    // those fail, so each is its own batch
+    val batch = (0 until 300).map(i => Row(i.toLong, i.toLong, vec(), norm(nonZero), vec(), norm(nonZero)))
+    val zeros = (0 until 6).map(i => Row(i.toLong, i.toLong, vec(), norm(zero), vec(), norm(zero :+ 2.0)))
+    def condition(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).collectFirst {
+        case st: org.apache.spark.SparkThrowable if st.getCondition != null => st.getCondition
+      }.getOrElse(t.getClass.getName)
+    val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(schema)
+    // bits compared as Spark compares doubles: every NaN is one value (its
+    // sign bit follows whichever NaN operand the JIT's instruction order
+    // keeps, on either path), -0.0 and 0.0 stay distinct
+    def outcome(scored: => Seq[(Long, Option[Double])]): Either[String, Seq[Option[Long]]] =
+      scala.util.Try(scored.sortBy(_._1).map(_._2.map(java.lang.Double.doubleToLongBits)))
+        .toEither.left.map(condition)
+    val ansi0 = spark.conf.get("spark.sql.ansi.enabled")
+    try Seq("true", "false").foreach { ansi =>
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      val got = (batch +: zeros.map(Seq(_))).map { rows =>
+        val onDriver = outcome(KnnGraph.localCosine(spark, schema)(
+          rows.map(toInternal(_).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]))
+          .map(r => (r.getLong(0), if (r.isNullAt(2)) None else Some(r.getDouble(2)))))
+        // a shuffle between the rows and the Column: Spark runs it in a job, codegen'd
+        val inSpark = outcome(KnnGraph.cosine(spark.createDataFrame(rows.asJava, schema).repartition(2))
+          .collect().toSeq.map(r => (r.getLong(0), if (r.isNullAt(2)) None else Some(r.getDouble(2)))))
+        assert(onDriver === inSpark, s"ansi=$ansi rows=${rows.take(2)}")
+        onDriver
+      }
+      assert(got.head.isRight, s"ansi=$ansi: the non-zero batch scores")
+      val zeroDenominator = if (ansi == "true") Left("DIVIDE_BY_ZERO") else Right(Seq(None))
+      assert(got.tail.contains(zeroDenominator), s"ansi=$ansi: some row divides by zero")
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi0)
   }
 
   test("append: search-then-link makes new points reachable via reverse edges") {
