@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.operators.CommitTable
 import graft.operators.CommitTable.Budget
@@ -297,25 +297,20 @@ object KnnGraph {
     val byId: Map[Long, Seq[InternalRow]] = rows.groupBy(_.getLong(0))
     val ids: Seq[Long] = byId.keys.toSeq.sorted
     lazy val frame: DataFrame = Bridge.localFrame(spark, schema, rows)
-    /** The batch cut in two by id, for walks that must run in chunks. */
-    def halves: (Queries, Queries) = {
-      val (a, b) = ids.splitAt(ids.size / 2)
-      (new Queries(spark, a.flatMap(byId), schema), new Queries(spark, b.flatMap(byId), schema))
-    }
+    /** The queries whose ids are `some`. */
+    def only(some: Seq[Long]): Queries = new Queries(spark, some.flatMap(byId), schema)
   }
 
-  /** The [[Queries]] of vector rows (`vec_id`, `e`, `nrm` by name, of
-    * `schema`) — a vectors-table read or a [[vectors]] frame collected;
-    * at most `budget.rows` of them. */
-  private def queriesOf(spark: SparkSession, rows: Seq[InternalRow], schema: StructType,
-                        site: String, budget: Budget): Queries = {
-    budget.requireRows(site, rows.size)
-    val Seq(vi, ei, ni) = Seq("vec_id", "e", "nrm").map(schema.fieldIndex)
+  /** The [[Queries]] of vector rows (`vec_id`, `e`, `nrm` by name) — a
+    * vectors-table read or a [[vectors]] frame collected. */
+  private def queriesOf(spark: SparkSession, d: CommitTable.DriverRows): Queries = {
+    val Seq(vi, ei, ni) = Seq("vec_id", "e", "nrm").map(d.schema.fieldIndex)
+    val Seq(ef, nf) = Seq(ei, ni).map(d.schema(_))
     new Queries(spark,
-      rows.collect { case r if !r.isNullAt(vi) =>
-        InternalRow(r.getLong(vi), r.get(ei, schema(ei).dataType), r.get(ni, schema(ni).dataType)) },
-      StructType(Seq(schema(vi).copy(name = "query_id"), schema(ei).copy(name = "qe"),
-        schema(ni).copy(name = "qn"))))
+      d.rows.collect { case r if !r.isNullAt(vi) =>
+        InternalRow(r.getLong(vi), r.get(ei, ef.dataType), r.get(ni, nf.dataType)) },
+      StructType(Seq(d.schema(vi).copy(name = "query_id"), ef.copy(name = "qe"),
+        nf.copy(name = "qn"))))
   }
 
   /** Collected rows of `df` in Catalyst's internal form. */
@@ -324,29 +319,16 @@ object KnnGraph {
     df.collect().toSeq.map(toInternal(_).asInstanceOf[InternalRow])
   }
 
-  /** The vectors table's columns — the schema of a driver read that
-    * returned no rows, where it is never consulted. */
-  private val VectorSchema = StructType(Seq(StructField("vec_id", LongType),
-    StructField("e", ArrayType(DoubleType)), StructField("nrm", DoubleType)))
-
-  /** The member query source of the head and `At` entries: corpus vectors
-    * with `vec_id < numQueries` from one file-pruned point read of the
-    * vectors table at its pinned version — on the driver within `budget`
-    * — minus the `dead` ids: a tombstoned id cannot query (it has left
-    * the index). */
+  /** The member query source of the head and `At` entries: the corpus
+    * vectors with ids `0 until numQueries`, read at the pinned version
+    * ([[CommitTable.driverRows]], within `budget`), minus the `dead` ids:
+    * a tombstoned id cannot query (it has left the index). */
   private def memberQueries(spark: SparkSession, indexRoot: String, at: Map[String, Long],
                             dead: Set[Long], numQueries: Int, budget: Budget): Queries = {
-    val vecs = new CommitTable(spark, s"$indexRoot/vectors", "vec_id")
-    val ids = 0L until numQueries.toLong
-    val (rows, schema) = vecs.localReadIn(ids, at.get("vectors"), budget) match {
-      case Some(d) => (d.rows, if (d.rows.isEmpty) VectorSchema else d.schema)
-      case None =>
-        val df = vecs.prunedReadIn(ids, at.get("vectors")).filter(col("vec_id") < numQueries)
-        (collectInternal(df), df.schema)
-    }
-    val vi = schema.fieldIndex("vec_id")
-    queriesOf(spark, rows.filter(r => !r.isNullAt(vi) && r.getLong(vi) < numQueries &&
-      !dead(r.getLong(vi))), schema, "knnGraph member queries", budget)
+    val d = new CommitTable(spark, s"$indexRoot/vectors", "vec_id").driverRows(
+      Some(0L until numQueries.toLong), at.get("vectors"), "knnGraph member queries", budget)
+    val vi = d.schema.fieldIndex("vec_id")
+    queriesOf(spark, d.copy(rows = d.rows.filterNot(r => dead(r.getLong(vi)))))
   }
 
   /** Best-first routed search over a committed graph index (the
@@ -466,42 +448,50 @@ object KnnGraph {
                                     queryVecs: DataFrame, k: Int, beam: Int, hops: Int,
                                     budget: Budget): DataFrame = {
     require(beam >= k, s"knnGraphSearchFor: beam $beam must be >= k $k")
-    val v = vectors(queryVecs)
-    val q = queriesOf(spark, collectInternal(v), v.schema, "knnGraphSearchFor queries", budget)
+    val q = queriesOf(spark,
+      CommitTable.collectWithin(vectors(queryVecs), "knnGraphSearchFor queries", budget))
     searchPinned(spark, indexRoot, Map.empty,
       Tombstones.latestIds(spark, indexRoot, "vec_id", budget), q, k, beam, hops, None, budget)
   }
 
   /** The one cosine search body behind the head, `At` and `For` entries:
     * the queries `q` walk the graph at the pinned member versions `at`
-    * (empty: raw heads), the `dead` ids leave the visited rows, and
-    * `predicate` gates what is left before the rank tail. */
+    * (empty: raw heads) in [[walkInChunks]]'s chunks, the `dead` ids leave
+    * each chunk's visited rows, and `predicate` gates what is left before
+    * the rank tail — so the driver keeps one chunk's visited set at a time
+    * and every query's top-`k`. */
   private def searchPinned(spark: SparkSession, indexRoot: String, at: Map[String, Long],
                            dead: Set[Long], q: Queries, k: Int, beam: Int, hops: Int,
                            predicate: Option[Column], budget: Budget): DataFrame =
-    rankVisited(spark,
-      cosineVisited(spark, indexRoot, q, beam, hops, at, budget).filterNot(t => dead(t._2)),
-      k, predicate)
+    rankedFrame(spark, walkInChunks(spark, indexRoot, q, at, beam, hops, budget) { (c, entries) =>
+      ranked(spark, cosineVisited(spark, indexRoot, c, entries, beam, hops, at, budget)
+        .filterNot(t => dead(t._2)), k, predicate)
+    })
 
-  /** The search rank tail, on the driver: each query's top-`k` visited
-    * `(query_id, vec_id, cos)` tuples in [[BeamOrder]] (the window's
-    * `cos DESC, vec_id`), self excluded, after `predicate` (evaluated by
-    * Spark over a LocalRelation, which it folds on the driver), as a
-    * LocalRelation-backed `(query_id, neighbor_id, rank, cos_1e6)` frame
-    * in `(query_id, rank)` order; `cos_1e6` is the Column
-    * `floor(cos · 1e6)` evaluated on the driver. */
-  private def rankVisited(spark: SparkSession, visited: Seq[(Long, Long, Double)], k: Int,
-                          predicate: Option[Column]): DataFrame = {
+  /** The search rank tail of one walk's visited `(query_id, vec_id, cos)`
+    * tuples, on the driver: each query's top-`k` in [[BeamOrder]] (the
+    * window's `cos DESC, vec_id`), self excluded, after `predicate`
+    * (evaluated by Spark over a LocalRelation, which it folds on the
+    * driver), as `(query_id, neighbor_id, rank, cos)` rows in `(query_id,
+    * rank)` order. */
+  private def ranked(spark: SparkSession, visited: Seq[(Long, Long, Double)], k: Int,
+                     predicate: Option[Column]): Seq[InternalRow] = {
     import spark.implicits._
     val kept = predicate.fold(visited)(p => visited.toDF("query_id", "vec_id", "cos").filter(p)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq)
-    val ranked = kept.filter(t => t._2 != t._1).groupBy(_._1).toSeq.sortBy(_._1)
+    kept.filter(t => t._2 != t._1).groupBy(_._1).toSeq.sortBy(_._1)
       .flatMap { case (_, ts) =>
         ts.sorted(BeamOrder).take(k).zipWithIndex.map { case ((q, v, c), i) =>
           InternalRow(q, v, i + 1L, c) } }
+  }
+
+  /** [[ranked]] rows as the searches' LocalRelation-backed `(query_id,
+    * neighbor_id, rank, cos_1e6)` frame; `cos_1e6` is the Column
+    * `floor(cos · 1e6)` evaluated on the driver. */
+  private def rankedFrame(spark: SparkSession, rows: Seq[InternalRow]): DataFrame = {
     val (schema, tail) = Bridge.localProjection(spark, RankedSchema, Seq(col("query_id"),
       col("neighbor_id"), col("rank"), floor(col("cos") * 1e6).cast("long").as("cos_1e6")))
-    Bridge.localFrame(spark, schema, tail(ranked))
+    Bridge.localFrame(spark, schema, tail(rows))
   }
 
   private val RankedSchema = StructType(Seq("query_id", "neighbor_id", "rank")
@@ -525,16 +515,21 @@ object KnnGraph {
   /** `(query_id, vec_id, cos)` of the candidate pairs `cand` whose vector
     * ids are `ids`: one file-pruned point read of the vectors table `vecs`
     * at version `at`, joined to the candidates and the queries `q` — on
-    * the driver within `budget` (the joins in Scala, [[localCosine]] over
-    * the pairs), else in Spark. At most `budget.rows` scores. */
+    * the driver when the read fits `budget` ([[CommitTable.localReadIn]];
+    * the joins in Scala, [[localCosine]] over the pairs), else in Spark,
+    * where only the scores come back. A pair scores once per row of its
+    * vector, so at most `budget.rows` pairs go in (checked first) and
+    * come out. */
   private def cosines(spark: SparkSession, vecs: CommitTable, at: Option[Long], q: Queries,
                       budget: Budget)(cand: Seq[(Long, Long)], ids: Seq[Long]): Seq[(Long, Long, Double)] =
     if (cand.isEmpty) Nil
     else {
       import spark.implicits._
+      budget.requireRows("knnGraph walk candidates", cand.size)
       val scored = vecs.localReadIn(ids, at, budget) match {
-        case Some(d) => localPairs(d, ids, q, cand).fold(Seq.empty[InternalRow]) {
-          case (schema, pairs) => localCosine(spark, schema)(pairs) }
+        case Some(d) =>
+          val (schema, pairs) = localPairs(d, ids, q, cand)
+          localCosine(spark, schema)(pairs)
         case None =>
           collectInternal(cosine(cand.toDF("query_id", "vec_id")
             .join(idSemi(spark, vecs.prunedReadIn(ids, at), "vec_id", ids)
@@ -551,112 +546,112 @@ object KnnGraph {
 
   /** The Spark scorer's two inner joins on driver data: `(query_id,
     * vec_id, e, nrm, qe, qn)` of each candidate pair whose vector is among
-    * the `ids` rows of `vecs`, with their schema (None: no pair). */
+    * the `ids` rows of `vecs`, with their schema. */
   private def localPairs(vecs: CommitTable.DriverRows, ids: Seq[Long], q: Queries,
-                         cand: Seq[(Long, Long)]): Option[(StructType, Seq[InternalRow])] =
-    if (vecs.rows.isEmpty) None
-    else {
-      val vs = vecs.schema
-      val Seq(vi, ei, ni) = Seq("vec_id", "e", "nrm").map(vs.fieldIndex)
-      val (et, nt, qet, qnt) = (vs(ei).dataType, vs(ni).dataType, q.schema(1).dataType, q.schema(2).dataType)
-      val wanted = ids.toSet
-      val byVec = vecs.rows.filter(r => !r.isNullAt(vi) && wanted(r.getLong(vi))).groupBy(_.getLong(vi))
-      val rows = for {
-        (qid, vid) <- cand
-        v <- byVec.getOrElse(vid, Nil)
-        qr <- q.byId.getOrElse(qid, Nil)
-      } yield InternalRow(qid, vid, v.get(ei, et), v.get(ni, nt), qr.get(1, qet), qr.get(2, qnt))
-      if (rows.isEmpty) None
-      else Some((StructType(Seq(StructField("query_id", LongType, nullable = false),
-        StructField("vec_id", LongType, nullable = false),
-        vs(ei), vs(ni), q.schema(1), q.schema(2))), rows))
-    }
+                         cand: Seq[(Long, Long)]): (StructType, Seq[InternalRow]) = {
+    val vs = vecs.schema
+    val Seq(vi, ei, ni) = Seq("vec_id", "e", "nrm").map(vs.fieldIndex)
+    val (et, nt, qet, qnt) = (vs(ei).dataType, vs(ni).dataType, q.schema(1).dataType, q.schema(2).dataType)
+    val wanted = ids.toSet
+    val byVec = vecs.rows.filter(r => !r.isNullAt(vi) && wanted(r.getLong(vi))).groupBy(_.getLong(vi))
+    val rows = for {
+      (qid, vid) <- cand
+      v <- byVec.getOrElse(vid, Nil)
+      qr <- q.byId.getOrElse(qid, Nil)
+    } yield InternalRow(qid, vid, v.get(ei, et), v.get(ni, nt), qr.get(1, qet), qr.get(2, qnt))
+    (StructType(Seq(StructField("query_id", LongType, nullable = false),
+      StructField("vec_id", LongType, nullable = false),
+      vs(ei), vs(ni), q.schema(1), q.schema(2))), rows)
+  }
 
-  /** The cosine walk: [[routedVisited]] scored by [[cosines]] in
-    * [[BeamOrder]], as `(query_id, vec_id, cos)` — [[searchPinned]] ranks
-    * these into results; [[appendKnnGraphIndex]] turns them into new
-    * adjacency. */
+  /** The cosine walk of the queries `q` from the committed `entries`:
+    * [[routedVisited]] scored by [[cosines]] in [[BeamOrder]], as
+    * `(query_id, vec_id, cos)` — [[searchPinned]] ranks these into
+    * results; [[appendKnnGraphIndex]] turns them into new adjacency. */
   private def cosineVisited(spark: SparkSession, indexRoot: String, q: Queries,
-                            beam: Int, hops: Int, at: Map[String, Long],
+                            entries: Seq[Long], beam: Int, hops: Int, at: Map[String, Long],
                             budget: Budget): Seq[(Long, Long, Double)] = {
     val vecs = new CommitTable(spark, s"$indexRoot/vectors", "vec_id")
-    routedVisited[Double](spark, indexRoot, q.ids, beam, hops, at,
+    routedVisited[Double](spark, indexRoot, q.ids, entries, beam, hops, at,
       cosines(spark, vecs, at.get("vectors"), q, budget), BeamOrder, budget)
   }
 
+  /** `walk(chunk, entries)` over the queries `q`, chunk by chunk, in
+    * query-id order: the committed entry set at `at` is read once (at most
+    * `budget.rows` ids), `q` is cut up front into chunks whose walks fit
+    * `budget.rows` when every hop adds one candidate per beam member
+    * (`entries + hops · beam` tuples a query), and a chunk whose walk
+    * still exceeds the bound — a hop adds up to the graph's out-degree per
+    * beam member — is walked as two halves, down to single queries. Each
+    * query walks independently, so the chunks' results are the whole
+    * batch's. */
+  private def walkInChunks[T](spark: SparkSession, indexRoot: String, q: Queries,
+                              at: Map[String, Long], beam: Int, hops: Int, budget: Budget)(
+                              walk: (Queries, Seq[Long]) => Seq[T]): Seq[T] = {
+    val et = new CommitTable(spark, s"$indexRoot/entries", "eid")
+    val d = et.driverRows(None, at.get("entries"), "knnGraph walk entries", budget)
+    val ei = d.schema.fieldIndex("eid")
+    val entries = d.rows.map(_.getLong(ei)).sorted
+    def go(c: Queries): Seq[T] =
+      try walk(c, entries)
+      catch {
+        case _: CommitTable.DriverBudgetExceeded if c.ids.size > 1 =>
+          val (a, b) = c.ids.splitAt(c.ids.size / 2)
+          go(c.only(a)) ++ go(c.only(b))
+      }
+    val perChunk = math.max(1L, budget.rows / math.max(1L, entries.size + hops.toLong * beam))
+    q.ids.grouped(math.min(perChunk, Int.MaxValue).toInt).flatMap(g => go(q.only(g))).toSeq
+  }
+
   /** The one beam loop: all `(query_id, vec_id, score)` tuples VISITED by
-    * the multi-entry routed walk of the queries `queryIds`, at the pinned
-    * member versions `at` (empty: raw heads). `score(cand, ids)` scores
-    * the `(query_id, vec_id)` candidate pairs whose vector ids are `ids` —
-    * cosines for the float walk, ADC sums for [[pqGraphSearch]] — and
-    * each hop keeps every query's `beam` best visited tuples in `order`.
+    * the multi-entry routed walk of the queries `queryIds` from the
+    * committed `entries`, at the pinned member versions `at` (empty: raw
+    * heads). `score(cand, ids)` scores the `(query_id, vec_id)` candidate
+    * pairs whose vector ids are `ids` — cosines for the float walk, ADC
+    * sums for [[pqGraphSearch]] — and each hop keeps every query's `beam`
+    * best visited tuples in `order`.
     *
     * The walk's state lives on the DRIVER: the frontier and candidate ids
     * of each hop (≤ queries·beam and ≤ queries·beam·degree) and the
     * visited set (≤ queries·(entries + hops·beam·degree) small tuples).
     * Each hop runs the TWO file-pruned point reads the IO contract is
-    * about: the frontier's adjacency rows and the candidates' scored rows.
-    * The entries and adjacency reads decode on the driver when their files
-    * fit `budget.bytes` ([[CommitTable.localReadIn]]) and run as one Spark
-    * collect otherwise; every batch — entries, adjacency, scores and the
-    * visited set — is held to `budget.rows` and fails loudly, naming the
-    * bound, past it (a batch that must go larger is walked in chunks,
-    * [[appendKnnGraphIndex]]). Scores come from the score function's
+    * about: the frontier's adjacency rows ([[CommitTable.driverRows]]: on
+    * the driver when the cut files fit `budget.bytes`, else one Spark
+    * collect) and the candidates' scored rows. Every batch — adjacency,
+    * candidates, scores and the visited set — is held to `budget.rows` and
+    * fails loudly, naming the bound, past it ([[walkInChunks]] splits the
+    * queries until each walk fits). Scores come from the score function's
     * Column expressions on either path, so results are bit-identical
     * whichever path each read took. The dedup is on whole tuples: the
     * same pair always scores bit-identically.
     */
   private def routedVisited[S](spark: SparkSession, indexRoot: String,
-                               queryIds: Seq[Long], beam: Int, hops: Int,
+                               queryIds: Seq[Long], entries: Seq[Long], beam: Int, hops: Int,
                                at: Map[String, Long],
                                score: (Seq[(Long, Long)], Seq[Long]) => Seq[(Long, Long, S)],
                                order: Ordering[(Long, Long, S)],
                                budget: Budget): Seq[(Long, Long, S)] = {
     val graph = new CommitTable(spark, s"$indexRoot/graph", "src")
-    val entT = new CommitTable(spark, s"$indexRoot/entries", "eid")
-    val entryIds = entT.localRead(at.get("entries"), budget).map(_.rows.map(_.getLong(0)))
-      .getOrElse(at.get("entries").map(entT.asOf).getOrElse(entT.read()).collect().toSeq
-        .map(_.getLong(0))).sorted
-    budget.requireRows("knnGraph walk entries", entryIds.size)
     def held(vis: Seq[(Long, Long, S)]): Seq[(Long, Long, S)] = {
       budget.requireRows("knnGraph walk visited set", vis.size)
       vis
     }
-    var visited = held(score(for (q <- queryIds; e <- entryIds) yield (q, e), entryIds).distinct)
+    var visited = held(score(for (q <- queryIds; e <- entries) yield (q, e), entries).distinct)
     // top-`beam` per query in `order` — row_number semantics
     def beamRows(vis: Seq[(Long, Long, S)]): Seq[(Long, Long, S)] =
       vis.groupBy(_._1).valuesIterator.flatMap(_.sorted(order).take(beam)).toSeq
     for (_ <- 1 to hops) {
       val bm = beamRows(visited)
       val frontier = bm.map(_._2).distinct.sorted
-      val bySrc = adjacency(spark, graph, frontier, at.get("graph"), budget).groupBy(_._1)
+      val adj = graph.driverRows(Some(frontier), at.get("graph"), "knnGraph walk adjacency", budget)
+      val (si, di) = (adj.schema.fieldIndex("src"), adj.schema.fieldIndex("dst"))
+      val bySrc = adj.rows.map(r => (r.getLong(si), r.getLong(di))).groupBy(_._1)
       val cand = bm.flatMap { case (q, v, _) =>
         bySrc.getOrElse(v, Nil).map(e => (q, e._2)) }.distinct
       val candIds = cand.map(_._2).distinct.sorted
       visited = held((visited ++ score(cand, candIds)).distinct)
     }
     visited
-  }
-
-  /** The frontier's `(src, dst)` adjacency rows at graph version `at`: on
-    * the driver within `budget`, else the file-pruned Spark read and one
-    * collect; at most `budget.rows` rows. */
-  private def adjacency(spark: SparkSession, graph: CommitTable, frontier: Seq[Long],
-                        at: Option[Long], budget: Budget): Seq[(Long, Long)] = {
-    val edges = graph.localReadIn(frontier, at, budget) match {
-      case Some(d) if d.rows.isEmpty => Nil
-      case Some(d) =>
-        val wanted = frontier.toSet
-        val (si, di) = (d.schema.fieldIndex("src"), d.schema.fieldIndex("dst"))
-        d.rows.collect { case r if !r.isNullAt(si) && wanted(r.getLong(si)) =>
-          (r.getLong(si), r.getLong(di)) }
-      case None =>
-        idSemi(spark, graph.prunedReadIn(frontier, at), "src", frontier)
-          .select(col("src"), col("dst"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    }
-    budget.requireRows("knnGraph walk adjacency", edges.size)
-    edges
   }
 
   /** Incrementally extends a committed graph index with NEW vectors — the
@@ -676,12 +671,14 @@ object KnnGraph {
     *     valid spread of the id span; a drifted span is a rebuild signal).
     * Returns the committed graph version.
     *
-    * Driver bound: the batch's vectors are collected to the driver (at
-    * most [[CommitTable.DriverBudget]]'s rows; a larger batch fails and
-    * the caller splits it), and the link search walks them in chunks that
-    * keep every walk batch inside the same row bound — every chunk walks
-    * the same committed graph, so chunked and whole-batch links agree
-    * (spec-asserted).
+    * Driver bound: the batch's vectors are collected to the driver once,
+    * as the link search's queries (every scoring path, driver or Spark,
+    * reads the query vectors from there) and as the rows the append
+    * writes — at most [[CommitTable.DriverBudget]]'s rows, checked before
+    * more are kept; a larger batch fails naming the bound and the caller
+    * splits it. The search walks them in [[walkInChunks]]'s chunks; every
+    * chunk walks the same committed graph, so chunked and whole-batch
+    * links agree (spec-asserted).
     *
     * Deliberate divergences, documented: touched existing vertices' lists
     * GROW past k (FreshDiskANN re-prunes them; here the periodic rebuild
@@ -699,19 +696,21 @@ object KnnGraph {
                                   hops: Int, budget: Budget): Long = {
     val spark = embNew.sparkSession
     import spark.implicits._
-    val v = vectors(embNew)
-    val rows = collectInternal(v)
-    val q = queriesOf(spark, rows, v.schema, "appendKnnGraphIndex new vectors", budget)
+    // the rows walked are the rows appended: one evaluation of `embNew`
+    val batch = CommitTable.collectWithin(vectors(embNew), "appendKnnGraphIndex new vectors", budget)
     // deleted vertices may still navigate the link search (the search
     // contract) but a NEW point never links TO one — FreshDiskANN's insert
     // filters its candidate list against the DeleteList
     val dead = Tombstones.latestIds(spark, indexRoot, "vec_id", budget)
-    val linked = chunked(q)(cosineVisited(spark, indexRoot, _, beam, hops, Map.empty, budget))
-      .filterNot(t => dead(t._2)).groupBy(_._1).toSeq.sortBy(_._1)
-      .flatMap(_._2.sorted(BeamOrder).take(linkK))
+    val linked = walkInChunks(spark, indexRoot, queriesOf(spark, batch), Map.empty, beam, hops,
+        budget) { (c, entries) =>
+      cosineVisited(spark, indexRoot, c, entries, beam, hops, Map.empty, budget)
+        .filterNot(t => dead(t._2)).groupBy(_._1).toSeq.sortBy(_._1)
+        .flatMap(_._2.sorted(BeamOrder).take(linkK))
+    }
     val edges = linked ++ linked.map { case (s, d, c) => (d, s, c) }
     new CommitTable(spark, s"$indexRoot/vectors", "vec_id")
-      .append(Bridge.localFrame(spark, v.schema, rows).repartitionByRange(col("vec_id")))
+      .append(Bridge.localFrame(spark, batch.schema, batch.rows).repartitionByRange(col("vec_id")))
     val gv = new CommitTable(spark, s"$indexRoot/graph", "src")
       .append(edges.toDF("src", "dst", "cos").repartitionByRange(col("src"), col("dst")))
     // one new index version pinning BOTH member appends — a manifest
@@ -720,18 +719,6 @@ object KnnGraph {
       Seq("vectors", "graph", "entries"))
     gv
   }
-
-  /** `walk(q)`, or — when a walk batch of `q` exceeds the driver row bound
-    * — the walks of `q`'s two halves, recursively. Each query walks
-    * independently, so the halves' visited sets together are `q`'s. */
-  private def chunked(q: Queries)(
-      walk: Queries => Seq[(Long, Long, Double)]): Seq[(Long, Long, Double)] =
-    try walk(q)
-    catch {
-      case _: CommitTable.DriverBudgetExceeded if q.ids.size > 1 =>
-        val (a, b) = q.halves
-        chunked(a)(walk) ++ chunked(b)(walk)
-    }
 
   /** Extends a committed graph index ([[buildKnnGraphIndex]]'s layout)
     * with the PQ artifacts the DISKANN QUERY LOOP navigates by — the
@@ -802,40 +789,43 @@ object KnnGraph {
     val budget = CommitTable.DriverBudget
     val dead = Tombstones.latestIds(spark, indexRoot, "vec_id", budget)
     val q = memberQueries(spark, indexRoot, Map.empty, dead, numQueries, budget)
-    // over the queries' LocalRelation: Spark folds the LUT on the driver
-    val luts = q.frame.select(col("query_id"), lutCol.as("lut"))
     val adcCol = (0 until m).map(j =>
       element_at(element_at(col("lut"), j + 1), element_at(col("codes"), j + 1) + 1))
       .reduce(_ + _)
-    // the [[routedVisited]] walk, scored by exact-integer ADC sums over the
-    // candidates' CODE rows (each hop: frontier adjacency + code rows);
-    // pure longs, so the driver-held dedup/ranking is bit-identical to a
-    // DataFrame distinct/window
-    import spark.implicits._
-    def scoreAdc(cand: Seq[(Long, Long)], ids: Seq[Long]): Seq[(Long, Long, Long)] =
-      if (cand.isEmpty) Nil
-      else {
-        val out = cand.toDF("query_id", "vec_id")
-          .join(idSemi(spark, codesT.prunedReadIn(ids), "vec_id", ids)
-            .select("vec_id", "codes"), "vec_id")
-          .join(broadcast(luts), "query_id")
-          .select(col("query_id"), col("vec_id"), adcCol.as("adc"))
-          .collect()
-        budget.requireRows("pqGraphSearch walk scores", out.length)
-        out.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      }
     val adcOrder = Ordering.by((t: (Long, Long, Long)) => (-t._3, t._2))
-    val visited = routedVisited[Long](spark, indexRoot, q.ids, beam, hops, Map.empty,
-      scoreAdc, adcOrder, budget)
-    // exact re-rank of each query's ADC-best k·candFactor visited (self
-    // excluded; the window's `adc DESC, vec_id`) — the ONLY touch of
-    // full-precision vectors in the whole query
-    val cands = visited.filter { case (qid, v, _) => v != qid && !dead(v) }
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .flatMap(_._2.sorted(adcOrder).take(k * candFactor)).map(t => (t._1, t._2))
     val vecs = new CommitTable(spark, s"$indexRoot/vectors", "vec_id")
-    rankVisited(spark,
-      cosines(spark, vecs, None, q, budget)(cands, cands.map(_._2).distinct.sorted), k, None)
+    import spark.implicits._
+    rankedFrame(spark, walkInChunks(spark, indexRoot, q, Map.empty, beam, hops, budget) { (c, entries) =>
+      // over the queries' LocalRelation: Spark folds the LUT on the driver
+      val luts = c.frame.select(col("query_id"), lutCol.as("lut"))
+      // the [[routedVisited]] walk, scored by exact-integer ADC sums over
+      // the candidates' CODE rows (each hop: frontier adjacency + code
+      // rows); pure longs, so the driver-held dedup/ranking is
+      // bit-identical to a DataFrame distinct/window
+      def scoreAdc(cand: Seq[(Long, Long)], ids: Seq[Long]): Seq[(Long, Long, Long)] =
+        if (cand.isEmpty) Nil
+        else {
+          budget.requireRows("pqGraphSearch walk candidates", cand.size)
+          val out = cand.toDF("query_id", "vec_id")
+            .join(idSemi(spark, codesT.prunedReadIn(ids), "vec_id", ids)
+              .select("vec_id", "codes"), "vec_id")
+            .join(broadcast(luts), "query_id")
+            .select(col("query_id"), col("vec_id"), adcCol.as("adc"))
+            .collect()
+          budget.requireRows("pqGraphSearch walk scores", out.length)
+          out.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+        }
+      val visited = routedVisited[Long](spark, indexRoot, c.ids, entries, beam, hops, Map.empty,
+        scoreAdc, adcOrder, budget)
+      // exact re-rank of each query's ADC-best k·candFactor visited (self
+      // excluded; the window's `adc DESC, vec_id`) — the ONLY touch of
+      // full-precision vectors in the whole query
+      val cands = visited.filter { case (qid, v, _) => v != qid && !dead(v) }
+        .groupBy(_._1).toSeq.sortBy(_._1)
+        .flatMap(_._2.sorted(adcOrder).take(k * candFactor)).map(t => (t._1, t._2))
+      ranked(spark, cosines(spark, vecs, None, c, budget)(cands, cands.map(_._2).distinct.sorted),
+        k, None)
+    })
   }
 
   /** LINK-HEALTH instrument for a committed graph index (s40): the

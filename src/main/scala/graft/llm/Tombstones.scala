@@ -73,23 +73,17 @@ object Tombstones {
 
   /** The latest delete list as driver data (empty when no tombstone
     * commit exists), resolved once for search paths that drop the same
-    * ids from several row sets: read on the driver within `budget`
-    * ([[graft.operators.CommitTable.localRead]]), else one collect; at
-    * most `budget.rows` ids. */
+    * ids from several row sets: read on the driver within `budget`, else
+    * one collect ([[graft.operators.CommitTable.driverRows]]). A list of
+    * more than `budget.rows` ids fails, naming the bound — consolidation
+    * keeps it to one maintenance window's deletes. */
   private[llm] def latestIds(spark: SparkSession, indexRoot: String, idCol: String,
                              budget: graft.operators.CommitTable.Budget): Set[Long] = {
     val t = table(spark, indexRoot, idCol)
     t.latestVersion().fold(Set.empty[Long]) { v =>
-      val ids = t.localRead(Some(v), budget) match {
-        case Some(d) if d.rows.isEmpty => Nil
-        case Some(d) =>
-          val i = d.schema.fieldIndex(idCol)
-          d.rows.collect { case r if !r.isNullAt(i) => r.getLong(i) }
-        case None =>
-          t.asOf(v).select(col(idCol)).collect().toSeq.collect { case r if !r.isNullAt(0) => r.getLong(0) }
-      }
-      budget.requireRows(s"delete list of $indexRoot", ids.size)
-      ids.toSet
+      val d = t.driverRows(None, Some(v), s"delete list of $indexRoot", budget)
+      val i = d.schema.fieldIndex(idCol)
+      d.rows.collect { case r if !r.isNullAt(i) => r.getLong(i) }.toSet
     }
   }
 

@@ -352,7 +352,8 @@ class CommitTable(spark: SparkSession, val path: String, statsCol: String,
     * in-process on each surviving file. None — the caller takes
     * [[prunedReadIn]] — when the files' bytes exceed `budget.bytes`, the
     * version carries a deletion-vector stamp or a column map, or the
-    * files' footers disagree on the schema (nullability aside). */
+    * files' footers disagree on the schema (nullability aside). An empty
+    * cut carries the schema the Spark read's empty frame has. */
   private[graft] def localReadIn(points: Seq[Long], atVersion: Option[Long] = None,
                                  budget: CommitTable.Budget = CommitTable.DriverBudget
                                 ): Option[CommitTable.DriverRows] = {
@@ -360,19 +361,43 @@ class CommitTable(spark: SparkSession, val path: String, statsCol: String,
     localRows(v, pointCut(v, points), budget)
   }
 
-  /** [[asOf]] (or [[read]] when `atVersion` is None) on the driver, on
-    * [[localReadIn]]'s terms. */
-  private[graft] def localRead(atVersion: Option[Long] = None,
-                               budget: CommitTable.Budget = CommitTable.DriverBudget
-                              ): Option[CommitTable.DriverRows] = {
+  /** The rows of version `atVersion` (the head when None) whose stats
+    * column is among `points` — every row when `points` is None — as
+    * driver data. Read on the driver on [[localReadIn]]'s terms, else by
+    * [[prunedReadIn]] / [[asOf]] with the point membership applied in
+    * Spark and one collect; both paths give the same rows and schema.
+    * Past `budget.rows` rows it fails naming `site`, before the Spark path
+    * keeps more than `budget.rows + 1` of them. */
+  private[graft] def driverRows(points: Option[Seq[Long]], atVersion: Option[Long],
+                                site: String, budget: CommitTable.Budget): CommitTable.DriverRows = {
     val v = atVersion.getOrElse(head())
-    localRows(v, addsOf(v).map(_._1), budget)
+    val files = points.fold(addsOf(v).map(_._1))(pointCut(v, _))
+    localRows(v, files, budget) match {
+      case Some(d) =>
+        val rows = points.fold(d.rows) { ps =>
+          val (wanted, i) = (ps.toSet, d.schema.fieldIndex(statsCol))
+          d.rows.filter(r => !r.isNullAt(i) && wanted(r.getLong(i)))
+        }
+        budget.requireRows(site, rows.size)
+        d.copy(rows = rows)
+      case None =>
+        val df = readAt(v, files)
+        CommitTable.collectWithin(points.fold(df) { ps =>
+          import spark.implicits._
+          // the stats column's logical name under the version's column map
+          val key = cmapAt(v).flatMap(_.cols.collectFirst { case (l, `statsCol`) => l }).getOrElse(statsCol)
+          val pts = ps.distinct.toDF("__point")
+          df.join(broadcast(pts), df(key) === pts("__point"), "left_semi")
+        }, site, budget)
+    }
   }
 
+  /** The rows of `files` of `version` decoded on the driver within
+    * `budget.bytes` (see [[localReadIn]]); an empty list reads no rows
+    * and takes [[emptyLike]]'s schema from that file's footer. */
   private def localRows(version: Long, files: Seq[String],
                         budget: CommitTable.Budget): Option[CommitTable.DriverRows] =
     if (dvVersionAt(version).isDefined || cmapAt(version).isDefined) None
-    else if (files.isEmpty) Some(CommitTable.DriverRows(new StructType(), Nil))
     else {
       val conf = spark.sparkContext.hadoopConfiguration
       val sized = files.map { f =>
@@ -380,7 +405,8 @@ class CommitTable(spark: SparkSession, val path: String, statsCol: String,
         (f, p.getFileSystem(conf).getFileStatus(p).getLen)
       }
       if (sized.map(_._2).sum > budget.bytes) None
-      else driverParquet(sized)
+      else footerSchema(if (files.isEmpty) schemaFile().toSeq else files)
+        .map(schema => CommitTable.DriverRows(schema, driverParquet(schema, sized)))
     }
 
   /** Spark's per-file parquet read function by schema, and each data
@@ -394,36 +420,40 @@ class CommitTable(spark: SparkSession, val path: String, statsCol: String,
       Iterator[org.apache.spark.sql.catalyst.InternalRow]]()
   private val footerSchemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
-  /** The rows of `files` (path, byte length), all of one schema, decoded
-    * on the driver by Spark's parquet reader — the function a scan task
-    * runs per file. None when the footers' schemas differ (the caller's
-    * merged-schema read handles that). */
-  private def driverParquet(files: Seq[(String, Long)]): Option[CommitTable.DriverRows] = {
-    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+  /** The one schema of `files`' footers, nullability aside (a file read
+    * surfaces every column nullable); None when they differ — the
+    * caller's merged-schema read handles that — or there is no file. */
+  private def footerSchema(files: Seq[String]): Option[StructType] = {
     import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
       ParquetToSparkSchemaConverter}
-    val fmt = new ParquetFileFormat()
     val conf = spark.sparkContext.hadoopConfiguration
-    val converter = new ParquetToSparkSchemaConverter(fmt.getSqlConf(spark))
-    // nullability aside: a file read surfaces every column nullable
-    val schemas = files.map { case (f, _) =>
+    val converter = new ParquetToSparkSchemaConverter(new ParquetFileFormat().getSqlConf(spark))
+    Some(files.map { f =>
       footerSchemas.computeIfAbsent(f, _ => {
         val p = new Path(f)
         org.apache.spark.sql.graftbridge.Bridge.asNullable(ParquetFileFormat.readSchemaFromFooter(
           new org.apache.parquet.hadoop.Footer(p,
             org.apache.parquet.hadoop.ParquetFileReader.readFooter(conf, p)), converter))
       })
-    }.distinct
-    if (schemas.length != 1) return None
-    val schema = schemas.head
+    }.distinct).collect { case Seq(one) => one }
+  }
+
+  /** The rows of `files` (path, byte length), all of `schema`, decoded on
+    * the driver by Spark's parquet reader — the function a scan task runs
+    * per file. */
+  private def driverParquet(schema: StructType,
+                            files: Seq[(String, Long)]): Seq[org.apache.spark.sql.catalyst.InternalRow] = {
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val fmt = new ParquetFileFormat()
     val read = parquetReaders.computeIfAbsent(schema, s =>
       fmt.buildReaderWithPartitionValues(spark, s, new StructType(), s, Nil,
         Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), fmt.getHadoopConf(spark)))
-    Some(CommitTable.DriverRows(schema, files.flatMap { case (f, len) =>
+    files.flatMap { case (f, len) =>
       read(PartitionedFile(org.apache.spark.sql.catalyst.InternalRow.empty,
         org.apache.spark.paths.SparkPath.fromPathString(f), 0L, len, Array.empty[String], 0L, len,
         Map.empty)).map(_.copy()).toVector
-    }))
+    }
   }
 
   /** [[prunedRead]] on ANY declared stats column: only files whose
@@ -1413,15 +1443,16 @@ class CommitTable(spark: SparkSession, val path: String, statsCol: String,
     }
   }
 
-  private def emptyLike(): DataFrame = {
-    // schema from any committed file list; a table with zero commits has no
-    // schema to offer
-    val anyV = versions().reverseIterator.map(v => addsOf(v).map(_._1)).find(_.nonEmpty)
-    anyV match {
-      case Some(files) => spark.read.parquet(files.head).limit(0)
-      case None => throw new IllegalStateException(s"empty table $path has no readable schema")
-    }
+  private def emptyLike(): DataFrame = schemaFile() match {
+    case Some(f) => spark.read.parquet(f).limit(0)
+    case None => throw new IllegalStateException(s"empty table $path has no readable schema")
   }
+
+  /** The file an empty read takes its schema from: the first of the
+    * newest non-empty committed file list; None for a table with zero
+    * commits or files, which has no schema to offer. */
+  private def schemaFile(): Option[String] =
+    versions().reverseIterator.map(v => addsOf(v).map(_._1)).find(_.nonEmpty).map(_.head)
 
   /** Change-data-feed between two committed versions, resolved THROUGH the
     * log: multiset row diff of `asOf(from)` → `asOf(to)`, tagged
@@ -2748,18 +2779,33 @@ object CommitTable {
   }
 
   /** A batch past [[Budget.rows]]; callers that can split their input
-    * (the k-NN graph append's link search) catch it and retry in halves. */
+    * (the k-NN graph walks) catch it and retry in halves. */
   private[graft] final class DriverBudgetExceeded(msg: String)
     extends IllegalStateException(msg)
 
-  /** The driver budget every caller runs under; 8 MiB of parquet holds
-    * some sixteen thousand 64-d double vectors. */
-  private[graft] val DriverBudget: Budget = Budget(bytes = 8L << 20, rows = 1L << 20)
+  /** The driver budget every caller runs under. `bytes`: a point read of
+    * 64-d vectors decoded on the driver beat the Spark read and collect up
+    * to about 64 MiB of cut files on 4 cores, whatever the file count
+    * (SCALING.md); 32 MiB keeps a 2× margin, since more cores speed the
+    * Spark side, and bounds the decoded heap of one read. `rows` caps a
+    * driver batch of small tuples at tens of MB of heap. */
+  private[graft] val DriverBudget: Budget = Budget(bytes = 32L << 20, rows = 1L << 20)
 
   /** Rows read on the driver ([[CommitTable.localReadIn]]), in Catalyst's
-    * internal form, with their schema (empty when no file was read). */
+    * internal form, with their schema. */
   private[graft] final case class DriverRows(schema: StructType,
                                              rows: Seq[org.apache.spark.sql.catalyst.InternalRow])
+
+  /** `df`'s rows as [[DriverRows]]: one collect of at most `budget.rows +
+    * 1` rows, failing naming `site` when the frame holds more than
+    * `budget.rows` — the bound is checked before a larger batch is kept. */
+  private[graft] def collectWithin(df: DataFrame, site: String, budget: Budget): DriverRows = {
+    val got = df.limit((budget.rows + 1).toInt).collect()
+    budget.requireRows(site, got.length)
+    val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(df.schema)
+    DriverRows(df.schema, got.toSeq.map(toInternal(_).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]))
+  }
 
   /** An active-file record: `(path, lo, hi, n, xs)` — stored
     * (table-relative) or resolved (absolute) path, per-file min/max on

@@ -447,7 +447,7 @@ class CommitLogSpec extends SparkSpec {
     assert(rows(t.prunedReadIn(Seq(200L)).filter("k = 200")) === Set(200L -> "x"))
   }
 
-  test("localReadIn: prunedReadIn's rows and schema on the driver; declines past its byte budget, on deletion vectors, column maps and mixed schemas") {
+  test("localReadIn: prunedReadIn's rows and schema on the driver; declines past its byte budget, on deletion vectors, column maps and mixed schemas; driverRows reads either way") {
     val s = spark
     import s.implicits._
     val t = freshTable()
@@ -459,14 +459,32 @@ class CommitLogSpec extends SparkSpec {
     val local = t.localReadIn(pts).get
     assert(local.rows.map(r => (r.getLong(0), r.getUTF8String(1).toString)).toSet === rows(viaSpark))
     assert(local.schema === viaSpark.schema, "driver rows carry the Spark read's schema")
-    assert(t.localRead().get.rows.length === 29)
-    assert(t.localRead(Some(0L)).get.rows.length === 9, "a pinned version reads that version's files")
-    assert(t.localReadIn(Seq(100L)).get.rows.isEmpty, "no file holds the point")
+    val none = t.localReadIn(Seq(100L)).get
+    assert(none.rows.isEmpty && none.schema === viaSpark.schema,
+      "no file holds the point: no rows, the table's schema")
+    // driverRows: exactly the rows on the points (or every row), on the
+    // driver within the budget and through Spark past it, same rows and schema
+    def all(b: CommitTable.Budget, at: Option[Long] = None) = t.driverRows(None, at, "all", b)
+    def onPts(b: CommitTable.Budget) = t.driverRows(Some(pts), None, "points", b)
+    val sparkOnly = CommitTable.Budget(bytes = 0L, rows = CommitTable.DriverBudget.rows)
+    Seq(CommitTable.DriverBudget, sparkOnly).foreach { b =>
+      assert(all(b).rows.length === 29)
+      assert(all(b, Some(0L)).rows.length === 9, "a pinned version reads that version's files")
+      assert(onPts(b).rows.map(_.getLong(0)).sorted === pts)
+      assert(onPts(b).schema === viaSpark.schema && all(b).schema === viaSpark.schema)
+    }
     // the byte budget counts only the cut files: one file fits where three do not
     def bytes(f: String) = new java.io.File(new java.net.URI(f)).length
     val tight = CommitTable.Budget(bytes = t.read().inputFiles.map(bytes).max, rows = 10L)
     assert(t.localReadIn(Seq(3L), budget = tight).isDefined)
-    assert(t.localRead(budget = tight).isEmpty)
+    assert(t.localReadIn(Seq(3L, 15L, 25L), budget = tight).isEmpty)
+    // past the row bound driverRows fails naming it; the Spark path keeps
+    // one row past the bound, never the whole read
+    Seq(CommitTable.DriverBudget.copy(rows = 5L) -> 29, sparkOnly.copy(rows = 5L) -> 6).foreach {
+      case (b, seen) =>
+        val e = intercept[CommitTable.DriverBudgetExceeded](all(b))
+        assert(e.getMessage === s"all: a batch of $seen rows exceeds the driver row bound DriverBudget.rows = 5")
+    }
     // a pruned-out file is never opened: deleting it leaves the cut readable
     val kept = t.prunedReadIn(Seq(15L)).inputFiles.toSet
     t.read().inputFiles.filterNot(kept).foreach(f => new java.io.File(new java.net.URI(f)).delete())
@@ -476,21 +494,35 @@ class CommitLogSpec extends SparkSpec {
     dv.overwrite(kv(1L -> "a", 2L -> "b").coalesce(1))
     assert(dv.localReadIn(Seq(1L)).isDefined)
     dv.deleteRangeDV(2L, 2L)
-    assert(dv.localReadIn(Seq(1L)).isEmpty && dv.localRead(Some(0L)).isDefined)
+    assert(dv.localReadIn(Seq(1L)).isEmpty && dv.localReadIn(Seq(1L), Some(0L)).isDefined)
+    assert(dv.driverRows(Some(Seq(1L, 2L)), None, "dv", CommitTable.DriverBudget)
+      .rows.map(_.getLong(0)) === Seq(1L), "the deletion vector applies")
     val cm = freshTable()
     cm.overwrite(kv(1L -> "a").coalesce(1))
     cm.renameColumn("v", "w")
-    assert(cm.localRead().isEmpty)
+    assert(cm.localReadIn(Seq(1L)).isEmpty)
+    assert(cm.driverRows(Some(Seq(1L)), None, "cm", CommitTable.DriverBudget).schema.fieldNames
+      .toSeq === Seq("k", "w"), "the column map applies")
     // nullability alone does not split the schema: every column reads nullable
     val mixed = freshTable()
     mixed.overwrite(kv(1L -> "a").coalesce(1))
     mixed.append(Seq((Option(2L), "b")).toDF("k", "v").coalesce(1))
-    assert(mixed.localRead().get.rows.map(_.getLong(0)).toSet === Set(1L, 2L))
+    assert(mixed.localReadIn(Seq(1L, 2L)).get.rows.map(_.getLong(0)).toSet === Set(1L, 2L))
+    // an emptied head: no rows, the schema of the Spark read's empty frame
+    val emptied = freshTable()
+    emptied.overwrite(kv(1L -> "a").coalesce(1))
+    emptied.overwrite(kv(1L -> "a").limit(0))
+    Seq(CommitTable.DriverBudget, sparkOnly).foreach { b =>
+      val d = emptied.driverRows(None, None, "emptied", b)
+      assert(d.rows.isEmpty && d.schema === emptied.read().schema)
+    }
     // footers that disagree on the schema: the merged-schema Spark read
     val wide = freshTable()
     wide.overwrite(kv(1L -> "a").coalesce(1))
     wide.append(Seq((2L, "b", 7)).toDF("k", "v", "x").coalesce(1))
-    assert(wide.localRead().isEmpty && wide.localReadIn(Seq(1L)).isDefined)
+    assert(wide.localReadIn(Seq(1L, 2L)).isEmpty && wide.localReadIn(Seq(1L)).isDefined)
+    assert(wide.driverRows(None, None, "wide", CommitTable.DriverBudget).schema.fieldNames
+      .toSeq === Seq("k", "v", "x"))
   }
 
   test("buildBloom: sentinel rows make all-NULL-key files idempotent; filters size from rowcount; beyond-capacity files are marked, not filtered (r14 advice)") {
@@ -1386,8 +1418,9 @@ class CommitLogSpec extends SparkSpec {
       }
       t
     }
-    def jobsOf(body: CommitTable => Any): Int = {
+    def jobsOf(body: CommitTable => Any, setup: CommitTable => Unit = _ => ()): Int = {
       val t = fourFiles()
+      setup(t)
       val sc = spark.sparkContext
       val jobs = new java.util.concurrent.atomic.AtomicInteger
       val listener = new org.apache.spark.scheduler.SparkListener {
@@ -1406,16 +1439,20 @@ class CommitLogSpec extends SparkSpec {
       "read" -> (_.read().collect()),
       "prunedReadIn" -> (_.prunedReadIn(Seq(5L, 25L)).collect()),
       "localReadIn" -> (_.localReadIn(Seq(5L, 25L))),
-      "localRead" -> (_.localRead()),
+      "driverRows" -> (_.driverRows(None, None, "all", CommitTable.DriverBudget)),
       "merge" -> (_.merge(kv(5L -> "m", 45L -> "n"), Seq("k"))),
       "deleteRange" -> (_.deleteRange(5L, 8L)),
       "compactSmall" -> (_.compactSmall("k", 1L << 20)),
       "deleteWhereDV" -> (_.deleteWhereDV("k >= 12 AND k <= 14"))
-    ).map { case (name, body) => name -> jobsOf(body) }.toMap
+    ).map { case (name, body) => name -> jobsOf(body) }.toMap +
+      // a head whose files are all gone (a cleared delete list) still reads on the driver
+      ("driverRows, emptied head" -> jobsOf(_.driverRows(None, None, "all", CommitTable.DriverBudget),
+        setup = _.overwrite(kv(1L -> "a").limit(0))))
     // the counts measured before file-list resolution moved to driver
     // data: the single-resolution path must not add a job to any of them
     // (the driver reads run none)
-    val bound = Map("read" -> 2, "prunedReadIn" -> 2, "localReadIn" -> 0, "localRead" -> 0,
+    val bound = Map("read" -> 2, "prunedReadIn" -> 2, "localReadIn" -> 0, "driverRows" -> 0,
+      "driverRows, emptied head" -> 0,
       "merge" -> 4,
       "deleteRange" -> 2, "compactSmall" -> 3, "deleteWhereDV" -> 5)
     val over = measured.filter { case (n, j) => j > bound(n) }

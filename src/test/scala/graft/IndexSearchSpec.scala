@@ -225,14 +225,39 @@ class IndexSearchSpec extends SparkSpec {
     assert(viaSpark > 2, s"the Spark path must run jobs for the bound to mean anything: $viaSpark")
   }
 
-  test("appendKnnGraphIndex links the same edges whether its link search runs whole or in chunks; a batch past the row bound fails naming it") {
+  /** A row bound that makes the 4-entry, beam-8, 3-hop walks of this
+    * spec run in chunks: 120 rows over 4 + 3·8 tuples a query cut a batch
+    * into chunks of 4 queries up front, and a chunk whose hops reach more
+    * vertices than that halves. */
+  private val smallRows = CommitTable.Budget(bytes = CommitTable.DriverBudget.bytes, rows = 120L)
+
+  test("the k-NN graph searches return the same rows when a small row bound makes them walk in chunks") {
+    val knn = knnIndex()
+    def check(state: String): Unit =
+      knnEntries(knn, CommitTable.DriverBudget).zip(knnEntries(knn, smallRows)).foreach {
+        case ((name, whole), (_, chunked)) =>
+          val expect = whole.collect().toSeq
+          assert(expect.map(_.getLong(0)).distinct.size >= 9, s"$name ($state): the queries answer")
+          assert(chunked.collect().toSeq === expect, s"$name ($state): rows")
+      }
+    check("no tombstones")
+    KnnGraph.deleteFromKnnGraphIndex(idFrame(Seq(2L, 17L, 33L, 41L), "vec_id"), knn)
+    check("with tombstones")
+  }
+
+  test("a query batch past the row bound fails naming it, having kept one row past the bound") {
+    val knn = knnIndex()
+    val five = CommitTable.Budget(bytes = CommitTable.DriverBudget.bytes, rows = 5L)
+    val e = intercept[CommitTable.DriverBudgetExceeded](
+      KnnGraph.externalSearch(spark, knn, members(10), 4, 8, 3, five))
+    assert(e.getMessage ===
+      "knnGraphSearchFor queries: a batch of 6 rows exceeds the driver row bound DriverBudget.rows = 5")
+  }
+
+  test("appendKnnGraphIndex links the same edges whether its link search runs whole or in chunks; a bound below the entry set fails naming it") {
     val whole = knnIndex(); val parts = knnIndex()
     val batch = embDF(vecs(8, seed = 3, idBase = 1000L))
-    val small = CommitTable.Budget(bytes = CommitTable.DriverBudget.bytes, rows = 120L)
-    // the whole batch's walk exceeds the small bound, so the append must chunk
-    val e = intercept[CommitTable.DriverBudgetExceeded](
-      KnnGraph.externalSearch(spark, whole, batch, 5, 8, 3, small))
-    assert(e.getMessage.contains("DriverBudget.rows = 120"), e.getMessage)
+    val small = smallRows
     KnnGraph.appendLinked(batch, whole, 6, 8, 3, CommitTable.DriverBudget)
     KnnGraph.appendLinked(batch, parts, 6, 8, 3, small)
     def table(r: String, t: String) = rows(new CommitTable(spark, s"$r/$t", "x").read())
@@ -244,7 +269,8 @@ class IndexSearchSpec extends SparkSpec {
     val tooSmall = CommitTable.Budget(bytes = CommitTable.DriverBudget.bytes, rows = 3L)
     val e2 = intercept[CommitTable.DriverBudgetExceeded](KnnGraph.appendLinked(
       embDF(vecs(2, seed = 4, idBase = 2000L)), parts, 6, 8, 3, tooSmall))
-    assert(e2.getMessage.contains("DriverBudget.rows = 3"), e2.getMessage)
+    assert(e2.getMessage.startsWith("knnGraph walk entries: ") &&
+      e2.getMessage.endsWith("DriverBudget.rows = 3"), e2.getMessage)
     assert(new CommitTable(spark, s"$parts/graph", "src").latestVersion() === graphHead)
   }
 
