@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructField, StructType}
 
 import graft.operators.CommitTable
 import graft.operators.CommitTable.Budget
@@ -1004,40 +1004,113 @@ object KnnGraph {
   def deleteFromKnnGraphIndex(ids: DataFrame, indexRoot: String): Long =
     Tombstones.delete(ids, indexRoot, "vec_id")
 
-  /** FreshDiskANN's DELETE CONSOLIDATION, as one deterministic dataflow:
-    * for each deleted vertex d, every surviving in-neighbor of d is
-    * offered d's surviving out-neighbors as replacement edges (the paper's
-    * local repair: routes that crossed d now skip it), deduplicated,
-    * capped at `patchK` per source by (cos desc, dst) with cosines
-    * recomputed from the surviving vectors; then
-    *  - `graph/` rewrites as surviving edges ∪ patch (one range-clustered
-    *    overwrite commit — file pruning survives),
+  /** FreshDiskANN's DELETE CONSOLIDATION, one deterministic rewrite: for
+    * each deleted vertex d, every surviving in-neighbor of d is offered
+    * d's surviving out-neighbors as replacement edges (the paper's local
+    * repair: routes that crossed d now skip it), deduplicated, minus the
+    * edges already kept, capped at `patchK` per source by (cos desc, dst)
+    * with cosines recomputed from the surviving vectors; then
+    *  - `graph/` rewrites as surviving edges (with their multiplicity) ∪
+    *    patch (one range-clustered overwrite commit — file pruning
+    *    survives),
     *  - `vectors/` rewrites without the deleted rows,
     *  - `entries/` re-snaps: a deleted entry vertex is replaced by the
     *    smallest surviving id at or above it (the build's snapping rule;
-    *    falls back to the smallest surviving id), and
-    *  - the delete list clears.
+    *    falls back to the smallest surviving id). When the re-snap is the
+    *    identity (no entry id is tombstoned) nothing is written and the
+    *    manifest pins the unchanged entries version,
+    *  - the delete list clears, and one manifest version pins all three.
     * Documented divergence (shared with the paper's batch consolidation):
     * the repair is ONE hop — a path through two ADJACENT deleted vertices
     * is not re-stitched; the periodic full rebuild re-normalizes. Returns
     * the new graph version; no-op (current head) when nothing is
-    * tombstoned. Requires at least one surviving vector.
+    * tombstoned. Requires at least one surviving vector: a fully
+    * tombstoned index fails before the first commit, every head as it was.
+    *
+    * IO contract: the delete list resolves once, at its latest version,
+    * and takes one of two paths with the member heads.
+    *  - On the driver, when the delete list and the graph, vectors and
+    *    entries heads each fit [[CommitTable.DriverBudget]]
+    *    ([[CommitTable.localRead]]: at most 32 MiB of parquet and 1 Mi
+    *    rows a read, no deletion-vector stamp or column map, one footer
+    *    schema) and the repair pairs fit its rows: each is decoded once,
+    *    and the repair — kept edges, repair pairs, survivors, patch
+    *    cosines (the dataflow's Column, evaluated by
+    *    [[Bridge.localProjection]], so the bits are the same), the
+    *    per-source cap in [[BeamOrder]] (a null cosine last) and the
+    *    entry re-snap — runs with no Spark job. The no-op check reads the
+    *    decoded list. Only the member writes run jobs (eight on the spec
+    *    index).
+    *  - Otherwise as a Spark dataflow over the same versions: the same
+    *    rows and commits (spec-asserted at every member version, ANSI on
+    *    and off), at about thirty-five jobs.
     */
   def consolidateKnnGraphIndex(spark: SparkSession, indexRoot: String,
-                               patchK: Int = 6): Long = {
-    val graph = new graft.operators.CommitTable(spark, s"$indexRoot/graph", "src")
-    // the delete list resolves ONCE, pinned at its latest version, and
-    // every exclusion below applies that one list
-    val dead = Tombstones.latestVersion(spark, indexRoot, "vec_id")
-      .map(Tombstones.readAt(spark, indexRoot, "vec_id", _))
-    if (dead.forall(_.isEmpty))
-      return graph.latestVersion().getOrElse(
-        throw new IllegalStateException(s"no committed graph at $indexRoot"))
-    def live(df: DataFrame, c: String): DataFrame = Tombstones.excludeIn(df, dead.get, "vec_id", c)
-    val vecs = new graft.operators.CommitTable(spark, s"$indexRoot/vectors", "vec_id")
-    val entries = new graft.operators.CommitTable(spark, s"$indexRoot/entries", "eid")
-    val del = broadcast(dead.get.withColumnRenamed("vec_id", "d"))
-    val g = graph.read().select("src", "dst", "cos").localCheckpoint(true)
+                               patchK: Int = 6): Long =
+    consolidateWithin(spark, indexRoot, patchK, CommitTable.DriverBudget)
+
+  /** The body of [[consolidateKnnGraphIndex]] under `budget`. */
+  private[graft] def consolidateWithin(spark: SparkSession, indexRoot: String, patchK: Int,
+                                       budget: Budget): Long = {
+    def head: Long = new CommitTable(spark, s"$indexRoot/graph", "src").latestVersion().getOrElse(
+      throw new IllegalStateException(s"no committed graph at $indexRoot"))
+    Tombstones.latestVersion(spark, indexRoot, "vec_id") match {
+      case None => head
+      case Some(tv) =>
+        val dead = Tombstones.localIdsAt(spark, indexRoot, "vec_id", tv, budget)
+        if (dead.exists(_.isEmpty)) head
+        else dead.flatMap(localRewrite(spark, indexRoot, _, patchK, budget)) match {
+          case Some(rw) => commitRewrite(spark, indexRoot, rw)
+          case None => dataflowRewrite(spark, indexRoot, tv, patchK).fold(head)(commitRewrite(spark, indexRoot, _))
+        }
+    }
+  }
+
+  /** What a consolidation writes: the graph and vectors, and the entries
+    * when the re-snap moved them. */
+  private final case class Rewrite(graph: DataFrame, vectors: DataFrame, entries: Option[DataFrame])
+
+  /** Commits `rw` — the graph and vectors range-clustered as the build
+    * writes them, the entries, the delete-list clear and one manifest
+    * version over the three members — and returns the graph version. */
+  private def commitRewrite(spark: SparkSession, indexRoot: String, rw: Rewrite): Long = {
+    val v = new CommitTable(spark, s"$indexRoot/graph", "src")
+      .overwrite(rw.graph.repartitionByRange(col("src"), col("dst")))
+    new CommitTable(spark, s"$indexRoot/vectors", "vec_id")
+      .overwrite(rw.vectors.repartitionByRange(col("vec_id")))
+    rw.entries.foreach(e => new CommitTable(spark, s"$indexRoot/entries", "eid").overwrite(e.coalesce(1)))
+    Tombstones.clear(spark, indexRoot, "vec_id")
+    graft.operators.IndexManifest.commit(spark, indexRoot,
+      Seq("vectors", "graph", "entries"))
+    v
+  }
+
+  private def fullyTombstoned(indexRoot: String): String =
+    s"consolidateKnnGraphIndex: every vector at $indexRoot is tombstoned — rebuild instead"
+
+  /** The repair's cosine over `(src, dst, se, sn, de, dn)` rows. */
+  private val repairCos: Column = dot(col("se"), col("de")) / (col("sn") * col("dn"))
+
+  /** [[BeamOrder]] over `(src, dst, cos)` rows whose `cos` may be null,
+    * which sorts last — the window's `cos DESC, dst`. */
+  private val RepairOrder: Ordering[InternalRow] = (a, b) =>
+    (a.isNullAt(2), b.isNullAt(2)) match {
+      case (false, false) => BeamOrder.compare((a.getLong(0), a.getLong(1), a.getDouble(2)),
+        (b.getLong(0), b.getLong(1), b.getDouble(2)))
+      case (an, bn) if an != bn => java.lang.Boolean.compare(an, bn)
+      case _ => java.lang.Long.compare(a.getLong(1), b.getLong(1))
+    }
+
+  /** The consolidation as a Spark dataflow against the delete list at
+    * tombstone version `tv`; None when that list is empty. */
+  private def dataflowRewrite(spark: SparkSession, indexRoot: String, tv: Long,
+                              patchK: Int): Option[Rewrite] = {
+    val dead = Tombstones.readAt(spark, indexRoot, "vec_id", tv)
+    if (dead.isEmpty) return None
+    def live(df: DataFrame, c: String): DataFrame = Tombstones.excludeIn(df, dead, "vec_id", c)
+    val del = broadcast(dead.withColumnRenamed("vec_id", "d"))
+    val g = new CommitTable(spark, s"$indexRoot/graph", "src").read()
+      .select("src", "dst", "cos").localCheckpoint(true)
     // one-hop repair pairs: (surviving in-neighbor of d) × (surviving
     // out-neighbor of d) — per-d fan-in × fan-out, bounded by the graph's
     // degree contract (lists are k-capped at build; appends grow them only
@@ -1048,37 +1121,98 @@ object KnnGraph {
     val patchPairs = into.join(outof, "d")
       .select("src", "dst").filter(col("src") =!= col("dst")).distinct()
       .join(kept.select("src", "dst").distinct(), Seq("src", "dst"), "left_anti")
-    val vKept = live(vecs.read(), "vec_id")
+    val vKept = live(new CommitTable(spark, s"$indexRoot/vectors", "vec_id").read(), "vec_id")
       .select("vec_id", "e", "nrm").localCheckpoint(true)
-    // validate the degenerate case BEFORE the first overwrite commit: a
-    // fully tombstoned index must fail without mutating any head (failing
-    // after the graph/vectors overwrites would leave a broken
-    // half-consolidated index with stale entries and uncleared tombstones)
+    // the degenerate case fails before the first commit: failing after the
+    // graph/vectors overwrites would leave a half-consolidated index
     val minSurvRow = vKept.agg(min(col("vec_id"))).head()
-    require(!minSurvRow.isNullAt(0),
-      s"consolidateKnnGraphIndex: every vector at $indexRoot is tombstoned — rebuild instead")
+    require(!minSurvRow.isNullAt(0), fullyTombstoned(indexRoot))
     val minSurv = minSurvRow.getLong(0)
     val a = vKept.select(col("vec_id").as("src"), col("e").as("se"), col("nrm").as("sn"))
     val b = vKept.select(col("vec_id").as("dst"), col("e").as("de"), col("nrm").as("dn"))
     val wp = Window.partitionBy("src").orderBy(col("cos").desc, col("dst"))
     val patch = patchPairs.join(a, "src").join(b, "dst")
-      .withColumn("cos", dot(col("se"), col("de")) / (col("sn") * col("dn")))
+      .withColumn("cos", repairCos)
       .withColumn("rn", row_number().over(wp)).filter(col("rn") <= patchK)
       .select("src", "dst", "cos")
-    val v = graph.overwrite(kept.select("src", "dst", "cos").unionByName(patch)
-      .repartitionByRange(col("src"), col("dst")))
-    vecs.overwrite(vKept.repartitionByRange(col("vec_id")))
     // entry re-snap: numEntries-bounded broadcast against the survivors
-    val e0 = entries.read().select("eid")
+    val e0 = new CommitTable(spark, s"$indexRoot/entries", "eid").read().select("eid")
     val snapped = vKept.select(col("vec_id")).join(broadcast(e0), col("vec_id") >= col("eid"))
       .groupBy("eid").agg(min(col("vec_id")).as("s"))
     val newEntries = e0.join(snapped, Seq("eid"), "left")
       .select(coalesce(col("s"), lit(minSurv)).as("eid")).distinct()
-    entries.overwrite(newEntries.coalesce(1))
-    Tombstones.clear(spark, indexRoot, "vec_id")
-    graft.operators.IndexManifest.commit(spark, indexRoot,
-      Seq("vectors", "graph", "entries"))
-    v
+    // the re-snap is the identity when it holds exactly the stored entries
+    val moved = e0.select(col("eid"), lit(1L).as("n"))
+      .unionByName(newEntries.select(col("eid"), lit(-1L).as("n")))
+      .groupBy("eid").agg(sum(col("n")).as("n")).filter(col("n") =!= 0L)
+    Some(Rewrite(kept.select("src", "dst", "cos").unionByName(patch), vKept,
+      if (moved.isEmpty) None else Some(newEntries)))
+  }
+
+  /** The consolidation on the driver against the decoded delete list
+    * `dead`: the member heads read within `budget`, the repair computed in
+    * Scala, the members to write as LocalRelations. None — the caller runs
+    * the dataflow — when a read declines, a key column is null or not a
+    * long, or the repair pairs exceed `budget.rows`. */
+  private def localRewrite(spark: SparkSession, indexRoot: String, dead: Set[Long], patchK: Int,
+                           budget: Budget): Option[Rewrite] = {
+    def read(t: String, keys: Seq[String], cols: (String, DataType)*): Option[CommitTable.DriverRows] =
+      new CommitTable(spark, s"$indexRoot/$t", keys.head).localRead(None, budget).filter { d =>
+        (keys.map(_ -> LongType) ++ cols).forall { case (c, dt) =>
+          d.schema.fieldNames.contains(c) && d.schema(c).dataType == dt } &&
+          keys.map(d.schema.fieldIndex).forall(i => d.rows.forall(!_.isNullAt(i)))
+      }
+    for {
+      g <- read("graph", Seq("src", "dst"), "cos" -> DoubleType)
+      vs <- read("vectors", Seq("vec_id"), "e" -> ArrayType(DoubleType), "nrm" -> DoubleType)
+      es <- read("entries", Seq("eid"))
+      rw <- repairOnDriver(spark, indexRoot, dead, g, vs, es, patchK, budget)
+    } yield rw
+  }
+
+  /** [[dataflowRewrite]]'s rows from the decoded graph `g`, vectors `vs`
+    * and entries `es`; None when the repair pairs exceed `budget.rows`. */
+  private def repairOnDriver(spark: SparkSession, indexRoot: String, dead: Set[Long],
+                             g: CommitTable.DriverRows, vs: CommitTable.DriverRows,
+                             es: CommitTable.DriverRows, patchK: Int, budget: Budget): Option[Rewrite] = {
+    val Seq(si, di, ci) = Seq("src", "dst", "cos").map(g.schema.fieldIndex)
+    val (kept, cut) = g.rows.map(r => (r.getLong(si), r.getLong(di), r))
+      .partition { case (s, d, _) => !dead(s) && !dead(d) }
+    // one-hop repair pairs, as the dataflow forms them
+    val into = cut.collect { case (s, d, _) if !dead(s) => (d, s) }.distinct.groupMap(_._1)(_._2)
+    val outof = cut.collect { case (d, t, _) if !dead(t) => (d, t) }.distinct.groupMap(_._1)(_._2)
+    val keptPairs = kept.map(e => (e._1, e._2)).toSet
+    val pairs = into.toSeq.flatMap { case (d, ins) =>
+      for (s <- ins; t <- outof.getOrElse(d, Nil) if s != t) yield (s, t) }.distinct.filterNot(keptPairs)
+    val Seq(vi, ei, ni) = Seq("vec_id", "e", "nrm").map(vs.schema.fieldIndex)
+    val (et, nt) = (vs.schema(ei).dataType, vs.schema(ni).dataType)
+    val survivors = vs.rows.filterNot(r => dead(r.getLong(vi)))
+    require(survivors.nonEmpty, fullyTombstoned(indexRoot))
+    val byVec = survivors.groupBy(_.getLong(vi))
+    val pairRows = for ((s, t) <- pairs; a <- byVec.getOrElse(s, Nil); b <- byVec.getOrElse(t, Nil))
+      yield InternalRow(s, t, a.get(ei, et), a.get(ni, nt), b.get(ei, et), b.get(ni, nt))
+    if (pairRows.size > budget.rows) None
+    else {
+      val pairSchema = StructType(Seq(StructField("src", LongType, nullable = false),
+        StructField("dst", LongType, nullable = false), vs.schema(ei).copy(name = "se"),
+        vs.schema(ni).copy(name = "sn"), vs.schema(ei).copy(name = "de"), vs.schema(ni).copy(name = "dn")))
+      val scored = Bridge.localProjection(spark, pairSchema,
+        Seq(col("src"), col("dst"), repairCos.as("cos")))._2(pairRows)
+      val patch = scored.groupBy(_.getLong(0)).valuesIterator
+        .flatMap(_.sorted(RepairOrder).take(patchK)).toSeq
+      val edges = kept.map { case (s, d, r) => InternalRow(s, d, r.get(ci, DoubleType)) } ++ patch
+      // entry re-snap: the smallest survivor at or above each entry, else the smallest survivor
+      val ids = scala.collection.immutable.TreeSet.from(survivors.map(_.getLong(vi)))
+      val ex = es.schema.fieldIndex("eid")
+      val e0 = es.rows.map(_.getLong(ex))
+      val snapped = e0.map(e => ids.minAfter(e).getOrElse(ids.head)).distinct
+      Some(Rewrite(
+        Bridge.localFrame(spark, StructType(Seq(si, di, ci).map(g.schema(_))), edges),
+        Bridge.localFrame(spark, StructType(Seq(vi, ei, ni).map(vs.schema(_))),
+          survivors.map(r => InternalRow(r.getLong(vi), r.get(ei, et), r.get(ni, nt)))),
+        if (snapped.sorted == e0.sorted) None
+        else Some(Bridge.localFrame(spark, StructType(Seq(es.schema(ex))), snapped.map(InternalRow(_))))))
+    }
   }
 
   /** DuckDB mirror of [[buildKnnGraphIndex]] + [[knnGraphSearch]]: the

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** The DELETE half of the persisted-index lifecycle, shared by every index
   * family (IVF/PQ lists, k-NN graph, BM25 postings): a DELETE-LIST side
@@ -86,6 +87,18 @@ object Tombstones {
       d.rows.collect { case r if !r.isNullAt(i) => r.getLong(i) }.toSet
     }
   }
+
+  /** The delete list at tombstone `version` decoded on the driver with no
+    * Spark job ([[graft.operators.CommitTable.localRead]]); None when that
+    * read declines or the list holds a null id, which the anti-join of
+    * [[excludeIn]] matches against nothing. */
+  private[llm] def localIdsAt(spark: SparkSession, indexRoot: String, idCol: String, version: Long,
+                              budget: graft.operators.CommitTable.Budget): Option[Set[Long]] =
+    table(spark, indexRoot, idCol).localRead(Some(version), budget).flatMap { d =>
+      val i = d.schema.fieldIndex(idCol)
+      if (d.schema(i).dataType != LongType || d.rows.exists(_.isNullAt(i))) None
+      else Some(d.rows.map(_.getLong(i)).toSet)
+    }
 
   /** [[exclude]] against the delete list AS OF a pinned version (the
     * manifest-resolved read path); `version` None falls back to the live

@@ -361,6 +361,16 @@ class CommitTable(spark: SparkSession, val path: String, statsCol: String,
     localRows(v, pointCut(v, points), budget)
   }
 
+  /** Every row of version `atVersion` (the head when None) read on the
+    * driver on [[localReadIn]]'s terms; None also when the log's row
+    * counts exceed `budget.rows`, checked before anything is decoded. */
+  private[graft] def localRead(atVersion: Option[Long],
+                               budget: CommitTable.Budget): Option[CommitTable.DriverRows] = {
+    val v = atVersion.getOrElse(head())
+    val adds = addsOf(v)
+    if (adds.map(_._4).sum > budget.rows) None else localRows(v, adds.map(_._1), budget)
+  }
+
   /** The rows of version `atVersion` (the head when None) whose stats
     * column is among `points` — every row when `points` is None — as
     * driver data. Read on the driver on [[localReadIn]]'s terms, else by

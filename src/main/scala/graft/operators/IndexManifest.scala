@@ -42,12 +42,14 @@ object IndexManifest {
   }
 
   /** The member-version map pinned by `indexVersion` (or the head when
-    * None) — member-count-sized driver read. */
+    * None) — a member-count-sized read, decoded on the driver with no
+    * Spark job ([[CommitTable.driverRows]]). */
   def resolve(spark: SparkSession, indexRoot: String,
               indexVersion: Option[Long] = None): Map[String, Long] = {
-    val t = table(spark, indexRoot)
-    indexVersion.map(t.asOf).getOrElse(t.read())
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+    val d = table(spark, indexRoot).driverRows(None, indexVersion,
+      s"index manifest of $indexRoot", CommitTable.DriverBudget)
+    val (ti, vi) = (d.schema.fieldIndex("t"), d.schema.fieldIndex("v"))
+    d.rows.map(r => (r.getUTF8String(ti).toString, r.getLong(vi))).toMap
   }
 
   /** Committed index versions, ascending. */

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 import graft.llm.{KnnGraph, Retrieval, Similarity}
 import graft.operators.{CommitTable, IndexManifest}
@@ -274,6 +275,146 @@ class IndexSearchSpec extends SparkSpec {
     assert(new CommitTable(spark, s"$parts/graph", "src").latestVersion() === graphHead)
   }
 
+  private def copyOf(r: String, tag: String): String = {
+    val (from, to) = (java.nio.file.Path.of(r), java.nio.file.Path.of(root(tag)))
+    val walk = java.nio.file.Files.walk(from)
+    try walk.iterator().asScala.foreach { p =>
+      val t = to.resolve(from.relativize(p).toString)
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
+      else java.nio.file.Files.copy(p, t)
+    } finally walk.close()
+    to.toString
+  }
+
+  private val indexMembers = Seq("graph", "vectors", "entries", "tombstones", "manifest")
+
+  /** Every committed version of every member of the index at `r`, each as
+    * its schema and its rows sorted, doubles as their bits (NaN as one
+    * value), so two runs compare with `===`. */
+  private def memberVersions(r: String): Map[String, Seq[(Long, String, Seq[String])]] = {
+    def canon(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToLongBits(d)
+      case xs: scala.collection.Seq[_] => xs.map(canon)
+      case other => other
+    }
+    indexMembers.map { m =>
+      val t = new CommitTable(spark, s"$r/$m", "x")
+      m -> t.versions().map { v =>
+        val df = t.asOf(v)
+        (v, df.schema.toDDL, df.collect().map(_.toSeq.map(canon).mkString("|")).toSeq.sorted)
+      }
+    }.toMap
+  }
+
+  private def condition(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).collectFirst {
+      case st: org.apache.spark.SparkThrowable if st.getCondition != null => st.getCondition
+    }.getOrElse(s"${t.getClass.getName}: ${t.getMessage}")
+
+  /** A 60-vector index with a zero-norm vector (13: its cosines divide by
+    * zero), a NaN vector (29: NaN cosines) and its first twelve edges
+    * appended again, built with ANSI off (the build divides by that zero
+    * norm too). */
+  private def churnedIndex(): String = {
+    val r = root("knng-edge")
+    val rows = vecs(60).map {
+      case (13L, v) => (13L, v.map(_ => 0f))
+      case (29L, v) => (29L, v.updated(3, Float.NaN))
+      case other => other
+    }
+    withAnsi("false")(KnnGraph.buildKnnGraphIndex(embDF(rows), r, k = 5, rounds = 2, numEntries = 4))
+    val g = new CommitTable(spark, s"$r/graph", "src")
+    g.append(g.read().orderBy("src", "dst").limit(12))
+    r
+  }
+
+  private def withAnsi[T](ansi: String)(body: => T): T = {
+    val ansi0 = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try body finally spark.conf.set("spark.sql.ansi.enabled", ansi0)
+  }
+
+  test("consolidateKnnGraphIndex on the driver and as the Spark dataflow commit the same rows at every member version") {
+    val base = churnedIndex()
+    val g = new CommitTable(spark, s"$base/graph", "src").read()
+      .select("src", "dst").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val entryIds = new CommitTable(spark, s"$base/entries", "eid").read()
+      .collect().map(_.getLong(0)).toSeq.sorted
+    val rng = new scala.util.Random(17)
+    def some(n: Int): Seq[Long] = Seq.fill(n)(rng.nextInt(60).toLong)
+    val (s0, d0) = g.filter(e => e._1 != e._2 && e._1 != 13L && e._2 != 13L)(rng.nextInt(g.size))
+    // the delete sets: random ids, an entry vertex, two adjacent vertices,
+    // an out-neighbor of the zero-norm vector (its repair divides by zero)
+    // and one of the NaN vector
+    val deleteSets = Seq(
+      some(3), some(6) :+ entryIds.head, Seq(s0, d0), Seq(s0, d0) ++ entryIds.take(2),
+      g.collectFirst { case (13L, d) if d != 13L => d }.toSeq ++ some(2),
+      g.collectFirst { case (29L, d) if d != 29L => d }.toSeq :+ 29L)
+    val outcomes = for ((ids, i) <- deleteSets.zipWithIndex; ansi <- Seq("true", "false")) yield {
+      val runs = Seq(CommitTable.DriverBudget, sparkOnly).map { budget =>
+        val r = copyOf(base, s"knng-consolidate-$i")
+        KnnGraph.deleteFromKnnGraphIndex(idFrame(ids, "vec_id"), r)
+        var got: Either[String, Long] = Left("not run")
+        val jobs = jobsOf {
+          got = scala.util.Try(withAnsi(ansi)(KnnGraph.consolidateWithin(spark, r, 4, budget)))
+            .toEither.left.map(condition)
+        }
+        (got, memberVersions(r), jobs)
+      }
+      val Seq((onDriver, driverTables, driverJobs), (viaSpark, sparkTables, sparkJobs)) = runs
+      assert(onDriver === viaSpark, s"delete set $ids, ansi=$ansi: the outcome")
+      assert(driverJobs < sparkJobs, s"delete set $ids, ansi=$ansi: the driver body ran ($driverJobs jobs)")
+      indexMembers.foreach(m => assert(driverTables(m) === sparkTables(m),
+        s"delete set $ids, ansi=$ansi: $m at every version"))
+      (ids, ansi, onDriver)
+    }
+    // the delete sets reach what they are meant to: a patch cosine divides
+    // by zero (an error under ANSI, a null otherwise) and the rest commit
+    assert(outcomes.exists(_._3 == Left("DIVIDE_BY_ZERO")), outcomes)
+    assert(outcomes.count(_._3.isRight) >= deleteSets.size, outcomes)
+    // fully tombstoned: the same message on both paths, every head as it was
+    val heads = Seq(CommitTable.DriverBudget, sparkOnly).map { budget =>
+      val r = copyOf(base, "knng-consolidate-all")
+      KnnGraph.deleteFromKnnGraphIndex(idFrame(0L until 60L, "vec_id"), r)
+      val before = memberVersions(r)
+      val e = intercept[IllegalArgumentException](KnnGraph.consolidateWithin(spark, r, 4, budget))
+      assert(e.getMessage === s"requirement failed: consolidateKnnGraphIndex: every vector at $r " +
+        "is tombstoned — rebuild instead")
+      assert(memberVersions(r) === before, s"a failed consolidation must leave every member as it was")
+      before.map { case (m, vs) => m -> vs.map(_._1) }
+    }
+    assert(heads(0) === heads(1))
+  }
+
+  test("consolidation leaves the entries unwritten when no entry id is tombstoned, and searches as a rewrite would") {
+    val skip = knnIndex()
+    val entries = new CommitTable(spark, s"$skip/entries", "eid")
+    val (head, eids) = (entries.latestVersion().get, entries.read().collect().map(_.getLong(0)).toSet)
+    val gone = Seq(2L, 17L, 33L, 41L).filterNot(eids)
+    assert(gone.size >= 3)
+    val rewrite = copyOf(skip, "knng-rewrite")
+    Seq(skip, rewrite).foreach { r =>
+      KnnGraph.deleteFromKnnGraphIndex(idFrame(gone, "vec_id"), r)
+      KnnGraph.consolidateKnnGraphIndex(spark, r)
+    }
+    assert(entries.latestVersion().get === head, "the entries must not be rewritten")
+    assert(IndexManifest.resolve(spark, skip)("entries") === head, "the manifest pins the unchanged entries")
+    // the rewrite every consolidation used to commit: the same entries again
+    val rewritten = new CommitTable(spark, s"$rewrite/entries", "eid")
+    rewritten.overwrite(rewritten.read().coalesce(1))
+    IndexManifest.commit(spark, rewrite, Seq("vectors", "graph", "entries"))
+    assert(rewritten.latestVersion().get === head + 1)
+    val searches = Seq[String => DataFrame](
+      r => KnnGraph.knnGraphSearch(spark, r, numQueries = 10, k = 4),
+      r => KnnGraph.knnGraphSearchAt(spark, r, latest(r), numQueries = 10, k = 4),
+      r => KnnGraph.knnGraphSearchFor(spark, r, members(10), k = 4))
+    searches.foreach { s =>
+      val expect = rows(s(rewrite))
+      assert(expect.nonEmpty)
+      assert(rows(s(skip)) === expect)
+    }
+  }
+
   test("job counts of every search entry, append and consolidate stay at their bound") {
     val knn = knnIndex()
     KnnGraph.addPqToKnnGraphIndex(embDF(vecs(60)), knn, m = 4, ksub = 8, dim = dim)
@@ -303,19 +444,27 @@ class IndexSearchSpec extends SparkSpec {
     val append = jobsOf(KnnGraph.appendKnnGraphIndex(embDF(vecs(8, seed = 3, idBase = 1000L)), knnMut))
     KnnGraph.deleteFromKnnGraphIndex(idFrame(Seq(3L, 17L, 1004L), "vec_id"), knnMut)
     val consolidate = jobsOf(KnnGraph.consolidateKnnGraphIndex(spark, knnMut))
+    val nothingTombstoned = jobsOf(KnnGraph.consolidateKnnGraphIndex(spark, knnMut))
+    val vacuum = jobsOf(IndexManifest.vacuumIndex(spark, knnMut))
     val measured = searches.toMap +
-      ("appendKnnGraphIndex" -> append) + ("consolidateKnnGraphIndex" -> consolidate)
+      ("appendKnnGraphIndex" -> append) + ("consolidateKnnGraphIndex" -> consolidate) +
+      ("consolidate, nothing tombstoned" -> nothingTombstoned) + ("vacuumIndex" -> vacuum)
     // the k-NN graph entries' counts are those measured once the walk read
     // and ranked on the driver (before: knnGraphSearch 37, For 36, At 39,
     // pqGraphSearch 47, append 41; tombstoned knnGraphSearch 43,
     // pqGraphSearch 55, ivfTopKIndexed 19 while each resolved its delete
-    // list twice); the rest are the counts before the entries shared one
-    // body per family, consolidate's after its delete list resolved once
+    // list twice) and consolidated on the driver (before: 35, and 1 for a
+    // cleared delete list); the `At` entries, the postings heads and
+    // vacuumIndex as measured once the manifest resolved on the driver
+    // (before: knnGraphSearchAt 2, ivfTopKIndexedAt 15, bm25TopKIndexed and
+    // bm25TopKIndexedAt 13, maxPassageTopKIndexed 14, vacuumIndex 4); the
+    // rest are the counts before the entries shared one body per family
     val bound = Map(
-      "knnGraphSearch" -> 0, "knnGraphSearchFor" -> 0, "knnGraphSearchAt" -> 2,
-      "pqGraphSearch" -> 22, "appendKnnGraphIndex" -> 7, "consolidateKnnGraphIndex" -> 35,
-      "ivfTopKIndexed" -> 13, "ivfSearchFor" -> 12, "ivfTopKIndexedAt" -> 15,
-      "bm25TopKIndexed" -> 13, "bm25TopKIndexedAt" -> 13, "maxPassageTopKIndexed" -> 14,
+      "knnGraphSearch" -> 0, "knnGraphSearchFor" -> 0, "knnGraphSearchAt" -> 0,
+      "pqGraphSearch" -> 22, "appendKnnGraphIndex" -> 7, "consolidateKnnGraphIndex" -> 8,
+      "consolidate, nothing tombstoned" -> 0, "vacuumIndex" -> 0,
+      "ivfTopKIndexed" -> 13, "ivfSearchFor" -> 12, "ivfTopKIndexedAt" -> 13,
+      "bm25TopKIndexed" -> 11, "bm25TopKIndexedAt" -> 11, "maxPassageTopKIndexed" -> 12,
       "knnGraphSearch tombstoned" -> 0, "pqGraphSearch tombstoned" -> 22,
       "ivfTopKIndexed tombstoned" -> 18)
     val over = measured.filter { case (n, j) => j > bound(n) }

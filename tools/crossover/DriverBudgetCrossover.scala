@@ -4,22 +4,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 import graft.operators.CommitTable
 
-/** Where `CommitTable.DriverBudget.bytes` comes from: times one point
-  * read of a vectors-shaped table (`vec_id`, `e` of 64 doubles, `nrm`)
-  * decoded on the driver (`CommitTable.localReadIn`) against the Spark
-  * read of the same cut (`prunedReadIn` + id semi-join + collect), and
-  * the k-NN graph walk's scoring of ~2,000 candidate pairs both ways
-  * (driver: `KnnGraph.localCosine`; Spark: `KnnGraph.cosine` + collect),
-  * as the cut's parquet bytes grow. Each table instance is fresh per
-  * timing, so the driver side pays its footer reads and reader build
-  * every time. Prints CSV: the median of `reps` timings after two
-  * warm-ups. Run with `tools/crossover/run.sh`. */
+/** Where `CommitTable.DriverBudget.bytes` comes from. Two cases:
+  *  - `read`: times one point read of a vectors-shaped table (`vec_id`,
+  *    `e` of 64 doubles, `nrm`) decoded on the driver
+  *    (`CommitTable.localReadIn`) against the Spark read of the same cut
+  *    (`prunedReadIn` + id semi-join + collect), and the k-NN graph walk's
+  *    scoring of ~2,000 candidate pairs both ways (driver:
+  *    `KnnGraph.localCosine`; Spark: `KnnGraph.cosine` + collect), as the
+  *    cut's parquet bytes grow. Each table instance is fresh per timing,
+  *    so the driver side pays its footer reads and reader build every
+  *    time.
+  *  - `consolidate`: times `KnnGraph.consolidateWithin` on the driver
+  *    against the Spark dataflow (a zero byte budget) over a k-NN graph
+  *    index of `n` vectors (vectors, 6 edges a vertex, 32 entries) with
+  *    1% of its ids tombstoned, each timing on a fresh copy of the index.
+  * Prints CSV: the median of `reps` timings after the warm-ups. Run with
+  * `tools/crossover/run.sh`. */
 object DriverBudgetCrossover {
   def main(args: Array[String]): Unit = {
     // cores, scratch root, table sizes in rows (~512 B of parquet each),
-    // files per table, timed repetitions
+    // files per table, timed repetitions, case
     val cores = args(0).toInt
     val root = args(1)
     val sizes = args(2).split(",").map(_.toInt)
@@ -27,20 +34,96 @@ object DriverBudgetCrossover {
     val reps = args(4).toInt
     val spark = GraftSession.create(s"local[$cores]", cores.toString)
     spark.sparkContext.setLogLevel("ERROR")
+    if (args.lift(5).contains("consolidate")) consolidate(spark, root, sizes, files, reps)
+    else read(spark, root, sizes, files, reps)
+    spark.stop()
+  }
+
+  private val dim = 64
+
+  /** `n` vectors of `dim` deterministic doubles with their norms. */
+  private def vectors(spark: SparkSession, n: Int): DataFrame =
+    spark.range(n).select(col("id").as("vec_id"),
+      transform(sequence(lit(1), lit(dim)), (i: org.apache.spark.sql.Column) =>
+        sin(col("id") * 7919 + i * 104729)).as("e"))
+      .withColumn("nrm", sqrt(aggregate(col("e"), lit(0.0), (a, x) => a + x * x)))
+
+  /** The median of `reps` timings of `f` in ms, after `warm` untimed runs. */
+  private def time(reps: Int, warm: Int)(f: () => Any): Double = {
+    (0 until warm).foreach(_ => f())
+    val ts = (0 until reps).map { _ =>
+      val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e6 }
+    ts.sorted.apply(reps / 2)
+  }
+
+  private def consolidate(spark: SparkSession, root: String, sizes: Seq[Int], files: Int,
+                          reps: Int): Unit = {
     import spark.implicits._
     val huge = CommitTable.Budget(bytes = Long.MaxValue, rows = Long.MaxValue)
-    val dim = 64
+    val dataflow = CommitTable.Budget(bytes = 0L, rows = CommitTable.DriverBudget.rows)
+    println("vectors,files,index_mib,vectors_mib,graph_mib,driver_ms,dataflow_ms")
+    for (n <- sizes) {
+      val tpl = s"$root/knng$n-$files"
+      new CommitTable(spark, s"$tpl/vectors", "vec_id")
+        .overwrite(vectors(spark, n).repartitionByRange(files, col("vec_id")))
+      // 6 pseudo-random out-edges a vertex, scored like the build's
+      new CommitTable(spark, s"$tpl/graph", "src").overwrite(spark.range(n)
+        .select(col("id").as("src"), explode(sequence(lit(1), lit(6))).as("j"))
+        .select(col("src"), ((col("src") * 31 + col("j") * 7919) % n).as("dst"))
+        .filter(col("src") =!= col("dst"))
+        .withColumn("cos", sin(col("src") * 13 + col("dst")))
+        .repartitionByRange(files, col("src"), col("dst")))
+      new CommitTable(spark, s"$tpl/entries", "eid")
+        .overwrite((0L until 32L).map(i => i * n / 32).toDF("eid").coalesce(1))
+      graft.operators.IndexManifest.commit(spark, tpl, Seq("vectors", "graph", "entries"))
+      def mib(t: String) = new CommitTable(spark, s"$tpl/$t", "x").read().inputFiles
+        .map(f => new java.io.File(new java.net.URI(f)).length).sum / 1048576.0
+      val (vMib, gMib) = (mib("vectors"), mib("graph"))
+      val dead = (0L until n.toLong by 100L).map(_ + 37L).filter(_ < n).toDF("vec_id")
+      var copies = 0
+      // the median of `reps` consolidations under `budget`, after one
+      // warm-up, each on a fresh copy with its delete list committed
+      def timed(budget: CommitTable.Budget): Double = {
+        def once(): Double = {
+          copies += 1
+          val at = s"$root/run$copies"
+          copyTree(java.nio.file.Path.of(tpl), java.nio.file.Path.of(at))
+          graft.llm.KnnGraph.deleteFromKnnGraphIndex(dead, at)
+          val t0 = System.nanoTime()
+          graft.llm.KnnGraph.consolidateWithin(spark, at, 6, budget)
+          val ms = (System.nanoTime() - t0) / 1e6
+          graft.TempDirs.deleteRecursively(java.nio.file.Path.of(at))
+          ms
+        }
+        once()
+        (0 until reps).map(_ => once()).sorted.apply(reps / 2)
+      }
+      val (onDriver, viaSpark) = (timed(huge), timed(dataflow))
+      println(f"$n,$files,${vMib + gMib}%.2f,$vMib%.2f,$gMib%.2f,$onDriver%.1f,$viaSpark%.1f")
+      graft.TempDirs.deleteRecursively(java.nio.file.Path.of(tpl))
+    }
+  }
+
+  private def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
+    val walk = java.nio.file.Files.walk(from)
+    try walk.iterator().asScala.foreach { p =>
+      val t = to.resolve(from.relativize(p).toString)
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
+      else java.nio.file.Files.copy(p, t)
+    } finally walk.close()
+  }
+
+  private def read(spark: SparkSession, root: String, sizes: Seq[Int], files: Int,
+                   reps: Int): Unit = {
+    import spark.implicits._
+    val huge = CommitTable.Budget(bytes = Long.MaxValue, rows = Long.MaxValue)
     val rng = new scala.util.Random(7)
     val qs = (0 until 20).map(i => (-1L - i, Array.fill(dim)(rng.nextGaussian())))
     println("rows,files,mib,read_driver_ms,read_spark_ms,score_driver_ms,score_spark_ms")
     for (n <- sizes) {
       val path = s"$root/t$n-$files"
       val t = new CommitTable(spark, path, "vec_id")
-      val base = spark.range(n).select(col("id").as("vec_id"),
-        transform(sequence(lit(1), lit(dim)), (i: org.apache.spark.sql.Column) =>
-          sin(col("id") * 7919 + i * 104729)).as("e"))
-        .withColumn("nrm", sqrt(aggregate(col("e"), lit(0.0), (a, x) => a + x * x)))
-      t.overwrite(base.repartitionByRange(files, col("vec_id")))
+      t.overwrite(vectors(spark, n).repartitionByRange(files, col("vec_id")))
       val mib = t.read().inputFiles.map(f => new java.io.File(new java.net.URI(f)).length).sum / 1048576.0
       // the walk's shape: ~2000 candidate ids spread over every file, paired with 20 queries
       val ids = (0L until n.toLong by math.max(1L, n / 2000L)).take(2000)
@@ -74,16 +157,9 @@ object DriverBudgetCrossover {
             .select("vec_id", "e", "nrm"), "vec_id")
           .join(broadcast(qFrame), "query_id")).collect().length
       }
-      def time(f: () => Int): Double = {
-        f(); f()
-        val ts = (0 until reps).map { _ =>
-          val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e6 }
-        ts.sorted.apply(reps / 2)
-      }
-      val r = Seq(readDriver _, readSpark _, scoreDriver _, scoreSpark _).map(f => time(f))
+      val r = Seq(readDriver _, readSpark _, scoreDriver _, scoreSpark _).map(f => time(reps, 2)(f))
       println(f"$n,$files,$mib%.2f,${r(0)}%.1f,${r(1)}%.1f,${r(2)}%.1f,${r(3)}%.1f")
       graft.TempDirs.deleteRecursively(java.nio.file.Path.of(path))
     }
-    spark.stop()
   }
 }

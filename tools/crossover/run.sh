@@ -1,16 +1,18 @@
 #!/bin/bash
-# Measures the driver-read / Spark-read crossover behind
-# CommitTable.DriverBudget.bytes (see DriverBudgetCrossover.scala).
+# Measures the driver / Spark crossovers behind CommitTable.DriverBudget
+# (see DriverBudgetCrossover.scala): the point read and scoring (case
+# `read`) or the k-NN graph consolidation (case `consolidate`).
 #
-#   tools/crossover/run.sh [cores] [files] [sizes] [reps]
+#   tools/crossover/run.sh [cores] [files] [sizes] [reps] [case]
 #
 # from the repository root; defaults: 4 cores, 4 files per table, tables
-# of 8k..128k rows (4..64 MiB), 7 repetitions. Builds the engine with
+# of 8k..128k rows (4..64 MiB; for `consolidate`, vectors of an index
+# with 6 edges each), 7 repetitions, case `read`. Builds the engine with
 # perfbench/build.py, compiles this tool beside it into
 # .bench_build/crossover, and writes its tables under a fresh temporary
 # directory that it removes on exit.
 set -euo pipefail
-cores=${1:-4}; files=${2:-4}; sizes=${3:-8000,16000,32000,64000,128000}; reps=${4:-7}
+cores=${1:-4}; files=${2:-4}; sizes=${3:-8000,16000,32000,64000,128000}; reps=${4:-7}; case=${5:-read}
 root=$(cd "$(dirname "$0")/../.." && pwd)
 python3 "$root/perfbench/build.py"
 cp=$(cd "$root" && python3 -c "import sys; sys.path.insert(0, 'perfbench'); import build; print(build.classpath())")
@@ -28,5 +30,5 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
   opens+=(--add-opens "java.base/$p=ALL-UNNAMED")
 done
 java -Xss8m -Xmx3g -Djava.io.tmpdir="$work" -Dspark.ui.enabled=false -Dspark.local.dir="$work" \
-  "${opens[@]}" -cp "$out:$cp" graft.DriverBudgetCrossover "$cores" "$work/tables" "$sizes" "$files" "$reps" \
+  "${opens[@]}" -cp "$out:$cp" graft.DriverBudgetCrossover "$cores" "$work/tables" "$sizes" "$files" "$reps" "$case" \
   2>"$work/jvm.log"
