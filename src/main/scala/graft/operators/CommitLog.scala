@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** A minimal commit-log table layer — the Delta/Iceberg shape the engine's
@@ -218,14 +219,23 @@ class CommitTable(spark: SparkSession, val path: String, statsCol: String,
   def asOf(version: Long): DataFrame = readAt(version, addsOf(version).map(_._1))
 
   /** The physical scan of `files` with stamp `dvv`'s deleted rows
-    * anti-joined out. mergeSchema: a file list may span commits with
-    * EVOLVED schemas (an append that added a column — the Delta
-    * schema-evolution-on-append shape). The merged read surfaces the
-    * union schema with NULLs where a file predates a column; without it
-    * Spark plans from one sampled footer and silently DROPS columns the
-    * sample lacks. Cost is one footer read per file — log-sized. */
-  private def scan(files: Seq[String], dvv: Option[Long]): DataFrame =
-    applyDv(spark.read.option("mergeSchema", "true").parquet(files: _*), dvv)
+    * anti-joined out. A file list may span commits with EVOLVED schemas
+    * (an append that added a column — the Delta schema-evolution-on-append
+    * shape); without a merged schema Spark plans from one sampled footer
+    * and silently DROPS columns the sample lacks. So the read is planned
+    * from the files' own footers, read on the driver ([[footerSchema]],
+    * cached): when they agree and the list is no longer than Spark's
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold`, the scan
+    * takes that schema as given — no schema job. Otherwise (an evolved
+    * list, or one long enough that Spark lists it with a job anyway) the
+    * `mergeSchema` read surfaces the union schema with NULLs where a file
+    * predates a column, at one job of footer reads. */
+  private def scan(files: Seq[String], dvv: Option[Long]): DataFrame = {
+    val threshold = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
+    val planned = if (files.length > threshold.toInt) None else footerSchema(files)
+    applyDv(planned.fold(spark.read.option("mergeSchema", "true"))(spark.read.schema)
+      .parquet(files: _*), dvv)
+  }
 
   /** The logical read of `files` (a subset of `version`'s active list):
     * the physical scan through `version`'s deletion vector, the optional
@@ -420,15 +430,21 @@ class CommitTable(spark: SparkSession, val path: String, statsCol: String,
     }
 
   /** Spark's per-file parquet read function by schema, and each data
-    * file's footer schema, kept per table instance (a walk's instances live
-    * one search, and data files are immutable): building a read function
-    * serializes the session's Hadoop configuration into a broadcast, and
-    * a walk re-reads the same files every hop — both cost more than
-    * decoding a small file. */
-  private val parquetReaders = new java.util.concurrent.ConcurrentHashMap[StructType,
+    * file's footer schema, kept per table instance (data files are
+    * immutable): building a read function serializes the session's Hadoop
+    * configuration into a broadcast, and a walk re-reads the same files
+    * every hop — both cost more than decoding a small file. Every commit
+    * adds files that later reads resolve, so a long-lived instance (a
+    * stream sink's) keeps only the most recently used entries
+    * ([[CommitTable.FooterCacheEntries]], [[CommitTable.ReaderCacheEntries]]);
+    * a read of more files than that re-reads their footers. */
+  private val parquetReaders = new CommitTable.Lru[StructType,
     org.apache.spark.sql.execution.datasources.PartitionedFile =>
-      Iterator[org.apache.spark.sql.catalyst.InternalRow]]()
-  private val footerSchemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+      Iterator[org.apache.spark.sql.catalyst.InternalRow]](CommitTable.ReaderCacheEntries)
+  private val footerSchemas = new CommitTable.Lru[String, StructType](CommitTable.FooterCacheEntries)
+
+  /** Entries held by the footer-schema and read-function caches. */
+  private[graft] def cachedFooterEntries: (Int, Int) = (footerSchemas.size, parquetReaders.size)
 
   /** The one schema of `files`' footers, nullability aside (a file read
     * surfaces every column nullable); None when they differ — the
@@ -439,9 +455,9 @@ class CommitTable(spark: SparkSession, val path: String, statsCol: String,
     val conf = spark.sparkContext.hadoopConfiguration
     val converter = new ParquetToSparkSchemaConverter(new ParquetFileFormat().getSqlConf(spark))
     Some(files.map { f =>
-      footerSchemas.computeIfAbsent(f, _ => {
+      footerSchemas.getOrElseUpdate(f, {
         val p = new Path(f)
-        org.apache.spark.sql.graftbridge.Bridge.asNullable(ParquetFileFormat.readSchemaFromFooter(
+        Bridge.asNullable(ParquetFileFormat.readSchemaFromFooter(
           new org.apache.parquet.hadoop.Footer(p,
             org.apache.parquet.hadoop.ParquetFileReader.readFooter(conf, p)), converter))
       })
@@ -456,8 +472,8 @@ class CommitTable(spark: SparkSession, val path: String, statsCol: String,
     import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     val fmt = new ParquetFileFormat()
-    val read = parquetReaders.computeIfAbsent(schema, s =>
-      fmt.buildReaderWithPartitionValues(spark, s, new StructType(), s, Nil,
+    val read = parquetReaders.getOrElseUpdate(schema,
+      fmt.buildReaderWithPartitionValues(spark, schema, new StructType(), schema, Nil,
         Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), fmt.getHadoopConf(spark)))
     files.flatMap { case (f, len) =>
       read(PartitionedFile(org.apache.spark.sql.catalyst.InternalRow.empty,
@@ -1454,7 +1470,7 @@ class CommitTable(spark: SparkSession, val path: String, statsCol: String,
   }
 
   private def emptyLike(): DataFrame = schemaFile() match {
-    case Some(f) => spark.read.parquet(f).limit(0)
+    case Some(f) => scan(Seq(f), None).limit(0)
     case None => throw new IllegalStateException(s"empty table $path has no readable schema")
   }
 
@@ -1850,21 +1866,116 @@ class CommitTable(spark: SparkSession, val path: String, statsCol: String,
     * [[MergeInto.merge]]'s (key-unique change-set, non-null keys; the
     * optional BOOLEAN `deleteCol` marks deletions).
     *
-    * Scale note: the snapshot-complete log means this writes the full
-    * merged table (the simple shape); the partition-pruned rewrite is
-    * [[MergeInto.mergeCow]]'s job — a log-backed CoW would add only the
-    * UNTOUCHED files' add-entries to the new commit instead of rewriting
-    * them.
+    * Scale note: the merge rewrites the whole table as one new version.
+    * Below [[CommitTable.DriverCommitBudget]] that costs no Spark job of
+    * its own ([[driverMerge]]): the head is decoded on the driver, the source is
+    * collected, the full-outer key match and [[MergeInto.merge]]'s own
+    * projection run on the driver, and the result is written there as one
+    * file in `statsCol` order. Past the budget — or for a key type whose
+    * Spark equality is not plain value equality — it is MergeInto's
+    * full-outer shuffle join over the head, and the rewrite is
+    * table-sized; a log-backed copy-on-write that rewrites only the files
+    * the source touches is still open.
     */
   def merge(source: DataFrame, keys: Seq[String],
-            deleteCol: Option[String] = None): Long = {
+            deleteCol: Option[String] = None): Long =
+    mergeWithin(source, keys, deleteCol, CommitTable.DriverCommitBudget)
+
+  /** [[merge]] under `budget`; a zero byte budget forces the dataflow. */
+  private[graft] def mergeWithin(source: DataFrame, keys: Seq[String], deleteCol: Option[String],
+                                 budget: CommitTable.Budget): Long = {
     // capture the base the merge is computed AGAINST: read-modify-write is
     // only optimistic-safe if the commit is rejected when the head moved in
     // between — otherwise this rename lands cleanly at newHead+1 and the
     // interleaved writer's changes are silently overwritten (lost update)
     val base = head()
-    commitVersion(MergeInto.merge(asOf(base), source, keys, deleteCol),
-      keepPrevious = false, op = "merge", expectedBase = Some(base))
+    val merged = driverMerge(base, source, keys, deleteCol, budget)
+      .getOrElse(MergeInto.merge(asOf(base), source, keys, deleteCol))
+    commitVersion(merged, keepPrevious = false, op = "merge", expectedBase = Some(base),
+      budget = budget)
+  }
+
+  /** [[MergeInto.merge]] of `source` into version `base`, computed on the
+    * driver as a LocalRelation coalesced to one partition, its rows in
+    * `statsCol` order. The target is decoded by [[localRead]] and the
+    * source collected within `budget.rows`; each target row pairs with
+    * every source row of an equal non-null key, and a row of either side
+    * that pairs with none stands alone, as in the full-outer join; the
+    * join's row filter and projection are MergeInto's own Columns
+    * ([[MergeInto.mergeColumns]]) through [[Bridge.localProjection]]. None
+    * — the caller takes the dataflow — when `localRead` declines, the
+    * source or the joined rows pass `budget.rows`, a key pair's types
+    * make Spark's equality anything but plain value equality (only
+    * integral, string, boolean, date and timestamp keys match here), or
+    * collecting or evaluating fails, so the dataflow raises any error. */
+  private def driverMerge(base: Long, source: DataFrame, keys: Seq[String],
+                          deleteCol: Option[String], budget: CommitTable.Budget): Option[DataFrame] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, InterpretedOrdering, JoinedRow}
+    import org.apache.spark.sql.types._
+    localRead(Some(base), budget).flatMap { target =>
+      val (tCols, sSchema) = (target.schema.fieldNames.toSeq, source.schema)
+      val (keep, out) = MergeInto.mergeColumns(tCols, sSchema.fieldNames.toSeq, keys, deleteCol)(
+        c => col(s"__t${tCols.indexOf(c)}"), c => col(s"__s${sSchema.fieldNames.indexOf(c)}"))
+      // a key column's value under Spark's equality of the two sides'
+      // types: integral pairs compare as longs, other types only with
+      // themselves (a string only under the binary collation)
+      def value(dt: DataType): Option[(InternalRow, Int) => Any] = dt match {
+        case ByteType => Some((r, i) => r.getByte(i).toLong)
+        case ShortType => Some((r, i) => r.getShort(i).toLong)
+        case IntegerType | DateType => Some((r, i) => r.getInt(i).toLong)
+        case LongType | TimestampType | TimestampNTZType => Some((r, i) => r.getLong(i))
+        case BooleanType => Some((r, i) => r.getBoolean(i))
+        case st: StringType if st == StringType => Some((r, i) => r.getUTF8String(i))
+        case _ => None
+      }
+      def integral(dt: DataType) = Seq(ByteType, ShortType, IntegerType, LongType).contains(dt)
+      val plain = keys.forall(k => tCols.contains(k) && sSchema.fieldNames.contains(k) && {
+        val (tt, st) = (target.schema(k).dataType, sSchema(k).dataType)
+        value(tt).isDefined && (tt == st || integral(tt) && integral(st))
+      })
+      if (!plain) None
+      else try {
+        def keyOf(schema: StructType): InternalRow => Option[List[Any]] = {
+          val parts = keys.map { k =>
+            val i = schema.fieldIndex(k)
+            (i, value(schema(k).dataType).get)
+          }
+          r => if (parts.exists { case (i, _) => r.isNullAt(i) }) None
+               else Some(parts.map { case (i, v) => v(r, i) }.toList)
+        }
+        val src = CommitTable.collectWithin(source, "merge source", budget).rows
+        val sKeys = src.map(keyOf(sSchema))
+        val bySrcKey = src.zip(sKeys).collect { case (r, Some(k)) => k -> r }.groupBy(_._1)
+          .map { case (k, rs) => k -> rs.map(_._2) }
+        val tKeys = target.rows.map(keyOf(target.schema))
+        val matched = tKeys.flatten.toSet.filter(bySrcKey.contains)
+        val lone = src.zip(sKeys).collect { case (r, k) if k.forall(!matched(_)) => r }
+        val joinedCount = tKeys.map(_.flatMap(bySrcKey.get).fold(1L)(_.size.toLong)).sum + lone.size
+        if (joinedCount > budget.rows) None
+        else {
+          val (noT, noS) = (new GenericInternalRow(tCols.length), new GenericInternalRow(sSchema.length))
+          val joined: Seq[InternalRow] = target.rows.zip(tKeys).flatMap { case (t, k) =>
+            k.flatMap(bySrcKey.get).getOrElse(Seq(noS)).map(new JoinedRow(t, _))
+          } ++ lone.map(new JoinedRow(noT, _))
+          // both sides nullable, as the full-outer join surfaces them
+          val schema = StructType(
+            target.schema.fields.zipWithIndex.map { case (f, i) => StructField(s"__t$i", f.dataType) } ++
+              sSchema.fields.zipWithIndex.map { case (f, i) => StructField(s"__s$i", f.dataType) })
+          val kept = joined.zip(Bridge.localProjection(spark, schema, Seq(keep))._2(joined))
+            .collect { case (r, k) if !k.isNullAt(0) && k.getBoolean(0) => r }
+          val (outSchema, project) = Bridge.localProjection(spark, schema, out)
+          val rows = project(kept)
+          val sorted = Some(outSchema.fieldNames.indexOf(statsCol)).filter(_ >= 0).fold(rows) { i =>
+            rows.sorted(InterpretedOrdering.forSchema(Seq(outSchema(i).dataType))
+              .on[InternalRow](r => InternalRow(r.get(i, outSchema(i).dataType))))
+          }
+          Some(Bridge.localFrame(spark, outSchema, sorted).coalesce(1))
+        }
+      } catch {
+        case scala.util.control.NonFatal(_) => None
+      }
+    }
   }
 
   /** `DELETE WHERE statsCol BETWEEN lo AND hi` as a FILE-GRANULAR
@@ -1956,6 +2067,10 @@ class CommitTable(spark: SparkSession, val path: String, statsCol: String,
                 mergeSchema: Boolean = false): Long =
     commitVersion(df, keepPrevious = false, op = "overwrite", tsMillis = tsMillis,
       mergeSchema = mergeSchema)
+
+  /** [[overwrite]] under `budget`; a zero byte budget forces Spark's write. */
+  private[graft] def overwriteWithin(df: DataFrame, budget: CommitTable.Budget): Long =
+    commitVersion(df, keepPrevious = false, op = "overwrite", budget = budget)
 
   // ----- schema-on-write + declared invariants (f26) ----------------------
   //
@@ -2437,7 +2552,8 @@ class CommitTable(spark: SparkSession, val path: String, statsCol: String,
                             txn: Option[(String, Long)] = None,
                             mergeSchema: Boolean = false,
                             dvOverride: Option[Option[Long]] = None,
-                            nrDelta: Long = 0L): Long = {
+                            nrDelta: Long = 0L,
+                            budget: CommitTable.Budget = CommitTable.DriverCommitBudget): Long = {
     // resolve the head ONCE: the carried file list derives from version-1 of
     // the version this writer attempts, so base snapshot and attempt are
     // always consistent — a commit landing in between makes the publish
@@ -2493,17 +2609,20 @@ class CommitTable(spark: SparkSession, val path: String, statsCol: String,
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val rel = s"d$version-$nonce"
     val dataDir = new Path(path, rel)
-    dfPhys.write.mode(SaveMode.ErrorIfExists).parquet(dataDir.toString)
     try {
+      // a frame that is a LocalRelation within the budget is written on
+      // the driver, into the files Spark's write would make
+      if (!Bridge.writeLocalParquet(dfPhys, dataDir.toString, budget.rows, budget.bytes))
+        dfPhys.write.mode(SaveMode.ErrorIfExists).parquet(dataDir.toString)
+      // the staged files, read as any file list is ([[scan]])
+      def stagedRead() = applyCmap(scan(fs.listStatus(dataDir).map(_.getPath)
+        .filter(_.getName.endsWith(".parquet")).map(_.toString).sorted.toSeq, None), cmapCarry)
       // declared row invariants run against the batch AS WRITTEN, inside
       // the same write-audit-publish gate as opt-in audits: a violation
       // aborts via the shared cleanup path, head and history untouched
       prevInv.foreach { ivd =>
         rowRulesOf(ivd).foreach { rules =>
-          val staged = alignToDeclared(
-            applyCmap(spark.read.option("mergeSchema", "true").parquet(dataDir.toString),
-              cmapCarry),
-            StructType.fromDDL(ivd.schemaDdl))
+          val staged = alignToDeclared(stagedRead(), StructType.fromDDL(ivd.schemaDdl))
           // a zero-row staged batch (a DML rewrite that filtered every
           // row out) has NULL counters — no rows, no violations
           val report = Validation.rowChecks(staged, rules).collect()
@@ -2514,7 +2633,7 @@ class CommitTable(spark: SparkSession, val path: String, statsCol: String,
       // WAP audit gate: run the rules against the STAGED files before any
       // log entry exists; a violation aborts via the shared cleanup path
       audit.foreach { a =>
-        val report = a(applyCmap(spark.read.parquet(dataDir.toString), cmapCarry))
+        val report = a(stagedRead())
         if (report.exists(_._2 > 0)) throw new AuditFailedException(report)
       }
       // per-file stats for the log: read from the staged files' parquet
@@ -2800,6 +2919,38 @@ object CommitTable {
     * Spark side, and bounds the decoded heap of one read. `rows` caps a
     * driver batch of small tuples at tens of MB of heap. */
   private[graft] val DriverBudget: Budget = Budget(bytes = 32L << 20, rows = 1L << 20)
+
+  /** The budget of the commit path's driver bodies: [[CommitTable.merge]]
+    * on the driver (`bytes` of the head's parquet) and the driver write of
+    * a LocalRelation (`bytes` of Spark's size estimate of it). Both decode,
+    * project or encode on one thread where Spark's side uses every core:
+    * on 4 cores the driver merge of a 64-d vectors table won by 40% at
+    * 4 MiB and 20% at 8 MiB and lost from 12 MiB on, and the driver write
+    * won at 8 MiB and tied at 16 MiB (SCALING.md). */
+  private[graft] val DriverCommitBudget: Budget = DriverBudget.copy(bytes = 8L << 20)
+
+  /** Footer schemas one table instance keeps: Spark's default
+    * `parallelPartitionDiscovery.threshold`, the longest list a
+    * footer-planned scan covers. */
+  private[graft] val FooterCacheEntries = 32
+
+  /** Parquet read functions one table instance keeps, one per schema. */
+  private[graft] val ReaderCacheEntries = 4
+
+  /** A map of at most `max` entries that drops the least recently used
+    * one; `getOrElseUpdate` computes a missing value outside the lock. */
+  private[operators] final class Lru[K, V <: AnyRef](max: Int) {
+    private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = this.size() > max
+    }
+    def getOrElseUpdate(k: K, v: => V): V =
+      Option(m.synchronized(m.get(k))).getOrElse {
+        val got = v
+        m.synchronized(m.put(k, got))
+        got
+      }
+    def size: Int = m.synchronized(m.size())
+  }
 
   /** Rows read on the driver ([[CommitTable.localReadIn]]), in Catalyst's
     * internal form, with their schema. */

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** MERGE INTO (SCD-1 upsert) as a relational operator.
@@ -22,10 +22,10 @@ import org.apache.spark.sql.functions._
   *
   * Spark-first shape: ONE full-outer shuffle join on the merge keys — no
   * driver loop, no per-row lookups. At 100 TB this is the copy-on-write
-  * merge every table format (Delta/Iceberg/Hudi) bottoms out in: the
-  * change-set is typically ≪ the target, so AQE broadcasts the source side
-  * and the target is never shuffled at all; with both sides bucketed on the
-  * key ([[Partitioning.writeBucketed]]) the join is exchange-free. Combine
+  * merge every table format (Delta/Iceberg/Hudi) bottoms out in. Spark
+  * cannot broadcast either side of a full outer join, so both sides
+  * shuffle; with both bucketed on the key ([[Partitioning.writeBucketed]])
+  * the join is exchange-free. Combine
   * with partition pruning (only rewrite partitions the source touches) to
   * keep the rewrite proportional to the change-set, not the table.
   *
@@ -41,27 +41,31 @@ object MergeInto {
     */
   def merge(target: DataFrame, source: DataFrame, keys: Seq[String],
             deleteCol: Option[String] = None): DataFrame = {
-    require(keys.nonEmpty, "merge needs at least one key column")
-    val dataCols = target.columns.filterNot(keys.contains)
-    val expectedSrc = (target.columns ++ deleteCol).sorted
-    require(source.columns.sorted.sameElements(expectedSrc),
-      s"source columns ${source.columns.sorted.mkString(",")} must be target's " +
-        s"plus the delete flag: ${expectedSrc.mkString(",")}")
-
-    val t = target.as("t")
-    val s = source.as("s")
+    val (keep, out) = mergeColumns(target.columns.toSeq, source.columns.toSeq, keys, deleteCol)(
+      c => col(s"t.$c"), c => col(s"s.$c"))
     val cond = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
+    target.as("t").join(source.as("s"), cond, "full_outer").filter(keep).select(out: _*)
+  }
+
+  /** The merge's row filter and output Columns over one full-outer-joined
+    * row, whose target and source columns `t(c)` and `s(c)` name: the one
+    * list [[merge]]'s join and [[CommitTable.merge]]'s driver body both
+    * evaluate. Checks the column contract. */
+  private[operators] def mergeColumns(targetCols: Seq[String], sourceCols: Seq[String],
+                                      keys: Seq[String], deleteCol: Option[String])(
+                                      t: String => Column, s: String => Column): (Column, Seq[Column]) = {
+    require(keys.nonEmpty, "merge needs at least one key column")
+    val dataCols = targetCols.filterNot(keys.contains)
+    val expectedSrc = (targetCols ++ deleteCol).sorted
+    require(sourceCols.sorted.sameElements(expectedSrc),
+      s"source columns ${sourceCols.sorted.mkString(",")} must be target's " +
+        s"plus the delete flag: ${expectedSrc.mkString(",")}")
     // keys are non-null by contract, so "the source side matched/exists"
     // is exactly "its key columns are non-null on this joined row"
-    val hasSrc = keys.map(k => col(s"s.$k").isNotNull).reduce(_ && _)
-    val keep = deleteCol
-      .map(d => !(hasSrc && coalesce(col(s"s.$d"), lit(false))))
-      .getOrElse(lit(true))
-    t.join(s, cond, "full_outer")
-      .filter(keep)
-      .select(
-        keys.map(k => coalesce(col(s"s.$k"), col(s"t.$k")).as(k)) ++
-          dataCols.map(c => when(hasSrc, col(s"s.$c")).otherwise(col(s"t.$c")).as(c)): _*)
+    val hasSrc = keys.map(k => s(k).isNotNull).reduce(_ && _)
+    val keep = deleteCol.map(d => !(hasSrc && coalesce(s(d), lit(false)))).getOrElse(lit(true))
+    (keep, keys.map(k => coalesce(s(k), t(k)).as(k)) ++
+      dataCols.map(c => when(hasSrc, s(c)).otherwise(t(c)).as(c)))
   }
 
   /** Copy-on-write MERGE into a hive-partitioned parquet table

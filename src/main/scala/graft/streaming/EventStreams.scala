@@ -492,10 +492,14 @@ object EventStreams {
     *
     * Scale shape: the batch delta is micro-batch-sized; the combine join
     * touches only keys ACTIVE in the batch (left join from the delta);
-    * the merge is MergeInto's one full-outer join, where AQE broadcasts
-    * the change-set side — per-batch cost tracks batch size, not table
-    * size (plus the rewrite, which [[graft.operators.MergeInto.mergeCow]]
-    * bounds to touched partitions on a partitioned target).
+    * the merge is MergeInto's one full-outer join, which Spark cannot
+    * broadcast, so every batch shuffles the whole target beside the
+    * change set and rewrites it — per-batch cost tracks the table
+    * ([[graft.operators.MergeInto.mergeCow]] bounds the rewrite to
+    * touched partitions on a partitioned target). A totals table kept in
+    * a [[graft.operators.CommitTable]] merges through its `merge`, which
+    * below `CommitTable.DriverCommitBudget` runs the same join and
+    * projection on the driver with no Spark job of its own.
     */
   def upsertTotalsBatch(target: DataFrame, batch: DataFrame): DataFrame = {
     val delta = normalized(batch).groupBy("user_id")

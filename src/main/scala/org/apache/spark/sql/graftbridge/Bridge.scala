@@ -45,6 +45,68 @@ object Bridge {
       case other => throw new IllegalStateException(s"not a projection: $other")
     }
 
+  /** Spark's parquet write of `df` into the new directory `dir`, run on the
+    * driver, when `df`'s optimized plan is a LocalRelation — bare, or
+    * coalesced to one partition — of at most `maxRows` rows and `maxBytes`
+    * of estimated size; false, with nothing written, otherwise. The files
+    * are the ones Spark's write makes: a bare relation's rows split as its
+    * scan slices them (`min(rows, leaf parallelism)` parts), each part
+    * split again past `spark.sql.files.maxRecordsPerFile`, and an empty
+    * relation writes one empty file. Each file goes through the writer
+    * `ParquetFileFormat.prepareWrite` makes for the job — the function a
+    * write task runs — under Spark's file names, then `_SUCCESS`. */
+  def writeLocalParquet(df: DataFrame, dir: String, maxRows: Long, maxBytes: Long): Boolean = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+    import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val qe = df.queryExecution
+    if (!qe.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) return false
+    val plan = qe.optimizedPlan
+    val parts: Option[(LocalRelation, Seq[Seq[InternalRow]])] = plan match {
+      case r: LocalRelation if !r.isStreaming =>
+        val n = r.data.length
+        val slices = math.max(1, math.min(n, session.leafNodeDefaultParallelism))
+        // ParallelCollectionRDD's slice bounds
+        Some((r, (0 until slices).map(i =>
+          r.data.slice((i.toLong * n / slices).toInt, ((i + 1).toLong * n / slices).toInt))))
+      case Repartition(1, false, r: LocalRelation) if !r.isStreaming => Some((r, Seq(r.data)))
+      case _ => None
+    }
+    parts match {
+      case Some((r, slices)) if r.data.length <= maxRows && plan.stats.sizeInBytes <= maxBytes =>
+        val perFile = session.sessionState.conf.maxRecordsPerFile
+        val schema = DataTypeUtils.fromAttributes(r.output)
+        val job = Job.getInstance(session.sessionState.newHadoopConf())
+        job.setOutputKeyClass(classOf[Void])
+        job.setOutputValueClass(classOf[InternalRow])
+        val out = new Path(dir)
+        FileOutputFormat.setOutputPath(job, out)
+        val factory = new ParquetFileFormat().prepareWrite(session, job, Map.empty, schema)
+        val conf = job.getConfiguration
+        val fs = out.getFileSystem(conf)
+        if (!fs.mkdirs(out) || fs.listStatus(out).nonEmpty)
+          throw new java.io.IOException(s"path $dir already exists")
+        val jobId = java.util.UUID.randomUUID().toString
+        slices.zipWithIndex.foreach { case (rows, split) =>
+          val ctx = new TaskAttemptContextImpl(conf,
+            new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, split), 0))
+          val files = if (perFile > 0 && rows.nonEmpty) rows.grouped(perFile.toInt).toSeq else Seq(rows)
+          files.zipWithIndex.foreach { case (chunk, c) =>
+            val w = factory.newInstance(new Path(out,
+              f"part-$split%05d-$jobId-c$c%03d${factory.getFileExtension(ctx)}").toString, schema, ctx)
+            try chunk.foreach(w.write) finally w.close()
+          }
+        }
+        fs.create(new Path(out, "_SUCCESS")).close()
+        true
+      case _ => false
+    }
+  }
+
   /** Materialize the driver's StateStoreCoordinator RPC endpoint (a
     * `private[sql]` lazy member that normally only a streaming query start
     * touches). BATCH `transformWithState` tasks still resolve it, so a

@@ -337,6 +337,164 @@ object CommitLogProps extends Properties("CommitLog") {
         }
       }
     }
+
+  /** Spark jobs `body` starts. */
+  private def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graftbridge.ListenerBridge.waitUntilListenerBusEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.graftbridge.ListenerBridge.waitUntilListenerBusEmpty(sc)
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A frame's schema and its rows, rendered and sorted. */
+  private def surface(df: org.apache.spark.sql.DataFrame) =
+    (df.schema, df.collect().map(_.toString).sorted.toSeq)
+
+  private val dataflow = CommitTable.Budget(bytes = 0L, rows = CommitTable.DriverBudget.rows)
+
+  // MERGE histories outside the source contract on purpose: duplicate
+  // keys on both sides, null keys on both sides, and a delete flag that is
+  // true, false or null. Keys are BIGINT, INT merged into a BIGINT
+  // column, or STRING (whose table keeps its stats on the BIGINT `n`).
+  private val genMergeHistory = {
+    val row = for {
+      k <- Gen.frequency(6 -> Gen.choose(1L, 8L).map(Option(_)), 1 -> Gen.const(None))
+      n <- Gen.choose(-3L, 3L)
+      v <- Gen.oneOf("a", "b", "c")
+      d <- Gen.oneOf(Option(true), Option(false), None)
+    } yield (k, n, v, d)
+    for {
+      kind <- Gen.oneOf("long", "int", "string")
+      ansi <- Gen.oneOf(true, false)
+      withDelete <- Gen.oneOf(true, false)
+      init <- Gen.choose(1, 8).flatMap(Gen.listOfN(_, row))
+      ops <- Gen.choose(1, 4).flatMap(Gen.listOfN(_, Gen.choose(0, 6).flatMap(Gen.listOfN(_, row))))
+    } yield (kind, ansi, withDelete, init, ops)
+  }
+
+  property("the driver merge == the dataflow merge at every version over random histories") =
+    Prop.forAll(genMergeHistory) { case (kind, ansi, withDelete, init, ops) =>
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types._
+      val sp = spark
+      val keyType = kind match { case "long" => LongType; case "int" => IntegerType; case _ => StringType }
+      def key(k: Option[Long]): Any = k.map(x => kind match {
+        case "long" => x; case "int" => x.toInt; case _ => s"k$x" }).orNull
+      def frame(rows: Seq[(Option[Long], Long, String, Option[Boolean])], source: Boolean) = {
+        val del = source && withDelete
+        val fields = Seq(StructField("k", if (source) keyType else if (kind == "string") StringType else LongType),
+          StructField("n", LongType), StructField("v", StringType)) ++
+          (if (del) Seq(StructField("del", BooleanType)) else Nil)
+        val data = rows.map { case (k, n, v, d) =>
+          val tk = if (source) key(k) else key(k) match { case i: Int => i.toLong; case o => o }
+          Row.fromSeq(Seq(tk, n, v) ++ (if (del) Seq(d.orNull) else Nil))
+        }
+        sp.createDataFrame(java.util.Arrays.asList(data: _*), StructType(fields))
+      }
+      val statsCol = if (kind == "string") "n" else "k"
+      val deleteCol = if (withDelete) Some("del") else None
+      val before = sp.conf.get("spark.sql.ansi.enabled")
+      sp.conf.set("spark.sql.ansi.enabled", ansi.toString)
+      try {
+        val onDriver = new CommitTable(sp, Files.createTempDirectory("graft-prop-dmerge").toString, statsCol)
+        val onSpark = new CommitTable(sp, Files.createTempDirectory("graft-prop-smerge").toString, statsCol)
+        Seq(onDriver, onSpark).foreach(_.overwrite(frame(init, source = false)))
+        val driverJobs = ops.map { rows =>
+          onSpark.mergeWithin(frame(rows, source = true), Seq("k"), deleteCol, dataflow)
+          jobsDuring(onDriver.merge(frame(rows, source = true), Seq("k"), deleteCol))
+        }
+        driverJobs.forall(_ == 0) && onDriver.versions() == onSpark.versions() &&
+          onDriver.versions().forall(v => surface(onDriver.asOf(v)) == surface(onSpark.asOf(v)))
+      } finally sp.conf.set("spark.sql.ansi.enabled", before)
+    }
+
+  // The driver write of a LocalRelation (bare or coalesced to one
+  // partition, under a per-file record cap or none) makes the files
+  // Spark's write of the same frame makes: the same rows in each file, the
+  // same footer, and the same per-file stats in the log.
+  private val genWrite = for {
+    n <- Gen.choose(0, 30)
+    rows <- Gen.listOfN(n, for {
+      k <- Gen.choose(-50L, 50L)
+      i <- Gen.option(Gen.choose(-5, 5))
+      s <- Gen.option(Gen.oneOf("x", "yy", ""))
+      d <- Gen.oneOf(0.0, -0.0, 1.5, Double.NaN)
+      arr <- Gen.listOfN(2, Gen.choose(0L, 3L))
+    } yield (k, i, s, d, arr))
+    coalesced <- Gen.oneOf(true, false)
+    perFile <- Gen.oneOf(0, 0, 3, 7)
+  } yield (rows, coalesced, perFile)
+
+  property("the driver write of a LocalRelation == Spark's write of it, file by file") =
+    Prop.forAll(genWrite) { case (rows, coalesced, perFile) =>
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types._
+      val sp = spark
+      val schema = StructType(Seq(StructField("k", LongType, nullable = false),
+        StructField("i", IntegerType), StructField("s", StringType), StructField("d", DoubleType),
+        StructField("arr", ArrayType(LongType, containsNull = false), nullable = false)))
+      val data = rows.map { case (k, i, s, d, arr) => Row(k, i.map(Int.box).orNull, s.orNull, d, arr) }
+      val df0 = sp.createDataFrame(java.util.Arrays.asList(data: _*), schema)
+      val df = if (coalesced) df0.coalesce(1) else df0
+      val before = sp.conf.get("spark.sql.files.maxRecordsPerFile")
+      sp.conf.set("spark.sql.files.maxRecordsPerFile", perFile.toString)
+      try {
+        def table() = new CommitTable(sp, Files.createTempDirectory("graft-prop-write").toString, "k",
+          extraStatsCols = Seq("i"))
+        val (onDriver, onSpark) = (table(), table())
+        val driverJobs = jobsDuring(onDriver.overwrite(df))
+        onSpark.overwriteWithin(df, dataflow)
+        val conf = sp.sparkContext.hadoopConfiguration
+        // per file, in part order: (part and counter, lo, hi, n, xs, rows, footer)
+        def files(t: CommitTable) = t.fileStats().collect().toSeq.map { r =>
+          val f = r.getString(0)
+          val name = f.substring(f.lastIndexOf('/') + 1)
+          val md = org.apache.parquet.hadoop.ParquetFileReader
+            .readFooter(conf, new org.apache.hadoop.fs.Path(f)).getFileMetaData
+          (name.take(10) + name.substring(name.lastIndexOf("-c")),
+            (r.getLong(1), r.getLong(2), r.getLong(3), Option(r.getString(4))),
+            sp.read.parquet(f).collect().map(_.toString).toSeq,
+            (md.getSchema.toString, md.getKeyValueMetaData))
+        }.sortBy(_._1)
+        driverJobs == 0 && files(onDriver) == files(onSpark) &&
+          surface(onDriver.read()) == surface(onSpark.read())
+      } finally sp.conf.set("spark.sql.files.maxRecordsPerFile", before)
+    }
+
+  // The footer-planned scan reads what the merged-schema read does, at
+  // every version: the same rows and the same schema, nullability of
+  // nested fields included, whether the footers agree (the planned scan)
+  // or an appended batch evolved the schema (the merged read).
+  private val genShapes = Gen.choose(1, 5).flatMap(Gen.listOfN(_, Gen.frequency(
+    4 -> Gen.const("base"), 1 -> Gen.const("wider"))))
+
+  property("the footer-planned scan == the mergeSchema read at every version") =
+    Prop.forAll(genShapes) { shapes =>
+      import org.apache.spark.sql.functions._
+      val sp = spark
+      val t = new CommitTable(sp, Files.createTempDirectory("graft-prop-scan").toString, "k")
+      shapes.zipWithIndex.foreach { case (shape, i) =>
+        val base = sp.range(i * 10L, i * 10L + 10L, 1L, 2).select(col("id").as("k"),
+          when(col("id") % 3 === 0, lit(null)).otherwise(col("id").cast("string")).as("v"),
+          array(col("id"), col("id") * 2).as("arr"),
+          struct(col("id").as("a"), lit("s").as("b")).as("st"))
+        val batch = if (shape == "wider") base.withColumn("w", col("k") * 0.5) else base
+        if (i == 0) t.overwrite(batch) else t.append(batch)
+      }
+      t.versions().forall { v =>
+        val files = t.fileStats(Some(v)).collect().map(_.getString(0)).toSeq
+        surface(t.asOf(v)) == surface(sp.read.option("mergeSchema", "true").parquet(files: _*))
+      }
+    }
 }
 
 package operators {

@@ -25,6 +25,36 @@ class InvariantsSpec extends SparkSpec {
     new java.io.File(dir).listFiles().toSeq
       .filter(f => f.isDirectory && f.getName.startsWith("d")).map(_.getName).toSet
 
+  test("a commit under declared row rules audits its staged files with no schema job") {
+    val t = new CommitTable(spark, Files.createTempDirectory("graft-inv-jobs").toString, "k")
+    t.overwrite(kv(1L -> 10L))
+    t.setInvariants("k BIGINT, v BIGINT", checks = Seq("v_pos" -> "v > 0"), notNull = Seq("k"))
+    def jobsOf(body: => Any): Int = {
+      val sc = spark.sparkContext
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.graftbridge.ListenerBridge.waitUntilListenerBusEmpty(sc)
+      sc.addSparkListener(listener)
+      try {
+        body
+        org.apache.spark.graftbridge.ListenerBridge.waitUntilListenerBusEmpty(sc)
+        jobs.get
+      } finally sc.removeSparkListener(listener)
+    }
+    val rules = Seq(graft.operators.Validation.RowRule("not_null_k", col("k").isNotNull),
+      graft.operators.Validation.RowRule("check_v_pos", expr("v > 0")))
+    val audit = jobsOf(graft.operators.Validation.rowChecks(t.read(), rules).collect())
+    // the batch is a LocalRelation, written on the driver, and the staged
+    // files' read is planned from their footers: the append's only jobs
+    // are the rule aggregate's
+    val append = jobsOf(t.append(kv(2L -> 20L)))
+    assert(append <= audit, s"an audited append ran $append jobs; the rule aggregate runs $audit")
+    assert(rows(t.read()) === Set(1L -> 10L, 2L -> 20L))
+  }
+
   test("declared invariants: clean append commits; violating batch aborts with head, history, and disk untouched") {
     val dir = Files.createTempDirectory("graft-inv-gate").toString
     val t = new CommitTable(spark, dir, "k")

@@ -21,6 +21,13 @@ import graft.operators.CommitTable
   *    against the Spark dataflow (a zero byte budget) over a k-NN graph
   *    index of `n` vectors (vectors, 6 edges a vertex, 32 entries) with
   *    1% of its ids tombstoned, each timing on a fresh copy of the index.
+  *  - `merge`: times `CommitTable.merge` of a 400-row change set (200
+  *    updates spread over the table, 200 inserts past it; a LocalRelation,
+  *    the stream sink's shape) into a vectors-shaped table of `n` rows, on
+  *    the driver against the dataflow (a zero byte budget), each side on
+  *    its own copy of the table, merging into its own head.
+  *  - `write`: times `CommitTable.overwrite` of a LocalRelation of `n`
+  *    vectors rows, written on the driver against Spark's write.
   * Prints CSV: the median of `reps` timings after the warm-ups. Run with
   * `tools/crossover/run.sh`. */
 object DriverBudgetCrossover {
@@ -34,8 +41,12 @@ object DriverBudgetCrossover {
     val reps = args(4).toInt
     val spark = GraftSession.create(s"local[$cores]", cores.toString)
     spark.sparkContext.setLogLevel("ERROR")
-    if (args.lift(5).contains("consolidate")) consolidate(spark, root, sizes, files, reps)
-    else read(spark, root, sizes, files, reps)
+    args.lift(5).getOrElse("read") match {
+      case "consolidate" => consolidate(spark, root, sizes, files, reps)
+      case "merge" => merge(spark, root, sizes, files, reps)
+      case "write" => write(spark, root, sizes, reps)
+      case _ => read(spark, root, sizes, files, reps)
+    }
     spark.stop()
   }
 
@@ -59,8 +70,6 @@ object DriverBudgetCrossover {
   private def consolidate(spark: SparkSession, root: String, sizes: Seq[Int], files: Int,
                           reps: Int): Unit = {
     import spark.implicits._
-    val huge = CommitTable.Budget(bytes = Long.MaxValue, rows = Long.MaxValue)
-    val dataflow = CommitTable.Budget(bytes = 0L, rows = CommitTable.DriverBudget.rows)
     println("vectors,files,index_mib,vectors_mib,graph_mib,driver_ms,dataflow_ms")
     for (n <- sizes) {
       val tpl = s"$root/knng$n-$files"
@@ -104,6 +113,52 @@ object DriverBudgetCrossover {
     }
   }
 
+  private val huge = CommitTable.Budget(bytes = Long.MaxValue, rows = Long.MaxValue)
+  private val dataflow = CommitTable.Budget(bytes = 0L, rows = CommitTable.DriverBudget.rows)
+
+  /** `df`'s rows as a LocalRelation-backed frame. */
+  private def local(spark: SparkSession, df: DataFrame): DataFrame =
+    spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
+
+  private def mib(t: CommitTable): Double =
+    t.read().inputFiles.map(f => new java.io.File(new java.net.URI(f)).length).sum / 1048576.0
+
+  private def merge(spark: SparkSession, root: String, sizes: Seq[Int], files: Int,
+                    reps: Int): Unit = {
+    println("rows,files,mib,merge_driver_ms,merge_dataflow_ms")
+    for (n <- sizes) {
+      val tpl = s"$root/m$n-$files"
+      val t = new CommitTable(spark, tpl, "vec_id")
+      t.overwrite(vectors(spark, n).repartitionByRange(files, col("vec_id")))
+      val size = mib(t)
+      val change = local(spark, vectors(spark, n + 200).filter(
+        col("vec_id") % math.max(1, n / 200) === 0 || col("vec_id") >= n)
+        .withColumn("nrm", col("nrm") + 1.0))
+      def timed(budget: CommitTable.Budget, side: String): Double = {
+        val at = s"$root/$side$n"
+        copyTree(java.nio.file.Path.of(tpl), java.nio.file.Path.of(at))
+        val copy = new CommitTable(spark, at, "vec_id")
+        val ms = time(reps, 1)(() => copy.mergeWithin(change, Seq("vec_id"), None, budget))
+        graft.TempDirs.deleteRecursively(java.nio.file.Path.of(at))
+        ms
+      }
+      val (onDriver, viaSpark) = (timed(huge, "driver"), timed(dataflow, "dataflow"))
+      println(f"$n,$files,$size%.2f,$onDriver%.1f,$viaSpark%.1f")
+      graft.TempDirs.deleteRecursively(java.nio.file.Path.of(tpl))
+    }
+  }
+
+  private def write(spark: SparkSession, root: String, sizes: Seq[Int], reps: Int): Unit = {
+    println("rows,mib,write_driver_ms,write_spark_ms")
+    for (n <- sizes) {
+      val rows = local(spark, vectors(spark, n))
+      val t = new CommitTable(spark, s"$root/w$n", "vec_id")
+      val r = Seq(huge, dataflow).map(b => time(reps, 1)(() => t.overwriteWithin(rows, b)))
+      println(f"$n,${mib(t)}%.2f,${r(0)}%.1f,${r(1)}%.1f")
+      graft.TempDirs.deleteRecursively(java.nio.file.Path.of(s"$root/w$n"))
+    }
+  }
+
   private def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
     val walk = java.nio.file.Files.walk(from)
     try walk.iterator().asScala.foreach { p =>
@@ -116,7 +171,6 @@ object DriverBudgetCrossover {
   private def read(spark: SparkSession, root: String, sizes: Seq[Int], files: Int,
                    reps: Int): Unit = {
     import spark.implicits._
-    val huge = CommitTable.Budget(bytes = Long.MaxValue, rows = Long.MaxValue)
     val rng = new scala.util.Random(7)
     val qs = (0 until 20).map(i => (-1L - i, Array.fill(dim)(rng.nextGaussian())))
     println("rows,files,mib,read_driver_ms,read_spark_ms,score_driver_ms,score_spark_ms")

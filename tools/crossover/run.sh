@@ -1,13 +1,14 @@
 #!/bin/bash
 # Measures the driver / Spark crossovers behind CommitTable.DriverBudget
 # (see DriverBudgetCrossover.scala): the point read and scoring (case
-# `read`) or the k-NN graph consolidation (case `consolidate`).
+# `read`), the k-NN graph consolidation (case `consolidate`), the MERGE
+# (case `merge`) or the write of a LocalRelation (case `write`).
 #
 #   tools/crossover/run.sh [cores] [files] [sizes] [reps] [case]
 #
 # from the repository root; defaults: 4 cores, 4 files per table, tables
 # of 8k..128k rows (4..64 MiB; for `consolidate`, vectors of an index
-# with 6 edges each), 7 repetitions, case `read`. Builds the engine with
+# with 6 edges each), 7 repetitions, case `read`. `write` ignores `files`. Builds the engine with
 # perfbench/build.py, compiles this tool beside it into
 # .bench_build/crossover, and writes its tables under a fresh temporary
 # directory that it removes on exit.
